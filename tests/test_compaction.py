@@ -16,6 +16,7 @@ from umn_eda_kafka_stream_processing_spark.operators.compaction import (
     snapshot_diff,
     upsert_snapshot,
 )
+from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
 
 def _rows(spark, data):
@@ -365,18 +366,12 @@ def test_maintain_store_preserves_streaming_exactness(spark, tmp_path):
 
 def test_incremental_agg_view_replay_and_collapse(spark, tmp_path):
     """Continuously-maintained GROUP BY: per-batch partials keyed
-    (batch_id, group) latest-wins; read re-aggregates across batches
-    and equals the from-scratch GROUP BY after every batch; a
+    (batch_id, group) in a BatchStore; read re-aggregates across
+    batches and equals the from-scratch GROUP BY after every batch; a
     replayed batch is byte-identical; collapsing old batches folds
     them into one baseline row per group without changing the view,
     is idempotent, and new batches keep composing on top."""
-    from umn_eda_kafka_stream_processing_spark.operators.aggview import (
-        collapse_agg_view,
-        read_agg_view,
-        upsert_agg_view,
-    )
-
-    store = str(tmp_path / "view")
+    path = str(tmp_path / "view")
     partials = [
         F.count(F.lit(1)).cast("long").alias("c"),
         F.sum("v").cast("long").alias("s"),
@@ -389,6 +384,7 @@ def test_incremental_agg_view_replay_and_collapse(spark, tmp_path):
         F.min("mn").cast("long").alias("mn"),
         F.max("mx").cast("long").alias("mx"),
     ]
+    store = BatchStore(spark, path, lambda df: df.groupBy("k").agg(*finals))
     batches = [
         [("a", 3), ("a", 5), ("b", 1)],
         [("a", 2), ("c", 9)],
@@ -410,113 +406,83 @@ def test_incremental_agg_view_replay_and_collapse(spark, tmp_path):
     def view():
         return {
             r["k"]: (r["c"], r["s"], r["mn"], r["mx"])
-            for r in read_agg_view(spark, store, "k", finals).collect()
+            for r in store.read().collect()
         }
+
+    def partial(rows):
+        return spark.createDataFrame(rows, "k string, v long").groupBy(
+            "k"
+        ).agg(*partials)
 
     for bid, rows in enumerate(batches):
         seen.extend(rows)
-        upsert_agg_view(
-            spark, store,
-            spark.createDataFrame(rows, "k string, v long"),
-            "k", partials, bid,
-        )
+        store.upsert(bid, partial(rows))
         assert view() == expect(), f"after batch {bid}"
     # replay batch 1: store byte-identical
-    before = sorted(map(tuple, spark.read.parquet(store).collect()))
-    upsert_agg_view(
-        spark, store,
-        spark.createDataFrame(batches[1], "k string, v long"),
-        "k", partials, 1,
-    )
-    assert sorted(map(tuple, spark.read.parquet(store).collect())) == before
-    # collapse batches <= 1 into the real base batch 1 (the generic
-    # collapse_batch_registers shape): view unchanged, folded
-    # partition gone, idempotent
-    st = collapse_agg_view(spark, store, "k", finals, upto_batch_id=1)
-    assert st == {"batches_folded": 1, "groups": 3}  # 0 folded into 1
+    before = sorted(map(tuple, spark.read.parquet(path).collect()))
+    store.upsert(1, partial(batches[1]))
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
+    # collapse batches <= 1 into the real base batch 1: view
+    # unchanged, folded partition gone, idempotent
+    st = store.collapse(1)
+    assert st == {"batches_folded": 1, "rows": 3}  # 0 folded into 1
     assert view() == expect()
-    ids = {
-        r["batch_id"]
-        for r in spark.read.parquet(store).select("batch_id").distinct().collect()
-    }
-    assert ids == {1, 2}
-    st2 = collapse_agg_view(spark, store, "k", finals, upto_batch_id=1)
-    assert st2 == {"batches_folded": 0, "groups": 0}
+    assert store.batch_ids() == [1, 2]
+    st2 = store.collapse(1)
+    assert st2 == {"batches_folded": 0, "rows": 0}
     # a straggler replay at/below the horizon NO-OPS (the marker
     # guard): re-adding batch 1's mass would double count now that
     # the baseline at batch 1 carries batch 0 too
-    upsert_agg_view(
-        spark, store,
-        spark.createDataFrame(batches[1], "k string, v long"),
-        "k", partials, 1,
-    )
+    assert not store.upsert(1, partial(batches[1]))
     assert view() == expect()
     # new batches compose on top of the baseline; a later collapse
     # folds the baseline together with them
     seen.extend([("a", 100), ("d", 1)])
-    upsert_agg_view(
-        spark, store,
-        spark.createDataFrame([("a", 100), ("d", 1)], "k string, v long"),
-        "k", partials, 3,
-    )
+    store.upsert(3, partial([("a", 100), ("d", 1)]))
     assert view() == expect()
-    st3 = collapse_agg_view(spark, store, "k", finals, upto_batch_id=3)
+    st3 = store.collapse(3)
     assert st3["batches_folded"] == 2  # baseline 1 + batch 2 into base 3
     assert view() == expect()
 
 
-def test_agg_view_collapse_crash_recovery(spark, tmp_path):
+def test_agg_view_collapse_crash_recovery(spark, tmp_path, monkeypatch):
     """A collapse that crashed between its marker write and its
     directory deletes leaves the folded baseline AND the original
     batch directories on disk: readers must exclude the stale
     sub-horizon directories and the next collapse must sweep them
-    (the generic collapse_batch_registers crash-safety contract)."""
-    from umn_eda_kafka_stream_processing_spark.operators.aggview import (
-        collapse_agg_view,
-        read_agg_view,
-        upsert_agg_view,
-    )
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_batch_partition,
-    )
+    (the BatchStore crash-safety contract)."""
+    import pytest
 
-    store = str(tmp_path / "view")
     partials = [F.sum("v").cast("long").alias("s")]
     finals = [F.sum("s").cast("long").alias("s")]
+    store = BatchStore(
+        spark, str(tmp_path / "view"),
+        lambda df: df.groupBy("k").agg(*finals),
+    )
     batches = [[("a", 3), ("b", 1)], [("a", 2)], [("b", 7)]]
     for bid, rows in enumerate(batches):
-        upsert_agg_view(
-            spark, store,
-            spark.createDataFrame(rows, "k string, v long"),
-            "k", partials, bid,
-        )
+        store.upsert(bid, spark.createDataFrame(
+            rows, "k string, v long"
+        ).groupBy("k").agg(*partials))
 
     def view():
-        return {r["k"]: r["s"]
-                for r in read_agg_view(spark, store, "k", finals).collect()}
+        return {r["k"]: r["s"] for r in store.read().collect()}
 
     want = {"a": 5, "b": 8}
     assert view() == want
-    assert collapse_agg_view(
-        spark, store, "k", finals, upto_batch_id=1
-    ) == {"batches_folded": 1, "groups": 2}
-    # simulate the crash window: resurrect batch 0's ORIGINAL partials
-    # below the recorded horizon (what an interrupted delete leaves)
-    upsert_batch_partition(
-        spark, store,
-        spark.createDataFrame(batches[0], "k string, v long")
-        .groupBy("k").agg(*partials),
-        0,
-    )
-    ids = {r["batch_id"] for r in
-           spark.read.parquet(store).select("batch_id").distinct().collect()}
-    assert 0 in ids  # stale directory really on disk
+
+    def crash(self, batch_ids):
+        raise RuntimeError("injected crash before the deletes")
+
+    monkeypatch.setattr(BatchStore, "delete_batches", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        store.collapse(1)
+    monkeypatch.undo()
+    assert 0 in store.batch_ids()  # stale directory really on disk
     assert view() == want  # reader ignores it
-    res = collapse_agg_view(spark, store, "k", finals, upto_batch_id=2)
+    res = store.collapse(2)
     assert res["batches_folded"] == 1  # 1 into base 2; stale 0 swept
-    ids2 = {r["batch_id"] for r in
-            spark.read.parquet(store).select("batch_id").distinct().collect()}
-    assert ids2 == {2}
+    assert store.batch_ids() == [2]
     assert view() == want
 
 
@@ -610,7 +576,6 @@ def test_versioned_store_time_travel(spark, tmp_path):
     from umn_eda_kafka_stream_processing_spark.operators.versioned import (
         append_versioned,
         read_versioned_asof,
-        versioned_batch_ids,
     )
 
     path = str(tmp_path / "vstore")
@@ -637,7 +602,7 @@ def test_versioned_store_time_travel(spark, tmp_path):
     assert state(0) == {1: "a0", 2: "b0"}
     assert state(1) == {1: "a1", 2: "b0", 3: "c0"}
     assert state(2) == {1: "a1"}
-    assert versioned_batch_ids(spark, path) == [0, 1, 2]
+    assert BatchStore(spark, path).batch_ids() == [0, 1, 2]
 
     # replay batch 1 (at-least-once): dynamic overwrite of exactly
     # its partition — every as-of view unchanged, no duplicates
@@ -679,7 +644,6 @@ def test_streaming_versioned_store_time_travel(spark, tmp_path):
     from umn_eda_kafka_stream_processing_spark import schemas
     from umn_eda_kafka_stream_processing_spark.operators.versioned import (
         read_versioned_asof,
-        versioned_batch_ids,
     )
     from umn_eda_kafka_stream_processing_spark.operators.versioned import (
         append_versioned,
@@ -718,7 +682,7 @@ def test_streaming_versioned_store_time_travel(spark, tmp_path):
     finally:
         q.stop()
 
-    assert versioned_batch_ids(spark, store) == [0, 1]
+    assert BatchStore(spark, store).batch_ids() == [0, 1]
 
     def state(asof):
         return {
@@ -738,7 +702,6 @@ def test_collapse_versioned_horizon(spark, tmp_path):
         append_versioned,
         collapse_versioned,
         read_versioned_asof,
-        versioned_batch_ids,
     )
 
     path = str(tmp_path / "vfold")
@@ -764,7 +727,7 @@ def test_collapse_versioned_horizon(spark, tmp_path):
         tombstone_col="del_flag",
     )
     assert stats == {"batches_folded": 1, "keys": 1}  # tombstone dropped
-    assert versioned_batch_ids(spark, path) == [1, 2]
+    assert BatchStore(spark, path).batch_ids() == [1, 2]
     # reads at or beyond the horizon are unchanged
     assert state(1) == before[1] == {1: "a1"}
     assert state(2) == before[2] == {1: "a1", 3: "c0"}
@@ -780,8 +743,8 @@ def test_collapse_versioned_horizon(spark, tmp_path):
 
 def test_versioned_store_soak_composition(spark, tmp_path):
     """The full production loop in ONE test (round-11 verdict #6):
-    four streaming microbatches flow through append_versioned +
-    upsert_agg_view, a replay of the last batch is injected, then
+    four streaming microbatches flow through append_versioned + an
+    agg-view BatchStore of partials, a replay of the last batch is injected, then
     maintain_store (compaction, idempotence pinned), a
     collapse_versioned at horizon 1, and an erase_keys sweep — and
     at EVERY surviving as-of point the store still reconstructs
@@ -791,10 +754,6 @@ def test_versioned_store_soak_composition(spark, tmp_path):
     rewrite history aggregates)."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
-    from umn_eda_kafka_stream_processing_spark.operators.aggview import (
-        read_agg_view,
-        upsert_agg_view,
-    )
     from umn_eda_kafka_stream_processing_spark.operators.compaction import (
         erase_keys,
         maintain_store,
@@ -803,7 +762,6 @@ def test_versioned_store_soak_composition(spark, tmp_path):
         append_versioned,
         collapse_versioned,
         read_versioned_asof,
-        versioned_batch_ids,
     )
     from umn_eda_kafka_stream_processing_spark.streaming.runner import (
         file_stream_source,
@@ -811,6 +769,12 @@ def test_versioned_store_soak_composition(spark, tmp_path):
     )
 
     vstore, astore = str(tmp_path / "vstore"), str(tmp_path / "aggview")
+    view = BatchStore(
+        spark, astore,
+        lambda df: df.groupBy("g").agg(
+            F.sum("s").alias("s"), F.sum("c").alias("c")
+        ),
+    )
     src = str(tmp_path / "changes")
     def _fields():
         return [
@@ -832,11 +796,9 @@ def test_versioned_store_soak_composition(spark, tmp_path):
     def sink(batch_df, batch_id):
         b = batch_df.localCheckpoint()
         append_versioned(b, vstore, batch_id=batch_id)
-        upsert_agg_view(
-            spark, astore, b, "g",
-            [F.sum("v").alias("s"), F.count(F.lit(1)).alias("c")],
-            batch_id,
-        )
+        view.upsert(batch_id, b.groupBy("g").agg(
+            F.sum("v").alias("s"), F.count(F.lit(1)).alias("c")
+        ))
 
     def pipe(bid):
         spark.createDataFrame(batches[bid], schema).withColumn(
@@ -862,10 +824,7 @@ def test_versioned_store_soak_composition(spark, tmp_path):
     rows_before = spark.read.parquet(vstore).count()
     agg_before = {
         r["g"]: (r["s"], r["c"])
-        for r in read_agg_view(
-            spark, astore, "g",
-            [F.sum("s").alias("s"), F.sum("c").alias("c")],
-        ).collect()
+        for r in view.read().collect()
     }
     sink(
         spark.createDataFrame(batches[3], schema).withColumn(
@@ -876,10 +835,7 @@ def test_versioned_store_soak_composition(spark, tmp_path):
     assert spark.read.parquet(vstore).count() == rows_before
     assert {
         r["g"]: (r["s"], r["c"])
-        for r in read_agg_view(
-            spark, astore, "g",
-            [F.sum("s").alias("s"), F.sum("c").alias("c")],
-        ).collect()
+        for r in view.read().collect()
     } == agg_before
 
     # maintenance: compaction touches once, then replays to zero
@@ -891,7 +847,7 @@ def test_versioned_store_soak_composition(spark, tmp_path):
     collapse_versioned(
         spark, vstore, 1, "k", seq_col="seq", tombstone_col="del_flag"
     )
-    assert versioned_batch_ids(spark, vstore) == [1, 2, 3]
+    assert BatchStore(spark, vstore).batch_ids() == [1, 2, 3]
     stats = erase_keys(
         spark, vstore,
         spark.createDataFrame([(2,)], "k long"), "k", "batch_id",
@@ -936,10 +892,7 @@ def test_versioned_store_soak_composition(spark, tmp_path):
             want_agg[g] = (s + (v or 0), c + 1)
     assert {
         r["g"]: (r["s"], r["c"])
-        for r in read_agg_view(
-            spark, astore, "g",
-            [F.sum("s").alias("s"), F.sum("c").alias("c")],
-        ).collect()
+        for r in view.read().collect()
     } == want_agg
 
 
@@ -950,7 +903,6 @@ def test_versioned_batch_ids_is_metadata_only(spark, tmp_path, monkeypatch):
     from pyspark.sql import SparkSession
     from umn_eda_kafka_stream_processing_spark.operators.versioned import (
         append_versioned,
-        versioned_batch_ids,
     )
 
     path = str(tmp_path / "vmeta")
@@ -959,11 +911,11 @@ def test_versioned_batch_ids_is_metadata_only(spark, tmp_path, monkeypatch):
     append_versioned(df, path, 7)
 
     def _no_read(self):
-        raise AssertionError("versioned_batch_ids attempted a data read")
+        raise AssertionError("batch_ids attempted a data read")
 
     monkeypatch.setattr(SparkSession, "read", property(_no_read))
-    assert versioned_batch_ids(spark, path) == [0, 7]
-    assert versioned_batch_ids(spark, str(tmp_path / "absent")) == []
+    assert BatchStore(spark, path).batch_ids() == [0, 7]
+    assert BatchStore(spark, str(tmp_path / "absent")).batch_ids() == []
 
 
 def test_collapse_versioned_clamps_overshooting_horizon(spark, tmp_path):
@@ -974,7 +926,6 @@ def test_collapse_versioned_clamps_overshooting_horizon(spark, tmp_path):
         append_versioned,
         collapse_versioned,
         read_versioned_asof,
-        versioned_batch_ids,
     )
 
     path = str(tmp_path / "vclamp")
@@ -985,7 +936,7 @@ def test_collapse_versioned_clamps_overshooting_horizon(spark, tmp_path):
     stats = collapse_versioned(spark, path, upto_batch=99, key_cols="k",
                                seq_col="seq")
     assert stats == {"batches_folded": 1, "keys": 2}
-    assert versioned_batch_ids(spark, path) == [1]  # no phantom 99
+    assert BatchStore(spark, path).batch_ids() == [1]  # no phantom 99
 
     def state(asof):
         return {r["k"]: r["v"] for r in read_versioned_asof(
@@ -1003,7 +954,7 @@ def test_collapse_versioned_clamps_overshooting_horizon(spark, tmp_path):
     stats2 = collapse_versioned(spark, path2, upto_batch=3, key_cols="k",
                                 seq_col="seq")
     assert stats2 == {"batches_folded": 1, "keys": 2}
-    assert versioned_batch_ids(spark, path2) == [2, 5]  # no phantom 3
+    assert BatchStore(spark, path2).batch_ids() == [2, 5]  # no phantom 3
     got2 = {r["k"]: r["v"] for r in read_versioned_asof(
         spark, path2, 2, "k", seq_col="seq").collect()}
     assert got2 == {1: "x0", 2: "y0"}

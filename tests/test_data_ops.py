@@ -805,6 +805,38 @@ def test_near_dup_clusters_long_chain_converges(spark):
     assert got == {i: 0 for i in range(12)}
 
 
+def test_near_dup_clusters_driver_path_equals_distributed(spark):
+    """The driver union-find escape (edge count <= driver_max_edges)
+    and the distributed min-label loop (driver_max_edges=None) give
+    the same (doc_id, cluster_id) set on a random sparse graph with
+    chains, cliques, stars and isolated pairs — so the distributed
+    path stays covered even though every small test graph takes the
+    escape."""
+    import random
+
+    rng = random.Random(7)
+    edges = {(i, i + 1) for i in range(0, 14)}  # a 15-node chain
+    edges |= {(a, b) for a in range(30, 35) for b in range(a + 1, 35)}
+    edges |= {(50, 50 + i) for i in range(1, 8)}  # a star
+    nodes = list(range(100, 160))
+    for _ in range(45):
+        a, b = rng.sample(nodes, 2)
+        edges.add((min(a, b), max(a, b)))
+    pairs = spark.createDataFrame(
+        sorted(edges), "doc_id_a long, doc_id_b long"
+    )
+
+    def clusters(**kw):
+        return {
+            (r["doc_id"], r["cluster_id"])
+            for r in dd.near_dup_clusters(pairs, **kw).collect()
+        }
+
+    driver = clusters()
+    assert driver == clusters(driver_max_edges=None)
+    assert len({c for _, c in driver}) > 3
+
+
 def test_bernoulli_sample_deterministic_and_unbiased(spark):
     """Same input -> identical selection on rerun; kept fraction within
     a loose binomial band of the rate; selection is a pure function of
@@ -1349,10 +1381,12 @@ def test_histogram_drift_monitor_psi(spark, tmp_path):
 
     from umn_eda_kafka_stream_processing_spark.operators.quality import (
         drift_census,
-        upsert_histogram_monitor,
+        histogram_monitor_registers,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import FLOOR, BatchStore
 
     store = str(tmp_path / "hist")
+    monitor = BatchStore(spark, store, marker=FLOOR)
     specs = {"v": (0.0, 64.0, 16), "ctl": (0.0, 64.0, 16)}
     batches = {
         0: [(float(i % 40), float(i % 32)) for i in range(300)],
@@ -1361,11 +1395,9 @@ def test_histogram_drift_monitor_psi(spark, tmp_path):
         2: [(float(i % 40 + 20), float(i % 32)) for i in range(300)],
     }
     for bid, rows in batches.items():
-        upsert_histogram_monitor(
-            spark, store,
-            spark.createDataFrame(rows, "v double, ctl double"),
-            specs, bid,
-        )
+        monitor.upsert(bid, histogram_monitor_registers(
+            spark.createDataFrame(rows, "v double, ctl double"), specs
+        ))
     got = {
         r["col_name"]: r
         for r in drift_census(spark, store, (0, 1), (2, 2)).collect()
@@ -1408,31 +1440,30 @@ def test_histogram_drift_monitor_psi(spark, tmp_path):
     # the planted shift alarms; the control does not (bands: 0.1/0.25)
     assert got["v"]["psi_micro"] > 250_000
     assert got["ctl"]["psi_micro"] < 100_000
-    # replay batch 1: latest-wins registers -> identical store
+    # replay batch 1: batch-keyed registers -> identical store
     before = sorted(
         map(tuple, spark.read.parquet(store).collect())
     )
-    upsert_histogram_monitor(
-        spark, store,
-        spark.createDataFrame(batches[1], "v double, ctl double"),
-        specs, 1,
-    )
+    monitor.upsert(1, histogram_monitor_registers(
+        spark.createDataFrame(batches[1], "v double, ctl double"), specs
+    ))
     assert sorted(map(tuple, spark.read.parquet(store).collect())) == before
 
 
 def test_incremental_decontaminate_equals_batch(spark, tmp_path):
     """The benchmark gram store grows per batch (replay-safe
-    latest-wins registers); sweeping a corpus batch against the
+    batch-keyed registers); sweeping a corpus batch against the
     merged store equals the from-scratch batch sweep against the
     union benchmark — and an eval set added later catches docs the
     earlier store missed."""
     from umn_eda_kafka_stream_processing_spark.operators.decontam import (
+        benchmark_grams,
         decontaminate,
         incremental_decontaminate,
-        read_benchmark_grams,
-        upsert_benchmark_grams,
+        merge_grams,
         word_ngram_hashes,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
     bench0 = spark.createDataFrame(
         [(100, " ".join(f"b{i}" for i in range(12)))],
@@ -1451,7 +1482,8 @@ def test_incremental_decontaminate_equals_batch(spark, tmp_path):
         "doc_id long, text string",
     )
     store = str(tmp_path / "benchgrams")
-    upsert_benchmark_grams(spark, store, bench0, 0)
+    grams = BatchStore(spark, store, merge_grams)
+    grams.upsert(0, benchmark_grams(bench0))
 
     def sweep():
         return {
@@ -1464,9 +1496,9 @@ def test_incremental_decontaminate_equals_batch(spark, tmp_path):
     assert sweep() == {1: 1, 2: 0, 3: 0}
     # a later eval set lands: doc 2 now flags; replay of batch 1 is
     # a no-op (store row count pinned)
-    upsert_benchmark_grams(spark, store, bench1, 1)
+    grams.upsert(1, benchmark_grams(bench1))
     n_rows = spark.read.parquet(store).count()
-    upsert_benchmark_grams(spark, store, bench1, 1)
+    grams.upsert(1, benchmark_grams(bench1))
     assert spark.read.parquet(store).count() == n_rows
     assert sweep() == {1: 1, 2: 1, 3: 0}
 
@@ -1480,9 +1512,7 @@ def test_incremental_decontaminate_equals_batch(spark, tmp_path):
         ).collect()
         for g in row[0]
     }
-    got_grams = {
-        r["g"] for r in read_benchmark_grams(spark, store).collect()
-    }
+    got_grams = {r["g"] for r in grams.read().collect()}
     assert got_grams == want_grams
     batch = {
         r["doc_id"]: (r["n_grams"], r["n_hit_grams"], r["contaminated"])
@@ -1496,17 +1526,20 @@ def test_incremental_decontaminate_equals_batch(spark, tmp_path):
 
 
 def test_decontam_gram_injection_equals_default(spark, tmp_path):
-    """r14 optimization seams: (a) `upsert_benchmark_grams(grams=...)`
-    writes the IDENTICAL store as the default text explode when the
-    injected frame is the batch docs' gram set (the cached-corpus-
-    gram-table filter contract), and (b) `incremental_decontaminate(
-    docs_grams=...)` returns the identical census when injected with
-    `corpus_gram_table` over the same corpus."""
+    """r14 optimization seams: (a) a gram store written from the
+    cached corpus gram table's filter holds the IDENTICAL rows as one
+    written from the `benchmark_grams` text explode (the per-doc
+    purity contract the catalog's cached register payloads rely on),
+    and (b) `incremental_decontaminate(docs_grams=...)` returns the
+    identical census when injected with `corpus_gram_table` over the
+    same corpus."""
     from umn_eda_kafka_stream_processing_spark.operators.decontam import (
+        benchmark_grams,
         corpus_gram_table,
         incremental_decontaminate,
-        upsert_benchmark_grams,
+        merge_grams,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import BatchStore
     from pyspark.sql import functions as F
 
     corpus = spark.createDataFrame(
@@ -1523,10 +1556,12 @@ def test_decontam_gram_injection_equals_default(spark, tmp_path):
 
     s_default = str(tmp_path / "default")
     s_injected = str(tmp_path / "injected")
-    upsert_benchmark_grams(spark, s_default, bench, 0)
-    upsert_benchmark_grams(
-        spark, s_injected, bench, 0,
-        grams=grams.filter(F.col("doc_id") == 4).select("_g"),
+    BatchStore(spark, s_default, merge_grams).upsert(0, benchmark_grams(bench))
+    BatchStore(spark, s_injected, merge_grams).upsert(
+        0,
+        grams.filter(F.col("doc_id") == 4)
+        .select(F.col("_g").alias("g"))
+        .distinct(),
     )
     want = sorted(
         (r["batch_id"], r["g"])
@@ -1559,10 +1594,12 @@ def test_resweep_decontaminate_delta_equals_full(spark, tmp_path):
     from umn_eda_kafka_stream_processing_spark.operators.decontam import (
         decontaminate,
         incremental_decontaminate,
+        benchmark_grams,
         merge_decontam_censuses,
+        merge_grams,
         resweep_decontaminate,
-        upsert_benchmark_grams,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
     # bench1 SHARES grams with bench0 (b-prefix overlap) — the
     # double-count trap the anti-join must defuse
@@ -1586,14 +1623,15 @@ def test_resweep_decontaminate_delta_equals_full(spark, tmp_path):
         "doc_id long, text string",
     )
     store = str(tmp_path / "benchgrams")
-    upsert_benchmark_grams(spark, store, bench0, 0)
+    grams = BatchStore(spark, store, merge_grams)
+    grams.upsert(0, benchmark_grams(bench0))
     standing = incremental_decontaminate(spark, store, corpus)
     standing_rows = {r["doc_id"]: r["contaminated"]
                      for r in standing.collect()}
     assert standing_rows == {1: 1, 2: 0, 3: 0}
     standing = standing.localCheckpoint()  # frozen BEFORE the store grows
     # the late batch lands after the corpus was admitted
-    upsert_benchmark_grams(spark, store, bench1, 1)
+    grams.upsert(1, benchmark_grams(bench1))
     delta = resweep_decontaminate(spark, store, corpus, since_batch=0)
     merged = {
         r["doc_id"]: (r["n_grams"], r["n_hit_grams"], r["contaminated"])
@@ -1684,12 +1722,13 @@ def test_patch_training_manifest_equals_from_scratch(spark, tmp_path):
         training_manifest,
     )
     from umn_eda_kafka_stream_processing_spark.operators.decontam import (
-        read_benchmark_grams,
-        upsert_benchmark_grams,
+        benchmark_grams,
+        merge_grams,
     )
     from umn_eda_kafka_stream_processing_spark.sources.parquet import (
         load_table,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     suite0 = docs.filter(F.col("doc_id") % 37 == 0)
@@ -1697,7 +1736,8 @@ def test_patch_training_manifest_equals_from_scratch(spark, tmp_path):
     targets = {f"src{i}": (50_000 if i % 5 == 0 else 3_000)
                for i in range(20)}
     store = str(tmp_path / "grams")
-    upsert_benchmark_grams(spark, store, suite0, 0)
+    grams = BatchStore(spark, store, merge_grams)
+    grams.upsert(0, benchmark_grams(suite0))
 
     def rows(m):
         return sorted(
@@ -1709,11 +1749,11 @@ def test_patch_training_manifest_equals_from_scratch(spark, tmp_path):
 
     shipped, st0 = training_manifest(
         docs, None, targets, return_stages=True,
-        bench_grams=read_benchmark_grams(spark, store),
+        bench_grams=grams.read(),
     )
     shipped_rows = rows(shipped)
     # the late suite lands AFTER the manifest shipped
-    upsert_benchmark_grams(spark, store, late, 1)
+    grams.upsert(1, benchmark_grams(late))
     patched, pst = patch_training_manifest(
         spark, docs, store, 0, st0["decontam"], st0["clusters"],
         targets, return_stages=True,
@@ -1721,7 +1761,7 @@ def test_patch_training_manifest_equals_from_scratch(spark, tmp_path):
     scratch = training_manifest(
         docs, None, targets,
         pairs=st0["pairs"], clusters=st0["clusters"],
-        bench_grams=read_benchmark_grams(spark, store),
+        bench_grams=grams.read(),
     )
     patched_rows = rows(patched)
     assert patched_rows == rows(scratch)  # the equality pin
@@ -1981,8 +2021,17 @@ def test_category_drift_monitor_psi(spark, tmp_path):
 
     from umn_eda_kafka_stream_processing_spark.operators.quality import (
         categorical_drift_census,
-        upsert_category_monitor,
+        category_registers,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import FLOOR, BatchStore
+
+    def land(monitor, rows, bid, **kw):
+        monitor.upsert(bid, category_registers(
+            monitor,
+            spark.createDataFrame(rows, "cat string, ctl string"),
+            ["cat", "ctl"],
+            **kw,
+        ))
 
     cats = ["alpha", "beta", "gamma", "delta", None]
     batches = {
@@ -1996,12 +2045,9 @@ def test_category_drift_monitor_psi(spark, tmp_path):
         ],
     }
     store = str(tmp_path / "cats")
+    monitor = BatchStore(spark, store, marker=FLOOR)
     for bid, rows in batches.items():
-        upsert_category_monitor(
-            spark, store,
-            spark.createDataFrame(rows, "cat string, ctl string"),
-            ["cat", "ctl"], bid,
-        )
+        land(monitor, rows, bid)
     got = {
         r["col_name"]: r
         for r in categorical_drift_census(
@@ -2043,49 +2089,29 @@ def test_category_drift_monitor_psi(spark, tmp_path):
     assert got["cat"]["psi_micro"] > 250_000
     assert got["ctl"]["psi_micro"] < 100_000
 
-    # replay batch 1: latest-wins registers -> identical store
+    # replay batch 1: batch-keyed registers -> identical store
     # (register keys are unique, so the SET pins byte-identity; a
     # plain sort trips over the NULL category)
     before = set(map(tuple, spark.read.parquet(store).collect()))
-    upsert_category_monitor(
-        spark, store,
-        spark.createDataFrame(batches[1], "cat string, ctl string"),
-        ["cat", "ctl"], 1,
-    )
+    land(monitor, batches[1], 1)
     after = set(map(tuple, spark.read.parquet(store).collect()))
     assert after == before and len(after) == len(before)
 
     # a high-cardinality column must raise, not grow the store
-    wide = spark.createDataFrame(
-        [(str(i), "x") for i in range(50)], "cat string, ctl string"
-    )
+    wide = [(str(i), "x") for i in range(50)]
     with pytest.raises(ValueError, match="max_categories"):
-        upsert_category_monitor(
-            spark, str(tmp_path / "wide"), wide, ["cat", "ctl"], 0,
-            max_categories=10,
-        )
+        land(BatchStore(spark, str(tmp_path / "wide"), marker=FLOOR),
+             wide, 0, max_categories=10)
     # ... and the guard is CUMULATIVE: a column drifting a few new
     # categories per batch trips it once the store union crosses the
     # bound, even though each batch alone stays under it
-    drift_store = str(tmp_path / "drift")
+    drift = BatchStore(spark, str(tmp_path / "drift"), marker=FLOOR)
     for b, n_new in ((0, 6), (1, 4)):  # cumulative 6, then 10 (<= bound)
-        upsert_category_monitor(
-            spark, drift_store,
-            spark.createDataFrame(
-                [(f"v{b}_{i}", "x") for i in range(n_new)],
-                "cat string, ctl string",
-            ),
-            ["cat", "ctl"], b, max_categories=10,
-        )
+        land(drift, [(f"v{b}_{i}", "x") for i in range(n_new)], b,
+             max_categories=10)
     with pytest.raises(ValueError, match="max_categories"):
-        upsert_category_monitor(
-            spark, drift_store,
-            spark.createDataFrame(
-                [(f"v2_{i}", "x") for i in range(6)],
-                "cat string, ctl string",
-            ),
-            ["cat", "ctl"], 2, max_categories=10,
-        )
+        land(drift, [(f"v2_{i}", "x") for i in range(6)], 2,
+             max_categories=10)
 
 
 def test_pack_sequences_next_fit_semantics(spark):
@@ -2288,25 +2314,25 @@ def test_constraint_monitor_store_replay_safe(spark, tmp_path):
     """Per-batch constraint censuses accumulate one row per (batch,
     check); a replayed batch rewrites identical rows (no-op)."""
     from umn_eda_kafka_stream_processing_spark.operators.quality import (
-        read_constraint_history,
-        upsert_constraint_census,
+        check_constraints,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import FLOOR, BatchStore
 
-    store = str(tmp_path / "monitor")
+    monitor = BatchStore(spark, str(tmp_path / "monitor"), marker=FLOOR)
     checks = [("not_null", "v"), ("range", "v", 0, 100)]
     b0 = spark.createDataFrame([(1, 10), (2, None)], "id long, v long")
     b1 = spark.createDataFrame([(3, 500)], "id long, v long")
-    upsert_constraint_census(spark, store, b0, checks, 0)
-    upsert_constraint_census(spark, store, b1, checks, 1)
+    monitor.upsert(0, check_constraints(b0, checks))
+    monitor.upsert(1, check_constraints(b1, checks))
     want = {
         (0, "not_null", "v"): (2, 1, 0),
         (0, "range", "v"): (2, 0, 1),
         (1, "not_null", "v"): (1, 0, 1),
         (1, "range", "v"): (1, 1, 0),
     }
-    hist = read_constraint_history(spark, store)
-    # batch_id is a partition column (int32 by inference); the reader
-    # contract is a LONG history frame (round-13 advice)
+    hist = monitor.scan()
+    # batch_id is a partition column (int32 by inference); the store's
+    # scan contract is a LONG history frame (round-13 advice)
     assert dict(hist.dtypes)["batch_id"] == "bigint"
     got = {
         (r["batch_id"], r["check"], r["target"]):
@@ -2314,79 +2340,88 @@ def test_constraint_monitor_store_replay_safe(spark, tmp_path):
         for r in hist.collect()
     }
     assert got == want
-    upsert_constraint_census(spark, store, b1, checks, 1)  # replay
+    monitor.upsert(1, check_constraints(b1, checks))  # replay
     got2 = {
         (r["batch_id"], r["check"], r["target"]):
             (r["n_rows"], r["n_violations"], r["ok"])
-        for r in read_constraint_history(spark, store).collect()
+        for r in monitor.scan().collect()
     }
     assert got2 == want
 
 
-def test_monitor_store_retention(spark, tmp_path):
+def test_monitor_store_retention(spark, tmp_path, monkeypatch):
     """Retention for monitor stores (round-13 verdict task 6): expire
     drops partitions below the floor, window censuses over RETAINED
     batches are unchanged, expired batches read zero rows, a
     straggler replay of an expired batch no-ops instead of
     resurrecting the partition, and a crash mid-delete self-heals
     (readers exclude, next expire sweeps)."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        expire_batch_partitions,
-        read_retention_floor,
-        upsert_batch_partition,
-    )
+    import pytest
+
     from umn_eda_kafka_stream_processing_spark.operators.quality import (
         categorical_drift_census,
-        upsert_category_monitor,
+        category_registers,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import FLOOR, BatchStore
 
     store = str(tmp_path / "catmon")
+    monitor = BatchStore(spark, store, marker=FLOOR)
     batches = {
         0: [("a",), ("a",), ("b",)],
         1: [("a",), ("b",), ("b",)],
         2: [("b",), ("b",), ("b",)],
         3: [("a",), ("c",), ("c",)],
+        4: [("c",), ("c",), ("a",)],
     }
-    for bid, rows in sorted(batches.items()):
-        upsert_category_monitor(
-            spark, store, spark.createDataFrame(rows, "lang string"),
-            ["lang"], bid,
-        )
-    want = {r["col_name"]: (r["psi_femto"], r["ref_total"], r["cur_total"])
+
+    def land(bid):
+        if not monitor.closed(bid):
+            monitor.upsert(bid, category_registers(
+                monitor,
+                spark.createDataFrame(batches[bid], "lang string"),
+                ["lang"],
+            ))
+
+    def census(ref, cur):
+        return {
+            r["col_name"]: (r["psi_femto"], r["ref_total"], r["cur_total"])
             for r in categorical_drift_census(
-                spark, store, (2, 2), (3, 3)).collect()}
+                spark, store, ref, cur).collect()
+        }
+
+    for bid in range(4):
+        land(bid)
+    want = census((2, 2), (3, 3))
     # expire batches 0 and 1 (outside the drift window)
-    res = expire_batch_partitions(spark, store, keep_from_batch=2)
+    res = monitor.expire(2)
     assert res == {"batches_expired": 2}
-    assert read_retention_floor(spark, store) == 2
+    assert monitor.mark() == 2
     assert spark.read.parquet(store).filter("batch_id < 2").count() == 0
-    got = {r["col_name"]: (r["psi_femto"], r["ref_total"], r["cur_total"])
-           for r in categorical_drift_census(
-               spark, store, (2, 2), (3, 3)).collect()}
-    assert got == want  # retained-window census unchanged
+    assert census((2, 2), (3, 3)) == want  # retained-window census unchanged
     # straggler replay of expired batch 0: no-op, partition stays gone
-    upsert_category_monitor(
-        spark, store, spark.createDataFrame(batches[0], "lang string"),
-        ["lang"], 0,
-    )
+    land(0)
     assert spark.read.parquet(store).filter("batch_id < 2").count() == 0
-    # crash simulation: a stale sub-floor directory reappears (expire
-    # crashed mid-delete) — readers exclude it, next expire sweeps it
-    upsert_batch_partition(
-        spark, store,
-        spark.createDataFrame([("a", "x", 9)], "col_name string, category string, cnt long"),
-        1,
-    )
-    assert {r["col_name"]: (r["psi_femto"], r["ref_total"], r["cur_total"])
-            for r in categorical_drift_census(
-                spark, store, (2, 2), (3, 3)).collect()} == want
-    assert expire_batch_partitions(spark, store, 2) == {"batches_expired": 1}
-    ids = sorted({r["batch_id"] for r in
-                  spark.read.parquet(store).select("batch_id").collect()})
-    assert ids == [2, 3]
+    # crash mid-delete: the next expire's floor marker lands, then the
+    # deletes fail — the stale sub-floor directory stays on disk,
+    # readers exclude it, and the next expire sweeps it
+    land(4)
+    want = census((3, 3), (4, 4))
+
+    def crash(self, batch_ids):
+        raise RuntimeError("injected crash before the deletes")
+
+    monkeypatch.setattr(BatchStore, "delete_batches", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        monitor.expire(3)
+    monkeypatch.undo()
+    assert monitor.mark() == 3
+    assert spark.read.parquet(store).filter("batch_id = 2").count() > 0
+    assert census((3, 3), (4, 4)) == want
+    assert monitor.expire(3) == {"batches_expired": 1}
+    assert monitor.batch_ids() == [3, 4]
     # monotone: a smaller keep_from never re-lowers the floor
-    assert expire_batch_partitions(spark, store, 0) == {"batches_expired": 0}
-    assert read_retention_floor(spark, store) == 2
+    assert monitor.expire(0) == {"batches_expired": 0}
+    assert monitor.mark() == 3
 
 
 def test_cms_overestimates_never_under(spark):
@@ -2417,81 +2452,73 @@ def test_cms_overestimates_never_under(spark):
 def test_incremental_cms_registers_replay_safe(spark, tmp_path):
     """CMS register store maintained batch-by-batch equals the
     from-scratch sketch over the concatenated batches, and REPLAYING
-    a batch changes nothing (the per-batch latest-wins key shape —
-    read-modify-add would double-count under at-least-once)."""
+    a batch changes nothing (the per-batch key shape — read-modify-add
+    would double-count under at-least-once)."""
     from umn_eda_kafka_stream_processing_spark.operators import sketches as sk
+    from umn_eda_kafka_stream_processing_spark.stores import CMS_HORIZON, BatchStore
 
     batches = [
         [(f"k{i % 7}",) for i in range(200)],
         [(f"k{i % 11}",) for i in range(150)],
         [(f"k{i % 5}",) for i in range(100)],
     ]
-    store = str(tmp_path / "cms_store")
+    store = BatchStore(spark, str(tmp_path / "cms_store"), sk.merge_cms, CMS_HORIZON)
     for bid, rows in enumerate(batches):
-        sk.upsert_cms_registers(
-            spark, store, spark.createDataFrame(rows, "k string"), "k", bid
-        )
+        store.upsert(bid, sk.cms_registers(spark.createDataFrame(rows, "k string"), "k"))
     full = spark.createDataFrame(sum(batches, []), "k string")
     want = {(r["row"], r["bucket"]): r["cnt"]
             for r in sk.cms_registers(full, "k").collect()}
-    got = {(r["row"], r["bucket"]): r["cnt"]
-           for r in sk.read_cms_registers(spark, store).collect()}
+    got = {(r["row"], r["bucket"]): r["cnt"] for r in store.read().collect()}
     assert got == want
     # replay batch 1: identical rows upsert to a no-op
-    sk.upsert_cms_registers(
-        spark, store, spark.createDataFrame(batches[1], "k string"), "k", 1
-    )
-    got2 = {(r["row"], r["bucket"]): r["cnt"]
-            for r in sk.read_cms_registers(spark, store).collect()}
+    store.upsert(1, sk.cms_registers(spark.createDataFrame(batches[1], "k string"), "k"))
+    got2 = {(r["row"], r["bucket"]): r["cnt"] for r in store.read().collect()}
     assert got2 == want
 
 
 def test_upsert_batch_partition_guards_reserved_columns(spark, tmp_path):
-    """The batch-keyed fast path adds batch_id/event_seq itself — a
+    """The batch-keyed upsert adds batch_id/event_seq itself — a
     payload frame already carrying either must fail loud, not write
     a store with duplicate column names."""
     import pytest
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_batch_partition,
-    )
 
+    from umn_eda_kafka_stream_processing_spark.stores import BatchStore
+
+    store = BatchStore(spark, str(tmp_path / "s"))
     ok = spark.createDataFrame([(1, 2)], "k long, v long")
-    upsert_batch_partition(spark, str(tmp_path / "s"), ok, 0)
+    assert store.upsert(0, ok)
     got = spark.read.parquet(str(tmp_path / "s"))
     assert {r["k"] for r in got.collect()} == {1}
     assert set(got.columns) == {"batch_id", "k", "v", "event_seq"}
     bad = spark.createDataFrame([(1, 2)], "batch_id long, v long")
     with pytest.raises(ValueError, match="reserved"):
-        upsert_batch_partition(spark, str(tmp_path / "s"), bad, 1)
+        store.upsert(1, bad)
 
 
 def test_cms_collapse_horizon_absent_store(spark, tmp_path):
     """No store / never-collapsed store -> horizon None (the guard's
     zero-cost normal path)."""
     from umn_eda_kafka_stream_processing_spark.operators import sketches as sk
+    from umn_eda_kafka_stream_processing_spark.stores import CMS_HORIZON, BatchStore
 
-    assert sk.read_cms_collapse_horizon(
-        spark, str(tmp_path / "nope")
-    ) is None
-    sk.upsert_cms_registers(
-        spark, str(tmp_path / "cms"),
-        spark.createDataFrame([("a",)], "k string"), "k", 0,
-    )
-    assert sk.read_cms_collapse_horizon(
-        spark, str(tmp_path / "cms")
-    ) is None
+    assert BatchStore(spark, str(tmp_path / "nope"), sk.merge_cms, CMS_HORIZON).mark() is None
+    store = BatchStore(spark, str(tmp_path / "cms"), sk.merge_cms, CMS_HORIZON)
+    store.upsert(0, sk.cms_registers(spark.createDataFrame([("a",)], "k string"), "k"))
+    assert store.mark() is None
+    assert not store.closed(0)
 
 
 def test_collapse_cms_registers(spark, tmp_path):
     """Horizon collapse of a CMS register store (round-12 verdict
     task): batches <= the horizon fold into ONE base batch whose
-    counts are the summed history — `read_cms_registers` is
+    counts are the summed history — the store's `read` is
     bit-identical before/after (CMS merge IS the register sum), the
     folded batch ids are gone, the marker carries the horizon, a
     straggler replay at/below the horizon NO-OPS, and the batch
     above the horizon is untouched. Gap rule: a horizon between
     ingested ids clamps down to a real batch."""
     from umn_eda_kafka_stream_processing_spark.operators import sketches as sk
+    from umn_eda_kafka_stream_processing_spark.stores import CMS_HORIZON, BatchStore
 
     batches = {
         0: [(f"k{i % 7}",) for i in range(200)],
@@ -2499,95 +2526,83 @@ def test_collapse_cms_registers(spark, tmp_path):
         3: [(f"k{i % 5}",) for i in range(100)],  # gap at 2
         4: [(f"k{i % 3}",) for i in range(80)],
     }
-    store = str(tmp_path / "cms_store")
-    for bid, rows in sorted(batches.items()):
-        sk.upsert_cms_registers(
-            spark, store, spark.createDataFrame(rows, "k string"), "k", bid
-        )
-    before = {(r["row"], r["bucket"]): r["cnt"]
-              for r in sk.read_cms_registers(spark, store).collect()}
+    path = str(tmp_path / "cms_store")
+    store = BatchStore(spark, path, sk.merge_cms, CMS_HORIZON)
+
+    def regs(bid):
+        return sk.cms_registers(spark.createDataFrame(batches[bid], "k string"), "k")
+
+    def read():
+        return {(r["row"], r["bucket"]): r["cnt"] for r in store.read().collect()}
+
+    for bid in sorted(batches):
+        store.upsert(bid, regs(bid))
+    before = read()
     # horizon 2 lands in the gap: clamps to batch 1 (never a phantom)
-    res = sk.collapse_cms_registers(spark, store, 2)
+    res = store.collapse(2)
     assert res["batches_folded"] == 1
-    assert sk.read_cms_collapse_horizon(spark, store) == 1
+    assert store.mark() == 1
+    assert (tmp_path / "cms_store" / "_cms_collapse_horizon_1").exists()
     ids = sorted({r["batch_id"] for r in
-                  spark.read.parquet(store).select("batch_id").collect()})
+                  spark.read.parquet(path).select("batch_id").collect()})
     assert ids == [1, 3, 4]  # 0 folded into base 1; 3 and 4 untouched
-    after = {(r["row"], r["bucket"]): r["cnt"]
-             for r in sk.read_cms_registers(spark, store).collect()}
-    assert after == before  # merged registers identical -> decision too
+    assert read() == before  # merged registers identical -> decision too
     # straggler replay of folded batch 0 (and of base 1): both no-op
     for bid in (0, 1):
-        sk.upsert_cms_registers(
-            spark, store,
-            spark.createDataFrame(batches[bid], "k string"), "k", bid,
-        )
-        assert {(r["row"], r["bucket"]): r["cnt"]
-                for r in sk.read_cms_registers(spark, store).collect()
-                } == before
+        assert not store.upsert(bid, regs(bid))
+        assert read() == before
     # second collapse, deeper horizon: folds {1, 3} into base 4
-    res2 = sk.collapse_cms_registers(spark, store, 4)
+    res2 = store.collapse(4)
     assert res2["batches_folded"] == 2
-    assert sk.read_cms_collapse_horizon(spark, store) == 4
-    assert {(r["row"], r["bucket"]): r["cnt"]
-            for r in sk.read_cms_registers(spark, store).collect()
-            } == before
+    assert store.mark() == 4
+    assert read() == before
     # idempotent: same horizon again no-ops
-    assert sk.collapse_cms_registers(spark, store, 4) == {
-        "batches_folded": 0, "register_rows": 0,
-    }
+    assert store.collapse(4) == {"batches_folded": 0, "rows": 0}
 
 
-def test_collapse_cms_registers_crash_recovery(spark, tmp_path):
+def test_collapse_cms_registers_crash_recovery(spark, tmp_path, monkeypatch):
     """A collapse that crashed BETWEEN its marker write and its
     directory deletes (round-13 advice) leaves folded sums in the base
     AND the original batch directories on disk. Readers must exclude
     the stale sub-horizon directories (no double count), and the next
     collapse must sweep them instead of re-folding them into a
     permanent double count."""
+    import pytest
+
     from umn_eda_kafka_stream_processing_spark.operators import sketches as sk
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_batch_partition,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import CMS_HORIZON, BatchStore
 
     batches = {
         0: [(f"k{i % 7}",) for i in range(200)],
         1: [(f"k{i % 11}",) for i in range(150)],
         2: [(f"k{i % 5}",) for i in range(100)],
     }
-    store = str(tmp_path / "cms_store")
+    path = str(tmp_path / "cms_store")
+    store = BatchStore(spark, path, sk.merge_cms, CMS_HORIZON)
     for bid, rows in sorted(batches.items()):
-        sk.upsert_cms_registers(
-            spark, store, spark.createDataFrame(rows, "k string"), "k", bid
-        )
-    want = {(r["row"], r["bucket"]): r["cnt"]
-            for r in sk.read_cms_registers(spark, store).collect()}
-    res = sk.collapse_cms_registers(spark, store, 1)  # folds 0 into base 1
-    assert res["batches_folded"] == 1
-    # simulate the crash window: resurrect batch 0's ORIGINAL registers
-    # below the recorded horizon (exactly what an interrupted delete
-    # loop leaves behind) — bypass the upsert guard deliberately
-    upsert_batch_partition(
-        spark, store,
-        sk.cms_registers(spark.createDataFrame(batches[0], "k string"), "k"),
-        0,
-    )
-    ids = sorted({r["batch_id"] for r in
-                  spark.read.parquet(store).select("batch_id").collect()})
-    assert 0 in ids  # the stale directory is really on disk
+        store.upsert(bid, sk.cms_registers(spark.createDataFrame(rows, "k string"), "k"))
+
+    def read():
+        return {(r["row"], r["bucket"]): r["cnt"] for r in store.read().collect()}
+
+    want = read()
+
+    def crash(self, batch_ids):
+        raise RuntimeError("injected crash before the deletes")
+
+    monkeypatch.setattr(BatchStore, "delete_batches", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        store.collapse(1)  # folds 0 into base 1, then dies
+    monkeypatch.undo()
+    assert store.mark() == 1
+    assert store.batch_ids() == [0, 1, 2]  # the stale directory is on disk
     # 1) readers ignore the stale sub-horizon directory
-    got = {(r["row"], r["bucket"]): r["cnt"]
-           for r in sk.read_cms_registers(spark, store).collect()}
-    assert got == want
+    assert read() == want
     # 2) the next collapse sweeps it and still reads identically
-    res2 = sk.collapse_cms_registers(spark, store, 2)  # folds 1 into base 2
+    res2 = store.collapse(2)  # folds 1 into base 2
     assert res2["batches_folded"] == 1
-    ids2 = sorted({r["batch_id"] for r in
-                   spark.read.parquet(store).select("batch_id").collect()})
-    assert ids2 == [2]  # stale 0 swept, 1 folded, base 2 remains
-    got2 = {(r["row"], r["bucket"]): r["cnt"]
-            for r in sk.read_cms_registers(spark, store).collect()}
-    assert got2 == want
+    assert store.batch_ids() == [2]  # stale 0 swept, 1 folded, base 2 remains
+    assert read() == want
 
 
 def test_incremental_hll_registers_replay_safe(spark, tmp_path):
@@ -2596,6 +2611,7 @@ def test_incremental_hll_registers_replay_safe(spark, tmp_path):
     merge is register-wise max — union semantics, not approximation),
     and replaying a batch changes nothing."""
     from umn_eda_kafka_stream_processing_spark.operators import sketches as sk
+    from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
     batches = [
         [("a", f"u{i % 40}") for i in range(120)]
@@ -2603,62 +2619,49 @@ def test_incremental_hll_registers_replay_safe(spark, tmp_path):
         [("a", f"u{i % 90}") for i in range(100)],
         [("b", f"v{i}") for i in range(50)],
     ]
-    store = str(tmp_path / "hll_store")
-    for bid, rows in enumerate(batches):
-        sk.upsert_hll_registers(
-            spark, store,
-            spark.createDataFrame(rows, "g string, u string"),
-            "g", "u", bid,
+    path = str(tmp_path / "hll_store")
+    store = BatchStore(spark, path, sk.merge_hll)
+
+    def regs(bid):
+        return sk.hll_registers(
+            spark.createDataFrame(batches[bid], "g string, u string"), "g", "u"
         )
+
+    def read():
+        return {(r["g"], r["bucket"]): r["r"] for r in store.read().collect()}
+
+    for bid in range(len(batches)):
+        store.upsert(bid, regs(bid))
     full = spark.createDataFrame(sum(batches, []), "g string, u string")
     want = {(r["g"], r["bucket"]): r["r"]
             for r in sk.hll_registers(full, "g", "u").collect()}
-    got = {(r["g"], r["bucket"]): r["r"]
-           for r in sk.read_hll_registers(spark, store).collect()}
-    assert got == want
+    assert read() == want
     # the estimator over merged registers == the batch sketch
     want_est = {r["g"]: (r["s_scaled"], r["hll_est"])
                 for r in sk.hll_sketch_per_group(full, "g", "u").collect()}
     got_est = {
         r["g"]: (r["s_scaled"], r["hll_est"])
-        for r in sk.hll_estimate_from_registers(
-            sk.read_hll_registers(spark, store), "g"
-        ).collect()
+        for r in sk.hll_estimate_from_registers(store.read(), "g").collect()
     }
     assert got_est == want_est
     # replay batch 1: identical rows upsert to a no-op
-    sk.upsert_hll_registers(
-        spark, store,
-        spark.createDataFrame(batches[1], "g string, u string"),
-        "g", "u", 1,
-    )
-    got2 = {(r["g"], r["bucket"]): r["r"]
-            for r in sk.read_hll_registers(spark, store).collect()}
-    assert got2 == want
+    store.upsert(1, regs(1))
+    assert read() == want
     # horizon collapse (round-13 verdict task 3): fold batches <= 1
     # into base 1 by register-wise MAX — read identical before/after,
     # folded partition gone, replay at/below the horizon NO-OPS (a
     # base-batch replay would shrink the folded maxes)
-    res = sk.collapse_hll_registers(spark, store, 1)
+    res = store.collapse(1)
     assert res["batches_folded"] == 1
     ids = sorted({r["batch_id"] for r in
-                  spark.read.parquet(store).select("batch_id").collect()})
+                  spark.read.parquet(path).select("batch_id").collect()})
     assert ids == [1, 2]
-    assert {(r["g"], r["bucket"]): r["r"]
-            for r in sk.read_hll_registers(spark, store).collect()} == want
+    assert read() == want
     for bid in (0, 1):
-        sk.upsert_hll_registers(
-            spark, store,
-            spark.createDataFrame(batches[bid], "g string, u string"),
-            "g", "u", bid,
-        )
-        assert {(r["g"], r["bucket"]): r["r"]
-                for r in sk.read_hll_registers(spark, store).collect()
-                } == want
+        assert not store.upsert(bid, regs(bid))
+        assert read() == want
     # idempotent
-    assert sk.collapse_hll_registers(spark, store, 1) == {
-        "batches_folded": 0, "register_rows": 0,
-    }
+    assert store.collapse(1) == {"batches_folded": 0, "rows": 0}
 
 
 def test_collapse_benchmark_grams(spark, tmp_path):
@@ -2668,37 +2671,40 @@ def test_collapse_benchmark_grams(spark, tmp_path):
     grams, and the marker no-ops straggler replays (a base-batch
     replay would drop every other folded suite's grams)."""
     from umn_eda_kafka_stream_processing_spark.operators.decontam import (
-        collapse_benchmark_grams,
-        read_benchmark_grams,
-        upsert_benchmark_grams,
+        benchmark_grams,
+        merge_grams,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
-    store = str(tmp_path / "grams")
+    path = str(tmp_path / "grams")
+    store = BatchStore(spark, path, merge_grams)
     suites = {
         0: [("shared boilerplate question answer pair one two three four",)],
         1: [("shared boilerplate question answer pair one two three four",),
             ("a wholly different benchmark sentence with eight plus words",)],
         2: [("late suite sentence number three with extra padding words here",)],
     }
-    for bid, rows in sorted(suites.items()):
-        upsert_benchmark_grams(
-            spark, store, spark.createDataFrame(rows, "text string"), bid
-        )
-    want = {r["g"] for r in read_benchmark_grams(spark, store).collect()}
-    stored_before = spark.read.parquet(store).count()
-    res = collapse_benchmark_grams(spark, store, 1)
+
+    def grams(bid):
+        return benchmark_grams(spark.createDataFrame(suites[bid], "text string"))
+
+    def read():
+        return {r["g"] for r in store.read().collect()}
+
+    for bid in sorted(suites):
+        store.upsert(bid, grams(bid))
+    want = read()
+    stored_before = spark.read.parquet(path).count()
+    res = store.collapse(1)
     assert res["batches_folded"] == 1
     # the duplicate suite-0/suite-1 shared grams stored twice are now
     # stored once: the fold physically shrank the store
-    assert spark.read.parquet(store).count() < stored_before
-    assert {r["g"] for r in read_benchmark_grams(spark, store).collect()} == want
+    assert spark.read.parquet(path).count() < stored_before
+    assert read() == want
     # straggler replays of folded batch 0 and base batch 1: both no-op
     for bid in (0, 1):
-        upsert_benchmark_grams(
-            spark, store, spark.createDataFrame(suites[bid], "text string"), bid
-        )
-        assert {r["g"] for r in
-                read_benchmark_grams(spark, store).collect()} == want
+        assert not store.upsert(bid, grams(bid))
+        assert read() == want
 
 
 def test_histogram_quantile_within_one_bin_of_exact(spark):

@@ -346,31 +346,27 @@ def test_advise_join_strategy_from_standing_registers_flips(spark, tmp_path):
     row bound — then to salted when the probe side turns skewed."""
     from umn_eda_kafka_stream_processing_spark.operators.sketches import (
         cms_registers,
-        read_cms_registers,
-        upsert_cms_registers,
+        merge_cms,
     )
     from umn_eda_kafka_stream_processing_spark.operators.skew import (
         advise_join_strategy,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import CMS_HORIZON, BatchStore
 
-    left_store = str(tmp_path / "regs_left")
-    right_store = str(tmp_path / "regs_right")
+    left = BatchStore(spark, str(tmp_path / "regs_left"), merge_cms, CMS_HORIZON)
+    right = BatchStore(spark, str(tmp_path / "regs_right"), merge_cms, CMS_HORIZON)
+
+    def keys(rows):
+        return cms_registers(spark.createDataFrame(rows, "k long"), "k")
+
     # batch 0: uniform left, tiny right -> broadcast
-    upsert_cms_registers(
-        spark, left_store,
-        spark.createDataFrame([(i,) for i in range(200)], "k long"),
-        "k", batch_id=0,
-    )
-    upsert_cms_registers(
-        spark, right_store,
-        spark.createDataFrame([(i,) for i in range(50)], "k long"),
-        "k", batch_id=0,
-    )
+    left.upsert(0, keys([(i,) for i in range(200)]))
+    right.upsert(0, keys([(i,) for i in range(50)]))
 
     def decide():
         return advise_join_strategy(
-            read_cms_registers(spark, left_store),
-            read_cms_registers(spark, right_store),
+            left.read(),
+            right.read(),
             max_broadcast_rows=100,
             max_share_micro=50_000,
         ).collect()[0]
@@ -380,29 +376,15 @@ def test_advise_join_strategy_from_standing_registers_flips(spark, tmp_path):
     assert d0["strategy"] == "broadcast"
     # batches 1-2 grow the right side past the broadcast bound
     for bid in (1, 2):
-        upsert_cms_registers(
-            spark, right_store,
-            spark.createDataFrame(
-                [(1000 * bid + i,) for i in range(40)], "k long"
-            ),
-            "k", batch_id=bid,
-        )
+        right.upsert(bid, keys([(1000 * bid + i,) for i in range(40)]))
     d1 = decide()
     assert d1["rows_right"] == 130 and d1["strategy"] == "shuffle_hash"
-    # batch 1 replay: latest-wins registers, decision unchanged
-    upsert_cms_registers(
-        spark, right_store,
-        spark.createDataFrame([(1000 + i,) for i in range(40)], "k long"),
-        "k", batch_id=1,
-    )
+    # batch 1 replay: batch-keyed registers, decision unchanged
+    right.upsert(1, keys([(1000 + i,) for i in range(40)]))
     d1r = decide()
     assert (d1r["rows_right"], d1r["strategy"]) == (130, "shuffle_hash")
     # a skewed left batch pushes the heaviest-key bound over 5%
-    upsert_cms_registers(
-        spark, left_store,
-        spark.createDataFrame([(7,)] * 100, "k long"),
-        "k", batch_id=1,
-    )
+    left.upsert(1, keys([(7,)] * 100))
     d2 = decide()
     assert d2["rows_left"] == 300
     assert d2["top_cnt_left_ub"] >= 100  # >= true heaviest (101)

@@ -269,8 +269,15 @@ def test_latest_by_key_stream_with_ttl(spark, tmp_path):
     are live (expiry itself is wall-clock dependent — this pins the
     mechanism wiring, not the timing). Uses an availableNow trigger:
     with processing-time timeouts enabled the engine schedules
-    timeout-check batches, so processAllAvailable would never settle.
+    timeout-check batches, so neither processAllAvailable nor
+    termination ever settles — the test polls the sink and stops the
+    query as soon as the latest version lands, and fails if it never
+    does.
     """
+    import time
+
+    import pytest
+
     src_dir, name = str(tmp_path / "ttl_events"), "ttl_latest"
     _pipe(spark, schemas.EVENT, [fx.event("e1", "a1", "v1", 100)], src_dir)
     _pipe(spark, schemas.EVENT, [fx.event("e1", "a1", "v2", 250)], src_dir, start_seq=1)
@@ -284,9 +291,17 @@ def test_latest_by_key_stream_with_ttl(spark, tmp_path):
         .start()
     )
     try:
-        q.awaitTermination(120)
-        rows = spark.sql(f"select * from {name} order by event_seq").collect()
-        assert rows and rows[-1]["capacity"] == 250 and rows[-1]["venueid"] == "v2"
+        deadline = time.monotonic() + 60
+        while True:
+            if q.exception() is not None:
+                raise q.exception()
+            rows = spark.sql(f"select * from {name} order by event_seq").collect()
+            if rows and rows[-1]["capacity"] == 250:
+                break
+            if time.monotonic() > deadline:
+                pytest.fail(f"latest version never reached the sink: {rows}")
+            time.sleep(0.2)
+        assert rows[-1]["venueid"] == "v2"
     finally:
         q.stop()
 
@@ -1153,12 +1168,7 @@ def test_advised_pipeline_soak_collapse_and_replay(spark, tmp_path):
     rerun with NO collapse and NO replays — collapse is
     decision-invariant (CMS sum-merge) and replays are no-ops."""
     from pyspark.sql import functions as F
-    from umn_eda_kafka_stream_processing_spark.operators.versioned import (
-        versioned_batch_ids,
-    )
-    from umn_eda_kafka_stream_processing_spark.operators.sketches import (
-        read_cms_collapse_horizon,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import CMS_HORIZON, BatchStore
     from umn_eda_kafka_stream_processing_spark.streaming.advised import (
         make_advised_enrichment_batch_fn,
         make_dim_changelog_batch_fn,
@@ -1228,9 +1238,10 @@ def test_advised_pipeline_soak_collapse_and_replay(spark, tmp_path):
     assert len({s for s in strat.values()}) == 3
     # collapse really folded: only the bases + tail batches remain,
     # and the marker carries the last horizon
-    assert versioned_batch_ids(spark, p("lregs")) == [5, 6, 7, 8]
-    assert read_cms_collapse_horizon(spark, p("lregs")) == 5
-    assert versioned_batch_ids(spark, p("rregs")) == [5, 6, 7, 8]
+    lregs = BatchStore(spark, p("lregs"), marker=CMS_HORIZON)
+    assert lregs.batch_ids() == [5, 6, 7, 8]
+    assert lregs.mark() == 5
+    assert BatchStore(spark, p("rregs")).batch_ids() == [5, 6, 7, 8]
 
 
 def test_hll_register_store_soak_collapse_and_replay(spark, tmp_path):
@@ -1243,12 +1254,7 @@ def test_hll_register_store_soak_collapse_and_replay(spark, tmp_path):
     a post-collapse BASE-batch replay must no-op (it would otherwise
     overwrite folded maxes with single-batch registers)."""
     from umn_eda_kafka_stream_processing_spark.operators import sketches as sk
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        read_collapse_horizon,
-    )
-    from umn_eda_kafka_stream_processing_spark.operators.versioned import (
-        versioned_batch_ids,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
     def batch_rows(b):
         # overlapping user sets across batches: max-merge is exercised
@@ -1258,22 +1264,24 @@ def test_hll_register_store_soak_collapse_and_replay(spark, tmp_path):
             "g string, u string",
         )
 
+    def regs_of(b):
+        return sk.hll_registers(batch_rows(b), "g", "u")
+
     def run(root, collapse_every, replay_at):
-        store = str(tmp_path / root)
+        store = BatchStore(spark, str(tmp_path / root), sk.merge_hll)
         for b in range(9):
-            sk.upsert_hll_registers(spark, store, batch_rows(b), "g", "u", b)
+            store.upsert(b, regs_of(b))
             if b in replay_at:
-                sk.upsert_hll_registers(spark, store, batch_rows(b), "g", "u", b)
+                store.upsert(b, regs_of(b))
             if collapse_every and b > 0 and b % collapse_every == 0:
-                sk.collapse_hll_registers(spark, store, b - 1)
+                store.collapse(b - 1)
         regs = sorted(
-            (r["g"], r["bucket"], r["r"])
-            for r in sk.read_hll_registers(spark, store).collect()
+            (r["g"], r["bucket"], r["r"]) for r in store.read().collect()
         )
         est = {
             r["g"]: (r["s_scaled"], r["hll_est"])
             for r in sk.hll_estimate_from_registers(
-                sk.read_hll_registers(spark, store), "g"
+                store.read(), "g"
             ).collect()
         }
         return store, regs, est
@@ -1283,13 +1291,12 @@ def test_hll_register_store_soak_collapse_and_replay(spark, tmp_path):
     assert regs == regs2  # collapse + replays invisible to the merge
     assert est == est2
     # collapse really folded: base 5 + tail batches remain
-    assert versioned_batch_ids(spark, store) == [5, 6, 7, 8]
-    assert read_collapse_horizon(spark, store) == 5
+    assert store.batch_ids() == [5, 6, 7, 8]
+    assert store.mark() == 5
     # straggler replay of the BASE batch after collapse: no-op
-    sk.upsert_hll_registers(spark, store, batch_rows(5), "g", "u", 5)
+    assert not store.upsert(5, regs_of(5))
     assert sorted(
-        (r["g"], r["bucket"], r["r"])
-        for r in sk.read_hll_registers(spark, store).collect()
+        (r["g"], r["bucket"], r["r"]) for r in store.read().collect()
     ) == regs
 
 

@@ -24,26 +24,42 @@ from umn_eda_kafka_stream_processing_spark.plans import REGISTRY
 from umn_eda_kafka_stream_processing_spark.session import get_spark
 
 
-def main() -> None:
-    args = sys.argv[1:]
+USAGE = "usage: time_query.py [--runs N] [--sf DIR] query..."
+
+
+def parse_args(args: list[str]) -> tuple[int, str, list[str]]:
+    """(runs, sf_dir, query names); prints the usage line and exits 2
+    on a flag without its value, a non-integer run count or an unknown
+    query name."""
     runs = 3
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     names = []
     i = 0
     while i < len(args):
-        if args[i] == "--runs":
-            runs = int(args[i + 1])
-            i += 2
-        elif args[i] == "--sf":
-            sf_dir = args[i + 1]
+        if args[i] in ("--runs", "--sf"):
+            if i + 1 == len(args):
+                print(f"{USAGE}; {args[i]} needs a value")
+                raise SystemExit(2)
+            if args[i] == "--sf":
+                sf_dir = args[i + 1]
+            elif args[i + 1].isdigit():
+                runs = int(args[i + 1])
+            else:
+                print(f"{USAGE}; --runs needs an integer, got {args[i + 1]!r}")
+                raise SystemExit(2)
             i += 2
         else:
             names.append(args[i])
             i += 1
     unknown = [n for n in names if n not in REGISTRY]
     if unknown or not names:
-        print(f"usage: time_query.py [--runs N] [--sf DIR] query...; unknown={unknown}")
+        print(f"{USAGE}; unknown={unknown}")
         raise SystemExit(2)
+    return runs, sf_dir, names
+
+
+def main() -> None:
+    runs, sf_dir, names = parse_args(sys.argv[1:])
     spark = get_spark(app_name="time-query")
     spark.sparkContext.setLogLevel("ERROR")
     REGISTRY["user_event_count"].spark(spark, sf_dir).write.format("noop").mode(

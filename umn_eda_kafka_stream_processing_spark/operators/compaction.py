@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from umn_eda_kafka_stream_processing_spark.operators.core import latest_by_key
+from umn_eda_kafka_stream_processing_spark.stores import hadoop_fs, read_or_empty
 
 
 def compact_changelog(
@@ -64,254 +65,17 @@ def compact_changelog(
     return compacted.drop("_src")
 
 
-def upsert_batch_partition(
-    spark: SparkSession,
-    table_path: str,
-    batch_rows: DataFrame,
-    batch_id: int,
-    write_coalesce: int | None = 1,
+def _delete_partitions(
+    spark: SparkSession, table_path: str, subdirs: Sequence[str]
 ) -> None:
-    """Replay-safe write for BATCH-KEYED stores — stores whose rows
-    are a pure function of their batch (CMS/HLL registers, benchmark
-    gram sets, decision logs): the batch's rows land under
-    ``batch_id=N`` via dynamic partition overwrite, NO read and NO
-    merge. A foreachBatch replay recomputes IDENTICAL rows and
-    rewrites the same directory — the latest-wins upsert's no-op
-    outcome without ever reading the store (the general
-    `upsert_snapshot` pays a touched-partition read + merge +
-    checkpoint per batch for latest-wins semantics these stores
-    cannot need: there is nothing older under the same key to lose).
-    A crash mid-write leaves a partial directory the replay
-    overwrites wholesale. ``batch_rows`` must NOT already carry
-    batch_id/event_seq (added here; event_seq=0 keeps the schema
-    interchangeable with upsert_snapshot-managed stores)."""
-    clash = {"batch_id", "event_seq"} & set(batch_rows.columns)
-    if clash:
-        raise ValueError(
-            f"batch_rows already carries reserved column(s) {sorted(clash)}"
-            " — they are added here (pass the payload columns only)"
-        )
-    out = batch_rows.select(
-        F.lit(int(batch_id)).cast("long").alias("batch_id"),
-        "*",
-        F.lit(0).cast("long").alias("event_seq"),
-    )
-    if write_coalesce:
-        # repartition, NOT coalesce: coalesce(1) over a local
-        # relation/small plan folds all upstream slices into one
-        # task that stalls ~5-7 s in the scheduler (measured r13);
-        # a 1-partition shuffle of <= ~1024 rows is ~free
-        out = out.repartition(int(write_coalesce))
-    (
-        out.write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(table_path)
-    )
-    spark.catalog.refreshByPath(table_path)
-
-
-_COLLAPSE_MARKER = "_collapse_horizon"
-
-
-def read_collapse_horizon(
-    spark: SparkSession, table_path: str, marker_name: str = _COLLAPSE_MARKER
-) -> int | None:
-    """A batch-keyed store's collapse horizon (largest batch id folded
-    into the base by `collapse_batch_registers`), or None if never
-    collapsed. Metadata-only: the horizon is the suffix of an
-    underscore-prefixed marker FILENAME (`<marker_name>_N` —
-    underscore-prefixed files are hidden from Spark's parquet scans;
-    a `name=value` filename would be partition-discovered and break
-    the scan), read via one Hadoop FS directory listing, zero Spark
-    jobs (the `versioned_batch_ids` rule)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(table_path)
-    fs = p.getFileSystem(conf)
-    if not fs.exists(p):
-        return None
-    horizons = [
-        int(st.getPath().getName()[len(marker_name) + 1:])
-        for st in fs.listStatus(p)
-        if st.getPath().getName().startswith(f"{marker_name}_")
-    ]
-    return max(horizons) if horizons else None
-
-
-def collapse_batch_registers(
-    spark: SparkSession,
-    table_path: str,
-    upto_batch: int,
-    merge,
-    marker_name: str = _COLLAPSE_MARKER,
-    write_coalesce: int | None = 1,
-) -> dict:
-    """Horizon collapse for ANY batch-keyed register store — the
-    retention step that keeps reads O(registers + window) instead of
-    O(registers × batches) forever. Generalizes the CMS shape
-    (round-13 verdict task 3): CMS registers fold by SUM, HLL
-    registers by register-wise MAX, benchmark gram sets by set UNION
-    (distinct), agg-view partials by their merge aggregates — the
-    store-specific half is the ``merge`` callable, everything else
-    (clamping, crash safety, marker, deletes) is this function.
-
-    ``merge(df) -> DataFrame``: df is the eligible batches' PAYLOAD
-    rows (batch_id/event_seq dropped); the result must be the folded
-    payload whose read-semantics equal reading the originals (the
-    mergeable-state contract each store documents).
-
-    ``upto_batch`` is CLAMPED to the largest INGESTED batch id <= it
-    (the `collapse_versioned` gap rule: never mint a phantom batch);
-    the fold lands in that REAL base batch's partition via dynamic
-    overwrite.
-
-    CRASH SAFETY (the round-13-advice ordering): the
-    ``<marker_name>_<base>`` marker is written IMMEDIATELY after the
-    base-partition overwrite, BEFORE the folded directories are
-    deleted. Store readers must exclude ``batch_id < horizon`` (each
-    store's read_* helper does), so a crash mid-deletes leaves stale
-    directories every reader ignores and the NEXT collapse call
-    sweeps — self-healing, never a double count. Upserts must no-op
-    for ``batch_id <= horizon`` (each store's upsert guard): after a
-    collapse, a straggler replay of a folded batch would re-add mass
-    the fold already contains, and a replay of the base itself would
-    overwrite folded state with single-batch state.
-
-    CONTRACT: collapse only batches at/below the stream's replay
-    horizon (Structured Streaming replays the LAST batch — callers
-    pass ``current_batch - 1`` or older).
-
-    Returns ``{"batches_folded": n, "rows": k}``."""
-    from umn_eda_kafka_stream_processing_spark.operators.versioned import (
-        versioned_batch_ids,
-    )
-
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(table_path).getFileSystem(conf)
-
-    def _delete_batch_dir(b: int) -> None:
-        gone = jvm.org.apache.hadoop.fs.Path(f"{table_path}/batch_id={int(b)}")
-        fs.delete(gone, True)
-
-    ids = versioned_batch_ids(spark, table_path)
-    prior = read_collapse_horizon(spark, table_path, marker_name)
-    if prior is not None:
-        # finish a crashed predecessor's deletes: anything below the
-        # recorded horizon is already folded into its base — stale
-        stale = [b for b in ids if b < prior]
-        for b in stale:
-            _delete_batch_dir(b)
-        if stale:
-            spark.catalog.refreshByPath(table_path)
-        ids = [b for b in ids if b >= prior]
-    eligible = [b for b in ids if b <= int(upto_batch)]
-    if len(eligible) <= 1:
-        return {"batches_folded": 0, "rows": 0}
-    base = max(eligible)  # fold INTO a real ingested batch
-    payload = (
-        spark.read.parquet(table_path)
-        .filter(F.col("batch_id").isin([int(b) for b in eligible]))
-        .drop("batch_id", "event_seq")
-    )
-    folded = merge(payload).select(
-        F.lit(int(base)).cast("long").alias("batch_id"),
-        "*",
-        F.lit(0).cast("long").alias("event_seq"),
-    )
-    if write_coalesce:
-        # repartition, NOT coalesce: the one-task scheduler stall
-        folded = folded.repartition(int(write_coalesce))
-    # localCheckpoint: the fold READS the base partition the dynamic
-    # overwrite below replaces
-    folded = folded.localCheckpoint()
-    n_rows = folded.count()
-    (
-        folded.write.mode("overwrite")
-        .partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(table_path)
-    )
-    # marker FIRST (immediately after the overwrite commits), deletes
-    # second: from this point every reader excludes batch_id < base,
-    # so the not-yet-deleted folded directories are invisible
-    marker = jvm.org.apache.hadoop.fs.Path(
-        f"{table_path}/{marker_name}_{int(base)}"
-    )
-    fs.create(marker, True).close()
-    for b in eligible:
-        if int(b) != int(base):
-            _delete_batch_dir(b)
-    spark.catalog.refreshByPath(table_path)
-    return {"batches_folded": len(eligible) - 1, "rows": int(n_rows)}
-
-
-_RETENTION_MARKER = "_retention_floor"
-
-
-def read_retention_floor(
-    spark: SparkSession, table_path: str, marker_name: str = _RETENTION_MARKER
-) -> int | None:
-    """A batch-keyed store's retention floor (smallest batch id still
-    retained after `expire_batch_partitions`), or None if never
-    expired. Same metadata-only marker mechanics as
-    `read_collapse_horizon` (one FS listing, zero Spark jobs) under a
-    different marker name — the two can coexist on one store."""
-    return read_collapse_horizon(spark, table_path, marker_name)
-
-
-def expire_batch_partitions(
-    spark: SparkSession,
-    table_path: str,
-    keep_from_batch: int,
-    marker_name: str = _RETENTION_MARKER,
-) -> dict:
-    """RETENTION for batch-keyed monitor stores (round-13 verdict task
-    6): drop every ``batch_id < keep_from_batch`` partition outright.
-    The collapse (`collapse_batch_registers`) is for stores whose old
-    batches still carry mass a read needs (sketch registers, agg-view
-    partials); monitor stores (histogram/category drift, constraint
-    censuses) read bounded batch WINDOWS — folding old batches into a
-    base would corrupt any window crossing the fold, so beyond the
-    drift window the history is simply EXPIRED.
-
-    Metadata-only end to end: ingested ids from one FS listing, exact
-    directory deletes, zero Spark jobs. Crash-safe in the same
-    marker-first order as the collapse: the ``<marker_name>_N`` marker
-    (N = keep_from_batch) lands BEFORE the deletes, store readers
-    exclude ``batch_id < floor``, and the next expire call sweeps any
-    directories a crash left behind. Store upserts no-op below the
-    floor — a straggler replay of an expired batch must not resurrect
-    a partition every census already treats as gone.
-
-    Idempotent and monotone: re-running with the same or a smaller
-    ``keep_from_batch`` deletes nothing new (the floor only rises).
-
-    Returns ``{"batches_expired": n}``."""
-    from umn_eda_kafka_stream_processing_spark.operators.versioned import (
-        versioned_batch_ids,
-    )
-
-    floor = read_retention_floor(spark, table_path, marker_name)
-    keep = max(int(keep_from_batch), floor if floor is not None else 0)
-    ids = versioned_batch_ids(spark, table_path)
-    doomed = [b for b in ids if b < keep]
-    if not doomed:
-        return {"batches_expired": 0}
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    fs = jvm.org.apache.hadoop.fs.Path(table_path).getFileSystem(conf)
-    if floor is None or keep > floor:
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{table_path}/{marker_name}_{keep}"
-        )
-        fs.create(marker, True).close()
-    for b in doomed:
-        gone = jvm.org.apache.hadoop.fs.Path(f"{table_path}/batch_id={int(b)}")
-        fs.delete(gone, True)
-    spark.catalog.refreshByPath(table_path)
-    return {"batches_expired": len(doomed)}
+    """Delete partition directories (``c=v`` or nested ``c=v/d=w``)
+    the job emptied: dynamic overwrite only replaces partitions the job
+    WRITES, so a partition whose last row went away must go explicitly."""
+    if not subdirs:
+        return
+    fs, _, jvm = hadoop_fs(spark, table_path)
+    for sub in subdirs:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{table_path}/{sub}"), True)
 
 
 def upsert_snapshot(
@@ -466,19 +230,20 @@ def upsert_bucket_partitioned(
         .parquet(table_path)
     )
 
-    if old is not None and emptied:
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        for b in emptied:
-            p = jvm.org.apache.hadoop.fs.Path(
-                f"{table_path}/{bucket_col}={b}"
-            )
-            p.getFileSystem(conf).delete(p, True)
+    _delete_partitions(
+        spark, table_path, [f"{bucket_col}={b}" for b in emptied]
+    )
 
     # the session's shared FileStatusCache still lists the replaced
     # files; without this, the next read of the store can hit
     # FILE_NOT_EXIST on the overwritten partitions
     spark.catalog.refreshByPath(table_path)
+
+
+def _partition_dir(parts: list, row) -> str:
+    """Relative directory of one partition — nested for multi-column
+    layouts (``c=v/d=w``)."""
+    return "/".join(f"{c}={row[c]}" for c in parts)
 
 
 def _partition_selector(parts: list, chosen) -> Column:
@@ -715,24 +480,10 @@ def expire_snapshot(
             "partitionOverwriteMode", "dynamic"
         )
         writer.parquet(table_path)
-        if emptied and len(parts) == 1:
-            jvm = spark.sparkContext._jvm
-            conf = spark.sparkContext._jsc.hadoopConfiguration()
-            for r in emptied:
-                p = jvm.org.apache.hadoop.fs.Path(
-                    f"{table_path}/{parts[0]}={r[parts[0]]}"
-                )
-                p.getFileSystem(conf).delete(p, True)
-            stats["partitions_deleted"] = len(emptied)
-        elif emptied:
-            # multi-col partition dirs nest; build the nested path
-            jvm = spark.sparkContext._jvm
-            conf = spark.sparkContext._jsc.hadoopConfiguration()
-            for r in emptied:
-                sub = "/".join(f"{c}={r[c]}" for c in parts)
-                p = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{sub}")
-                p.getFileSystem(conf).delete(p, True)
-            stats["partitions_deleted"] = len(emptied)
+        _delete_partitions(
+            spark, table_path, [_partition_dir(parts, r) for r in emptied]
+        )
+        stats["partitions_deleted"] = len(emptied)
     else:
         writer.parquet(table_path)
     spark.catalog.refreshByPath(table_path)
@@ -846,12 +597,9 @@ def maintain_store(
         "rows_rewritten": 0,
     }
     if parts and emptied:
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        for r in emptied:
-            sub = "/".join(f"{c}={r[c]}" for c in parts)
-            p = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{sub}")
-            p.getFileSystem(conf).delete(p, True)
+        _delete_partitions(
+            spark, table_path, [_partition_dir(parts, r) for r in emptied]
+        )
         stats["partitions_deleted"] = len(emptied)
         spark.catalog.refreshByPath(table_path)
         store = spark.read.parquet(table_path) if chosen else store
@@ -1410,18 +1158,15 @@ def erase_keys(
         if isinstance(partition_cols, str)
         else list(partition_cols)
     )
-    try:
-        store = spark.read.parquet(table_path)
-    except AnalysisException as exc:
-        cond = getattr(exc, "getCondition", exc.getErrorClass)()
-        if cond != "PATH_NOT_FOUND":
-            raise
-        return {
-            "partitions_touched": 0,
-            "rows_removed": 0,
-            "rows_kept": 0,
-            "partitions_emptied": 0,
-        }
+    nothing = {
+        "partitions_touched": 0,
+        "rows_removed": 0,
+        "rows_kept": 0,
+        "partitions_emptied": 0,
+    }
+    store = read_or_empty(lambda: spark.read.parquet(table_path), None)
+    if store is None:
+        return nothing
     kd = keys.select(F.col(keys.columns[0]).alias(key_col)).distinct()
     touched_rows = (
         store.join(F.broadcast(kd), key_col, "left_semi")
@@ -1431,12 +1176,7 @@ def erase_keys(
     )
     touched = [tuple(r[c] for c in parts) for r in touched_rows]
     if not touched:
-        return {
-            "partitions_touched": 0,
-            "rows_removed": 0,
-            "rows_kept": 0,
-            "partitions_emptied": 0,
-        }
+        return nothing
     sel = _partition_selector(parts, touched_rows)
     touched_df = store.filter(sel)
     n_before = touched_df.count()
@@ -1455,12 +1195,11 @@ def erase_keys(
         for r in kept.select(*parts).distinct().collect()
     }
     emptied = [t for t in touched if t not in written]
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    for t in emptied:
-        sub = "/".join(f"{c}={v}" for c, v in zip(parts, t))
-        p = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{sub}")
-        p.getFileSystem(conf).delete(p, True)
+    _delete_partitions(
+        spark,
+        table_path,
+        [_partition_dir(parts, dict(zip(parts, t))) for t in emptied],
+    )
     spark.catalog.refreshByPath(table_path)
     return {
         "partitions_touched": len(touched),

@@ -85,10 +85,11 @@ def training_manifest(
     (the train-once/serve-many rule) instead of regrowing it here.
 
     ``bench_grams`` replaces ``benchmark`` (pass None there) with a
-    pre-hashed gram frame — the `upsert_benchmark_grams` store shape,
-    so a manifest can sweep against the standing gram STORE exactly
-    as the streaming sweep does (`read_benchmark_grams` == the gram
-    set of all suites at once, test-pinned)."""
+    pre-hashed gram frame — the gram store's shape
+    (`decontam.benchmark_grams`), so a manifest can sweep against the
+    standing gram STORE exactly as the streaming sweep does (the
+    store's `read` == the gram set of all suites at once,
+    test-pinned)."""
     from umn_eda_kafka_stream_processing_spark.operators.decontam import (
         decontaminate,
     )

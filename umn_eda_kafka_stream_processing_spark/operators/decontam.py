@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.stores import BatchStore
+
 
 def word_ngram_hashes(
     text_col: str = "text", n: int = 8, distinct: bool = True
@@ -64,103 +66,31 @@ def word_ngram_hashes(
     )
 
 
-def upsert_benchmark_grams(
-    spark,
-    store_path: str,
-    bench_batch_df: DataFrame,
-    batch_id: int,
-    n: int = 8,
-    text_col: str = "text",
-    grams: DataFrame | None = None,
-) -> None:
-    """Incrementally-maintained benchmark gram store (foreachBatch
-    shape): evaluation suites GROW — new held-out sets arrive after
-    the corpus sweep is already running — so the benchmark side is a
-    register store, not a static frame. The store is BATCH-KEYED (a
-    batch's gram set is a pure function of the batch), so each
-    batch's distinct gram hashes rewrite their own ``batch_id=N``
-    partition via dynamic overwrite — a replayed batch recomputes
-    IDENTICAL rows and the rewrite is a no-op, with no store read
-    and no merge (`compaction.upsert_batch_partition`). The merged
-    gram set is a distinct across batches at read
-    (`read_benchmark_grams`) — set union is associative, so the
-    merged store equals the from-scratch gram set exactly (test-
-    pinned). Store size: Σ distinct grams — benchmark-suite-sized,
-    broadcastable.
+def benchmark_grams(
+    bench_batch_df: DataFrame, n: int = 8, text_col: str = "text"
+) -> DataFrame:
+    """One benchmark batch's distinct gram hashes ``(g)`` — the payload of
+    the benchmark gram store (a `stores.BatchStore` with `merge_grams`).
+    Evaluation suites GROW — new held-out sets arrive after the corpus
+    sweep is already running — so the benchmark side is a batch-keyed
+    store, not a static frame; a caller already holding the batch's gram
+    hashes (a standing `corpus_gram_table` the batch is a slice of) writes
+    their distinct set instead and skips this explode.
 
-    A batch at or below the store's collapse horizon
-    (`collapse_benchmark_grams`) NO-OPS — a replay of the base batch
-    would overwrite the folded union with a single suite's grams,
-    silently un-decontaminating every other suite. Same metadata-only
-    guard as the CMS/HLL stores. NOTE for the delta re-sweep: the
-    collapse relabels folded grams to the base batch_id, so
-    `resweep_decontaminate`'s novel-gram window (which prunes on
-    batch_id) must only be pointed at batches ABOVE the horizon —
-    the same replay-window contract the collapse already requires.
-
-    ``grams`` optionally injects the batch's gram hashes as a
-    one-column frame (first column taken, distinct applied here) —
-    for callers that already hold a gram table over the batch's docs
-    (e.g. a standing `corpus_gram_table` the batch is a slice of),
-    skipping the per-upsert text explode. The caller's contract: the
-    injected set must equal the batch docs' distinct gram hashes."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        read_collapse_horizon,
-        upsert_batch_partition,
-    )
-
-    horizon = read_collapse_horizon(spark, store_path)
-    if horizon is not None and int(batch_id) <= horizon:
-        return  # at/below the collapse horizon: already in the fold
-
-    if grams is not None:
-        regs = grams.select(
-            F.col(grams.columns[0]).alias("g")
-        ).distinct()
-    else:
-        regs = bench_batch_df.select(
-            F.explode(word_ngram_hashes(text_col, n)).alias("g")
-        ).distinct()
-    upsert_batch_partition(spark, store_path, regs, batch_id)
+    After a collapse the base batch holds the union of the folded suites,
+    so `resweep_decontaminate`'s novel-gram window (which prunes on
+    batch_id) must only be pointed at batches ABOVE the horizon."""
+    return bench_batch_df.select(
+        F.explode(word_ngram_hashes(text_col, n)).alias("g")
+    ).distinct()
 
 
-def read_benchmark_grams(spark, store_path: str) -> DataFrame:
-    """Merged benchmark gram set of an `upsert_benchmark_grams`
-    store: one distinct across batch registers — equals the gram set
-    of all benchmark docs at once. Batches below the collapse horizon
-    are excluded (stale leftovers of a crashed collapse; harmless for
-    a set union, but uniform with the CMS/HLL crash-recovery story)."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        read_collapse_horizon,
-    )
-
-    df = spark.read.parquet(store_path)
-    horizon = read_collapse_horizon(spark, store_path)
-    if horizon is not None:
-        df = df.filter(F.col("batch_id") >= int(horizon))
-    return df.select("g").distinct()
-
-
-def collapse_benchmark_grams(spark, store_path: str, upto_batch: int) -> dict:
-    """Horizon collapse for a benchmark gram store (round-13 verdict
-    task 3): gram sets merge by set UNION, so folding batches <= the
-    horizon into one base batch of DISTINCT grams keeps
-    `read_benchmark_grams` identical before/after while dropping the
-    per-suite duplicate hashes (shared boilerplate grams across
-    suites stop being stored once per suite). Same clamping, crash
-    safety, marker guard, and caller contract as the CMS collapse.
-    Returns ``{"batches_folded": n, "gram_rows": k}``."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        collapse_batch_registers,
-    )
-
-    res = collapse_batch_registers(
-        spark,
-        store_path,
-        upto_batch,
-        lambda df: df.select("g").distinct(),
-    )
-    return {"batches_folded": res["batches_folded"], "gram_rows": res["rows"]}
+def merge_grams(grams: DataFrame) -> DataFrame:
+    """The benchmark gram store's merge: set UNION (one distinct across
+    batches) — associative, so the store reads exactly the gram set of all
+    benchmark docs at once, and a collapse stops storing grams shared
+    across suites once per suite."""
+    return grams.select("g").distinct()
 
 
 def incremental_decontaminate(
@@ -186,7 +116,7 @@ def incremental_decontaminate(
     return decontaminate(
         corpus_batch_df,
         benchmark=None,
-        bench_grams=read_benchmark_grams(spark, store_path),
+        bench_grams=BatchStore(spark, store_path, merge_grams).read(),
         n=n,
         min_overlap=min_overlap,
         id_col=id_col,

@@ -658,50 +658,6 @@ def minhash_signatures(
     return exploded.groupBy(id_col).agg(*aggs)
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """Banded LSH over minhash signatures → distinct candidate pairs.
-
-    Band key = md5 of the band's signature rows; docs sharing any
-    band key become a candidate pair. The band-explode + self-join
-    runs on (band_idx, band_key) — tiny keys, linear output in the
-    number of true collisions.
-    """
-    bands = num_hashes // rows_per_band
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                "|", *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-            )
-        ).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    banded = signatures.select(F.col(id_col), *band_cols)
-    melted = banded.select(
-        F.col(id_col),
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(b).alias("band_idx"), F.col(f"band{b}").alias("band_key"))
-                for b in range(bands)
-            ])
-        ).alias("bk"),
-    ).select(id_col, "bk.band_idx", "bk.band_key")
-    a = melted.select(
-        F.col(id_col).alias(f"{id_col}_a"), "band_idx", "band_key"
-    )
-    b = melted.select(
-        F.col(id_col).alias(f"{id_col}_b"), "band_idx", "band_key"
-    )
-    pairs = a.join(b, ["band_idx", "band_key"], "inner").filter(
-        F.col(f"{id_col}_a") < F.col(f"{id_col}_b")
-    )
-    return pairs.select(f"{id_col}_a", f"{id_col}_b").distinct()
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",

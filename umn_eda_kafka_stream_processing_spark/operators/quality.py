@@ -30,6 +30,12 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.stores import (
+    FLOOR,
+    BatchStore,
+    read_or_empty,
+)
+
 _ROW_LOCAL = {"not_null", "range", "accepted_values", "regex"}
 
 
@@ -179,123 +185,30 @@ def check_constraints(
     )
 
 
-def _monitor_floor(spark, store_path: str) -> "int | None":
-    """The monitor store's retention floor (see
-    `compaction.expire_batch_partitions`) — shared by the three
-    monitor upsert guards and the three window readers."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        read_retention_floor,
-    )
+def histogram_monitor_registers(
+    batch_df: DataFrame, specs: "dict[str, tuple]"
+) -> DataFrame:
+    """DISTRIBUTION half of the streaming contract monitor: one batch's
+    256-bin histogram sketch per watched column (operators/sketches.py:
+    histogram_registers — constant mergeable state, one hash-agg per
+    column), rows ``(col_name, bin, cnt)``. ``specs``: {column: (lo, hi,
+    bins)}.
 
-    return read_retention_floor(spark, store_path)
-
-
-def _floor_filtered(spark, store_path: str) -> DataFrame:
-    """Monitor store scan excluding expired batches: rows below the
-    retention floor are either gone or stale leftovers of an expire
-    call that crashed mid-delete — a window read must never see them
-    (partition-column filter, so the scan prunes directories)."""
-    df = spark.read.parquet(store_path)
-    floor = _monitor_floor(spark, store_path)
-    if floor is not None:
-        df = df.filter(F.col("batch_id") >= int(floor))
-    return df
-
-
-def upsert_constraint_census(
-    spark,
-    store_path: str,
-    batch_df: DataFrame,
-    checks: Sequence[tuple],
-    batch_id: int,
-    dims: "dict[str, DataFrame] | None" = None,
-) -> None:
-    """Streaming twin of `check_constraints` — the continuously
-    maintained data-contract MONITOR (foreachBatch shape): each
-    microbatch's census lands keyed by (batch_id, check, target)
-    through the latest-wins upsert, so a replayed batch recomputes
-    IDENTICAL rows and the write is a no-op (the replay-safe
-    per-batch keying rule — never read-modify-add). The store is a
-    tiny long-frame history: one row per (batch, constraint),
-    diffable across batches for drift alerts. A batch below the
-    retention floor (`compaction.expire_batch_partitions`) NO-OPS —
-    a straggler replay must not resurrect an expired partition."""
-    if (floor := _monitor_floor(spark, store_path)) is not None and int(
-        batch_id
-    ) < floor:
-        return  # below the retention floor: expired history
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_batch_partition,
-    )
-
-    census = check_constraints(batch_df, checks, dims=dims).select(
-        "check",
-        "target",
-        "n_rows",
-        "n_violations",
-        "ok",
-    )
-    # BATCH-KEYED store (the census is a pure function of the batch):
-    # dynamic overwrite of batch_id=N, replay no-op, no merge — and
-    # no more whole-store rewrite per batch (the old unpartitioned
-    # upsert reread and rewrote the full history every append)
-    upsert_batch_partition(spark, store_path, census, batch_id)
-
-
-def read_constraint_history(spark, store_path: str) -> DataFrame:
-    """The monitor's history: (batch_id, check, target, n_rows,
-    n_violations, ok) per batch — plus use a groupBy over it for
-    totals or a window per (check, target) for drift.
-
-    batch_id is cast to long explicitly: it is a PARTITION column
-    (upsert_batch_partition) and partition-type inference reads it as
-    int32, which would silently break downstream BIGINT comparisons
-    and schema pins (mirror of advised.read_decisions). Expired
-    batches (below the retention floor) are excluded."""
-    return _floor_filtered(spark, store_path).select(
-        F.col("batch_id").cast("long").alias("batch_id"),
-        "check",
-        "target",
-        "n_rows",
-        "n_violations",
-        "ok",
-    )
-
-
-def upsert_histogram_monitor(
-    spark,
-    store_path: str,
-    batch_df: DataFrame,
-    specs: "dict[str, tuple]",
-    batch_id: int,
-) -> None:
-    """DISTRIBUTION half of the streaming contract monitor: per batch,
-    one 256-bin histogram sketch per watched column (operators/
-    sketches.py:histogram_registers — constant mergeable state, one
-    hash-agg per column over the batch), stored keyed by
-    (batch_id, col_name, bin) through the latest-wins upsert — the
-    replay-safe per-batch keying rule: a replayed batch recomputes
-    IDENTICAL register rows and the write is a no-op; windows are
-    summed across batch_ids at read (`drift_census`), never
-    read-modify-added. ``specs``: {column: (lo, hi, bins)}. Store
-    size: <= Σ bins rows per batch, however large the batches; beyond
-    the drift window the history is EXPIRED
-    (`compaction.expire_batch_partitions`) — a batch below the
-    retention floor NO-OPS here so a straggler replay cannot
-    resurrect an expired partition."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_batch_partition,
-    )
+    The payload of a monitor store — a `stores.BatchStore` with the
+    `stores.FLOOR` marker: each batch's registers rewrite their own
+    ``batch_id=N`` partition (a replay is a no-op, never a
+    read-modify-add), `drift_census` sums windows across batch ids at
+    read, and beyond the drift window the history is EXPIRED
+    (`BatchStore.expire`) rather than collapsed — a fold would corrupt
+    any window crossing it. Store size: <= Σ bins rows per batch,
+    however large the batches. The check_constraints census is the
+    count-based monitor's payload the same way."""
     from umn_eda_kafka_stream_processing_spark.operators.sketches import (
         histogram_registers,
     )
 
     if not specs:
         raise ValueError("specs must be non-empty")
-    if (floor := _monitor_floor(spark, store_path)) is not None and int(
-        batch_id
-    ) < floor:
-        return  # below the retention floor: expired history
     regs = None
     for col, (lo, hi, bins) in sorted(specs.items()):
         r = histogram_registers(
@@ -307,11 +220,7 @@ def upsert_histogram_monitor(
             "cnt",
         )
         regs = r if regs is None else regs.unionByName(r)
-    # BATCH-KEYED store: registers are a pure function of the batch —
-    # the batch's rows rewrite their own directory (dynamic
-    # overwrite, replay no-op), no store read, no merge; drift
-    # windows prune on batch_id
-    upsert_batch_partition(spark, store_path, regs, batch_id)
+    return regs
 
 
 def drift_census(
@@ -321,7 +230,7 @@ def drift_census(
     cur_batches: tuple,
 ) -> DataFrame:
     """Population-Stability-Index drift per watched column between two
-    batch WINDOWS of an `upsert_histogram_monitor` store — the
+    batch WINDOWS of a `histogram_monitor_registers` store — the
     distribution alarm the count-based constraint monitor lacks
     (reference batches = the contract's blessed window, current =
     the batches under suspicion; both inclusive (lo, hi) batch_id
@@ -351,7 +260,7 @@ def drift_census(
     retention contract."""
     rlo, rhi = int(ref_batches[0]), int(ref_batches[1])
     clo, chi = int(cur_batches[0]), int(cur_batches[1])
-    st = _floor_filtered(spark, store_path)
+    st = BatchStore(spark, store_path, marker=FLOOR).scan()
     in_ref = (F.col("batch_id") >= rlo) & (F.col("batch_id") <= rhi)
     in_cur = (F.col("batch_id") >= clo) & (F.col("batch_id") <= chi)
     per_bin = (
@@ -420,48 +329,33 @@ def _psi_from_counts(per_bin: DataFrame, n_col: str = "n_bins") -> DataFrame:
     )
 
 
-def upsert_category_monitor(
-    spark,
-    store_path: str,
+def category_registers(
+    store: BatchStore,
     batch_df: DataFrame,
     cols: Sequence[str],
-    batch_id: int,
     max_categories: int = 10_000,
-) -> None:
-    """CATEGORICAL half of the streaming contract monitor (the
-    round-11 verdict's gap: the 256-bin histogram registers cover
-    numeric columns; real contracts also pin categorical frequency
-    drift — event types, langs, domains). Per batch, one
-    (col_name, category) count register per watched column: the
-    table_profile stack-melt (one Generate, no shuffle) + ONE
-    hash-agg for any column count, stored keyed
-    (batch_id, col_name, category) through the latest-wins upsert —
-    a replayed batch recomputes IDENTICAL rows and the write is a
-    no-op; windows are summed across batch_ids at read
-    (`categorical_drift_census`), never read-modify-added.
-    Partitioned by batch_id (replays rewrite one directory, window
-    reads prune).
+) -> DataFrame:
+    """CATEGORICAL half of the streaming contract monitor (the 256-bin
+    histogram registers cover numeric columns; real contracts also pin
+    categorical frequency drift — event types, langs, domains): one
+    batch's ``(col_name, category, cnt)`` count registers per watched
+    column — the table_profile stack-melt (one Generate, no shuffle) +
+    ONE hash-agg for any column count. The payload of a monitor
+    ``store`` (`stores.FLOOR` marker, see `histogram_monitor_registers`);
+    `categorical_drift_census` sums windows across batch ids at read.
 
-    Values are counted as STRINGS (the melt's shared type); NULL is
-    its own category. ``max_categories`` makes the "categorical"
-    assumption fail LOUD — and it bounds the CUMULATIVE occupied set
-    (store union batch), so a column drifting a few new categories
-    per batch trips it too, instead of silently growing the store
-    corpus-sized over time (a high-cardinality column belongs in the
-    histogram monitor or a KMV sketch, not a per-category
-    register). A batch below the retention floor
-    (`compaction.expire_batch_partitions`) NO-OPS."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_batch_partition,
-    )
-
+    Values are counted as STRINGS (the melt's shared type); NULL is its
+    own category. ``max_categories`` makes the "categorical" assumption
+    fail LOUD — and it bounds the CUMULATIVE occupied set (live store
+    union batch), so a column drifting a few new categories per batch
+    trips it too, instead of silently growing the store corpus-sized (a
+    high-cardinality column belongs in the histogram monitor or a KMV
+    sketch). The check runs Spark jobs, so callers test
+    ``store.closed(batch_id)`` first: a guarded replay then runs
+    nothing."""
     cols = list(cols)
     if not cols:
         raise ValueError("cols must be non-empty")
-    if (floor := _monitor_floor(spark, store_path)) is not None and int(
-        batch_id
-    ) < floor:
-        return  # below the retention floor: expired history
     pairs = ", ".join(f"'{c}', CAST(`{c}` AS STRING)" for c in cols)
     melted = batch_df.select(
         F.expr(f"stack({len(cols)}, {pairs}) AS (col_name, category)")
@@ -471,21 +365,15 @@ def upsert_category_monitor(
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
         .localCheckpoint()  # consumed by the guard AND the store write
     )
-    # the guard bounds the CUMULATIVE occupied-category set (store
-    # union batch), not just this batch's: an ID-like column drifting
-    # <max new categories per batch would otherwise grow the store
-    # corpus-sized without ever tripping a per-batch check (round-12
-    # review). The store read is register-sized when the contract
-    # holds — exactly what the guard protects.
+    # the store read is register-sized when the contract holds —
+    # exactly what the guard protects
     occupied = regs.select("col_name", "category")
-    try:
-        occupied = occupied.unionByName(
-            spark.read.parquet(store_path).select("col_name", "category")
-        )
-    except Exception as exc:  # noqa: BLE001 — first batch: no store yet
-        cond = getattr(exc, "getCondition", lambda: None)()
-        if cond != "PATH_NOT_FOUND":
-            raise
+    occupied = read_or_empty(
+        lambda: occupied.unionByName(
+            store.scan().select("col_name", "category")
+        ),
+        occupied,
+    )
     burst = (
         occupied.distinct()
         .groupBy("col_name")
@@ -499,14 +387,7 @@ def upsert_category_monitor(
             f"column(s) exceed max_categories={max_categories}: {names} "
             "— not categorical; use the histogram monitor or a sketch"
         )
-    # BATCH-KEYED store (counts are a pure function of the batch):
-    # dynamic overwrite of batch_id=N, replay no-op, no merge
-    upsert_batch_partition(
-        spark,
-        store_path,
-        regs.select("col_name", "category", "cnt"),
-        batch_id,
-    )
+    return regs
 
 
 def categorical_drift_census(
@@ -515,8 +396,8 @@ def categorical_drift_census(
     ref_batches: tuple,
     cur_batches: tuple,
 ) -> DataFrame:
-    """PSI drift per watched column between two batch windows of an
-    `upsert_category_monitor` store — identical smoothing and
+    """PSI drift per watched column between two batch windows of a
+    `category_registers` store — identical smoothing and
     exact-integer arithmetic as the numeric `drift_census`, with the
     occupied-CATEGORY union in place of the occupied-bin union
     (add-one smoothing keeps probabilities normalized without
@@ -527,7 +408,7 @@ def categorical_drift_census(
     floor) are excluded."""
     rlo, rhi = int(ref_batches[0]), int(ref_batches[1])
     clo, chi = int(cur_batches[0]), int(cur_batches[1])
-    st = _floor_filtered(spark, store_path)
+    st = BatchStore(spark, store_path, marker=FLOOR).scan()
     in_ref = (F.col("batch_id") >= rlo) & (F.col("batch_id") <= rhi)
     in_cur = (F.col("batch_id") >= clo) & (F.col("batch_id") <= chi)
     per_cat = (

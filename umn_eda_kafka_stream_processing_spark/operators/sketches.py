@@ -141,7 +141,7 @@ def hll_registers(
 
 def hll_estimate_from_registers(regs: DataFrame, group_col: str) -> DataFrame:
     """The estimator tail over an (g, bucket, r) register table (from
-    `hll_registers` or `read_hll_registers`): exact integer register
+    `hll_registers` or a `merge_hll` store read): exact integer register
     state (s_scaled), raw estimate rounded to 4 dp — the
     `hll_sketch_per_group` output columns."""
     return regs.groupBy("g").agg(
@@ -182,102 +182,20 @@ def hll_sketch_per_group(
     2^33), ``hll_est`` = alpha*m^2*2^33/s_scaled rounded to 4 dp.
     Composition of `hll_registers` + `hll_estimate_from_registers`,
     so the batch sketch and the incremental register store
-    (`upsert_hll_registers`) share one arithmetic by construction.
+    (`merge_hll`) share one arithmetic by construction.
     """
     return hll_estimate_from_registers(
         hll_registers(df, group_col, key_col, salt), group_col
     )
 
 
-def upsert_hll_registers(
-    spark,
-    store_path: str,
-    batch_df: DataFrame,
-    group_col: str,
-    key_col: str,
-    batch_id: int,
-    salt: str = "hll",
-) -> None:
-    """Incrementally maintain per-group HLL register stores from a
-    streaming changelog (foreachBatch shape) — the distinct-count
-    twin of `upsert_cms_registers`, same replay-safety rule: the
-    store is BATCH-KEYED (a batch's registers are a pure function of
-    the batch), so each batch's registers rewrite their own
-    ``batch_id=N`` partition via dynamic overwrite — a replay
-    recomputes IDENTICAL rows, no store read, no merge
-    (`compaction.upsert_batch_partition`). The current sketch is the
-    MAX over batch registers at read (`read_hll_registers` — HLL
-    merge is register-wise max, so batch-union == from-scratch
-    exactly, not approximately). Store: <= m rows per group per
-    batch, partitioned by batch_id.
-
-    A batch at or below the store's collapse horizon
-    (`collapse_hll_registers`) NO-OPS — for max-merged registers a
-    folded-batch replay would be harmless (max is idempotent), but a
-    replay of the BASE batch itself would overwrite the folded maxes
-    with single-batch registers, silently shrinking every distinct
-    count. Same metadata-only guard as the CMS store."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        read_collapse_horizon,
-        upsert_batch_partition,
-    )
-
-    horizon = read_collapse_horizon(spark, store_path)
-    if horizon is not None and int(batch_id) <= horizon:
-        return  # at/below the collapse horizon: already in the fold
-
-    upsert_batch_partition(
-        spark,
-        store_path,
-        hll_registers(batch_df, group_col, key_col, salt),
-        batch_id,
-    )
-
-
-def read_hll_registers(spark, store_path: str) -> DataFrame:
-    """Current merged register table of an `upsert_hll_registers`
-    store: register-wise max across batch_ids (one small agg).
-    Output matches `hll_registers` over the concatenated batches
-    EXACTLY — feed to `hll_estimate_from_registers`. Batches below
-    the collapse horizon are excluded (stale leftovers of a crashed
-    collapse — harmless for max-merge, but skipping them keeps the
-    scan partition-pruned and the crash-recovery story uniform with
-    the CMS store)."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        read_collapse_horizon,
-    )
-
-    df = spark.read.parquet(store_path)
-    horizon = read_collapse_horizon(spark, store_path)
-    if horizon is not None:
-        df = df.filter(F.col("batch_id") >= int(horizon))
-    return df.groupBy("g", "bucket").agg(F.max("r").alias("r"))
-
-
-def collapse_hll_registers(spark, store_path: str, upto_batch: int) -> dict:
-    """Horizon collapse for an HLL register store — the distinct-count
-    twin of `collapse_cms_registers` (round-13 verdict task 3: the HLL
-    store accreted one partition per batch forever). HLL registers
-    merge by register-wise MAX (the union-of-sets property), so
-    folding batches <= the horizon into one base batch keeps
-    `read_hll_registers` bit-identical before/after. Same clamping,
-    crash safety, marker guard, and caller contract as the CMS
-    collapse — one `compaction.collapse_batch_registers` call with
-    the max merge. Returns ``{"batches_folded": n, "register_rows": k}``."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        collapse_batch_registers,
-    )
-
-    res = collapse_batch_registers(
-        spark,
-        store_path,
-        upto_batch,
-        lambda df: df.groupBy("g", "bucket").agg(F.max("r").alias("r")),
-    )
-    return {
-        "batches_folded": res["batches_folded"],
-        "register_rows": res["rows"],
-    }
+def merge_hll(regs: DataFrame) -> DataFrame:
+    """The HLL register-store merge (`stores.BatchStore`): register-wise
+    MAX — the union-of-sets property HLL is built on — so a store of
+    per-batch `hll_registers` reads and collapses to EXACTLY the registers
+    of the concatenated batches. Feed the result to
+    `hll_estimate_from_registers`."""
+    return regs.groupBy("g", "bucket").agg(F.max("r").alias("r"))
 
 
 def duck_hll(table_expr: str, group_col: str, key_col: str, salt: str = "hll") -> str:
@@ -434,157 +352,14 @@ def cms_join_size(regs_a: DataFrame, regs_b: DataFrame) -> DataFrame:
     )
 
 
-def upsert_cms_registers(
-    spark,
-    store_path: str,
-    batch_df: DataFrame,
-    key_col: str,
-    batch_id: int,
-    salt: str = "cms",
-) -> None:
-    """Incrementally maintain a CMS register STORE from a streaming
-    changelog (foreachBatch shape) — replay-safely.
-
-    Registers are additive, so the tempting merge is read-modify-add
-    — but that is EXACTLY the non-idempotent shape the round-9 BM25
-    df store was removed for: under foreachBatch's at-least-once
-    delivery a replayed batch adds its counts twice. Replay-safe
-    form: the store is BATCH-KEYED (a batch's registers are a pure
-    function of the batch), so each batch's registers land under
-    their own ``batch_id=N`` partition via dynamic overwrite — a
-    replayed batch recomputes IDENTICAL rows and rewrites its own
-    directory, no store read and no merge
-    (`compaction.upsert_batch_partition`); `read_cms_registers`
-    sums across batch_ids at read (the count-at-read rule). Store
-    stays tiny: one ≤1024-row coalesced file per batch, and the
-    horizon collapse folds and deletes exact directories.
-
-    A batch at or below the store's collapse horizon (the
-    `collapse_cms_registers` marker) is a NO-OP: after a collapse
-    folded history into a base batch, a straggler replay of a folded
-    batch would otherwise re-ADD counts the fold already contains
-    (sum-at-read double count), and a replay of the base batch
-    itself would OVERWRITE the folded sums with single-batch counts.
-    The guard is metadata-only (one Hadoop FS listing, no Spark job
-    — the `versioned_batch_ids` rule), so the normal no-collapse
-    path pays nothing."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_batch_partition,
-    )
-
-    horizon = read_cms_collapse_horizon(spark, store_path)
-    if horizon is not None and int(batch_id) <= horizon:
-        return  # at/below the collapse horizon: already in the fold
-
-    upsert_batch_partition(
-        spark,
-        store_path,
-        cms_registers(batch_df, key_col, salt),
-        batch_id,
-    )
-
-
-def read_cms_registers(spark, store_path: str) -> DataFrame:
-    """Current register table of an `upsert_cms_registers` store:
-    counts summed across batch_ids (one ≤1024·n_batches-row agg).
-    Output matches `cms_registers` over the concatenated batches —
-    feed it to `cms_estimate` / `cms_join_size`.
-
-    Batches BELOW the collapse horizon are excluded: after a collapse,
-    the base batch (== the horizon) carries the folded sums, so any
-    ``batch_id < horizon`` directory still on disk is a stale leftover
-    of a collapse that crashed between its marker write and its
-    directory deletes — summing it would double count. The filter is
-    on the partition column, so the pruned scan never lists the stale
-    directories' footers either way."""
-    df = spark.read.parquet(store_path)
-    horizon = read_cms_collapse_horizon(spark, store_path)
-    if horizon is not None:
-        df = df.filter(F.col("batch_id") >= int(horizon))
-    return df.groupBy("row", "bucket").agg(
-        F.sum("cnt").cast("long").alias("cnt")
-    )
-
-
-_CMS_HORIZON_MARKER = "_cms_collapse_horizon"
-
-
-def read_cms_collapse_horizon(spark, store_path: str) -> int | None:
-    """The store's collapse horizon (largest batch id folded into the
-    base by `collapse_cms_registers`), or None if never collapsed.
-    Metadata-only (one Hadoop FS listing, zero Spark jobs) — the
-    generic `compaction.read_collapse_horizon` with this store
-    family's marker name."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        read_collapse_horizon,
-    )
-
-    return read_collapse_horizon(spark, store_path, _CMS_HORIZON_MARKER)
-
-
-def collapse_cms_registers(
-    spark, store_path: str, upto_batch: int
-) -> dict:
-    """Horizon collapse for a CMS register store — the retention step
-    that keeps the advisor's per-batch decision read O(1024 + window)
-    instead of O(1024 × batches) forever (round-12 verdict: at 10⁶
-    microbatches the decision read is a 10⁹-row scan to produce one
-    row). CMS registers are ADDITIVE, so the merge is the documented
-    register sum: every batch with ``batch_id <= upto_batch`` folds
-    into ONE base batch whose (row, bucket) counts are the summed
-    history — `read_cms_registers` (sum across batch_ids) returns
-    bit-identical registers before and after, so the advisor's
-    decision cannot move (test-pinned).
-
-    ``upto_batch`` is CLAMPED to the largest INGESTED batch id <= it
-    (the `collapse_versioned` gap rule: never mint a phantom batch).
-    Partition-pruned end to end: ingested ids come from the Hadoop
-    directory listing (metadata-only, zero jobs), the fold READS
-    only the eligible ``batch_id=N`` directories, dynamically
-    overwrites the base partition, deletes exactly the folded-away
-    directories, and drops a `_cms_collapse_horizon_N` marker whose
-    FILENAME carries the horizon so `upsert_cms_registers` can
-    no-op straggler replays at/below it with one metadata listing.
-
-    CONTRACT: collapse only batches at/below the stream's replay
-    horizon (Structured Streaming replays the LAST batch — callers
-    pass ``current_batch - 1`` or older). The marker guard makes a
-    violating replay a silent no-op rather than a double count: the
-    folded sums already contain that batch.
-
-    CRASH SAFETY (round-13 advice): the marker is written IMMEDIATELY
-    after the base-partition overwrite, BEFORE the folded directories
-    are deleted, and both `read_cms_registers` and the collapse's own
-    eligible set exclude ``batch_id < horizon`` directories. A crash
-    mid-deletes therefore leaves stale directories that every reader
-    ignores and the NEXT collapse call sweeps (self-healing), instead
-    of a permanent double count. The residual window is the single
-    driver-side marker create after the overwrite job commits — no
-    Spark job and no directory loop inside it (the old design ran all
-    the deletes there).
-
-    Thin wrapper over the generic `compaction.collapse_batch_registers`
-    with the CMS merge (register SUM) and this family's marker name.
-
-    Returns ``{"batches_folded": n, "register_rows": k}``.
-    """
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        collapse_batch_registers,
-    )
-
-    res = collapse_batch_registers(
-        spark,
-        store_path,
-        upto_batch,
-        lambda df: df.groupBy("row", "bucket").agg(
-            F.sum("cnt").cast("long").alias("cnt")
-        ),
-        marker_name=_CMS_HORIZON_MARKER,
-    )
-    return {
-        "batches_folded": res["batches_folded"],
-        "register_rows": res["rows"],
-    }
+def merge_cms(regs: DataFrame) -> DataFrame:
+    """The CMS register-store merge (`stores.BatchStore`, marker
+    `stores.CMS_HORIZON`): counts are ADDITIVE, so a store of per-batch
+    `cms_registers` reads — and collapses — as their register SUM, equal
+    to `cms_registers` over the concatenated batches. Sum-at-read is what
+    makes the store replay-safe: read-modify-add would count a replayed
+    batch twice under foreachBatch's at-least-once delivery."""
+    return regs.groupBy("row", "bucket").agg(F.sum("cnt").cast("long").alias("cnt"))
 
 
 def duck_cms(table_expr: str, key_col: str, salt: str = "cms") -> str:

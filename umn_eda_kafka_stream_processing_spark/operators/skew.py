@@ -339,7 +339,7 @@ def maybe_broadcast_join(
 def cms_side_stats(regs: DataFrame, side: str) -> DataFrame:
     """One-row (rows_<side>, top_cnt_<side>_ub) from a Count-Min
     register table over a join key (operators/sketches.py:
-    cms_registers / read_cms_registers):
+    cms_registers, or a `merge_cms` store read):
 
     * ``rows`` is EXACT — every input row increments exactly one
       bucket per hash row, so any row's register total equals the
@@ -374,8 +374,8 @@ def advise_join_strategy(
 ) -> DataFrame:
     """The advisor loop CLOSED over standing sketches: price and plan
     a prospective join entirely from two Count-Min register tables
-    (each ≤1024 rows, incrementally maintained by
-    `upsert_cms_registers`) — ZERO planning jobs touch the data
+    (each ≤1024 rows, incrementally maintained in a `merge_cms`
+    `stores.BatchStore`) — ZERO planning jobs touch the data
     itself, so a pipeline can re-decide its join strategy per batch
     for free (the round-10 verdict's missing consumer for
     `cms_join_size`).

@@ -25,14 +25,14 @@ Spark-first / 100 TB shape:
 * **Deletes are tombstone DATA, not file deletes** — a row with the
   tombstone flag set wins latest-wins like any other version and the
   key is then dropped from the as-of view. History stays replayable;
-  physical reclamation is ``compact_store``/horizon-collapse territory
-  (operators/aggview.py folds old batches when the tail is no longer
-  needed).
+  physical reclamation is ``compact_store``/horizon-collapse territory.
 
-Unbounded history is bounded the same way the aggview store bounds
-it: fold batches older than the retention horizon into a single base
-batch (latest-wins is associative), after which time travel reaches
-back exactly to the horizon.
+Unbounded history is bounded the way `stores.BatchStore.collapse`
+bounds the batch-keyed stores: fold batches older than the retention
+horizon into a single base batch (latest-wins is associative), after
+which time travel reaches back exactly to the horizon. The fold is its
+own — latest-wins needs batch ORDER, which a batch-keyed merge never
+sees — but the batch listing and deletes are the shared ones.
 """
 
 from __future__ import annotations
@@ -41,6 +41,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
 BATCH_COL = "batch_id"
 
@@ -119,28 +121,6 @@ def read_versioned_asof(
     return latest
 
 
-def versioned_batch_ids(spark: SparkSession, table_path: str) -> list[int]:
-    """Sorted batch ids present in the store — a TRUE metadata-only
-    operation: lists the ``batch_id=N`` partition directories through
-    the Hadoop FileSystem API (the same route the collapse deletes
-    use), zero Spark jobs and zero data reads. A distinct() over the
-    batch_id column would plan a (column-pruned) scan — Spark's
-    metadata-only-query optimization is off by default (round-11
-    verdict)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(table_path)
-    fs = p.getFileSystem(conf)
-    if not fs.exists(p):
-        return []
-    ids = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(f"{BATCH_COL}="):
-            ids.append(int(name.split("=", 1)[1]))
-    return sorted(ids)
-
-
 def collapse_versioned(
     spark: SparkSession,
     table_path: str,
@@ -156,7 +136,7 @@ def collapse_versioned(
     batch >= the horizon are unchanged; probes BELOW the horizon see
     an empty store — their history is gone, exactly Iceberg's
     expire-snapshots contract (the valid as-of floor is the horizon;
-    `versioned_batch_ids` reports it).
+    `BatchStore.batch_ids` reports it).
 
     With ``tombstone_col``, keys whose folded winner is a tombstone
     are DROPPED entirely (the RocksDB bottom-level delete-compaction:
@@ -174,21 +154,18 @@ def collapse_versioned(
     is <= it: a horizon that was never ingested (beyond the max, or
     in a gap between batch ids) would otherwise relabel history into
     a base partition at a phantom batch_id — destroying time travel
-    to real batches and making `versioned_batch_ids` report a batch
+    to real batches and making `BatchStore.batch_ids` report a batch
     that never existed (round-11 advice; gap case round-12 review).
     A horizon below every ingested batch is a no-op.
 
     Returns ``{"batches_folded": n, "keys": k}``.
     """
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    all_ids = versioned_batch_ids(spark, table_path)
-    eligible = [b for b in all_ids if b <= int(upto_batch)]
-    if not eligible:
+    log = BatchStore(spark, table_path)
+    eligible = [b for b in log.batch_ids() if b <= int(upto_batch)]
+    if len(eligible) <= 1:
         return {"batches_folded": 0, "keys": 0}
     upto_batch = max(eligible)  # fold INTO a real ingested batch
-    batch_ids = eligible
-    if not batch_ids or batch_ids == [int(upto_batch)]:
-        return {"batches_folded": 0, "keys": 0}
     store = spark.read.parquet(table_path)
     old = store.filter(F.col(BATCH_COL) <= F.lit(int(upto_batch)))
     order = (
@@ -215,11 +192,6 @@ def collapse_versioned(
         .option("partitionOverwriteMode", "dynamic")
         .parquet(table_path)
     )
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    folded_away = [b for b in batch_ids if int(b) != int(upto_batch)]
-    for b in folded_away:
-        p = jvm.org.apache.hadoop.fs.Path(f"{table_path}/{BATCH_COL}={b}")
-        p.getFileSystem(conf).delete(p, True)
-    spark.catalog.refreshByPath(table_path)
+    folded_away = [b for b in eligible if b != upto_batch]
+    log.delete_batches(folded_away)
     return {"batches_folded": len(folded_away), "keys": int(n_keys)}

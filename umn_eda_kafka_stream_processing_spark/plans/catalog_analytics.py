@@ -2892,7 +2892,7 @@ def store_ttl_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "incremental_event_totals_view",
-    "Continuously-maintained GROUP BY (operators/aggview.py — the "
+    "Continuously-maintained GROUP BY (a stores.BatchStore of partials — the "
     "lake-side KTable aggregation: per-batch PARTIAL aggregates "
     "keyed (batch_id, group) latest-wins, view re-aggregated across "
     "batches at read; the salted_agg partial/final split applied to "
@@ -2920,11 +2920,7 @@ def store_ttl_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incremental_event_totals_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from umn_eda_kafka_stream_processing_spark.operators.aggview import (
-        collapse_agg_view,
-        read_agg_view,
-        upsert_agg_view,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
     partials = [
         F.count(F.lit(1)).cast("long").alias("c"),
@@ -2945,24 +2941,27 @@ def incremental_event_totals_view(spark: SparkSession, sf_dir: str) -> DataFrame
         "event_id", "event_type", "value"
     )
     path = tempfile.mkdtemp(prefix="sparkgraft_aggview_") + "/view"
-    for b in range(3):
-        upsert_agg_view(
-            spark, path,
-            ev.where(F.col("event_id") % 3 == b),
-            "event_type", partials, b,
-        )
-    # replay batch 1 (latest-wins no-op), then fold batches <= 1 into
-    # the baseline — the view below must not notice either
-    upsert_agg_view(
-        spark, path,
-        ev.where(F.col("event_id") % 3 == 1),
-        "event_type", partials, 1,
+    # distributive aggregates: the finals re-combine partials into
+    # partials of the same aliases, so they are the store's merge
+    view = BatchStore(
+        spark, path, lambda df: df.groupBy("event_type").agg(*finals)
     )
-    collapse_agg_view(spark, path, "event_type", finals, upto_batch_id=1)
+
+    def partial(b: int) -> DataFrame:
+        return ev.where(F.col("event_id") % 3 == b).groupBy(
+            "event_type"
+        ).agg(*partials)
+
+    for b in range(3):
+        view.upsert(b, partial(b))
+    # replay batch 1 (batch-keyed no-op), then fold batches <= 1 into
+    # the baseline — the view below must not notice either
+    view.upsert(1, partial(1))
+    view.collapse(1)
     n_batches = (
         spark.read.parquet(path).select("batch_id").distinct().count()
     )
-    return read_agg_view(spark, path, "event_type", finals).withColumn(
+    return view.read().withColumn(
         "store_batches", F.lit(int(n_batches)).cast("long")
     )
 
@@ -3092,7 +3091,7 @@ def _duck_psi_terms(n: str = "n_bins") -> str:
 @_register(
     "order_price_drift_census",
     "Distribution-DRIFT monitor on the contract store (operators/"
-    "quality.py:upsert_histogram_monitor + drift_census — the "
+    "quality.py:histogram_monitor_registers + drift_census — the "
     "Population Stability Index the count-based constraint monitor "
     "lacks): three microbatches (o_orderkey % 3) land per-batch "
     "64-bin histogram registers for two watched columns, with batch "
@@ -3161,8 +3160,9 @@ def order_price_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from umn_eda_kafka_stream_processing_spark.operators.quality import (
         drift_census,
-        upsert_histogram_monitor,
+        histogram_monitor_registers,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import FLOOR, BatchStore
 
     specs = {"price": (0.0, 524288.0, 64), "cust": (0.0, 16384.0, 64)}
     orders = load_table(spark, sf_dir, "orders").select(
@@ -3176,20 +3176,19 @@ def order_price_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).otherwise(F.col("price")),
     )
     path = tempfile.mkdtemp(prefix="sparkgraft_drift_") + "/store"
-    for b in range(3):
-        upsert_histogram_monitor(
-            spark, path,
-            orders.where(F.col("bid") == b).select("price", "cust"),
-            specs, b,
+    store = BatchStore(spark, path, marker=FLOOR)
+
+    def registers(b: int) -> DataFrame:
+        return histogram_monitor_registers(
+            orders.where(F.col("bid") == b).select("price", "cust"), specs
         )
-    # replay batch 1: the latest-wins upsert must be a no-op —
+
+    for b in range(3):
+        store.upsert(b, registers(b))
+    # replay batch 1: the batch-keyed upsert must be a no-op —
     # store_rows below pins it (an inflated register would also
     # hash-mismatch every PSI number)
-    upsert_histogram_monitor(
-        spark, path,
-        orders.where(F.col("bid") == 1).select("price", "cust"),
-        specs, 1,
-    )
+    store.upsert(1, registers(1))
     census = drift_census(spark, path, (0, 1), (2, 2))
     store_rows = spark.read.parquet(path).count()
     return census.withColumn(
@@ -3200,7 +3199,7 @@ def order_price_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "category_mix_drift_census",
     "CATEGORICAL drift monitor (operators/quality.py:"
-    "upsert_category_monitor + categorical_drift_census — the "
+    "category_registers + categorical_drift_census — the "
     "frequency-mix alarm the numeric histogram registers can't "
     "express: event types, langs, domains): three microbatches "
     "(o_orderkey % 3) land per-batch (col, category) count "
@@ -3265,8 +3264,9 @@ def category_mix_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from umn_eda_kafka_stream_processing_spark.operators.quality import (
         categorical_drift_census,
-        upsert_category_monitor,
+        category_registers,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import FLOOR, BatchStore
 
     base = (
         load_table(spark, sf_dir, "orders")
@@ -3285,23 +3285,20 @@ def category_mix_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     path = tempfile.mkdtemp(prefix="sparkgraft_catdrift_") + "/store"
-    for b in range(3):
-        upsert_category_monitor(
-            spark,
-            path,
+    store = BatchStore(spark, path, marker=FLOOR)
+
+    def land(b: int) -> None:
+        store.upsert(b, category_registers(
+            store,
             base.where(F.col("bid") == b).select("priority", "status"),
             ["priority", "status"],
-            b,
-        )
-    # replay batch 1: the latest-wins upsert must be a no-op —
+        ))
+
+    for b in range(3):
+        land(b)
+    # replay batch 1: the batch-keyed upsert must be a no-op —
     # store_rows pins it as data
-    upsert_category_monitor(
-        spark,
-        path,
-        base.where(F.col("bid") == 1).select("priority", "status"),
-        ["priority", "status"],
-        1,
-    )
+    land(1)
     census = categorical_drift_census(spark, path, (0, 1), (2, 2))
     store_rows = spark.read.parquet(path).count()
     return census.withColumn(
@@ -3311,8 +3308,8 @@ def category_mix_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "monitor_retention_census",
-    "RETENTION for monitor stores (operators/compaction.py:"
-    "expire_batch_partitions — round-13 verdict task 6: the drift "
+    "RETENTION for monitor stores (stores.py:"
+    "BatchStore.expire — round-13 verdict task 6: the drift "
     "monitors' per-batch partitions grew forever; their censuses "
     "read bounded WINDOWS, so beyond the drift window history is "
     "EXPIRED, not collapsed — a fold would corrupt any window "
@@ -3374,14 +3371,11 @@ def category_mix_drift_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 def monitor_retention_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        expire_batch_partitions,
-        read_retention_floor,
-    )
     from umn_eda_kafka_stream_processing_spark.operators.quality import (
         categorical_drift_census,
-        upsert_category_monitor,
+        category_registers,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import FLOOR, BatchStore
 
     base = load_table(spark, sf_dir, "orders").select(
         (F.col("o_orderkey") % 4).cast("long").alias("bid"),
@@ -3389,30 +3383,32 @@ def monitor_retention_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderstatus").alias("status"),
     )
     path = tempfile.mkdtemp(prefix="sparkgraft_retention_") + "/store"
+    store = BatchStore(spark, path, marker=FLOOR)
+
+    def land(b: int) -> None:
+        if not store.closed(b):
+            store.upsert(b, category_registers(
+                store,
+                base.where(F.col("bid") == b).select("priority", "status"),
+                ["priority", "status"],
+            ))
+
     for b in range(4):
-        upsert_category_monitor(
-            spark, path,
-            base.where(F.col("bid") == b).select("priority", "status"),
-            ["priority", "status"], b,
-        )
+        land(b)
     # expire everything below the drift window {2, 3}
-    res = expire_batch_partitions(spark, path, keep_from_batch=2)
+    res = store.expire(2)
     # straggler replay of EXPIRED batch 0: the retention guard must
     # no-op — sub_floor_rows below pins the partition stayed gone
-    upsert_category_monitor(
-        spark, path,
-        base.where(F.col("bid") == 0).select("priority", "status"),
-        ["priority", "status"], 0,
-    )
+    land(0)
     census = categorical_drift_census(spark, path, (2, 2), (3, 3))
-    store = spark.read.parquet(path)
-    sub_floor = store.filter(F.col("batch_id") < 2).count()
-    n_batches = store.select("batch_id").distinct().count()
+    on_disk = spark.read.parquet(path)
+    sub_floor = on_disk.filter(F.col("batch_id") < 2).count()
+    n_batches = on_disk.select("batch_id").distinct().count()
     return census.select(
         "col_name", "n_cats", "ref_total", "cur_total", "psi_femto",
     ).withColumns({
         "batches_expired": F.lit(int(res["batches_expired"])).cast("long"),
-        "floor_batch": F.lit(int(read_retention_floor(spark, path))).cast("long"),
+        "floor_batch": F.lit(int(store.mark())).cast("long"),
         "sub_floor_rows": F.lit(int(sub_floor)).cast("long"),
         "store_batches": F.lit(int(n_batches)).cast("long"),
     })

@@ -170,7 +170,7 @@ def benchmark_decontamination_census(
 @_register(
     "incremental_decontamination_census",
     "STREAMING half of the decontamination sweep (operators/"
-    "decontam.py:upsert_benchmark_grams/incremental_decontaminate): "
+    "decontam.py:benchmark_grams/incremental_decontaminate): "
     "evaluation suites GROW, so the benchmark gram set is a "
     "replay-safe register store — two benchmark batches land "
     "(doc_id % 74 = 0, then = 37; union = the batch census's "
@@ -236,28 +236,21 @@ def incremental_decontamination_census(
 
     from umn_eda_kafka_stream_processing_spark.operators.decontam import (
         incremental_decontaminate,
-        upsert_benchmark_grams,
+        merge_grams,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     store = tempfile.mkdtemp(prefix="sparkgraft_decontam_") + "/grams"
+    grams = BatchStore(spark, store, merge_grams)
     # both suites are doc_id % 74 slices of the corpus: their gram
     # registers filter the session-cached corpus gram table instead
-    # of re-exploding text per upsert (grams= injection, per-doc
-    # purity); the sweep injects the same table as its corpus side
-    upsert_benchmark_grams(
-        spark, store, docs.filter(F.col("doc_id") % 74 == 0), 0,
-        grams=cached_bench_grams(spark, sf_dir, 74, 0),
-    )
-    upsert_benchmark_grams(
-        spark, store, docs.filter(F.col("doc_id") % 74 == 37), 1,
-        grams=cached_bench_grams(spark, sf_dir, 74, 37),
-    )
-    # replay batch 1: latest-wins registers — store_rows pins the no-op
-    upsert_benchmark_grams(
-        spark, store, docs.filter(F.col("doc_id") % 74 == 37), 1,
-        grams=cached_bench_grams(spark, sf_dir, 74, 37),
-    )
+    # of re-exploding text per upsert (per-doc purity); the sweep
+    # injects the same table as its corpus side
+    grams.upsert(0, cached_bench_grams(spark, sf_dir, 74, 0))
+    grams.upsert(1, cached_bench_grams(spark, sf_dir, 74, 37))
+    # replay batch 1: batch-keyed registers — store_rows pins the no-op
+    grams.upsert(1, cached_bench_grams(spark, sf_dir, 74, 37))
     res = incremental_decontaminate(
         spark, store, docs, docs_grams=cached_corpus_grams(spark, sf_dir)
     ).withColumn("isb", (F.col("doc_id") % 37 == 0).cast("long"))
@@ -358,30 +351,26 @@ def decontamination_resweep_census(
     from umn_eda_kafka_stream_processing_spark.operators.decontam import (
         incremental_decontaminate,
         merge_decontam_censuses,
+        merge_grams,
         resweep_decontaminate,
-        upsert_benchmark_grams,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
     store = tempfile.mkdtemp(prefix="sparkgraft_resweep_") + "/grams"
+    grams = BatchStore(spark, store, merge_grams)
     # suites/corpus all ride the session-cached corpus gram table
-    # (grams= register injection + docs_grams sweep injection): the
-    # census pays ZERO text explodes — two benchmark-sized filters
-    # plus two broadcast-join sweeps over the standing table
+    # (register payloads + docs_grams sweep injection): the census
+    # pays ZERO text explodes — two benchmark-sized filters plus two
+    # broadcast-join sweeps over the standing table
     corpus_grams = cached_corpus_grams(spark, sf_dir)
-    upsert_benchmark_grams(
-        spark, store, docs.filter(F.col("doc_id") % 74 == 0), 0,
-        grams=cached_bench_grams(spark, sf_dir, 74, 0),
-    )
+    grams.upsert(0, cached_bench_grams(spark, sf_dir, 74, 0))
     # the standing sweep runs (and MATERIALIZES — a lazy frame would
     # silently read the grown store below) before the late batch
     standing = incremental_decontaminate(
         spark, store, docs, docs_grams=corpus_grams
     ).localCheckpoint()
-    upsert_benchmark_grams(
-        spark, store, docs.filter(F.col("doc_id") % 74 == 37), 1,
-        grams=cached_bench_grams(spark, sf_dir, 74, 37),
-    )
+    grams.upsert(1, cached_bench_grams(spark, sf_dir, 74, 37))
     delta = resweep_decontaminate(
         spark, store, docs, since_batch=0, corpus_grams=corpus_grams
     )

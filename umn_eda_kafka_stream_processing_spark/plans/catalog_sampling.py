@@ -824,7 +824,7 @@ def cached_manifest_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     late-suite delta into. Train-once/serve-many: the first call pays
     the keeper join + full gram sweep, hits are parquet scans
     (identical to sweeping the gram store's batch 0 —
-    `read_benchmark_grams` == the suite's gram set, test-pinned)."""
+    the gram store's `read` == the suite's gram set, test-pinned)."""
     from umn_eda_kafka_stream_processing_spark.caching import materialized
     from umn_eda_kafka_stream_processing_spark.operators.decontam import (
         decontaminate,
@@ -934,7 +934,7 @@ def manifest_patch_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         patch_training_manifest,
     )
     from umn_eda_kafka_stream_processing_spark.operators.decontam import (
-        upsert_benchmark_grams,
+        merge_grams,
     )
     from umn_eda_kafka_stream_processing_spark.operators.sampling import (
         cluster_safe_split,
@@ -943,21 +943,17 @@ def manifest_patch_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         cached_bench_grams,
         cached_near_dup_clusters,
     )
+    from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
     docs = load_table(spark, sf_dir, "documents")
     store = tempfile.mkdtemp(prefix="sparkgraft_patch_") + "/grams"
     # both suites are corpus slices: their gram registers filter the
-    # session-cached corpus gram table (grams= injection) instead of
-    # re-exploding suite text on every run
-    upsert_benchmark_grams(
-        spark, store, docs.filter(F.col("doc_id") % 37 == 0), 0,
-        grams=cached_bench_grams(spark, sf_dir, 37),
-    )
+    # session-cached corpus gram table instead of re-exploding suite
+    # text on every run
+    grams = BatchStore(spark, store, merge_grams)
+    grams.upsert(0, cached_bench_grams(spark, sf_dir, 37))
     # the late suite lands AFTER the manifest shipped
-    upsert_benchmark_grams(
-        spark, store, docs.filter(F.col("doc_id") % 41 == 0), 1,
-        grams=cached_bench_grams(spark, sf_dir, 41),
-    )
+    grams.upsert(1, cached_bench_grams(spark, sf_dir, 41))
     clusters = cached_near_dup_clusters(spark, sf_dir)
     patched, pst = patch_training_manifest(
         spark, docs, store, 0,

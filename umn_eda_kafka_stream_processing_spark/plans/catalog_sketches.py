@@ -85,7 +85,7 @@ def sketch_hll_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "incremental_hll_user_census",
     "Incrementally-maintained distinct-count sketch (operators/"
-    "sketches.py:upsert_hll_registers/read_hll_registers — the "
+    "sketches.py:hll_registers/merge_hll in a stores.BatchStore — the "
     "distinct twin of the CMS register store): three event "
     "microbatches (event_id % 3) land per-batch HLL registers keyed "
     "(batch_id, g, bucket) latest-wins; the merged sketch is the "
@@ -108,26 +108,25 @@ def sketch_hll_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 def incremental_hll_user_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
+    from umn_eda_kafka_stream_processing_spark.stores import BatchStore
+
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "user_id"
     )
-    path = tempfile.mkdtemp(prefix="sparkgraft_hllstore_") + "/store"
+    store = BatchStore(
+        spark, tempfile.mkdtemp(prefix="sparkgraft_hllstore_") + "/store",
+        sk.merge_hll,
+    )
     for b in range(3):
-        sk.upsert_hll_registers(
-            spark, path,
-            ev.where(F.col("event_id") % 3 == b),
-            "event_type", "user_id", b,
-        )
-    # replay batch 1: latest-wins no-op (a double-count would shift
+        store.upsert(b, sk.hll_registers(
+            ev.where(F.col("event_id") % 3 == b), "event_type", "user_id"
+        ))
+    # replay batch 1: batch-keyed no-op (a double-count would shift
     # every s_scaled below and hash-mismatch)
-    sk.upsert_hll_registers(
-        spark, path,
-        ev.where(F.col("event_id") % 3 == 1),
-        "event_type", "user_id", 1,
-    )
-    est = sk.hll_estimate_from_registers(
-        sk.read_hll_registers(spark, path), "event_type"
-    )
+    store.upsert(1, sk.hll_registers(
+        ev.where(F.col("event_id") % 3 == 1), "event_type", "user_id"
+    ))
+    est = sk.hll_estimate_from_registers(store.read(), "event_type")
     exact = ev.groupBy("event_type").agg(
         F.countDistinct("user_id").cast("long").alias("exact_distinct")
     )

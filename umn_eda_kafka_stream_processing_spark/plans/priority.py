@@ -572,11 +572,11 @@ DRIVER_GATE_PRIORITY: tuple[str, ...] = (
     # (category_mix_drift_census rotated out in r14 for
     # monitor_retention_census below: driver-verified r13; the
     # retention census drives the SAME categorical monitor machinery
-    # (upsert_category_monitor + categorical_drift_census + the
+    # (category_registers + categorical_drift_census + the
     # exact-integer PSI tail) plus the expiry path, so the family
     # keeps driver coverage with a strictly larger surface)
     # -- new in r14, never driver-verified: RETENTION for monitor
-    # stores (expire_batch_partitions: marker-first crash-safe
+    # stores (BatchStore.expire: marker-first crash-safe
     # partition deletes, retention-floor guard no-ops expired-batch
     # replays, retained-window PSI unchanged) ------------------------
     "monitor_retention_census",

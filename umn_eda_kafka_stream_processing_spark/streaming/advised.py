@@ -20,9 +20,9 @@ them.
 
 Scale shape per batch:
 
-* register maintenance is one ≤1024-row upsert per side (the
-  replay-safe (batch_id, row, bucket) latest-wins keying —
-  `operators/sketches.py:upsert_cms_registers`);
+* register maintenance is one ≤1024-row upsert per side into a
+  replay-safe batch-keyed `stores.BatchStore` (`cms_registers`
+  payload, `merge_cms` merge);
 * the DECISION reads only the two register stores (≤1024·batches
   rows; horizon-collapsible) — never the data;
 * the join executes through `join_with_strategy`, and the enriched
@@ -33,14 +33,25 @@ Scale shape per batch:
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.operators.sketches import (
+    cms_registers,
+    merge_cms,
+)
 from umn_eda_kafka_stream_processing_spark.operators.skew import (
     ADVISOR_MAX_SHARE_MICRO,
     BROADCAST_MAX_ROWS,
     join_with_strategy,
+)
+from umn_eda_kafka_stream_processing_spark.stores import (
+    CMS_HORIZON,
+    BatchStore,
+    read_or_empty,
+    run_concurrently,
 )
 
 
@@ -62,7 +73,7 @@ def make_dim_changelog_batch_fn(
 
     ``collapse_every=N`` folds register batches at/below
     ``batch_id - 1`` into one base every N batches
-    (`sketches.collapse_cms_registers` — CMS sum-merge, decision-
+    (`BatchStore.collapse` with the CMS sum merge — decision-
     invariant), bounding the advisor's per-batch register read to
     O(1024 + N) rows instead of growing one batch forever. The
     horizon is THIS stream's own batch ids (never another stream's
@@ -72,13 +83,10 @@ def make_dim_changelog_batch_fn(
     from umn_eda_kafka_stream_processing_spark.operators.compaction import (
         upsert_snapshot,
     )
-    from umn_eda_kafka_stream_processing_spark.operators.sketches import (
-        collapse_cms_registers,
-        upsert_cms_registers,
-    )
 
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     sketch_key = sketch_key or keys[0]
+    regs = BatchStore(spark, regs_path, merge_cms, CMS_HORIZON)
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         # no localCheckpoint: a microbatch frame comes from the
@@ -90,26 +98,23 @@ def make_dim_changelog_batch_fn(
         # checkpoint them itself (the GlobalKTable lineage rule).
         #
         # The two writes touch DISJOINT stores and neither reads the
-        # other's path, so they submit as concurrent Spark jobs (one
-        # helper thread): at local[32] each tiny store write is
-        # mostly scheduler latency, and overlapping them takes the
-        # per-batch wall from the SUM to the MAX of the two.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(1) as pool:
-            snap = pool.submit(
-                upsert_snapshot,
+        # other's path, so they submit as concurrent Spark jobs: each
+        # tiny store write is mostly scheduler latency, and
+        # overlapping them takes the per-batch wall from the SUM to
+        # the MAX of the two.
+        run_concurrently(
+            lambda: upsert_snapshot(
                 spark,
                 dim_snapshot_path,
                 batch_df.withColumn("event_seq", F.lit(int(batch_id))),
                 key_cols=keys,
-            )
-            upsert_cms_registers(
-                spark, regs_path, batch_df, sketch_key, batch_id
-            )
-            snap.result()  # propagate failures before the batch commits
+            ),
+            lambda: regs.upsert(
+                batch_id, cms_registers(batch_df, sketch_key)
+            ),
+        )
         if collapse_every and batch_id > 0 and batch_id % collapse_every == 0:
-            collapse_cms_registers(spark, regs_path, int(batch_id) - 1)
+            regs.collapse(int(batch_id) - 1)
 
     return fn
 
@@ -164,48 +169,35 @@ def make_advised_enrichment_batch_fn(
     batches at/below ``batch_id - 1`` every N batches — see
     `make_dim_changelog_batch_fn` (the dim side collapses on its own
     clock there; this side never touches the right store's ids)."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_batch_partition,
-    )
-    from umn_eda_kafka_stream_processing_spark.operators.sketches import (
-        cms_registers,
-        collapse_cms_registers,
-        read_cms_collapse_horizon,
-        read_cms_registers,
-    )
     from umn_eda_kafka_stream_processing_spark.operators.skew import (
         advise_join_strategy_rows,
     )
-    from umn_eda_kafka_stream_processing_spark.operators.versioned import (
-        versioned_batch_ids,
-    )
 
     keys = [on] if isinstance(on, str) else list(on)
+    left = BatchStore(spark, left_regs_path, merge_cms, CMS_HORIZON)
+    right = BatchStore(spark, right_regs_path, merge_cms, CMS_HORIZON)
+    decisions = BatchStore(spark, decisions_path)
     # DRIVER-CACHED register state (the per-batch decision fast path):
     # CMS registers are <= 1024 rows by construction, so the fact
     # side folds its own upserts into a driver dict and the dim side
     # re-collects ONLY when the right store's batch listing changes
-    # (one metadata FS listing per batch, the versioned_batch_ids
-    # rule). The decision then runs in pure Python
-    # (advise_join_strategy_rows — integer-exact twin, test-pinned)
-    # instead of scheduling a multi-stage Spark plan per microbatch;
-    # the register STORES stay the recovery/audit source: a fresh
-    # driver (restart, failover) rebuilds the fold from one store
-    # read, and every downstream census still reads the stores.
+    # (one metadata FS listing per batch). The decision then runs in
+    # pure Python (advise_join_strategy_rows — integer-exact twin,
+    # test-pinned) instead of scheduling a multi-stage Spark plan per
+    # microbatch; the register STORES stay the recovery/audit source:
+    # a fresh driver (restart, failover) rebuilds the fold from one
+    # store read, and every downstream census still reads the stores.
     state: dict = {"cum": None, "last_id": None, "last_regs": None,
                    "right_ids": None, "right_rows": None}
 
-    def _store_rows(path: str):
-        try:
-            return [
+    def _store_rows(store: BatchStore):
+        return read_or_empty(
+            lambda: [
                 (r["row"], r["bucket"], r["cnt"])
-                for r in read_cms_registers(spark, path).collect()
-            ]
-        except Exception as exc:  # noqa: BLE001 — store not written yet
-            cond = getattr(exc, "getCondition", lambda: None)()
-            if cond != "PATH_NOT_FOUND":
-                raise
-            return []
+                for r in store.read().collect()
+            ],
+            [],
+        )
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         # no localCheckpoint — the source-derived microbatch never
@@ -218,14 +210,10 @@ def make_advised_enrichment_batch_fn(
             # first call on this driver: rebuild the fold from the
             # store (empty store -> empty fold)
             state["cum"] = {}
-            for r, bk, c in _store_rows(left_regs_path):
+            for r, bk, c in _store_rows(left):
                 state["cum"][(r, bk)] = state["cum"].get((r, bk), 0) + c
-        from concurrent.futures import ThreadPoolExecutor
-
-        pool = ThreadPoolExecutor(2)
-        regs_fut = None
-        horizon = read_cms_collapse_horizon(spark, left_regs_path)
-        if horizon is None or int(batch_id) > horizon:
+        regs_frame = None
+        if not left.closed(batch_id):
             # ONE aggregation job yields the batch registers for BOTH
             # consumers: the driver fold (decision input) and the
             # store write (replay-safe batch-keyed partition, written
@@ -244,115 +232,91 @@ def make_advised_enrichment_batch_fn(
             for (r, bk), c in new.items():
                 state["cum"][(r, bk)] = state["cum"].get((r, bk), 0) + c
             state["last_id"], state["last_regs"] = int(batch_id), new
-            # the register STORE write is independent of everything
-            # else in the batch (the decision reads the driver fold,
-            # never this store): submit it concurrently so it overlaps
-            # the decision + enrichment + log writes below, and join
-            # it before the batch commits (same disjoint-stores rule
-            # as the dim fn's concurrent pair)
-            regs_fut = pool.submit(
-                upsert_batch_partition,
-                spark,
-                left_regs_path,
-                spark.createDataFrame(
-                    spark.sparkContext.parallelize(regs, 1),
-                    "row int, bucket long, cnt long",
-                ),
-                batch_id,
-                write_coalesce=None,
+            regs_frame = spark.createDataFrame(
+                spark.sparkContext.parallelize(regs, 1),
+                "row int, bucket long, cnt long",
             )
-        if collapse_every and batch_id > 0 and batch_id % collapse_every == 0:
-            if regs_fut is not None:
-                regs_fut.result()  # the fold must see a settled store
-                regs_fut = None
-            collapse_cms_registers(spark, left_regs_path, int(batch_id) - 1)
+
+        def registers() -> None:
+            # the register STORE is independent of everything else in
+            # the batch (the decision reads the driver fold, never this
+            # store), so its write and fold overlap the enrichment;
             # the fold is sum-preserving: the driver cum is unchanged
-        right_ids = tuple(versioned_batch_ids(spark, right_regs_path))
-        if right_ids != state["right_ids"]:
-            state["right_rows"] = _store_rows(right_regs_path)
-            state["right_ids"] = right_ids
-        decision = advise_join_strategy_rows(
-            [(r, bk, c) for (r, bk), c in state["cum"].items() if c],
-            state["right_rows"],
-            max_broadcast_rows=max_broadcast_rows,
-            max_share_micro=max_share_micro,
-        )
-        dim = spark.read.parquet(dim_snapshot_path)
-        enriched = join_with_strategy(
-            b, dim, keys, decision, how=how, salt_buckets=salt_buckets
-        )
+            if regs_frame is not None:
+                left.upsert(batch_id, regs_frame, write_coalesce=None)
+            if collapse_every and batch_id > 0 and batch_id % collapse_every == 0:
+                left.collapse(int(batch_id) - 1)
 
-        def write_enriched() -> None:
-            (
-                enriched.withColumn(
-                    "batch_id", F.lit(int(batch_id)).cast("long")
-                )
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .parquet(out_path)
+        def enrich() -> None:
+            right_ids = tuple(right.batch_ids())
+            if right_ids != state["right_ids"]:
+                state["right_rows"] = _store_rows(right)
+                state["right_ids"] = right_ids
+            decision = advise_join_strategy_rows(
+                [(r, bk, c) for (r, bk), c in state["cum"].items() if c],
+                state["right_rows"],
+                max_broadcast_rows=max_broadcast_rows,
+                max_share_micro=max_share_micro,
             )
-        # est stays DECIMAL(38,0) end-to-end: two ~1e12-row registers
-        # dot past BIGINT, and this log is a generic consumer that
-        # does NOT know the scale (the r11 advisor rule)
-        from decimal import Decimal
-
-        # ONE-partition local frame: a bare createDataFrame slices
-        # one row across defaultParallelism (32) empty partitions,
-        # and the repartition(1) the store write would then need is a
-        # 32-task shuffle costing ~3 s of pure scheduling per batch
-        # (measured r14 — the dominant term of the census wall).
-        # parallelize([row], 1) starts at one partition, so the write
-        # needs no coalesce at all (~0.4 s).
-        log = spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                [
-                    (
-                        decision["strategy"],
-                        int(decision["rows_left"]),
-                        int(decision["rows_right"]),
-                        int(decision["top_cnt_left_ub"]),
-                        int(decision["share_left_micro_ub"]),
-                        Decimal(decision["est_join_rows"]),
+            dim = spark.read.parquet(dim_snapshot_path)
+            enriched = join_with_strategy(
+                b, dim, keys, decision, how=how, salt_buckets=salt_buckets
+            )
+            # est stays DECIMAL(38,0) end-to-end: two ~1e12-row
+            # registers dot past BIGINT, and this log is a generic
+            # consumer that does NOT know the scale (the r11 advisor
+            # rule). ONE-partition local frame: a bare createDataFrame
+            # slices one row across defaultParallelism empty
+            # partitions, and the repartition(1) the store write would
+            # then need is a many-task shuffle costing ~3 s of pure
+            # scheduling per batch (measured r14). parallelize([row],
+            # 1) starts at one partition, so the write needs none.
+            log = spark.createDataFrame(
+                spark.sparkContext.parallelize(
+                    [
+                        (
+                            decision["strategy"],
+                            int(decision["rows_left"]),
+                            int(decision["rows_right"]),
+                            int(decision["top_cnt_left_ub"]),
+                            int(decision["share_left_micro_ub"]),
+                            Decimal(decision["est_join_rows"]),
+                        )
+                    ],
+                    1,
+                ),
+                "strategy string, rows_left long, "
+                "rows_right long, top_cnt_left_ub long, "
+                "share_left_micro_ub long, est_join_rows decimal(38,0)",
+            )
+            # the enriched output and the one-row decision log (batch-
+            # keyed: a replay — only ever the LAST batch, so the
+            # register state it reads is unchanged — rewrites the same
+            # partition) touch DISJOINT stores
+            run_concurrently(
+                lambda: (
+                    enriched.withColumn(
+                        "batch_id", F.lit(int(batch_id)).cast("long")
                     )
-                ],
-                1,
-            ),
-            "strategy string, rows_left long, "
-            "rows_right long, top_cnt_left_ub long, "
-            "share_left_micro_ub long, est_join_rows decimal(38,0)",
-        )
-        # one row per batch, BATCH-KEYED: dynamic overwrite of its
-        # own batch_id=N directory — a replay (only ever the LAST
-        # batch — the Structured Streaming replay shape, so the
-        # register state it reads is unchanged) rewrites the same
-        # one-row partition; no log read, no merge.
-        #
-        # Enriched-output and decision-log writes touch DISJOINT
-        # stores: submit them as concurrent jobs so the per-batch
-        # wall pays the MAX, not the sum, of mostly-scheduler-latency
-        # writes; every future joins before the batch commits.
-        try:
-            out_fut = pool.submit(write_enriched)
-            upsert_batch_partition(
-                spark, decisions_path, log, batch_id, write_coalesce=None
+                    .write.mode("overwrite")
+                    .partitionBy("batch_id")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .parquet(out_path)
+                ),
+                lambda: decisions.upsert(batch_id, log, write_coalesce=None),
             )
-            out_fut.result()  # propagate failures before batch commit
-            if regs_fut is not None:
-                regs_fut.result()
-        finally:
-            pool.shutdown()
+
+        # joins both before the batch commits, even when one fails
+        run_concurrently(registers, enrich)
 
     return fn
 
 
 def read_decisions(spark: SparkSession, decisions_path: str) -> DataFrame:
     """The pipeline's decision log: one row per fact batch with the
-    strategy it executed and the sketch scalars that chose it.
-    batch_id is cast back to long — it is a PARTITION column now and
-    partition-type inference reads small values as int32."""
-    return spark.read.parquet(decisions_path).select(
-        F.col("batch_id").cast("long").alias("batch_id"),
+    strategy it executed and the sketch scalars that chose it."""
+    return BatchStore(spark, decisions_path).scan().select(
+        "batch_id",
         "strategy",
         "rows_left",
         "rows_right",

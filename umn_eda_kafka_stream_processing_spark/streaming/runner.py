@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from umn_eda_kafka_stream_processing_spark.stores import hadoop_fs, read_or_empty
+
 
 def file_stream_source(
     spark: SparkSession,
@@ -85,17 +87,6 @@ def start_foreach_batch_sink(
     )
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` through the JVM Hadoop API —
-    the same route the store maintenance ops use for partition
-    deletes (operators/compaction.py), so one code path works for
-    file:/, hdfs://, s3a://, gs:// alike."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(conf), p, jvm
-
-
 def make_idempotent_batch_fn(
     fn: Callable[[DataFrame, int], None],
     commit_dir: str,
@@ -133,7 +124,7 @@ def make_idempotent_batch_fn(
         # callbacks run on the driver, and the session carries the
         # cluster's Hadoop conf (credentials, scheme handlers)
         spark = batch_df.sparkSession
-        fs, base, jvm = _hadoop_fs(spark, commit_dir)
+        fs, base, jvm = hadoop_fs(spark, commit_dir)
         fs.mkdirs(base)
         marker = jvm.org.apache.hadoop.fs.Path(base, f"{batch_id}.done")
         if fs.exists(marker):
@@ -261,12 +252,13 @@ def make_per_record_batch_fn(
         # from the batch's own session — survives a driver move, works
         # on file:/, HDFS, S3A alike); at-least-once covers the crash
         # window between delete and write — the batch replays whole.
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        part = jvm.org.apache.hadoop.fs.Path(
-            f"{dead_letter_dir}/batch_id={int(batch_id)}"
+        fs, _, jvm = hadoop_fs(spark, dead_letter_dir)
+        fs.delete(
+            jvm.org.apache.hadoop.fs.Path(
+                f"{dead_letter_dir}/batch_id={int(batch_id)}"
+            ),
+            True,
         )
-        part.getFileSystem(conf).delete(part, True)
         (
             failed.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
             .write.mode("overwrite")
@@ -286,21 +278,11 @@ def read_dead_letters(spark: SparkSession, dead_letter_dir: str) -> DataFrame:
     — re-raises: a failure audit must never report 'no failures'
     against a store it could not actually read (the erase_keys
     rule)."""
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        return spark.read.schema(
-            DEAD_LETTER_SCHEMA + ", batch_id long"
-        ).json(dead_letter_dir).select(
-            "batch_id", "record_md5", "record", "error"
-        )
-    except AnalysisException as exc:
-        cond = getattr(exc, "getCondition", exc.getErrorClass)()
-        if cond != "PATH_NOT_FOUND":
-            raise
-        return spark.createDataFrame(
-            [], DEAD_LETTER_SCHEMA + ", batch_id long"
-        ).select("batch_id", "record_md5", "record", "error")
+    schema = DEAD_LETTER_SCHEMA + ", batch_id long"
+    return read_or_empty(
+        lambda: spark.read.schema(schema).json(dead_letter_dir),
+        spark.createDataFrame([], schema),
+    ).select("batch_id", "record_md5", "record", "error")
 
 
 def start_per_record_sink(
