@@ -100,15 +100,46 @@ def test_salted_join_matches_plain_join_property(spark):
             assert salted == plain, (trial, how)
 
 
+_SKEW_LOG = "umn_eda_kafka_stream_processing_spark.skew"
+
+
+def _census_decision(df, key="k", census=None):
+    """Salting-only decision from a key census (collected here unless
+    a precomputed one is passed)."""
+    from umn_eda_kafka_stream_processing_spark.operators.skew import (
+        decide_join_strategy,
+        key_skew_census,
+    )
+
+    if census is None:
+        census = key_skew_census(df, key, key).collect()[0]
+    return decide_join_strategy(census["n_rows"], census["max_cnt"], None)
+
+
+def _register_decision(left_rows, right_rows, **thresholds):
+    """All seven advisor scalars from collected CMS register rows."""
+    from umn_eda_kafka_stream_processing_spark.operators.sketches import (
+        cms_register_stats,
+    )
+    from umn_eda_kafka_stream_processing_spark.operators.skew import (
+        decide_join_strategy,
+    )
+
+    stats = cms_register_stats(left_rows, right_rows)
+    return stats | decide_join_strategy(
+        stats["rows_left"], stats["top_cnt_left_ub"], stats["rows_right"],
+        **thresholds,
+    )
+
+
 def test_maybe_salted_join_decision_and_equivalence(spark, caplog):
-    """Auto-salt advisor property: on BOTH a skewed and a uniform
-    fixture the result equals the plain join exactly, and the census
-    decision salts ONLY the skewed one (observable via the audit
-    log)."""
+    """Census-driven salting: on BOTH a skewed and a uniform fixture
+    the executed join equals the plain join exactly, and the decision
+    salts ONLY the skewed one (observable via the audit log)."""
     import logging
 
     from umn_eda_kafka_stream_processing_spark.operators.skew import (
-        maybe_salted_join,
+        join_with_strategy,
     )
 
     right = spark.createDataFrame(
@@ -122,16 +153,17 @@ def test_maybe_salted_join_decision_and_equivalence(spark, caplog):
     uniform = spark.createDataFrame(
         [(f"k{i % 20}", i) for i in range(400)], "k string, v long"
     )
-    logger = "umn_eda_kafka_stream_processing_spark.skew"
     for df, expect_salted in ((skewed, True), (uniform, False)):
         plain = {
             (r["k"], r["v"], r["payload"])
             for r in df.join(right, "k").collect()
         }
-        with caplog.at_level(logging.INFO, logger=logger):
+        decision = _census_decision(df)
+        with caplog.at_level(logging.INFO, logger=_SKEW_LOG):
             caplog.clear()
-            advised = maybe_salted_join(
-                df, right, "k", salt_buckets=4, left_salt_cols=["v"]
+            advised = join_with_strategy(
+                df, right, "k", decision, salt_buckets=4,
+                left_salt_cols=["v"],
             )
             got = [
                 (r["k"], r["v"], r["payload"]) for r in advised.collect()
@@ -139,42 +171,39 @@ def test_maybe_salted_join_decision_and_equivalence(spark, caplog):
         assert len(got) == len(set(got)), "a pair met more than once"
         assert set(got) == plain
         decisions = [
-            rec for rec in caplog.records if rec.name == logger
+            rec for rec in caplog.records if rec.name == _SKEW_LOG
         ]
         assert len(decisions) == 1
-        assert ("SALTED" in decisions[0].getMessage()) is expect_salted
+        msg = decisions[0].getMessage()
+        assert ("salted_shuffle_hash" in msg) is expect_salted
+        assert "share_left_micro_ub" in msg
 
     # a precomputed census skips the planning job and drives the same
     # decision (train-once/serve-many)
     pre = {"n_rows": 100, "max_cnt": 50, "top_key": "k1"}
-    with caplog.at_level(logging.INFO, logger=logger):
-        caplog.clear()
-        got = {
-            (r["k"], r["v"], r["payload"])
-            for r in maybe_salted_join(
-                skewed, right, "k", census=pre, salt_buckets=4,
-                left_salt_cols=["v"],
-            ).collect()
-        }
+    decision = _census_decision(None, census=pre)
+    assert decision == {
+        "strategy": "salted_shuffle_hash", "share_left_micro_ub": 500_000
+    }
+    got = {
+        (r["k"], r["v"], r["payload"])
+        for r in join_with_strategy(
+            skewed, right, "k", decision, salt_buckets=4,
+            left_salt_cols=["v"],
+        ).collect()
+    }
     assert got == {
         (r["k"], r["v"], r["payload"])
         for r in skewed.join(right, "k").collect()
     }
-    assert "SALTED" in caplog.records[-1].getMessage()
 
 
-def test_maybe_salted_agg_decision_and_equivalence(spark, caplog):
-    """Agg-side advisor property (maybe_salted_join's twin): result
-    equals the plain groupBy.agg exactly on both fixtures; the census
-    salts ONLY the skewed one; a precomputed census skips the
-    planning job and drives the same decision."""
-    import logging
-
+def test_maybe_salted_agg_decision_and_equivalence(spark):
+    """Agg-side salting: the census decision picks `salted_agg` or the
+    plain groupBy.agg, the result equals the plain groupBy.agg exactly
+    on both fixtures, the decision salts ONLY the skewed one, and a
+    precomputed census drives the same decision."""
     from pyspark.sql import functions as F
-
-    from umn_eda_kafka_stream_processing_spark.operators.skew import (
-        maybe_salted_agg,
-    )
 
     skewed = spark.createDataFrame(
         [("k1", i) for i in range(400)]
@@ -189,63 +218,54 @@ def test_maybe_salted_agg_decision_and_equivalence(spark, caplog):
         F.sum("v").cast("long").alias("s"),
         F.max("v").cast("long").alias("m"),
     ]
-    partial_aggs = [
-        F.count(F.lit(1)).alias("_n"),
-        F.sum("v").alias("_s"),
-        F.max("v").alias("_m"),
-    ]
-    final_aggs = [
-        F.sum("_n").cast("long").alias("n"),
-        F.sum("_s").cast("long").alias("s"),
-        F.max("_m").cast("long").alias("m"),
-    ]
-    logger = "umn_eda_kafka_stream_processing_spark.skew"
+
+    def advised(df, decision):
+        if decision["strategy"] != "salted_shuffle_hash":
+            return df.groupBy("k").agg(*plain_aggs)
+        return salted_agg(
+            df, "k",
+            partial_aggs=[
+                F.count(F.lit(1)).alias("_n"),
+                F.sum("v").alias("_s"),
+                F.max("v").alias("_m"),
+            ],
+            final_aggs=[
+                F.sum("_n").cast("long").alias("n"),
+                F.sum("_s").cast("long").alias("s"),
+                F.max("_m").cast("long").alias("m"),
+            ],
+            salt_buckets=4, salt_cols=["v"],
+        )
+
+    def rows(df):
+        return {(r["k"], r["n"], r["s"], r["m"]) for r in df.collect()}
+
     for df, expect_salted in ((skewed, True), (uniform, False)):
-        plain = {
-            (r["k"], r["n"], r["s"], r["m"])
-            for r in df.groupBy("k").agg(*plain_aggs).collect()
-        }
-        with caplog.at_level(logging.INFO, logger=logger):
-            caplog.clear()
-            got = {
-                (r["k"], r["n"], r["s"], r["m"])
-                for r in maybe_salted_agg(
-                    df, "k", plain_aggs, partial_aggs, final_aggs,
-                    salt_buckets=4, salt_cols=["v"],
-                ).collect()
-            }
-        assert got == plain
-        decisions = [rec for rec in caplog.records if rec.name == logger]
-        assert len(decisions) == 1
-        assert ("SALTED" in decisions[0].getMessage()) is expect_salted
+        decision = _census_decision(df)
+        assert (decision["strategy"] == "salted_shuffle_hash") is expect_salted
+        assert rows(advised(df, decision)) == rows(
+            df.groupBy("k").agg(*plain_aggs)
+        )
 
     pre = {"n_rows": 100, "max_cnt": 50, "top_key": "k1"}
-    with caplog.at_level(logging.INFO, logger=logger):
-        caplog.clear()
-        got = {
-            (r["k"], r["n"], r["s"], r["m"])
-            for r in maybe_salted_agg(
-                skewed, "k", plain_aggs, partial_aggs, final_aggs,
-                census=pre, salt_buckets=4, salt_cols=["v"],
-            ).collect()
-        }
-    assert got == {
-        (r["k"], r["n"], r["s"], r["m"])
-        for r in skewed.groupBy("k").agg(*plain_aggs).collect()
-    }
-    assert "SALTED" in caplog.records[-1].getMessage()
+    decision = _census_decision(None, census=pre)
+    assert decision["strategy"] == "salted_shuffle_hash"
+    assert rows(advised(skewed, decision)) == rows(
+        skewed.groupBy("k").agg(*plain_aggs)
+    )
 
 
 def test_maybe_broadcast_join_decision_and_equivalence(spark, caplog):
-    """Join-strategy advisor: results equal the plain join either
+    """Build-side-count decision: results equal the plain join either
     way; a small build side broadcasts (BroadcastHashJoin in the
-    plan), a large one shuffles (ShuffledHashJoin); a precomputed
-    build_rows drives the decision without a count; right-preserving
-    hows raise."""
+    plan), a large one shuffles (ShuffledHashJoin); a precomputed row
+    count drives the decision without a count; right-preserving hows
+    raise."""
     import logging
 
     from umn_eda_kafka_stream_processing_spark.operators.skew import (
-        maybe_broadcast_join,
+        decide_join_strategy,
+        join_with_strategy,
     )
 
     left = spark.createDataFrame(
@@ -257,29 +277,28 @@ def test_maybe_broadcast_join_decision_and_equivalence(spark, caplog):
     plain = {
         (r["k"], r["v"], r["payload"]) for r in left.join(right, "k").collect()
     }
-    logger = "umn_eda_kafka_stream_processing_spark.skew"
-    for max_rows, expect_bcast, node in (
-        (1000, True, "BroadcastHashJoin"),
-        (5, False, "ShuffledHashJoin"),
+    for max_rows, strategy, node in (
+        (1000, "broadcast", "BroadcastHashJoin"),
+        (5, "shuffle_hash", "ShuffledHashJoin"),
     ):
-        with caplog.at_level(logging.INFO, logger=logger):
+        decision = decide_join_strategy(
+            0, 0, right.count(), max_broadcast_rows=max_rows
+        )
+        assert decision["strategy"] == strategy
+        with caplog.at_level(logging.INFO, logger=_SKEW_LOG):
             caplog.clear()
-            j = maybe_broadcast_join(left, right, "k", max_rows=max_rows)
+            j = join_with_strategy(left, right, "k", decision)
             got = {(r["k"], r["v"], r["payload"]) for r in j.collect()}
         assert got == plain
-        msg = caplog.records[-1].getMessage()
-        assert ("BROADCAST" in msg) is expect_bcast
+        assert strategy in caplog.records[-1].getMessage()
         assert node in j._jdf.queryExecution().executedPlan().toString()
-    # precomputed build_rows overrides reality (train-once path)
-    with caplog.at_level(logging.INFO, logger=logger):
-        caplog.clear()
-        j = maybe_broadcast_join(
-            left, right, "k", max_rows=5, build_rows=3
-        )
-        assert {(r["k"], r["v"], r["payload"]) for r in j.collect()} == plain
-    assert "BROADCAST" in caplog.records[-1].getMessage()
+    # a precomputed build-side count overrides reality (train-once path)
+    decision = decide_join_strategy(0, 0, 3, max_broadcast_rows=5)
+    assert decision["strategy"] == "broadcast"
+    j = join_with_strategy(left, right, "k", decision)
+    assert {(r["k"], r["v"], r["payload"]) for r in j.collect()} == plain
     try:
-        maybe_broadcast_join(left, right, "k", how="full_outer")
+        join_with_strategy(left, right, "k", decision, how="full_outer")
     except ValueError as e:
         assert "left-preserving" in str(e)
     else:
@@ -338,7 +357,7 @@ def test_cms_join_size_matches_python_replica(spark):
 
 
 def test_advise_join_strategy_from_standing_registers_flips(spark, tmp_path):
-    """The advisor loop closed over incremental CMS register stores:
+    """The decision closed over incremental CMS register stores:
     decisions come from standing sketches (zero planning jobs on the
     data), the exact row counts and conservative skew bound are
     pinned against Python, and the strategy FLIPS from broadcast to
@@ -347,9 +366,6 @@ def test_advise_join_strategy_from_standing_registers_flips(spark, tmp_path):
     from umn_eda_kafka_stream_processing_spark.operators.sketches import (
         cms_registers,
         merge_cms,
-    )
-    from umn_eda_kafka_stream_processing_spark.operators.skew import (
-        advise_join_strategy,
     )
     from umn_eda_kafka_stream_processing_spark.stores import CMS_HORIZON, BatchStore
 
@@ -364,12 +380,12 @@ def test_advise_join_strategy_from_standing_registers_flips(spark, tmp_path):
     right.upsert(0, keys([(i,) for i in range(50)]))
 
     def decide():
-        return advise_join_strategy(
-            left.read(),
-            right.read(),
+        return _register_decision(
+            left.read().collect(),
+            right.read().collect(),
             max_broadcast_rows=100,
             max_share_micro=50_000,
-        ).collect()[0]
+        )
 
     d0 = decide()
     assert (d0["rows_left"], d0["rows_right"]) == (200, 50)
@@ -396,19 +412,22 @@ def test_advise_join_strategy_from_standing_registers_flips(spark, tmp_path):
     assert d2["est_join_rows"] >= true_join
 
 
-def test_advise_join_strategy_rows_equals_dataframe(spark):
-    """The pure-Python advisor twin (the advised pipeline's
-    zero-job decision path) is integer-exact identical to the
-    DataFrame version on randomized register tables across all three
-    strategy regimes — every scalar, not just the strategy."""
+def test_join_strategy_decision_equals_duckdb_reference(spark):
+    """Differential test of the decision path against the DuckDB
+    oracle SQL (`catalog_sketches._duck_advise_case`): on randomized
+    register tables spanning all three strategies, plus an empty left
+    and an empty right side, every one of the seven scalars
+    `cms_register_stats` + `decide_join_strategy` yield equals the
+    reference's."""
     import random
+
+    import duckdb
 
     from umn_eda_kafka_stream_processing_spark.operators.sketches import (
         cms_registers,
     )
-    from umn_eda_kafka_stream_processing_spark.operators.skew import (
-        advise_join_strategy,
-        advise_join_strategy_rows,
+    from umn_eda_kafka_stream_processing_spark.plans.catalog_sketches import (
+        _duck_advise_case,
     )
 
     rng = random.Random(14)
@@ -423,41 +442,56 @@ def test_advise_join_strategy_rows_equals_dataframe(spark):
         ([], list(range(10))),           # empty left
         ([1, 2, 3], []),                 # empty right
     ]
+    con = duckdb.connect()
     seen = set()
-    for lkeys, rkeys in fixtures:
-        lregs = cms_registers(
-            spark.createDataFrame([(k,) for k in lkeys], "k long")
-            if lkeys else spark.createDataFrame([], "k long"),
-            "k",
-        )
-        rregs = cms_registers(
-            spark.createDataFrame([(k,) for k in rkeys], "k long")
-            if rkeys else spark.createDataFrame([], "k long"),
-            "k",
-        )
-        want = advise_join_strategy(
-            lregs, rregs, max_broadcast_rows=100, max_share_micro=50_000
-        ).collect()[0].asDict()
-        got = advise_join_strategy_rows(
-            [(r["row"], r["bucket"], r["cnt"]) for r in lregs.collect()],
-            [(r["row"], r["bucket"], r["cnt"]) for r in rregs.collect()],
+    for i, (lkeys, rkeys) in enumerate(fixtures):
+        label = f"f{i}"
+        regs = {}
+        for pre, ks in (("ra", lkeys), ("rb", rkeys)):
+            regs[pre] = [
+                (r["row"], r["bucket"], r["cnt"])
+                for r in cms_registers(
+                    spark.createDataFrame([(k,) for k in ks], "k long"), "k"
+                ).collect()
+            ]
+            con.execute(
+                f"CREATE TABLE {pre}_{label} "
+                "(row INTEGER, bucket BIGINT, cnt BIGINT)"
+            )
+            if regs[pre]:
+                con.executemany(
+                    f"INSERT INTO {pre}_{label} VALUES (?, ?, ?)", regs[pre]
+                )
+        cur = con.execute(_duck_advise_case(label, "k", "k", 100, 50_000))
+        want = dict(zip([c[0] for c in cur.description], cur.fetchone()))
+        assert want.pop("case_name") == label
+        got = _register_decision(
+            regs["ra"], regs["rb"],
             max_broadcast_rows=100, max_share_micro=50_000,
         )
-        want["est_join_rows"] = int(want["est_join_rows"])
-        assert got == want
+        assert got == want, label
         seen.add(got["strategy"])
     assert seen == {"broadcast", "shuffle_hash", "salted_shuffle_hash"}
-    # serve side: every chosen strategy returns the identical rows
+
+
+def test_join_with_strategy_checks_how_before_the_strategy(spark, tmp_path):
+    """Every strategy returns the identical rows; a right-preserving
+    ``how`` raises on EVERY strategy — not only once a batch flips to
+    salted — and already when the advised pipeline is built; an
+    unknown strategy raises."""
+    from umn_eda_kafka_stream_processing_spark.operators.skew import (
+        join_with_strategy,
+    )
+    from umn_eda_kafka_stream_processing_spark.streaming.advised import (
+        make_advised_enrichment_batch_fn,
+    )
+
     left = spark.createDataFrame(
         [(i % 10, i) for i in range(60)], "k long, lv long"
     )
     right = spark.createDataFrame(
         [(i, 100 + i) for i in range(10)], "k long, rv long"
     )
-    from umn_eda_kafka_stream_processing_spark.operators.skew import (
-        join_with_strategy,
-    )
-
     want = sorted(map(tuple, left.join(right, "k").collect()))
     for strat in ("broadcast", "salted_shuffle_hash", "shuffle_hash"):
         got = sorted(
@@ -469,6 +503,30 @@ def test_advise_join_strategy_rows_equals_dataframe(spark):
             )
         )
         assert got == want, strat
+        for how in ("full_outer", "right", "cross"):
+            try:
+                join_with_strategy(
+                    left, right, "k", {"strategy": strat}, how=how
+                )
+            except ValueError as e:
+                assert "left-preserving" in str(e)
+            else:
+                raise AssertionError(f"{strat} accepted how={how!r}")
+    try:
+        make_advised_enrichment_batch_fn(
+            spark,
+            dim_snapshot_path=str(tmp_path / "dim"),
+            left_regs_path=str(tmp_path / "l"),
+            right_regs_path=str(tmp_path / "r"),
+            out_path=str(tmp_path / "out"),
+            decisions_path=str(tmp_path / "dec"),
+            on="k",
+            how="full_outer",
+        )
+    except ValueError as e:
+        assert "left-preserving" in str(e)
+    else:
+        raise AssertionError("advised pipeline accepted how='full_outer'")
     try:
         join_with_strategy(left, right, "k", {"strategy": "nope"})
     except ValueError as e:

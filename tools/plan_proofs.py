@@ -133,11 +133,6 @@ EXHIBITS = [
      "window anywhere (the only domain-partitioned Window orders by "
      "the <=4096-row bucket id; the boundary tie window partitions "
      "by (domain, priority)); admission is a narrow filter"),
-    ("join_strategy_advisor_census",
-     "sketch-driven planning: every input to the decision is a "
-     "<=1024-row register aggregate (hash-aggs + one tiny register "
-     "equi-join per case) — the joined tables themselves appear only "
-     "as one-pass register builds, never as a join or sort"),
     ("benchmark_decontamination_census",
      "decontamination sweep: the benchmark gram set rides ONE "
      "BroadcastExchange into a left join over the exploded corpus "

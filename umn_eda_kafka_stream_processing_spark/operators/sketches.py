@@ -352,6 +352,58 @@ def cms_join_size(regs_a: DataFrame, regs_b: DataFrame) -> DataFrame:
     )
 
 
+def cms_register_stats(left_rows, right_rows) -> dict:
+    """Join-planning scalars from two COLLECTED Count-Min register
+    tables over the join key — iterables of (row, bucket, cnt), e.g.
+    the Rows of a `cms_registers` or `merge_cms` frame, each at most
+    d·w = 1024 rows however large the input — in pure Python, so
+    pricing a join from standing registers schedules no Spark job:
+
+    * ``rows_<side>`` is EXACT — every input row increments exactly
+      one bucket per hash row, so any row's register total equals the
+      input row count (the min across rows guards a malformed table);
+    * ``top_cnt_<side>_ub`` is an UPPER BOUND on the heaviest key's
+      count: the heaviest key's cell in each hash row holds at least
+      its count, so the min over rows of per-row max cells does too
+      (collisions only inflate it — a salting decision from it can
+      only over-salt, never miss skew);
+    * ``est_join_rows`` is the `cms_join_size` min-dot over ALL d
+      rows (a row with no shared bucket dots to 0) — a Python int,
+      unbounded like the DECIMAL(38,0) it mirrors.
+
+    An empty table gives 0 for its side. Feed rows_left,
+    top_cnt_left_ub and rows_right to `skew.decide_join_strategy`."""
+    def side(rows) -> tuple[dict, int, int]:
+        cells: dict = {}
+        tot_mx: dict[int, list[int]] = {}
+        for r, b, c in rows:
+            r, c = int(r), int(c)
+            cells[(r, int(b))] = cells.get((r, int(b)), 0) + c
+            t = tot_mx.setdefault(r, [0, 0])
+            t[0] += c
+            t[1] = max(t[1], c)
+        if not tot_mx:
+            return cells, 0, 0
+        return (
+            cells,
+            min(t for t, _ in tot_mx.values()),
+            min(m for _, m in tot_mx.values()),
+        )
+
+    left, rows_left, top_left = side(left_rows)
+    right, rows_right, top_right = side(right_rows)
+    dots = [0] * _CMS_D
+    for (r, b), c in left.items():
+        dots[r] += c * right.get((r, b), 0)
+    return {
+        "rows_left": rows_left,
+        "rows_right": rows_right,
+        "top_cnt_left_ub": top_left,
+        "top_cnt_right_ub": top_right,
+        "est_join_rows": min(dots),
+    }
+
+
 def merge_cms(regs: DataFrame) -> DataFrame:
     """The CMS register-store merge (`stores.BatchStore`, marker
     `stores.CMS_HORIZON`): counts are ADDITIVE, so a store of per-batch

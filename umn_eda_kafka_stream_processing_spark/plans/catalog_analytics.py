@@ -2124,11 +2124,12 @@ _ADVISOR_ORACLE = """
 @_register(
     "salt_advisor_join_census",
     "Auto-salt advisor wired into the join path (operators/skew.py:"
-    "maybe_salted_join): for a SKEWED key (events.event_type — a "
-    "handful of values, heaviest far above the 5% share threshold) "
-    "and a HEALTHY key (orders.o_custkey), the advisor computes the "
-    "one-row key_skew_census (a bounded planning scalar), salts only "
-    "the skewed join (left-salt/right-explode via salted_join, "
+    "decide_join_strategy -> join_with_strategy): for a SKEWED key "
+    "(events.event_type — a handful of values, heaviest far above the "
+    "5% share threshold) and a HEALTHY key (orders.o_custkey), the "
+    "one-row key_skew_census (a bounded planning scalar) feeds the "
+    "decision (salting only, never broadcast), which salts only the "
+    "skewed join (left-salt/right-explode via salted_join, "
     "shuffle_hash-pinned so AQE can't void the salt at test SFs), and "
     "the query emits each decision plus the joined row count and an "
     "integer checksum over BOTH sides' columns — so a pair lost or "
@@ -2139,16 +2140,17 @@ _ADVISOR_ORACLE = """
 )
 def salt_advisor_join_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from umn_eda_kafka_stream_processing_spark.operators.skew import (
-        advise_salting,
-        maybe_salted_join,
+        decide_join_strategy,
+        join_with_strategy,
+        key_skew_census,
     )
 
     def branch(label, left, right, key, checksum, buckets):
-        salt, census, share = advise_salting(left, [key])
-        j = maybe_salted_join(
-            left, right, key, salt_buckets=buckets, census=census,
-            right_hint="shuffle_hash",
-        )
+        census = key_skew_census(left, key, key).collect()[0]
+        d = decide_join_strategy(census["n_rows"], census["max_cnt"], None)
+        salt = d["strategy"] == "salted_shuffle_hash"
+        share = d["share_left_micro_ub"]
+        j = join_with_strategy(left, right, key, d, salt_buckets=buckets)
         return j.agg(
             F.count(F.lit(1)).cast("long").alias("n_out"),
             F.sum(checksum).cast("long").alias("checksum"),
@@ -2229,9 +2231,8 @@ _BCAST_ADVISOR_ORACLE = """
 
 @_register(
     "broadcast_advisor_join_census",
-    "Join-strategy advisor (operators/skew.py:maybe_broadcast_join — "
-    "the third of the advisor family: salting advisors decide the "
-    "key shape, this decides the physical build): one bounded "
+    "Join-strategy advisor, build-side count source (operators/"
+    "skew.py:decide_join_strategy -> join_with_strategy): one bounded "
     "count() of the build side picks broadcast (provably small dim) "
     "vs a pinned shuffle_hash (stats-free frames silently fall to "
     "SMJ under autoBroadcastJoinThreshold's byte guess). Branch 1 "
@@ -2248,20 +2249,20 @@ def broadcast_advisor_join_census(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     from umn_eda_kafka_stream_processing_spark.operators.skew import (
-        maybe_broadcast_join,
+        decide_join_strategy,
+        join_with_strategy,
     )
 
     def branch(label, left, right, key, checksum, max_rows):
         n_build = right.count()
-        j = maybe_broadcast_join(
-            left, right, key, max_rows=max_rows, build_rows=n_build
-        )
+        d = decide_join_strategy(0, 0, n_build, max_broadcast_rows=max_rows)
+        j = join_with_strategy(left, right, key, d)
         return j.agg(
             F.count(F.lit(1)).cast("long").alias("n_out"),
             F.sum(checksum).cast("long").alias("checksum"),
         ).select(
             F.lit(label).alias("key"),
-            F.lit(1 if n_build <= max_rows else 0)
+            F.lit(1 if d["strategy"] == "broadcast" else 0)
             .cast("long")
             .alias("broadcasted"),
             F.lit(n_build).cast("long").alias("n_build"),
@@ -2347,11 +2348,11 @@ _AGG_ADVISOR_ORACLE = """
 @_register(
     "salt_advisor_agg_census",
     "Auto-salt advisor wired into the AGGREGATION path (operators/"
-    "skew.py:maybe_salted_agg — maybe_salted_join's twin; groupBy on "
+    "skew.py:decide_join_strategy over a key census; groupBy on "
     "a hot key is the more common skew victim and AQE's skew "
     "splitting covers only joins): for the SKEWED events.event_type "
-    "key and the HEALTHY orders.o_custkey key, the advisor computes "
-    "the one-row key_skew_census and aggregates per key either plain "
+    "key and the HEALTHY orders.o_custkey key, the one-row "
+    "key_skew_census decides, and each key aggregates either plain "
     "(one shuffle) or via the salted two-stage shape — identical "
     "results for distributive aggregates. The query rolls each "
     "branch's per-key (count, sum(key-mod)) frame into one row: "
@@ -2366,32 +2367,37 @@ _AGG_ADVISOR_ORACLE = """
 )
 def salt_advisor_agg_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from umn_eda_kafka_stream_processing_spark.operators.skew import (
-        advise_salting,
-        maybe_salted_agg,
+        decide_join_strategy,
+        key_skew_census,
+        salted_agg,
     )
 
     def branch(label, df, key, mod_col, buckets):
-        salt, census, share = advise_salting(df, [key])
+        census = key_skew_census(df, key, key).collect()[0]
+        d = decide_join_strategy(census["n_rows"], census["max_cnt"], None)
+        salt = d["strategy"] == "salted_shuffle_hash"
+        share = d["share_left_micro_ub"]
         modexpr = (F.col(mod_col) % F.lit(97)).cast("long")
-        per_key = maybe_salted_agg(
-            df,
-            key,
-            plain_aggs=[
+        if salt:
+            per_key = salted_agg(
+                df,
+                key,
+                partial_aggs=[
+                    F.count(F.lit(1)).alias("_n"),
+                    F.sum(modexpr).alias("_s"),
+                ],
+                final_aggs=[
+                    F.sum("_n").cast("long").alias("n"),
+                    F.sum("_s").cast("long").alias("s"),
+                ],
+                salt_buckets=buckets,
+                salt_cols=[mod_col],
+            )
+        else:
+            per_key = df.groupBy(key).agg(
                 F.count(F.lit(1)).cast("long").alias("n"),
                 F.sum(modexpr).cast("long").alias("s"),
-            ],
-            partial_aggs=[
-                F.count(F.lit(1)).alias("_n"),
-                F.sum(modexpr).alias("_s"),
-            ],
-            final_aggs=[
-                F.sum("_n").cast("long").alias("n"),
-                F.sum("_s").cast("long").alias("s"),
-            ],
-            salt_buckets=buckets,
-            census=census,
-            salt_cols=[mod_col],
-        )
+            )
         return per_key.agg(
             F.count(F.lit(1)).cast("long").alias("n_groups"),
             F.sum("n").cast("long").alias("total_n"),

@@ -260,10 +260,10 @@ def _duck_advise_case(
 ) -> str:
     """One advisor decision as SQL text over the per-case register
     CTEs ra_<label>/rb_<label> — the identical integer arithmetic as
-    operators/skew.py:advise_join_strategy (rows = min over hash
-    rows of register totals, exact; top ub = min over rows of max
-    cell; share = round-half-up ppm via BIGINT //; est = min over
-    ALL d rows of the dot product, missing rows 0)."""
+    sketches.cms_register_stats + skew.decide_join_strategy (rows =
+    min over hash rows of register totals, exact; top ub = min over
+    rows of max cell; share = round-half-up ppm via BIGINT //; est =
+    min over ALL d rows of the dot product, missing rows 0)."""
     return f"""
     SELECT '{label}' AS case_name,
            CAST(rows_left AS BIGINT) AS rows_left,
@@ -317,14 +317,15 @@ _ADVISE_CASES = [
 @_register(
     "join_strategy_advisor_census",
     "The advisor loop CLOSED over standing sketches (operators/"
-    "skew.py:advise_join_strategy): three prospective joins priced "
-    "and planned ENTIRELY from Count-Min register tables (<=1024 "
-    "rows each) — exact per-side row counts (any hash row's register "
-    "total), a conservative upper bound on the heaviest key (min "
+    "skew.py:decide_join_strategy over sketches.cms_register_stats): "
+    "three prospective joins priced and planned ENTIRELY from "
+    "collected Count-Min register tables (<=1024 rows each) — exact "
+    "per-side row counts (any hash row's register total), a conservative upper bound on the heaviest key (min "
     "over rows of max cell — can only over-salt, never miss skew), "
     "and the Cormode-Muthukrishnan min-dot join-size overestimate; "
-    "ZERO planning jobs touch the data. The three cases land one in "
-    "each decision branch: nation is provably broadcastable, "
+    "ZERO planning jobs touch the data, and the decision itself is "
+    "driver-side Python. The three cases land one in each decision "
+    "branch: nation is provably broadcastable, "
     "events.event_type's ~20% top-key share exceeds the 5% salting "
     "bar, lineitem x orders pins shuffle_hash. Oracle rebuilds every "
     "register from the same md5 text and re-derives the identical "
@@ -343,43 +344,45 @@ _ADVISE_CASES = [
 )
 def join_strategy_advisor_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     from umn_eda_kafka_stream_processing_spark.operators.skew import (
-        advise_join_strategy,
+        decide_join_strategy,
     )
 
-    def regs(tbl: str, col: str) -> DataFrame:
+    def regs(tbl: str, col: str) -> list:
         return sk.cms_registers(
             load_table(spark, sf_dir, tbl).select(F.col(col).alias("k")),
             "k",
-        )
+        ).collect()
 
-    out = None
+    rows = []
     for label, tl, kl, tr, kr, mb, ms in _ADVISE_CASES:
-        row = advise_join_strategy(
-            regs(tl, kl), regs(tr, kr),
+        s = sk.cms_register_stats(regs(tl, kl), regs(tr, kr))
+        d = decide_join_strategy(
+            s["rows_left"], s["top_cnt_left_ub"], s["rows_right"],
             max_broadcast_rows=mb, max_share_micro=ms,
-        ).select(
-            F.lit(label).alias("case_name"),
-            "rows_left",
-            "rows_right",
-            "top_cnt_left_ub",
-            "top_cnt_right_ub",
-            "share_left_micro_ub",
-            # the operator keeps est DECIMAL(38,0) for 1e12-row
-            # registers; these test tables are nowhere near the
-            # BIGINT edge, and the oracle sums in BIGINT
-            F.col("est_join_rows").cast("long").alias("est_join_rows"),
-            "strategy",
         )
-        out = row if out is None else out.unionByName(row)
-    return out
+        rows.append((
+            label, s["rows_left"], s["rows_right"], s["top_cnt_left_ub"],
+            s["top_cnt_right_ub"], d["share_left_micro_ub"],
+            # est is unbounded in Python (DECIMAL(38,0) at 1e12-row
+            # registers); these test tables are nowhere near the
+            # BIGINT edge, and the oracle sums in BIGINT
+            s["est_join_rows"], d["strategy"],
+        ))
+    # one partition: the decided rows are driver-side already
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1),
+        "case_name string, rows_left long, rows_right long, "
+        "top_cnt_left_ub long, top_cnt_right_ub long, "
+        "share_left_micro_ub long, est_join_rows long, strategy string",
+    )
 
 
 @_register(
     "sketch_advised_join_totals",
     "The sketch-planning loop END-TO-END (operators/skew.py:"
-    "advise_join_strategy -> join_with_strategy): Count-Min registers "
+    "decide_join_strategy -> join_with_strategy): Count-Min registers "
     "over both join keys price the orders x customer join, the "
-    "collected one-row census picks the strategy (broadcast here — "
+    "collected registers decide the strategy (broadcast here — "
     "customer is provably small), and join_with_strategy executes "
     "that exact physical shape with zero planning jobs on the data. "
     "The RESULT is strategy-invariant (property-tested across all "
@@ -397,7 +400,7 @@ def join_strategy_advisor_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sketch_advised_join_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from umn_eda_kafka_stream_processing_spark.operators.skew import (
-        advise_join_strategy,
+        decide_join_strategy,
         join_with_strategy,
     )
 
@@ -407,10 +410,13 @@ def sketch_advised_join_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
-    decision = advise_join_strategy(
-        sk.cms_registers(orders.select("c_custkey"), "c_custkey"),
-        sk.cms_registers(cust.select("c_custkey"), "c_custkey"),
-    ).collect()[0]
+    stats = sk.cms_register_stats(
+        sk.cms_registers(orders.select("c_custkey"), "c_custkey").collect(),
+        sk.cms_registers(cust.select("c_custkey"), "c_custkey").collect(),
+    )
+    decision = stats | decide_join_strategy(
+        stats["rows_left"], stats["top_cnt_left_ub"], stats["rows_right"]
+    )
     joined = join_with_strategy(orders, cust, "c_custkey", decision)
     return joined.groupBy("c_nationkey").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),

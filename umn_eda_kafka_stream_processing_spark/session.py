@@ -66,4 +66,18 @@ def get_spark(
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    _put_package_on_worker_path(spark.sparkContext)
     return spark
+
+
+def _put_package_on_worker_path(sc) -> None:
+    """Prepend this package's parent directory to the Python workers'
+    PYTHONPATH. The package is not installed, and a worker otherwise
+    imports it only through its working directory, so UDFs that
+    import it fail when the driver runs from any other directory.
+    ``sc.environment`` is what every Python UDF ships to its workers,
+    so this also covers a session that already existed."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [p for p in sc.environment.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if root not in paths:
+        sc.environment["PYTHONPATH"] = os.pathsep.join([root, *paths])

@@ -1,13 +1,12 @@
 """Sketch-advised streaming enrichment: the advisor loop IN a pipeline.
 
-`operators/skew.py:advise_join_strategy` closed the planning loop at
-census level (price a join from standing Count-Min registers, zero
-planning jobs); this module is the missing CONSUMER (round-11
-verdict): a foreachBatch pipeline that maintains CMS registers for
-BOTH sides of its enrichment join and re-decides the join's physical
-strategy every microbatch — flipping broadcast → shuffle_hash →
-salted_shuffle_hash as the dimension grows or the stream's key
-distribution skews, with results identical across all strategies
+`operators/skew.py:decide_join_strategy` prices a join from standing
+Count-Min registers (`sketches.cms_register_stats`) with zero planning
+jobs; this module is its streaming CONSUMER: a foreachBatch pipeline
+that maintains CMS registers for BOTH sides of its enrichment join
+and re-decides the join's physical strategy every microbatch —
+flipping broadcast → shuffle_hash → salted_shuffle_hash as the
+dimension grows or the stream's key distribution skews, with results identical across all strategies
 (join_with_strategy's property-tested contract).
 
 Reference scope: the reference enriches streams against dim tables
@@ -39,13 +38,16 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from umn_eda_kafka_stream_processing_spark.operators.sketches import (
+    cms_register_stats,
     cms_registers,
     merge_cms,
 )
 from umn_eda_kafka_stream_processing_spark.operators.skew import (
     ADVISOR_MAX_SHARE_MICRO,
     BROADCAST_MAX_ROWS,
+    decide_join_strategy,
     join_with_strategy,
+    require_left_preserving,
 )
 from umn_eda_kafka_stream_processing_spark.stores import (
     CMS_HORIZON,
@@ -140,8 +142,8 @@ def make_advised_enrichment_batch_fn(
        stream's cumulative key distribution — what the salting
        decision prices);
     2. price the ONE-ROW decision from the register state
-       (`advise_join_strategy_rows` over the driver-cached fold —
-       zero Spark jobs touch fact or dim data, and the decision
+       (`cms_register_stats` + `decide_join_strategy` over the
+       driver-cached fold — zero Spark jobs touch fact or dim data, and the decision
        itself schedules NO job at all: the fact fold rides the
        upsert's own aggregation, the dim rows re-collect only when
        the right store's batch listing changes);
@@ -155,7 +157,8 @@ def make_advised_enrichment_batch_fn(
 
     ``how`` must be left-preserving (inner/left/semi/anti) — the
     salted branch explodes the right side per salt (salted_join's
-    contract).
+    contract) — and is checked here, when the callable is built,
+    not on the first batch that happens to salt.
 
     PRECONDITION: the dim changelog must land its FIRST batch before
     the fact stream processes one — a fact batch against a
@@ -169,10 +172,7 @@ def make_advised_enrichment_batch_fn(
     batches at/below ``batch_id - 1`` every N batches — see
     `make_dim_changelog_batch_fn` (the dim side collapses on its own
     clock there; this side never touches the right store's ids)."""
-    from umn_eda_kafka_stream_processing_spark.operators.skew import (
-        advise_join_strategy_rows,
-    )
-
+    require_left_preserving(how)
     keys = [on] if isinstance(on, str) else list(on)
     left = BatchStore(spark, left_regs_path, merge_cms, CMS_HORIZON)
     right = BatchStore(spark, right_regs_path, merge_cms, CMS_HORIZON)
@@ -182,9 +182,9 @@ def make_advised_enrichment_batch_fn(
     # side folds its own upserts into a driver dict and the dim side
     # re-collects ONLY when the right store's batch listing changes
     # (one metadata FS listing per batch). The decision then runs in
-    # pure Python (advise_join_strategy_rows — integer-exact twin,
-    # test-pinned) instead of scheduling a multi-stage Spark plan per
-    # microbatch; the register STORES stay the recovery/audit source:
+    # pure Python (cms_register_stats + decide_join_strategy, pinned
+    # against the DuckDB oracle SQL) instead of scheduling a
+    # multi-stage Spark plan per microbatch; the register STORES stay the recovery/audit source:
     # a fresh driver (restart, failover) rebuilds the fold from one
     # store read, and every downstream census still reads the stores.
     state: dict = {"cum": None, "last_id": None, "last_regs": None,
@@ -252,9 +252,14 @@ def make_advised_enrichment_batch_fn(
             if right_ids != state["right_ids"]:
                 state["right_rows"] = _store_rows(right)
                 state["right_ids"] = right_ids
-            decision = advise_join_strategy_rows(
+            stats = cms_register_stats(
                 [(r, bk, c) for (r, bk), c in state["cum"].items() if c],
                 state["right_rows"],
+            )
+            decision = stats | decide_join_strategy(
+                stats["rows_left"],
+                stats["top_cnt_left_ub"],
+                stats["rows_right"],
                 max_broadcast_rows=max_broadcast_rows,
                 max_share_micro=max_share_micro,
             )
