@@ -67,9 +67,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm-up: JVM, parquet footer reads, codegen
-    REGISTRY["user_event_count"].spark(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    noop_run(spark, "user_event_count", sf_dir)
 
     runs = max(int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")), 1)
     # wall-clock budget: if the full catalog at n runs would blow the
@@ -138,7 +136,6 @@ def main() -> None:
         if (time.time() - bench_start) >= hard_cap_s:
             skipped.append(name)
             continue
-        spec = REGISTRY[name]
         # per-query sampling plan (the shape that fits 163 queries
         # inside the budget):
         #   run 0 — WARMUP, recorded in the sidecar but excluded from
@@ -175,28 +172,12 @@ def main() -> None:
                 if abs(walls[1] - walls[0]) <= 0.30 * min(walls):
                     stable_break = True
                     break
-            t0 = time.time()
-            spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            walls.append(time.time() - t0)
+            walls.append(noop_run(spark, name, sf_dir))
             built = drain_build_events()
             if built:
                 builds.setdefault("warmup" if i == 0 else "measured", []).extend(
                     built
                 )
-            # release the checkpointed/cached RDDs a query materialized
-            # (the dedup pipelines localCheckpoint signatures) before
-            # the next run: explicit unpersist beats waiting on the
-            # async ContextCleaner, and keeps executor memory flat.
-            # Only pay the collection cost when something was actually
-            # persisted — a forced full JVM GC per run adds measurable
-            # wall across 78 queries x 3 runs of mostly persist-free
-            # plans.
-            persisted = spark.sparkContext._jsc.getPersistentRDDs()
-            if persisted:
-                gc.collect()
-                for jrdd in persisted.values():
-                    jrdd.unpersist()
-                spark.sparkContext._jvm.System.gc()
         if len(walls) < runs:
             # only the deliberate break sites count as caps; a
             # budget-shortened run whose single wall happens to
@@ -319,6 +300,31 @@ def main() -> None:
         obj["queries"] = {}
         line = json.dumps(obj, separators=(",", ":"))
     print(line)
+
+
+def noop_run(spark, name: str, sf_dir: str) -> float:
+    """One run of catalog query ``name`` into the noop sink (the full
+    pipeline runs, nothing is serialized back to Python); returns its
+    wall in seconds. The timing loop of this harness and of
+    tools/time_query.py.
+
+    Afterwards the checkpointed/cached RDDs the query materialized (the
+    dedup pipelines localCheckpoint signatures) are released before the
+    next run: explicit unpersist beats waiting on the async
+    ContextCleaner, and keeps executor memory flat. The collection cost
+    is paid only when something was actually persisted — a forced full
+    JVM GC per run adds measurable wall across a catalog of mostly
+    persist-free plans."""
+    t0 = time.time()
+    REGISTRY[name].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    wall = time.time() - t0
+    persisted = spark.sparkContext._jsc.getPersistentRDDs()
+    if persisted:
+        gc.collect()
+        for jrdd in persisted.values():
+            jrdd.unpersist()
+        spark.sparkContext._jvm.System.gc()
+    return wall
 
 
 def order_by_prior_cost(

@@ -10,13 +10,13 @@ import os
 from pyspark.sql import functions as F
 
 from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-    compact_changelog,
-    compact_store,
-    expire_snapshot,
     snapshot_diff,
-    upsert_snapshot,
 )
-from umn_eda_kafka_stream_processing_spark.stores import BatchStore
+from umn_eda_kafka_stream_processing_spark.stores import (
+    BatchStore,
+    SnapshotStore,
+    compact_changelog,
+)
 
 
 def _rows(spark, data):
@@ -49,29 +49,23 @@ def test_compact_changelog_bootstrap_without_snapshot(spark):
 
 def test_upsert_snapshot_round_trip(spark, tmp_path):
     path = str(tmp_path / "snap")
-    upsert_snapshot(spark, path, _rows(
-        spark, [("a", "s1", "v1", 1), ("b", "s2", "v1", 1)]), "id")
-    upsert_snapshot(spark, path, _rows(spark, [("a", "s1", "v2", 2)]), "id")
+    store = SnapshotStore(spark, path, "id", order="event_seq")
+    store.upsert(_rows(spark, [("a", "s1", "v1", 1), ("b", "s2", "v1", 1)]))
+    store.upsert(_rows(spark, [("a", "s1", "v2", 2)]))
     got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert got == {"a": "v2", "b": "v1"}
 
 
 def test_upsert_snapshot_dynamic_overwrite_leaves_other_partitions(spark, tmp_path):
     path = str(tmp_path / "snap")
-    upsert_snapshot(
-        spark, path,
-        _rows(spark, [("a", "s1", "v1", 1), ("b", "s2", "v1", 1)]),
-        "id", partition_cols=["shard"],
-    )
+    store = SnapshotStore(spark, path, "id", "shard", order="event_seq")
+    store.upsert(_rows(spark, [("a", "s1", "v1", 1), ("b", "s2", "v1", 1)]))
     s2_files = {
         f: os.path.getmtime(os.path.join(path, "shard=s2", f))
         for f in os.listdir(os.path.join(path, "shard=s2"))
         if f.endswith(".parquet")
     }
-    upsert_snapshot(
-        spark, path, _rows(spark, [("a", "s1", "v2", 2)]),
-        "id", partition_cols=["shard"],
-    )
+    store.upsert(_rows(spark, [("a", "s1", "v2", 2)]))
     # values: s1 upserted, s2 untouched
     got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert got == {"a": "v2", "b": "v1"}
@@ -111,8 +105,9 @@ def test_compact_store_reduces_files_preserves_rows_idempotent(spark, tmp_path):
     before = _sorted_rows(spark, path)
     assert len(_bucket_files(path, "s1")) > 1
 
-    stats = compact_store(spark, path, partition_cols="shard")
-    assert stats["buckets_compacted"] == 2
+    store = SnapshotStore(spark, path, partition_by="shard")
+    stats = store.maintain()
+    assert stats["partitions_rewritten"] == 2
     assert stats["files_after"] == 2  # one file per bucket
     assert _sorted_rows(spark, path) == before
     assert len(_bucket_files(path, "s1")) == 1
@@ -124,8 +119,9 @@ def test_compact_store_reduces_files_preserves_rows_idempotent(spark, tmp_path):
             for f in _bucket_files(path, b)]
         for b in ("s1", "s2")
     }
-    stats2 = compact_store(spark, path, partition_cols="shard")
-    assert stats2["buckets_compacted"] == 0 and stats2["rows"] == 0
+    stats2 = store.maintain()
+    assert stats2["partitions_rewritten"] == 0
+    assert stats2["rows_rewritten"] == 0
     assert mtimes == {
         b: [os.path.getmtime(os.path.join(path, f"shard={b}", f))
             for f in _bucket_files(path, b)]
@@ -143,10 +139,8 @@ def test_compact_store_target_rows_splits_buckets(spark, tmp_path):
             "append"
         ).partitionBy("shard").parquet(path)
     before = _sorted_rows(spark, path)
-    stats = compact_store(
-        spark, path, partition_cols="shard", key_cols="id", target_rows=2
-    )
-    assert stats["buckets_compacted"] == 1
+    stats = SnapshotStore(spark, path, "id", "shard").maintain(target_rows=2)
+    assert stats["partitions_rewritten"] == 1
     assert _sorted_rows(spark, path) == before
     assert 1 < len(_bucket_files(path, "s1")) <= 3
 
@@ -166,17 +160,17 @@ def test_compact_store_multi_column_partitions(spark, tmp_path):
             "shard", "event_seq"
         ).parquet(path)
     before = _sorted_rows(spark, path)
-    stats = compact_store(spark, path, partition_cols=["shard", "event_seq"])
-    assert stats["buckets_compacted"] == 6 and stats["files_after"] == 6
+    store = SnapshotStore(spark, path, partition_by=["shard", "event_seq"])
+    stats = store.maintain()
+    assert stats["partitions_rewritten"] == 6 and stats["files_after"] == 6
     assert _sorted_rows(spark, path) == before
-    assert compact_store(
-        spark, path, partition_cols=["shard", "event_seq"]
-    )["buckets_compacted"] == 0
+    assert store.maintain()["partitions_rewritten"] == 0
 
 
 def test_compact_store_heals_duplicate_keys(spark, tmp_path):
-    """With key_cols + order_col the rewrite re-applies latest-wins —
-    a crashed double-write's duplicate key collapses to the winner."""
+    """A keyed store whose rows carry its order column re-applies
+    latest-wins on rewrite — a crashed double-write's duplicate key
+    collapses to the winner."""
     path = str(tmp_path / "store")
     _rows(spark, [("a", "s1", "old", 1), ("b", "s1", "keep", 1)]).write.mode(
         "append"
@@ -184,10 +178,7 @@ def test_compact_store_heals_duplicate_keys(spark, tmp_path):
     _rows(spark, [("a", "s1", "new", 5)]).write.mode(
         "append"
     ).partitionBy("shard").parquet(path)
-    compact_store(
-        spark, path, partition_cols="shard", key_cols="id",
-        order_col="event_seq",
-    )
+    SnapshotStore(spark, path, "id", "shard", order="event_seq").maintain()
     got = {r["id"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert got == {"a": "new", "b": "keep"}
 
@@ -199,10 +190,11 @@ def test_compact_store_unpartitioned(spark, tmp_path):
             "append"
         ).parquet(path)
     before = _sorted_rows(spark, path)
-    stats = compact_store(spark, path)
-    assert stats["buckets_compacted"] == 1 and stats["files_after"] == 1
+    store = SnapshotStore(spark, path)
+    stats = store.maintain()
+    assert stats["partitions_rewritten"] == 1 and stats["files_after"] == 1
     assert _sorted_rows(spark, path) == before
-    assert compact_store(spark, path)["buckets_compacted"] == 0
+    assert store.maintain()["partitions_rewritten"] == 0
 
 
 def test_expire_snapshot_ttl_sweep(spark, tmp_path):
@@ -223,12 +215,15 @@ def test_expire_snapshot_ttl_sweep(spark, tmp_path):
         f: os.path.getmtime(os.path.join(path, "shard=s4", f))
         for f in os.listdir(os.path.join(path, "shard=s4"))
     }
-    stats = expire_snapshot(
-        spark, path, "event_seq", 50, partition_cols="shard"
-    )
-    assert stats == {
-        "partitions_total": 4, "partitions_touched": 2,
-        "rows_expired": 3, "rows_kept": 2, "partitions_deleted": 1,
+    store = SnapshotStore(spark, path, partition_by="shard")
+    stats = store.maintain(ttl=("event_seq", 50), target_files=None)
+    assert {k: stats[k] for k in (
+        "partitions_total", "partitions_expired", "rows_expired",
+        "rows_rewritten", "partitions_deleted", "partitions_rewritten",
+    )} == {
+        "partitions_total": 4, "partitions_expired": 2,
+        "rows_expired": 3, "rows_rewritten": 2, "partitions_deleted": 1,
+        "partitions_rewritten": 1,
     }
     got = {r["id"] for r in spark.read.parquet(path).collect()}
     assert got == {"b", "c", "d", "g", "h"}
@@ -237,10 +232,8 @@ def test_expire_snapshot_ttl_sweep(spark, tmp_path):
         f: os.path.getmtime(os.path.join(path, "shard=s4", f))
         for f in os.listdir(os.path.join(path, "shard=s4"))
     }
-    replay = expire_snapshot(
-        spark, path, "event_seq", 50, partition_cols="shard"
-    )
-    assert replay["partitions_touched"] == 0 and replay["rows_expired"] == 0
+    replay = store.maintain(ttl=("event_seq", 50), target_files=None)
+    assert replay["partitions_expired"] == 0 and replay["rows_expired"] == 0
     assert {r["id"] for r in spark.read.parquet(path).collect()} == got
     # NULL-ts row survived in a TOUCHED partition (s1 was rewritten)
     assert "h" in got
@@ -249,8 +242,10 @@ def test_expire_snapshot_ttl_sweep(spark, tmp_path):
 def test_expire_snapshot_unpartitioned(spark, tmp_path):
     path = str(tmp_path / "store")
     _rows(spark, [("a", "s1", "x", 1), ("b", "s1", "y", 9)]).write.parquet(path)
-    stats = expire_snapshot(spark, path, "event_seq", 5)
-    assert stats["rows_expired"] == 1 and stats["rows_kept"] == 1
+    stats = SnapshotStore(spark, path).maintain(
+        ttl=("event_seq", 5), target_files=None
+    )
+    assert stats["rows_expired"] == 1 and stats["rows_rewritten"] == 1
     assert {r["id"] for r in spark.read.parquet(path).collect()} == {"b"}
 
 
@@ -261,10 +256,6 @@ def test_maintain_store_one_pass_ttl_and_compaction(spark, tmp_path):
     expired partition's directory is deleted; an untouched partition
     keeps its files byte-for-byte (mtimes); a replayed call selects
     zero partitions."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        maintain_store,
-    )
-
     path = str(tmp_path / "store")
     # s1/s2 fragmented (2 appends); s3 fully expires; s4 untouched
     _rows(spark, [
@@ -278,9 +269,8 @@ def test_maintain_store_one_pass_ttl_and_compaction(spark, tmp_path):
         f: os.path.getmtime(os.path.join(path, "shard=s4", f))
         for f in os.listdir(os.path.join(path, "shard=s4"))
     }
-    stats = maintain_store(
-        spark, path, partition_cols="shard", ttl=("event_seq", 50)
-    )
+    store = SnapshotStore(spark, path, partition_by="shard")
+    stats = store.maintain(ttl=("event_seq", 50))
     assert stats == {
         "partitions_total": 4, "rows_expired": 2,
         "partitions_expired": 2, "partitions_deleted": 1,
@@ -301,9 +291,7 @@ def test_maintain_store_one_pass_ttl_and_compaction(spark, tmp_path):
             if f.endswith(".parquet")
         ]
         assert len(files) == 1, shard
-    replay = maintain_store(
-        spark, path, partition_cols="shard", ttl=("event_seq", 50)
-    )
+    replay = store.maintain(ttl=("event_seq", 50))
     assert replay["partitions_rewritten"] == 0
     assert replay["rows_expired"] == 0 and replay["partitions_deleted"] == 0
     assert {r["id"] for r in spark.read.parquet(path).collect()} == got
@@ -314,12 +302,8 @@ def test_maintain_store_preserves_streaming_exactness(spark, tmp_path):
     -> N more batches -> maintain; the store still equals the
     latest-by-key of every update ever applied, and fragmentation is
     healed (one file per bucket after each maintenance)."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        maintain_store,
-        upsert_snapshot,
-    )
-
     path = str(tmp_path / "store")
+    store = SnapshotStore(spark, path, "id", "shard", order="event_seq")
     expect: dict = {}
 
     def batch(bid, updates):
@@ -330,17 +314,14 @@ def test_maintain_store_preserves_streaming_exactness(spark, tmp_path):
             cur = expect.get(k)
             if cur is None or seq >= cur[1]:
                 expect[k] = (v, seq)
-        upsert_snapshot(
-            spark, path, _rows(spark, rows), "id",
-            partition_cols=["shard"],
-        )
+        store.upsert(_rows(spark, rows))
 
     for bid, ups in enumerate([[1, 2], [2, 3], [4]]):
         batch(bid, ups)
-    m1 = maintain_store(spark, path, partition_cols="shard")
+    m1 = store.maintain()
     for bid, ups in enumerate([[1, 5], [3, 4]], start=3):
         batch(bid, ups)
-    m2 = maintain_store(spark, path, partition_cols="shard")
+    m2 = store.maintain()
     got = {
         r["id"]: (r["v"], r["event_seq"])
         for r in spark.read.parquet(path).collect()
@@ -356,7 +337,7 @@ def test_maintain_store_preserves_streaming_exactness(spark, tmp_path):
             ]
             assert len(files) == 1, d
     # and a third maintenance is a no-op
-    m3 = maintain_store(spark, path, partition_cols="shard")
+    m3 = store.maintain()
     assert m3["partitions_rewritten"] == 0
     assert {
         r["id"]: (r["v"], r["event_seq"])
@@ -527,7 +508,7 @@ def test_snapshot_diff_cdc_statuses(spark):
 
 
 def test_streaming_changelog_maintains_snapshot(spark, tmp_path):
-    """foreachBatch(upsert_snapshot): a streaming changelog becomes a
+    """foreachBatch(SnapshotStore.upsert): a streaming changelog becomes a
     continuously-maintained snapshot table (the docstring's streaming
     tie-in, exercised for real microbatch by microbatch)."""
     from tests import fixtures as fx
@@ -549,8 +530,10 @@ def test_streaming_changelog_maintains_snapshot(spark, tmp_path):
     _pipe([fx.event("e1", "a1", "v1", 100), fx.event("e2", "a1", "v1", 50)])
     stream = file_stream_source(spark, src, schemas.EVENT, max_files_per_trigger=None)
 
+    store = SnapshotStore(spark, snap, "id", order="event_seq")
+
     def sink(batch_df, batch_id):
-        upsert_snapshot(spark, snap, batch_df, "id")
+        store.upsert(batch_df)
 
     q = start_foreach_batch_sink(
         stream, sink, checkpoint_dir=str(tmp_path / "ckpt")
@@ -565,8 +548,8 @@ def test_streaming_changelog_maintains_snapshot(spark, tmp_path):
            for r in spark.read.parquet(snap).collect()}
     assert got == {"e1": ("v9", 250), "e2": ("v1", 50)}
     # maintenance step: the store a foreachBatch sink maintains is the
-    # thing compact_store exists for — bin-pack it and re-check reads
-    compact_store(spark, snap)
+    # thing maintenance exists for — bin-pack it and re-check reads
+    store.maintain()
     got2 = {r["id"]: (r["venueid"], r["capacity"])
             for r in spark.read.parquet(snap).collect()}
     assert got2 == got
@@ -745,7 +728,7 @@ def test_versioned_store_soak_composition(spark, tmp_path):
     """The full production loop in ONE test (round-11 verdict #6):
     four streaming microbatches flow through append_versioned + an
     agg-view BatchStore of partials, a replay of the last batch is injected, then
-    maintain_store (compaction, idempotence pinned), a
+    SnapshotStore.maintain (compaction, idempotence pinned), a
     collapse_versioned at horizon 1, and an erase_keys sweep — and
     at EVERY surviving as-of point the store still reconstructs
     exactly the from-scratch Python fold (latest-wins by (batch,
@@ -756,7 +739,6 @@ def test_versioned_store_soak_composition(spark, tmp_path):
     from pyspark.sql import types as T
     from umn_eda_kafka_stream_processing_spark.operators.compaction import (
         erase_keys,
-        maintain_store,
     )
     from umn_eda_kafka_stream_processing_spark.operators.versioned import (
         append_versioned,
@@ -839,8 +821,9 @@ def test_versioned_store_soak_composition(spark, tmp_path):
     } == agg_before
 
     # maintenance: compaction touches once, then replays to zero
-    maintain_store(spark, vstore, "batch_id", target_files=1)
-    again = maintain_store(spark, vstore, "batch_id", target_files=1)
+    versions = SnapshotStore(spark, vstore, partition_by="batch_id")
+    versions.maintain(target_files=1)
+    again = versions.maintain(target_files=1)
     assert again["partitions_rewritten"] == 0 and again["rows_expired"] == 0
 
     # horizon collapse at batch 1, then a GDPR erasure of key 2

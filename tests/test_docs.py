@@ -1,8 +1,11 @@
 """README.md and PARITY.md cite only artifacts that are in the tree and
-state the catalog size the registry actually has."""
+state the catalog size the registry actually has; every ``path.py:name``
+citation in them and in CLAUDE.md names a real definition."""
 
 from __future__ import annotations
 
+import ast
+import functools
 import os
 import re
 
@@ -22,6 +25,10 @@ _CATALOG_COUNT = re.compile(
     r"(\d+)-query catalog|catalog(?:'s|\*\.py:) (\d+) queries"
     r"|all (\d+) (?:catalog )?queries",
     re.IGNORECASE,
+)
+# A code citation: ``[dir/]file.py:name`` or ``file.py:Class.method``.
+_CITATION = re.compile(
+    r"(?<![\w/.])((?:\w+/)*\w+\.py):([A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*)"
 )
 
 
@@ -67,3 +74,68 @@ def test_docs_state_the_registry_catalog_count():
         if n != len(REGISTRY)
     }
     assert not wrong, (len(REGISTRY), sorted(wrong))
+
+
+@functools.cache
+def _definitions(path: str) -> frozenset[str]:
+    """Top-level and nested function, class and assigned names of a
+    module, plus ``Class.method``."""
+    with open(path, encoding="utf-8") as f:
+        tree = ast.parse(f.read())
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+            if isinstance(node, ast.ClassDef):
+                names.update(
+                    f"{node.name}.{b.name}" for b in node.body
+                    if isinstance(b, (ast.FunctionDef, ast.AsyncFunctionDef))
+                )
+        elif isinstance(node, ast.Assign):
+            names.update(t.id for t in node.targets if isinstance(t, ast.Name))
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            names.add(node.target.id)
+    return frozenset(names)
+
+
+def _python_files() -> list[str]:
+    out = []
+    for base, dirs, files in os.walk(_ROOT):
+        dirs[:] = [d for d in dirs if not d.startswith(".") and d != "data"]
+        out += [
+            os.path.relpath(os.path.join(base, f), _ROOT)
+            for f in files if f.endswith(".py")
+        ]
+    return out
+
+
+def _unresolved(text: str, files: list[str]) -> list[str]:
+    bad = []
+    for path, name in _CITATION.findall(text):
+        hits = [f for f in files if f == path or f.endswith("/" + path)]
+        if not any(name in _definitions(os.path.join(_ROOT, f)) for f in hits):
+            bad.append(f"{path}:{name}")
+    return bad
+
+
+def test_citation_pattern_and_resolution():
+    files = _python_files()
+    assert _CITATION.findall(
+        "`stores.py:SnapshotStore.maintain`, operators/core.py:latest_by_key"
+        " and samples/PurchaseEventTicket.java:44-51"
+    ) == [("stores.py", "SnapshotStore.maintain"),
+          ("operators/core.py", "latest_by_key")]
+    assert _unresolved(
+        "stores.py:SnapshotStore.upsert tools/loc.py:code_lines "
+        "stores.py:upsert_snapshot nowhere.py:f", files
+    ) == ["stores.py:upsert_snapshot", "nowhere.py:f"]
+
+
+def test_doc_citations_name_real_definitions():
+    files = _python_files()
+    bad = {
+        (doc, cite)
+        for doc in _DOCS + ("CLAUDE.md",)
+        for cite in _unresolved(_text(doc), files)
+    }
+    assert not bad, sorted(bad)

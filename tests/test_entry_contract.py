@@ -42,17 +42,17 @@ def test_driver_gate_priority_fills_the_verified_slots():
     # ordering is a permutation, never a filter
     assert set(entrymod.queries()) == set(REGISTRY)
     # the real rotation invariant: every query that has never
-    # received a driver hash verdict (union of the committed
-    # CORRECTNESS_r*.json artifacts) must occupy a gate slot — a new
-    # query that overflows past the gate would never get verified
+    # received a driver hash verdict (the committed verified-names
+    # file, the union of the driver's correctness artifacts) must
+    # occupy a gate slot — a new query that overflows past the gate
+    # would never get verified
     import json
     import pathlib
 
-    verified: set[str] = set()
-    root = pathlib.Path(__file__).resolve().parent.parent
-    for artifact in sorted(root.glob("CORRECTNESS_r*.json")):
-        data = json.loads(artifact.read_text())
-        verified |= set(data.get("queries", data))
+    verified = set(json.loads(
+        (pathlib.Path(__file__).parent / "driver_verified_queries.json")
+        .read_text()
+    ))
     never = set(REGISTRY) - verified
     overflow = never - set(DRIVER_GATE_PRIORITY)
     assert not overflow, (

@@ -179,18 +179,18 @@ def test_snapshot_diff_matches_bruteforce(spark, rows):
 def test_compact_store_property_content_and_idempotence(
     spark, tmp_path_factory, rows, target_rows
 ):
-    """compact_store on random append-built stores: content exactly
+    """SnapshotStore.maintain on random append-built stores: content exactly
     preserved, per-bucket file counts land at <= ceil(rows/target),
     and a second compaction selects nothing."""
     import math
     import os
     from collections import Counter
 
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        compact_store,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     path = str(tmp_path_factory.mktemp("cs") / "store")
+    # keys for the split salt; no order column, so no latest-wins heal
+    store = SnapshotStore(spark, path, "id", "bucket")
     # one append per row — worst-case fragmentation
     for i, (k, b) in enumerate(rows):
         spark.createDataFrame(
@@ -200,10 +200,7 @@ def test_compact_store_property_content_and_idempotence(
         (r["id"], r["bucket"], r["seq"])
         for r in spark.read.parquet(path).collect()
     )
-    compact_store(
-        spark, path, partition_cols="bucket", key_cols="id",
-        target_rows=target_rows,
-    )
+    store.maintain(target_rows=target_rows)
     after = sorted(
         (r["id"], r["bucket"], r["seq"])
         for r in spark.read.parquet(path).collect()
@@ -216,11 +213,8 @@ def test_compact_store_property_content_and_idempotence(
             if f.endswith(".parquet")
         ]
         assert len(files) <= math.ceil(n / target_rows), (b, n, files)
-    replay = compact_store(
-        spark, path, partition_cols="bucket", key_cols="id",
-        target_rows=target_rows,
-    )
-    assert replay["buckets_compacted"] == 0
+    replay = store.maintain(target_rows=target_rows)
+    assert replay["partitions_rewritten"] == 0
     assert sorted(
         (r["id"], r["bucket"], r["seq"])
         for r in spark.read.parquet(path).collect()

@@ -1,6 +1,7 @@
 """The shared store layer (stores.py): crash injection over every store
 kind kept in a `BatchStore`, the concurrency helper's join-then-raise
-contract, and the advised pipeline's no-orphaned-write guarantee."""
+contract, the advised pipeline's no-orphaned-write guarantee, and the
+`SnapshotStore` absence rule (URI stores, empty first batches)."""
 
 from __future__ import annotations
 
@@ -302,3 +303,75 @@ def test_store_crash_injection_replay_equals_clean_run(
     _retain(kind, store)  # the replay
     assert _state(store) == clean
     assert not [n for n in store._names() if n.startswith("_fold_")]
+
+
+def test_seen_stores_read_back_through_a_uri(spark, tmp_path):
+    """A dedup seen-store given as a URI (file:///...) is read back like
+    a plain path: an exact duplicate arriving in a later batch is
+    dropped by both the SimHash and the semantic incremental dedup."""
+    from umn_eda_kafka_stream_processing_spark.operators.dedup import (
+        incremental_simhash_dedup,
+    )
+    from umn_eda_kafka_stream_processing_spark.operators.similarity import (
+        incremental_semantic_dedup,
+    )
+
+    text = " ".join("w%02d" % i for i in range(60))
+    store = (tmp_path / "simhash_seen").as_uri()
+    kept = [
+        incremental_simhash_dedup(
+            spark.createDataFrame([(i, text)], "doc_id long, text string"),
+            store,
+        ).count()
+        for i in (1, 2)
+    ]
+    assert kept == [1, 0]
+
+    centroids = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "bucket int, embedding array<double>"
+    )
+    store = (tmp_path / "semantic_seen").as_uri()
+    kept = [
+        incremental_semantic_dedup(
+            spark.createDataFrame(
+                [(i, [1.0, 0.1])], "vec_id long, embedding array<double>"
+            ),
+            store,
+            centroids,
+            tau=0.9,
+        ).count()
+        for i in (1, 2)
+    ]
+    assert kept == [1, 0]
+
+
+def test_incremental_op_after_an_empty_first_batch_equals_from_scratch(
+    spark, tmp_path
+):
+    """An empty first batch leaves no store behind (a zero-row write
+    would otherwise leave a directory with no schema, which the absence
+    rule refuses to read as empty), and the next real batch lands on
+    exactly the from-scratch result."""
+    import os
+    from datetime import datetime
+
+    from umn_eda_kafka_stream_processing_spark.operators.windows import (
+        incremental_retention,
+        retention_matrix_from_store,
+    )
+
+    schema = "user_id long, ts timestamp"
+    rows = [(1, datetime(2024, 3, 4)), (1, datetime(2024, 3, 12)),
+            (2, datetime(2024, 3, 5))]
+    resumed, fresh = str(tmp_path / "resumed"), str(tmp_path / "fresh")
+    incremental_retention(spark.createDataFrame([], schema), resumed, 0)
+    assert not os.path.exists(resumed)
+    incremental_retention(spark.createDataFrame(rows, schema), resumed, 1)
+    incremental_retention(spark.createDataFrame(rows, schema), fresh, 0)
+
+    def matrix(path):
+        return sorted(
+            tuple(r) for r in retention_matrix_from_store(spark, path).collect()
+        )
+
+    assert matrix(resumed) == matrix(fresh) != []

@@ -1800,21 +1800,18 @@ def test_global_table_join_enriches_without_fact_shuffle(spark, tmp_path):
     plan), (b) a snapshot upsert landing BETWEEN batches is visible
     to the next batch (the continuously-updated global store), and
     (c) leftJoin semantics: facts with no dim row pass with NULLs."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_snapshot,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
     from umn_eda_kafka_stream_processing_spark.streaming.global_table import (
         start_global_table_join,
     )
 
     snap = str(tmp_path / "dim_snapshot")
-    upsert_snapshot(
-        spark, snap,
+    dim = SnapshotStore(spark, snap, "user_id", order="event_seq")
+    dim.upsert(
         spark.createDataFrame(
             [(1, "BRAZIL", 1), (2, "CANADA", 1)],
             "user_id long, nation string, event_seq long",
-        ),
-        "user_id",
+        )
     )
 
     src = str(tmp_path / "facts")
@@ -1839,13 +1836,11 @@ def test_global_table_join_enriches_without_fact_shuffle(spark, tmp_path):
         assert sorted(out) == [(1, 10, "BRAZIL"), (2, 20, "CANADA")]
 
         # out-of-band snapshot maintenance: user 1 moves, user 3 appears
-        upsert_snapshot(
-            spark, snap,
+        dim.upsert(
             spark.createDataFrame(
                 [(1, "PERU", 2), (3, "JAPAN", 2)],
                 "user_id long, nation string, event_seq long",
-            ),
-            "user_id",
+            )
         )
         out.clear()
         pipe([(1, 30), (3, 40), (99, 50)])

@@ -6,20 +6,20 @@ One shared session, one trivial warmup query first (JVM/codegen), then
 per query: N noop-sink runs (run 0 is the recorded warmup, excluded
 from the median — it pays train-once session-cache builds). Prints
 walls per run plus the post-warmup median. Persisted RDDs are swept
-between runs, mirroring bench.py, so session caches rebuilt per run
-don't accumulate and medians stay comparable with BENCH_DETAIL.
+between runs by the same per-run function bench.py uses
+(`bench.noop_run`), so session caches rebuilt per run don't accumulate
+and medians stay comparable with BENCH_DETAIL.
 """
 
 from __future__ import annotations
 
-import gc
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import noop_run
 from umn_eda_kafka_stream_processing_spark.plans import REGISTRY
 from umn_eda_kafka_stream_processing_spark.session import get_spark
 
@@ -62,23 +62,12 @@ def main() -> None:
     runs, sf_dir, names = parse_args(sys.argv[1:])
     spark = get_spark(app_name="time-query")
     spark.sparkContext.setLogLevel("ERROR")
-    REGISTRY["user_event_count"].spark(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    noop_run(spark, "user_event_count", sf_dir)
     for name in names:
-        spec = REGISTRY[name]
         walls = []
         for r in range(runs):
             spark.sparkContext.setJobDescription(f"{name} run{r}")
-            t0 = time.time()
-            spec.spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            walls.append(time.time() - t0)
-            persisted = spark.sparkContext._jsc.getPersistentRDDs()
-            if persisted:
-                gc.collect()
-                for jrdd in persisted.values():
-                    jrdd.unpersist()
-                spark.sparkContext._jvm.System.gc()
+            walls.append(noop_run(spark, name, sf_dir))
         med = statistics.median(walls[1:]) if len(walls) > 1 else walls[0]
         print(
             f"{name}: walls={[round(w, 2) for w in walls]} "

@@ -186,13 +186,10 @@ def upsert_bm25_index(
 
     Per batch: ONE token explode + (id, term, tf) hash-agg; postings
     and doclens upserts touch only the batch's buckets. Bucket
-    values are stable per key — the upsert_snapshot no-move contract
-    holds."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_snapshot,
+    values are hashes of the stores' own keys, so no key ever moves."""
+    postings, doclens = _bm25_stores(
+        batch_df.sparkSession, index_dir, id_col, n_buckets
     )
-
-    spark = batch_df.sparkSession
     toks = batch_df.select(
         F.col(id_col),
         F.explode(
@@ -207,42 +204,32 @@ def upsert_bm25_index(
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
         .localCheckpoint()
     )
-    seq = F.lit(batch_seq).cast("long").alias("_seq")
-    upsert_snapshot(
-        spark,
-        f"{index_dir}/postings",
-        tf.select(
-            "term",
-            id_col,
-            "tf",
-            F.expr(f"pmod(hash(term), {n_buckets})").alias("_tb"),
-            seq,
-        ),
-        key_cols=["term", id_col],
-        order_col="_seq",
-        partition_cols=("_tb",),
-    )
-    doclens = (
+    postings.upsert(tf.select("term", id_col, "tf"), batch_seq)
+    doclens.upsert(
         batch_df.select(id_col)
         .join(
             tf.groupBy(id_col).agg(F.sum("tf").cast("long").alias("dl")),
             id_col,
             "left",
         )
-        .select(
-            id_col,
-            F.coalesce("dl", F.lit(0)).cast("long").alias("dl"),
-            F.expr(f"pmod(hash({id_col}), {n_buckets})").alias("_db"),
-            seq,
-        )
+        .select(id_col, F.coalesce("dl", F.lit(0)).cast("long").alias("dl")),
+        batch_seq,
     )
-    upsert_snapshot(
-        spark,
-        f"{index_dir}/doclens",
-        doclens,
-        key_cols=id_col,
-        order_col="_seq",
-        partition_cols=("_db",),
+
+
+def _bm25_stores(spark, index_dir: str, id_col: str, n_buckets: int):
+    """The index's two stores: ``postings`` (term, id, tf; bucket =
+    pmod(hash(term))) and ``doclens`` (id, dl; bucket = pmod(hash(id)))."""
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
+
+    return (
+        SnapshotStore(
+            spark, f"{index_dir}/postings", ["term", id_col], "_tb",
+            n_buckets=n_buckets, bucket_on="term",
+        ),
+        SnapshotStore(
+            spark, f"{index_dir}/doclens", id_col, "_db", n_buckets=n_buckets
+        ),
     )
 
 
@@ -269,23 +256,18 @@ def search_bm25_index(
     CURRENT stats; hot-path callers issuing many searches against a
     frozen store should batch their queries into one `queries` frame.
 
-    Raises ``ValueError`` on an empty index — uninitialized store
-    path, a store built only from empty batches (a partitioned write
-    of zero rows leaves a schema-less directory), or n_docs == 0:
-    scoring against ln of a negative ratio would otherwise surface
-    as silent NULL scores."""
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        doclens = spark.read.parquet(f"{index_dir}/doclens").select(
-            id_col, "dl"
-        )
-    except AnalysisException as e:
+    Raises ``ValueError`` on an empty index — an uninitialized store
+    (empty batches leave none behind) or n_docs == 0: scoring against
+    ln of a negative ratio would otherwise surface as silent NULL
+    scores."""
+    postings, lengths = _bm25_stores(spark, index_dir, id_col, n_buckets)
+    doclens = lengths.read()
+    if doclens is None:
         raise ValueError(
-            f"BM25 index at {index_dir!r} is empty or uninitialized "
-            "(no documents ingested yet) — cannot score against "
-            f"n_docs=0 ({getattr(e, 'getCondition', e.getErrorClass)()})"
-        ) from e
+            f"BM25 index at {index_dir!r} is uninitialized (no documents "
+            "ingested yet) — cannot score against n_docs=0"
+        )
+    doclens = doclens.select(id_col, "dl")
     stats = doclens.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("tt"),
@@ -296,19 +278,8 @@ def search_bm25_index(
             f"BM25 index at {index_dir!r} is empty (no documents "
             "ingested yet) — cannot score against n_docs=0"
         )
-    buckets = sorted(
-        {
-            r["b"]
-            for r in queries.select(
-                F.expr(f"pmod(hash(term), {n_buckets})").alias("b")
-            )
-            .distinct()
-            .collect()
-        }
-    )
     pruned = (
-        spark.read.parquet(f"{index_dir}/postings")
-        .where(F.col("_tb").isin(buckets))
+        postings.read(near=queries)
         .join(
             F.broadcast(queries.select("term").distinct()), "term", "semi"
         )

@@ -1,30 +1,14 @@
-"""Changelog → snapshot-table compaction (batch KTable materializer).
+"""What is built around the keyed snapshot store: change capture,
+layout, integrity and erasure.
 
-The reference materializes every KTable into a RocksDB store that
-lives as long as the app (builder.table(topic, Materialized.as(
-persistentKeyValueStore(...))), samples/PurchaseEventTicket.java:
-44-51). On a 100 TB lake the analogous durable object is a parquet
-SNAPSHOT TABLE maintained from an append-only changelog: upsert the
-latest version of each key, keep everything else untouched.
-
-Spark-first shape — no per-row writes, no driver loops:
-
-* compaction = ``latest_by_key`` (one hash-agg, map-side combined)
-  over old-snapshot ∪ changelog;
-* the write uses hive partitioning + DYNAMIC partition overwrite
-  (``spark.sql.sources.partitionOverwriteMode=dynamic``), so only
-  partitions that actually contain changed keys are rewritten — at
-  100 TB an upsert touching one day's keys rewrites one day's
-  directories, not the table;
-* untouched partitions are pruned from the read side too: the old
-  snapshot is semi-joined to the changelog's distinct partition
-  values (a PartitionFilters-eligible broadcast semi join), so the
-  compaction job reads only the partitions it will rewrite.
-
-Streaming tie-in: pass ``upsert_snapshot`` to foreachBatch to turn a
-streaming changelog into a continuously-maintained snapshot table
-(at-least-once; rewrites are idempotent because compaction is
-deterministic by (key, order_col)).
+The store itself — latest-wins upsert, TTL sweep, small-file compaction —
+is `stores.SnapshotStore`, this engine's KTable materialization
+(builder.table(topic, Materialized.as(persistentKeyValueStore(...))),
+samples/PurchaseEventTicket.java:44-51). This module holds the operators
+around it: `snapshot_diff` (snapshot → changelog, the inverse of the
+upsert's merge), the sorted and range-sharded exports with their
+zone-map manifests, the Z-order/Hilbert layout keys, anti-entropy
+partition checksums and the key-erasure sweep.
 """
 
 from __future__ import annotations
@@ -33,634 +17,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
-from umn_eda_kafka_stream_processing_spark.operators.core import latest_by_key
-from umn_eda_kafka_stream_processing_spark.stores import hadoop_fs, read_or_empty
-
-
-def compact_changelog(
-    snapshot: DataFrame | None,
-    changelog: DataFrame,
-    key_cols: str | Sequence[str],
-    order_col: str = "event_seq",
-) -> DataFrame:
-    """Latest row per key across old snapshot + new changelog.
-
-    The snapshot must already be one-row-per-key; ties on
-    ``order_col`` resolve to the changelog row (upsert overwrites),
-    implemented by tagging sides rather than trusting input order.
-    """
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    tagged_new = changelog.withColumn("_src", F.lit(1))
-    if snapshot is None:
-        merged = tagged_new
-    else:
-        merged = snapshot.withColumn("_src", F.lit(0)).unionByName(tagged_new)
-    # order by (order_col, _src): equal sequence numbers prefer the
-    # changelog side — matches KTable re-pipe-overwrites semantics
-    compacted = latest_by_key(
-        merged, keys, F.struct(F.col(order_col), F.col("_src"))
-    )
-    return compacted.drop("_src")
-
-
-def _delete_partitions(
-    spark: SparkSession, table_path: str, subdirs: Sequence[str]
-) -> None:
-    """Delete partition directories (``c=v`` or nested ``c=v/d=w``)
-    the job emptied: dynamic overwrite only replaces partitions the job
-    WRITES, so a partition whose last row went away must go explicitly."""
-    if not subdirs:
-        return
-    fs, _, jvm = hadoop_fs(spark, table_path)
-    for sub in subdirs:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{table_path}/{sub}"), True)
-
-
-def upsert_snapshot(
-    spark: SparkSession,
-    table_path: str,
-    changelog: DataFrame,
-    key_cols: str | Sequence[str],
-    order_col: str = "event_seq",
-    partition_cols: Sequence[str] = (),
-    write_coalesce: int | None = None,
-) -> DataFrame:
-    """Upsert a changelog into the parquet snapshot at table_path.
-
-    Returns the compacted frame it wrote (checkpointed when a merge
-    happened), so a caller that needs the post-upsert snapshot — the
-    FK join's emission path — can reuse it instead of re-listing the
-    store it just overwrote. With ``partition_cols`` the returned
-    frame covers only the touched partitions (the full snapshot has
-    untouched partitions too — re-read the path if those are needed).
-
-    With ``partition_cols``, only partitions present in the changelog
-    are read, compacted, and dynamically overwritten. Without them,
-    the whole (assumed modest — a dimension/KTable, not the fact
-    lake) snapshot is rewritten.
-
-    CONTRACT: a key's partition values must be stable (the usual
-    date/tenant layout). If an update can MOVE a key across
-    partitions, the old partition is never read here and would keep
-    a stale copy — use the move-aware variant
-    (``operators/similarity.py:upsert_ivf_index``) as the template:
-    it widens the read set to partitions holding the batch's keys
-    and drops partitions the merge emptied.
-    """
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    partition_cols = list(partition_cols)
-    try:
-        old = spark.read.parquet(table_path)
-    except AnalysisException:  # first write: no snapshot yet
-        old = None
-
-    if old is not None and partition_cols:
-        touched = changelog.select(*partition_cols).distinct()
-        # broadcast semi join on partition values: planned as
-        # partition pruning, so untouched directories are never read
-        old = old.join(F.broadcast(touched), partition_cols, "left_semi")
-
-    compacted = compact_changelog(old, changelog, keys, order_col)
-    if old is not None:
-        # the plan reads the same path it overwrites — materialize
-        # the merge first or the overwrite would delete its own input
-        compacted = compacted.localCheckpoint()
-
-    if write_coalesce:
-        # register/decision-sized stores (<= ~1024 rows per batch):
-        # without this the merge's shuffle partitioning writes ~32
-        # near-empty files per upsert — task and file-count floor,
-        # not data (round-12 verdict on the advised census's wall).
-        # repartition, not coalesce (the ~5-7 s one-task stall).
-        # NEVER set for data-sized stores: it serializes the write.
-        # With partition_cols, cluster BY the partition key (guide §6:
-        # rebalance on the partition column before a partitioned
-        # write): a round-robin repartition would still scatter every
-        # directory across all write tasks — tasks x dirs tiny files,
-        # and every later partition-pruned read pays the listing.
-        if partition_cols:
-            compacted = compacted.repartition(
-                int(write_coalesce), *[F.col(c) for c in partition_cols]
-            )
-        else:
-            compacted = compacted.repartition(int(write_coalesce))
-    writer = compacted.write.mode("overwrite")
-    if partition_cols:
-        # dynamic mode replaces ONLY the partitions this job writes
-        writer = writer.partitionBy(*partition_cols).option(
-            "partitionOverwriteMode", "dynamic"
-        )
-    writer.parquet(table_path)
-    # drop the session's cached file listing for the path: the old
-    # (now deleted) part files otherwise stay visible to future reads
-    spark.catalog.refreshByPath(table_path)
-    return compacted
-
-
-def upsert_bucket_partitioned(
-    spark: SparkSession,
-    table_path: str,
-    changelog: DataFrame,
-    id_col: str,
-    order_col: str,
-    bucket_col: str,
-) -> None:
-    """Key-compacting upsert into a BUCKET-partitioned parquet store
-    where an update may MOVE a key across partitions (the case
-    ``upsert_snapshot``'s contract excludes): IVF/IVFPQ vector indexes
-    (a re-embedded vector changes buckets), the FK-join left store
-    (an update can change the row's foreign key, hence its
-    pmod(hash(fk), N) partition).
-
-    Move-aware read set: partitions receiving new rows ∪ partitions
-    holding an updated key's OLD row — so the compaction merge always
-    sees (and therefore removes) the stale copy. Partitions the merge
-    emptied are deleted explicitly (dynamic overwrite only replaces
-    partitions the job writes). Touched-partition pruning keeps the
-    job O(|touched|), never O(|table|).
-    """
-    emptied: set = set()
-    try:
-        old = spark.read.parquet(table_path)
-    except AnalysisException:
-        old = None
-
-    if old is None:
-        merged = compact_changelog(None, changelog, id_col, order_col)
-    else:
-        batch_keys = changelog.select(id_col).distinct()
-        # collected BEFORE the overwrite — bucket ids are tiny, and
-        # any plan that still references `old` after the write would
-        # re-list the deleted part files
-        touched_buckets = {
-            r[bucket_col]
-            for r in (
-                changelog.select(bucket_col)
-                .unionByName(
-                    old.join(F.broadcast(batch_keys), id_col, "left_semi")
-                    .select(bucket_col)
-                )
-                .distinct()
-                .collect()
-            )
-        }
-        old_touched = old.filter(
-            F.col(bucket_col).isin(*touched_buckets)
-            if touched_buckets else F.lit(False)
-        )
-        merged = compact_changelog(
-            old_touched, changelog, id_col, order_col
-        ).localCheckpoint()
-        # a touched bucket whose last row moved away produces no
-        # output, so its stale directory would survive the dynamic
-        # overwrite — drop it explicitly (merged is checkpointed, so
-        # this collect is safe)
-        written = {
-            r[bucket_col]
-            for r in merged.select(bucket_col).distinct().collect()
-        }
-        emptied = touched_buckets - written
-
-    (
-        merged.write.mode("overwrite")
-        .partitionBy(bucket_col)
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(table_path)
-    )
-
-    _delete_partitions(
-        spark, table_path, [f"{bucket_col}={b}" for b in emptied]
-    )
-
-    # the session's shared FileStatusCache still lists the replaced
-    # files; without this, the next read of the store can hit
-    # FILE_NOT_EXIST on the overwritten partitions
-    spark.catalog.refreshByPath(table_path)
-
-
-def _partition_dir(parts: list, row) -> str:
-    """Relative directory of one partition — nested for multi-column
-    layouts (``c=v/d=w``)."""
-    return "/".join(f"{c}={row[c]}" for c in parts)
-
-
-def _partition_selector(parts: list, chosen) -> Column:
-    """Partition-pruning predicate for a bounded set of partition
-    tuples. Single column: a plain isin. Multi column: an OR of
-    per-tuple conjuncts — struct(...).isin(python tuples) raises
-    UNSUPPORTED_FEATURE.LITERAL_TYPE, and the chosen set is bounded
-    (one term per directory to rewrite) so the predicate stays small
-    and PartitionFilters-eligible."""
-    if len(parts) == 1:
-        return F.col(parts[0]).isin(*[r[parts[0]] for r in chosen])
-    sel = F.lit(False)
-    for r in chosen:
-        conj = F.lit(True)
-        for c in parts:
-            conj = conj & (F.col(c) == F.lit(r[c]))
-        sel = sel | conj
-    return sel
-
-
-def compact_store(
-    spark: SparkSession,
-    table_path: str,
-    partition_cols: str | Sequence[str] = (),
-    key_cols: str | Sequence[str] = (),
-    order_col: str | None = None,
-    target_files: int = 1,
-    target_rows: int | None = None,
-) -> dict:
-    """Small-file compaction for the incremental parquet stores — the
-    production maintenance half of the foreachBatch + ``upsert_
-    snapshot`` / ``upsert_bucket_partitioned`` pattern (reference
-    analogue: RocksDB's own background compaction under every KTable
-    store, samples/PurchaseEventTicket.java:44-51).
-
-    Every microbatch upsert rewrites its touched buckets as one file
-    PER SHUFFLE TASK holding that bucket's rows, and append-mode
-    stores (the dedup seen-hash store) add files monotonically — after
-    thousands of batches a "partition-pruned" read still pays one
-    file-open per tiny file. This op bin-packs each over-fragmented
-    bucket back to a bounded file count, touching nothing else:
-
-    * file census is DISTRIBUTED — one column-pruned scan grouping the
-      hidden ``_metadata.file_path`` by bucket (never a driver FS
-      walk, which at 100 TB is the slower and rate-limited path);
-    * a bucket is rewritten only when its file count EXCEEDS its
-      target (``target_files``, or ``ceil(rows / target_rows)`` when
-      ``target_rows`` is given) — so re-running compaction on a
-      compacted store selects zero buckets and is a no-op (idempotent,
-      safe to schedule blindly after every N batches);
-    * the rewrite reads ONLY selected buckets (partition-pruned
-      ``isin`` filter), optionally re-applies the latest-wins merge
-      (pass ``key_cols`` + ``order_col``; a correctly-maintained
-      store makes this a no-op, but it heals duplicate keys a crashed
-      double-write could have left), repartitions so each bucket
-      lands in exactly its target file count, and dynamically
-      overwrites only those bucket directories;
-    * multi-file buckets split on ``pmod(hash(key_cols), k)`` — the
-      salt hashes ONLY the key columns (MapType payloads make
-      ``hash(*)`` raise, and payload edits must not move rows between
-      files gratuitously — round-8 fuzzy-join lesson).
-
-    Content is preserved exactly: the default path rewrites rows
-    byte-identically (no dedup, no reorder semantics — parquet row
-    order within a store is already meaningless to every reader,
-    which goes through ``latest_by_key``-shaped queries).
-
-    Returns a stats dict: ``buckets_total``, ``buckets_compacted``,
-    ``files_before``, ``files_after`` (census of the rewritten
-    buckets), ``rows`` (rows rewritten).
-    """
-    parts = [partition_cols] if isinstance(partition_cols, str) else list(partition_cols)
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    if target_files < 1:
-        raise ValueError(f"target_files must be >= 1, got {target_files}")
-    store = spark.read.parquet(table_path)
-    gcols = parts or ["_all"]
-    group = (
-        [F.col(c) for c in parts] if parts else [F.lit(0).alias("_all")]
-    )
-    census = (
-        store.select(*group, F.col("_metadata.file_path").alias("_file"))
-        .groupBy(*gcols)
-        .agg(
-            F.countDistinct("_file").cast("long").alias("_files"),
-            F.count(F.lit(1)).cast("long").alias("_rows"),
-        )
-    )
-    if target_rows is not None:
-        want = F.greatest(F.lit(1), F.ceil(F.col("_rows") / F.lit(target_rows)))
-    else:
-        want = F.lit(target_files)
-    census = census.withColumn("_want", want.cast("long"))
-    # bucket ids + targets are tiny (one row per partition directory)
-    rows = census.collect()
-    chosen = [r for r in rows if r["_files"] > r["_want"]]
-    stats = {
-        "buckets_total": len(rows),
-        "buckets_compacted": len(chosen),
-        "files_before": int(sum(r["_files"] for r in chosen)),
-        "files_after": 0,
-        "rows": 0,
-    }
-    if not chosen:
-        return stats
-    touched = store.filter(_partition_selector(parts, chosen)) if parts else store
-    if keys and order_col:
-        # heal-duplicates mode: latest-wins recompaction (no-op on a
-        # correctly-maintained store, exactness under crash replays)
-        touched = compact_changelog(None, touched, keys, order_col)
-    max_want = max(int(r["_want"]) for r in chosen)
-    if max_want > 1:
-        if not keys:
-            raise ValueError(
-                "target file counts > 1 need key_cols for the split salt"
-            )
-        # per-bucket k via a broadcast map of bucket -> want; rows of
-        # one (bucket, salt) land in one task -> exactly k files
-        want_map = {tuple(r[c] for c in parts): int(r["_want"]) for r in chosen} if parts else {}
-        if parts:
-            k_expr = F.lit(1)
-            for bkt, k in want_map.items():
-                cond = F.lit(True)
-                for c, v in zip(parts, bkt):
-                    cond = cond & (F.col(c) == F.lit(v))
-                k_expr = F.when(cond, F.lit(k)).otherwise(k_expr)
-        else:
-            k_expr = F.lit(max_want)
-        salt = F.pmod(F.hash(*[F.col(k) for k in keys]), k_expr)
-        touched = touched.withColumn("_salt", salt)
-        out = touched.repartition(
-            max(len(chosen) * max_want, 1),
-            *( [F.col(c) for c in parts] + [F.col("_salt")] ),
-        ).drop("_salt")
-    else:
-        # every row of a bucket in one task; partitionBy then writes
-        # exactly one file per bucket directory
-        out = touched.repartition(
-            max(len(chosen), 1),
-            *(([F.col(c) for c in parts]) or [F.lit(0)]),
-        )
-    # the plan reads the same directories it overwrites
-    out = out.localCheckpoint()
-    stats["rows"] = out.count()
-    writer = out.write.mode("overwrite")
-    if parts:
-        writer = writer.partitionBy(*parts).option(
-            "partitionOverwriteMode", "dynamic"
-        )
-    writer.parquet(table_path)
-    spark.catalog.refreshByPath(table_path)
-    after = (
-        spark.read.parquet(table_path)
-        .select(*group, F.col("_metadata.file_path").alias("_file"))
-    )
-    if parts:
-        after = after.filter(_partition_selector(parts, chosen))
-    stats["files_after"] = after.select("_file").distinct().count()
-    return stats
-
-
-def expire_snapshot(
-    spark: SparkSession,
-    table_path: str,
-    ts_col: str,
-    cutoff,
-    partition_cols: str | Sequence[str] = (),
-) -> dict:
-    """TTL / retention sweep for a parquet snapshot store: delete rows
-    whose ``ts_col`` is strictly below ``cutoff`` — the batch-store
-    analogue of the streaming KTable TTL (streaming/stateful.py; the
-    reference expires idle keys from its RocksDB stores the same way)
-    and the GDPR-retention maintenance shape.
-
-    Partition-pruned like `compact_store`: one column-pruned census
-    (min ts per partition directory, via the distributed
-    ``_metadata.file_path``-free group — min/ts only) selects ONLY
-    partitions that actually hold expired rows; those are re-read
-    (partition-pruned ``isin``), filtered, and dynamically
-    overwritten. A partition the sweep empties entirely is deleted
-    explicitly (dynamic overwrite only replaces partitions the job
-    writes — the `upsert_bucket_partitioned` rule). Untouched
-    partitions' files are never opened for rewrite, never rewritten.
-    Idempotent: a second sweep with the same cutoff selects nothing.
-
-    Returns stats: ``partitions_total``, ``partitions_touched``,
-    ``rows_expired``, ``rows_kept`` (of touched partitions),
-    ``partitions_deleted``.
-    """
-    parts = [partition_cols] if isinstance(partition_cols, str) else list(partition_cols)
-    store = spark.read.parquet(table_path)
-    # accept a Column so TIMESTAMP_NTZ cutoffs can be passed as typed
-    # literals (F.lit(datetime) builds a TZ timestamp — the CLAUDE.md
-    # NTZ rule)
-    cut = cutoff if isinstance(cutoff, Column) else F.lit(cutoff)
-    gcols = parts or ["_all"]
-    group = (
-        [F.col(c) for c in parts] if parts else [F.lit(0).alias("_all")]
-    )
-    census = (
-        store.select(*group, F.col(ts_col).alias("_ts"))
-        .groupBy(*gcols)
-        .agg(
-            F.sum((F.col("_ts") < cut).cast("long")).alias("_exp"),
-            F.count(F.lit(1)).cast("long").alias("_rows"),
-        )
-        .collect()
-    )
-    chosen = [r for r in census if int(r["_exp"] or 0) > 0]
-    stats = {
-        "partitions_total": len(census),
-        "partitions_touched": len(chosen),
-        "rows_expired": int(sum(r["_exp"] for r in chosen)),
-        "rows_kept": int(sum(r["_rows"] - r["_exp"] for r in chosen)),
-        "partitions_deleted": 0,
-    }
-    if not chosen:
-        return stats
-    touched = store.filter(_partition_selector(parts, chosen)) if parts else store
-    # NULL ts must route like CASE-ELSE (kept): the census's sum skips
-    # NULL (counted as not-expired), so the rewrite must keep the row
-    # too — a bare ~(ts < cut) is NULL for NULL ts and silently drops
-    # it, making stats and stored data disagree (the CLAUDE.md
-    # "filters must coalesce to false" trap)
-    kept = touched.filter(
-        ~F.coalesce(F.col(ts_col) < cut, F.lit(False))
-    ).localCheckpoint()
-    emptied = [
-        r for r in chosen if int(r["_rows"]) == int(r["_exp"])
-    ]
-    writer = kept.write.mode("overwrite")
-    if parts:
-        writer = writer.partitionBy(*parts).option(
-            "partitionOverwriteMode", "dynamic"
-        )
-        writer.parquet(table_path)
-        _delete_partitions(
-            spark, table_path, [_partition_dir(parts, r) for r in emptied]
-        )
-        stats["partitions_deleted"] = len(emptied)
-    else:
-        writer.parquet(table_path)
-    spark.catalog.refreshByPath(table_path)
-    return stats
-
-
-def maintain_store(
-    spark: SparkSession,
-    table_path: str,
-    partition_cols: str | Sequence[str] = (),
-    ttl: "tuple | None" = None,
-    target_files: int = 1,
-    target_rows: int | None = None,
-    key_cols: str | Sequence[str] = (),
-    order_col: str | None = None,
-) -> dict:
-    """One-call store maintenance — the TTL sweep (`expire_snapshot`)
-    and the small-file compaction (`compact_store`) fused into ONE
-    census pass and ONE rewrite per touched partition (separately
-    they each scan the store and each rewrite partitions both would
-    touch; the scheduled maintenance step should pay once).
-
-    * ``ttl``: optional ``(ts_col, cutoff)`` — rows with ts strictly
-      below cutoff expire (NULL ts rows are KEPT, the coalesce-to-
-      false rule; cutoff may be a Column for TIMESTAMP_NTZ literals);
-    * ``target_files`` / ``target_rows``: per-partition file-count
-      target, computed on the POST-TTL row count (a partition whose
-      survivors fit one file compacts to one file in the same
-      rewrite that expired its rows);
-    * ``key_cols`` + ``order_col``: optional latest-wins heal (the
-      `compact_store` crash-duplicate repair) applied to rewritten
-      partitions.
-
-    The single distributed census groups the hidden
-    ``_metadata.file_path`` AND the TTL predicate per partition
-    directory (one column-pruned scan, never a driver FS walk); a
-    partition is rewritten iff it holds expired rows OR exceeds its
-    file target, partition-pruned exactly like the parent ops;
-    partitions the sweep empties are deleted explicitly. Follows the
-    family shape: census → bounded chosen set → partition-pruned
-    rewrite → idempotent replay (a second call selects ZERO
-    partitions — pinned by the catalog census).
-
-    Returns merged stats: ``partitions_total``, ``rows_expired``,
-    ``partitions_expired``, ``partitions_deleted``,
-    ``partitions_rewritten``, ``files_before``, ``files_after``,
-    ``rows_rewritten``.
-    """
-    parts = (
-        [partition_cols]
-        if isinstance(partition_cols, str)
-        else list(partition_cols)
-    )
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    if target_files < 1:
-        raise ValueError(f"target_files must be >= 1, got {target_files}")
-    if ttl is not None:
-        ts_col, cutoff = ttl
-        cut = cutoff if isinstance(cutoff, Column) else F.lit(cutoff)
-        exp_expr = F.sum(
-            (F.col(ts_col) < cut).cast("long")
-        )
-    else:
-        ts_col, cut = None, None
-        exp_expr = F.sum(F.lit(0).cast("long"))
-    store = spark.read.parquet(table_path)
-    gcols = parts or ["_all"]
-    group = (
-        [F.col(c) for c in parts] if parts else [F.lit(0).alias("_all")]
-    )
-    census = (
-        store.select(
-            *group,
-            F.col("_metadata.file_path").alias("_file"),
-            *([F.col(ts_col)] if ts_col else []),
-        )
-        .groupBy(*gcols)
-        .agg(
-            F.countDistinct("_file").cast("long").alias("_files"),
-            F.count(F.lit(1)).cast("long").alias("_rows"),
-            F.coalesce(exp_expr, F.lit(0)).cast("long").alias("_exp"),
-        )
-    )
-    if target_rows is not None:
-        want = F.greatest(
-            F.lit(1),
-            F.ceil((F.col("_rows") - F.col("_exp")) / F.lit(target_rows)),
-        )
-    else:
-        want = F.lit(target_files)
-    census = census.withColumn("_want", want.cast("long"))
-    rows = census.collect()  # one row per partition directory (bounded)
-    emptied = [r for r in rows if r["_exp"] == r["_rows"]]
-    empty_set = {tuple(r[c] for c in parts) for r in emptied} if parts else set()
-    chosen = [
-        r
-        for r in rows
-        if (r["_exp"] > 0 or r["_files"] > r["_want"])
-        and tuple(r[c] for c in parts) not in empty_set
-    ] if parts else [
-        r for r in rows if r["_exp"] > 0 or r["_files"] > r["_want"]
-    ]
-    stats = {
-        "partitions_total": len(rows),
-        "rows_expired": int(sum(r["_exp"] for r in rows)),
-        "partitions_expired": sum(1 for r in rows if r["_exp"] > 0),
-        "partitions_deleted": 0,
-        "partitions_rewritten": len(chosen),
-        "files_before": int(sum(r["_files"] for r in chosen)),
-        "files_after": 0,
-        "rows_rewritten": 0,
-    }
-    if parts and emptied:
-        _delete_partitions(
-            spark, table_path, [_partition_dir(parts, r) for r in emptied]
-        )
-        stats["partitions_deleted"] = len(emptied)
-        spark.catalog.refreshByPath(table_path)
-        store = spark.read.parquet(table_path) if chosen else store
-    if not chosen:
-        return stats
-    # (an unpartitioned fully-expired store lands in `chosen` — its
-    # rewrite below overwrites the store with the empty survivor set)
-    touched = (
-        store.filter(_partition_selector(parts, chosen)) if parts else store
-    )
-    if ts_col is not None:
-        touched = touched.filter(
-            ~F.coalesce(F.col(ts_col) < cut, F.lit(False))
-        )
-    if keys and order_col:
-        touched = compact_changelog(None, touched, keys, order_col)
-    max_want = max(int(r["_want"]) for r in chosen)
-    if max_want > 1:
-        if not keys:
-            raise ValueError(
-                "target file counts > 1 need key_cols for the split salt"
-            )
-        if parts:
-            k_expr: Column = F.lit(1)
-            for r in chosen:
-                cond = F.lit(True)
-                for c in parts:
-                    cond = cond & (F.col(c) == F.lit(r[c]))
-                k_expr = F.when(cond, F.lit(int(r["_want"]))).otherwise(k_expr)
-        else:
-            k_expr = F.lit(max_want)
-        salt = F.pmod(F.hash(*[F.col(k) for k in keys]), k_expr)
-        out = (
-            touched.withColumn("_salt", salt)
-            .repartition(
-                max(len(chosen) * max_want, 1),
-                *([F.col(c) for c in parts] + [F.col("_salt")]),
-            )
-            .drop("_salt")
-        )
-    else:
-        out = touched.repartition(
-            max(len(chosen), 1),
-            *(([F.col(c) for c in parts]) or [F.lit(0)]),
-        )
-    out = out.localCheckpoint()  # reads the directories it overwrites
-    stats["rows_rewritten"] = out.count()
-    writer = out.write.mode("overwrite")
-    if parts:
-        writer = writer.partitionBy(*parts).option(
-            "partitionOverwriteMode", "dynamic"
-        )
-    writer.parquet(table_path)
-    spark.catalog.refreshByPath(table_path)
-    after = spark.read.parquet(table_path).select(
-        *group, F.col("_metadata.file_path").alias("_file")
-    )
-    if parts:
-        after = after.filter(_partition_selector(parts, chosen))
-    stats["files_after"] = after.select("_file").distinct().count()
-    return stats
+from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
 
 def snapshot_diff(
@@ -674,7 +32,7 @@ def snapshot_diff(
     ``change`` in {'inserted', 'deleted', 'updated', 'unchanged'} —
     the diff an incremental pipeline publishes when a store is
     rebuilt (snapshot-to-changelog, the inverse of
-    `compact_changelog`).
+    `stores.compact_changelog`).
 
     ``compare_cols`` limits which columns define 'updated' (default:
     every shared non-key column). Comparison is null-safe (``<=>``),
@@ -821,7 +179,7 @@ def zonemap_select(
     quantifies the difference.
 
     Driver-side on purpose: the manifest is <= n_files rows (the same
-    bounded-collect class as compact_store's census) and the output
+    bounded-collect class as `SnapshotStore.maintain`'s census) and the output
     feeds ``spark.read.parquet(*files)``, a plan-time decision."""
     out = []
     for m in manifest:
@@ -1128,16 +486,16 @@ def erase_keys(
     """Key-erasure sweep (the GDPR right-to-be-forgotten pass): remove
     every row whose ``key_col`` appears in ``keys`` from the
     partitioned parquet store, rewriting ONLY partitions that
-    actually hold such rows.
+    actually hold such rows (`stores.SnapshotStore.erase`).
 
     Shape: one semi-join census finds the touched partition values
     (bounded collect — partition dirs, not rows), a partition-pruned
     read anti-joins the keys out (the erasure set broadcasts — a
     deletion request batch is dim-sized), dynamic overwrite replaces
     exactly the touched directories, and directories the erasure
-    emptied are deleted explicitly (the upsert_bucket_partitioned
-    rule: dynamic overwrite only replaces partitions the job WRITES).
-    Idempotent: a second sweep with the same keys touches nothing.
+    emptied are deleted explicitly (dynamic overwrite only replaces
+    partitions the job WRITES). Idempotent: a second sweep with the
+    same keys touches nothing.
 
     NOTE: this erases the CURRENT store only. Versioned/changelog
     stores (operators/versioned.py) additionally need the history
@@ -1151,62 +509,10 @@ def erase_keys(
     erase" sweep (a never-written store is legitimately empty); any
     other read failure — wrong schema, corrupt footer, permission —
     RE-RAISES: a compliance sweep must never report success against
-    a store it could not actually read (round-11 advice).
+    a store it could not actually read.
     """
-    parts = (
-        [partition_cols]
-        if isinstance(partition_cols, str)
-        else list(partition_cols)
-    )
-    nothing = {
-        "partitions_touched": 0,
-        "rows_removed": 0,
-        "rows_kept": 0,
-        "partitions_emptied": 0,
-    }
-    store = read_or_empty(lambda: spark.read.parquet(table_path), None)
-    if store is None:
-        return nothing
-    kd = keys.select(F.col(keys.columns[0]).alias(key_col)).distinct()
-    touched_rows = (
-        store.join(F.broadcast(kd), key_col, "left_semi")
-        .select(*parts)
-        .distinct()
-        .collect()
-    )
-    touched = [tuple(r[c] for c in parts) for r in touched_rows]
-    if not touched:
-        return nothing
-    sel = _partition_selector(parts, touched_rows)
-    touched_df = store.filter(sel)
-    n_before = touched_df.count()
-    kept = touched_df.join(
-        F.broadcast(kd), key_col, "left_anti"
-    ).localCheckpoint()
-    n_kept = kept.count()
-    (
-        kept.write.mode("overwrite")
-        .partitionBy(*parts)
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(table_path)
-    )
-    written = {
-        tuple(r[c] for c in parts)
-        for r in kept.select(*parts).distinct().collect()
-    }
-    emptied = [t for t in touched if t not in written]
-    _delete_partitions(
-        spark,
-        table_path,
-        [_partition_dir(parts, dict(zip(parts, t))) for t in emptied],
-    )
-    spark.catalog.refreshByPath(table_path)
-    return {
-        "partitions_touched": len(touched),
-        "rows_removed": int(n_before - n_kept),
-        "rows_kept": int(n_kept),
-        "partitions_emptied": len(emptied),
-    }
+    store = SnapshotStore(spark, table_path, partition_by=partition_cols)
+    return store.erase(keys, key_col)
 
 
 def equidepth_bounds(

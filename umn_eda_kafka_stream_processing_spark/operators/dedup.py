@@ -1274,11 +1274,12 @@ def incremental_simhash_dedup(
     Wire with streaming/runner.py:start_foreach_batch_sink:
     ``lambda b, _id: sink(incremental_simhash_dedup(b, store))``.
     Exactly-once admission requires an idempotent downstream sink
-    (foreachBatch is at-least-once on replay).
+    (foreachBatch is at-least-once on replay). The store path may be
+    any Hadoop URI (file:, hdfs://, s3a://).
     """
-    import os
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
-    spark = batch_df.sparkSession
+    store = SnapshotStore(batch_df.sparkSession, seen_store_path)
     sigs = simhash64(batch_df, text_col, id_col).localCheckpoint()
     # 1. in-batch near-pairs: drop the larger id of each pair
     pairs = _sig_near_pairs(sigs, id_col, max_hamming)
@@ -1289,10 +1290,8 @@ def incremental_simhash_dedup(
         id_col,
         F.posexplode(F.array("c0", "c1", "c2", "c3")).alias("chunk_idx", "chunk_val"),
     )
-    if os.path.isdir(seen_store_path) and any(
-        f.endswith(".parquet") for f in os.listdir(seen_store_path)
-    ):
-        seen = spark.read.parquet(seen_store_path)
+    seen = store.read()
+    if seen is not None:
         hit = keys.join(seen, ["chunk_idx", "chunk_val"], "left_semi").select(
             id_col
         ).distinct()
@@ -1302,9 +1301,13 @@ def incremental_simhash_dedup(
     # while appending to it would race the file listing
     survivors = survivors.localCheckpoint()
     # 3. admit the fresh docs' buckets
-    survivors.select(
-        F.posexplode(F.array("c0", "c1", "c2", "c3")).alias("chunk_idx", "chunk_val")
-    ).distinct().write.mode("append").parquet(seen_store_path)
+    store.append(
+        survivors.select(
+            F.posexplode(F.array("c0", "c1", "c2", "c3")).alias(
+                "chunk_idx", "chunk_val"
+            )
+        ).distinct()
+    )
     return survivors.select(id_col).join(batch_df, id_col).select(*batch_df.columns)
 
 
@@ -1698,7 +1701,7 @@ def incremental_span_dedup(
 
     The store is md5(span)-keyed parquet, hash-bucket-partitioned
     like the incremental semantic-dedup store; a key's bucket never
-    moves, so `compaction.upsert_snapshot` (touched-partition
+    moves, so a `stores.SnapshotStore` upsert (touched-partition
     pruned dynamic overwrite) maintains it — with ``_ord = -keeper``
     as the order column, so the compaction's latest-wins becomes
     MIN-keeper-wins. The lookup is one shuffle-hash join on the
@@ -1712,15 +1715,14 @@ def incremental_span_dedup(
     Output: the batch docs with (id, text, rewritten, chars_removed,
     runs_merged, runs_cut) — `remove_shared_spans`' schema.
     """
-    from pyspark.sql.utils import AnalysisException
-
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_snapshot,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     if min_run_len is None:
         min_run_len = span_len
-    spark = batch_df.sparkSession
+    store = SnapshotStore(
+        batch_df.sparkSession, span_store_path, "h", "_bkt", order="_ord",
+        n_buckets=n_buckets,
+    )
     w = (
         _span_windows(batch_df, id_col, text_col, span_len)
         .withColumn("h", F.md5("span"))
@@ -1728,14 +1730,12 @@ def incremental_span_dedup(
         .localCheckpoint()
     )
     bstats = w.groupBy("h").agg(F.min(id_col).alias("_bmin"))
-    try:
-        store = spark.read.parquet(span_store_path).select("h", "keeper")
-    except AnalysisException:
-        store = None
-    if store is None:
+    seen = store.read()
+    if seen is None:
         hit = bstats.select("h", F.col("_bmin").alias("_kc"))
     else:
-        hit = bstats.join(store.hint("shuffle_hash"), "h", "left").select(
+        seen = seen.select("h", "keeper")
+        hit = bstats.join(seen.hint("shuffle_hash"), "h", "left").select(
             "h",
             F.least(
                 F.coalesce("keeper", F.col("_bmin")), F.col("_bmin")
@@ -1753,16 +1753,8 @@ def incremental_span_dedup(
         batch_df.select(id_col, text_col), rem, id_col, text_col,
         span_len, min_run_len,
     ).localCheckpoint()
-    admit = (
-        w.groupBy("h")
-        .agg(F.min(id_col).cast("long").alias("keeper"))
-        .withColumn("_bkt", F.pmod(F.hash("h"), F.lit(n_buckets)))
-        .withColumn("_ord", -F.col("keeper"))
-    )
-    upsert_snapshot(
-        spark, span_store_path, admit, "h",
-        order_col="_ord", partition_cols=["_bkt"],
-    )
+    admit = w.groupBy("h").agg(F.min(id_col).cast("long").alias("keeper"))
+    store.upsert(admit, -F.col("keeper"))
     return out
 
 

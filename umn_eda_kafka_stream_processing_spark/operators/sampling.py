@@ -686,21 +686,12 @@ def incremental_budget_admission(
 
     Returns the batch's admitted frame (domain, key, size, batch_id).
     """
-    from pyspark.sql.utils import AnalysisException
-
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_snapshot,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     if not budgets:
         raise ValueError("budgets must be non-empty")
-    # the try covers ONLY the read (first batch: store absent) — a
-    # broad except here once swallowed an UNRESOLVED_COLUMN from the
-    # aggregate below and silently dropped all budget memory
-    try:
-        prior = spark.read.parquet(store_path)
-    except AnalysisException:
-        prior = None
+    store = SnapshotStore(spark, store_path, ["domain", "key"], order="event_seq")
+    prior = store.read()
     if prior is not None:
         # store columns are canonical (domain/key/size/batch_id),
         # independent of the caller's column names; excluding THIS
@@ -787,12 +778,7 @@ def incremental_budget_admission(
     # the returned frame re-lists deleted part files (the
     # localCheckpoint-before-writing-a-store-its-lineage-reads rule)
     admitted = admitted.localCheckpoint()
-    upsert_snapshot(
-        spark,
-        store_path,
-        admitted.withColumn("event_seq", F.lit(0)),
-        key_cols=["domain", "key"],
-    )
+    store.upsert(admitted, F.lit(0))
     return admitted
 
 
@@ -834,18 +820,12 @@ def incremental_cluster_quota(
 
     Returns the batch's admitted frame (cluster, key, batch_id).
     """
-    from pyspark.sql.utils import AnalysisException
-
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_snapshot,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     if quota < 1:
         raise ValueError(f"quota must be >= 1, got {quota}")
-    try:
-        prior = spark.read.parquet(store_path)
-    except AnalysisException:
-        prior = None
+    store = SnapshotStore(spark, store_path, ["cluster", "key"], order="event_seq")
+    prior = store.read()
     if prior is not None:
         consumed = (
             prior.filter(F.col("batch_id") != int(batch_id))
@@ -877,12 +857,7 @@ def incremental_cluster_quota(
         F.col(key_col).alias("key"),
         F.lit(int(batch_id)).alias("batch_id"),
     ).localCheckpoint()  # lineage reads the store the upsert rewrites
-    upsert_snapshot(
-        spark,
-        store_path,
-        admitted.withColumn("event_seq", F.lit(0)),
-        key_cols=["cluster", "key"],
-    )
+    store.upsert(admitted, F.lit(0))
     return admitted
 
 

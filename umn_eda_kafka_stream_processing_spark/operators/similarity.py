@@ -595,45 +595,19 @@ def upsert_ivf_index(
     Streaming: pass this as the foreachBatch body — the ANN index
     stays queryable and fresh without ever rebuilding the corpus.
 
-    NOTE a vector UPDATE can move a key across buckets; compaction
-    handles it because the key's old row only survives in a partition
-    being rewritten if the key re-appears there — the merge is by
-    key, then rows land in their (new) bucket partition. Stale-bucket
-    leftovers are impossible within a touched partition and the
-    untouched-partition case cannot hold the key's latest row anyway
-    UNLESS the key moved OUT of an untouched partition — so the read
-    side semi-joins on the CHANGED KEYS' old buckets too: we simply
-    include every partition holding one of the batch's keys.
+    NOTE a vector UPDATE can move a key across buckets. The bucket is
+    assigned by the quantizer, not hashed from the key, so the
+    `stores.SnapshotStore` upsert is move-aware: it also reads every
+    partition holding one of the batch's keys (the merge sees and drops
+    the stale copy) and deletes the partitions the merge emptied.
     """
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
+
     assigned = assign_ivf_bucket(
         embeddings, centroids, id_col, vec_col, bucket_col
     )
-    _upsert_bucket_partitioned(
-        spark, index_path, assigned, id_col, order_col, bucket_col
-    )
-
-
-def _upsert_bucket_partitioned(
-    spark,
-    index_path: str,
-    assigned: DataFrame,
-    id_col: str,
-    order_col: str,
-    bucket_col: str,
-) -> None:
-    """Shared key-compacting upsert into a bucket-partitioned parquet
-    index (the upsert_ivf_index write path, reused by the IVFADC
-    variant and the FK-join left store): touched-partition pruning,
-    move-aware reads, emptied-partition cleanup, file-status-cache
-    refresh. Implementation lives in operators/compaction.py
-    (upsert_bucket_partitioned) with the other snapshot-store
-    maintainers."""
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_bucket_partitioned,
-    )
-
-    upsert_bucket_partitioned(
-        spark, index_path, assigned, id_col, order_col, bucket_col
+    SnapshotStore(spark, index_path, id_col, bucket_col, order_col).upsert(
+        assigned
     )
 
 
@@ -655,10 +629,9 @@ def upsert_ivfpq_index(
     codebook, and upserted by id into a bucket-partitioned parquet
     table carrying (id, codes, vector, seq).
 
-    Same maintenance contract as upsert_ivf_index (shared write path:
-    touched-partition pruning, move-aware bucket reads, emptied-
-    partition cleanup), but the stored representation is the ADC-scan
-    one — so `ivfpq_search_index` probes become partition-pruned
+    Same maintenance contract as upsert_ivf_index (the same move-aware
+    `stores.SnapshotStore` upsert), but the stored representation is
+    the ADC-scan one — so `ivfpq_search_index` probes become partition-pruned
     directory scans over ~n_sub ints per row. The raw vector rides in
     the same row for the exact re-rank; at 100 TB you may split it to
     an id-keyed sidecar table so the ADC scan never deserializes
@@ -669,6 +642,8 @@ def upsert_ivfpq_index(
     reference one codebook. Re-train drift is an offline rebuild
     (standard IVFPQ operations practice), not an upsert.
     """
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
+
     assigned = assign_ivf_bucket(
         embeddings, centroids, id_col=id_col, vec_col=vec_col
     )
@@ -703,7 +678,7 @@ def upsert_ivfpq_index(
         ).hint("shuffle_hash"),
         id_col,
     )
-    _upsert_bucket_partitioned(spark, index_path, rows, id_col, order_col, "bucket")
+    SnapshotStore(spark, index_path, id_col, "bucket", order_col).upsert(rows)
 
 
 def ivfpq_search_index(
@@ -1158,11 +1133,14 @@ def incremental_semantic_dedup(
     Wire with streaming/runner.py:start_foreach_batch_sink:
     ``lambda b, _id: sink(incremental_semantic_dedup(b, store,
     frozen_centroids))``. At-least-once on replay; admission appends
-    are deduplicated downstream by id.
+    are deduplicated downstream by id. The store path may be any Hadoop
+    URI (file:, hdfs://, s3a://).
     """
-    import os
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
-    spark = batch_df.sparkSession
+    store = SnapshotStore(
+        batch_df.sparkSession, seen_store_path, partition_by="bucket"
+    )
     assigned = (
         assign_ivf_bucket(batch_df, centroids, id_col=id_col, vec_col=vec_col)
         .select(
@@ -1216,18 +1194,12 @@ def incremental_semantic_dedup(
         .distinct()
     )
     survivors = assigned.join(in_batch_losers, id_col, "left_anti")
-    if os.path.isdir(seen_store_path) and any(
-        e.startswith("bucket=") for e in os.listdir(seen_store_path)
-    ):
-        batch_buckets = [
-            r["bucket"] for r in assigned.select("bucket").distinct().collect()
-        ]
-        # isin over a literal handful of bucket ids → the scan is
-        # PartitionFilters-pruned to the touched directories only
+    # pruned to the batch's buckets: an isin over a literal handful of
+    # bucket ids lands in the scan's PartitionFilters
+    seen = store.read(near=assigned)
+    if seen is not None:
         seen = (
-            spark.read.parquet(seen_store_path)
-            .filter(F.col("bucket").isin(batch_buckets))
-            .select(
+            seen.select(
                 F.col("bucket").alias("_sb"),
                 F.col(id_col).alias("_sid"),
                 F.col("_v").alias("_sv"),
@@ -1268,9 +1240,7 @@ def incremental_semantic_dedup(
     # store path, and lazily re-scanning it mid-append races the
     # file listing (the incremental_simhash_dedup rule)
     survivors = survivors.localCheckpoint()
-    survivors.select(id_col, "bucket", "_v", "_n").write.mode(
-        "append"
-    ).partitionBy("bucket").parquet(seen_store_path)
+    store.append(survivors.select(id_col, "bucket", "_v", "_n"))
     return (
         survivors.select(id_col)
         .join(batch_df, id_col)

@@ -25,7 +25,7 @@ Spark-first / 100 TB shape:
 * **Deletes are tombstone DATA, not file deletes** — a row with the
   tombstone flag set wins latest-wins like any other version and the
   key is then dropped from the as-of view. History stays replayable;
-  physical reclamation is ``compact_store``/horizon-collapse territory.
+  physical reclamation is ``SnapshotStore.maintain``/horizon-collapse territory.
 
 Unbounded history is bounded the way `stores.BatchStore.collapse`
 bounds the batch-keyed stores: fold batches older than the retention

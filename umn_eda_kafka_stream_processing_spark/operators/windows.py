@@ -266,27 +266,24 @@ def incremental_funnel(
 
     Per batch: one store read pruned to the users' hash buckets
     (left join on the frontier), per-step min-aggs over only that
-    step's batch events, one write via `compaction.upsert_snapshot`
-    (bucket = pmod(hash(user), n_buckets) is stable per user, so the
-    no-move contract holds; ``batch_seq`` is the latest-wins order).
-    Returns the affected users' updated frontier rows.
+    step's batch events, one `SnapshotStore` upsert (bucket =
+    pmod(hash(user), n_buckets) never moves a user; ``batch_seq`` is
+    the latest-wins order). Returns the affected users' updated
+    frontier rows.
     """
-    from pyspark.sql.utils import AnalysisException
-
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_snapshot,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     spark = batch_df.sparkSession
+    store = SnapshotStore(spark, store_path, user_col, "_fb", n_buckets=n_buckets)
     tcols = [f"t{k}" for k in range(1, len(steps) + 1)]
     ev = batch_df.select(
         user_col, F.col(type_col).alias("_et"), event_ts(ts_col).alias("_ts")
     ).localCheckpoint()
     users = ev.select(user_col).distinct()
-    try:
-        store = spark.read.parquet(store_path)
-        prior = users.join(store.hint("shuffle_hash"), user_col, "left")
-    except AnalysisException:
+    old = store.read()
+    if old is not None:
+        prior = users.join(old.hint("shuffle_hash"), user_col, "left")
+    else:
         prior = users
         for t in tcols:
             prior = prior.withColumn(t, F.lit(None).cast("timestamp_ntz"))
@@ -325,21 +322,9 @@ def incremental_funnel(
             new_t.alias(f"t{k}"),
             *[F.max(t).alias(t) for t in tcols[k:]],
         )
-    frontier = frontier.select(
-        user_col,
-        *tcols,
-        F.expr(f"pmod(hash({user_col}), {n_buckets})").alias("_fb"),
-        F.lit(batch_seq).cast("long").alias("_seq"),
-    ).localCheckpoint()
-    upsert_snapshot(
-        spark,
-        store_path,
-        frontier,
-        key_cols=user_col,
-        order_col="_seq",
-        partition_cols=("_fb",),
-    )
-    return frontier.select(user_col, *tcols)
+    frontier = frontier.select(user_col, *tcols).localCheckpoint()
+    store.upsert(frontier, batch_seq)
+    return frontier
 
 
 def incremental_transitions(
@@ -364,19 +349,17 @@ def incremental_transitions(
 
     Per batch: one per-user lag window WITHIN the batch (per-key
     frames, never corpus-wide), one pruned store read joining only
-    the batch's users, one `upsert_snapshot` of the new per-user
-    last event (bucket = pmod(hash(user), n_buckets) — stable, so
-    the no-move contract holds; latest-wins on ``batch_seq``).
+    the batch's users, one `SnapshotStore` upsert of the new per-user
+    last event (bucket = pmod(hash(user), n_buckets) never moves a
+    user; latest-wins on ``batch_seq``).
     Returns this batch's pairs (from_type, to_type, n).
     """
-    from pyspark.sql.utils import AnalysisException
     from pyspark.sql.window import Window
 
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_snapshot,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     spark = batch_df.sparkSession
+    store = SnapshotStore(spark, store_path, user_col, "_fb", n_buckets=n_buckets)
     ev = batch_df.select(
         user_col,
         F.col(type_col).alias("_et"),
@@ -394,20 +377,17 @@ def incremental_transitions(
         F.col("_prev").alias("from_type"), F.col("_et").alias("to_type")
     )
     firsts = seq.where(F.col("_rn") == 1).select(user_col, "_et")
-    try:
-        store = spark.read.parquet(store_path)
+    old = store.read()
+    pairs = within
+    if old is not None:
         boundary = firsts.join(
-            store.select(user_col, F.col("last_type")).hint(
-                "shuffle_hash"
-            ),
+            old.select(user_col, F.col("last_type")).hint("shuffle_hash"),
             user_col,
         ).select(
             F.col("last_type").alias("from_type"),
             F.col("_et").alias("to_type"),
         )
         pairs = within.union(boundary)
-    except AnalysisException:
-        pairs = within
     # per-user new last event = max (ts, *order) in batch (arrival is
     # non-decreasing across batches, so the batch max IS the global
     # last)
@@ -422,25 +402,13 @@ def incremental_transitions(
             ),
         )
         .where(F.col("_rmax") == 1)
-        .select(
-            user_col,
-            F.col("_et").alias("last_type"),
-            F.expr(f"pmod(hash({user_col}), {n_buckets})").alias("_fb"),
-            F.lit(batch_seq).cast("long").alias("_seq"),
-        )
+        .select(user_col, F.col("_et").alias("last_type"))
         .localCheckpoint()
     )
     out = pairs.groupBy("from_type", "to_type").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     ).localCheckpoint()
-    upsert_snapshot(
-        spark,
-        store_path,
-        lasts,
-        key_cols=user_col,
-        order_col="_seq",
-        partition_cols=("_fb",),
-    )
+    store.upsert(lasts, batch_seq)
     return out
 
 def incremental_retention(
@@ -471,16 +439,13 @@ def incremental_retention(
     Per batch: one distinct (user, week) hash-agg collapsed to one
     row per user (min week + week set), one store read pruned to the
     batch's users, an array merge (distinct ∪, sorted for
-    deterministic storage), one `upsert_snapshot` write (bucket =
+    deterministic storage), one `SnapshotStore` upsert (bucket =
     pmod(hash(user), n_buckets) — stable per user, latest-wins on
     ``batch_seq``). Returns the affected users' merged state."""
-    from pyspark.sql.utils import AnalysisException
-
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_snapshot,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     spark = batch_df.sparkSession
+    store = SnapshotStore(spark, store_path, user_col, "_fb", n_buckets=n_buckets)
     uw = (
         batch_df.select(
             user_col,
@@ -494,14 +459,14 @@ def incremental_retention(
         )
         .localCheckpoint()
     )
-    try:
-        store = spark.read.parquet(store_path)
+    old = store.read()
+    if old is not None:
         prior = uw.join(
-            store.select(user_col, "cw", "weeks").hint("shuffle_hash"),
+            old.select(user_col, "cw", "weeks").hint("shuffle_hash"),
             user_col,
             "left",
         )
-    except AnalysisException:
+    else:
         prior = uw.withColumn("cw", F.lit(None).cast("date")).withColumn(
             "weeks", F.lit(None).cast("array<date>")
         )
@@ -521,18 +486,9 @@ def incremental_retention(
                 )
             )
         ).alias("weeks"),
-        F.expr(f"pmod(hash({user_col}), {n_buckets})").alias("_fb"),
-        F.lit(batch_seq).cast("long").alias("_seq"),
     ).localCheckpoint()
-    upsert_snapshot(
-        spark,
-        store_path,
-        merged,
-        key_cols=user_col,
-        order_col="_seq",
-        partition_cols=("_fb",),
-    )
-    return merged.select(user_col, "cw", "weeks")
+    store.upsert(merged, batch_seq)
+    return merged
 
 
 def incremental_scd2(
@@ -545,9 +501,9 @@ def incremental_scd2(
     n_buckets: int = 32,
 ) -> DataFrame:
     """Continuously-maintained SCD2 dimension table — the incremental
-    twin of `scd2_intervals` and the KTable-HISTORY analogue of
-    `compaction.upsert_snapshot` (which keeps only each key's latest
-    row): under a changelog stream the store holds EVERY version of
+    twin of `scd2_intervals` and the KTable-HISTORY analogue of a
+    `stores.SnapshotStore` keyed by entity (which keeps only each key's
+    latest row): under a changelog stream the store holds EVERY version of
     every key with [valid_from, valid_to) validity and is_current,
     advanced per microbatch without ever rescanning history.
 
@@ -569,75 +525,52 @@ def incremental_scd2(
     bucket ids come through the engine's own hash) and semi-joined
     to the affected keys, one per-key lead() window over prior ∪
     batch versions (the `scd2_intervals` shape — never corpus-wide),
-    one `upsert_snapshot` keyed by the version identity (bucket =
-    pmod(hash(key), n_buckets) is stable per key, so the no-move
-    contract holds; stale valid_to rows are overwritten latest-wins
+    one `SnapshotStore` upsert keyed by the version identity (bucket =
+    pmod(hash(key), n_buckets) hashes a subset of that identity, so no
+    version ever moves; stale valid_to rows are overwritten latest-wins
     on ``batch_seq``). Cost is O(affected keys' version counts), not
     O(|store|). Returns the affected keys' recomputed timelines.
     """
-    from pyspark.sql.utils import AnalysisException
-
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        upsert_snapshot,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     spark = batch_df.sparkSession
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     ident = keys + [ts_col] + list(order_cols)
+    store = SnapshotStore(
+        spark, store_path, ident, "_vb", n_buckets=n_buckets, bucket_on=keys
+    )
     batch = batch_df.withColumn(ts_col, event_ts(ts_col)).localCheckpoint()
     affected = batch.select(*keys).distinct()
-    key_hash = "hash(" + ", ".join(keys) + ")"
-    try:
-        store = spark.read.parquet(store_path)
-        bids = [
-            r["b"]
-            for r in affected.select(
-                F.expr(f"pmod({key_hash}, {n_buckets})").alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        prior = (
-            store.where(F.col("_vb").isin(bids))
-            .join(affected, keys, "left_semi")
-            .select(*batch.columns)
-        )
+    old = store.read(near=affected)
+    if old is not None:
+        prior = old.join(affected, keys, "left_semi").select(*batch.columns)
         merged = prior.unionByName(batch).dropDuplicates(ident)
-    except AnalysisException:
+    else:
         merged = batch.dropDuplicates(ident)
     # no checkpoint on merged: it is consumed exactly once, and the
     # recomputed checkpoint below materializes the whole lineage
     # (including the store read) BEFORE the upsert overwrites it
     recomputed = scd2_intervals(
         merged, keys, ts_col, list(order_cols)
-    ).select(
-        "*",
-        F.expr(f"pmod({key_hash}, {n_buckets})").alias("_vb"),
-        F.lit(batch_seq).cast("long").alias("_seq"),
     ).localCheckpoint()
-    upsert_snapshot(
-        spark,
-        store_path,
-        recomputed,
-        key_cols=ident,
-        order_col="_seq",
-        partition_cols=("_vb",),
-        # cluster the write by bucket: one file per touched _vb dir
-        # instead of (shuffle partitions x dirs) near-empty files —
-        # the next batch's partition-pruned read lists O(buckets)
-        # files, not O(batches x tasks) (measured 48 files after 3
-        # batches at sf0.1 without this)
-        write_coalesce=n_buckets,
-    )
-    return recomputed.drop("_vb", "_seq")
+    # cluster the write by bucket: one file per touched _vb dir instead
+    # of (shuffle partitions x dirs) near-empty files — the next batch's
+    # partition-pruned read lists O(buckets) files, not O(batches x
+    # tasks) (measured 48 files after 3 batches at sf0.1 without this)
+    store.upsert(recomputed, batch_seq, write_coalesce=n_buckets)
+    return recomputed
 
 
-def scd2_from_store(spark, store_path: str) -> DataFrame:
+def scd2_from_store(spark, store_path: str) -> DataFrame | None:
     """Read the `incremental_scd2` store back as the dimension table
-    (same schema as `scd2_intervals` over the full history). As-of-T
-    probes should instead read the store directly and push
-    ``valid_from <= T`` down the partition-pruned scan."""
-    return spark.read.parquet(store_path).drop("_vb", "_seq")
+    (same schema as `scd2_intervals` over the full history), or None
+    before its first batch. As-of-T probes should instead read the
+    store directly and push ``valid_from <= T`` down the
+    partition-pruned scan."""
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
+
+    rows = SnapshotStore(spark, store_path).read()
+    return None if rows is None else rows.drop("_vb", "_seq")
 
 
 def retention_matrix_from_store(

@@ -2604,13 +2604,14 @@ def zonemap_pruning_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register(
     "store_compaction_census",
-    "Small-file store maintenance (operators/compaction.py:"
-    "compact_store — the production half of the foreachBatch "
+    "Small-file store maintenance (stores.py:SnapshotStore.maintain "
+    "— the production half of the foreachBatch "
     "incremental-store pattern; RocksDB-compaction analogue): two "
     "simulated microbatches append one file each into every bucket "
-    "of an 8-bucket orders store, compact_store bin-packs each "
-    "bucket back to ONE file (distributed _metadata.file_path "
-    "census, partition-pruned rewrite, dynamic overwrite), and a "
+    "of an 8-bucket orders store, maintain bin-packs each "
+    "bucket back to ONE file (distributed row census, file counts "
+    "from the scan's listing, partition-pruned rewrite, dynamic "
+    "overwrite), and a "
     "replayed compaction is a no-op. Census: bucket/file counters "
     "from the operator's stats (deterministic: 2 coalesce(1) "
     "appends -> 2 files/bucket -> 1), the replay's zero, plus "
@@ -2632,9 +2633,7 @@ def zonemap_pruning_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 def store_compaction_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        compact_store,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -2653,8 +2652,9 @@ def store_compaction_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("bucket")
             .parquet(path)
         )
-    stats = compact_store(spark, path, partition_cols="bucket")
-    replay = compact_store(spark, path, partition_cols="bucket")
+    maintained = SnapshotStore(spark, path, partition_by="bucket")
+    stats = maintained.maintain()
+    replay = maintained.maintain()
     store = spark.read.parquet(path)
     return store.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -2663,12 +2663,12 @@ def store_compaction_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             * (F.col("o_orderkey") % F.lit(8) + F.lit(1))
         ).cast("long").alias("checksum"),
     ).select(
-        F.lit(stats["buckets_total"]).cast("long").alias("buckets_total"),
-        F.lit(stats["buckets_compacted"]).cast("long").alias(
+        F.lit(stats["partitions_total"]).cast("long").alias("buckets_total"),
+        F.lit(stats["partitions_rewritten"]).cast("long").alias(
             "buckets_compacted"
         ),
         F.lit(stats["files_after"]).cast("long").alias("files_after"),
-        F.lit(replay["buckets_compacted"]).cast("long").alias(
+        F.lit(replay["partitions_rewritten"]).cast("long").alias(
             "replay_compacted"
         ),
         "n_rows",
@@ -2822,9 +2822,9 @@ _TTL_CUTOFF = "2024-01-10 00:00:00"
 
 @_register(
     "store_ttl_census",
-    "Retention/TTL sweep for a bucket-partitioned store (operators/"
-    "compaction.py:expire_snapshot — the batch analogue of the "
-    "streaming KTable TTL, and compact_store's sibling in the store-"
+    "Retention/TTL sweep for a bucket-partitioned store (stores.py:"
+    "SnapshotStore.maintain with a ttl and no file target — the batch "
+    "analogue of the streaming KTable TTL, in the store-"
     "maintenance family): events land in an 8-bucket temp store, "
     f"rows with ts < {_TTL_CUTOFF} expire. Partition-pruned: the "
     "min-ts census selects only buckets holding expired rows; "
@@ -2861,9 +2861,7 @@ _TTL_CUTOFF = "2024-01-10 00:00:00"
 def store_ttl_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        expire_snapshot,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts"
@@ -2871,8 +2869,9 @@ def store_ttl_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="sparkgraft_store_ttl_") + "/store"
     ev.write.mode("overwrite").partitionBy("bucket").parquet(path)
     cut = F.expr(f"TIMESTAMP_NTZ '{_TTL_CUTOFF}'")
-    stats = expire_snapshot(spark, path, "ts", cut, partition_cols="bucket")
-    replay = expire_snapshot(spark, path, "ts", cut, partition_cols="bucket")
+    maintained = SnapshotStore(spark, path, partition_by="bucket")
+    stats = maintained.maintain(ttl=("ts", cut), target_files=None)
+    replay = maintained.maintain(ttl=("ts", cut), target_files=None)
     store = spark.read.parquet(path)
     return store.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows_after"),
@@ -2881,14 +2880,14 @@ def store_ttl_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(stats["partitions_total"]).cast("long").alias(
             "partitions_total"
         ),
-        F.lit(stats["partitions_touched"]).cast("long").alias(
+        F.lit(stats["partitions_expired"]).cast("long").alias(
             "partitions_touched"
         ),
         F.lit(stats["rows_expired"]).cast("long").alias("rows_expired"),
         F.lit(stats["partitions_deleted"]).cast("long").alias(
             "partitions_deleted"
         ),
-        F.lit(replay["partitions_touched"]).cast("long").alias(
+        F.lit(replay["partitions_expired"]).cast("long").alias(
             "replay_touched"
         ),
         "n_rows_after",
@@ -2974,8 +2973,8 @@ def incremental_event_totals_view(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @_register(
     "store_maintenance_census",
-    "ONE-CALL store maintenance (operators/compaction.py:"
-    "maintain_store — expire_snapshot + compact_store fused into ONE "
+    "ONE-CALL store maintenance (stores.py:SnapshotStore.maintain — "
+    "the TTL sweep and the small-file compaction fused into ONE "
     "census pass and ONE rewrite per touched partition): events land "
     "in an 8-bucket store as two appends per bucket (fragmented), "
     f"rows with ts < {_TTL_CUTOFF} expire. A bucket holding expired "
@@ -3030,9 +3029,7 @@ def incremental_event_totals_view(spark: SparkSession, sf_dir: str) -> DataFrame
 def store_maintenance_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-        maintain_store,
-    )
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts"
@@ -3049,12 +3046,9 @@ def store_maintenance_census(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(path)
         )
     cut = F.expr(f"TIMESTAMP_NTZ '{_TTL_CUTOFF}'")
-    stats = maintain_store(
-        spark, path, partition_cols="bucket", ttl=("ts", cut)
-    )
-    replay = maintain_store(
-        spark, path, partition_cols="bucket", ttl=("ts", cut)
-    )
+    maintained = SnapshotStore(spark, path, partition_by="bucket")
+    stats = maintained.maintain(ttl=("ts", cut))
+    replay = maintained.maintain(ttl=("ts", cut))
     store = spark.read.parquet(path)
     return store.agg(
         F.count(F.lit(1)).cast("long").alias("n_rows_after"),

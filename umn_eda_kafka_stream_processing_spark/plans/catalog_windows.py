@@ -419,7 +419,7 @@ def user_state_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     "microbatches split by pmod(hash(event_id), 3) — deliberately NOT "
     "time-ordered, so versions arrive late and splice into existing "
     "timelines — each batch recomputing only its affected keys' "
-    "intervals into a bucket-partitioned store (upsert_snapshot, "
+    "intervals into a bucket-partitioned store (SnapshotStore.upsert, "
     "latest-wins). The census over the final store must equal batch "
     "scd2_intervals over the full history: the oracle IS that batch "
     "computation in SQL, so a single stale valid_to or missed splice "

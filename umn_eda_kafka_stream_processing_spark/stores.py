@@ -1,23 +1,30 @@
-"""The one batch-keyed store, the Hadoop-FS handle, and the concurrency
-helper every store pipeline shares.
+"""The two store kinds every store pipeline shares — the latest-wins
+keyed `SnapshotStore` and the batch-keyed `BatchStore` — plus the
+Hadoop-FS handle, the store-absence rule and the concurrency helper.
 
 The reference keeps all of its state in one abstraction — a KTable
 materialized as a persistent key-value store
 (``builder.table(topic, Materialized.as(persistentKeyValueStore(...)))``,
-samples/PurchaseEventTicket.java:44-51). The lake-side stores whose rows
+samples/PurchaseEventTicket.java:44-51). Its lake-side analogue is the
+`SnapshotStore`: one row per key, upserted latest-wins, maintained in
+place (TTL, small-file compaction, key erasure). The stores whose rows
 are a pure function of their source batch — CMS and HLL registers,
 benchmark gram sets, agg-view partials, the constraint/histogram/category
 monitors, the advised pipeline's register and decision logs — are all one
 `BatchStore`. What differs between them is only the ``merge`` that folds
 batches and the marker name.
 
-On-disk format (shared by every store kind):
+Both kinds write through one partition rewrite (`_rewrite_partitions`):
+dynamic partition overwrite, then the deletes of partitions the job
+emptied, then a refresh of the session's file listing.
+
+BatchStore on-disk format (shared by every batch-keyed kind):
 
 * one hive partition per source batch, ``batch_id=N``, written by dynamic
   partition overwrite — a foreachBatch replay recomputes identical rows and
   rewrites its own directory, with no store read and no merge;
 * payload columns plus ``event_seq=0`` (keeps the schema interchangeable
-  with `compaction.upsert_snapshot`-managed stores);
+  with `SnapshotStore`-managed stores);
 * an underscore-prefixed marker FILE ``<marker>_N`` (hidden from Spark's
   parquet scans; a ``name=value`` filename would be partition-discovered)
   records a collapse horizon or a retention floor, read with one Hadoop FS
@@ -26,13 +33,15 @@ On-disk format (shared by every store kind):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from typing import TypeVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
+
+from umn_eda_kafka_stream_processing_spark.operators.core import latest_by_key
 
 T = TypeVar("T")
 
@@ -77,6 +86,103 @@ def run_concurrently(*thunks: Callable[[], T]) -> list[T]:
     with ThreadPoolExecutor(len(thunks)) as pool:
         futures = [pool.submit(t) for t in thunks]
     return [f.result() for f in futures]
+
+
+def _cols(cols: str | Sequence[str]) -> list[str]:
+    return [cols] if isinstance(cols, str) else list(cols)
+
+
+def _partition_dir(parts: list[str], row) -> str:
+    """Relative directory of one partition — nested for multi-column
+    layouts (``c=v/d=w``)."""
+    return "/".join(f"{c}={row[c]}" for c in parts)
+
+
+def _partition_selector(parts: list[str], chosen) -> Column:
+    """Partition-pruning predicate for a bounded set of partitions (rows
+    or dicts keyed by partition column). Single column: a plain isin.
+    Multi column: an OR of per-tuple conjuncts — struct(...).isin(python
+    tuples) raises UNSUPPORTED_FEATURE.LITERAL_TYPE, and the chosen set is
+    bounded (one term per directory to rewrite), so the predicate stays
+    small and PartitionFilters-eligible."""
+    if not chosen:
+        return F.lit(False)
+    if len(parts) == 1:
+        return F.col(parts[0]).isin(*[r[parts[0]] for r in chosen])
+    sel = F.lit(False)
+    for r in chosen:
+        conj = F.lit(True)
+        for c in parts:
+            conj = conj & (F.col(c) == F.lit(r[c]))
+        sel = sel | conj
+    return sel
+
+
+def _drop_if_empty(spark: SparkSession, path: str) -> None:
+    """Remove a store root that holds nothing but a job's ``_SUCCESS``
+    (a zero-row partitioned write, or a sweep that emptied every
+    partition), so the store reads as ABSENT instead of as a directory
+    with no schema to infer. One FS listing, no Spark job."""
+    fs, root, _ = hadoop_fs(spark, path)
+    if fs.exists(root) and all(
+        st.getPath().getName() in ("_SUCCESS", "._SUCCESS.crc")
+        for st in fs.listStatus(root)
+    ):
+        fs.delete(root, True)
+
+
+def _rewrite_partitions(
+    spark: SparkSession,
+    path: str,
+    frame: DataFrame | None,
+    parts: Sequence[str] = (),
+    emptied: Sequence[str] = (),
+) -> None:
+    """The one store rewrite. With ``parts``, a DYNAMIC partition
+    overwrite: only the partitions ``frame`` holds rows for are replaced.
+    Dynamic overwrite never touches a partition the job writes no row
+    into, so the ``emptied`` partition directories (relative paths) are
+    deleted explicitly. Without ``parts`` the whole store is replaced.
+    ``frame=None`` only deletes. Then the session's cached file listing
+    of the path is dropped: the replaced files otherwise stay visible to
+    later reads (FILE_NOT_EXIST)."""
+    if frame is not None:
+        writer = frame.write.mode("overwrite")
+        if parts:
+            writer = writer.partitionBy(*parts).option(
+                "partitionOverwriteMode", "dynamic"
+            )
+        writer.parquet(path)
+    fs, _, jvm = hadoop_fs(spark, path)
+    for sub in emptied:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{sub}"), True)
+    _drop_if_empty(spark, path)
+    spark.catalog.refreshByPath(path)
+
+
+def compact_changelog(
+    snapshot: DataFrame | None,
+    changelog: DataFrame,
+    key_cols: str | Sequence[str],
+    order_col: str = "event_seq",
+) -> DataFrame:
+    """Latest row per key across old snapshot + new changelog.
+
+    The snapshot must already be one-row-per-key; ties on
+    ``order_col`` resolve to the changelog row (upsert overwrites),
+    implemented by tagging sides rather than trusting input order.
+    """
+    tagged_new = changelog.withColumn("_src", F.lit(1))
+    if snapshot is None:
+        merged = tagged_new
+    else:
+        merged = snapshot.withColumn("_src", F.lit(0)).unionByName(tagged_new)
+    # order by (order_col, _src): equal sequence numbers prefer the
+    # changelog side — matches KTable re-pipe-overwrites semantics
+    compacted = latest_by_key(
+        merged, _cols(key_cols), F.struct(F.col(order_col), F.col("_src"))
+    )
+    return compacted.drop("_src")
 
 
 class BatchStore:
@@ -187,13 +293,7 @@ class BatchStore:
         )
         if write_coalesce:
             out = out.repartition(int(write_coalesce))
-        (
-            out.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(self.path)
-        )
-        self.spark.catalog.refreshByPath(self.path)
+        _rewrite_partitions(self.spark, self.path, out, ["batch_id"])
         return True
 
     def scan(self) -> DataFrame:
@@ -345,3 +445,353 @@ class BatchStore:
             self._write_mark(keep)
         self.delete_batches(doomed)
         return {"batches_expired": len(doomed)}
+
+
+class SnapshotStore:
+    """A latest-wins keyed parquet store at ``path`` — the KTable
+    materialization: one row per ``keys`` value, the row with the largest
+    ``order`` winning (ties go to the newer write, the re-pipe-overwrites
+    rule). Every upsert is idempotent (a replayed batch re-merges rows
+    already in the store to a no-op), so a foreachBatch body built on it
+    is replay-safe.
+
+    ``partition_by`` lays the store out in hive partitions. With
+    ``n_buckets`` the single partition column is a bucket the store
+    computes itself, ``pmod(hash(*bucket_on), n_buckets)`` (``bucket_on``
+    defaults to the keys), so readers can prune to the buckets of the keys
+    they probe (`read` with ``near``).
+
+    A partition column hashed from a subset of the store's own keys can
+    never move a key between partitions, so an upsert reads and rewrites
+    only the partitions its rows land in. Any other partition column — a
+    caller-assigned IVF bucket, the hash of a foreign key — can MOVE a
+    key: the upsert then also reads the partitions holding its keys' old
+    rows, so the merge sees (and drops) the stale copy, and deletes the
+    partitions the merge emptied. Either way an upsert is
+    O(|touched partitions|), never O(|store|)."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        path: str,
+        keys: str | Sequence[str] = (),
+        partition_by: str | Sequence[str] = (),
+        order: str = "_seq",
+        n_buckets: int | None = None,
+        bucket_on: str | Sequence[str] | None = None,
+    ) -> None:
+        self.spark, self.path, self.order = spark, path, order
+        self.keys, self.parts = _cols(keys), _cols(partition_by)
+        self.n_buckets = n_buckets
+        self.bucket_on = self.keys if bucket_on is None else _cols(bucket_on)
+        self.moves = bool(self.parts) and not (
+            n_buckets and set(self.bucket_on) <= set(self.keys)
+        )
+
+    def _bucket(self) -> Column:
+        return F.pmod(
+            F.hash(*[F.col(c) for c in self.bucket_on]), F.lit(self.n_buckets)
+        )
+
+    def read(self, near: DataFrame | None = None) -> DataFrame | None:
+        """The store's rows (bucket and order columns included), or None
+        when the store was never written — the one absence rule: only a
+        missing path is absent; a directory that cannot be read (no
+        schema, corrupt footer) raises.
+
+        ``near`` (a frame carrying the ``bucket_on`` columns, or the
+        partition column of a store without ``n_buckets``) prunes the
+        scan to the partitions holding near's keys: the partition ids
+        are collected (a bounded list of ints) into an isin that lands in
+        the scan's PartitionFilters."""
+        rows = read_or_empty(lambda: self.spark.read.parquet(self.path), None)
+        if rows is None or near is None:
+            return rows
+        part = self._bucket() if self.n_buckets else F.col(self.parts[0])
+        ids = [r[0] for r in near.select(part).distinct().collect()]
+        return rows.where(F.col(self.parts[0]).isin(ids))
+
+    def upsert(
+        self,
+        rows: DataFrame,
+        seq: int | Column | None = None,
+        write_coalesce: int | None = None,
+    ) -> DataFrame:
+        """Merge ``rows`` into the store latest-wins by key and rewrite
+        the touched partitions (the whole store when unpartitioned).
+        The store adds its bucket column, and with ``seq`` its order
+        column (an int becomes a long literal; a Column is used as is);
+        without ``seq`` the rows carry the order column themselves.
+
+        Returns the merged frame it wrote — checkpointed when a merge
+        with stored rows happened, and covering only the touched
+        partitions of a partitioned store — so a caller that needs the
+        post-upsert snapshot can reuse it instead of re-listing the
+        store.
+
+        ``write_coalesce=k`` clusters the write into k tasks by the
+        partition columns: one file per touched partition directory
+        instead of (shuffle partitions x directories) near-empty files.
+        Never set it for a data-sized unpartitioned store: it serializes
+        the write."""
+        extra = {}
+        if self.n_buckets:
+            extra[self.parts[0]] = self._bucket()
+        if seq is not None:
+            extra[self.order] = (
+                seq if isinstance(seq, Column) else F.lit(int(seq)).cast("long")
+            )
+        rows = rows.withColumns(extra) if extra else rows
+        old, parts, emptied = self.read(), self.parts, []
+        if old is not None and parts and self.moves:
+            # the partitions receiving rows AND those holding an updated
+            # key's old row — collected BEFORE the overwrite (any plan
+            # still referencing `old` after it would re-list deleted
+            # files)
+            touched = [
+                r.asDict()
+                for r in rows.select(*parts)
+                .unionByName(
+                    old.join(
+                        F.broadcast(rows.select(*self.keys).distinct()),
+                        self.keys,
+                        "left_semi",
+                    ).select(*parts)
+                )
+                .distinct()
+                .collect()
+            ]
+            old = old.filter(_partition_selector(parts, touched))
+        elif old is not None and parts:
+            # broadcast semi join on partition values: planned as
+            # partition pruning, so untouched directories are never read
+            old = old.join(
+                F.broadcast(rows.select(*parts).distinct()), parts, "left_semi"
+            )
+        merged = compact_changelog(old, rows, self.keys, self.order)
+        if old is not None:
+            # the plan reads the path it overwrites: materialize first
+            merged = merged.localCheckpoint()
+            if parts and self.moves:
+                # a touched partition whose last row moved away gets no
+                # output row, so the overwrite would leave it stale
+                written = {
+                    tuple(r) for r in merged.select(*parts).distinct().collect()
+                }
+                emptied = [
+                    _partition_dir(parts, t)
+                    for t in touched
+                    if tuple(t[c] for c in parts) not in written
+                ]
+        if write_coalesce:
+            merged = merged.repartition(
+                int(write_coalesce), *[F.col(c) for c in parts]
+            )
+        _rewrite_partitions(self.spark, self.path, merged, parts, emptied)
+        return merged
+
+    def append(self, rows: DataFrame) -> None:
+        """Insert-only write for stores that never update a key (the
+        dedup seen-stores): a plain append, no merge and no store read. A
+        zero-row first append leaves no store behind."""
+        writer = rows.write.mode("append")
+        if self.parts:
+            writer = writer.partitionBy(*self.parts)
+        writer.parquet(self.path)
+        _drop_if_empty(self.spark, self.path)
+
+    def _files(self, dirs: list[str]) -> int:
+        """Data files under the given partition directories (the store
+        root for ""): one FS listing each, zero Spark jobs."""
+        fs, _, jvm = hadoop_fs(self.spark, self.path)
+        n = 0
+        for d in dirs:
+            p = jvm.org.apache.hadoop.fs.Path(f"{self.path}/{d}".rstrip("/"))
+            if fs.exists(p):
+                n += sum(
+                    not st.getPath().getName().startswith(("_", "."))
+                    for st in fs.listStatus(p)
+                )
+        return n
+
+    def maintain(
+        self,
+        ttl: "tuple | None" = None,
+        target_files: int | None = 1,
+        target_rows: int | None = None,
+    ) -> dict:
+        """Store maintenance in ONE census pass and ONE rewrite per
+        touched partition — the TTL sweep and the small-file compaction
+        (reference analogue: RocksDB's background compaction and TTL
+        under every KTable store, samples/PurchaseEventTicket.java:44-51).
+
+        * ``ttl``: optional ``(ts_col, cutoff)`` — rows with ts strictly
+          below cutoff expire. NULL ts rows are KEPT (the census counts
+          them as not expired, so the rewrite must route them like
+          CASE-ELSE: a bare ``~(ts < cut)`` is NULL and would drop them).
+          The cutoff may be a Column, so TIMESTAMP_NTZ cutoffs pass as
+          typed literals (``F.lit(datetime)`` builds a TZ timestamp).
+        * ``target_files`` / ``target_rows``: per-partition file-count
+          target (``ceil(surviving rows / target_rows)`` when
+          ``target_rows`` is given), computed on the post-TTL rows, so a
+          partition whose survivors fit one file compacts in the same
+          rewrite that expired its rows. ``target_files=None`` is a pure
+          TTL sweep: nothing is rewritten for its file count. Targets
+          above 1 split a partition on ``pmod(hash(keys), k)`` — the
+          store's keys only, so payload edits never move rows between
+          files.
+        * a store with keys whose rows carry its order column re-applies
+          latest-wins to the partitions it rewrites (a no-op on a
+          correctly maintained store; it heals the duplicate keys a
+          crashed double write could leave). An insert-only store
+          without an order column is rewritten row for row.
+
+        The census is one column-pruned, distributed group-by per
+        partition directory (rows, expired rows); file counts come from
+        the scan's own file listing. A partition is rewritten iff it
+        holds expired rows OR exceeds its file target; a partition whose
+        rows all expire is deleted instead; nothing else is read or
+        rewritten. Idempotent: a second call selects ZERO partitions.
+
+        Returns ``partitions_total``, ``rows_expired``,
+        ``partitions_expired``, ``partitions_deleted``,
+        ``partitions_rewritten``, ``files_before``, ``files_after`` (the
+        rewritten partitions' data files) and ``rows_rewritten`` (the
+        census's surviving rows of the rewritten partitions)."""
+        if target_files is not None and target_files < 1:
+            raise ValueError(f"target_files must be >= 1, got {target_files}")
+        parts = self.parts
+        stats = dict.fromkeys(
+            ("partitions_total", "rows_expired", "partitions_expired",
+             "partitions_deleted", "partitions_rewritten", "files_before",
+             "files_after", "rows_rewritten"),
+            0,
+        )
+        store = self.read()
+        if store is None:
+            return stats
+        group = [F.col(c) for c in parts] or [F.lit(0).alias("_all")]
+        aggs = [F.count(F.lit(1)).cast("long").alias("_rows")]
+        if ttl is not None:
+            ts_col, cutoff = ttl
+            cut = cutoff if isinstance(cutoff, Column) else F.lit(cutoff)
+            aggs.append(F.sum((F.col(ts_col) < cut).cast("long")).alias("_exp"))
+        # one row per partition directory (bounded)
+        census = [
+            r.asDict()
+            for r in store.select(*group, *([F.col(ts_col)] if ttl else []))
+            .groupBy(*(parts or ["_all"]))
+            .agg(*aggs)
+            .collect()
+        ]
+        files: dict[str, int] = {}
+        for f in store.inputFiles():
+            d = "/".join(f.split("/")[-1 - len(parts):-1])
+            files[d] = files.get(d, 0) + 1
+        for r in census:
+            r["_exp"] = int(r.get("_exp") or 0)
+            r["_dir"] = _partition_dir(parts, r)
+            r["_files"] = files.get(r["_dir"], 0)
+            r["_gone"] = bool(parts) and r["_exp"] == r["_rows"]
+            r["_want"] = target_files
+            if target_rows and target_files is not None:
+                r["_want"] = max(1, -(-(r["_rows"] - r["_exp"]) // target_rows))
+        emptied = [r["_dir"] for r in census if r["_gone"]]
+        chosen = [
+            r for r in census
+            if not r["_gone"]
+            and (r["_exp"] > 0
+                 or (r["_want"] is not None and r["_files"] > r["_want"]))
+        ]
+        stats.update(
+            partitions_total=len(census),
+            rows_expired=sum(r["_exp"] for r in census),
+            partitions_expired=sum(r["_exp"] > 0 for r in census),
+            partitions_deleted=len(emptied),
+            partitions_rewritten=len(chosen),
+            files_before=sum(r["_files"] for r in chosen),
+            rows_rewritten=sum(r["_rows"] - r["_exp"] for r in chosen),
+        )
+        if not chosen:
+            if emptied:
+                _rewrite_partitions(self.spark, self.path, None, parts, emptied)
+            return stats
+        # (an unpartitioned, fully expired store is chosen: its rewrite
+        # overwrites the store with the empty survivor set)
+        out = store.filter(_partition_selector(parts, chosen)) if parts else store
+        if ttl is not None:
+            out = out.filter(~F.coalesce(F.col(ts_col) < cut, F.lit(False)))
+        if self.keys and self.order in store.columns:
+            out = compact_changelog(None, out, self.keys, self.order)
+        if target_files is not None:
+            out = self._pack(out, chosen)
+        _rewrite_partitions(
+            self.spark, self.path, out.localCheckpoint(), parts, emptied
+        )
+        stats["files_after"] = self._files([r["_dir"] for r in chosen])
+        return stats
+
+    def _pack(self, out: DataFrame, chosen: list[dict]) -> DataFrame:
+        """Repartition so each chosen partition lands in exactly its
+        target file count: rows of one (partition, salt) share a task."""
+        by = [F.col(c) for c in self.parts]
+        max_want = max(r["_want"] for r in chosen)
+        if max_want == 1:
+            return out.repartition(len(chosen), *(by or [F.lit(0)]))
+        if not self.keys:
+            raise ValueError(
+                "target file counts > 1 need the store's keys for the split salt"
+            )
+        k_expr = F.lit(max_want)
+        if self.parts:
+            k_expr = F.lit(1)
+            for r in chosen:
+                k_expr = F.when(
+                    _partition_selector(self.parts, [r]), F.lit(r["_want"])
+                ).otherwise(k_expr)
+        salt = F.pmod(F.hash(*[F.col(k) for k in self.keys]), k_expr)
+        return (
+            out.withColumn("_salt", salt)
+            .repartition(len(chosen) * max_want, *by, F.col("_salt"))
+            .drop("_salt")
+        )
+
+    def erase(self, keys: DataFrame, key_col: str) -> dict:
+        """Remove every row whose ``key_col`` appears in (the first
+        column of) ``keys``, rewriting ONLY partitions that hold such
+        rows — see `compaction.erase_keys`."""
+        parts = self.parts
+        stats = dict.fromkeys(
+            ("partitions_touched", "rows_removed", "rows_kept",
+             "partitions_emptied"),
+            0,
+        )
+        store = self.read()
+        if store is None:
+            return stats
+        kd = keys.select(F.col(keys.columns[0]).alias(key_col)).distinct()
+        touched = (
+            store.join(F.broadcast(kd), key_col, "left_semi")
+            .select(*parts)
+            .distinct()
+            .collect()
+        )
+        if not touched:
+            return stats
+        touched_df = store.filter(_partition_selector(parts, touched))
+        n_before = touched_df.count()
+        kept = touched_df.join(
+            F.broadcast(kd), key_col, "left_anti"
+        ).localCheckpoint()
+        n_kept = kept.count()
+        written = {tuple(r) for r in kept.select(*parts).distinct().collect()}
+        emptied = [
+            _partition_dir(parts, r) for r in touched if tuple(r) not in written
+        ]
+        _rewrite_partitions(self.spark, self.path, kept, parts, emptied)
+        return {
+            "partitions_touched": len(touched),
+            "rows_removed": int(n_before - n_kept),
+            "rows_kept": int(n_kept),
+            "partitions_emptied": len(emptied),
+        }

@@ -9,8 +9,8 @@ EVERY left row referencing it (Kafka Streams implements this with a
 subscription topic re-keyed by FK; ~the hardest operator in that
 runtime).
 
-The Spark shape: both tables are compacted snapshot stores
-(operators/compaction.py — this engine's KTable materialization),
+The Spark shape: both tables are keyed snapshot stores
+(`stores.SnapshotStore` — this engine's KTable materialization),
 maintained by ONE serialized streaming query: the two changelogs are
 unioned under a side tag (each side's row rides a nullable struct)
 and a single foreachBatch applies left upserts, then right upserts,
@@ -35,9 +35,9 @@ Both emission joins broadcast the right store (a dimension-sized
 KTable — the case FK joins exist for); the left store read is
 row-pruned by a broadcast semi-join on the affected keys/FKs. With
 ``n_fk_buckets`` set, the left store is hive-partitioned by
-``pmod(hash(fk), N)`` (via the move-aware
-``compaction.upsert_bucket_partitioned`` — an update may CHANGE a
-row's FK and hence its partition), and the right-batch path
+``pmod(hash(fk), N)`` (the fk is not the store's key, so the upsert
+is move-aware — an update may CHANGE a row's FK and hence its
+partition), and the right-batch path
 PARTITION-PRUNES its left-store scan to the touched FK buckets: at
 100 TB the per-batch work is O(|batch| + |affected|) in rows AND in
 bytes scanned, never O(|left table|). Emission is at-least-once
@@ -53,25 +53,14 @@ from __future__ import annotations
 import tempfile
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.utils import AnalysisException
 
-from umn_eda_kafka_stream_processing_spark.operators.compaction import (
-    upsert_bucket_partitioned,
-    upsert_snapshot,
-)
+from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
 _BUCKET_COL = "_fkb"
 _LEFT_OUTER = {"left", "left_outer", "leftouter"}
-
-
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException:
-        return None
 
 
 def fk_join_snapshot(
@@ -116,26 +105,15 @@ def start_fk_table_join(
     lschema, rschema = left_stream.schema, right_stream.schema
     left_outer = how in _LEFT_OUTER
 
-    def _bucket(col):
-        return F.pmod(F.hash(col), F.lit(n_fk_buckets))
-
-    def on_left_rows(spark: SparkSession, batch_df: DataFrame,
-                     batch_id: int) -> None:
+    def on_left_rows(left: SnapshotStore, right: SnapshotStore,
+                     batch_df: DataFrame, batch_id: int) -> None:
+        left_snap = left.upsert(batch_df)
         if n_fk_buckets:
-            # bucket upserts merge only the touched buckets; emission
+            # bucket upserts return only the touched buckets; emission
             # prunes to this batch's keys anyway, so re-reading the
             # store for the full snapshot is still required here
-            upsert_bucket_partitioned(
-                spark, left_store,
-                batch_df.withColumn(_BUCKET_COL, _bucket(F.col(fk_col))),
-                left_key, order_col, _BUCKET_COL,
-            )
-            left_snap = _read_or_none(spark, left_store)
-        else:
-            left_snap = upsert_snapshot(
-                spark, left_store, batch_df, left_key, order_col
-            )
-        right_snap = _read_or_none(spark, right_store)
+            left_snap = left.read()
+        right_snap = right.read()
         if right_snap is None:
             if not left_outer:
                 return  # inner: nothing to join against yet; rows
@@ -144,7 +122,7 @@ def start_fk_table_join(
             # KTable leftJoin: emit NULL-extended now, refreshed when
             # the FK arrives — an empty right frame carries the
             # stream's schema so the emission shape never changes
-            right_snap = spark.createDataFrame([], rschema)
+            right_snap = batch_df.sparkSession.createDataFrame([], rschema)
         affected = batch_df.select(left_key).distinct()
         pruned = left_snap.join(F.broadcast(affected), left_key, "left_semi")
         emit(
@@ -153,39 +131,26 @@ def start_fk_table_join(
             batch_id,
         )
 
-    def on_right_rows(spark: SparkSession, batch_df: DataFrame,
-                      batch_id: int) -> None:
-        # upsert_snapshot returns the post-upsert snapshot (the full
-        # right KTable — no partition_cols), so the emission join
-        # reuses it instead of re-listing the store it just wrote
-        # (round-6 advice: one read per batch path)
-        right_snap = upsert_snapshot(
-            spark, right_store, batch_df, right_key, order_col
-        )
-        left_snap = _read_or_none(spark, left_store)
+    def on_right_rows(left: SnapshotStore, right: SnapshotStore,
+                      batch_df: DataFrame, batch_id: int) -> None:
+        # the upsert returns the post-upsert snapshot (the full right
+        # KTable — unpartitioned), so the emission join reuses it
+        # instead of re-listing the store it just wrote (one read per
+        # batch path)
+        right_snap = right.upsert(batch_df)
+        touched = batch_df.select(F.col(right_key).alias(fk_col)).distinct()
+        # with FK buckets, partition pruning: the touched FK buckets
+        # are a tiny literal list (≤ min(|batch keys|, n_fk_buckets)),
+        # so only the affected buckets' directories are ever read. A
+        # stored row's partition is derived from its CURRENT fk, so
+        # every row referencing a touched key is inside a touched
+        # bucket — pruning is exact, never lossy.
+        left_snap = left.read(near=touched if n_fk_buckets else None)
         if left_snap is None:
             return  # nothing references anything yet
-        if n_fk_buckets:
-            # partition pruning: the touched FK buckets are a tiny
-            # literal list (≤ min(|batch keys|, n_fk_buckets)) — the
-            # isin lands in the scan's PartitionFilters, so only the
-            # affected buckets' directories are ever read. A stored
-            # row's partition is derived from its CURRENT fk, so
-            # every row referencing a touched key is inside a
-            # touched bucket — pruning is exact, never lossy.
-            touched_buckets = [
-                r["b"]
-                for r in batch_df.select(
-                    _bucket(F.col(right_key)).alias("b")
-                ).distinct().collect()
-            ]
-            left_snap = left_snap.filter(
-                F.col(_BUCKET_COL).isin(touched_buckets)
-            )
         # the KIP-213 subscription lookup: every left row whose FK is
         # one of the batch's right keys is affected — ONE broadcast
         # semi-join, not a scan-compare
-        touched = batch_df.select(F.col(right_key).alias(fk_col)).distinct()
         affected = left_snap.join(F.broadcast(touched), fk_col, "left_semi")
         emit(
             fk_join_snapshot(affected, right_snap, fk_col, right_key, how)
@@ -207,7 +172,16 @@ def start_fk_table_join(
     )
 
     def on_batch(env_df: DataFrame, batch_id: int) -> None:
+        # the stores resolve through the batch's own session
         spark = env_df.sparkSession
+        stores = (
+            SnapshotStore(
+                spark, left_store, left_key,
+                _BUCKET_COL if n_fk_buckets else (), order_col,
+                n_buckets=n_fk_buckets, bucket_on=fk_col,
+            ),
+            SnapshotStore(spark, right_store, right_key, order=order_col),
+        )
         env_df = env_df.localCheckpoint()  # read stores + write stores below
         lbatch = env_df.filter(F.col("_side") == "L").select("_l.*")
         rbatch = env_df.filter(F.col("_side") == "R").select("_r.*")
@@ -215,9 +189,9 @@ def start_fk_table_join(
         # upserts before the right-side fan-out re-reads the left
         # store, so the fan-out sees this batch's left rows too
         if not lbatch.isEmpty():
-            on_left_rows(spark, lbatch, batch_id)
+            on_left_rows(*stores, lbatch, batch_id)
         if not rbatch.isEmpty():
-            on_right_rows(spark, rbatch, batch_id)
+            on_right_rows(*stores, rbatch, batch_id)
 
     return (
         lenv.unionByName(renv)

@@ -9,8 +9,8 @@ does not have to be the stream's partition key, and the stream never
 moves.
 
 The Spark twin of "full copy on every instance" is a broadcast: the
-dimension snapshot (the ``operators/compaction.py:upsert_snapshot``
-output — this engine's compacted-topic materialization) ships to all
+dimension snapshot (a ``stores.SnapshotStore``
+materialization — this engine's compacted-topic materialization) ships to all
 executors once per microbatch and the fact microbatch hash-joins
 against it locally. The fact side gets NO Exchange — exactly the
 no-co-partitioning guarantee the reference API gives — which at
@@ -25,7 +25,7 @@ re-reads the snapshot path fresh (new ``spark.read`` → new file
 listing), making an upsert that lands between batches visible to the
 next batch — the same eventually-consistent lookup the reference
 provides, with the snapshot updated out-of-band by its own
-``upsert_snapshot`` maintenance stream.
+``SnapshotStore.upsert`` maintenance stream.
 """
 
 from __future__ import annotations
@@ -39,8 +39,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 
 def global_table(spark: SparkSession, snapshot_path: str) -> DataFrame:
-    """Fresh read of a compacted snapshot table (the upsert_snapshot
-    output). Called per microbatch so a snapshot upsert between
+    """Fresh read of a compacted snapshot table (a SnapshotStore
+    materialization). Called per microbatch so a snapshot upsert between
     batches is picked up — never cache the returned frame across
     batches."""
     return spark.read.parquet(snapshot_path)
@@ -74,7 +74,7 @@ def start_global_table_join(
     enriched frame to ``emit(enriched_df, batch_id)``.
 
     The snapshot is maintained independently (its own
-    upsert_snapshot writer — the changelog topic of the reference's
+    SnapshotStore.upsert writer — the changelog topic of the reference's
     global store); this query only ever reads it.
     """
     checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="ckpt-gkt-")

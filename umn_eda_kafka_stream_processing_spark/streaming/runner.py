@@ -115,7 +115,7 @@ def make_idempotent_batch_fn(
     EXCEPT for a crash in the window between ``fn`` finishing and the
     marker landing: that one replay re-runs ``fn``, so ``fn``'s
     effect must still be atomic or idempotent within itself (every
-    store op in this repo — upsert_*, compact_store — already is; a
+    store op in this repo — SnapshotStore/BatchStore writes — already is; a
     raw append is not).
     """
 
