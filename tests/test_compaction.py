@@ -709,7 +709,7 @@ def test_collapse_versioned_horizon(spark, tmp_path):
         spark, path, upto_batch=1, key_cols="k", seq_col="seq",
         tombstone_col="del_flag",
     )
-    assert stats == {"batches_folded": 1, "keys": 1}  # tombstone dropped
+    assert stats == {"batches_folded": 1, "rows": 1}  # tombstone dropped
     assert BatchStore(spark, path).batch_ids() == [1, 2]
     # reads at or beyond the horizon are unchanged
     assert state(1) == before[1] == {1: "a1"}
@@ -720,8 +720,85 @@ def test_collapse_versioned_horizon(spark, tmp_path):
     # idempotent: a second collapse at the same horizon no-ops
     assert collapse_versioned(
         spark, path, 1, "k", seq_col="seq", tombstone_col="del_flag"
-    ) == {"batches_folded": 0, "keys": 0}
+    ) == {"batches_folded": 0, "rows": 0}
     assert state(2) == before[2]
+
+
+def test_collapse_versioned_crash_and_straggler_replay_equal_clean_run(
+    spark, tmp_path, monkeypatch
+):
+    """A tombstone for key b lands in batch 2, the base of a collapse at
+    horizon 2. (a) The collapse crashes after its fold is in place and
+    before it deletes the folded-away batches; the as-of views must
+    not bring b back, and the collapse's replay finishes the job.
+    (b) After a clean collapse, a straggler replay of folded batch 0
+    must not bring b back either. Both equal the clean run's views."""
+    import shutil
+
+    import pytest
+
+    from umn_eda_kafka_stream_processing_spark.operators.versioned import (
+        append_versioned,
+        collapse_versioned,
+        read_versioned_asof,
+    )
+
+    mk = lambda data: spark.createDataFrame(  # noqa: E731
+        data, "k string, v string, seq long, del_flag boolean"
+    )
+    batches = [
+        [("a", "a0", 0, False), ("b", "b0", 0, False)],
+        [("a", "a1", 0, False), ("b", "b1", 0, False)],
+        [("b", None, 0, True)],
+        [("c", "c0", 0, False)],
+    ]
+    landed = str(tmp_path / "landed")
+    for n, rows in enumerate(batches):
+        append_versioned(mk(rows), landed, n)
+
+    def collapse(path):
+        return collapse_versioned(
+            spark, path, 2, "k", seq_col="seq", tombstone_col="del_flag"
+        )
+
+    def views(path):
+        return {
+            asof: sorted(
+                (r["k"], r["v"])
+                for r in read_versioned_asof(
+                    spark, path, asof, "k", seq_col="seq",
+                    tombstone_col="del_flag",
+                ).collect()
+            )
+            for asof in (2, 3)
+        }
+
+    clean = str(tmp_path / "clean")
+    shutil.copytree(landed, clean)
+    collapse(clean)
+    want = views(clean)
+    assert want == {2: [("a", "a1")], 3: [("a", "a1"), ("c", "c0")]}
+
+    # (a) crash between the fold and the deletes, then the replay
+    crashed = str(tmp_path / "crashed")
+    shutil.copytree(landed, crashed)
+
+    def crash(*args, **kwargs):
+        raise RuntimeError("injected before the deletes")
+
+    monkeypatch.setattr(BatchStore, "delete_batches", crash)
+    with pytest.raises(RuntimeError, match="injected"):
+        collapse(crashed)
+    monkeypatch.undo()
+    assert views(crashed) == want
+    collapse(crashed)
+    assert views(crashed) == want
+    assert BatchStore(spark, crashed).batch_ids() == [2, 3]
+
+    # (b) straggler replay of a folded batch after the clean collapse
+    append_versioned(mk(batches[0]), clean, 0)
+    assert views(clean) == want
+    assert BatchStore(spark, clean).batch_ids() == [2, 3]
 
 
 def test_versioned_store_soak_composition(spark, tmp_path):
@@ -918,7 +995,7 @@ def test_collapse_versioned_clamps_overshooting_horizon(spark, tmp_path):
 
     stats = collapse_versioned(spark, path, upto_batch=99, key_cols="k",
                                seq_col="seq")
-    assert stats == {"batches_folded": 1, "keys": 2}
+    assert stats == {"batches_folded": 1, "rows": 2}
     assert BatchStore(spark, path).batch_ids() == [1]  # no phantom 99
 
     def state(asof):
@@ -936,14 +1013,14 @@ def test_collapse_versioned_clamps_overshooting_horizon(spark, tmp_path):
     append_versioned(mk([(1, "x1", 0)]), path2, 5)
     stats2 = collapse_versioned(spark, path2, upto_batch=3, key_cols="k",
                                 seq_col="seq")
-    assert stats2 == {"batches_folded": 1, "keys": 2}
+    assert stats2 == {"batches_folded": 1, "rows": 2}
     assert BatchStore(spark, path2).batch_ids() == [2, 5]  # no phantom 3
     got2 = {r["k"]: r["v"] for r in read_versioned_asof(
         spark, path2, 2, "k", seq_col="seq").collect()}
     assert got2 == {1: "x0", 2: "y0"}
     # a horizon below every ingested id is a no-op
     assert collapse_versioned(spark, path2, 1, "k", seq_col="seq") == {
-        "batches_folded": 0, "keys": 0}
+        "batches_folded": 0, "rows": 0}
 
 
 def test_partition_checksums_detects_single_row_change(spark):

@@ -2477,9 +2477,9 @@ def test_incremental_cms_registers_replay_safe(spark, tmp_path):
 
 
 def test_upsert_batch_partition_guards_reserved_columns(spark, tmp_path):
-    """The batch-keyed upsert adds batch_id/event_seq itself — a
-    payload frame already carrying either must fail loud, not write
-    a store with duplicate column names."""
+    """The batch-keyed upsert adds batch_id itself — a payload frame
+    already carrying it must fail loud, not write a store with
+    duplicate column names."""
     import pytest
 
     from umn_eda_kafka_stream_processing_spark.stores import BatchStore
@@ -2489,7 +2489,7 @@ def test_upsert_batch_partition_guards_reserved_columns(spark, tmp_path):
     assert store.upsert(0, ok)
     got = spark.read.parquet(str(tmp_path / "s"))
     assert {r["k"] for r in got.collect()} == {1}
-    assert set(got.columns) == {"batch_id", "k", "v", "event_seq"}
+    assert set(got.columns) == {"batch_id", "k", "v"}
     bad = spark.createDataFrame([(1, 2)], "batch_id long, v long")
     with pytest.raises(ValueError, match="reserved"):
         store.upsert(1, bad)

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
+from umn_eda_kafka_stream_processing_spark.operators import runtime_filter as rf
 from umn_eda_kafka_stream_processing_spark.operators import sketches as sk
 from umn_eda_kafka_stream_processing_spark.operators.decontam import (
     benchmark_grams,
@@ -22,6 +23,9 @@ from umn_eda_kafka_stream_processing_spark.operators.quality import (
     category_registers,
     check_constraints,
     histogram_monitor_registers,
+)
+from umn_eda_kafka_stream_processing_spark.operators.versioned import (
+    latest_versions,
 )
 from umn_eda_kafka_stream_processing_spark.stores import (
     CMS_HORIZON,
@@ -175,6 +179,39 @@ def _decisions(spark, store, b):
     ), None
 
 
+def _versioned(spark, store, b):
+    # batch 1 deletes key 1 and updates key 2 twice (seq breaks the tie)
+    rows = {
+        0: [(1, "a0", 0, False), (2, "b0", 0, False)],
+        1: [(1, None, 0, True), (2, "b1", 0, False), (2, "b2", 1, False)],
+        2: [(3, "c0", 0, False), (1, "a2", 0, False)],
+    }[b]
+    return spark.createDataFrame(
+        rows, "k long, v string, seq long, del_flag boolean"
+    ), None
+
+
+def _bloom(spark, store, b):
+    rows = spark.createDataFrame(
+        [(i % 3, b * 100 + i) for i in range(30)], "part long, key long"
+    )
+    return rf.partition_bloom_index(rows, "part", "key", m_bits=256), 1
+
+
+def _dead_letters(spark, store, b):
+    from umn_eda_kafka_stream_processing_spark.streaming.runner import (
+        DEAD_LETTER_SCHEMA,
+    )
+
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(
+            [(f"md5-{b}-{i}", f'{{"id": "t{i}"}}', "down") for i in range(b + 1)],
+            1,
+        ),
+        DEAD_LETTER_SCHEMA,
+    ), None
+
+
 def _agg_merge(df):
     return df.groupBy("g").agg(F.sum("s").alias("s"), F.sum("c").alias("c"))
 
@@ -190,6 +227,11 @@ KINDS = {
     "histogram_monitor": (_histogram, None, FLOOR, "expire"),
     "category_monitor": (_categories, None, FLOOR, "expire"),
     "decision_log": (_decisions, None, HORIZON, None),
+    "versioned": (
+        _versioned, latest_versions("k", "seq", "del_flag"), HORIZON, "collapse"
+    ),
+    "bloom": (_bloom, rf.merge_bloom("part"), HORIZON, "collapse"),
+    "dead_letters": (_dead_letters, None, HORIZON, None),
 }
 FAULTS = ("after_write", "before_mark", "before_promote", "before_deletes")
 CASES = [

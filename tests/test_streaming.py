@@ -1662,52 +1662,6 @@ def test_streaming_cms_registers_merge_incrementally(spark, tmp_path):
     assert store == batch_regs
 
 
-def test_latest_by_key_stream_tws_upsert(spark, tmp_path):
-    """State-v2 twin (transformWithStateInPandas + RocksDB store):
-    identical KTable last-write-wins semantics to
-    test_latest_by_key_stream_upsert.
-
-    The state-v2 Python worker speaks protobuf to the JVM; skip when
-    google.protobuf isn't installed (this sandbox) — the operator
-    itself degrades with a clear ImportError either way."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithStateInPandas python worker needs protobuf",
-    )
-    from umn_eda_kafka_stream_processing_spark.streaming.stateful import (
-        latest_by_key_stream_tws,
-    )
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    original = spark.conf.get(provider_key)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    src_dir, name = str(tmp_path / "events"), "latest_tws"
-    try:
-        _pipe(spark, schemas.EVENT, [fx.event("e1", "a1", "v1", 100)], src_dir)
-        events = file_stream_source(
-            spark, src_dir, schemas.EVENT, max_files_per_trigger=None
-        )
-        q = start_memory_sink(latest_by_key_stream_tws(events, "id"), name)
-        try:
-            q.processAllAvailable()
-            _pipe(spark, schemas.EVENT, [fx.event("e1", "a1", "v2", 250)],
-                  src_dir, start_seq=1)
-            q.processAllAvailable()
-            rows = spark.sql(f"select * from {name} order by event_seq").collect()
-            assert rows[-1]["capacity"] == 250 and rows[-1]["venueid"] == "v2"
-            # both emissions present: one per microbatch that touched e1
-            assert [r["capacity"] for r in rows] == [100, 250]
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set(provider_key, original)
-
-
 def test_watermarked_session_window_stream(spark, tmp_path):
     """Event-time SESSION windows on a stream: events of a key closer
     than the gap merge; a session only finalizes once the watermark
@@ -2051,68 +2005,6 @@ def test_streaming_ivfpq_ingest_index_stays_queryable(spark, tmp_path):
         assert any(n >= 250 for _, n in second)
     finally:
         q.stop()
-
-
-def test_state_v2_latest_by_key_processor_logic_with_fake_handle(spark):
-    """Unit-drive the state-v2 processor (make_latest_by_key_processor)
-    against a fake handle/state: last-write-wins fold, re-pipe
-    overwrite on EQUAL seq, stale-batch rejection, cross-batch state
-    carry, and TTL plumbing — everything except the protobuf
-    transport, which this sandbox cannot run (the end-to-end test
-    importorskips on protobuf)."""
-    import pandas as pd
-
-    from umn_eda_kafka_stream_processing_spark.streaming.stateful import (
-        make_latest_by_key_processor,
-    )
-
-    class FakeValueState:
-        def __init__(self):
-            self.value = None
-
-        def get(self):
-            return self.value
-
-        def update(self, v):
-            self.value = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.ttl = "unset"
-            self.state = FakeValueState()
-
-        def getValueState(self, name, schema, ttl):
-            self.ttl = ttl
-            return self.state
-
-    cols = ["key", "user_id", "amount", "event_seq"]
-    proc = make_latest_by_key_processor("event_seq", cols, ttl_ms=5000)
-    handle = FakeHandle()
-    proc.init(handle)
-    assert handle.ttl == 5000  # native TTL reaches getValueState
-
-    def batch(rows):
-        return pd.DataFrame(rows, columns=cols)
-
-    # batch 1: two updates for the key — emits the max-seq row
-    out = list(proc.handleInputRows(
-        ("u1",), [batch([("u1", 1, 10, 1), ("u1", 1, 40, 3)])], None))
-    assert len(out) == 1 and out[0].iloc[0]["amount"] == 40
-
-    # batch 2: STALE update (seq 2 < held 3) — state keeps amount 40
-    out = list(proc.handleInputRows(("u1",), [batch([("u1", 1, 99, 2)])], None))
-    assert out and out[0].iloc[0]["amount"] == 40
-
-    # batch 3: EQUAL seq overwrites (KTable re-pipe semantics: >=)
-    out = list(proc.handleInputRows(("u1",), [batch([("u1", 1, 77, 3)])], None))
-    assert out and out[0].iloc[0]["amount"] == 77
-
-    # batch 4: empty input — no emission, state untouched
-    out = list(proc.handleInputRows(("u1",), [batch([])], None))
-    assert out == []
-    assert handle.state.get()[0] == 3
-
-    proc.close()
 
 
 def test_fk_table_join_left_outer_emits_null_extended(spark, tmp_path):

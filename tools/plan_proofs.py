@@ -241,12 +241,14 @@ def _global_table_plan(spark, sf_dir):
 def _fk_join_right_batch_plan(spark, sf_dir):
     """The KIP-213 FK-join right-batch fan-out against a BUCKET-
     partitioned left store (streaming/fk_join.py, n_fk_buckets):
-    exactly the per-microbatch plan on_right_rows builds — touched-
-    bucket filter, broadcast FK semi-join, fk_join_snapshot — over a
-    store laid out like the streaming path writes it."""
+    exactly the per-microbatch plan on_right_rows builds — the store's
+    bucket-pruned read, broadcast FK semi-join, fk_join_snapshot — over
+    a left store written by the same `SnapshotStore` the streaming
+    path uses."""
     import tempfile
 
     from umn_eda_kafka_stream_processing_spark.sources.parquet import load_table
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
     from umn_eda_kafka_stream_processing_spark.streaming.fk_join import (
         fk_join_snapshot,
     )
@@ -255,27 +257,22 @@ def _fk_join_right_batch_plan(spark, sf_dir):
     # exhibit's scan must still be listable while it executes)
     root = tempfile.mkdtemp(prefix="fkplan-")
     _TEMP_ROOTS.append(root)
-    (
-        load_table(spark, sf_dir, "orders")
-        .select(
+    left = SnapshotStore(
+        spark, f"{root}/left", "ticket_id", "_fkb", "event_seq",
+        n_buckets=32, bucket_on="event_id",
+    )
+    left.upsert(
+        load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey").alias("ticket_id"),
             F.col("o_custkey").alias("event_id"),
             F.lit(1).cast("long").alias("event_seq"),
         )
-        .withColumn("_fkb", F.pmod(F.hash("event_id"), F.lit(32)))
-        .write.mode("overwrite").partitionBy("_fkb").parquet(root)
     )
-    left_snap = spark.read.parquet(root)
     rbatch = spark.createDataFrame([(1,), (2,), (3,)], "event_id long")
-    buckets = [
-        r["b"]
-        for r in rbatch.select(
-            F.pmod(F.hash("event_id"), F.lit(32)).alias("b")
-        ).distinct().collect()
-    ]
-    pruned = left_snap.filter(F.col("_fkb").isin(buckets))
     touched = rbatch.select("event_id").distinct()
-    affected = pruned.join(F.broadcast(touched), "event_id", "left_semi")
+    affected = left.read(near=touched).join(
+        F.broadcast(touched), "event_id", "left_semi"
+    )
     right_snap = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("event_id"), F.col("c_name").alias("venue")
     )
@@ -319,6 +316,25 @@ CUSTOM_EXHIBITS = [
 ]
 
 
+def _section(spark, sf_dir, name, claim, builder) -> list[str]:
+    """One exhibit's PLAN_PROOFS.md section: the builder's executed
+    plan (AQE final), filtered to the lines that prove the claim."""
+    df = builder(spark, sf_dir)
+    df.write.format("noop").mode("overwrite").save()  # finalize AQE
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    lines = []
+    for raw in plan.splitlines():
+        line = raw.strip()
+        if KEEP.search(line):
+            # FileScan lines pack DataFilters before the
+            # PartitionFilters the bucketed-store exhibits exist
+            # to show — give scans enough width to reach them
+            width = 420 if "PartitionFilters" in line else 240
+            lines.append(line[:width])
+    return [f"## {name}", "", f"**Claim:** {claim}.", "", "```",
+            *lines[:18], "```", ""]
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(app_name="plan-proofs")
@@ -336,26 +352,7 @@ def main() -> int:
         for name, claim in EXHIBITS
     ] + CUSTOM_EXHIBITS
     for name, claim, builder in exhibits:
-        df = builder(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()  # finalize AQE
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        lines = []
-        for raw in plan.splitlines():
-            line = raw.strip()
-            if KEEP.search(line):
-                # FileScan lines pack DataFilters before the
-                # PartitionFilters the bucketed-store exhibits exist
-                # to show — give scans enough width to reach them
-                width = 420 if "PartitionFilters" in line else 240
-                lines.append(line[:width])
-        out.append(f"## {name}")
-        out.append("")
-        out.append(f"**Claim:** {claim}.")
-        out.append("")
-        out.append("```")
-        out.extend(lines[:18])
-        out.append("```")
-        out.append("")
+        out.extend(_section(spark, sf_dir, name, claim, builder))
     with open(os.path.join(os.path.dirname(os.path.dirname(
             os.path.abspath(__file__))), "PLAN_PROOFS.md"), "w") as f:
         f.write("\n".join(out))

@@ -30,11 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from umn_eda_kafka_stream_processing_spark.stores import (
-    FLOOR,
-    BatchStore,
-    read_or_empty,
-)
+from umn_eda_kafka_stream_processing_spark.stores import FLOOR, BatchStore
 
 _ROW_LOCAL = {"not_null", "range", "accepted_values", "regex"}
 
@@ -368,12 +364,9 @@ def category_registers(
     # the store read is register-sized when the contract holds —
     # exactly what the guard protects
     occupied = regs.select("col_name", "category")
-    occupied = read_or_empty(
-        lambda: occupied.unionByName(
-            store.scan().select("col_name", "category")
-        ),
-        occupied,
-    )
+    live = store.scan()
+    if live is not None:
+        occupied = occupied.unionByName(live.select("col_name", "category"))
     burst = (
         occupied.distinct()
         .groupBy("col_name")

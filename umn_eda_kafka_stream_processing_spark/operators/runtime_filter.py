@@ -28,8 +28,12 @@ tables (broadcast territory); this family targets the fact⋈selective
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
 WORD_BITS = 32
 
@@ -209,12 +213,8 @@ def partition_bloom_select(
     """Partitions whose bloom MAY contain ``value`` — the bounded
     plan-time selection (collected index rows in, partition values
     out; feeds a partition-pruned read). A partition passes iff every
-    required word has all its required bits set (two of the k
-    positions can share a word — the mask is OR-combined)."""
-    need: dict[int, int] = {}
-    for pos in py_bloom_positions(value, m_bits, k_hashes, salt):
-        w, b = pos // WORD_BITS, pos % WORD_BITS
-        need[w] = need.get(w, 0) | (1 << b)
+    required word has all its required bits set (`bloom_needed_words`)."""
+    need = bloom_needed_words(value, m_bits, k_hashes, salt)
     have: dict = {}
     for r in index_rows:
         have.setdefault(r[part_col], {})[r["w"]] = r["bits"]
@@ -287,6 +287,16 @@ def partition_bloom_select_df(
     return sorted(r[part_col] for r in passing)
 
 
+def merge_bloom(part_col: str) -> Callable[[DataFrame], DataFrame]:
+    """The bloom register-store merge (`stores.BatchStore`): bit_or per
+    (partition, word) — OR is associative and commutative, so a store
+    of per-batch `partition_bloom_index` registers reads and collapses
+    to exactly the index built from all keys at once."""
+    return lambda regs: regs.groupBy(part_col, "w").agg(
+        F.bit_or("bits").alias("bits")
+    )
+
+
 def upsert_bloom_registers(
     batch_df: DataFrame,
     store_path: str,
@@ -300,34 +310,25 @@ def upsert_bloom_registers(
     """Incrementally-maintained partition bloom index — the skipping
     index as a foreachBatch store (the HLL/CMS register-store shape):
     each microbatch writes ITS OWN batch's per-partition filter words
-    under ``batch_id=N`` (operators/versioned.py append — a dynamic
-    overwrite of exactly that partition, so an at-least-once replay
-    rewrites identical rows instead of OR-ing them twice; bit_or is
-    idempotent anyway, but the per-batch layout also buys horizon
-    collapse and time travel for free). Read through
-    ``read_bloom_index``: bit_or across batches == the filter built
-    from all keys at once (OR is associative/commutative), which the
-    test pins exactly.
+    as batch ``batch_id`` of a `stores.BatchStore`, so an at-least-once
+    replay rewrites identical rows instead of OR-ing them twice (bit_or
+    is idempotent anyway, but the per-batch layout also buys horizon
+    collapse for free). Read through ``read_bloom_index``: bit_or
+    across batches == the filter built from all keys at once, which
+    the test pins exactly.
 
     Append-only contract: blooms cannot forget — after erase_keys /
     TTL sweeps, rebuild the affected partitions' registers (the
     standard bloom limitation, stated rather than hidden).
     """
-    from umn_eda_kafka_stream_processing_spark.operators.versioned import (
-        append_versioned,
-    )
-
     regs = partition_bloom_index(
         batch_df, part_col, key_col, m_bits, k_hashes, salt
     )
-    append_versioned(regs, store_path, batch_id=batch_id)
+    BatchStore(batch_df.sparkSession, store_path).upsert(batch_id, regs)
 
 
-def read_bloom_index(spark, store_path: str, part_col: str) -> DataFrame:
-    """Merged (part, w, bits) view of the incremental bloom store:
-    one bit_or hash-agg across batch registers."""
-    return (
-        spark.read.parquet(store_path)
-        .groupBy(part_col, "w")
-        .agg(F.bit_or("bits").alias("bits"))
-    )
+def read_bloom_index(spark, store_path: str, part_col: str) -> DataFrame | None:
+    """Merged (part, w, bits) view of the incremental bloom store (one
+    bit_or hash-agg across batch registers), or None before the first
+    batch."""
+    return BatchStore(spark, store_path, merge_bloom(part_col)).read()

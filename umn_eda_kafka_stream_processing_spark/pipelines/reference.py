@@ -200,6 +200,28 @@ def out_of_state_sales(
     return grouped_count(out_of_state, ["venueid", "venuename"])
 
 
+def tickets_with_genre(
+    tickets: DataFrame, events: DataFrame, artists: DataFrame, *keep: str
+) -> DataFrame:
+    """tickets ⋈ EventArtist(table): each ticket's venue and its event's
+    artist genre — the enrichment of TopSellingGenreByVenue
+    (phase3/TopSellingGenreByVenue.java:60-177), shared by the batch
+    form below and the streaming form (pipelines/topologies.py).
+    ``keep`` names ticket columns carried beside ``eventid``.
+    Output: (eventid, *keep, artistid, venueid, genre)."""
+    artists_tbl = latest_by_key(artists, "id").select(
+        F.col("id").alias("artistid"), "genre"
+    )
+    event_artist = (
+        latest_by_key(events, "id")
+        .select(F.col("id").alias("eventid"), "artistid", "venueid")
+        .join(F.broadcast(artists_tbl), "artistid", "inner")
+    )
+    return tickets.select("eventid", *keep).join(
+        F.broadcast(event_artist), "eventid", "inner"
+    )
+
+
 def top_selling_genre_by_venue(
     tickets: DataFrame, events: DataFrame, artists: DataFrame, k: int = 3
 ) -> DataFrame:
@@ -210,17 +232,23 @@ def top_selling_genre_by_venue(
     genre counts in a SortedCounterMap, top(3).
     Output: (venueid, genre, count, rank).
     """
-    artists_tbl = latest_by_key(artists, "id").select(
-        F.col("id").alias("artistid"), "genre"
-    )
-    event_artist = (
-        latest_by_key(events, "id")
-        .select(F.col("id").alias("eventid"), "artistid", "venueid")
-        .join(F.broadcast(artists_tbl), "artistid", "inner")
-    )
-    enriched = tickets.select("eventid").join(F.broadcast(event_artist), "eventid", "inner")
+    enriched = tickets_with_genre(tickets, events, artists)
     counts = grouped_count(enriched, ["venueid", "genre"])
     return _topk_counts(counts, ["venueid"], "genre", k)
+
+
+def tickets_with_capacity(tickets: DataFrame, events: DataFrame) -> DataFrame:
+    """tickets rekeyed by eventid ⋈ events(table) — the capacity join of
+    PurchaseEventTicket (samples/PurchaseEventTicket.java:42-66), shared
+    by the batch form below and the streaming form
+    (streaming/stateful.py:event_status_stream).
+    Output: (eventid, ticketid, customerid, event_seq, capacity)."""
+    events_tbl = latest_by_key(events, "id").select(
+        F.col("id").alias("eventid"), "capacity"
+    )
+    return tickets.select(
+        F.col("id").alias("ticketid"), "customerid", "eventid", "event_seq"
+    ).join(F.broadcast(events_tbl), "eventid", "inner")
 
 
 def purchase_event_ticket(tickets: DataFrame, events: DataFrame) -> DataFrame:
@@ -247,13 +275,7 @@ def purchase_event_ticket(tickets: DataFrame, events: DataFrame) -> DataFrame:
     eventid; the events dim joins broadcast. The streaming twin
     (streaming/stateful.py) does the same with per-key state.
     """
-    events_tbl = latest_by_key(events, "id").select(
-        F.col("id").alias("eventid"), "capacity"
-    )
-    joined = tickets.select(
-        F.col("id").alias("ticketid"), "customerid", "eventid", "event_seq"
-    ).join(F.broadcast(events_tbl), "eventid", "inner")
-
+    joined = tickets_with_capacity(tickets, events)
     w = Window.partitionBy("eventid").orderBy("event_seq")
     status = (
         joined.withColumn("total_requested", F.row_number().over(w).cast("double"))

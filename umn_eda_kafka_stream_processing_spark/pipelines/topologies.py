@@ -48,102 +48,63 @@ class Topology:
     doc: str
 
 
-TOPOLOGIES: dict[str, Topology] = {}
-
-
-def _topology(name, inputs, outputs, doc):
-    def wrap(fn):
-        TOPOLOGIES[name] = Topology(name, inputs, outputs, fn, doc)
-        return fn
-    return wrap
-
-
-@_topology(
-    "CustomerStreamCount", ("stream",),
-    ("kafka-workshop-customer-stream-count",),  # CustomerStreamCount.java:20
-    "Count of listen-events per customer.",
-)
-def _customer_stream_count(stream: DataFrame) -> DataFrame:
-    return ref.customer_stream_count(stream)
-
-
-@_topology(
-    "ArtistTicketCount", ("ticket", "event"),
-    ("kafka-workshop-artist-ticket-count",),  # ArtistTicketCount.java:15
-    "Tickets sold per artist via the events table.",
-)
-def _artist_ticket_count(ticket: DataFrame, event: DataFrame) -> DataFrame:
-    return ref.artist_ticket_count(ticket, event)
-
-
-@_topology(
-    "TargetCustomerFilter", ("customer",),
-    ("kafka-workshop-target-customers",),  # TargetCustomerFilter.java:25
-    "Merge legacy+current customers, keep the 1990-1999 birth decade.",
-)
-def _target_customer_filter(customer: DataFrame) -> DataFrame:
-    return ref.target_customer_filter(customer)
-
-
-@_topology(
-    "AddressSortAndStringify", ("address",),
-    # MN branch first, then default (AddressSortAndStringify.java:25-26)
-    ("kafka-workshop-priority-addresses", "kafka-workshop-addresses-by-state"),
-    "Stringify addresses keyed by state; MN branch split out.",
-)
-def _address_sort_and_stringify(address: DataFrame) -> tuple[DataFrame, DataFrame]:
-    return ref.address_sort_and_stringify(address)
-
-
-@_topology(
-    "TopCustomerArtists", ("stream",),
-    ("kafka-workshop-top-10-stream-count",),  # TopCustomerArtists.java:30
-    "Top-3 streamed artists per customer.",
-)
-def _top_customer_artists(stream: DataFrame) -> DataFrame:
-    return ref.top_customer_artists(stream)
-
-
-@_topology(
-    "PurchaseEventTicket", ("ticket", "event"),
-    ("kafka-workshop-ticket-response",),  # PurchaseEventTicket.java:24
-    "Ticket confirmations vs event capacity with 3-way branch.",
-)
-def _purchase_event_ticket(ticket: DataFrame, event: DataFrame) -> DataFrame:
-    return ref.purchase_event_ticket(ticket, event)
-
-
-@_topology(
-    "TopStreamingArtistByState", ("stream", "artist", "customer", "address"),
-    ("kafka-workshop-top-streaming-artist-by-state",),  # TopStreamingArtistByState.java:54
-    "Stream counts per (artist, customer-state).",
-)
-def _top_streaming_artist_by_state(
-    stream: DataFrame, artist: DataFrame, customer: DataFrame, address: DataFrame
-) -> DataFrame:
-    return ref.top_streaming_artist_by_state(stream, artist, customer, address)
-
-
-@_topology(
-    "OutOfStateSales", ("ticket", "event", "venue", "address"),
-    ("kafka-workshop-out-of-state-sales-ratio",),  # OutOfStateSales.java:46
-    "Per-venue out-of-state ticket sale counts.",
-)
-def _out_of_state_sales(
-    ticket: DataFrame, event: DataFrame, venue: DataFrame, address: DataFrame
-) -> DataFrame:
-    return ref.out_of_state_sales(ticket, event, venue, address)
-
-
-@_topology(
-    "TopSellingGenreByVenue", ("ticket", "event", "artist"),
-    ("kafka-workshop-top-selling-genre-by-venue",),  # TopSellingGenreByVenue.java:38
-    "Top-3 ticket-selling genres per venue.",
-)
-def _top_selling_genre_by_venue(
-    ticket: DataFrame, event: DataFrame, artist: DataFrame
-) -> DataFrame:
-    return ref.top_selling_genre_by_venue(ticket, event, artist)
+TOPOLOGIES: dict[str, Topology] = {t.name: t for t in (
+    Topology(
+        "CustomerStreamCount", ("stream",),
+        ("kafka-workshop-customer-stream-count",),  # CustomerStreamCount.java:20
+        ref.customer_stream_count,
+        "Count of listen-events per customer.",
+    ),
+    Topology(
+        "ArtistTicketCount", ("ticket", "event"),
+        ("kafka-workshop-artist-ticket-count",),  # ArtistTicketCount.java:15
+        ref.artist_ticket_count,
+        "Tickets sold per artist via the events table.",
+    ),
+    Topology(
+        "TargetCustomerFilter", ("customer",),
+        ("kafka-workshop-target-customers",),  # TargetCustomerFilter.java:25
+        ref.target_customer_filter,
+        "Merge legacy+current customers, keep the 1990-1999 birth decade.",
+    ),
+    Topology(
+        "AddressSortAndStringify", ("address",),
+        # MN branch first, then default (AddressSortAndStringify.java:25-26)
+        ("kafka-workshop-priority-addresses", "kafka-workshop-addresses-by-state"),
+        ref.address_sort_and_stringify,
+        "Stringify addresses keyed by state; MN branch split out.",
+    ),
+    Topology(
+        "TopCustomerArtists", ("stream",),
+        ("kafka-workshop-top-10-stream-count",),  # TopCustomerArtists.java:30
+        ref.top_customer_artists,
+        "Top-3 streamed artists per customer.",
+    ),
+    Topology(
+        "PurchaseEventTicket", ("ticket", "event"),
+        ("kafka-workshop-ticket-response",),  # PurchaseEventTicket.java:24
+        ref.purchase_event_ticket,
+        "Ticket confirmations vs event capacity with 3-way branch.",
+    ),
+    Topology(
+        "TopStreamingArtistByState", ("stream", "artist", "customer", "address"),
+        ("kafka-workshop-top-streaming-artist-by-state",),  # TopStreamingArtistByState.java:54
+        ref.top_streaming_artist_by_state,
+        "Stream counts per (artist, customer-state).",
+    ),
+    Topology(
+        "OutOfStateSales", ("ticket", "event", "venue", "address"),
+        ("kafka-workshop-out-of-state-sales-ratio",),  # OutOfStateSales.java:46
+        ref.out_of_state_sales,
+        "Per-venue out-of-state ticket sale counts.",
+    ),
+    Topology(
+        "TopSellingGenreByVenue", ("ticket", "event", "artist"),
+        ("kafka-workshop-top-selling-genre-by-venue",),  # TopSellingGenreByVenue.java:38
+        ref.top_selling_genre_by_venue,
+        "Top-3 ticket-selling genres per venue.",
+    ),
+)}
 
 
 def run_batch(
@@ -177,56 +138,22 @@ def run_stream(
     Sink the result with streaming/runner.py (update mode) against
     TOPOLOGIES[name].outputs.
     """
-    from pyspark.sql import functions as F
-
-    from umn_eda_kafka_stream_processing_spark.operators.core import latest_by_key
-    from umn_eda_kafka_stream_processing_spark.pipelines import reference as r
     from umn_eda_kafka_stream_processing_spark.streaming.stateful import (
         event_status_stream,
         topk_counter_stream,
     )
 
-    dims = dims or {}
-
-    if name == "CustomerStreamCount":
-        return r.customer_stream_count(streams["stream"])
-    if name == "ArtistTicketCount":
-        return r.artist_ticket_count(streams["ticket"], dims["event"])
-    if name == "TargetCustomerFilter":
-        return r.target_customer_filter(streams["customer"])
-    if name == "AddressSortAndStringify":
-        return r.address_sort_and_stringify(streams["address"])
-    if name == "TopStreamingArtistByState":
-        return r.top_streaming_artist_by_state(
-            streams["stream"], dims["artist"], dims["customer"], dims["address"]
-        )
-    if name == "OutOfStateSales":
-        return r.out_of_state_sales(
-            streams["ticket"], dims["event"], dims["venue"], dims["address"]
-        )
     if name == "TopCustomerArtists":
         return topk_counter_stream(
             streams["stream"], "customerid", "artistid", k=3
         )
     if name == "PurchaseEventTicket":
-        events_tbl = latest_by_key(dims["event"], "id").select(
-            F.col("id").alias("eventid"), "capacity"
+        return event_status_stream(
+            ref.tickets_with_capacity(streams["ticket"], dims["event"])
         )
-        joined = streams["ticket"].select(
-            F.col("id").alias("ticketid"), "customerid", "eventid", "event_seq"
-        ).join(F.broadcast(events_tbl), "eventid", "inner")
-        return event_status_stream(joined)
     if name == "TopSellingGenreByVenue":
-        artists_tbl = latest_by_key(dims["artist"], "id").select(
-            F.col("id").alias("artistid"), "genre"
-        )
-        event_artist = (
-            latest_by_key(dims["event"], "id")
-            .select(F.col("id").alias("eventid"), "artistid", "venueid")
-            .join(F.broadcast(artists_tbl), "artistid", "inner")
-        )
-        enriched = streams["ticket"].select("eventid", "event_seq").join(
-            F.broadcast(event_artist), "eventid", "inner"
+        enriched = ref.tickets_with_genre(
+            streams["ticket"], dims["event"], dims["artist"], "event_seq"
         )
         return topk_counter_stream(enriched, "venueid", "genre", k=3)
-    raise KeyError(f"unknown topology {name!r}")
+    return run_batch(name, {**(dims or {}), **streams})

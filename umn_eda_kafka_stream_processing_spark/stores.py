@@ -1,6 +1,6 @@
 """The two store kinds every store pipeline shares — the latest-wins
 keyed `SnapshotStore` and the batch-keyed `BatchStore` — plus the
-Hadoop-FS handle, the store-absence rule and the concurrency helper.
+Hadoop-FS handle and the concurrency helper.
 
 The reference keeps all of its state in one abstraction — a KTable
 materialized as a persistent key-value store
@@ -9,10 +9,11 @@ samples/PurchaseEventTicket.java:44-51). Its lake-side analogue is the
 `SnapshotStore`: one row per key, upserted latest-wins, maintained in
 place (TTL, small-file compaction, key erasure). The stores whose rows
 are a pure function of their source batch — CMS and HLL registers,
-benchmark gram sets, agg-view partials, the constraint/histogram/category
-monitors, the advised pipeline's register and decision logs — are all one
-`BatchStore`. What differs between them is only the ``merge`` that folds
-batches and the marker name.
+benchmark gram sets, agg-view partials, partition bloom registers, the
+constraint/histogram/category monitors, the versioned key-value log, dead
+letters, the advised pipeline's register and decision logs and its enriched
+output — are all one `BatchStore`. What differs between them is only the
+``merge`` that folds batches and the marker name.
 
 Both kinds write through one partition rewrite (`_rewrite_partitions`):
 dynamic partition overwrite, then the deletes of partitions the job
@@ -23,12 +24,16 @@ BatchStore on-disk format (shared by every batch-keyed kind):
 * one hive partition per source batch, ``batch_id=N``, written by dynamic
   partition overwrite — a foreachBatch replay recomputes identical rows and
   rewrites its own directory, with no store read and no merge;
-* payload columns plus ``event_seq=0`` (keeps the schema interchangeable
-  with `SnapshotStore`-managed stores);
+* the payload columns as given (``batch_id`` is the one reserved name);
 * an underscore-prefixed marker FILE ``<marker>_N`` (hidden from Spark's
   parquet scans; a ``name=value`` filename would be partition-discovered)
   records a collapse horizon or a retention floor, read with one Hadoop FS
   listing — zero Spark jobs.
+
+Absence is decided by a listing too, never by a failed ``spark.read``:
+`BatchStore.scan` is None when no ``batch_id=N`` directory is live and
+`SnapshotStore.read` is None when the store root does not exist. A root
+that exists but cannot be read (no schema, corrupt footer) raises.
 """
 
 from __future__ import annotations
@@ -39,7 +44,6 @@ from typing import TypeVar
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.utils import AnalysisException
 
 from umn_eda_kafka_stream_processing_spark.operators.core import latest_by_key
 
@@ -59,19 +63,6 @@ def hadoop_fs(spark: SparkSession, path: str):
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(conf), p, jvm
-
-
-def read_or_empty(read: Callable[[], T], empty: T) -> T:
-    """``read()``, or ``empty`` when the path it reads was never written.
-    Only PATH_NOT_FOUND counts as empty; any other failure — wrong schema,
-    corrupt footer, permissions — re-raises: an audit must never report
-    "nothing there" for a store it could not actually read."""
-    try:
-        return read()
-    except AnalysisException as exc:
-        if exc.getCondition() != "PATH_NOT_FOUND":
-            raise
-        return empty
 
 
 def run_concurrently(*thunks: Callable[[], T]) -> list[T]:
@@ -188,14 +179,16 @@ def compact_changelog(
 class BatchStore:
     """A batch-keyed parquet store at ``path``.
 
-    ``merge(payload) -> DataFrame`` folds the payload rows of several
-    batches (batch_id/event_seq dropped) into rows whose read semantics
-    equal the originals': register SUM for CMS, register-wise MAX for HLL,
-    set UNION for gram sets, the final aggregates for an agg view's
-    per-batch partials (sum→sum, count→sum, min→min, max→max). `read`
-    applies it across the live batches; `collapse` applies it to fold old
-    batches into one base batch. Stores without a merge (monitors, logs)
-    read their live rows as they are.
+    ``merge(rows) -> DataFrame`` folds the live rows of several batches
+    (``batch_id`` included) into rows whose read semantics equal the
+    originals': register SUM for CMS, register-wise MAX for HLL, bit OR
+    for bloom registers, set UNION for gram sets, the final aggregates
+    for an agg view's per-batch partials (sum→sum, count→sum, min→min,
+    max→max), latest-wins by ``(batch_id, seq)`` for the versioned log.
+    Every merge selects its own output columns; a ``batch_id`` it keeps
+    is dropped from a fold. `read` applies it across the live batches;
+    `collapse` applies it to fold old batches into one base batch. Stores
+    without a merge (monitors, logs) read their live rows as they are.
 
     ``marker`` names the marker file. A horizon marker (`HORIZON`,
     `CMS_HORIZON`) is written by `collapse` and records the base batch
@@ -269,8 +262,9 @@ class BatchStore:
         """Write ``rows`` (payload columns only) as batch ``batch_id``:
         dynamic overwrite of ``batch_id=N`` — a replay rewrites the same
         directory, a crash mid-write leaves a partial directory the replay
-        overwrites wholesale. Returns False (and runs nothing) for a
-        closed batch.
+        overwrites wholesale. A replay that produces no rows leaves the
+        old directory in place: call `delete_batches` first where that
+        matters. Returns False (and runs nothing) for a closed batch.
 
         ``write_coalesce=k`` repartitions to k write tasks (one file for
         register-sized batches) — repartition, NOT coalesce: coalesce(1)
@@ -280,48 +274,52 @@ class BatchStore:
         partition (a ``parallelize(rows, 1)`` local frame)."""
         if self.closed(batch_id):
             return False
-        clash = {"batch_id", "event_seq"} & set(rows.columns)
-        if clash:
+        if "batch_id" in rows.columns:
             raise ValueError(
-                f"rows already carry reserved column(s) {sorted(clash)}"
-                " — they are added here (pass the payload columns only)"
+                "rows already carry the reserved column batch_id"
+                " — it is added here (pass the payload columns only)"
             )
-        out = rows.select(
-            F.lit(int(batch_id)).cast("long").alias("batch_id"),
-            "*",
-            F.lit(0).cast("long").alias("event_seq"),
-        )
+        out = rows.select(F.lit(int(batch_id)).cast("long").alias("batch_id"), "*")
         if write_coalesce:
             out = out.repartition(int(write_coalesce))
         _rewrite_partitions(self.spark, self.path, out, ["batch_id"])
         return True
 
-    def scan(self) -> DataFrame:
-        """The live rows, batch_id (as long — partition inference reads
-        small values as int32) and event_seq included. The marker filter
-        is on the partition column, so stale directories are pruned."""
+    def scan(self) -> DataFrame | None:
+        """The live rows, batch_id included (as long — partition
+        inference reads small values as int32), or None when no batch is
+        live: the store was never written, or retention removed every
+        batch. The marker filter is on the partition column, so stale
+        directories are pruned."""
         names = self._names()
         mark = self._mark(names)
-        df = self.spark.read.parquet(self.path)
-        if mark is not None:
-            df = df.filter(F.col("batch_id") >= mark)
-        df = df.withColumn("batch_id", F.col("batch_id").cast("long"))
-        if mark is not None and f"_fold_{mark}" in names:
-            # a collapse stopped between its marker and the promotion of
-            # its staged fold: the fold IS the base batch
-            fold = self._read_fold(mark)
-            df = df.filter(F.col("batch_id") > mark).unionByName(
-                fold.withColumn("batch_id", F.lit(mark).cast("long"))
+        # a collapse stopped between its marker and the promotion of its
+        # staged fold: the fold IS the base batch
+        staged = mark is not None and f"_fold_{mark}" in names
+        lo = mark + 1 if staged else mark
+        live = [b for b in self._ids(names) if lo is None or b >= lo]
+        df = None
+        if live:
+            df = self.spark.read.parquet(self.path)
+            if lo is not None:
+                df = df.filter(F.col("batch_id") >= lo)
+            df = df.withColumn("batch_id", F.col("batch_id").cast("long"))
+        if staged:
+            fold = self._read_fold(mark).withColumn(
+                "batch_id", F.lit(mark).cast("long")
             )
+            df = fold if df is None else df.unionByName(fold)
         return df
 
-    def read(self) -> DataFrame:
-        """The store's current value: ``merge`` over the live payload
-        rows — equal to the payload built from all batches at once (the
-        mergeable-state contract). Without a merge, the live rows."""
-        if self.merge is None:
-            return self.scan()
-        return self.merge(self.scan().drop("batch_id", "event_seq"))
+    def read(self) -> DataFrame | None:
+        """The store's current value: ``merge`` over the live rows —
+        equal to the payload built from all batches at once (the
+        mergeable-state contract). Without a merge, the live rows. None
+        when no batch is live."""
+        rows = self.scan()
+        if rows is None or self.merge is None:
+            return rows
+        return self.merge(rows)
 
     def delete_batches(self, batch_ids: list[int]) -> None:
         """Delete the ``batch_id=N`` directories outright — exact
@@ -379,14 +377,16 @@ class BatchStore:
         4. the folded-away directories are deleted (stale ones a crash
            leaves are excluded by readers and swept by the next call).
 
-        Idempotent: a second call at the same horizon folds nothing.
+        Idempotent: a second call at the same horizon folds nothing. The
+        fold is written as one file.
 
         CONTRACT: collapse only batches at/below the stream's replay
         horizon (Structured Streaming replays the LAST batch — pass
         ``current_batch - 1`` or older); the upsert guard makes a violating
         replay a no-op rather than a double count.
 
-        Returns ``{"batches_folded": n, "rows": k}``."""
+        Returns ``{"batches_folded": n, "rows": k}`` — ``k`` rows in the
+        fold."""
         names = self._names()
         prior = self._mark(names)
         staged = [n for n in names if n.startswith("_fold_")]
@@ -406,18 +406,13 @@ class BatchStore:
         if len(eligible) <= 1:
             return {"batches_folded": 0, "rows": 0}
         base = max(eligible)
-        payload = (
-            self.spark.read.parquet(self.path)
-            .filter(F.col("batch_id").isin(eligible))
-            .drop("batch_id", "event_seq")
-        )
-        fold_path = f"{self.path}/_fold_{base}"
+        rows = self.scan().filter(F.col("batch_id").isin(eligible))
         (
-            self.merge(payload)
-            .select("*", F.lit(0).cast("long").alias("event_seq"))
+            self.merge(rows)
+            .drop("batch_id")
             .repartition(1)
             .write.mode("overwrite")
-            .parquet(fold_path)
+            .parquet(f"{self.path}/_fold_{base}")
         )
         n_rows = self._read_fold(base).count()
         self._write_mark(base)
@@ -495,17 +490,21 @@ class SnapshotStore:
 
     def read(self, near: DataFrame | None = None) -> DataFrame | None:
         """The store's rows (bucket and order columns included), or None
-        when the store was never written — the one absence rule: only a
-        missing path is absent; a directory that cannot be read (no
-        schema, corrupt footer) raises.
+        when the store was never written — the absence rule: only a
+        missing root is absent (one Hadoop ``exists``, before any Spark
+        read); a directory that cannot be read (no schema, corrupt
+        footer) raises.
 
         ``near`` (a frame carrying the ``bucket_on`` columns, or the
         partition column of a store without ``n_buckets``) prunes the
         scan to the partitions holding near's keys: the partition ids
         are collected (a bounded list of ints) into an isin that lands in
         the scan's PartitionFilters."""
-        rows = read_or_empty(lambda: self.spark.read.parquet(self.path), None)
-        if rows is None or near is None:
+        fs, root, _ = hadoop_fs(self.spark, self.path)
+        if not fs.exists(root):
+            return None
+        rows = self.spark.read.parquet(self.path)
+        if near is None:
             return rows
         part = self._bucket() if self.n_buckets else F.col(self.parts[0])
         ids = [r[0] for r in near.select(part).distinct().collect()]

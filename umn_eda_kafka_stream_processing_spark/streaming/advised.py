@@ -25,8 +25,8 @@ Scale shape per batch:
 * the DECISION reads only the two register stores (≤1024·batches
   rows; horizon-collapsible) — never the data;
 * the join executes through `join_with_strategy`, and the enriched
-  output lands batch_id-partitioned with dynamic overwrite, so an
-  at-least-once replay rewrites its own partition.
+  output is one more `BatchStore`, so an at-least-once replay rewrites
+  its own partition.
 """
 
 from __future__ import annotations
@@ -53,7 +53,6 @@ from umn_eda_kafka_stream_processing_spark.stores import (
     CMS_HORIZON,
     BatchStore,
     SnapshotStore,
-    read_or_empty,
     run_concurrently,
 )
 
@@ -143,10 +142,10 @@ def make_advised_enrichment_batch_fn(
     3. enrich the batch against a FRESH dim snapshot read (the
        GlobalKTable refresh rule: never cache the dim across
        batches) via `join_with_strategy` under the decided shape;
-    4. write the enriched batch under ``out_path/batch_id=N``
-       (dynamic overwrite — a replayed batch rewrites its own
-       partition) and the decision row into the replay-safe
-       ``decisions_path`` log keyed by batch_id.
+    4. write the enriched batch as batch ``N`` of the `BatchStore`
+       at ``out_path`` (a replayed batch rewrites its own partition)
+       and the decision row into the replay-safe ``decisions_path``
+       log keyed by batch_id.
 
     ``how`` must be left-preserving (inner/left/semi/anti) — the
     salted branch explodes the right side per salt (salted_join's
@@ -170,6 +169,7 @@ def make_advised_enrichment_batch_fn(
     left = BatchStore(spark, left_regs_path, merge_cms, CMS_HORIZON)
     right = BatchStore(spark, right_regs_path, merge_cms, CMS_HORIZON)
     decisions = BatchStore(spark, decisions_path)
+    out = BatchStore(spark, out_path)
     # DRIVER-CACHED register state (the per-batch decision fast path):
     # CMS registers are <= 1024 rows by construction, so the fact
     # side folds its own upserts into a driver dict and the dim side
@@ -184,13 +184,10 @@ def make_advised_enrichment_batch_fn(
                    "right_ids": None, "right_rows": None}
 
     def _store_rows(store: BatchStore):
-        return read_or_empty(
-            lambda: [
-                (r["row"], r["bucket"], r["cnt"])
-                for r in store.read().collect()
-            ],
-            [],
-        )
+        regs = store.read()
+        if regs is None:
+            return []
+        return [(r["row"], r["bucket"], r["cnt"]) for r in regs.collect()]
 
     def fn(batch_df: DataFrame, batch_id: int) -> None:
         # no localCheckpoint — the source-derived microbatch never
@@ -292,15 +289,7 @@ def make_advised_enrichment_batch_fn(
             # register state it reads is unchanged — rewrites the same
             # partition) touch DISJOINT stores
             run_concurrently(
-                lambda: (
-                    enriched.withColumn(
-                        "batch_id", F.lit(int(batch_id)).cast("long")
-                    )
-                    .write.mode("overwrite")
-                    .partitionBy("batch_id")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .parquet(out_path)
-                ),
+                lambda: out.upsert(batch_id, enriched, write_coalesce=None),
                 lambda: decisions.upsert(batch_id, log, write_coalesce=None),
             )
 

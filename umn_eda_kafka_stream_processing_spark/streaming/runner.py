@@ -25,11 +25,10 @@ import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from umn_eda_kafka_stream_processing_spark.stores import hadoop_fs, read_or_empty
+from umn_eda_kafka_stream_processing_spark.stores import BatchStore, hadoop_fs
 
 
 def file_stream_source(
@@ -189,15 +188,14 @@ def make_per_record_batch_fn(
     * with ``dead_letter_dir`` — failures come BACK AS DATA: the
       batch runs through ``mapPartitions`` yielding one
       (record_md5, record_json, error) row per exhausted record, and
-      the failures land as ONE DataFrame write under
-      ``dead_letter_dir/batch_id=N`` (JSON lines, dynamic partition
-      overwrite). The write goes through Spark's committers — it
-      works identically on file:/, HDFS, S3A, GCS — and a replayed
-      batch REWRITES its own batch_id partition instead of
-      duplicating letters (the batch-partitioned store rule). Never
-      executor-local ``open()``: on a real cluster those files land
-      on whichever node processed the record and vanish when it
-      recycles (round-11 verdict).
+      the failures land as ONE DataFrame write: batch ``N`` of a
+      `stores.BatchStore` at ``dead_letter_dir`` (parquet; ``record``
+      keeps the JSON payload). The write goes through Spark's
+      committers — it works identically on file:/, HDFS, S3A, GCS —
+      and a replayed batch REWRITES its own batch_id partition instead
+      of duplicating letters. Never executor-local ``open()``: on a
+      real cluster those files land on whichever node processed the
+      record and vanish when it recycles (round-11 verdict).
 
     The single write action also triggers the deliveries themselves
     (the mapPartitions is its lineage), so a zero-failure batch still
@@ -243,46 +241,31 @@ def make_per_record_batch_fn(
             batch_df.rdd.mapPartitions(deliver_partition),
             DEAD_LETTER_SCHEMA,
         )
-        # clear this batch's previous letters FIRST: dynamic overwrite
-        # only rewrites batch_id=N when the replay produces >= 1
-        # failed row, so a replay whose previously-poisoned records
-        # now all succeed would otherwise leave the first attempt's
-        # stale letters reporting failures for records that were
-        # actually delivered (round-12 advice). Hadoop FS (resolved
-        # from the batch's own session — survives a driver move, works
-        # on file:/, HDFS, S3A alike); at-least-once covers the crash
-        # window between delete and write — the batch replays whole.
-        fs, _, jvm = hadoop_fs(spark, dead_letter_dir)
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(
-                f"{dead_letter_dir}/batch_id={int(batch_id)}"
-            ),
-            True,
-        )
-        (
-            failed.withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .json(dead_letter_dir)
-        )
-        spark.catalog.refreshByPath(dead_letter_dir)
+        # clear this batch's previous letters FIRST: the overwrite only
+        # rewrites batch_id=N when the replay produces >= 1 failed row,
+        # so a replay whose previously-poisoned records now all succeed
+        # would otherwise leave the first attempt's stale letters
+        # reporting failures for records that were actually delivered
+        # (round-12 advice); at-least-once covers the crash window
+        # between delete and write — the batch replays whole
+        letters = BatchStore(spark, dead_letter_dir)
+        letters.delete_batches([batch_id])
+        letters.upsert(batch_id, failed, write_coalesce=None)
 
     return batch_fn
 
 
 def read_dead_letters(spark: SparkSession, dead_letter_dir: str) -> DataFrame:
     """The dead-letter table: (batch_id, record_md5, record, error).
-    A NEVER-WRITTEN dir is an empty frame (zero failures is the
-    normal state); any other read failure — permissions, corruption
-    — re-raises: a failure audit must never report 'no failures'
-    against a store it could not actually read (the erase_keys
-    rule)."""
-    schema = DEAD_LETTER_SCHEMA + ", batch_id long"
-    return read_or_empty(
-        lambda: spark.read.schema(schema).json(dead_letter_dir),
-        spark.createDataFrame([], schema),
-    ).select("batch_id", "record_md5", "record", "error")
+    A store with no letters is an empty frame (zero failures is the
+    normal state); a store that exists but cannot be read —
+    permissions, corruption — raises: a failure audit must never
+    report 'no failures' against a store it could not actually read
+    (the erase_keys rule)."""
+    rows = BatchStore(spark, dead_letter_dir).scan()
+    if rows is None:
+        rows = spark.createDataFrame([], DEAD_LETTER_SCHEMA + ", batch_id long")
+    return rows.select("batch_id", "record_md5", "record", "error")
 
 
 def start_per_record_sink(

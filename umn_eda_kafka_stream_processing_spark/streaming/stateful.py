@@ -239,99 +239,3 @@ def topk_counter_stream(
     return df.groupBy(group_col).applyInPandasWithState(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
     )
-
-
-def latest_by_key_stream_tws(
-    df: DataFrame,
-    key_cols: str | list[str],
-    order_col: str = "event_seq",
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """``latest_by_key_stream`` on Spark 4's state-v2 API
-    (``transformWithStateInPandas``): same KTable last-write-wins
-    changelog semantics, same output schema, but the state lives in
-    typed per-state variables with NATIVE TTL (``getValueState(...,
-    ttlDurationMs)``) instead of a processing-time timeout loop, and
-    the store is the RocksDB provider state-v2 requires.
-
-    Why both exist: ``applyInPandasWithState`` is the widely-deployed
-    API and needs no store opt-in; this is the forward path — at
-    100 TB keyspaces the state-v2 RocksDB store adds changelog
-    checkpointing (incremental, not full-snapshot) and per-state TTL
-    enforced store-side, so dead keys age out without a timer firing
-    per key (reference: builder.table(...),
-    samples/PurchaseEventTicket.java:44-51 — the store the reference
-    keeps forever, SURVEY.md §2.8).
-
-    Requires ``spark.sql.streaming.stateStore.providerClass`` =
-    RocksDBStateStoreProvider (state-v2 rejects the HDFS-backed
-    default) and the ``protobuf`` package (the state-v2 Python worker
-    speaks protobuf to the JVM; absent in this sandbox, so the
-    end-to-end test importorskips). The processor LOGIC — the
-    last-write-wins fold, re-pipe-overwrite ties, state encoding,
-    TTL plumbing — is factored into
-    ``make_latest_by_key_processor`` and unit-tested against a fake
-    handle/state, so only the protobuf transport itself is
-    unverified here; ``applyInPandasWithState`` twins above carry
-    the end-to-end verdicts.
-    """
-    keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    out_schema = df.schema
-    payload_cols = [f.name for f in out_schema.fields]
-    # state TTL is clocked by processing time; without a TTL no time
-    # semantics are needed at all
-    time_mode = "processingTime" if ttl_ms else "none"
-    return df.groupBy(*keys).transformWithStateInPandas(
-        make_latest_by_key_processor(order_col, payload_cols, ttl_ms),
-        out_schema,
-        "update",
-        time_mode,
-    )
-
-
-def make_latest_by_key_processor(
-    order_col: str, payload_cols: list[str], ttl_ms: int | None = None
-):
-    """The state-v2 processor behind ``latest_by_key_stream_tws``,
-    exposed as a factory so its semantics are unit-testable with a
-    fake StatefulProcessorHandle (tests/test_streaming.py) even where
-    the protobuf transport the real worker needs is unavailable."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _LatestByKey(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._latest = handle.getValueState(
-                "latest", "seq BIGINT, row STRING", ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            held = self._latest.get()
-            best_seq = held[0] if held else None
-            best_row = (
-                pickle.loads(base64.b64decode(held[1])) if held else None
-            )
-            n_seen = 0
-            for pdf in rows:
-                if len(pdf) == 0:
-                    continue
-                n_seen += len(pdf)
-                pdf = pdf.sort_values(order_col)
-                last = pdf.iloc[-1]
-                if best_seq is None or int(last[order_col]) >= best_seq:
-                    best_seq = int(last[order_col])
-                    best_row = {c: last[c] for c in payload_cols}
-            # emit the key's latest on any real input (update-mode
-            # per-record semantics: stale input re-emits the held
-            # winner) — but an all-empty chunk iterator must not
-            # re-emit or rewrite state
-            if n_seen and best_row is not None:
-                self._latest.update((best_seq, _pickle_state(best_row)))
-                yield pd.DataFrame([best_row], columns=payload_cols)
-
-        def close(self) -> None:
-            pass
-
-    return _LatestByKey()
