@@ -1,7 +1,9 @@
 """The shared store layer (stores.py): crash injection over every store
-kind kept in a `BatchStore`, the concurrency helper's join-then-raise
-contract, the advised pipeline's no-orphaned-write guarantee, and the
-`SnapshotStore` absence rule (URI stores, empty first batches)."""
+kind kept in a `BatchStore` and over every operator built on
+`SnapshotStore.advance`, the concurrency helper's join-then-raise
+contract, the advised pipeline's no-orphaned-write guarantee, the
+`SnapshotStore` absence rule (URI stores, empty first batches), bucket
+pruning read through the scan metric, and the fold's file sizing."""
 
 from __future__ import annotations
 
@@ -364,6 +366,7 @@ def test_seen_stores_read_back_through_a_uri(spark, tmp_path):
         incremental_simhash_dedup(
             spark.createDataFrame([(i, text)], "doc_id long, text string"),
             store,
+            i,
         ).count()
         for i in (1, 2)
     ]
@@ -417,3 +420,339 @@ def test_incremental_op_after_an_empty_first_batch_equals_from_scratch(
         )
 
     assert matrix(resumed) == matrix(fresh) != []
+
+
+def test_simhash_dedup_replay_keeps_the_same_docs(spark, tmp_path):
+    """A foreachBatch replay of a SimHash dedup batch, with its batch
+    id, keeps what the first attempt kept: the probe ignores the rows
+    the first attempt admitted. Appending admissions made the replay
+    dedup every doc against its own first attempt."""
+    from umn_eda_kafka_stream_processing_spark.operators.dedup import (
+        incremental_simhash_dedup,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, " ".join("a%02d" % i for i in range(60))),
+         (2, " ".join("b%02d" % i for i in range(60)))],
+        "doc_id long, text string",
+    )
+    store = str(tmp_path / "seen")
+    kept = [
+        sorted(r["doc_id"] for r in incremental_simhash_dedup(docs, store, 0).collect())
+        for _ in range(2)
+    ]
+    assert kept == [[1, 2], [1, 2]]
+
+
+# --- every operator built on SnapshotStore.advance: crash and replay ------
+#
+# name -> (batch b's input frame, run(spark, batch, store path, b)). Each
+# operator lands batches 0..2; batch 2's store write crashes (before or
+# after it lands) and the batch is replayed, as a restarted stream does.
+
+
+def _ts(day):
+    from datetime import datetime, timedelta
+
+    return datetime(2024, 3, 4) + timedelta(days=day)
+
+
+def _events(spark, b):
+    kinds = ["view", "click", "purchase"]
+    return spark.createDataFrame(
+        [(u, 10 * b + i, kinds[(u + b + i) % 3], _ts(3 * b + i))
+         for u in range(4) for i in range(2)],
+        "user_id long, event_id long, event_type string, ts timestamp",
+    )
+
+
+def _span_docs(spark, b):
+    shared = "the quick brown fox jumps"
+    return spark.createDataFrame(
+        [(3 * b + i, f"{shared} {b} {i} " + "xyz" * (b + i)) for i in range(3)],
+        "doc_id long, text string",
+    )
+
+
+def _simhash_docs(spark, b):
+    base = ["w%02d" % i for i in range(60)]
+    return spark.createDataFrame(
+        [(10 * b, " ".join(base[:-1] + [f"e{b}"])),
+         (10 * b + 1, " ".join(f"n{b}_{i:02d}" for i in range(60)))],
+        "doc_id long, text string",
+    )
+
+
+def _budget_docs(spark, b):
+    return spark.createDataFrame(
+        [(["a", "b"][i % 2], f"d{b}_{i}", 3 + i) for i in range(6)],
+        "domain string, doc string, tokens long",
+    )
+
+
+def _cluster_rows(spark, b):
+    return spark.createDataFrame(
+        [(i % 2, 10 * b + i) for i in range(5)], "bucket long, vec_id long"
+    )
+
+
+def _advance_ops():
+    from umn_eda_kafka_stream_processing_spark.operators import dedup, sampling
+    from umn_eda_kafka_stream_processing_spark.operators import windows as win
+
+    return {
+        "funnel": (_events, lambda spark, df, path, b: win.incremental_funnel(
+            df, path, ["view", "click", "purchase"], b, n_buckets=4)),
+        "transitions": (_events, lambda spark, df, path, b:
+                        win.incremental_transitions(df, path, b, n_buckets=4)),
+        "retention": (_events, lambda spark, df, path, b:
+                      win.incremental_retention(df, path, b, n_buckets=4)),
+        "scd2": (_events, lambda spark, df, path, b:
+                 win.incremental_scd2(df, path, b, n_buckets=4)),
+        "span_dedup": (_span_docs, lambda spark, df, path, b:
+                       dedup.incremental_span_dedup(df, path, span_len=8, n_buckets=4)),
+        "simhash_dedup": (_simhash_docs, lambda spark, df, path, b:
+                          dedup.incremental_simhash_dedup(df, path, b)),
+        "budget_admission": (_budget_docs, lambda spark, df, path, b:
+                             sampling.incremental_budget_admission(
+                                 spark, path, df, "domain", "doc", "tokens",
+                                 {"a": 40, "b": 45}, b)),
+        "cluster_quota": (_cluster_rows, lambda spark, df, path, b:
+                          sampling.incremental_cluster_quota(
+                              spark, path, df, "bucket", "vec_id", 6, b)),
+    }
+
+
+def _rows(df):
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def advanced(spark, tmp_path_factory):
+    """op -> (its store path after batches 0..1, the clean run's batch-2
+    output and store rows); built once per operator."""
+    built: dict = {}
+
+    def get(name):
+        if name not in built:
+            make, run = _advance_ops()[name]
+            root = tmp_path_factory.mktemp(name)
+            path = str(root / "store")
+            for b in range(2):
+                run(spark, make(spark, b), path, b)
+            shutil.copytree(path, str(root / "landed"))
+            out = _rows(run(spark, make(spark, 2), path, 2))
+            assert out, "batch 2 must write rows for its replay to mean anything"
+            built[name] = (str(root / "landed"), out, _rows(spark.read.parquet(path)))
+        return built[name]
+
+    return get
+
+
+@pytest.mark.parametrize("fault", ["before_write", "after_write"])
+@pytest.mark.parametrize("name", sorted(_advance_ops()))
+def test_advance_crash_and_replay_equals_clean_run(
+    spark, tmp_path, advanced, monkeypatch, name, fault
+):
+    """A crash just before or just after batch 2's store rewrite, then
+    the replay of batch 2, leaves the store rows and the batch's output
+    exactly as a clean run: every step reads the state before its own
+    batch, also when the first attempt's write already landed."""
+    import umn_eda_kafka_stream_processing_spark.stores as stores
+
+    landed_path, clean_out, clean_rows = advanced(name)
+    make, run = _advance_ops()[name]
+    path = str(tmp_path / "store")
+    shutil.copytree(landed_path, path)
+    rewrite = stores._rewrite_partitions
+
+    def crashing(*args, **kwargs):
+        if fault == "after_write":
+            rewrite(*args, **kwargs)
+        raise Crash(f"injected {fault}")
+
+    monkeypatch.setattr(stores, "_rewrite_partitions", crashing)
+    with pytest.raises(Crash):
+        run(spark, make(spark, 2), path, 2)
+    monkeypatch.undo()
+    out = _rows(run(spark, make(spark, 2), path, 2))  # the replay
+    assert out == clean_out
+    assert _rows(spark.read.parquet(path)) == clean_rows
+
+
+# --- pruning, read through the scan metric --------------------------------
+
+
+def files_read(spark, action) -> list[int]:
+    """Run ``action`` and return each file scan's ``number of files
+    read``, over the SQL executions it started (from the SQL status
+    store, which keeps them with the UI off). ``DataFrame.inputFiles``
+    cannot show pruning: on a path-based read it lists every file."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def executions():
+        jsc.listenerBus().waitUntilEmpty()
+        store = spark._jsparkSession.sharedState().statusStore()
+        runs = store.executionsList()
+        return store, [runs.apply(i) for i in range(runs.size())]
+
+    _, before = executions()
+    seen = {int(e.executionId()) for e in before}
+    action()
+    store, after = executions()
+    counts = []
+    for e in after:
+        if int(e.executionId()) in seen:
+            continue
+        values = store.executionMetrics(e.executionId())
+        metrics = e.metrics()
+        for i in range(metrics.size()):
+            m = metrics.apply(i)
+            v = values.get(m.accumulatorId())
+            if m.name() == "number of files read" and v.isDefined():
+                counts.append(int(str(v.get()).replace(",", "")))
+    return counts
+
+
+def _bucket_files(path: str) -> int:
+    """The most data files any one bucket directory of a store holds."""
+    import os
+
+    return max(
+        sum(f.endswith(".parquet") for f in os.listdir(os.path.join(path, d)))
+        for d in os.listdir(path)
+        if "=" in d
+    )
+
+
+def _pruning_cases():
+    """name -> land(spark, keys, b, path): batch ``b`` touching one store
+    key per integer in ``keys`` (a user, a span, a store key)."""
+    from umn_eda_kafka_stream_processing_spark.operators import dedup
+    from umn_eda_kafka_stream_processing_spark.operators import windows as win
+    from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
+
+    def events(spark, keys, b):
+        return spark.createDataFrame(
+            [(u, b, "view", _ts(b)) for u in keys],
+            "user_id long, event_id long, event_type string, ts timestamp",
+        )
+
+    def doc(spark, keys, b):
+        # one doc of len(keys) + 7 distinct chars: one 8-char span per key
+        text = "".join(
+            chr(0x4E00 + (b * 997 + 31 * i) % 20000) for i in range(len(keys) + 7)
+        )
+        return spark.createDataFrame([(b, text)], "doc_id long, text string")
+
+    return {
+        "funnel": lambda s, k, b, p: win.incremental_funnel(
+            events(s, k, b), p, ["view", "click"], b),
+        "transitions": lambda s, k, b, p: win.incremental_transitions(
+            events(s, k, b), p, b),
+        "retention": lambda s, k, b, p: win.incremental_retention(
+            events(s, k, b), p, b),
+        "scd2": lambda s, k, b, p: win.incremental_scd2(events(s, k, b), p, b),
+        "span_dedup": lambda s, k, b, p: dedup.incremental_span_dedup(
+            doc(s, k, b), p, span_len=8),
+        "upsert": lambda s, k, b, p: SnapshotStore(
+            s, p, "k", "_b", n_buckets=32
+        ).upsert(s.createDataFrame([(x, b) for x in k], "k long, v long"), b),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_pruning_cases()))
+def test_one_key_batch_scans_one_bucket(spark, tmp_path, name):
+    """After a 400-key first batch into a 32-bucket store, a one-key
+    batch scans only its key's bucket: no scan reads more files than
+    one bucket directory holds. An operator on `SnapshotStore.advance`
+    scans the store once."""
+    land = _pruning_cases()[name]
+    path = str(tmp_path / "store")
+    land(spark, range(400), 0, path)
+    per_bucket = _bucket_files(path)
+    counts = files_read(spark, lambda: land(spark, [7], 1, path))
+    assert counts and max(counts) <= per_bucket, (counts, per_bucket)
+    if name != "upsert":
+        assert len(counts) == 1, counts
+
+
+def test_resweep_after_a_collapse_crashed_before_its_deletes(
+    spark, tmp_path, monkeypatch
+):
+    """`resweep_decontaminate` reads the gram store's live batches
+    only: after a collapse that crashed before deleting the folded
+    batches, the stale directories left behind are not read, and the
+    delta equals the one over a cleanly collapsed store."""
+    from umn_eda_kafka_stream_processing_spark.operators.decontam import (
+        resweep_decontaminate,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, "shared words one two three four five six seven 0"),
+         (2, " ".join(f"w0_{i}" for i in range(10))),
+         (3, " ".join(f"w2_{i}" for i in range(10)))],
+        "doc_id long, text string",
+    )
+    stores = {}
+    for name in ("clean", "crashed"):
+        store = _store(spark, "grams", str(tmp_path / name))
+        for b in range(3):
+            _land(spark, "grams", store, b)
+        stores[name] = store
+    stores["clean"].collapse(1)
+    monkeypatch.setattr(BatchStore, "delete_batches", _crash)
+    with pytest.raises(Crash):
+        stores["crashed"].collapse(1)
+    monkeypatch.undo()
+    assert 0 in stores["crashed"].batch_ids()
+
+    def resweep(store):
+        return _rows(resweep_decontaminate(spark, store.path, corpus, since_batch=0))
+
+    assert resweep(stores["crashed"]) == resweep(stores["clean"])
+
+
+def _fold_files(store, base: int) -> int:
+    import os
+
+    d = os.path.join(store.path, f"batch_id={base}")
+    return sum(f.endswith(".parquet") for f in os.listdir(d))
+
+
+def test_collapse_fold_is_sized_by_the_data(spark, tmp_path):
+    """`collapse` writes the fold with the merge's own partitioning: a
+    register-sized fold stays one file, and a versioned-log fold larger
+    than the advisory partition size (lowered here, with the minimum
+    coalesced size, so a small log spans several) is written by
+    several tasks."""
+    regs = _store(spark, "cms", str(tmp_path / "cms"))
+    for b in range(3):
+        _land(spark, "cms", regs, b)
+    assert regs.collapse(1)["batches_folded"] == 1
+    assert _fold_files(regs, 1) == 1
+
+    log = _store(spark, "versioned", str(tmp_path / "versioned"))
+    for b in range(2):
+        log.upsert(b, spark.range(20_000).select(
+            F.col("id").alias("k"),
+            F.concat(F.lit(f"value-{b}-"), F.col("id").cast("string")).alias("v"),
+            F.lit(0).cast("long").alias("seq"),
+            F.lit(False).alias("del_flag"),
+        ))
+    conf = {
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64k",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+    }
+    old = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        assert log.collapse(1)["rows"] == 20_000
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert _fold_files(log, 1) > 1

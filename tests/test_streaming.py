@@ -1332,8 +1332,8 @@ def test_incremental_simhash_near_dedup_across_batches(spark, tmp_path):
         start_foreach_batch_sink,
     )
 
-    def on_batch(batch_df, _bid):
-        fresh = incremental_simhash_dedup(batch_df, store)
+    def on_batch(batch_df, bid):
+        fresh = incremental_simhash_dedup(batch_df, store, bid)
         emitted.extend(r["doc_id"] for r in fresh.select("doc_id").collect())
 
     def write_docs(rows):

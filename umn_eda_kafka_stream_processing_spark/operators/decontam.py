@@ -143,8 +143,9 @@ def resweep_decontaminate(
     full re-sweep. This sweeps the window against ONLY the novel
     grams of batches > ``since_batch``:
 
-    * the new batches' grams come from a partition-pruned store read
-      (``batch_id > since_batch`` — exact directories);
+    * the new batches' grams come from a partition-pruned scan of the
+      live batches (``batch_id > since_batch`` — exact directories;
+      `BatchStore.scan` skips what a crashed collapse left stale);
     * grams already present in batches <= ``since_batch`` are
       anti-joined OUT (both sides benchmark-suite-sized — the
       anti-join never touches the corpus), so the delta gram set is
@@ -159,7 +160,7 @@ def resweep_decontaminate(
     against the delta grams alone — ``contaminated`` here means
     "NEWLY contaminated by the late batches" for docs the standing
     sweep cleared."""
-    store = spark.read.parquet(store_path)
+    store = BatchStore(spark, store_path).scan()
     new_grams = (
         store.filter(F.col("batch_id") > int(since_batch))
         .select("g")

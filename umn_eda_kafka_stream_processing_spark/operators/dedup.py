@@ -1244,6 +1244,7 @@ def exact_dedup_stream(
 def incremental_simhash_dedup(
     batch_df: DataFrame,
     seen_store_path: str,
+    batch_id: int,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
@@ -1260,55 +1261,59 @@ def incremental_simhash_dedup(
 
     1. in-batch: simhash_near_pairs over the batch; of every near-pair
        the larger id is dropped (deterministic keeper = min id).
-    2. history: left-anti join the survivors' (chunk_idx, chunk_val)
-       keys against the store — any hit means a neighbor candidate
-       was already admitted, so the doc is dropped. The 16-bit-chunk
-       pigeonhole guarantees recall for hamming<=3, same as the batch
-       operator; precision is the bucket's (collisions drop a
-       non-neighbor — the conservative direction for training data).
-    3. admit: append the survivors' bucket keys to the store.
+    2. history: left-semi join the survivors' (chunk_idx, chunk_val)
+       keys against the store rows of EARLIER batches — any hit means a
+       neighbor candidate was already admitted, so the doc is dropped.
+       The 16-bit-chunk pigeonhole guarantees recall for hamming<=3,
+       same as the batch operator; precision is the bucket's
+       (collisions drop a non-neighbor — the conservative direction
+       for training data).
+    3. admit: upsert the survivors' bucket keys.
 
-    The store is hash-partitioned parquet keyed by (chunk_idx,
-    chunk_val) — at scale, a Delta/Iceberg table with the same layout;
-    the anti-join stays an equi-join on the bucket key either way.
-    Wire with streaming/runner.py:start_foreach_batch_sink:
-    ``lambda b, _id: sink(incremental_simhash_dedup(b, store))``.
-    Exactly-once admission requires an idempotent downstream sink
-    (foreachBatch is at-least-once on replay). The store path may be
-    any Hadoop URI (file:, hdfs://, s3a://).
+    The store is a `stores.SnapshotStore` keyed by (chunk_idx,
+    chunk_val), hash-bucketed on that key, with ``batch_id`` as its
+    order column, advanced once per batch with its read pruned to the
+    survivors' buckets. Replay safety (the budget-admission rule): the
+    probe ignores rows carrying THIS ``batch_id``, so a replayed batch
+    sees the pre-batch history, keeps the same docs and rewrites the
+    same rows. A seen-store in the earlier append layout (unpartitioned,
+    no ``_cb`` bucket and no ``batch_id``) cannot be read here: rebuild
+    it from the source stream. Wire with
+    streaming/runner.py:start_foreach_batch_sink:
+    ``lambda b, bid: sink(incremental_simhash_dedup(b, store, bid))``.
+    The store path may be any Hadoop URI (file:, hdfs://, s3a://).
     """
     from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
-    store = SnapshotStore(batch_df.sparkSession, seen_store_path)
+    store = SnapshotStore(
+        batch_df.sparkSession, seen_store_path, ["chunk_idx", "chunk_val"],
+        "_cb", order="batch_id", n_buckets=32,
+    )
     sigs = simhash64(batch_df, text_col, id_col).localCheckpoint()
     # 1. in-batch near-pairs: drop the larger id of each pair
     pairs = _sig_near_pairs(sigs, id_col, max_hamming)
     losers = pairs.select(F.col(f"{id_col}_b").alias(id_col)).distinct()
     survivors = sigs.join(losers, id_col, "left_anti")
-    # 2. the survivors' bucket keys vs the history store
     keys = survivors.select(
         id_col,
         F.posexplode(F.array("c0", "c1", "c2", "c3")).alias("chunk_idx", "chunk_val"),
     )
-    seen = store.read()
-    if seen is not None:
-        hit = keys.join(seen, ["chunk_idx", "chunk_val"], "left_semi").select(
-            id_col
-        ).distinct()
-        survivors = survivors.join(hit, id_col, "left_anti")
-    # materialize the surviving signatures BEFORE the store append:
-    # their lineage reads the store, and lazily re-scanning a path
-    # while appending to it would race the file listing
-    survivors = survivors.localCheckpoint()
-    # 3. admit the fresh docs' buckets
-    store.append(
-        survivors.select(
-            F.posexplode(F.array("c0", "c1", "c2", "c3")).alias(
-                "chunk_idx", "chunk_val"
+
+    def step(seen: DataFrame | None) -> tuple[DataFrame, DataFrame]:
+        fresh = keys
+        if seen is not None:
+            # 2. the survivors' bucket keys vs the earlier batches' rows
+            hit = keys.join(
+                seen.where(F.col("batch_id") != int(batch_id)),
+                ["chunk_idx", "chunk_val"],
+                "left_semi",
             )
-        ).distinct()
-    )
-    return survivors.select(id_col).join(batch_df, id_col).select(*batch_df.columns)
+            fresh = keys.join(hit.select(id_col), id_col, "left_anti")
+        # 3. admit the fresh docs' buckets
+        out = batch_df.join(fresh.select(id_col), id_col, "left_semi")
+        return fresh.select("chunk_idx", "chunk_val"), out
+
+    return store.advance(step, int(batch_id), near=keys)
 
 
 def near_dup_clusters(
@@ -1701,12 +1706,12 @@ def incremental_span_dedup(
 
     The store is md5(span)-keyed parquet, hash-bucket-partitioned
     like the incremental semantic-dedup store; a key's bucket never
-    moves, so a `stores.SnapshotStore` upsert (touched-partition
-    pruned dynamic overwrite) maintains it — with ``_ord = -keeper``
-    as the order column, so the compaction's latest-wins becomes
-    MIN-keeper-wins. The lookup is one shuffle-hash join on the
-    16-byte hash; at 100 TB both sides shard uniformly (same shape as
-    `exact_dedup_groups`). Wire with
+    moves, so one `stores.SnapshotStore.advance` maintains it — a read
+    pruned to the batch spans' buckets, then the admissions merged back
+    with ``_ord = -keeper`` as the order column, so the compaction's
+    latest-wins becomes MIN-keeper-wins. The lookup is one shuffle-hash
+    join on the 16-byte hash; at 100 TB both sides shard uniformly
+    (same shape as `exact_dedup_groups`). Wire with
     streaming/runner.py:start_foreach_batch_sink:
     ``lambda b, _id: sink(incremental_span_dedup(b, store))``;
     re-admission on at-least-once replay is idempotent (min of an
@@ -1730,32 +1735,28 @@ def incremental_span_dedup(
         .localCheckpoint()
     )
     bstats = w.groupBy("h").agg(F.min(id_col).alias("_bmin"))
-    seen = store.read()
-    if seen is None:
+
+    def step(seen: DataFrame | None) -> tuple[DataFrame, DataFrame]:
         hit = bstats.select("h", F.col("_bmin").alias("_kc"))
-    else:
-        seen = seen.select("h", "keeper")
-        hit = bstats.join(seen.hint("shuffle_hash"), "h", "left").select(
-            "h",
-            F.least(
-                F.coalesce("keeper", F.col("_bmin")), F.col("_bmin")
-            ).alias("_kc"),
+        if seen is not None:
+            # least() skips NULLs: a span never admitted keeps _bmin
+            hit = bstats.join(
+                seen.select("h", "keeper").hint("shuffle_hash"), "h", "left"
+            ).select("h", F.least("keeper", "_bmin").alias("_kc"))
+        rem = (
+            w.join(hit.hint("shuffle_hash"), "h")
+            .filter(F.col("_kc") < F.col(id_col))
+            .groupBy(id_col)
+            .agg(F.array_sort(F.collect_list("pos")).alias("_poss"))
         )
-    rem = (
-        w.join(hit.hint("shuffle_hash"), "h")
-        .filter(F.col("_kc") < F.col(id_col))
-        .groupBy(id_col)
-        .agg(F.array_sort(F.collect_list("pos")).alias("_poss"))
-    )
-    # materialize the rewrite before admission mutates the store its
-    # lineage (via `hit`) reads
-    out = _rewrite_from_positions(
-        batch_df.select(id_col, text_col), rem, id_col, text_col,
-        span_len, min_run_len,
-    ).localCheckpoint()
-    admit = w.groupBy("h").agg(F.min(id_col).cast("long").alias("keeper"))
-    store.upsert(admit, -F.col("keeper"))
-    return out
+        out = _rewrite_from_positions(
+            batch_df.select(id_col, text_col), rem, id_col, text_col,
+            span_len, min_run_len,
+        )
+        admit = bstats.select("h", F.col("_bmin").cast("long").alias("keeper"))
+        return admit, out
+
+    return store.advance(step, -F.col("keeper"), near=bstats)
 
 
 def remove_duplicate_lines(

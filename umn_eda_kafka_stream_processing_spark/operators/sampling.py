@@ -642,6 +642,31 @@ def _histogram_budget_admit(
     return kept_full.unionByName(boundary).drop("below", "_mass")
 
 
+def _with_consumed(
+    frame: DataFrame,
+    prior: DataFrame | None,
+    batch_id: int,
+    store_col: str,
+    col: str,
+    mass: Column,
+) -> DataFrame:
+    """``frame`` with ``_consumed``: the ``mass`` the admitted store rows
+    of OTHER batches hold per ``col`` value (0 without any). Store
+    columns are canonical (domain/cluster, key, batch_id), independent of
+    the caller's column names; excluding THIS batch_id is what makes a
+    replay see the pre-batch state."""
+    if prior is None:
+        return frame.withColumn("_consumed", F.lit(0).cast("long"))
+    consumed = (
+        prior.filter(F.col("batch_id") != int(batch_id))
+        .groupBy(F.col(store_col).alias(col))
+        .agg(mass.cast("long").alias("_consumed"))
+    )
+    return frame.join(F.broadcast(consumed), col, "left").withColumn(
+        "_consumed", F.coalesce(F.col("_consumed"), F.lit(0))
+    )
+
+
 def incremental_budget_admission(
     spark,
     store_path: str,
@@ -691,18 +716,6 @@ def incremental_budget_admission(
     if not budgets:
         raise ValueError("budgets must be non-empty")
     store = SnapshotStore(spark, store_path, ["domain", "key"], order="event_seq")
-    prior = store.read()
-    if prior is not None:
-        # store columns are canonical (domain/key/size/batch_id),
-        # independent of the caller's column names; excluding THIS
-        # batch_id is what makes a replay see the pre-batch state
-        consumed = (
-            prior.filter(F.col("batch_id") != int(batch_id))
-            .groupBy(F.col("domain").alias(domain_col))
-            .agg(F.sum("size").cast("long").alias("_consumed"))
-        )
-    else:
-        consumed = None
     # budgets ride a broadcast rate table, never an N-branch CASE
     # chain (codegen hazard at thousands of domains — round-10 #6);
     # the inner join drops unknown domains, same as the old -1 gate
@@ -730,56 +743,51 @@ def incremental_budget_admission(
         .drop("_bud_domain")
         .withColumn("priority_micro", prio)
     )
-    if consumed is not None:
-        base = base.join(
-            F.broadcast(consumed), domain_col, "left"
-        ).withColumn("_consumed", F.coalesce(F.col("_consumed"), F.lit(0)))
-    else:
-        base = base.withColumn("_consumed", F.lit(0).cast("long"))
-    # fold consumed mass into a per-domain remaining budget:
-    # "consumed + cum_before < budget" == "cum_before < remaining"
-    base = base.withColumn(
-        "_remaining",
-        F.greatest(
-            (F.col("_budget") - F.col("_consumed")).cast("long"),
-            F.lit(0).cast("long"),
-        ),
-    )
-    if max_budget <= window_budget_max:
-        w = Window.partitionBy(domain_col).orderBy(
-            F.col("priority_micro").asc(), F.col(key_col).asc()
+
+    def step(prior: DataFrame | None) -> DataFrame:
+        cand = _with_consumed(
+            base, prior, batch_id, "domain", domain_col, F.sum("size")
         )
-        ranked = (
-            base.withColumn("_rk", F.row_number().over(w).cast("long"))
-            # lossless WindowGroupLimit pre-prune (sizes >= 1, and
-            # remaining <= budget <= max_budget)
-            .filter(F.col("_rk") <= F.lit(max(max_budget, 1)))
-        )
-        kept = ranked.withColumn(
-            "_cum",
-            F.sum(F.col(size_col).cast("long")).over(
-                w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        # fold consumed mass into a per-domain remaining budget:
+        # "consumed + cum_before < budget" == "cum_before < remaining"
+        cand = cand.withColumn(
+            "_remaining",
+            F.greatest(
+                (F.col("_budget") - F.col("_consumed")).cast("long"),
+                F.lit(0).cast("long"),
             ),
-        ).filter(
-            (F.col("_cum") - F.col(size_col)) < F.col("_remaining")
         )
-    else:
-        kept = _histogram_budget_admit(
-            base, domain_col, key_col, size_col, "_remaining", n_buckets
+        if max_budget <= window_budget_max:
+            w = Window.partitionBy(domain_col).orderBy(
+                F.col("priority_micro").asc(), F.col(key_col).asc()
+            )
+            ranked = (
+                cand.withColumn("_rk", F.row_number().over(w).cast("long"))
+                # lossless WindowGroupLimit pre-prune (sizes >= 1, and
+                # remaining <= budget <= max_budget)
+                .filter(F.col("_rk") <= F.lit(max(max_budget, 1)))
+            )
+            kept = ranked.withColumn(
+                "_cum",
+                F.sum(F.col(size_col).cast("long")).over(
+                    w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+                ),
+            ).filter(
+                (F.col("_cum") - F.col(size_col)) < F.col("_remaining")
+            )
+        else:
+            kept = _histogram_budget_admit(
+                cand, domain_col, key_col, size_col, "_remaining", n_buckets
+            )
+        return kept.select(
+            F.col(domain_col).alias("domain"),
+            F.col(key_col).alias("key"),
+            F.col(size_col).cast("long").alias("size"),
+            F.lit(int(batch_id)).alias("batch_id"),
         )
-    admitted = kept.select(
-        F.col(domain_col).alias("domain"),
-        F.col(key_col).alias("key"),
-        F.col(size_col).cast("long").alias("size"),
-        F.lit(int(batch_id)).alias("batch_id"),
-    )
-    # the admitted lineage READS the store (consumed); the upsert
-    # below OVERWRITES it — materialize first or a caller collecting
-    # the returned frame re-lists deleted part files (the
-    # localCheckpoint-before-writing-a-store-its-lineage-reads rule)
-    admitted = admitted.localCheckpoint()
-    store.upsert(admitted, F.lit(0))
-    return admitted
+
+    # the whole store: a domain's consumed total spans all its keys
+    return store.advance(step, F.lit(0))
 
 
 def incremental_cluster_quota(
@@ -825,40 +833,30 @@ def incremental_cluster_quota(
     if quota < 1:
         raise ValueError(f"quota must be >= 1, got {quota}")
     store = SnapshotStore(spark, store_path, ["cluster", "key"], order="event_seq")
-    prior = store.read()
-    if prior is not None:
-        consumed = (
-            prior.filter(F.col("batch_id") != int(batch_id))
-            .groupBy(F.col("cluster").alias(cluster_col))
-            .agg(F.count(F.lit(1)).cast("long").alias("_consumed"))
-        )
-    else:
-        consumed = None
     w = Window.partitionBy(cluster_col).orderBy(
         sample_key_u32(key_col, salt).asc(), F.col(key_col).asc()
     )
     ranked = batch_df.withColumn(
         "_rk", F.row_number().over(w).cast("long")
     ).filter(F.col("_rk") <= quota)
-    if consumed is not None:
-        ranked = (
-            ranked.join(F.broadcast(consumed), cluster_col, "left")
-            .withColumn("_consumed", F.coalesce(F.col("_consumed"), F.lit(0)))
-            .filter(
-                F.col("_rk")
-                <= F.greatest(
-                    F.lit(quota).cast("long") - F.col("_consumed"),
-                    F.lit(0).cast("long"),
-                )
+
+    def step(prior: DataFrame | None) -> DataFrame:
+        kept = _with_consumed(
+            ranked, prior, batch_id, "cluster", cluster_col, F.count(F.lit(1))
+        ).filter(
+            F.col("_rk")
+            <= F.greatest(
+                F.lit(quota).cast("long") - F.col("_consumed"), F.lit(0).cast("long")
             )
         )
-    admitted = ranked.select(
-        F.col(cluster_col).cast("long").alias("cluster"),
-        F.col(key_col).alias("key"),
-        F.lit(int(batch_id)).alias("batch_id"),
-    ).localCheckpoint()  # lineage reads the store the upsert rewrites
-    store.upsert(admitted, F.lit(0))
-    return admitted
+        return kept.select(
+            F.col(cluster_col).cast("long").alias("cluster"),
+            F.col(key_col).alias("key"),
+            F.lit(int(batch_id)).alias("batch_id"),
+        )
+
+    # the whole store: a cluster's consumed count spans all its keys
+    return store.advance(step, F.lit(0))
 
 
 def split_assign(

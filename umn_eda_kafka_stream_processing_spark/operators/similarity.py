@@ -1238,7 +1238,7 @@ def incremental_semantic_dedup(
         survivors = survivors.join(hits, id_col, "left_anti")
     # materialize BEFORE the store append: the lineage reads the
     # store path, and lazily re-scanning it mid-append races the
-    # file listing (the incremental_simhash_dedup rule)
+    # file listing
     survivors = survivors.localCheckpoint()
     store.append(survivors.select(id_col, "bucket", "_v", "_n"))
     return (

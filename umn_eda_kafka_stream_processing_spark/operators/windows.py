@@ -264,12 +264,12 @@ def incremental_funnel(
     retention + watermark-bounded recompute — out of scope here, as
     in the reference's stores.
 
-    Per batch: one store read pruned to the users' hash buckets
-    (left join on the frontier), per-step min-aggs over only that
-    step's batch events, one `SnapshotStore` upsert (bucket =
-    pmod(hash(user), n_buckets) never moves a user; ``batch_seq`` is
-    the latest-wins order). Returns the affected users' updated
-    frontier rows.
+    Per batch: one `SnapshotStore.advance` — a store read pruned to
+    the users' hash buckets (left join on the frontier), per-step
+    min-aggs over only that step's batch events, the frontier merged
+    back (bucket = pmod(hash(user), n_buckets) never moves a user;
+    ``batch_seq`` is the latest-wins order). Returns the affected
+    users' updated frontier rows.
     """
     from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
@@ -280,51 +280,51 @@ def incremental_funnel(
         user_col, F.col(type_col).alias("_et"), event_ts(ts_col).alias("_ts")
     ).localCheckpoint()
     users = ev.select(user_col).distinct()
-    old = store.read()
-    if old is not None:
-        prior = users.join(old.hint("shuffle_hash"), user_col, "left")
-    else:
-        prior = users
-        for t in tcols:
-            prior = prior.withColumn(t, F.lit(None).cast("timestamp_ntz"))
-    frontier = prior.select(user_col, *tcols)
-    for k, step in enumerate(steps, start=1):
-        # Join the step's RAW batch events to the frontier and apply
-        # the chain condition PER EVENT before the per-user min — the
-        # funnel_steps shape. Aggregating first (the round-7 code)
-        # broke the within-batch contract: a user with a step-k event
-        # before t_{k-1} and another after it had their batch min fail
-        # the strict > test and the reach dropped forever (set-once).
-        step_ev = ev.where(F.col("_et") == step).select(user_col, "_ts")
-        j = frontier.join(step_ev.hint("shuffle_hash"), user_col, "left")
-        if k == 1:
-            # least() skips NULLs, so an unset store t1 takes the min
-            new_t = F.least(F.max("t1"), F.min("_ts"))
-        else:
-            cond = F.col("_ts") > F.col(f"t{k - 1}")
-            if window is not None:
-                cond = cond & (
-                    F.col("_ts")
-                    <= F.col("t1") + F.expr(f"INTERVAL {window}")
-                )
-            cand = F.min(
-                F.when(F.coalesce(cond, F.lit(False)), F.col("_ts"))
-            )
-            # set-once: keep the stored reach if present, else admit
-            # the earliest batch event that chains from step k-1
-            new_t = F.coalesce(F.max(F.col(f"t{k}")), cand)
-        # t1..t{k-1} / t{k+1}..tN are constant per user post-join:
-        # max() re-materializes them through the single hash-agg, so
-        # each step costs exactly one join + one agg (no self-join of
-        # the frontier — the AMBIGUOUS_REFERENCE trap).
-        frontier = j.groupBy(user_col).agg(
-            *[F.max(t).alias(t) for t in tcols[: k - 1]],
-            new_t.alias(f"t{k}"),
-            *[F.max(t).alias(t) for t in tcols[k:]],
+
+    def step(old: DataFrame | None) -> DataFrame:
+        unset = [F.lit(None).cast("timestamp_ntz").alias(t) for t in tcols]
+        frontier = (
+            users.select(user_col, *unset) if old is None
+            else users.join(old.hint("shuffle_hash"), user_col, "left")
+            .select(user_col, *tcols)
         )
-    frontier = frontier.select(user_col, *tcols).localCheckpoint()
-    store.upsert(frontier, batch_seq)
-    return frontier
+        for k, step_type in enumerate(steps, start=1):
+            # Join the step's RAW batch events to the frontier and apply
+            # the chain condition PER EVENT before the per-user min — the
+            # funnel_steps shape. Aggregating first (the round-7 code)
+            # broke the within-batch contract: a user with a step-k event
+            # before t_{k-1} and another after it had their batch min fail
+            # the strict > test and the reach dropped forever (set-once).
+            step_ev = ev.where(F.col("_et") == step_type).select(user_col, "_ts")
+            j = frontier.join(step_ev.hint("shuffle_hash"), user_col, "left")
+            if k == 1:
+                # least() skips NULLs, so an unset store t1 takes the min
+                new_t = F.least(F.max("t1"), F.min("_ts"))
+            else:
+                cond = F.col("_ts") > F.col(f"t{k - 1}")
+                if window is not None:
+                    cond = cond & (
+                        F.col("_ts")
+                        <= F.col("t1") + F.expr(f"INTERVAL {window}")
+                    )
+                cand = F.min(
+                    F.when(F.coalesce(cond, F.lit(False)), F.col("_ts"))
+                )
+                # set-once: keep the stored reach if present, else admit
+                # the earliest batch event that chains from step k-1
+                new_t = F.coalesce(F.max(F.col(f"t{k}")), cand)
+            # t1..t{k-1} / t{k+1}..tN are constant per user post-join:
+            # max() re-materializes them through the single hash-agg, so
+            # each step costs exactly one join + one agg (no self-join of
+            # the frontier — the AMBIGUOUS_REFERENCE trap).
+            frontier = j.groupBy(user_col).agg(
+                *[F.max(t).alias(t) for t in tcols[: k - 1]],
+                new_t.alias(f"t{k}"),
+                *[F.max(t).alias(t) for t in tcols[k:]],
+            )
+        return frontier.select(user_col, *tcols)
+
+    return store.advance(step, batch_seq, near=users)
 
 
 def incremental_transitions(
@@ -348,10 +348,15 @@ def incremental_transitions(
     (ts, *order_cols) is non-decreasing across batches per user.
 
     Per batch: one per-user lag window WITHIN the batch (per-key
-    frames, never corpus-wide), one pruned store read joining only
-    the batch's users, one `SnapshotStore` upsert of the new per-user
-    last event (bucket = pmod(hash(user), n_buckets) never moves a
-    user; latest-wins on ``batch_seq``).
+    frames, never corpus-wide) and one `SnapshotStore.advance` — a
+    store read pruned to the batch users' buckets, joined to their
+    first events, and the new per-user last event merged back (bucket =
+    pmod(hash(user), n_buckets) never moves a user; latest-wins on
+    ``batch_seq``). Each stored row also keeps ``prev_type``, the
+    user's last event type before the batch that wrote it, so a replay
+    of that batch, which finds its own write in the store, chains from
+    the same boundary pair as the first attempt. A store written before
+    rows carried ``prev_type`` cannot be read here: rebuild it.
     Returns this batch's pairs (from_type, to_type, n).
     """
     from pyspark.sql.window import Window
@@ -367,49 +372,51 @@ def incremental_transitions(
         *[F.col(c).alias(f"_o{i}") for i, c in enumerate(order_cols)],
     ).localCheckpoint()
     okeys = [f"_o{i}" for i in range(len(order_cols))]
+    order = F.struct("_ts", *okeys)
     w = Window.partitionBy(user_col).orderBy(
         F.col("_ts").asc(), *[F.col(c).asc() for c in okeys]
     )
-    seq = ev.withColumn("_prev", F.lag("_et").over(w)).withColumn(
-        "_rn", F.row_number().over(w)
+    within = (
+        ev.withColumn("_prev", F.lag("_et").over(w))
+        .where(F.col("_prev").isNotNull())
+        .select(F.col("_prev").alias("from_type"), F.col("_et").alias("to_type"))
     )
-    within = seq.where(F.col("_prev").isNotNull()).select(
-        F.col("_prev").alias("from_type"), F.col("_et").alias("to_type")
+    # per-user first and last event by (ts, *order); arrival is
+    # non-decreasing across batches, so the batch's last IS the global
+    # last
+    ends = ev.groupBy(user_col).agg(
+        F.min_by("_et", order).alias("_et"), F.max_by("_et", order).alias("last_type")
     )
-    firsts = seq.where(F.col("_rn") == 1).select(user_col, "_et")
-    old = store.read()
-    pairs = within
-    if old is not None:
-        boundary = firsts.join(
-            old.select(user_col, F.col("last_type")).hint("shuffle_hash"),
-            user_col,
-        ).select(
-            F.col("last_type").alias("from_type"),
-            F.col("_et").alias("to_type"),
-        )
-        pairs = within.union(boundary)
-    # per-user new last event = max (ts, *order) in batch (arrival is
-    # non-decreasing across batches, so the batch max IS the global
-    # last)
-    lasts = (
-        seq.withColumn(
-            "_rmax",
-            F.row_number().over(
-                Window.partitionBy(user_col).orderBy(
-                    F.col("_ts").desc(),
-                    *[F.col(c).desc() for c in okeys],
+    firsts, lasts = ends.select(user_col, "_et"), ends.select(user_col, "last_type")
+
+    def step(old: DataFrame | None) -> tuple[DataFrame, DataFrame]:
+        pairs = within
+        rows = lasts.withColumn("prev_type", F.lit(None).cast("string"))
+        if old is not None:
+            own = F.col(store.order) == F.lit(int(batch_seq))
+            before = old.select(
+                user_col,
+                F.when(own, F.col("prev_type"))
+                .otherwise(F.col("last_type"))
+                .alias("prev_type"),
+            )
+            boundary = (
+                firsts.join(before.hint("shuffle_hash"), user_col)
+                .where(F.col("prev_type").isNotNull())
+                .select(
+                    F.col("prev_type").alias("from_type"),
+                    F.col("_et").alias("to_type"),
                 )
-            ),
+            )
+            pairs = within.union(boundary)
+            rows = lasts.join(before, user_col, "left")
+        out = pairs.groupBy("from_type", "to_type").agg(
+            F.count(F.lit(1)).cast("long").alias("n")
         )
-        .where(F.col("_rmax") == 1)
-        .select(user_col, F.col("_et").alias("last_type"))
-        .localCheckpoint()
-    )
-    out = pairs.groupBy("from_type", "to_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    ).localCheckpoint()
-    store.upsert(lasts, batch_seq)
-    return out
+        return rows, out
+
+    return store.advance(step, batch_seq, near=firsts)
+
 
 def incremental_retention(
     batch_df: DataFrame,
@@ -437,11 +444,12 @@ def incremental_retention(
     weeks).
 
     Per batch: one distinct (user, week) hash-agg collapsed to one
-    row per user (min week + week set), one store read pruned to the
-    batch's users, an array merge (distinct ∪, sorted for
-    deterministic storage), one `SnapshotStore` upsert (bucket =
-    pmod(hash(user), n_buckets) — stable per user, latest-wins on
-    ``batch_seq``). Returns the affected users' merged state."""
+    row per user (min week + week set) and one `SnapshotStore.advance`
+    — a store read pruned to the batch users' buckets, an array merge
+    (distinct ∪, sorted for deterministic storage), the merged state
+    written back (bucket = pmod(hash(user), n_buckets) — stable per
+    user, latest-wins on ``batch_seq``). Returns the affected users'
+    merged state."""
     from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     spark = batch_df.sparkSession
@@ -459,36 +467,35 @@ def incremental_retention(
         )
         .localCheckpoint()
     )
-    old = store.read()
-    if old is not None:
-        prior = uw.join(
-            old.select(user_col, "cw", "weeks").hint("shuffle_hash"),
-            user_col,
-            "left",
-        )
-    else:
-        prior = uw.withColumn("cw", F.lit(None).cast("date")).withColumn(
-            "weeks", F.lit(None).cast("array<date>")
-        )
-    merged = prior.select(
-        user_col,
-        # least() skips NULLs, so an unset store cw takes the batch min
-        F.coalesce(
-            F.least(F.col("cw"), F.col("_bcw")), F.col("cw"), F.col("_bcw")
-        ).alias("cw"),
-        F.array_sort(
-            F.array_distinct(
-                F.concat(
-                    F.coalesce(
-                        F.col("weeks"), F.expr("CAST(array() AS array<date>)")
-                    ),
-                    F.col("_bwks"),
-                )
+
+    def step(old: DataFrame | None) -> DataFrame:
+        if old is None:
+            prior = uw.withColumns(
+                {"cw": F.lit(None).cast("date"), "weeks": F.lit(None).cast("array<date>")}
             )
-        ).alias("weeks"),
-    ).localCheckpoint()
-    store.upsert(merged, batch_seq)
-    return merged
+        else:
+            prior = uw.join(
+                old.select(user_col, "cw", "weeks").hint("shuffle_hash"), user_col, "left"
+            )
+        return prior.select(
+            user_col,
+            # least() skips NULLs, so an unset store cw takes the batch min
+            F.coalesce(
+                F.least(F.col("cw"), F.col("_bcw")), F.col("cw"), F.col("_bcw")
+            ).alias("cw"),
+            F.array_sort(
+                F.array_distinct(
+                    F.concat(
+                        F.coalesce(
+                            F.col("weeks"), F.expr("CAST(array() AS array<date>)")
+                        ),
+                        F.col("_bwks"),
+                    )
+                )
+            ).alias("weeks"),
+        )
+
+    return store.advance(step, batch_seq, near=uw)
 
 
 def incremental_scd2(
@@ -520,12 +527,13 @@ def incremental_scd2(
     at-least-once) re-merges rows already in the store and dedupes
     to a no-op.
 
-    Per batch: one store read partition-pruned to the batch keys'
-    hash buckets (≤ n_buckets literal values, collected once —
-    bucket ids come through the engine's own hash) and semi-joined
-    to the affected keys, one per-key lead() window over prior ∪
-    batch versions (the `scd2_intervals` shape — never corpus-wide),
-    one `SnapshotStore` upsert keyed by the version identity (bucket =
+    Per batch: one `SnapshotStore.advance` — a store read
+    partition-pruned to the batch keys' hash buckets (≤ n_buckets
+    literal values, collected once — bucket ids come through the
+    engine's own hash) and semi-joined to the affected keys, one
+    per-key lead() window over prior ∪ batch versions (the
+    `scd2_intervals` shape — never corpus-wide), the recomputed
+    timelines merged back keyed by the version identity (bucket =
     pmod(hash(key), n_buckets) hashes a subset of that identity, so no
     version ever moves; stale valid_to rows are overwritten latest-wins
     on ``batch_seq``). Cost is O(affected keys' version counts), not
@@ -541,24 +549,21 @@ def incremental_scd2(
     )
     batch = batch_df.withColumn(ts_col, event_ts(ts_col)).localCheckpoint()
     affected = batch.select(*keys).distinct()
-    old = store.read(near=affected)
-    if old is not None:
-        prior = old.join(affected, keys, "left_semi").select(*batch.columns)
-        merged = prior.unionByName(batch).dropDuplicates(ident)
-    else:
-        merged = batch.dropDuplicates(ident)
-    # no checkpoint on merged: it is consumed exactly once, and the
-    # recomputed checkpoint below materializes the whole lineage
-    # (including the store read) BEFORE the upsert overwrites it
-    recomputed = scd2_intervals(
-        merged, keys, ts_col, list(order_cols)
-    ).localCheckpoint()
+
+    def step(old: DataFrame | None) -> DataFrame:
+        merged = batch
+        if old is not None:
+            prior = old.join(affected, keys, "left_semi").select(*batch.columns)
+            merged = prior.unionByName(batch)
+        return scd2_intervals(
+            merged.dropDuplicates(ident), keys, ts_col, list(order_cols)
+        )
+
     # cluster the write by bucket: one file per touched _vb dir instead
     # of (shuffle partitions x dirs) near-empty files — the next batch's
     # partition-pruned read lists O(buckets) files, not O(batches x
     # tasks) (measured 48 files after 3 batches at sf0.1 without this)
-    store.upsert(recomputed, batch_seq, write_coalesce=n_buckets)
-    return recomputed
+    return store.advance(step, batch_seq, near=affected, write_coalesce=n_buckets)
 
 
 def scd2_from_store(spark, store_path: str) -> DataFrame | None:

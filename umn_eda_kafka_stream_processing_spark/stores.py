@@ -109,6 +109,20 @@ def _partition_selector(parts: list[str], chosen) -> Column:
     return sel
 
 
+def _emptied(parts: list[str], touched: Sequence, frame: DataFrame) -> list[str]:
+    """The ``touched`` partition directories (rows or dicts keyed by
+    partition column) that the materialized ``frame`` holds no row for:
+    a dynamic overwrite of ``frame`` would leave them stale."""
+    if not touched:
+        return []
+    written = {tuple(r) for r in frame.select(*parts).distinct().collect()}
+    return [
+        _partition_dir(parts, t)
+        for t in touched
+        if tuple(t[c] for c in parts) not in written
+    ]
+
+
 def _drop_if_empty(spark: SparkSession, path: str) -> None:
     """Remove a store root that holds nothing but a job's ``_SUCCESS``
     (a zero-row partitioned write, or a sweep that emptied every
@@ -378,7 +392,9 @@ class BatchStore:
            leaves are excluded by readers and swept by the next call).
 
         Idempotent: a second call at the same horizon folds nothing. The
-        fold is written as one file.
+        fold is written with the merge's own partitioning, which adaptive
+        execution coalesces to the data's size: a register-sized fold
+        lands as one file, a data-sized one in parallel tasks.
 
         CONTRACT: collapse only batches at/below the stream's replay
         horizon (Structured Streaming replays the LAST batch — pass
@@ -410,7 +426,6 @@ class BatchStore:
         (
             self.merge(rows)
             .drop("batch_id")
-            .repartition(1)
             .write.mode("overwrite")
             .parquet(f"{self.path}/_fold_{base}")
         )
@@ -447,8 +462,10 @@ class SnapshotStore:
     materialization: one row per ``keys`` value, the row with the largest
     ``order`` winning (ties go to the newer write, the re-pipe-overwrites
     rule). Every upsert is idempotent (a replayed batch re-merges rows
-    already in the store to a no-op), so a foreachBatch body built on it
-    is replay-safe.
+    already in the store to a no-op). An `advance` body is replay-exact
+    when its step computes the same rows from the store after its own
+    batch's write as before it (the incremental operators' steps do;
+    `tests/test_stores.py` crashes each one at its write).
 
     ``partition_by`` lays the store out in hive partitions. With
     ``n_buckets`` the single partition column is a bucket the store
@@ -457,13 +474,15 @@ class SnapshotStore:
     they probe (`read` with ``near``).
 
     A partition column hashed from a subset of the store's own keys can
-    never move a key between partitions, so an upsert reads and rewrites
-    only the partitions its rows land in. Any other partition column — a
-    caller-assigned IVF bucket, the hash of a foreign key — can MOVE a
-    key: the upsert then also reads the partitions holding its keys' old
-    rows, so the merge sees (and drops) the stale copy, and deletes the
-    partitions the merge emptied. Either way an upsert is
-    O(|touched partitions|), never O(|store|)."""
+    never move a key between partitions, so an upsert (and `advance`)
+    reads and rewrites only the partitions its rows land in: one collect
+    of their bucket ids, then a scan pruned to those directories. Any
+    other partition column — a caller-assigned IVF bucket, the hash of a
+    foreign key — can MOVE a key: the upsert then scans the whole store
+    once to find the partitions holding its keys' old rows, so the merge
+    sees (and drops) the stale copy, and deletes the partitions the merge
+    emptied; it still rewrites only the touched partitions. An
+    unpartitioned store is read and rewritten whole."""
 
     def __init__(
         self,
@@ -510,78 +529,118 @@ class SnapshotStore:
         ids = [r[0] for r in near.select(part).distinct().collect()]
         return rows.where(F.col(self.parts[0]).isin(ids))
 
-    def upsert(
-        self,
-        rows: DataFrame,
-        seq: int | Column | None = None,
-        write_coalesce: int | None = None,
-    ) -> DataFrame:
+    def _stamp(self, rows: DataFrame, seq: int | Column | None) -> DataFrame:
+        """``rows`` with the store's bucket column and, with ``seq``, its
+        order column (an int becomes a long literal; a Column is used as
+        is)."""
+        if seq is not None and not isinstance(seq, Column):
+            seq = F.lit(int(seq)).cast("long")
+        extra = {} if seq is None else {self.order: seq}
+        if self.n_buckets:
+            extra[self.parts[0]] = self._bucket()
+        return rows.withColumns(extra)
+
+    def upsert(self, rows: DataFrame, seq: int | Column | None = None) -> DataFrame:
         """Merge ``rows`` into the store latest-wins by key and rewrite
         the touched partitions (the whole store when unpartitioned).
         The store adds its bucket column, and with ``seq`` its order
-        column (an int becomes a long literal; a Column is used as is);
-        without ``seq`` the rows carry the order column themselves.
+        column; without ``seq`` the rows carry the order column
+        themselves.
 
         Returns the merged frame it wrote — checkpointed when a merge
         with stored rows happened, and covering only the touched
         partitions of a partitioned store — so a caller that needs the
         post-upsert snapshot can reuse it instead of re-listing the
-        store.
-
-        ``write_coalesce=k`` clusters the write into k tasks by the
-        partition columns: one file per touched partition directory
-        instead of (shuffle partitions x directories) near-empty files.
-        Never set it for a data-sized unpartitioned store: it serializes
-        the write."""
-        extra = {}
-        if self.n_buckets:
-            extra[self.parts[0]] = self._bucket()
-        if seq is not None:
-            extra[self.order] = (
-                seq if isinstance(seq, Column) else F.lit(int(seq)).cast("long")
-            )
-        rows = rows.withColumns(extra) if extra else rows
-        old, parts, emptied = self.read(), self.parts, []
-        if old is not None and parts and self.moves:
+        store."""
+        rows = self._stamp(rows, seq)
+        if not self.moves:
+            # a key never leaves its partition: the rows' own partitions
+            # hold every old row they replace
+            return self._write(self.read(near=rows if self.parts else None), rows)
+        old, touched = self.read(), []
+        if old is not None:
             # the partitions receiving rows AND those holding an updated
             # key's old row — collected BEFORE the overwrite (any plan
             # still referencing `old` after it would re-list deleted
             # files)
             touched = [
                 r.asDict()
-                for r in rows.select(*parts)
+                for r in rows.select(*self.parts)
                 .unionByName(
                     old.join(
                         F.broadcast(rows.select(*self.keys).distinct()),
                         self.keys,
                         "left_semi",
-                    ).select(*parts)
+                    ).select(*self.parts)
                 )
                 .distinct()
                 .collect()
             ]
-            old = old.filter(_partition_selector(parts, touched))
-        elif old is not None and parts:
-            # broadcast semi join on partition values: planned as
-            # partition pruning, so untouched directories are never read
-            old = old.join(
-                F.broadcast(rows.select(*parts).distinct()), parts, "left_semi"
-            )
+            old = old.filter(_partition_selector(self.parts, touched))
+        return self._write(old, rows, touched=touched)
+
+    def advance(
+        self,
+        step: Callable[[DataFrame | None], DataFrame | tuple[DataFrame, DataFrame]],
+        seq: int | Column,
+        near: DataFrame | None = None,
+        write_coalesce: int | None = None,
+    ) -> DataFrame:
+        """One incremental step — read, merge, write back — the way a
+        KTable update reads and replaces the rows of the keys it touches.
+
+        The store is scanned ONCE: the read, pruned to ``near``'s
+        partitions (the whole store when ``near`` is None), is
+        checkpointed, and ``step`` gets those rows (None when the store
+        was never written). Nothing downstream reads the path the write
+        replaces. ``step`` is pure: it returns the rows to upsert, or a
+        ``(rows, output)`` pair when the caller's output is another
+        frame. The output (the rows when no pair) is materialized once
+        and returned. The rows are merged latest-wins with the rows
+        already read, stamped with ``seq`` and written back as `upsert`
+        writes them — ``near`` must therefore cover the keys of every
+        row ``step`` returns, and every partition read is rewritten.
+
+        ``write_coalesce=k`` clusters the write into k tasks by the
+        partition columns: one file per touched partition directory
+        instead of (shuffle partitions x directories) near-empty files.
+        Never set it for a data-sized unpartitioned store: it serializes
+        the write.
+
+        Only for stores whose keys never move between partitions."""
+        if self.moves:
+            raise ValueError("advance needs keys that never change partition")
+        prior = self.read(near=near)
+        if prior is not None:
+            prior = prior.localCheckpoint()
+        result = step(prior)
+        rows, out = result if isinstance(result, tuple) else (result, result)
+        done = out.localCheckpoint()
+        rows = self._stamp(done if rows is out else rows, seq)
+        self._write(prior, rows, write_coalesce, reads_store=False)
+        return done
+
+    def _write(
+        self,
+        old: DataFrame | None,
+        rows: DataFrame,
+        write_coalesce: int | None = None,
+        touched: Sequence[dict] = (),
+        reads_store: bool = True,
+    ) -> DataFrame:
+        """Merge stamped ``rows`` over ``old`` (every stored row of the
+        partitions the write replaces) and rewrite those partitions. A
+        ``touched`` partition the merge leaves empty is deleted.
+        ``reads_store=False``: ``old`` is already materialized, so the
+        merge needs no checkpoint before the overwrite."""
+        parts, emptied = self.parts, []
         merged = compact_changelog(old, rows, self.keys, self.order)
-        if old is not None:
+        if old is not None and reads_store:
             # the plan reads the path it overwrites: materialize first
             merged = merged.localCheckpoint()
-            if parts and self.moves:
-                # a touched partition whose last row moved away gets no
-                # output row, so the overwrite would leave it stale
-                written = {
-                    tuple(r) for r in merged.select(*parts).distinct().collect()
-                }
-                emptied = [
-                    _partition_dir(parts, t)
-                    for t in touched
-                    if tuple(t[c] for c in parts) not in written
-                ]
+            # a touched partition whose last row moved away gets no
+            # output row, so the overwrite would leave it stale
+            emptied = _emptied(parts, touched, merged)
         if write_coalesce:
             merged = merged.repartition(
                 int(write_coalesce), *[F.col(c) for c in parts]
@@ -783,10 +842,7 @@ class SnapshotStore:
             F.broadcast(kd), key_col, "left_anti"
         ).localCheckpoint()
         n_kept = kept.count()
-        written = {tuple(r) for r in kept.select(*parts).distinct().collect()}
-        emptied = [
-            _partition_dir(parts, r) for r in touched if tuple(r) not in written
-        ]
+        emptied = _emptied(parts, touched, kept)
         _rewrite_partitions(self.spark, self.path, kept, parts, emptied)
         return {
             "partitions_touched": len(touched),
