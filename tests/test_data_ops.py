@@ -207,6 +207,28 @@ def test_minhash_lsh_finds_near_dup(spark, docs):
     assert (1, 3) in got  # high-jaccard pair survives LSH + verification
 
 
+def test_minhash_lsh_history_pairs_are_the_grown_pairs_not_in_history(spark):
+    """With a ``history``, `minhash_lsh_pairs` returns exactly
+    pairs(history ∪ batch) − pairs(history): the old×new and new×new
+    pairs, jaccards included. An empty history gives the plain run."""
+    rows = [
+        (k + 10 * v, " ".join(f"c{k}w{j:02d}" for j in range(30)) + "!" * v)
+        for k in range(5)
+        for v in range(3)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    old = docs.filter(F.col("doc_id") < 15)
+    new = docs.filter(F.col("doc_id") >= 15)
+
+    def pairs(df, **kw):
+        return {tuple(r) for r in dd.minhash_lsh_pairs(df, **kw).collect()}
+
+    full, before = pairs(docs), pairs(old)
+    assert (len(full), len(before)) == (15, 5)
+    assert pairs(new, history=old) == full - before
+    assert pairs(docs, history=docs.limit(0)) == full
+
+
 def test_lsh_hot_bucket_cap_drops_mass_dups_keeps_near_dups(spark):
     # 12 byte-identical docs share EVERY band key -> every one of
     # their buckets exceeds cap=10 -> zero pairs among them (mass
@@ -550,22 +572,6 @@ def test_kmeans_buckets_converges_and_ivf_works(spark, vectors):
         vectors.filter(F.col("vec_id") == 0), corpus, cent, k=2, n_probe=1
     )
     assert {r["neighbor_id"] for r in out.collect()} <= {1, 2, 3, 4}
-
-
-def test_cosine_topk_pandas_matches_jvm(spark, vectors):
-    jvm = sim.cosine_topk(vectors.filter(F.col("vec_id") < 2), vectors, k=3)
-    pdu = sim.cosine_topk_pandas(vectors.filter(F.col("vec_id") < 2), vectors, k=3)
-    as_set = lambda df: {(r["query_id"], r["neighbor_id"], r["sim"], r["rank"])
-                         for r in df.collect()}
-    assert as_set(jvm) == as_set(pdu)
-
-
-def test_cosine_topk_pandas_query_cap_enforced(spark, vectors):
-    """The driver-side collect contract is enforced, not just
-    documented: a query set above max_queries refuses loudly before
-    anything is collected."""
-    with pytest.raises(ValueError, match="exceeds max_queries"):
-        sim.cosine_topk_pandas(vectors, vectors, k=2, max_queries=3)
 
 
 def test_ivf_kmeans_recall_pinned_vs_exact(spark):
@@ -1781,7 +1787,7 @@ def test_extend_training_manifest_equals_from_scratch(spark):
     benchmark patch): a manifest shipped over the old corpus,
     EXTENDED when a new doc batch lands, equals the from-scratch
     `training_manifest` over the grown corpus byte-for-byte — with
-    the pair graph grown by `minhash_lsh_pairs_delta` (no old
+    the pair graph grown by `minhash_lsh_pairs` with a history (no old
     self-join), clustering re-run only on the affected subgraph, and
     one batch-only decontamination sweep. The split threshold is
     chosen from the fixture's own pair list so at least one pair
@@ -3677,7 +3683,7 @@ def test_incremental_semantic_dedup_single_batch_matches_brute_force(spark, tmp_
         got = sorted(
             r["vec_id"]
             for r in incremental_semantic_dedup(
-                batch, store, centroids, tau=tau, bucket_cap=None
+                batch, store, 0, centroids, tau=tau, bucket_cap=None
             ).collect()
         )
         assert got == want, (trial, got, want)
@@ -4179,13 +4185,19 @@ def test_bm25_matches_python_reference(spark):
 
 
 def test_pagerank_fixed_matches_python_reference(spark):
-    """Fixed-point PageRank vs a direct Python implementation of the
-    same integer recurrence on a hand-made graph: exact BIGINT
-    equality per node per iteration count, hub outranks spokes, and
-    rank mass stays within the documented div-truncation leak."""
+    """Fixed-point PageRank over a SYMMETRIZED graph (no sinks, so no
+    dangling mass) vs a direct Python implementation of the integer
+    recurrence on a hand-made graph: exact BIGINT equality per node per
+    iteration count, hub outranks spokes, and rank mass stays within
+    the documented div-truncation leak. The ranks are also pinned to
+    the values of the former symmetrized-only PageRank, on this graph
+    and on a 60-node random one."""
+    import hashlib
+    import random
+
     from umn_eda_kafka_stream_processing_spark.operators.graph import (
         SCALE,
-        pagerank_fixed,
+        pagerank_directed,
     )
 
     # star a<->{b,c,d} plus a pendant pair d<->e (symmetrized)
@@ -4209,16 +4221,36 @@ def test_pagerank_fixed_matches_python_reference(spark):
             r = {v: base + (85 * acc[v]) // 100 for v in nodes}
         return r
 
+    pinned = {
+        1: {"a": 455000000000, "b": 86666666666, "c": 86666666666,
+            "d": 256666666666, "e": 115000000000},
+        5: {"a": 390391440968, "b": 119658157405, "c": 119658157405,
+            "d": 228018872682, "e": 142273371526},
+    }
     for iters in (1, 5):
         got = {
             r["node"]: r["rank_picos"]
-            for r in pagerank_fixed(edges, iterations=iters).collect()
+            for r in pagerank_directed(edges, iterations=iters).collect()
         }
-        assert got == ref(iters), iters
+        assert got == ref(iters) == pinned[iters], iters
     # structure: the hub holds the most rank; total mass within the
     # truncation leak of SCALE (<= iters * n * max_outdeg picos)
     assert got["a"] == max(got.values())
     assert SCALE - sum(got.values()) < 5 * 5 * 3 * 100
+
+    rng = random.Random(60)
+    und = {tuple(sorted(rng.sample(range(60), 2))) for _ in range(150)}
+    sym = [(f"n{a}", f"n{b}") for a, b in und] + [(f"n{b}", f"n{a}") for a, b in und]
+    ranks = sorted(
+        (r["node"], r["rank_picos"])
+        for r in pagerank_directed(
+            spark.createDataFrame(sym, "src string, dst string"), iterations=5
+        ).collect()
+    )
+    assert len(ranks) == 60
+    assert hashlib.md5(repr(ranks).encode()).hexdigest() == (
+        "85357a5284b0b19003f8b94cfa54c932"
+    )
 
 
 def test_pagerank_directed_dangling_matches_python_reference(spark):

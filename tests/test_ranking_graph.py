@@ -231,6 +231,64 @@ def test_binary_auc_degenerate_single_class(spark):
     assert got["n_neg"] == 0 and got["auc_micro"] == 0
 
 
+@pytest.mark.parametrize("case", ["random", "empty", "one_class", "all_null"])
+def test_global_ranks_equal_grouped_over_one_group(spark, case):
+    """The global quantile, weighted-quantile and AUC operators equal
+    their grouped operators over one group holding every row — on
+    random data (also checked against the sorted-rank answer), an
+    empty input, a one-class label and an all-NULL value column. The
+    one difference is kept: a global AUC over no scored row is the
+    single row (NULL, NULL, 0, NULL), where the grouped form has no
+    group and so no row."""
+    from umn_eda_kafka_stream_processing_spark.operators.ranking import (
+        grouped_binary_auc,
+        grouped_exact_quantiles,
+        grouped_weighted_quantiles,
+        weighted_quantiles,
+    )
+
+    rng = random.Random(29)
+    rows = {
+        "random": [
+            (rng.choice([0.5, 1.0, 2.5, 2.5, 7.0]), rng.randint(0, 5),
+             rng.randint(0, 1))
+            for _ in range(500)
+        ],
+        "empty": [],
+        "one_class": [(float(i % 7), 1 + i % 3, 1) for i in range(40)],
+        "all_null": [(None, 2, i % 2) for i in range(10)],
+    }[case]
+    df = spark.createDataFrame(rows, "v double, w long, lb long")
+    one = df.withColumn("g", F.lit("all"))
+    probs = [(1, 4), (1, 2), (99, 100)]
+
+    def cut(frame):
+        return sorted(tuple(r) for r in frame.select("pct_ppm", "value").collect())
+
+    got = cut(exact_quantiles(df, "v", probs, n_buckets=8))
+    assert got == cut(grouped_exact_quantiles(one, "g", "v", probs, n_buckets=8))
+    assert cut(weighted_quantiles(df, "v", "w", probs, n_buckets=8)) == cut(
+        grouped_weighted_quantiles(one, "g", "v", "w", probs, n_buckets=8)
+    )
+    auc = [tuple(r) for r in binary_auc(df, "v", "lb", n_buckets=8).collect()]
+    grouped = [
+        tuple(r)[1:]
+        for r in grouped_binary_auc(one, "g", "v", "lb", n_buckets=8).collect()
+    ]
+    if case in ("empty", "all_null"):
+        assert (got, grouped, auc) == ([], [], [(None, None, 0, None)])
+    else:
+        assert len(auc) == 1 and auc == grouped
+    if case == "random":
+        s = sorted(v for v, _, _ in rows)
+        assert got == [
+            (1_000_000 * num // den, s[-(-num * len(s) // den) - 1])
+            for num, den in probs
+        ]
+    if case == "one_class":
+        assert auc == [(40, 0, 0, 0)]
+
+
 def test_triangle_stats_matches_bruteforce(spark):
     rng = random.Random(5)
     nodes = list(range(14))

@@ -382,6 +382,7 @@ def test_seen_stores_read_back_through_a_uri(spark, tmp_path):
                 [(i, [1.0, 0.1])], "vec_id long, embedding array<double>"
             ),
             store,
+            i,
             centroids,
             tau=0.9,
         ).count()
@@ -444,6 +445,39 @@ def test_simhash_dedup_replay_keeps_the_same_docs(spark, tmp_path):
     assert kept == [[1, 2], [1, 2]]
 
 
+def _semantic_centroids(spark):
+    return spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "bucket int, embedding array<double>"
+    )
+
+
+def test_semantic_dedup_replay_leaves_store_and_output_unchanged(spark, tmp_path):
+    """The same semantic-dedup batch run twice, with its batch id, leaves
+    the seen-store's rows and the batch's output as the first run left
+    them: the store is keyed by (bucket, id), so the replay rewrites its
+    own rows. Appending admissions stored every row twice."""
+    from umn_eda_kafka_stream_processing_spark.operators.similarity import (
+        incremental_semantic_dedup,
+    )
+
+    batch = spark.createDataFrame(
+        [(1, [1.0, 0.1]), (2, [0.1, 1.0]), (3, [1.0, 0.11])],
+        "vec_id long, embedding array<double>",
+    )
+    store = str(tmp_path / "seen")
+    runs = [
+        (
+            _rows(incremental_semantic_dedup(
+                batch, store, 0, _semantic_centroids(spark), tau=0.9
+            )),
+            _rows(spark.read.parquet(store)),
+        )
+        for _ in range(2)
+    ]
+    assert runs[0] == runs[1]
+    assert len(runs[0][0]) == len(runs[0][1]) == 2
+
+
 # --- every operator built on SnapshotStore.advance: crash and replay ------
 #
 # name -> (batch b's input frame, run(spark, batch, store path, b)). Each
@@ -496,8 +530,19 @@ def _cluster_rows(spark, b):
     )
 
 
+def _vectors(spark, b):
+    import math
+
+    angle = math.radians(30 + 20 * b)
+    return spark.createDataFrame(
+        [(10 * b, [1.0, 0.0]), (10 * b + 1, [math.cos(angle), math.sin(angle)]),
+         (10 * b + 2, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+
+
 def _advance_ops():
-    from umn_eda_kafka_stream_processing_spark.operators import dedup, sampling
+    from umn_eda_kafka_stream_processing_spark.operators import dedup, sampling, similarity
     from umn_eda_kafka_stream_processing_spark.operators import windows as win
 
     return {
@@ -520,6 +565,9 @@ def _advance_ops():
         "cluster_quota": (_cluster_rows, lambda spark, df, path, b:
                           sampling.incremental_cluster_quota(
                               spark, path, df, "bucket", "vec_id", 6, b)),
+        "semantic_dedup": (_vectors, lambda spark, df, path, b:
+                           similarity.incremental_semantic_dedup(
+                               df, path, b, _semantic_centroids(spark), tau=0.99)),
     }
 
 

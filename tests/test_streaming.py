@@ -1844,8 +1844,8 @@ def test_incremental_semantic_dedup_across_batches(spark, tmp_path):
         start_foreach_batch_sink,
     )
 
-    def on_batch(batch_df, _bid):
-        fresh = incremental_semantic_dedup(batch_df, store, centroids, tau=0.9)
+    def on_batch(batch_df, bid):
+        fresh = incremental_semantic_dedup(batch_df, store, bid, centroids, tau=0.9)
         emitted.extend(r["vec_id"] for r in fresh.select("vec_id").collect())
 
     def pipe(rows):
@@ -2177,7 +2177,7 @@ def test_incremental_semantic_dedup_bucket_cap_admits_uncompared(spark, tmp_path
     )
     store = str(tmp_path / "store")
     out = incremental_semantic_dedup(
-        batch, store, centroids, tau=0.9, bucket_cap=2
+        batch, store, 0, centroids, tau=0.9, bucket_cap=2
     )
     got = sorted(r["vec_id"] for r in out.collect())
     assert got == [1, 2, 3, 4]  # bucket 0 uncompared; 5 deduped vs 4

@@ -372,8 +372,8 @@ def extend_training_manifest(
 
     What the extension pays vs. the full chain:
 
-    * pair graph: `dedup.minhash_lsh_pairs_delta` — only pairs
-      TOUCHING the batch (old×new band join + new×new), exact
+    * pair graph: `dedup.minhash_lsh_pairs` with the old corpus as
+      ``history`` — only pairs TOUCHING the batch (old×new band join + new×new), exact
       decomposition pairs(old ∪ batch) = old_pairs ∪ delta;
     * clustering: min-label components re-run ONLY on the AFFECTED
       subgraph — the delta pairs plus the old pairs of clusters a
@@ -395,7 +395,7 @@ def extend_training_manifest(
 
     Equality with `training_manifest(old ∪ batch, ...)` is
     byte-for-byte (unit- and oracle-pinned), with the hot-bucket-cap
-    caveat documented on `minhash_lsh_pairs_delta`.
+    caveat documented on `minhash_lsh_pairs`.
 
     ``standing_decontam`` is the shipped run's census over its
     keepers; ``old_pairs`` / ``old_clusters`` its pair/cluster
@@ -417,8 +417,7 @@ def extend_training_manifest(
         decontaminate,
     )
     from umn_eda_kafka_stream_processing_spark.operators.dedup import (
-        minhash_lsh_pairs_delta,
-        near_dup_clusters,
+        minhash_lsh_pairs,
     )
     from umn_eda_kafka_stream_processing_spark.operators.sampling import (
         cluster_safe_split,
@@ -426,9 +425,9 @@ def extend_training_manifest(
     )
 
     if delta_pairs is None:
-        delta_pairs = minhash_lsh_pairs_delta(
-            old_docs, batch, text_col=text_col, id_col=id_col,
-            old_sigs=old_sigs, batch_sigs=batch_sigs,
+        delta_pairs = minhash_lsh_pairs(
+            batch, text_col=text_col, id_col=id_col, history=old_docs,
+            sigs=batch_sigs, history_sigs=old_sigs,
         ).localCheckpoint()  # feeds affected-set, subgraph, census pins
     clusters2 = (
         clusters

@@ -658,6 +658,39 @@ def minhash_signatures(
     return exploded.groupBy(id_col).agg(*aggs)
 
 
+def _band_melt(
+    sigs: DataFrame, id_col: str, num_hashes: int, rows_per_band: int
+) -> DataFrame:
+    """The LSH band melt: one row per (doc, band) — (id, h0..h{k-1},
+    band_idx, band_key) with band_key = md5 of the band's
+    ``rows_per_band`` signature values joined by '|'. The signature
+    columns ride along so a band self-join can gate on the sketch
+    estimate without joining back to the signatures."""
+    bands = num_hashes // rows_per_band
+    hs = [f"h{i}" for i in range(num_hashes)]
+    band_cols = [
+        F.md5(
+            F.concat_ws(
+                "|",
+                *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)],
+            )
+        ).alias(f"band{b}")
+        for b in range(bands)
+    ]
+    return sigs.select(F.col(id_col), *hs, *band_cols).select(
+        F.col(id_col),
+        *hs,
+        F.explode(
+            F.array(*[
+                F.struct(
+                    F.lit(b).alias("band_idx"), F.col(f"band{b}").alias("band_key")
+                )
+                for b in range(bands)
+            ])
+        ).alias("bk"),
+    ).select(id_col, *hs, "bk.band_idx", "bk.band_key")
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -669,6 +702,9 @@ def minhash_lsh_pairs(
     estimate_gate: float = 0.5,
     materialize: bool = True,
     hot_bucket_cap: int | None = 10_000,
+    history: DataFrame | None = None,
+    sigs: DataFrame | None = None,
+    history_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Full MinHash+LSH near-dup pipeline: signatures → banded
     candidates → signature-estimate gate → exact-jaccard verification
@@ -692,14 +728,37 @@ def minhash_lsh_pairs(
     reproduces the output bit-for-bit. Set estimate_gate=0.0 to
     verify every banded candidate.
 
+    ``history`` makes this the DELTA for an APPEND-ONLY corpus:
+    exactly the pairs of ``history ∪ df`` that TOUCH ``df`` (old×new
+    and new×new), so a growing corpus never re-self-joins its
+    history. Signatures are per-document and band collision, gate and
+    verification are all PAIRWISE predicates, so pairs(old ∪ new) =
+    pairs(old) ∪ delta EXACTLY, and a standing pair store plus the
+    delta reproduces the from-scratch graph (unit- and oracle-pinned
+    via `curation.extend_training_manifest`). The plan is the melt of
+    history ∪ new joined with the melt of the new docs only. Every
+    ``df`` id must exceed every ``history`` id: that keeps min-label
+    cluster representatives stable under growth and makes "pair
+    touches the batch" equal to "larger endpoint is a batch id". The
+    one non-pairwise knob is ``hot_bucket_cap``, sized on the GROWN
+    bucket: a bucket crossing the cap only once the batch lands also
+    drops its old pairs from a from-scratch run — run the incremental
+    chain capless (or monitor `lsh_bucket_stats` and re-baseline when
+    a bucket crosses) if byte-equality with from-scratch matters.
+
+    ``sigs`` / ``history_sigs`` inject the `minhash_signatures` of
+    ``df`` / ``history`` (session-cached tables, so history is not
+    re-hashed); ``sigs`` must be materialized (both melts read it).
+
     ``materialize=False`` skips every stage localCheckpoint so the
     WHOLE pipeline stays one inspectable lazy plan — used by
     tools/plan_proofs.py to receipt the join strategy (checkpointed
     stages are invisible in the final executed-plan string);
     production callers keep the default.
-    Output: (id_a, id_b, jaccard) for verified pairs."""
+    Output: (id_a, id_b, jaccard) for verified pairs, id_a < id_b."""
     _ckpt = (lambda d: d.localCheckpoint()) if materialize else (lambda d: d)
-    sigs = _ckpt(minhash_signatures(df, text_col, id_col, num_hashes, shingle_n))
+    if sigs is None:
+        sigs = _ckpt(minhash_signatures(df, text_col, id_col, num_hashes, shingle_n))
     par = df.sparkSession.sparkContext.defaultParallelism
     # band melt CARRYING the signature columns: the estimate gate
     # evaluates inline on the band self-join's output, so the gate
@@ -708,30 +767,16 @@ def minhash_lsh_pairs(
     # distinct on the larger pre-gate pair set). The melt shuffle
     # carries bands x signature bytes per doc, comparable to what the
     # two id-keyed sig joins would move anyway.
-    bands = num_hashes // rows_per_band
-    band_cols = [
-        F.md5(
-            F.concat_ws(
-                "|",
-                *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)],
+    new = _band_melt(sigs, id_col, num_hashes, rows_per_band)
+    melted = new
+    if history is not None:
+        if history_sigs is None:
+            history_sigs = minhash_signatures(
+                history, text_col, id_col, num_hashes, shingle_n
             )
-        ).alias(f"band{b}")
-        for b in range(bands)
-    ]
-    melted = sigs.select(
-        F.col(id_col), *[F.col(f"h{i}") for i in range(num_hashes)], *band_cols
-    ).select(
-        F.col(id_col),
-        *[F.col(f"h{i}") for i in range(num_hashes)],
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band_idx"), F.col(f"band{b}").alias("band_key")
-                )
-                for b in range(bands)
-            ])
-        ).alias("bk"),
-    ).select(id_col, *[f"h{i}" for i in range(num_hashes)], "bk.band_idx", "bk.band_key")
+        melted = _band_melt(
+            history_sigs.unionByName(sigs), id_col, num_hashes, rows_per_band
+        )
     if hot_bucket_cap is not None:
         # HOT-BUCKET GUARD: one band key shared by B docs yields B²/2
         # candidates in that bucket alone — boilerplate/empty-doc
@@ -756,7 +801,9 @@ def minhash_lsh_pairs(
         F.col(id_col).alias(f"{id_col}_a"), "band_idx", "band_key",
         *[F.col(f"h{i}").alias(f"ha{i}") for i in range(num_hashes)],
     )
-    mb = melted.select(
+    # with history, the right side is the batch's own melt: a < b then
+    # keeps old×new (old ids are smaller) and orients new×new
+    mb = (melted if history is None else new).select(
         F.col(id_col).alias(f"{id_col}_b"), "band_idx", "band_key",
         *[F.col(f"h{i}").alias(f"hb{i}") for i in range(num_hashes)],
     )
@@ -790,167 +837,18 @@ def minhash_lsh_pairs(
         .unionByName(cands.select(F.col(f"{id_col}_b").alias(id_col)))
         .distinct()
     )
+    docs = df
+    if history is not None:
+        docs = history.select(id_col, text_col).unionByName(
+            df.select(id_col, text_col)
+        )
     # materialized once: BOTH sides of the verification join read this
     # shingle projection — without the checkpoint each side re-runs
     # the per-row shingle HOF over the candidate docs (the projection
     # is already pruned to candidates, so it's small by construction)
     sh = _ckpt(
-        df.join(F.broadcast(cand_ids), id_col, "left_semi")
+        docs.join(F.broadcast(cand_ids), id_col, "left_semi")
         .select(F.col(id_col), char_shingles(text_col, shingle_n).alias("sh"))
-    )
-    a = sh.select(F.col(id_col).alias(f"{id_col}_a"), F.col("sh").alias("a_sh"))
-    b = sh.select(F.col(id_col).alias(f"{id_col}_b"), F.col("sh").alias("b_sh"))
-    verified = (
-        cands.join(a, f"{id_col}_a").join(b, f"{id_col}_b")
-        .withColumn("jaccard", _jaccard("a_sh", "b_sh"))
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return verified.select(f"{id_col}_a", f"{id_col}_b", "jaccard")
-
-
-def minhash_lsh_pairs_delta(
-    old_docs: DataFrame,
-    batch: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    rows_per_band: int = 2,
-    shingle_n: int = 8,
-    threshold: float = 0.8,
-    estimate_gate: float = 0.5,
-    old_sigs: DataFrame | None = None,
-    batch_sigs: DataFrame | None = None,
-    hot_bucket_cap: int | None = 10_000,
-) -> DataFrame:
-    """DELTA near-dup pairs for an APPEND-ONLY corpus: exactly the
-    `minhash_lsh_pairs` pairs of ``old_docs ∪ batch`` that TOUCH the
-    batch (old×new and new×new) — the incremental-ingest half of the
-    pair graph, so a growing corpus never re-self-joins its history.
-
-    Decomposition correctness: signatures are per-document (identical
-    whichever run computes them), band collision / estimate gate /
-    exact-jaccard verification are all PAIRWISE predicates — so
-    pairs(old ∪ batch) = pairs(old) ∪ delta EXACTLY, and a standing
-    pair store plus this delta reproduces the from-scratch graph
-    (unit- and oracle-pinned via `extend_training_manifest`). The one
-    non-pairwise knob is ``hot_bucket_cap``: a band bucket can cross
-    the cap only once the batch lands, in which case the from-scratch
-    run also drops the bucket's OLD pairs — run the incremental chain
-    capless (or monitor `lsh_bucket_stats` and re-baseline when a
-    bucket crosses) if byte-equality with from-scratch matters.
-
-    APPEND-ONLY CONTRACT: every ``batch`` id must exceed every
-    ``old_docs`` id. This is what keeps min-label cluster
-    representatives stable under growth (a merged component's min is
-    always an OLD doc's id — `extend_training_manifest` relies on it)
-    and makes "pair touches the batch" equal to "larger endpoint is a
-    batch id".
-
-    ``old_sigs`` injects the standing signature table (the shipped
-    run's `minhash_signatures`, session-cacheable) so history is not
-    re-hashed; omitted, old signatures are recomputed (still no old
-    self-join). ``batch_sigs`` likewise injects the batch's own
-    signatures when the caller already has them (must be
-    materialized — both melts read it). Plan shape: melt(all) ⋈ melt(batch) on
-    (band_idx, band_key) — the candidate join's right side is
-    batch-sized, verification shingles only candidate docs.
-    Output: (id_a, id_b, jaccard), id_a < id_b."""
-    spark = batch.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    sigs_new = (
-        batch_sigs
-        if batch_sigs is not None
-        else minhash_signatures(
-            batch, text_col, id_col, num_hashes, shingle_n
-        ).localCheckpoint()  # read by the all-side AND new-side melts
-    )
-    sigs_old = (
-        old_sigs
-        if old_sigs is not None
-        else minhash_signatures(old_docs, text_col, id_col, num_hashes, shingle_n)
-    )
-    bands = num_hashes // rows_per_band
-
-    def melt(sigs: DataFrame) -> DataFrame:
-        band_cols = [
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    *[
-                        F.col(f"h{b * rows_per_band + r}")
-                        for r in range(rows_per_band)
-                    ],
-                )
-            ).alias(f"band{b}")
-            for b in range(bands)
-        ]
-        return sigs.select(
-            F.col(id_col), *[F.col(f"h{i}") for i in range(num_hashes)],
-            *band_cols,
-        ).select(
-            F.col(id_col),
-            *[F.col(f"h{i}") for i in range(num_hashes)],
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.col(f"band{b}").alias("band_key"),
-                    )
-                    for b in range(bands)
-                ])
-            ).alias("bk"),
-        ).select(
-            id_col, *[f"h{i}" for i in range(num_hashes)],
-            "bk.band_idx", "bk.band_key",
-        )
-
-    melt_all = melt(sigs_old.unionByName(sigs_new))
-    if hot_bucket_cap is not None:
-        # same hazard, same remedy as minhash_lsh_pairs — sized on the
-        # GROWN bucket (the cap's at-scale semantics)
-        from pyspark.sql.window import Window
-
-        melt_all = melt_all.withColumn(
-            "_bsz",
-            F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_key")),
-        ).filter(F.col("_bsz") <= hot_bucket_cap).drop("_bsz")
-    ma = melt_all.select(
-        F.col(id_col).alias(f"{id_col}_a"), "band_idx", "band_key",
-        *[F.col(f"h{i}").alias(f"ha{i}") for i in range(num_hashes)],
-    )
-    mb = melt(sigs_new).select(
-        F.col(id_col).alias(f"{id_col}_b"), "band_idx", "band_key",
-        *[F.col(f"h{i}").alias(f"hb{i}") for i in range(num_hashes)],
-    )
-    est = sum(
-        F.when(F.col(f"ha{i}") == F.col(f"hb{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
-    ) / float(num_hashes)
-    # a < b keeps old×new (old ids are smaller by contract) and
-    # orients new×new; new×old duplicates are excluded by it too
-    cands = ma.join(mb, ["band_idx", "band_key"], "inner").filter(
-        F.col(f"{id_col}_a") < F.col(f"{id_col}_b")
-    )
-    if estimate_gate > 0.0:
-        cands = cands.filter(est >= estimate_gate)
-    cands = (
-        cands.select(f"{id_col}_a", f"{id_col}_b")
-        .distinct()
-        .repartition(par, F.col(f"{id_col}_a"))
-        .localCheckpoint()  # feeds the id-prune AND the verify join
-    )
-    docs_all = old_docs.select(id_col, text_col).unionByName(
-        batch.select(id_col, text_col)
-    )
-    cand_ids = (
-        cands.select(F.col(f"{id_col}_a").alias(id_col))
-        .unionByName(cands.select(F.col(f"{id_col}_b").alias(id_col)))
-        .distinct()
-    )
-    sh = (
-        docs_all.join(F.broadcast(cand_ids), id_col, "left_semi")
-        .select(F.col(id_col), char_shingles(text_col, shingle_n).alias("sh"))
-        .localCheckpoint()  # both verify sides read this projection
     )
     a = sh.select(F.col(id_col).alias(f"{id_col}_a"), F.col("sh").alias("a_sh"))
     b = sh.select(F.col(id_col).alias(f"{id_col}_b"), F.col("sh").alias("b_sh"))
@@ -985,27 +883,7 @@ def lsh_bucket_stats(
     hot_buckets, hot_docs), one row per band.
     """
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n)
-    bands = num_hashes // rows_per_band
-    melted = sigs.select(
-        F.col(id_col),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band_idx"),
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.col(f"h{b * rows_per_band + r}")
-                                for r in range(rows_per_band)
-                            ],
-                        )
-                    ).alias("band_key"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bk"),
-    ).select("bk.band_idx", "bk.band_key")
+    melted = _band_melt(sigs, id_col, num_hashes, rows_per_band)
     buckets = melted.groupBy("band_idx", "band_key").agg(
         F.count(F.lit(1)).alias("bs")
     )

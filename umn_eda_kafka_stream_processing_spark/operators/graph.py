@@ -17,13 +17,12 @@ The div-truncation "leaks" mass (at most outdeg-1 picos per node per
 step) — deterministically, the standard price of fixed-point
 iteration.
 
-``pagerank_fixed`` excludes dangling nodes by construction: callers
-pass a SYMMETRIZED edge list (every node with an edge has out-degree
->= 1); isolated nodes don't participate. ``pagerank_directed`` is the
-general form for real directed graphs (web links, purchases): nodes
-with no out-edges are sinks, and their mass is redistributed
-uniformly each round — one extra one-row hash-agg per iteration
-(sum the dangling picos, add DT div n into every node's damped term).
+``pagerank_directed`` serves directed graphs (web links, purchases)
+and symmetrized ones alike: nodes with no out-edges are sinks, and
+their mass is redistributed uniformly each round (sum the dangling
+picos, add DT div n into every node's damped term). On a SYMMETRIZED
+edge list every node has out-degree >= 1, so DT is 0 and each step is
+the plain recurrence rank = base + (d * sum_in shares) div 100.
 """
 
 from __future__ import annotations
@@ -32,65 +31,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SCALE = 10**12  # integer "picos" fixed point
-
-
-def pagerank_fixed(
-    edges: DataFrame,
-    damping_pct: int = 85,
-    iterations: int = 5,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
-    """Iterate rank_{t+1}(v) = base + (d * sum_in shares) div 100
-    over a (src, dst) edge list where every node appears as a src
-    (symmetrize first — see module docstring). Returns (node,
-    rank_picos). All arithmetic BIGINT; ranks checkpointed per
-    iteration so the plan stays one join + one agg per round."""
-    e = edges.select(src_col, dst_col).distinct()
-    outdeg = e.groupBy(src_col).agg(
-        F.count(F.lit(1)).cast("long").alias("outdeg")
-    )
-    # out-degree rides the edge list (both are graph-sized — a
-    # broadcast would be wrong at scale; this join happens ONCE, and
-    # each iteration then joins only ranks x edges)
-    e2 = e.join(outdeg.hint("shuffle_hash"), src_col).localCheckpoint()
-    nodes = e2.select(F.col(src_col).alias("node")).distinct()
-    n = nodes.count()
-    base = (100 - damping_pct) * SCALE // (100 * n)
-    ranks = nodes.withColumn(
-        "rank_picos", F.lit(SCALE // n).cast("long")
-    ).localCheckpoint()
-    for _ in range(iterations):
-        shares = (
-            e2.join(
-                ranks.withColumnRenamed("node", src_col).hint(
-                    "shuffle_hash"
-                ),
-                src_col,
-            )
-            .select(
-                F.col(dst_col).alias("node"),
-                F.expr("rank_picos div outdeg").alias("share"),
-            )
-            .groupBy("node")
-            .agg(F.sum("share").cast("long").alias("_in"))
-        )
-        ranks = (
-            nodes.join(shares.hint("shuffle_hash"), "node", "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({damping_pct} * coalesce(_in, 0)) div 100"
-                    )
-                )
-                .cast("long")
-                .alias("rank_picos"),
-            )
-            .localCheckpoint()
-        )
-    return ranks
 
 
 def pagerank_directed(
@@ -113,37 +53,33 @@ def pagerank_directed(
         rank_{t+1}  = base + (d * (in + DT_t div n)) div 100
         base        = ((100-d) * 1e12) div (100 * n)
 
-    Scale shape: the dangling flag is computed ONCE (node-list left
-    join on out-degrees, checkpointed); each iteration is one
-    rank x edge join + one in-neighbor hash-agg (graph-sized, always
-    shuffle_hash — never broadcast) plus a ONE-ROW dangling-mass agg
-    broadcast back, and ranks are the single checkpointed frame per
-    round (the round-7 one-checkpoint lesson). Overflow: total mass
-    stays <= ~2e12 picos, so 85 * (in + dt) < 2e14 << 2^63."""
+    Scale shape: the dangling flag is computed ONCE (one node-list
+    agg over the checkpointed edges: a node is dangling unless it is
+    some edge's src), with the node and dangling counts in one job;
+    each iteration is one rank x edge join + one in-neighbor hash-agg
+    (graph-sized, always shuffle_hash — never broadcast) plus, when
+    some node is dangling, a ONE-ROW dangling-mass agg broadcast back
+    (a graph without sinks has DT = 0 and skips it). Ranks are the
+    single checkpointed frame per round (the round-7 one-checkpoint
+    lesson). Overflow: total mass stays <= ~2e12 picos, so
+    85 * (in + dt) < 2e14 << 2^63."""
     e = edges.select(src_col, dst_col).distinct()
     outdeg = e.groupBy(src_col).agg(
         F.count(F.lit(1)).cast("long").alias("outdeg")
     )
     e2 = e.join(outdeg.hint("shuffle_hash"), src_col).localCheckpoint()
     nodes = (
-        e2.select(F.col(src_col).alias("node"))
-        .union(e2.select(F.col(dst_col).alias("node")))
-        .distinct()
-        .join(
-            outdeg.withColumnRenamed(src_col, "node").hint(
-                "shuffle_hash"
-            ),
-            "node",
-            "left",
-        )
-        .select("node", F.col("outdeg").isNull().alias("dangling"))
+        e2.select(F.col(src_col).alias("node"), F.lit(False).alias("d"))
+        .union(e2.select(F.col(dst_col).alias("node"), F.lit(True).alias("d")))
+        .groupBy("node")
+        .agg(F.min("d").alias("dangling"))
         .localCheckpoint()
     )
-    n = nodes.count()
+    n, n_dangling = nodes.agg(
+        F.count(F.lit(1)), F.sum(F.col("dangling").cast("long"))
+    ).collect()[0]
     base = (100 - damping_pct) * SCALE // (100 * n)
-    ranks = nodes.withColumn(
-        "rank_picos", F.lit(SCALE // n).cast("long")
-    ).localCheckpoint()
+    ranks = nodes.withColumn("rank_picos", F.lit(SCALE // n).cast("long"))
     for _ in range(iterations):
         shares = (
             e2.join(
@@ -159,15 +95,18 @@ def pagerank_directed(
             .groupBy("node")
             .agg(F.sum("share").cast("long").alias("_in"))
         )
-        dt = ranks.where(F.col("dangling")).agg(
-            F.coalesce(F.sum("rank_picos"), F.lit(0))
-            .cast("long")
-            .alias("_dt")
-        )
+        step = nodes.join(shares.hint("shuffle_hash"), "node", "left")
+        if n_dangling:
+            dt = ranks.where(F.col("dangling")).agg(
+                F.coalesce(F.sum("rank_picos"), F.lit(0))
+                .cast("long")
+                .alias("_dt")
+            )
+            step = step.crossJoin(F.broadcast(dt))
+        else:
+            step = step.withColumn("_dt", F.lit(0).cast("long"))
         ranks = (
-            nodes.join(shares.hint("shuffle_hash"), "node", "left")
-            .crossJoin(F.broadcast(dt))
-            .select(
+            step.select(
                 "node",
                 "dangling",
                 (

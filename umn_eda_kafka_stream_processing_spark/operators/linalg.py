@@ -2,7 +2,7 @@
 for the dominant eigenvector of a gram (uncentered covariance)
 matrix.
 
-Why fixed-point (the pagerank_fixed rationale): float matvecs sum
+Why fixed-point (the graph.py PageRank rationale): float matvecs sum
 per-coordinate products in partition order, so the same data on a
 different partitioning — or another engine — drifts in the last
 ulps and breaks hash-equality. Here every step is exact BIGINT:
@@ -116,7 +116,7 @@ def power_iteration(
     the matvec join strategy: 'broadcast' for model-sized vectors
     (a 64-dim gram), 'shuffle_hash' when the vector is GRAPH-sized
     (eigencentrality at 100 TB — broadcasting a node-count vector
-    would be wrong, the pagerank_fixed rule)."""
+    would be wrong, the fixed-point PageRank rule)."""
     v = (
         gram.select(F.col("i").alias("pos"))
         .distinct()

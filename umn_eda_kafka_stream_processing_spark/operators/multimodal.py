@@ -524,13 +524,22 @@ def image_features(media: DataFrame, resize_to: tuple[int, int] = (4, 4)) -> Dat
     return media.select("media_id", "content").mapInPandas(feats, IMAGE_FEATURE_SCHEMA)
 
 
-IMAGE_DHASH_SCHEMA = T.StructType([
+# a 64-bit media fingerprint as 4 big-endian 16-bit chunks
+FINGERPRINT_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
-    T.StructField("c0", T.LongType(), False),
-    T.StructField("c1", T.LongType(), False),
-    T.StructField("c2", T.LongType(), False),
-    T.StructField("c3", T.LongType(), False),
+    *[T.StructField(f"c{k}", T.LongType(), False) for k in range(4)],
 ])
+
+
+def _fingerprint_row(media_id, bits) -> dict:
+    """A FINGERPRINT_SCHEMA row from 64 0/1 comparison bits."""
+    row = {"media_id": int(media_id)}
+    for k in range(4):
+        chunk = 0
+        for b in bits[k * 16 : (k + 1) * 16]:
+            chunk = (chunk << 1) | int(b)
+        row[f"c{k}"] = chunk
+    return row
 
 
 def image_dhash(media: DataFrame, grid: int = 8) -> DataFrame:
@@ -562,16 +571,10 @@ def image_dhash(media: DataFrame, grid: int = 8) -> DataFrame:
                 gray = px if px.ndim == 2 else px.mean(axis=2)
                 thumb = resize_nearest(gray, grid + 1, grid)
                 bits = (thumb[:, 1:] > thumb[:, :-1]).astype(np.int64).flatten()
-                row = {"media_id": int(media_id)}
-                for k in range(4):
-                    chunk = 0
-                    for b in bits[k * 16 : (k + 1) * 16]:
-                        chunk = (chunk << 1) | int(b)
-                    row[f"c{k}"] = chunk
-                out.append(row)
-            yield pd.DataFrame(out, columns=[f.name for f in IMAGE_DHASH_SCHEMA.fields])
+                out.append(_fingerprint_row(media_id, bits))
+            yield pd.DataFrame(out, columns=FINGERPRINT_SCHEMA.fieldNames())
 
-    return media.select("media_id", "content").mapInPandas(hashes, IMAGE_DHASH_SCHEMA)
+    return media.select("media_id", "content").mapInPandas(hashes, FINGERPRINT_SCHEMA)
 
 
 def image_phash_pairs(
@@ -584,6 +587,15 @@ def image_phash_pairs(
     dedup (dedup.py:_sig_near_pairs — hot-bucket cap and all).
     ``max_hamming <= 3`` keeps the pigeonhole recall guarantee of the
     4-chunk banding. Output: (media_id_a, media_id_b, hamming)."""
+    return _fingerprint_pairs(image_dhash(media), max_hamming, hot_bucket_cap)
+
+
+def _fingerprint_pairs(
+    sigs: DataFrame, max_hamming: int, hot_bucket_cap: int | None
+) -> DataFrame:
+    """Near-dup pairs over 64-bit media fingerprints (media_id,
+    c0..c3): the sigs are materialized once, then the chunk-banded
+    Hamming join (`dedup._sig_near_pairs`)."""
     from umn_eda_kafka_stream_processing_spark.operators.dedup import (
         _sig_near_pairs,
     )
@@ -593,8 +605,9 @@ def image_phash_pairs(
             f"max_hamming <= 3 (got {max_hamming}); pairs farther apart "
             "can miss every 16-bit band"
         )
-    sigs = image_dhash(media).localCheckpoint()
-    return _sig_near_pairs(sigs, "media_id", max_hamming, hot_bucket_cap)
+    return _sig_near_pairs(
+        sigs.localCheckpoint(), "media_id", max_hamming, hot_bucket_cap
+    )
 
 
 FRAME_SAMPLE_SCHEMA = T.StructType([
@@ -852,14 +865,6 @@ def synth_media(ids: DataFrame, kind: str, id_col: str = "doc_id") -> DataFrame:
     return ids.select(id_col).mapInPandas(gen, MEDIA_SCHEMA)
 
 
-AUDIO_FP_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType(), False),
-    T.StructField("c0", T.LongType(), False),
-    T.StructField("c1", T.LongType(), False),
-    T.StructField("c2", T.LongType(), False),
-    T.StructField("c3", T.LongType(), False),
-])
-
 _FP_FRAMES = 65  # 64 adjacent-energy comparison bits
 
 
@@ -895,19 +900,11 @@ def audio_fingerprint(media: DataFrame) -> DataFrame:
                 eng = np.zeros(_FP_FRAMES, dtype=np.int64)
                 np.add.at(eng, frames, np.abs(mono))
                 bits = (eng[1:] > eng[:-1]).astype(np.int64)
-                row = {"media_id": int(media_id)}
-                for k in range(4):
-                    chunk = 0
-                    for b in bits[k * 16 : (k + 1) * 16]:
-                        chunk = (chunk << 1) | int(b)
-                    row[f"c{k}"] = chunk
-                out.append(row)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in AUDIO_FP_SCHEMA.fields]
-            )
+                out.append(_fingerprint_row(media_id, bits))
+            yield pd.DataFrame(out, columns=FINGERPRINT_SCHEMA.fieldNames())
 
     return media.select("media_id", "content").mapInPandas(
-        fps, AUDIO_FP_SCHEMA
+        fps, FINGERPRINT_SCHEMA
     )
 
 
@@ -921,14 +918,6 @@ def audio_fp_pairs(
     text dedup and image dHash (pigeonhole: hamming <= 3 guarantees
     a shared 16-bit chunk — zero recall loss). Output:
     (media_id_a, media_id_b, hamming)."""
-    from umn_eda_kafka_stream_processing_spark.operators.dedup import (
-        _sig_near_pairs,
+    return _fingerprint_pairs(
+        audio_fingerprint(media), max_hamming, hot_bucket_cap
     )
-
-    if max_hamming > 3:
-        raise ValueError(
-            f"max_hamming <= 3 (got {max_hamming}); pairs farther apart "
-            "can miss every 16-bit band"
-        )
-    sigs = audio_fingerprint(media).localCheckpoint()
-    return _sig_near_pairs(sigs, "media_id", max_hamming, hot_bucket_cap)

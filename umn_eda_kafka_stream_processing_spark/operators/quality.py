@@ -254,14 +254,31 @@ def drift_census(
     Expired batches (below the retention floor) are excluded — a
     window referencing them reads zero mass there, the documented
     retention contract."""
+    return _psi_census(spark, store_path, ref_batches, cur_batches, "bin", "n_bins")
+
+
+def _psi_census(
+    spark,
+    store_path: str,
+    ref_batches: tuple,
+    cur_batches: tuple,
+    key_col: str,
+    n_col: str,
+) -> DataFrame:
+    """The one PSI body of the numeric (`drift_census`, ``key_col`` =
+    bin) and categorical (`categorical_drift_census`, ``key_col`` =
+    category) monitors: window the register store's counts per
+    (col_name, key_col) into ref/cur, then the exact-integer tail.
+    See `drift_census` for the smoothing and rounding contract;
+    ``n_col`` names the occupied-domain-size column."""
     rlo, rhi = int(ref_batches[0]), int(ref_batches[1])
     clo, chi = int(cur_batches[0]), int(cur_batches[1])
     st = BatchStore(spark, store_path, marker=FLOOR).scan()
     in_ref = (F.col("batch_id") >= rlo) & (F.col("batch_id") <= rhi)
     in_cur = (F.col("batch_id") >= clo) & (F.col("batch_id") <= chi)
-    per_bin = (
+    per_key = (
         st.filter(in_ref | in_cur)
-        .groupBy("col_name", "bin")
+        .groupBy("col_name", key_col)
         .agg(
             F.sum(F.when(in_ref, F.col("cnt")).otherwise(F.lit(0)))
             .cast("long")
@@ -271,22 +288,12 @@ def drift_census(
             .alias("cur_cnt"),
         )
     )
-    return _psi_from_counts(per_bin)
-
-
-def _psi_from_counts(per_bin: DataFrame, n_col: str = "n_bins") -> DataFrame:
-    """Shared PSI tail over a (col_name, ref_cnt, cur_cnt) frame of
-    occupied bins/categories — the exact-integer arithmetic both the
-    numeric (`drift_census`) and categorical
-    (`categorical_drift_census`) monitors reduce to. See
-    `drift_census` for the smoothing and rounding contract; ``n_col``
-    only renames the occupied-domain-size column."""
-    tot = per_bin.groupBy("col_name").agg(
+    tot = per_key.groupBy("col_name").agg(
         F.count(F.lit(1)).cast("long").alias(n_col),
         F.sum("ref_cnt").cast("long").alias("ref_total"),
         F.sum("cur_cnt").cast("long").alias("cur_total"),
     )
-    j = per_bin.join(tot, "col_name")
+    j = per_key.join(tot, "col_name")
     # fixed cast/op order — both engines produce identical doubles:
     # p, q from exact BIGINTs; the ratio from integer PRODUCTS cast
     # individually (BIGINT->DOUBLE rounds nearest-even identically)
@@ -399,24 +406,9 @@ def categorical_drift_census(
     set). Returns (col_name, n_cats, ref_total, cur_total,
     psi_femto, psi_micro). Expired batches (below the retention
     floor) are excluded."""
-    rlo, rhi = int(ref_batches[0]), int(ref_batches[1])
-    clo, chi = int(cur_batches[0]), int(cur_batches[1])
-    st = BatchStore(spark, store_path, marker=FLOOR).scan()
-    in_ref = (F.col("batch_id") >= rlo) & (F.col("batch_id") <= rhi)
-    in_cur = (F.col("batch_id") >= clo) & (F.col("batch_id") <= chi)
-    per_cat = (
-        st.filter(in_ref | in_cur)
-        .groupBy("col_name", "category")
-        .agg(
-            F.sum(F.when(in_ref, F.col("cnt")).otherwise(F.lit(0)))
-            .cast("long")
-            .alias("ref_cnt"),
-            F.sum(F.when(in_cur, F.col("cnt")).otherwise(F.lit(0)))
-            .cast("long")
-            .alias("cur_cnt"),
-        )
+    return _psi_census(
+        spark, store_path, ref_batches, cur_batches, "category", "n_cats"
     )
-    return _psi_from_counts(per_cat, n_col="n_cats")
 
 
 def table_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:

@@ -1,23 +1,26 @@
-"""Distributed EXACT ranking primitives — global order statistics
-without a corpus-wide window.
+"""Distributed EXACT ranking primitives — order statistics without a
+corpus-wide window and without a driver collect.
 
 A single `rank() OVER (ORDER BY x)` funnels the whole dataset through
 one task at 100 TB (explain_audit fails unpartitioned windows for
 exactly that reason). The scale-correct shape is the classic
-two-level histogram:
+two-level histogram, run per group (`_grouped_with_below`):
 
-1. aggregate to DISTINCT values (first hash-agg — the corpus never
-   sorts),
-2. assign each value a MONOTONE bucket (a weakly order-preserving
-   float map; only bucket boundaries depend on it, never the result),
-3. per-bucket totals are BOUNDED (``n_buckets`` rows) — a legitimate
-   driver-coordination collect (the centroid/merge-list precedent) —
-   prefix-summed and broadcast back,
-4. within-bucket prefix via a window PARTITIONED BY bucket.
+1. aggregate to DISTINCT (group, value) rows (first hash-agg — the
+   corpus never sorts),
+2. assign each value a MONOTONE bucket within its group (a weakly
+   order-preserving float map over the group's lo/hi, an aggregate
+   joined back; only bucket boundaries depend on it, never the
+   result),
+3. per-(group, bucket) totals prefix-summed by a window partitioned by
+   group over at most ``n_buckets`` rows, joined back,
+4. within-bucket prefix via a window PARTITIONED BY (group, bucket).
 
-Every count is BIGINT, so ranks are exact and order-independent; the
-DuckDB oracle twins use a plain corpus-wide window instead —
-different algorithm, same integers (the strong cross-check shape).
+The global operators are the grouped ones over one group (`_ALL`),
+so every rank runs through the same plan. Every count is
+BIGINT, so ranks are exact and order-independent; the DuckDB oracle
+twins use a plain corpus-wide window instead — different algorithm,
+same integers (the strong cross-check shape).
 
 Derived operators:
 - ``exact_quantiles`` — type-1 (smallest value whose cumulative count
@@ -34,71 +37,40 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 DEFAULT_BUCKETS = 1024
+_ALL = "_all"  # the one group of the global operators
 
 
-def _with_below(
-    dv: DataFrame,
+def _one_group(df: DataFrame, value_col: str) -> DataFrame:
+    """``df`` with the group column `_ALL` = ``value_col IS NULL``:
+    every row a rank operator keeps (NULL values are dropped) lands in
+    the one group FALSE. A literal key would do the same, but Catalyst
+    folds a literal out of the window partitioning and the join keys,
+    leaving an unpartitioned window and cartesian joins in the plan."""
+    return df.withColumn(_ALL, F.col(value_col).isNull())
+
+
+def _distinct_values(
+    df: DataFrame,
+    groups: list[str],
     value_col: str,
-    weight_col: str,
-    n_buckets: int = DEFAULT_BUCKETS,
+    weight_col: str | None = None,
 ) -> DataFrame:
-    """Add ``below`` = sum of ``weight_col`` over rows with STRICTLY
-    smaller ``value_col``. ``dv`` must hold one row per distinct
-    value, non-null. Two bounded driver collects (min/max + per-bucket
-    totals, <= n_buckets rows); all ranks exact BIGINT."""
-    spark = dv.sparkSession
-    mm = dv.agg(
-        F.min(value_col).alias("lo"), F.max(value_col).alias("hi")
-    ).collect()[0]
-    lo, hi = mm["lo"], mm["hi"]
-    if lo is None:  # empty input
-        return dv.withColumn("below", F.lit(0).cast("long"))
-    if hi == lo:
-        bucket: Column = F.lit(0)
-    else:
-        # weakly monotone float map: v1 < v2 => bucket(v1) <= bucket(v2)
-        # (IEEE /,* by positive constants preserve order) — boundaries
-        # are arbitrary, results never depend on where they fall
-        bucket = F.least(
-            F.floor(
-                (F.col(value_col).cast("double") - F.lit(float(lo)))
-                / F.lit(float(hi) - float(lo))
-                * F.lit(n_buckets)
-            ),
-            F.lit(n_buckets - 1),
+    """(groups..., value, cnt): one row per distinct non-NULL (group,
+    value); ``cnt`` counts its rows, or with ``weight_col`` sums their
+    BIGINT weights over rows with a positive, non-NULL weight."""
+    rows = df.where(F.col(value_col).isNotNull())
+    cnt = F.count(F.lit(1))
+    if weight_col is not None:
+        rows = rows.where(
+            F.col(weight_col).isNotNull() & (F.col(weight_col) > 0)
         )
-    b = dv.withColumn("_bk", bucket.cast("int"))
-    totals = {
-        r["_bk"]: r["w"]
-        for r in b.groupBy("_bk")
-        .agg(F.sum(weight_col).cast("long").alias("w"))
-        .collect()
-    }
-    run, offsets = 0, []
-    for k in sorted(totals):
-        offsets.append((k, run))
-        run += totals[k]
-    off = spark.createDataFrame(offsets, "_bk int, _off long")
-    w = (
-        Window.partitionBy("_bk")
-        .orderBy(F.col(value_col).asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        b.withColumn(
-            "_in", F.coalesce(F.sum(weight_col).over(w), F.lit(0))
-        )
-        .join(F.broadcast(off), "_bk")
-        .withColumn(
-            "below", (F.col("_off") + F.col("_in")).cast("long")
-        )
-        .drop("_bk", "_off", "_in")
-    )
+        cnt = F.sum(F.col(weight_col).cast("long"))
+    return rows.groupBy(*groups, value_col).agg(cnt.cast("long").alias("cnt"))
 
 
 def value_ranks(
@@ -109,12 +81,10 @@ def value_ranks(
     """(value, cnt, below) per DISTINCT non-null value: ``below`` rows
     are strictly smaller globally — min rank = below + 1, max rank =
     below + cnt, tie-average rank = below + (cnt + 1) / 2."""
-    dv = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(value_col)
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    return _with_below(dv, value_col, "cnt", n_buckets)
+    dv = _distinct_values(_one_group(df, value_col), [_ALL], value_col)
+    return _grouped_with_below(
+        dv, [_ALL], value_col, "cnt", n_buckets, join_hint="broadcast"
+    ).drop(_ALL)
 
 
 def exact_quantiles(
@@ -126,24 +96,13 @@ def exact_quantiles(
     """Type-1 exact quantiles at rational probabilities ``(num, den)``:
     the smallest value whose cumulative count reaches
     ceil(num * N / den). Returns (pct_ppm, value) — pct_ppm =
-    1e6*num/den (callers should pick ppm-exact rationals)."""
-    r = value_ranks(df, value_col, n_buckets)
-    spark = df.sparkSession
-    pdf = spark.createDataFrame(
-        [(1_000_000 * n // d, n, d) for n, d in probs],
-        "pct_ppm long, p_num long, p_den long",
-    )
-    tot = r.agg(F.sum("cnt").cast("long").alias("n_total"))
-    return (
-        r.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(pdf))
-        .where(
-            F.col("below") + F.col("cnt")
-            >= F.expr("(p_num * n_total + p_den - 1) div p_den")
-        )
-        .groupBy("pct_ppm")
-        .agg(F.min(value_col).alias("value"))
-    )
+    1e6*num/den (callers should pick ppm-exact rationals).
+    `grouped_exact_quantiles` over one group."""
+    return _grouped_quantiles_from_dv(
+        df.sparkSession,
+        _distinct_values(_one_group(df, value_col), [_ALL], value_col),
+        [_ALL], value_col, probs, n_buckets, join_hint="broadcast",
+    ).drop(_ALL)
 
 
 def weighted_quantiles(
@@ -156,39 +115,18 @@ def weighted_quantiles(
     """Type-1 WEIGHTED exact quantiles: the smallest value whose
     cumulative integer weight reaches ceil(num * W / den) — the
     curation ask behind "where does the token-MASS sit", where every
-    document counts by its token/byte weight, not once. Same
-    two-level-histogram shape as `exact_quantiles` (which is this
-    with weight 1): one distinct-value hash-agg summing weights, the
-    bounded per-bucket collect, a bucket-partitioned prefix window —
-    the corpus never sorts globally. Weights are cast to BIGINT
+    document counts by its token/byte weight, not once (`exact_quantiles`
+    is this with weight 1). `grouped_weighted_quantiles` over one
+    group: the corpus never sorts globally. Weights are cast to BIGINT
     (exact, order-independent sums); rows with NULL value/weight or
     non-positive weight are ignored. Returns (pct_ppm, value)."""
-    dv = (
-        df.where(
-            F.col(value_col).isNotNull()
-            & F.col(weight_col).isNotNull()
-            & (F.col(weight_col) > 0)
-        )
-        .groupBy(value_col)
-        .agg(F.sum(F.col(weight_col).cast("long")).alias("cnt"))
+    dv = _distinct_values(
+        _one_group(df, value_col), [_ALL], value_col, weight_col
     )
-    r = _with_below(dv, value_col, "cnt", n_buckets)
-    spark = df.sparkSession
-    pdf = spark.createDataFrame(
-        [(1_000_000 * n // d, n, d) for n, d in probs],
-        "pct_ppm long, p_num long, p_den long",
-    )
-    tot = r.agg(F.sum("cnt").cast("long").alias("n_total"))
-    return (
-        r.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(pdf))
-        .where(
-            F.col("below") + F.col("cnt")
-            >= F.expr("(p_num * n_total + p_den - 1) div p_den")
-        )
-        .groupBy("pct_ppm")
-        .agg(F.min(value_col).alias("value"))
-    )
+    return _grouped_quantiles_from_dv(
+        df.sparkSession, dv, [_ALL], value_col, probs, n_buckets,
+        join_hint="broadcast",
+    ).drop(_ALL)
 
 
 def grouped_exact_quantiles(
@@ -202,10 +140,9 @@ def grouped_exact_quantiles(
     domain/language", the daily curation query `exact_quantiles` only
     answers corpus-globally. Returns (group_cols..., pct_ppm, value).
 
-    Fully distributed generalization of the two-level histogram — the
-    global operator's two bounded driver collects become per-group
-    AGGREGATES joined back, so there is NO driver collect at all and
-    group cardinality is unbounded:
+    Fully distributed two-level histogram — per-group AGGREGATES
+    joined back, so there is NO driver collect at all and group
+    cardinality is unbounded:
 
     1. one hash-agg to distinct (group, value) counts — the corpus
        never sorts;
@@ -230,13 +167,9 @@ def grouped_exact_quantiles(
     groups = (
         [group_cols] if isinstance(group_cols, str) else list(group_cols)
     )
-    dv = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(*groups, value_col)
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
     return _grouped_quantiles_from_dv(
-        df.sparkSession, dv, groups, value_col, probs, n_buckets
+        df.sparkSession, _distinct_values(df, groups, value_col), groups,
+        value_col, probs, n_buckets,
     )
 
 
@@ -258,17 +191,9 @@ def grouped_weighted_quantiles(
     groups = (
         [group_cols] if isinstance(group_cols, str) else list(group_cols)
     )
-    dv = (
-        df.where(
-            F.col(value_col).isNotNull()
-            & F.col(weight_col).isNotNull()
-            & (F.col(weight_col) > 0)
-        )
-        .groupBy(*groups, value_col)
-        .agg(F.sum(F.col(weight_col).cast("long")).alias("cnt"))
-    )
     return _grouped_quantiles_from_dv(
-        df.sparkSession, dv, groups, value_col, probs, n_buckets
+        df.sparkSession, _distinct_values(df, groups, value_col, weight_col),
+        groups, value_col, probs, n_buckets,
     )
 
 
@@ -280,8 +205,9 @@ def _grouped_with_below(
     n_buckets: int,
     join_hint: str | None = None,
 ) -> DataFrame:
-    """Grouped twin of `_with_below`: add ``below`` = per-group sum of
-    ``weight_col`` over rows with STRICTLY smaller ``value_col``.
+    """Add ``below`` = per-group sum of ``weight_col`` over rows with
+    STRICTLY smaller ``value_col`` — the one rank substrate of this
+    module (the global operators pass one constant group).
     ``dv`` must hold one row per distinct (groups, value), non-null;
     other columns pass through. Fully distributed (per-group lo/hi
     agg joined back instead of a driver collect); the bucket-offset
@@ -401,41 +327,20 @@ def binary_auc(
     verified to agree — because 1e6·u2 wraps BIGINT once
     n_pos·n_neg exceeds ~4.6e12 (a few million rows per class; at
     100 TB that's every run). u2 itself stays BIGINT-safe up to
-    ~2.1e9 rows per class (u2 <= 2·n_pos·n_neg < 2^63)."""
-    g = (
-        df.where(
-            F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
-        )
-        .groupBy(score_col)
-        .agg(
-            F.sum(F.col(label_col).cast("long")).alias("pos"),
-            (
-                F.count(F.lit(1)) - F.sum(F.col(label_col).cast("long"))
-            ).alias("neg"),
-        )
+    ~2.1e9 rows per class (u2 <= 2·n_pos·n_neg < 2^63).
+
+    `grouped_binary_auc` over one group, folded to the one global row
+    — which an input with no scored row still gets: (NULL, NULL, 0,
+    NULL), the SQL global aggregate's answer."""
+    one = _auc(
+        _one_group(df, score_col), [_ALL], score_col, label_col, n_buckets,
+        join_hint="broadcast",
     )
-    r = _with_below(g, score_col, "neg", n_buckets)
-    return r.agg(
-        F.sum("pos").cast("long").alias("n_pos"),
-        F.sum("neg").cast("long").alias("n_neg"),
-        F.coalesce(
-            F.sum(F.expr("pos * (2 * below + neg)")), F.lit(0)
-        )
-        .cast("long")
-        .alias("u2"),
-    ).select(
-        "n_pos",
-        "n_neg",
-        "u2",
-        F.expr(
-            "CASE WHEN n_pos = 0 OR n_neg = 0 THEN 0 "
-            "ELSE (1000000 * CAST(u2 AS DECIMAL(38,0)) "
-            "+ CAST(n_pos AS DECIMAL(38,0)) * n_neg) "
-            "div (2 * CAST(n_pos AS DECIMAL(38,0)) * n_neg) "
-            "END"
-        )
-        .cast("long")
-        .alias("auc_micro"),
+    return one.agg(
+        F.max("n_pos").alias("n_pos"),
+        F.max("n_neg").alias("n_neg"),
+        F.coalesce(F.max("u2"), F.lit(0)).cast("long").alias("u2"),
+        F.max("auc_micro").alias("auc_micro"),
     )
 
 
@@ -451,16 +356,29 @@ def grouped_binary_auc(
     answers corpus-globally. Same Mann-Whitney rank-sum construction
     (u2 = 2U kept integer so score ties contribute exact halves; the
     final ratio through exact int128 — Spark DECIMAL(38,0) div ==
-    DuckDB HUGEINT //), with the global operator's bounded driver
-    collect replaced by the fully distributed `_grouped_with_below`
-    (per-group aggregates joined back; every window partitioned, no
-    frame wider than a bucket). Groups with one class return
-    auc_micro = 0 (undefined, flagged by n_pos/n_neg in the output).
+    DuckDB HUGEINT //), ranked by the fully distributed
+    `_grouped_with_below` (per-group aggregates joined back; every
+    window partitioned, no frame wider than a bucket). Groups with one
+    class return auc_micro = 0 (undefined, flagged by n_pos/n_neg in
+    the output).
 
     Returns (group_cols..., n_pos, n_neg, u2, auc_micro)."""
     groups = (
         [group_cols] if isinstance(group_cols, str) else list(group_cols)
     )
+    return _auc(df, groups, score_col, label_col, n_buckets)
+
+
+def _auc(
+    df: DataFrame,
+    groups: list[str],
+    score_col: str,
+    label_col: str,
+    n_buckets: int,
+    join_hint: str | None = None,
+) -> DataFrame:
+    """The AUC body of `grouped_binary_auc`; ``join_hint`` as in
+    `_grouped_with_below`."""
     g = (
         df.where(
             F.col(score_col).isNotNull() & F.col(label_col).isNotNull()
@@ -473,7 +391,9 @@ def grouped_binary_auc(
             ).alias("neg"),
         )
     )
-    r = _grouped_with_below(g, groups, score_col, "neg", n_buckets)
+    r = _grouped_with_below(
+        g, groups, score_col, "neg", n_buckets, join_hint=join_hint
+    )
     return r.groupBy(*groups).agg(
         F.sum("pos").cast("long").alias("n_pos"),
         F.sum("neg").cast("long").alias("n_neg"),
@@ -541,12 +461,7 @@ def grouped_mad_outliers(
     # the histogram substrate consumes its input several times (min/
     # max agg, bucketing, totals) — materialize the COMPRESSED frames
     # (distinct values, then distinct deviations), never the corpus
-    dv = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(*groups, value_col)
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint()
-    )
+    dv = _distinct_values(df, groups, value_col).localCheckpoint()
     med = _grouped_quantiles_from_dv(
         spark, dv, groups, value_col, [(1, 2)], n_buckets,
         join_hint="broadcast",
@@ -676,11 +591,7 @@ def grouped_percentile_rank(
     groups = (
         [group_cols] if isinstance(group_cols, str) else list(group_cols)
     )
-    dv = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(*groups, value_col)
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
+    dv = _distinct_values(df, groups, value_col)
     r = _grouped_with_below(dv, groups, value_col, "cnt", n_buckets)
     tot = dv.groupBy(*groups).agg(
         F.sum("cnt").cast("long").alias("_nt")

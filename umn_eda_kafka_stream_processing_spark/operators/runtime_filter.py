@@ -62,26 +62,13 @@ def bloom_build(
     salt: str = "bloom",
 ) -> list[int]:
     """Build the filter: distinct keys → k positions each → per-word
-    bit_or. One distinct + one tiny agg; only m_bits/32 longs reach
-    the driver (the same driver-coordination Spark's built-in runtime
-    filter uses). Returns the dense word list."""
-    if m_bits % WORD_BITS:
-        raise ValueError(f"m_bits {m_bits} not a multiple of {WORD_BITS}")
-    keys = df.select(F.col(key_col).cast("string").alias("_k")).distinct()
-    pos = keys.select(
-        F.explode(F.array(*_positions(F.col("_k"), m_bits, k_hashes, salt))).alias(
-            "pos"
-        )
-    )
-    rows = (
-        pos.select(
-            (F.col("pos") / WORD_BITS).cast("int").alias("w"),
-            (F.col("pos") % WORD_BITS).cast("int").alias("b"),
-        )
-        .groupBy("w")
-        .agg(F.bit_or(F.call_function("shiftleft", F.lit(1).cast("long"), F.col("b"))).alias("bits"))
-        .collect()
-    )
+    bit_or — `partition_bloom_index` over one constant partition. One
+    distinct + one tiny agg; only m_bits/32 longs reach the driver
+    (the same driver-coordination Spark's built-in runtime filter
+    uses). Returns the dense word list."""
+    rows = partition_bloom_index(
+        df.withColumn("_p", F.lit(0)), "_p", key_col, m_bits, k_hashes, salt
+    ).collect()
     words = [0] * (m_bits // WORD_BITS)
     for r in rows:
         words[r["w"]] = int(r["bits"])

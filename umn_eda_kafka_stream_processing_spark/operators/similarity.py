@@ -313,108 +313,6 @@ def embedding_near_dup_pairs(
     )
 
 
-def cosine_topk_pandas(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_queries: int = 10_000,
-) -> DataFrame:
-    """Arrow/numpy twin of cosine_topk for high-dimensional vectors.
-
-    The JVM higher-order-function dot product evaluates per element
-    interpreted; at dim >= a few hundred the BLAS matmul inside a
-    mapInPandas batch is 10-100x faster. Shape: the (small) query
-    matrix is collected once to the driver and closed over; each
-    corpus Arrow batch computes C @ Q.T and emits only its per-batch
-    top-k candidates per query (a partial top-k — shuffle volume is
-    batches x queries x k, not |corpus| x queries); the final exact
-    rank runs on the rounded scores with the id tie-break, identical
-    to cosine_topk.
-
-    BLAS uses pairwise summation, so raw scores can differ from the
-    sequential JVM fold in the last ulp; scores are rounded half-up
-    to 6 dp like every similarity in this engine, which the
-    equivalence test pins against cosine_topk.
-    """
-    import math
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    # ENFORCED contract, not just documented: the query matrix is
-    # collected to the driver and broadcast inside the closure, so an
-    # oversized query set would silently become a driver OOM. Count
-    # first (cheap agg) and refuse loudly.
-    n_q = queries.count()
-    if n_q > max_queries:
-        raise ValueError(
-            f"cosine_topk_pandas: {n_q} query vectors exceeds "
-            f"max_queries={max_queries}; the query side is collected "
-            "to the driver — raise max_queries only if driver memory "
-            "allows, or use cosine_topk / srp_lsh_pairs for large "
-            "query sets"
-        )
-    q_rows = queries.select(F.col(id_col), F.col(vec_col)).collect()
-    if not q_rows:
-        raise ValueError("cosine_topk_pandas: empty query set")
-    if not all(isinstance(r[id_col], int) for r in q_rows):
-        raise TypeError(
-            "cosine_topk_pandas requires integer ids (LongType output); "
-            "use cosine_topk for other id types"
-        )
-    q_ids = np.array([r[id_col] for r in q_rows])
-    Q = np.array([r[vec_col] for r in q_rows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-
-    out_schema = T.StructType([
-        T.StructField("query_id", T.LongType()),
-        T.StructField("neighbor_id", T.LongType()),
-        T.StructField("sim", T.DoubleType()),
-    ])
-
-    def score(batches):
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy()
-            C = np.array(list(pdf[vec_col]), dtype=np.float64)
-            Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-            sims = Cn @ Qn.T                      # (n, kq)
-            out = []
-            top = min(k + 1, len(ids))            # +1 absorbs self-match
-            for qi in range(len(q_ids)):
-                col = sims[:, qi]
-                if len(ids) > top:
-                    # tie-safe cutoff: keep everything within one
-                    # rounding ulp (1e-6) of the top-th raw score, so
-                    # a neighbor that ROUNDS equal to the k-th can't
-                    # be pruned here and lose to the global
-                    # (sim DESC, id ASC) tie-break
-                    kth = np.partition(-col, top - 1)[top - 1]
-                    cand = np.flatnonzero(-col <= kth + 1.5e-6)
-                else:
-                    cand = np.arange(len(ids))
-                for ci in cand:
-                    if ids[ci] == q_ids[qi]:
-                        continue
-                    s = math.floor(col[ci] * 1e6 + 0.5) / 1e6  # half-up 6dp
-                    out.append((int(q_ids[qi]), int(ids[ci]), s))
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "sim"])
-
-    partial = corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-        score, out_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "sim", "rank")
-    )
-
-
 def srp_planes(dim: int, n_bits: int) -> list[list[int]]:
     """Deterministic signed-random-projection hyperplanes: component
     (p, j) is an md5-derived integer in [-1000, 1000]. md5 gives
@@ -1096,6 +994,7 @@ def semantic_dedup_pairs(
 def incremental_semantic_dedup(
     batch_df: DataFrame,
     seen_store_path: str,
+    batch_id: int,
     centroids: DataFrame,
     tau: float = 0.9,
     id_col: str = "vec_id",
@@ -1116,30 +1015,34 @@ def incremental_semantic_dedup(
        min id, the incremental-simhash convention — the batch has no
        stable "closest to centroid" history to apply SemDeDup's
        keep-the-atypical rule to).
-    3. history: survivors equi-join the admitted store ON THE BUCKET
-       only (partition-local; shuffle_hash — wide array rows) and
-       any history row with cosine >= tau kills the newcomer.
-       Zero-norm vectors produce NULL cosine, which fails ``>= tau``
-       — never treated as a duplicate.
-    4. admit: append survivors' (bucket, id, vector) to the store.
+    3. history: survivors equi-join the admitted rows of EARLIER
+       batches ON THE BUCKET only (partition-local; shuffle_hash —
+       wide array rows) and any history row with cosine >= tau kills
+       the newcomer. Zero-norm vectors produce NULL cosine, which
+       fails ``>= tau`` — never treated as a duplicate.
+    4. admit: upsert survivors' (bucket, id, vector).
 
-    The store is hive-partitioned parquet BY BUCKET, and the history
-    read filters to the batch's buckets (collected — a handful of
-    ints) so the scan is partition-pruned: per-batch cost is
-    |batch| x |history-in-touched-buckets|, never |history|. At
-    100 TB the same layout as a Delta/Iceberg table keeps the exact
-    plan shape.
+    The store is a `stores.SnapshotStore` keyed by (bucket, id),
+    hive-partitioned BY BUCKET, with ``batch_id`` as its order column,
+    advanced once per batch with its read pruned to the batch's
+    buckets: per-batch cost is |batch| x |history-in-touched-buckets|,
+    never |history|. Replay safety (the SimHash rule): the probe
+    ignores rows carrying THIS ``batch_id``, so a replayed batch sees
+    the pre-batch history, keeps the same vectors and rewrites the
+    same rows. A seen-store in the earlier append layout (no
+    ``batch_id`` column) cannot be read here: rebuild it from the
+    source stream.
 
     Wire with streaming/runner.py:start_foreach_batch_sink:
-    ``lambda b, _id: sink(incremental_semantic_dedup(b, store,
-    frozen_centroids))``. At-least-once on replay; admission appends
-    are deduplicated downstream by id. The store path may be any Hadoop
-    URI (file:, hdfs://, s3a://).
+    ``lambda b, bid: sink(incremental_semantic_dedup(b, store, bid,
+    frozen_centroids))``. The store path may be any Hadoop URI (file:,
+    hdfs://, s3a://).
     """
     from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     store = SnapshotStore(
-        batch_df.sparkSession, seen_store_path, partition_by="bucket"
+        batch_df.sparkSession, seen_store_path, ["bucket", id_col], "bucket",
+        order="batch_id",
     )
     assigned = (
         assign_ivf_bucket(batch_df, centroids, id_col=id_col, vec_col=vec_col)
@@ -1194,34 +1097,25 @@ def incremental_semantic_dedup(
         .distinct()
     )
     survivors = assigned.join(in_batch_losers, id_col, "left_anti")
-    # pruned to the batch's buckets: an isin over a literal handful of
-    # bucket ids lands in the scan's PartitionFilters
-    seen = store.read(near=assigned)
-    if seen is not None:
-        seen = (
-            seen.select(
-                F.col("bucket").alias("_sb"),
-                F.col(id_col).alias("_sid"),
-                F.col("_v").alias("_sv"),
-                F.col("_n").alias("_sn"),
-            )
+
+    def step(seen: DataFrame | None) -> DataFrame:
+        if seen is None:
+            return survivors
+        seen = seen.where(F.col("batch_id") != int(batch_id)).select(
+            F.col("bucket").alias("_sb"),
+            F.col(id_col).alias("_sid"),
+            F.col("_v").alias("_sv"),
+            F.col("_n").alias("_sn"),
         )
         # over-cap-bucket rows skip the history comparison too (they
         # were admitted uncompared in-batch; comparing them here
         # would make the cap's semantics depend on arrival order)
-        pair_surv = survivors.join(
-            pairable.select(id_col), id_col, "left_semi"
-        )
+        pair_surv = survivors.join(pairable.select(id_col), id_col, "left_semi")
         hits = (
             pair_surv.join(
                 seen.hint("shuffle_hash"),
-                # same-id exclusion: on foreachBatch REPLAY after a
-                # crash between the store append and the sink commit,
-                # a survivor's own admitted copy is already in the
-                # store (cosine 1.0) — without this predicate the
-                # replayed row silently dedups against itself and the
-                # at-least-once emission contract degrades to
-                # at-most-once for that batch (round-5 advice)
+                # an id already admitted by an earlier batch is not its
+                # own duplicate: a re-sent vector is emitted again
                 (F.col("bucket") == F.col("_sb"))
                 & (F.col(id_col) != F.col("_sid")),
             )
@@ -1235,14 +1129,11 @@ def incremental_semantic_dedup(
             .select(id_col)
             .distinct()
         )
-        survivors = survivors.join(hits, id_col, "left_anti")
-    # materialize BEFORE the store append: the lineage reads the
-    # store path, and lazily re-scanning it mid-append races the
-    # file listing
-    survivors = survivors.localCheckpoint()
-    store.append(survivors.select(id_col, "bucket", "_v", "_n"))
+        return survivors.join(hits, id_col, "left_anti")
+
+    admitted = store.advance(step, int(batch_id), near=assigned)
     return (
-        survivors.select(id_col)
+        admitted.select(id_col)
         .join(batch_df, id_col)
         .select(*batch_df.columns)
     )

@@ -1020,10 +1020,11 @@ def _purchase_cs_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pagerank_oracle(iters: int = 5, damping: int = 85) -> str:
-    """Unrolled DuckDB twin of operators/graph.py:pagerank_fixed over
-    the symmetrized customer-supplier purchase graph: one (contribs,
-    ranks) CTE pair per iteration, all-BIGINT fixed-point arithmetic
-    (rank div outdeg shares, (85 * sum) div 100 damping)."""
+    """Unrolled DuckDB twin of operators/graph.py:pagerank_directed
+    over the symmetrized customer-supplier purchase graph (no sinks, so
+    no dangling-mass term): one (contribs, ranks) CTE pair per
+    iteration, all-BIGINT fixed-point arithmetic (rank div outdeg
+    shares, (85 * sum) div 100 damping)."""
     scale = 10**12
     ctes = [
         """cs AS (
@@ -1089,14 +1090,14 @@ def _pagerank_oracle(iters: int = 5, damping: int = 85) -> str:
 )
 def purchase_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from umn_eda_kafka_stream_processing_spark.operators.graph import (
-        pagerank_fixed,
+        pagerank_directed,
     )
 
     cs = _purchase_cs_pairs(spark, sf_dir)
     edges = cs.select(
         F.col("a").alias("src"), F.col("b").alias("dst")
     ).union(cs.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    ranks = pagerank_fixed(edges, damping_pct=85, iterations=5)
+    ranks = pagerank_directed(edges, damping_pct=85, iterations=5)
     return ranks.select(
         "node",
         F.substring("node", 1, 1).alias("node_type"),
@@ -3073,7 +3074,7 @@ def store_maintenance_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _duck_psi_terms(n: str = "n_bins") -> str:
     """PSI term SQL text — the identical fixed double-op chain as
-    operators/quality.py:_psi_from_counts (charlm ln rule: one ln per
+    operators/quality.py:_psi_census (charlm ln rule: one ln per
     bin on a deterministic double ratio, micro-rounded to BIGINT;
     probability gap nano-rounded; integer product, integer sum).
     ``n`` is the occupied-domain-size column (n_bins / n_cats)."""

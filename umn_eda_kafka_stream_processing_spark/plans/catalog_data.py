@@ -2186,24 +2186,33 @@ def image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def image_phash_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _media_dedup_stats(spark, sf_dir, "image", mm.image_dhash, "n_images")
+
+
+def _media_dedup_stats(
+    spark: SparkSession, sf_dir: str, kind: str, signature, count_col: str
+) -> DataFrame:
+    """The near-dup census of one synthetic media ``kind`` under its
+    64-bit fingerprint ``signature`` (`image_phash_dedup_stats`,
+    `audio_fp_dedup_stats`): media/signature counts, candidate, dup
+    and exact pair counts and a pair checksum."""
     from umn_eda_kafka_stream_processing_spark.operators.dedup import (
         _sig_near_pairs,
     )
 
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    media = mm.synth_media(docs, "image")
     # one decode pass: the signatures feed both the census counts and
     # the banded pair join (materialize before the self-join)
-    sigs = mm.image_dhash(media).localCheckpoint()
-    # capless-with-guard: the oracle is the exact capless twin
-    # (round-11 advice on the audio twin — same hazard here), and a
-    # degenerate bucket FAILS LOUD instead of exploding B²/2 pairs
-    # (round-12 advice); production callers use image_dhash_pairs
-    # with its default cap
+    sigs = signature(mm.synth_media(docs, kind)).localCheckpoint()
+    # capless-with-guard: the oracle is the exact capless twin, so a
+    # bucket crossing a cap at a larger SF would silently diverge the
+    # engines — and a degenerate bucket FAILS LOUD instead of
+    # exploding B²/2 pairs; production callers use image_phash_pairs /
+    # audio_fp_pairs with their default cap
     cands = _sig_near_pairs(sigs, "media_id", max_hamming=64,
                             hot_bucket_cap=None, hot_bucket_guard=10_000)
     sig_stats = sigs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_images"),
+        F.count(F.lit(1)).cast("long").alias(count_col),
         F.countDistinct(F.struct("c0", "c1", "c2", "c3"))
         .cast("long")
         .alias("n_distinct_sig"),
@@ -5070,51 +5079,9 @@ def embedding_int8_quant_census(
     """,
 )
 def audio_fp_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from umn_eda_kafka_stream_processing_spark.operators.dedup import (
-        _sig_near_pairs,
+    return _media_dedup_stats(
+        spark, sf_dir, "audio", mm.audio_fingerprint, "n_clips"
     )
-
-    docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    media = mm.synth_media(docs, "audio")
-    sigs = mm.audio_fingerprint(media).localCheckpoint()
-    # capless-with-guard: the oracle is the exact capless twin, so a
-    # bucket ever crossing a cap at larger SF would silently diverge
-    # the engines (round-11 advice) — and a degenerate bucket FAILS
-    # LOUD instead of exploding B²/2 pairs (round-12 advice);
-    # production callers use audio_fp_pairs with its default cap +
-    # an lsh_bucket_stats-style census
-    cands = _sig_near_pairs(
-        sigs, "media_id", max_hamming=64, hot_bucket_cap=None,
-        hot_bucket_guard=10_000,
-    )
-    sig_stats = sigs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_clips"),
-        F.countDistinct(F.struct("c0", "c1", "c2", "c3"))
-        .cast("long")
-        .alias("n_distinct_sig"),
-    )
-    pair_stats = cands.agg(
-        F.count(F.lit(1)).cast("long").alias("n_candidate_pairs"),
-        F.sum(F.when(F.col("hamming") <= 3, 1).otherwise(0))
-        .cast("long")
-        .alias("n_dup_pairs"),
-        F.sum(F.when(F.col("hamming") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_exact_pairs"),
-        F.coalesce(
-            F.sum(
-                F.when(
-                    F.col("hamming") <= 3,
-                    (F.col("media_id_a") * 31 + F.col("media_id_b"))
-                    % 1000003,
-                ).otherwise(0)
-            ),
-            F.lit(0),
-        )
-        .cast("long")
-        .alias("pair_checksum"),
-    )
-    return sig_stats.crossJoin(pair_stats)
 
 
 @_register(

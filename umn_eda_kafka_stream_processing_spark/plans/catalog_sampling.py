@@ -1058,7 +1058,8 @@ def _manifest_extend_oracle() -> str:
     "append-only twin of the benchmark patch): the corpus splits at "
     "t = (max doc_id * 9) div 10 into the shipped corpus and a late "
     "doc batch. The extension grows the pair graph with "
-    "dedup.minhash_lsh_pairs_delta (old x new band join + new x new "
+    "dedup.minhash_lsh_pairs over the batch with the shipped corpus "
+    "as history (old x new band join + new x new "
     "— NO old self-join; pairwise predicates make pairs(old ∪ new) "
     "= old ∪ delta exactly), re-runs min-label components ONLY on "
     "the affected subgraph (delta pairs + old pairs of clusters a "
@@ -1148,20 +1149,20 @@ def manifest_extend_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         extend_clusters,
     )
     from umn_eda_kafka_stream_processing_spark.operators.dedup import (
-        minhash_lsh_pairs_delta,
+        minhash_lsh_pairs,
     )
 
     delta_pairs = materialized(
         spark,
         f"extend_delta_pairs|{sf_dir}",
-        lambda: minhash_lsh_pairs_delta(
-            old,
+        lambda: minhash_lsh_pairs(
             batch,
-            old_sigs=cached_minhash_signatures(spark, sf_dir).filter(
-                F.col("doc_id") < t
-            ),
-            batch_sigs=cached_minhash_signatures(spark, sf_dir).filter(
+            history=old,
+            sigs=cached_minhash_signatures(spark, sf_dir).filter(
                 F.col("doc_id") >= t
+            ),
+            history_sigs=cached_minhash_signatures(spark, sf_dir).filter(
+                F.col("doc_id") < t
             ),
         ),
     )

@@ -473,16 +473,17 @@ class SnapshotStore:
     defaults to the keys), so readers can prune to the buckets of the keys
     they probe (`read` with ``near``).
 
-    A partition column hashed from a subset of the store's own keys can
-    never move a key between partitions, so an upsert (and `advance`)
-    reads and rewrites only the partitions its rows land in: one collect
-    of their bucket ids, then a scan pruned to those directories. Any
-    other partition column — a caller-assigned IVF bucket, the hash of a
-    foreign key — can MOVE a key: the upsert then scans the whole store
-    once to find the partitions holding its keys' old rows, so the merge
-    sees (and drops) the stale copy, and deletes the partitions the merge
-    emptied; it still rewrites only the touched partitions. An
-    unpartitioned store is read and rewritten whole."""
+    A partition column hashed from a subset of the store's own keys, or
+    one that is itself a key, can never move a key between partitions,
+    so an upsert (and `advance`) reads and rewrites only the partitions
+    its rows land in: one collect of their bucket ids, then a scan
+    pruned to those directories. Any other partition column — a
+    caller-assigned IVF bucket, the hash of a foreign key — can MOVE a
+    key: the upsert then scans the whole store once to find the
+    partitions holding its keys' old rows, so the merge sees (and drops)
+    the stale copy, and deletes the partitions the merge emptied; it
+    still rewrites only the touched partitions. An unpartitioned store
+    is read and rewritten whole."""
 
     def __init__(
         self,
@@ -500,6 +501,7 @@ class SnapshotStore:
         self.bucket_on = self.keys if bucket_on is None else _cols(bucket_on)
         self.moves = bool(self.parts) and not (
             n_buckets and set(self.bucket_on) <= set(self.keys)
+            or set(self.parts) <= set(self.keys)
         )
 
     def _bucket(self) -> Column:
@@ -647,16 +649,6 @@ class SnapshotStore:
             )
         _rewrite_partitions(self.spark, self.path, merged, parts, emptied)
         return merged
-
-    def append(self, rows: DataFrame) -> None:
-        """Insert-only write for stores that never update a key (the
-        dedup seen-stores): a plain append, no merge and no store read. A
-        zero-row first append leaves no store behind."""
-        writer = rows.write.mode("append")
-        if self.parts:
-            writer = writer.partitionBy(*self.parts)
-        writer.parquet(self.path)
-        _drop_if_empty(self.spark, self.path)
 
     def _files(self, dirs: list[str]) -> int:
         """Data files under the given partition directories (the store

@@ -114,11 +114,7 @@ def make_idempotent_batch_fn(
     EXCEPT for a crash in the window between ``fn`` finishing and the
     marker landing: that one replay re-runs ``fn``, so ``fn``'s
     effect must still be atomic or idempotent within itself. Every
-    `BatchStore` write and every `SnapshotStore` upsert or advance is,
-    except `SnapshotStore.append`, the one append writer left: the
-    semantic-dedup seen-store (`similarity.incremental_semantic_dedup`).
-    That operator's output is replay-exact, but a replay appends its
-    admissions a second time, as duplicate store rows.
+    `BatchStore` write and every `SnapshotStore` upsert or advance is.
     """
 
     def gated(batch_df: DataFrame, batch_id: int) -> None:
