@@ -21,7 +21,7 @@ ship in the sidecar.
 
 The stdout line is deliberately TINY (< ~1.2 KB): the driver's
 capture keeps only the LAST 2000 CHARACTERS of stdout (every
-BENCH_r0N.json tail is exactly 2000 chars; r01's 1.9 KB line parsed,
+BENCH_r{N}.json tail is exactly 2000 chars; r01's 1.9 KB line parsed,
 every longer line since has not — including r09's 4.6 KB "compact"
 line). 163 queries x ~28 chars can never fit, so stdout now carries
 only: metric, total, sf, noisy flag, per-FAMILY subtotals (9 catalog

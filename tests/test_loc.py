@@ -1,5 +1,6 @@
 """tools/loc.py: the package code-line counter skips blank lines,
-comments and docstrings, and nothing else."""
+comments and docstrings, and nothing else; the option counter counts
+the defaulted parameters of public, uniquely named functions."""
 
 from __future__ import annotations
 
@@ -48,3 +49,25 @@ def test_count_walks_a_directory(tmp_path):
     (tmp_path / "pkg" / "b.py").write_text("x = 1\n\n# done\n")
     (tmp_path / "pkg" / "notes.txt").write_text("x = 1\n")
     assert loc.count(str(tmp_path / "pkg")) == {"a.py": 8, "b.py": 1}
+
+
+def test_defaulted_params_counts_public_unique_defs(tmp_path):
+    (tmp_path / "a.py").write_text(
+        "def f(x, y=1, *, z=2, w):\n"
+        "    def inner(q=0):\n"
+        "        return q\n"
+        "    return inner()\n"
+        "\n"
+        "def _private(a=1):\n"
+        "    return a\n"
+        "\n"
+        "def twice(a=1):\n"
+        "    return a\n"
+        "\n"
+        "class C:\n"
+        "    def m(self, k=3, *args, **kw):\n"
+        "        return k\n"
+    )
+    (tmp_path / "b.py").write_text("def twice(a=1, b=2):\n    return a + b\n")
+    # f: y, z; inner: q; C.m: k. _private is private, twice is not unique
+    assert loc.defaulted_params(str(tmp_path)) == 4

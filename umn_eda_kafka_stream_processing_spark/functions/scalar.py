@@ -23,51 +23,43 @@ def round_half_up(col: Column, scale: int) -> Column:
     return F.floor(col * factor + F.lit(0.5)) / factor
 
 
-def stringify_address(
-    line1="line1", line2="line2", citynm="citynm", state="state",
-    zip5="zip5", zip4="zip4", countrycd="countrycd",
-) -> Column:
+def stringify_address() -> Column:
     """"{line1}, {line2}, {citynm}, {state} {zip5}-{zip4} {countrycd}".
 
     reference: exercises/stateless/AddressSortAndStringify.java:15-20;
     golden: "111 1st St, Apt 2, Madison, WI 55555-1234 USA"
     (AddressSortAndStringifyTest.java:80,105).
     """
-    return F.format_string(
-        "%s, %s, %s, %s %s-%s %s",
-        F.col(line1), F.col(line2), F.col(citynm), F.col(state),
-        F.col(zip5), F.col(zip4), F.col(countrycd),
-    )
+    cols = ("line1", "line2", "citynm", "state", "zip5", "zip4", "countrycd")
+    return F.format_string("%s, %s, %s, %s %s-%s %s", *[F.col(c) for c in cols])
 
 
-def birth_decade_filter(
-    birthdt: str = "birthdt", start_year: int = 1990, end_year: int = 1999
-) -> Column:
-    """Customers born in [start_year, end_year] from "YYYY-MM-DD".
+def birth_decade_filter(birthdt: str = "birthdt") -> Column:
+    """Customers born in [1990, 1999] from "YYYY-MM-DD".
 
     reference: exercises/stateless/TargetCustomerFilter.java:13-15;
     boundary behavior pinned by TargetCustomerFilterTest.java:70-90
     (1989 out, 1990 in, 1999 in, 2000 out).
     """
     year = F.substring(F.col(birthdt), 1, 4).cast("int")
-    return year.between(start_year, end_year)
+    return year.between(1990, 1999)
 
 
-def composite_key(*cols: str, sep: str = "-") -> Column:
+def composite_key(*cols: str) -> Column:
     """artistid + "-" + state style composite keys.
 
     reference: phase3/TopStreamingArtistByState.java:221.
     """
-    return F.concat_ws(sep, *[F.col(c) for c in cols])
+    return F.concat_ws("-", *[F.col(c) for c in cols])
 
 
-def split_composite_key(key: str = "key", sep: str = "-") -> tuple[Column, Column]:
-    """Split a composite key on its LAST separator (test-side helper,
+def split_composite_key() -> tuple[Column, Column]:
+    """Split the ``key`` column on its LAST "-" (test-side helper,
     reference: phase3/TopStreamingArtistByStateTest.java:793-797)."""
     prefix = F.expr(
-        f"substring({key}, 1, length({key}) - length(substring_index({key}, '{sep}', -1)) - 1)"
+        "substring(key, 1, length(key) - length(substring_index(key, '-', -1)) - 1)"
     )
-    suffix = F.substring_index(F.col(key), sep, -1)
+    suffix = F.substring_index(F.col("key"), "-", -1)
     return prefix, suffix
 
 

@@ -33,25 +33,25 @@ def tokens(text: str = "text") -> Column:
     return F.split(F.trim(F.col(text)), r"\s+")
 
 
-def token_count(text: str = "text") -> Column:
-    return F.size(tokens(text)).cast("long")
+def token_count() -> Column:
+    return F.size(tokens()).cast("long")
 
 
-def stopword_count(lang: str, text: str = "text") -> Column:
+def stopword_count(lang: str) -> Column:
     """Count of tokens that are stopwords of ``lang``."""
     words = LANG_STOPWORDS[lang]
-    return F.size(F.filter(tokens(text), lambda t: t.isin(words))).cast("long")
+    return F.size(F.filter(tokens(), lambda t: t.isin(words))).cast("long")
 
 
-def lang_scores(text: str = "text") -> dict[str, Column]:
-    return {lang: stopword_count(lang, text) for lang in LANG_STOPWORDS}
+def lang_scores() -> dict[str, Column]:
+    return {lang: stopword_count(lang) for lang in LANG_STOPWORDS}
 
 
-def lang_predict(text: str = "text") -> Column:
+def lang_predict() -> Column:
     """Heuristic language-ID: argmax stopword overlap, ties broken by
     LANG_STOPWORDS declaration order (lang_i wins if its score >= all
     later langs' scores)."""
-    scores = lang_scores(text)
+    scores = lang_scores()
     langs = list(scores)
     expr: Column = F.lit(langs[-1])
     for i in range(len(langs) - 2, -1, -1):
@@ -64,11 +64,11 @@ def lang_predict(text: str = "text") -> Column:
     return expr
 
 
-def punct_count(text: str = "text") -> Column:
+def punct_count() -> Column:
     """Count of common punctuation chars (explicit class — regex
     character-class semantics differ across engines)."""
-    stripped = F.regexp_replace(F.col(text), r"[.,!?;:'\"()-]", "")
-    return (F.length(F.col(text)) - F.length(stripped)).cast("long")
+    stripped = F.regexp_replace(F.col("text"), r"[.,!?;:'\"()-]", "")
+    return (F.length(F.col("text")) - F.length(stripped)).cast("long")
 
 
 # HTML extraction regexes: the Java∩RE2-compatible subset (inline
@@ -108,11 +108,11 @@ def html_to_text(html: str = "html") -> Column:
     return F.trim(F.regexp_replace(out, r"\s+", " "))
 
 
-def fingerprint_md5(text: str = "text") -> Column:
+def fingerprint_md5() -> Column:
     """Normalized-content fingerprint: md5(lower(trim(text))).
 
     The exact-dedup key: identical modulo case/outer whitespace."""
-    return F.md5(F.lower(F.trim(F.col(text))))
+    return F.md5(F.lower(F.trim(F.col("text"))))
 
 
 def char_shingles(text: str = "text", n: int = 3, distinct: bool = True) -> Column:
@@ -153,18 +153,18 @@ def char_shingles_packed(text: str = "text", n: int = 3) -> Column:
     )
 
 
-def quality_score(text: str = "text") -> Column:
+def quality_score() -> Column:
     """Composite document quality in [0,1]:
     0.5 * min(n_tokens/100, 1)           (length credit)
     + 0.3 * (1 - stop_ratio)             (informativeness)
     + 0.2 * (1 - min(punct_ratio*5, 1))  (cleanliness)
     Deterministic and portable (least/greatest + double arithmetic).
     """
-    ntok = token_count(text).cast("double")
-    stop_en = stopword_count("en", text).cast("double")
+    ntok = token_count().cast("double")
+    stop_en = stopword_count("en").cast("double")
     stop_ratio = stop_en / F.greatest(ntok, F.lit(1.0))
-    punct_ratio = punct_count(text).cast("double") / F.greatest(
-        F.length(F.col(text)).cast("double"), F.lit(1.0)
+    punct_ratio = punct_count().cast("double") / F.greatest(
+        F.length(F.col("text")).cast("double"), F.lit(1.0)
     )
     return round_half_up(
         F.least(ntok / 100.0, F.lit(1.0)) * 0.5

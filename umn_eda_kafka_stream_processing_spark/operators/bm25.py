@@ -36,9 +36,7 @@ K1 = 1.2
 B = 0.75
 
 
-def bm25_index(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> tuple[DataFrame, DataFrame, int, int]:
+def bm25_index(docs: DataFrame) -> tuple[DataFrame, DataFrame, int, int]:
     """Build the inverted index: returns (postings, doclens, n_docs,
     total_tokens) where postings = (term, id, tf, idf_micro) and
     doclens = (id, dl). Lowercased whitespace tokens; empty docs
@@ -46,10 +44,10 @@ def bm25_index(
     keep n_docs honest). Only the two corpus scalars reach the
     driver."""
     toks = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.transform(
-                F.split(F.trim(F.col(text_col)), r"\s+"),
+                F.split(F.trim(F.col("text")), r"\s+"),
                 lambda w: F.lower(w),
             )
         ).alias("term"),
@@ -58,19 +56,19 @@ def bm25_index(
     # frequencies, the total-token scalar) derives from the
     # checkpointed (id, term, tf) aggregate, not from re-exploding
     tf = (
-        toks.groupBy(id_col, "term")
+        toks.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
         .localCheckpoint()
     )
-    doclens = docs.select(id_col).join(
-        tf.groupBy(id_col).agg(F.sum("tf").cast("long").alias("dl")),
-        id_col,
+    doclens = docs.select("doc_id").join(
+        tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl")),
+        "doc_id",
         "left",
-    ).select(id_col, F.coalesce("dl", F.lit(0)).cast("long").alias("dl"))
+    ).select("doc_id", F.coalesce("dl", F.lit(0)).cast("long").alias("dl"))
     n_docs = docs.count()
     total_tokens = int(tf.agg(F.sum("tf")).collect()[0][0] or 0)
     dfreq = tf.groupBy("term").agg(
-        F.countDistinct(id_col).cast("long").alias("df")
+        F.countDistinct("doc_id").cast("long").alias("df")
     )
     idf = dfreq.select(
         "term",
@@ -87,7 +85,7 @@ def bm25_index(
         .alias("idf_micro"),
     )
     postings = tf.join(F.broadcast(idf), "term").select(
-        "term", id_col, "tf", "idf_micro"
+        "term", "doc_id", "tf", "idf_micro"
     )
     return postings, doclens, n_docs, total_tokens
 
@@ -149,8 +147,6 @@ def upsert_bm25_index(
     batch_df: DataFrame,
     index_dir: str,
     batch_seq: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 32,
 ) -> None:
     """Incrementally maintain the BM25 inverted index under a
@@ -188,47 +184,47 @@ def upsert_bm25_index(
     and doclens upserts touch only the batch's buckets. Bucket
     values are hashes of the stores' own keys, so no key ever moves."""
     postings, doclens = _bm25_stores(
-        batch_df.sparkSession, index_dir, id_col, n_buckets
+        batch_df.sparkSession, index_dir, n_buckets
     )
     toks = batch_df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.transform(
-                F.split(F.trim(F.col(text_col)), r"\s+"),
+                F.split(F.trim(F.col("text")), r"\s+"),
                 lambda w: F.lower(w),
             )
         ).alias("term"),
     ).filter(F.col("term") != "")
     tf = (
-        toks.groupBy(id_col, "term")
+        toks.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
         .localCheckpoint()
     )
-    postings.upsert(tf.select("term", id_col, "tf"), batch_seq)
+    postings.upsert(tf.select("term", "doc_id", "tf"), batch_seq)
     doclens.upsert(
-        batch_df.select(id_col)
+        batch_df.select("doc_id")
         .join(
-            tf.groupBy(id_col).agg(F.sum("tf").cast("long").alias("dl")),
-            id_col,
+            tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl")),
+            "doc_id",
             "left",
         )
-        .select(id_col, F.coalesce("dl", F.lit(0)).cast("long").alias("dl")),
+        .select("doc_id", F.coalesce("dl", F.lit(0)).cast("long").alias("dl")),
         batch_seq,
     )
 
 
-def _bm25_stores(spark, index_dir: str, id_col: str, n_buckets: int):
+def _bm25_stores(spark, index_dir: str, n_buckets: int):
     """The index's two stores: ``postings`` (term, id, tf; bucket =
     pmod(hash(term))) and ``doclens`` (id, dl; bucket = pmod(hash(id)))."""
     from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     return (
         SnapshotStore(
-            spark, f"{index_dir}/postings", ["term", id_col], "_tb",
+            spark, f"{index_dir}/postings", ["term", "doc_id"], "_tb",
             n_buckets=n_buckets, bucket_on="term",
         ),
         SnapshotStore(
-            spark, f"{index_dir}/doclens", id_col, "_db", n_buckets=n_buckets
+            spark, f"{index_dir}/doclens", "doc_id", "_db", n_buckets=n_buckets
         ),
     )
 
@@ -237,7 +233,6 @@ def search_bm25_index(
     spark,
     index_dir: str,
     queries: DataFrame,
-    id_col: str = "doc_id",
     k: int = 10,
     n_buckets: int = 32,
 ) -> DataFrame:
@@ -260,14 +255,14 @@ def search_bm25_index(
     (empty batches leave none behind) or n_docs == 0: scoring against
     ln of a negative ratio would otherwise surface as silent NULL
     scores."""
-    postings, lengths = _bm25_stores(spark, index_dir, id_col, n_buckets)
+    postings, lengths = _bm25_stores(spark, index_dir, n_buckets)
     doclens = lengths.read()
     if doclens is None:
         raise ValueError(
             f"BM25 index at {index_dir!r} is uninitialized (no documents "
             "ingested yet) — cannot score against n_docs=0"
         )
-    doclens = doclens.select(id_col, "dl")
+    doclens = doclens.select("doc_id", "dl")
     stats = doclens.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("tt"),
@@ -283,7 +278,7 @@ def search_bm25_index(
         .join(
             F.broadcast(queries.select("term").distinct()), "term", "semi"
         )
-        .select("term", id_col, "tf")
+        .select("term", "doc_id", "tf")
         .localCheckpoint()
     )
     dfreq = pruned.groupBy("term").agg(
@@ -304,10 +299,10 @@ def search_bm25_index(
         .alias("idf_micro"),
     )
     postings = pruned.join(F.broadcast(idf), "term").select(
-        "term", id_col, "tf", "idf_micro"
+        "term", "doc_id", "tf", "idf_micro"
     )
     return bm25_search(
-        postings, doclens, n_docs, total_tokens, queries, id_col, k
+        postings, doclens, n_docs, total_tokens, queries, "doc_id", k
     )
 
 

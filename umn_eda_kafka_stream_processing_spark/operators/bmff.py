@@ -58,11 +58,8 @@ def encode_mp4(
     samples: list[bytes],
     width: int,
     height: int,
-    timescale: int = 1000,
     sample_durations: int | list[int] = 40,
     samples_per_chunk: int = 0,
-    sample_format: bytes = b"pgm ",
-    brand: bytes = b"isom",
 ) -> bytes:
     """Mux opaque sample payloads into a single-track video MP4.
 
@@ -85,7 +82,7 @@ def encode_mp4(
         raise ValueError("sample_durations length mismatch")
     duration = sum(durs)
 
-    ftyp = _box(b"ftyp", brand + struct.pack(">I", 0x200) + brand + b"mp41")
+    ftyp = _box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isom" + b"mp41")
     payload = b"".join(samples)
     mdat = _box(b"mdat", payload)
     mdat_payload_off = len(ftyp) + 8
@@ -103,7 +100,7 @@ def encode_mp4(
         si += cc
 
     mvhd = _full(b"mvhd", 0, 0, struct.pack(
-        ">IIII", 0, 0, timescale, duration)
+        ">IIII", 0, 0, 1000, duration)
         + struct.pack(">IHH", 0x00010000, 0x0100, 0) + b"\x00" * 8
         + _MATRIX + b"\x00" * 24 + struct.pack(">I", 2))
     tkhd = _full(b"tkhd", 0, 7, struct.pack(">IIII", 0, 0, 1, 0)
@@ -111,7 +108,7 @@ def encode_mp4(
                  + struct.pack(">HHHH", 0, 0, 0, 0) + _MATRIX
                  + struct.pack(">II", width << 16, height << 16))
     mdhd = _full(b"mdhd", 0, 0, struct.pack(
-        ">IIIIHH", 0, 0, timescale, duration, 0x55C4, 0))
+        ">IIIIHH", 0, 0, 1000, duration, 0x55C4, 0))
     hdlr = _full(b"hdlr", 0, 0, struct.pack(">I", 0) + b"vide"
                  + b"\x00" * 12 + b"VideoHandler\x00")
     vmhd = _full(b"vmhd", 0, 1, struct.pack(">HHHH", 0, 0, 0, 0))
@@ -122,7 +119,7 @@ def encode_mp4(
              + struct.pack(">I", 0) + struct.pack(">H", 1) + b"\x00" * 32
              + struct.pack(">Hh", 24, -1))
     stsd = _full(b"stsd", 0, 0, struct.pack(">I", 1)
-                 + _box(sample_format, entry))
+                 + _box(b"pgm ", entry))
     stts_entries = _rle(durs)
     stts = _full(b"stts", 0, 0, struct.pack(">I", len(stts_entries))
                  + b"".join(struct.pack(">II", c, d) for c, d in stts_entries))

@@ -46,12 +46,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-def word_freqs(df: DataFrame, text_col: str = "text") -> DataFrame:
+def word_freqs(df: DataFrame) -> DataFrame:
     """Distinct lowercased whitespace words with corpus frequencies —
     the single corpus-sized aggregation of BPE training."""
     return (
         df.select(
-            F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("word")
+            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word")
         )
         .filter(F.length("word") > 0)
         .groupBy("word")
@@ -105,9 +105,7 @@ def _pair_counts(words: DataFrame) -> DataFrame:
     )
 
 
-def train_bpe(
-    df: DataFrame, text_col: str = "text", k: int = 6
-) -> tuple[DataFrame, DataFrame]:
+def train_bpe(df: DataFrame, k: int = 6) -> tuple[DataFrame, DataFrame]:
     """Train ``k`` BPE merges over a corpus.
 
     Returns ``(merges, words)``: ``merges`` = (rank, pair, pair_count)
@@ -115,7 +113,7 @@ def train_bpe(
     words with their final symbol strings (the trained segmentation).
     """
     spark = df.sparkSession
-    wf = word_freqs(df, text_col)
+    wf = word_freqs(df)
     words = wf.select("word", "freq", to_symbols("word").alias("sym")).localCheckpoint()
     learned: list[tuple[int, str, int]] = []
     for rank in range(1, k + 1):
@@ -153,9 +151,7 @@ def bpe_segment(words: DataFrame) -> DataFrame:
     )
 
 
-def bpe_encode(
-    words_df: DataFrame, merges: DataFrame, word_col: str = "word"
-) -> DataFrame:
+def bpe_encode(words_df: DataFrame, merges: DataFrame) -> DataFrame:
     """ENCODE arbitrary words with a trained merge table — the
     tokenizer-application step that pairs with train_bpe.
 
@@ -174,7 +170,7 @@ def bpe_encode(
     join, no shuffle.
     """
     pairs = [r["pair"] for r in merges.orderBy(F.col("rank").asc()).collect()]
-    sym = to_symbols(word_col)
+    sym = to_symbols()
     for p in pairs:
         sym = _merge_pair(sym, F.lit(p))
     return words_df.withColumn("sym", sym)

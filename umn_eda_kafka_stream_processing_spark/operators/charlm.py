@@ -13,7 +13,7 @@ doc id, map-side combined. Nothing quadratic, nothing collected but
 the vocab scalar.
 
 Engine portability: each bigram's smoothed log-probability
-ln((c + alpha) / (c_prefix + alpha * V)) is rounded half-up to 6 dp
+ln((c + 1) / (c_prefix + V)) is rounded half-up to 6 dp
 and held as an integer-micro BIGINT — per-doc SUMS are then exact
 and order-independent (the repo's integer-micros rule), so the
 DuckDB oracle's join+SUM hash-matches Spark's broadcast pass. The
@@ -33,9 +33,7 @@ from pyspark.sql import functions as F
 from umn_eda_kafka_stream_processing_spark.functions.scalar import round_half_up
 
 
-def char_bigrams(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def char_bigrams(df: DataFrame) -> DataFrame:
     """(id, pf, bg): every overlapping character bigram of each doc,
     with its 1-char prefix. Pure column expressions — the
     sequence(1, greatest(len-1, 1)) guard avoids the DESCENDING
@@ -43,11 +41,11 @@ def char_bigrams(
     no rows (the length filter drops their 1-char remnant)."""
     return (
         df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.expr(
-                    f"transform(sequence(1, greatest(length({text_col}) - 1, 1)),"
-                    f" i -> substring({text_col}, i, 2))"
+                    "transform(sequence(1, greatest(length(text) - 1, 1)),"
+                    " i -> substring(text, i, 2))"
                 )
             ).alias("bg"),
         )
@@ -58,18 +56,15 @@ def char_bigrams(
 
 def char_bigram_model(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 1.0,
     vocab_size: int | None = None,
 ) -> tuple[DataFrame, int]:
     """Train the smoothed bigram model on a corpus. Returns
     (model (bg, logp_micro), vocab_size). logp uses Laplace
     smoothing over the next-char vocabulary V:
-    ln((c_bigram + alpha) / (c_prefix + alpha * V)).
+    ln((c_bigram + 1) / (c_prefix + V)).
     ``vocab_size`` skips the vocabulary count job when the caller
     already holds it (the session-cache path)."""
-    bg = char_bigrams(df, text_col, id_col)
+    bg = char_bigrams(df)
     vocab = (
         vocab_size
         if vocab_size is not None
@@ -83,8 +78,8 @@ def char_bigram_model(
             "bg",
             F.floor(
                 F.log(
-                    (F.col("c") + F.lit(alpha))
-                    / (F.col("cp") + F.lit(alpha * vocab))
+                    (F.col("c") + F.lit(1.0))
+                    / (F.col("cp") + F.lit(float(vocab)))
                 )
                 * F.lit(1000000.0)
                 + F.lit(0.5)
@@ -99,9 +94,6 @@ def char_bigram_model(
 def cached_char_bigram_model(
     df: DataFrame,
     cache_key: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 1.0,
 ) -> tuple[DataFrame, int]:
     """Train-once/serve-many: the production LM is trained once and
     served to every downstream scorer, so queries sharing a corpus
@@ -118,33 +110,27 @@ def cached_char_bigram_model(
 
     # a one-file corpus scan is ONE partition and the bigram explode
     # is the heavy per-row work — spread it once for all build jobs
-    df = spread(df, id_col)
+    df = spread(df, "doc_id")
     spark = df.sparkSession
     vocab = cached_scalar(
         spark,
-        f"charlm_vocab|{cache_key}|{text_col}|{alpha}",
-        lambda: char_bigrams(df, text_col, id_col)
+        f"charlm_vocab|{cache_key}|text|1.0",
+        lambda: char_bigrams(df)
         .select(F.substring("bg", 2, 1).alias("nc"))
         .distinct()
         .count(),
     )
     model = materialized(
         spark,
-        f"charlm_model|{cache_key}|{text_col}|{alpha}",
+        f"charlm_model|{cache_key}|text|1.0",
         lambda: char_bigram_model(
-            df, text_col, id_col, alpha, vocab_size=vocab
+            df, vocab_size=vocab
         )[0],
     )
     return model, vocab
 
 
-def cached_doc_scores(
-    df: DataFrame,
-    cache_key: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    alpha: float = 1.0,
-) -> DataFrame:
+def cached_doc_scores(df: DataFrame, cache_key: str) -> DataFrame:
     """Train-once/SCORE-once: the per-doc (id, n_bigrams, avg_logp)
     frame under the cached corpus model, materialized to the session
     parquet cache. Scoring re-explodes every document's bigram
@@ -157,13 +143,13 @@ def cached_doc_scores(
 
     def build() -> DataFrame:
         model, _ = cached_char_bigram_model(
-            df, cache_key, text_col, id_col, alpha
+            df, cache_key
         )
-        return doc_avg_logprob(spread(df, id_col), model, text_col, id_col)
+        return doc_avg_logprob(spread(df, "doc_id"), model)
 
     return materialized(
         df.sparkSession,
-        f"charlm_scores|{cache_key}|{text_col}|{alpha}",
+        f"charlm_scores|{cache_key}|text|1.0",
         build,
     )
 
@@ -171,8 +157,6 @@ def cached_doc_scores(
 def doc_avg_logprob(
     df: DataFrame,
     model: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     floor_logp_micro: int | None = None,
 ) -> DataFrame:
     """Score each document under the model: (id, n_bigrams,
@@ -185,7 +169,7 @@ def doc_avg_logprob(
     ``floor_logp_micro`` (e.g. the model's minimum) and unseen
     bigrams take that floor via a left join instead of silently
     dropping out of the average."""
-    bg = char_bigrams(df, text_col, id_col)
+    bg = char_bigrams(df)
     if floor_logp_micro is None:
         scored = bg.join(F.broadcast(model), "bg")
     else:
@@ -194,13 +178,13 @@ def doc_avg_logprob(
             F.coalesce("logp_micro", F.lit(int(floor_logp_micro)).cast("long")),
         )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_bigrams"),
             F.sum("logp_micro").alias("_s"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_bigrams",
             round_half_up(
                 F.col("_s").cast("double") / F.col("n_bigrams") / F.lit(1000000.0),

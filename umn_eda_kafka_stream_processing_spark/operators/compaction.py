@@ -212,10 +212,10 @@ def zorder_expr(a: str, b: str, bits: int = 10, div: str = "div") -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def zorder_key(df: DataFrame, a: str, b: str, bits: int = 10) -> Column:
+def zorder_key(df: DataFrame, a: str, b: str) -> Column:
     """Spark Column of ``zorder_expr`` over two normalized integer
     columns of ``df`` (see zorder_expr)."""
-    return F.expr(zorder_expr(a, b, bits)).cast("long")
+    return F.expr(zorder_expr(a, b)).cast("long")
 
 
 def zorder_nd_expr(
@@ -245,13 +245,7 @@ def zorder_nd_expr(
     return "(" + " + ".join(terms) + ")"
 
 
-def hilbert_step_exprs(
-    s: int,
-    x: str = "_hx",
-    y: str = "_hy",
-    d: str = "_hd",
-    div: str = "div",
-) -> dict[str, str]:
+def hilbert_step_exprs(s: int, div: str = "div") -> dict[str, str]:
     """One per-bit step of the 2-D Hilbert index (the classic xy2d
     quadrant-walk, a public algorithm), as SQL text over the running
     state columns (d, x, y) — ONE generator yields both the Spark
@@ -269,19 +263,19 @@ def hilbert_step_exprs(
     Verified a true Hilbert curve (bijective on the grid, every
     consecutive pair of indexes is grid-ADJACENT — the locality
     property Z-order lacks) against a Python reference."""
-    rx = f"(({x} {div} {s}) % 2)"
-    ry = f"(({y} {div} {s}) % 2)"
+    rx = f"((_hx {div} {s}) % 2)"
+    ry = f"((_hy {div} {s}) % 2)"
     return {
-        d: f"{d} + {s * s} * (3 * {rx} + {ry} - 2 * {rx} * {ry})",
-        x: (
+        "_hd": f"_hd + {s * s} * (3 * {rx} + {ry} - 2 * {rx} * {ry})",
+        "_hx": (
             f"CASE WHEN {ry} = 0 THEN (CASE WHEN {rx} = 1 "
-            f"THEN {s} - 1 - ({y} % {s}) ELSE {y} % {s} END) "
-            f"ELSE {x} % {s} END"
+            f"THEN {s} - 1 - (_hy % {s}) ELSE _hy % {s} END) "
+            f"ELSE _hx % {s} END"
         ),
-        y: (
+        "_hy": (
             f"CASE WHEN {ry} = 0 THEN (CASE WHEN {rx} = 1 "
-            f"THEN {s} - 1 - ({x} % {s}) ELSE {x} % {s} END) "
-            f"ELSE {y} % {s} END"
+            f"THEN {s} - 1 - (_hx % {s}) ELSE _hx % {s} END) "
+            f"ELSE _hy % {s} END"
         ),
     }
 

@@ -46,7 +46,7 @@ def latest_by_key(
     return out.select(*keys, "_latest.*")
 
 
-def rekey(df: DataFrame, key_expr: Column | str, key_name: str = "key") -> DataFrame:
+def rekey(df: DataFrame, key_expr: Column | str) -> DataFrame:
     """Replace the record key — the reference's selectKey.
 
     reference: .selectKey((k, v) -> ...), e.g.
@@ -56,9 +56,9 @@ def rekey(df: DataFrame, key_expr: Column | str, key_name: str = "key") -> DataF
     so rekey itself is free.
     """
     col = F.col(key_expr) if isinstance(key_expr, str) else key_expr
-    if key_name in df.columns:
-        df = df.drop(key_name)
-    return df.withColumn(key_name, col)
+    if "key" in df.columns:
+        df = df.drop("key")
+    return df.withColumn("key", col)
 
 
 def merge(*dfs: DataFrame) -> DataFrame:
@@ -110,7 +110,7 @@ def branch(
     return branches
 
 
-def peek(df: DataFrame, *metrics: Column, name: str = "peek") -> DataFrame:
+def peek(df: DataFrame, *metrics: Column) -> DataFrame:
     """Observe a stream without transforming it — the reference's
     ``peek((k, v) -> log.info(...))`` (27 call sites, e.g.
     samples/TopCustomerArtists.java:60,88).
@@ -121,7 +121,7 @@ def peek(df: DataFrame, *metrics: Column, name: str = "peek") -> DataFrame:
     StreamingQueryListener. Default metric: row count.
     """
     metrics = metrics or (F.count(F.lit(1)).alias("rows"),)
-    return df.observe(name, *metrics)
+    return df.observe("peek", *metrics)
 
 
 def grouped_count(
@@ -146,7 +146,6 @@ def grouped_topk(
     group_cols: str | Sequence[str],
     order_cols: Sequence[Column],
     k: int,
-    rank_name: str = "rank",
 ) -> DataFrame:
     """Top-k rows per group — the reference's SortedCounterMap.top(k).
 
@@ -168,8 +167,8 @@ def grouped_topk(
     keys = [group_cols] if isinstance(group_cols, str) else list(group_cols)
     w = Window.partitionBy(*keys).orderBy(*order_cols)
     return (
-        df.withColumn(rank_name, F.row_number().over(w))
-        .filter(F.col(rank_name) <= k)
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
     )
 
 
@@ -177,7 +176,6 @@ def global_topk(
     df: DataFrame,
     order_by: Sequence[tuple[str, bool]],
     k: int,
-    rank_name: str = "rank",
 ) -> DataFrame:
     """Global top-k with a dense 1..k rank — scale-safe replacement for
     ``row_number() OVER (ORDER BY ...)`` + ``rank <= k``.
@@ -224,16 +222,13 @@ def global_topk(
     )
     return packed.select(
         F.posexplode("_sorted").alias("_pos", "_e")
-    ).select("_e._row.*", (F.col("_pos") + 1).cast("long").alias(rank_name))
+    ).select("_e._row.*", (F.col("_pos") + 1).cast("long").alias("rank"))
 
 
 def topk_as_ordered_map(
     topk: DataFrame,
     group_cols: str | Sequence[str],
     name_col: str,
-    count_col: str = "count",
-    rank_col: str = "rank",
-    out_col: str = "top",
 ) -> DataFrame:
     """Collapse grouped_topk rows into ONE row per group carrying an
     ordered array<struct<name,count>> — the output shape of the
@@ -247,7 +242,7 @@ def topk_as_ordered_map(
         topk.groupBy(*keys)
         .agg(
             F.array_sort(
-                F.collect_list(F.struct(rank_col, name_col, count_col))
+                F.collect_list(F.struct("rank", name_col, "count"))
             ).alias("_sorted")
         )
         .select(
@@ -255,19 +250,14 @@ def topk_as_ordered_map(
             F.transform(
                 "_sorted",
                 lambda s: F.struct(
-                    s[name_col].alias("name"), s[count_col].alias("count")
+                    s[name_col].alias("name"), s["count"].alias("count")
                 ),
-            ).alias(out_col),
+            ).alias("top"),
         )
     )
 
 
-def running_count(
-    df: DataFrame,
-    key_cols: str | Sequence[str],
-    order_col: str = "event_seq",
-    count_name: str = "count",
-) -> DataFrame:
+def running_count(df: DataFrame, key_cols: str | Sequence[str]) -> DataFrame:
     """Per-record running count within key, in arrival order — the
     per-record emission sequence of the reference's stateful counts.
 
@@ -276,5 +266,5 @@ def running_count(
     cumulative count over the arrival-order window.
     """
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    w = Window.partitionBy(*keys).orderBy(F.col(order_col))
-    return df.withColumn(count_name, F.row_number().over(w).cast("long"))
+    w = Window.partitionBy(*keys).orderBy(F.col("event_seq"))
+    return df.withColumn("count", F.row_number().over(w).cast("long"))

@@ -54,12 +54,6 @@ def training_manifest(
     *,
     val_rate: float = 0.1,
     test_rate: float = 0.1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    domain_col: str = "source",
-    size_col: str = "n_chars",
-    n: int = 8,
-    min_overlap: int = 1,
     return_stages: bool = False,
     pairs: DataFrame | None = None,
     clusters: DataFrame | None = None,
@@ -75,7 +69,7 @@ def training_manifest(
     (``pairs, clusters, keepers, decontam, clean, train``) for
     censuses that pin per-stage counts. ``docs`` must not already
     carry ``cluster_id`` or ``split`` (cluster_safe_split's
-    contract); ``id_col`` must be unique (repeat_mixture_sample's
+    contract); ``doc_id`` must be unique (repeat_mixture_sample's
     contract).
 
     ``pairs`` / ``clusters`` inject precomputed (MATERIALIZED —
@@ -103,20 +97,18 @@ def training_manifest(
     )
 
     if pairs is None:
-        pairs = minhash_lsh_pairs(
-            docs, id_col=id_col, text_col=text_col
-        ).localCheckpoint()  # feeds clustering AND the census's pins
+        pairs = minhash_lsh_pairs(docs).localCheckpoint()  # feeds clustering AND the census's pins
     if clusters is None:
         clusters = near_dup_clusters(
-            pairs, pairs_materialized=True, id_col=id_col
+            pairs, pairs_materialized=True
         ).localCheckpoint()  # joined twice (keepers, split)
     # keepers: the component representative (min-label == own id) and
     # every doc outside any near-dup pair
     keepers = (
-        docs.join(clusters.hint("shuffle_hash"), id_col, "left")
+        docs.join(clusters.hint("shuffle_hash"), "doc_id", "left")
         .filter(
-            F.coalesce(F.col("cluster_id"), F.col(id_col))
-            == F.col(id_col)
+            F.coalesce(F.col("cluster_id"), F.col("doc_id"))
+            == F.col("doc_id")
         )
         .drop("cluster_id")
     )
@@ -130,21 +122,17 @@ def training_manifest(
         keepers,
         benchmark,
         bench_grams=bench_grams,
-        n=n,
-        min_overlap=min_overlap,
-        id_col=id_col,
-        text_col=text_col,
         docs_grams=keeper_grams,
     ).localCheckpoint()
-    flagged = decontam.filter(F.col("contaminated") == 1).select(id_col)
-    clean = keepers.join(flagged.hint("shuffle_hash"), id_col, "left_anti")
+    flagged = decontam.filter(F.col("contaminated") == 1).select("doc_id")
+    clean = keepers.join(flagged.hint("shuffle_hash"), "doc_id", "left_anti")
     split = cluster_safe_split(
-        clean, clusters, id_col=id_col,
+        clean, clusters,
         val_rate=val_rate, test_rate=test_rate,
     )
     train = split.filter(F.col("split") == "train").drop("split")
     manifest = repeat_mixture_sample(
-        train, domain_col, id_col, size_col, targets
+        train, "source", "doc_id", "n_chars", targets
     )
     if return_stages:
         return manifest, {
@@ -167,14 +155,6 @@ def patch_training_manifest(
     clusters: DataFrame,
     targets: Mapping[str, int],
     *,
-    val_rate: float = 0.1,
-    test_rate: float = 0.1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    domain_col: str = "source",
-    size_col: str = "n_chars",
-    n: int = 8,
-    min_overlap: int = 1,
     keeper_grams: DataFrame | None = None,
     return_stages: bool = False,
 ):
@@ -226,9 +206,9 @@ def patch_training_manifest(
     # keepers from the shipped cluster substrate: one join, no pair
     # graph — identical to the shipped run's keepers frame
     keepers = (
-        docs.join(clusters.hint("shuffle_hash"), id_col, "left")
+        docs.join(clusters.hint("shuffle_hash"), "doc_id", "left")
         .filter(
-            F.coalesce(F.col("cluster_id"), F.col(id_col)) == F.col(id_col)
+            F.coalesce(F.col("cluster_id"), F.col("doc_id")) == F.col("doc_id")
         )
         .drop("cluster_id")
     )
@@ -240,35 +220,31 @@ def patch_training_manifest(
         gram_store_path,
         keepers,
         since_batch,
-        n=n,
-        min_overlap=min_overlap,
-        id_col=id_col,
-        text_col=text_col,
         corpus_grams=keeper_grams,
     ).localCheckpoint()
     merged = merge_decontam_censuses(
-        standing_decontam, delta, min_overlap=min_overlap, id_col=id_col
+        standing_decontam, delta
     ).localCheckpoint()  # feeds the anti-join + census pins
     newly = (
         merged.filter(F.col("contaminated") == 1)
-        .select(id_col)
+        .select("doc_id")
         .join(
             standing_decontam.filter(F.col("contaminated") == 1)
-            .select(id_col)
+            .select("doc_id")
             .hint("shuffle_hash"),
-            id_col,
+            "doc_id",
             "left_anti",
         )
     )
-    flagged = merged.filter(F.col("contaminated") == 1).select(id_col)
-    clean = keepers.join(flagged.hint("shuffle_hash"), id_col, "left_anti")
+    flagged = merged.filter(F.col("contaminated") == 1).select("doc_id")
+    clean = keepers.join(flagged.hint("shuffle_hash"), "doc_id", "left_anti")
     split = cluster_safe_split(
-        clean, clusters, id_col=id_col,
-        val_rate=val_rate, test_rate=test_rate,
+        clean, clusters,
+        val_rate=0.1, test_rate=0.1,
     )
     train = split.filter(F.col("split") == "train").drop("split")
     manifest = repeat_mixture_sample(
-        train, domain_col, id_col, size_col, targets
+        train, "source", "doc_id", "n_chars", targets
     )
     if return_stages:
         return manifest, {
@@ -286,7 +262,6 @@ def extend_clusters(
     old_pairs: DataFrame,
     old_clusters: DataFrame,
     delta_pairs: DataFrame,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Grow a standing cluster table by a delta pair set — the
     affected-subgraph re-clustering step of `extend_training_manifest`
@@ -299,18 +274,18 @@ def extend_clusters(
         near_dup_clusters,
     )
 
-    a, b = f"{id_col}_a", f"{id_col}_b"
+    a, b = "doc_id_a", "doc_id_b"
     # affected old clusters: clusters of any OLD endpoint of a delta
     # pair (batch endpoints are not clustered yet; an old endpoint
     # outside any cluster was previously unpaired and rides into the
     # subgraph through its delta pair alone)
     ends = (
-        delta_pairs.select(F.col(a).alias(id_col))
-        .unionByName(delta_pairs.select(F.col(b).alias(id_col)))
+        delta_pairs.select(F.col(a).alias("doc_id"))
+        .unionByName(delta_pairs.select(F.col(b).alias("doc_id")))
         .distinct()
     )
     affected = (
-        old_clusters.join(F.broadcast(ends), id_col, "left_semi")
+        old_clusters.join(F.broadcast(ends), "doc_id", "left_semi")
         .select("cluster_id")
         .distinct()
     )
@@ -320,7 +295,7 @@ def extend_clusters(
     old_aff_pairs = (
         old_pairs.join(
             old_clusters.join(F.broadcast(affected), "cluster_id", "left_semi")
-            .select(F.col(id_col).alias(a)),
+            .select(F.col("doc_id").alias(a)),
             a,
             "left_semi",
         )
@@ -328,12 +303,12 @@ def extend_clusters(
     sub_edges = delta_pairs.select(a, b).unionByName(
         old_aff_pairs.select(a, b)
     )
-    comp_new = near_dup_clusters(sub_edges, id_col=id_col)
+    comp_new = near_dup_clusters(sub_edges)
     return (
         old_clusters.join(F.broadcast(affected), "cluster_id", "left_anti")
         # the key join puts cluster_id first — restore (id, cluster)
-        .select(id_col, "cluster_id")
-        .unionByName(comp_new.select(id_col, "cluster_id"))
+        .select("doc_id", "cluster_id")
+        .unionByName(comp_new.select("doc_id", "cluster_id"))
     )
 
 
@@ -348,16 +323,6 @@ def extend_training_manifest(
     *,
     benchmark: DataFrame | None = None,
     bench_grams: DataFrame | None = None,
-    val_rate: float = 0.1,
-    test_rate: float = 0.1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    domain_col: str = "source",
-    size_col: str = "n_chars",
-    n: int = 8,
-    min_overlap: int = 1,
-    old_sigs: DataFrame | None = None,
-    batch_sigs: DataFrame | None = None,
     batch_grams: DataFrame | None = None,
     delta_pairs: DataFrame | None = None,
     clusters: DataFrame | None = None,
@@ -399,8 +364,7 @@ def extend_training_manifest(
 
     ``standing_decontam`` is the shipped run's census over its
     keepers; ``old_pairs`` / ``old_clusters`` its pair/cluster
-    substrates; ``old_sigs`` optionally injects the standing
-    signature table so history is never re-hashed. ``batch_grams``
+    substrates. ``batch_grams``
     optionally injects the batch's corpus-side gram table
     (`decontaminate`'s ``docs_grams`` contract, restricted to the
     batch docs) so the batch sweep skips its text explode too.
@@ -426,21 +390,20 @@ def extend_training_manifest(
 
     if delta_pairs is None:
         delta_pairs = minhash_lsh_pairs(
-            batch, text_col=text_col, id_col=id_col, history=old_docs,
-            sigs=batch_sigs, history_sigs=old_sigs,
+            batch, history=old_docs
         ).localCheckpoint()  # feeds affected-set, subgraph, census pins
     clusters2 = (
         clusters
         if clusters is not None
         else extend_clusters(
-            old_pairs, old_clusters, delta_pairs, id_col=id_col
+            old_pairs, old_clusters, delta_pairs
         ).localCheckpoint()  # joined by keepers AND split AND census
     )
     docs_all = old_docs.unionByName(batch)
     keepers = (
-        docs_all.join(clusters2.hint("shuffle_hash"), id_col, "left")
+        docs_all.join(clusters2.hint("shuffle_hash"), "doc_id", "left")
         .filter(
-            F.coalesce(F.col("cluster_id"), F.col(id_col)) == F.col(id_col)
+            F.coalesce(F.col("cluster_id"), F.col("doc_id")) == F.col("doc_id")
         )
         .drop("cluster_id")
     )
@@ -449,26 +412,22 @@ def extend_training_manifest(
         batch,
         benchmark,
         bench_grams=bench_grams,
-        n=n,
-        min_overlap=min_overlap,
-        id_col=id_col,
-        text_col=text_col,
         docs_grams=batch_grams,
     ).localCheckpoint()
     decontam2 = standing_decontam.select(
-        id_col, "n_grams", "n_hit_grams", "contaminated"
+        "doc_id", "n_grams", "n_hit_grams", "contaminated"
     ).unionByName(
-        batch_decontam.select(id_col, "n_grams", "n_hit_grams", "contaminated")
+        batch_decontam.select("doc_id", "n_grams", "n_hit_grams", "contaminated")
     )
-    flagged = decontam2.filter(F.col("contaminated") == 1).select(id_col)
-    clean = keepers.join(flagged.hint("shuffle_hash"), id_col, "left_anti")
+    flagged = decontam2.filter(F.col("contaminated") == 1).select("doc_id")
+    clean = keepers.join(flagged.hint("shuffle_hash"), "doc_id", "left_anti")
     split = cluster_safe_split(
-        clean, clusters2, id_col=id_col,
-        val_rate=val_rate, test_rate=test_rate,
+        clean, clusters2,
+        val_rate=0.1, test_rate=0.1,
     )
     train = split.filter(F.col("split") == "train").drop("split")
     manifest = repeat_mixture_sample(
-        train, domain_col, id_col, size_col, targets
+        train, "source", "doc_id", "n_chars", targets
     )
     if return_stages:
         return manifest, {

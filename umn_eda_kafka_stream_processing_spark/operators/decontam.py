@@ -44,9 +44,7 @@ from pyspark.sql import functions as F
 from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
 
-def word_ngram_hashes(
-    text_col: str = "text", n: int = 8, distinct: bool = True
-) -> Column:
+def word_ngram_hashes(text_col: str = "text", n: int = 8) -> Column:
     """Distinct token n-grams of a document as 60-bit md5 prefixes
     (first 15 hex chars → BIGINT — 16 would overflow the SIGNED
     64-bit range in both engines): split on whitespace, slide an
@@ -58,17 +56,13 @@ def word_ngram_hashes(
         f"transform(sequence(1, greatest(size({toks}) - {n - 1}, 1)), "
         f"i -> concat_ws(' ', slice({toks}, i, {n})))"
     )
-    if distinct:
-        grams = f"array_distinct({grams})"
     return F.expr(
-        f"transform({grams}, g -> "
+        f"transform(array_distinct({grams}), g -> "
         f"cast(conv(substring(md5(g), 1, 15), 16, 10) as bigint))"
     )
 
 
-def benchmark_grams(
-    bench_batch_df: DataFrame, n: int = 8, text_col: str = "text"
-) -> DataFrame:
+def benchmark_grams(bench_batch_df: DataFrame) -> DataFrame:
     """One benchmark batch's distinct gram hashes ``(g)`` — the payload of
     the benchmark gram store (a `stores.BatchStore` with `merge_grams`).
     Evaluation suites GROW — new held-out sets arrive after the corpus
@@ -81,7 +75,7 @@ def benchmark_grams(
     so `resweep_decontaminate`'s novel-gram window (which prunes on
     batch_id) must only be pointed at batches ABOVE the horizon."""
     return bench_batch_df.select(
-        F.explode(word_ngram_hashes(text_col, n)).alias("g")
+        F.explode(word_ngram_hashes()).alias("g")
     ).distinct()
 
 
@@ -130,10 +124,6 @@ def resweep_decontaminate(
     store_path: str,
     corpus: DataFrame,
     since_batch: int,
-    n: int = 8,
-    min_overlap: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     corpus_grams: DataFrame | None = None,
 ) -> DataFrame:
     """DELTA re-sweep for LATE-ARRIVING benchmarks (round-12 verdict
@@ -176,10 +166,6 @@ def resweep_decontaminate(
         corpus,
         benchmark=None,
         bench_grams=delta_grams,
-        n=n,
-        min_overlap=min_overlap,
-        id_col=id_col,
-        text_col=text_col,
         docs_grams=corpus_grams,  # the re-swept window's gram table,
         # when the caller already paid the explode (patched manifest)
     )
@@ -188,8 +174,6 @@ def resweep_decontaminate(
 def merge_decontam_censuses(
     standing: DataFrame,
     delta: DataFrame,
-    min_overlap: int = 1,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Merge a standing `decontaminate` census with a
     `resweep_decontaminate` delta over the SAME corpus window: hit
@@ -200,13 +184,13 @@ def merge_decontam_censuses(
     benchmark store (test-pinned). One |corpus|-row join on the doc
     id; both inputs already paid their gram passes."""
     d = delta.select(
-        F.col(id_col).alias("_rid"),
+        F.col("doc_id").alias("_rid"),
         F.col("n_hit_grams").alias("_delta_hits"),
     )
     return (
-        standing.join(d, standing[id_col] == F.col("_rid"), "inner")
+        standing.join(d, standing["doc_id"] == F.col("_rid"), "inner")
         .select(
-            standing[id_col],
+            standing["doc_id"],
             standing["n_grams"],
             (standing["n_hit_grams"] + F.col("_delta_hits"))
             .cast("long")
@@ -214,7 +198,7 @@ def merge_decontam_censuses(
         )
         .withColumn(
             "contaminated",
-            (F.col("n_hit_grams") >= F.lit(int(min_overlap)))
+            (F.col("n_hit_grams") >= F.lit(1))
             .cast("long"),
         )
     )
@@ -251,7 +235,6 @@ def decontaminate(
     min_overlap: int = 1,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bench_text_col: str | None = None,
     broadcast_benchmark: bool = True,
     bench_grams: DataFrame | None = None,
     docs_grams: DataFrame | None = None,
@@ -280,7 +263,6 @@ def decontaminate(
         raise ValueError(
             "pass exactly one of benchmark= or bench_grams="
         )
-    bench_text_col = bench_text_col or text_col
     if bench_grams is not None:
         bench_grams = bench_grams.select(
             F.col(bench_grams.columns[0]).alias("_g")
@@ -289,7 +271,7 @@ def decontaminate(
         bench_grams = (
             benchmark.select(
                 F.explode(
-                    word_ngram_hashes(bench_text_col, n)
+                    word_ngram_hashes(text_col, n)
                 ).alias("_g")
             ).distinct()
         )

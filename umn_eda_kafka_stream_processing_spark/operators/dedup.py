@@ -36,16 +36,14 @@ from umn_eda_kafka_stream_processing_spark.functions.text import (
 )
 
 
-def exact_dedup_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Group documents by normalized-content fingerprint; keeper =
     min id. Output: (fp, keeper_<id>, n_copies)."""
     return (
-        df.select(fingerprint_md5(text_col).alias("fp"), F.col(id_col))
+        df.select(fingerprint_md5().alias("fp"), F.col("doc_id"))
         .groupBy("fp")
         .agg(
-            F.min(id_col).alias(f"keeper_{id_col}"),
+            F.min("doc_id").alias("keeper_doc_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
@@ -483,8 +481,6 @@ def prefix_jaccard_pairs(
 
 def prefix_containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     shingle_n: int = 16,
     threshold_micro: int = 800_000,
     max_candidate_pairs: int | None = 100_000_000,
@@ -520,9 +516,9 @@ def prefix_containment_pairs(
     (containment has no approximate LSH fallback: MinHash estimates
     Jaccard, not containment, so the guard only raises)."""
     if arr is None:
-        arr = rarity_sorted_shingles(df, text_col, id_col, shingle_n)
+        arr = rarity_sorted_shingles(df, "text", "doc_id", shingle_n)
     pre = arr.select(
-        F.col(id_col).alias("_ida"),
+        F.col("doc_id").alias("_ida"),
         F.col("n").alias("_na"),
         F.explode(
             F.expr(
@@ -532,7 +528,7 @@ def prefix_containment_pairs(
         ).alias("t"),
     )
     full = arr.select(
-        F.col(id_col).alias("_idb"),
+        F.col("doc_id").alias("_idb"),
         F.col("n").alias("_nb"),
         F.explode("arr").alias("t"),
     )
@@ -571,12 +567,12 @@ def prefix_containment_pairs(
         .distinct()
     )
     va = arr.select(
-        F.col(id_col).alias("_ida"),
+        F.col("doc_id").alias("_ida"),
         F.col("arr").alias("_aa"),
         F.col("n").alias("_na"),
     ).hint("shuffle_hash")
     vb = arr.select(
-        F.col(id_col).alias("_idb"),
+        F.col("doc_id").alias("_idb"),
         F.col("arr").alias("_ab"),
         F.col("n").alias("_nb"),
     ).hint("shuffle_hash")
@@ -1092,8 +1088,6 @@ def _sig_near_pairs(
 
 def exact_dedup_stream(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     event_time_col: str | None = None,
     watermark_delay: str = "1 hour",
 ) -> DataFrame:
@@ -1109,7 +1103,7 @@ def exact_dedup_stream(
     with the distinct-document count (exact forever, like the
     reference's unbounded stores).
     """
-    fp = df.withColumn("fp", fingerprint_md5(text_col))
+    fp = df.withColumn("fp", fingerprint_md5())
     if event_time_col is not None:
         fp = fp.withWatermark(event_time_col, watermark_delay)
         # dedup on the fingerprint ALONE with state expiring at the
@@ -1123,9 +1117,6 @@ def incremental_simhash_dedup(
     batch_df: DataFrame,
     seen_store_path: str,
     batch_id: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
 ) -> DataFrame:
     """Near-dedup ONE microbatch against all history: the incremental
     corpus near-dedup a continuously-ingesting 100 TB pipeline runs
@@ -1167,13 +1158,13 @@ def incremental_simhash_dedup(
         batch_df.sparkSession, seen_store_path, ["chunk_idx", "chunk_val"],
         "_cb", order="batch_id", n_buckets=32,
     )
-    sigs = simhash64(batch_df, text_col, id_col).localCheckpoint()
+    sigs = simhash64(batch_df).localCheckpoint()
     # 1. in-batch near-pairs: drop the larger id of each pair
-    pairs = _sig_near_pairs(sigs, id_col, max_hamming)
-    losers = pairs.select(F.col(f"{id_col}_b").alias(id_col)).distinct()
-    survivors = sigs.join(losers, id_col, "left_anti")
+    pairs = _sig_near_pairs(sigs, "doc_id", 3)
+    losers = pairs.select(F.col("doc_id_b").alias("doc_id")).distinct()
+    survivors = sigs.join(losers, "doc_id", "left_anti")
     keys = survivors.select(
-        id_col,
+        "doc_id",
         F.posexplode(F.array("c0", "c1", "c2", "c3")).alias("chunk_idx", "chunk_val"),
     )
 
@@ -1186,9 +1177,9 @@ def incremental_simhash_dedup(
                 ["chunk_idx", "chunk_val"],
                 "left_semi",
             )
-            fresh = keys.join(hit.select(id_col), id_col, "left_anti")
+            fresh = keys.join(hit.select("doc_id"), "doc_id", "left_anti")
         # 3. admit the fresh docs' buckets
-        out = batch_df.join(fresh.select(id_col), id_col, "left_semi")
+        out = batch_df.join(fresh.select("doc_id"), "doc_id", "left_semi")
         return fresh.select("chunk_idx", "chunk_val"), out
 
     return store.advance(step, int(batch_id), near=keys)
@@ -1366,8 +1357,6 @@ def _span_windows(
 
 def remove_shared_spans(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     span_len: int = 16,
     min_run_len: int | None = None,
 ) -> DataFrame:
@@ -1423,32 +1412,28 @@ def remove_shared_spans(
     """
     if min_run_len is None:
         min_run_len = span_len
-    w = _span_windows(docs, id_col, text_col, span_len)
+    w = _span_windows(docs, "doc_id", "text", span_len)
     stats = (
         w.groupBy("span")
         .agg(
-            F.min(id_col).alias("_keeper"),
-            F.countDistinct(id_col).alias("_nd"),
+            F.min("doc_id").alias("_keeper"),
+            F.countDistinct("doc_id").alias("_nd"),
         )
         .filter(F.col("_nd") >= 2)
         .select("span", "_keeper")
     )
     rem = (
         w.join(stats, "span")
-        .filter(F.col(id_col) != F.col("_keeper"))
-        .groupBy(id_col)
+        .filter(F.col("doc_id") != F.col("_keeper"))
+        .groupBy("doc_id")
         .agg(F.array_sort(F.collect_list("pos")).alias("_poss"))
     )
-    return _rewrite_from_positions(
-        docs, rem, id_col, text_col, span_len, min_run_len
-    )
+    return _rewrite_from_positions(docs, rem, span_len, min_run_len)
 
 
 def _rewrite_from_positions(
     docs: DataFrame,
     rem: DataFrame,
-    id_col: str,
-    text_col: str,
     span_len: int,
     min_run_len: int,
 ) -> DataFrame:
@@ -1513,24 +1498,24 @@ def _rewrite_from_positions(
         lambda acc, r: F.struct(
             F.concat(
                 acc["t"],
-                F.col(text_col).substr(acc["c"], r["s"] - acc["c"]),
+                F.col("text").substr(acc["c"], r["s"] - acc["c"]),
             ).alias("t"),
             (r["e"] + 1).alias("c"),
         ),
         lambda acc: F.concat(
             acc["t"],
-            F.col(text_col).substr(acc["c"], F.length(text_col)),
+            F.col("text").substr(acc["c"], F.length("text")),
         ),
     )
     return (
-        docs.select(id_col, text_col)
-        .join(rem, id_col, "left")
+        docs.select("doc_id", "text")
+        .join(rem, "doc_id", "left")
         .withColumn("_runs", F.when(F.col("_poss").isNotNull(), merged))
         .withColumn("_cut", kept_runs)
         .select(
-            id_col,
-            text_col,
-            F.when(F.col("_poss").isNull(), F.col(text_col))
+            "doc_id",
+            "text",
+            F.when(F.col("_poss").isNull(), F.col("text"))
             .otherwise(rebuilt)
             .alias("rewritten"),
             F.coalesce(F.size("_runs"), F.lit(0))
@@ -1542,10 +1527,10 @@ def _rewrite_from_positions(
         )
         .withColumn(
             "chars_removed",
-            (F.length(text_col) - F.length("rewritten")).cast("long"),
+            (F.length("text") - F.length("rewritten")).cast("long"),
         )
         .select(
-            id_col, text_col, "rewritten", "chars_removed",
+            "doc_id", "text", "rewritten", "chars_removed",
             "runs_merged", "runs_cut",
         )
     )
@@ -1554,8 +1539,6 @@ def _rewrite_from_positions(
 def incremental_span_dedup(
     batch_df: DataFrame,
     span_store_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     span_len: int = 16,
     min_run_len: int | None = None,
     n_buckets: int = 32,
@@ -1569,7 +1552,7 @@ def incremental_span_dedup(
     spans are admitted so later arrivals dedup against it.
 
     Semantics per batch (matches the batch operator when docs arrive
-    in ascending ``id_col`` order across batches — the
+    in ascending ``doc_id`` order across batches — the
     incremental==batch contract the test pins):
 
     * an occurrence of span value v in doc d is removable iff
@@ -1607,12 +1590,12 @@ def incremental_span_dedup(
         n_buckets=n_buckets,
     )
     w = (
-        _span_windows(batch_df, id_col, text_col, span_len)
+        _span_windows(batch_df, "doc_id", "text", span_len)
         .withColumn("h", F.md5("span"))
         .drop("span")
         .localCheckpoint()
     )
-    bstats = w.groupBy("h").agg(F.min(id_col).alias("_bmin"))
+    bstats = w.groupBy("h").agg(F.min("doc_id").alias("_bmin"))
 
     def step(seen: DataFrame | None) -> tuple[DataFrame, DataFrame]:
         hit = bstats.select("h", F.col("_bmin").alias("_kc"))
@@ -1623,13 +1606,12 @@ def incremental_span_dedup(
             ).select("h", F.least("keeper", "_bmin").alias("_kc"))
         rem = (
             w.join(hit.hint("shuffle_hash"), "h")
-            .filter(F.col("_kc") < F.col(id_col))
-            .groupBy(id_col)
+            .filter(F.col("_kc") < F.col("doc_id"))
+            .groupBy("doc_id")
             .agg(F.array_sort(F.collect_list("pos")).alias("_poss"))
         )
         out = _rewrite_from_positions(
-            batch_df.select(id_col, text_col), rem, id_col, text_col,
-            span_len, min_run_len,
+            batch_df.select("doc_id", "text"), rem, span_len, min_run_len
         )
         admit = bstats.select("h", F.col("_bmin").cast("long").alias("keeper"))
         return admit, out
@@ -1637,11 +1619,7 @@ def incremental_span_dedup(
     return store.advance(step, -F.col("keeper"), near=bstats)
 
 
-def remove_duplicate_lines(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def remove_duplicate_lines(docs: DataFrame) -> DataFrame:
     """C4-style LINE-level dedup across the corpus (Raffel et al.
     2020 §2.2 run line dedup before doc filters; the granularity
     between exact-doc and overlapping-span dedup): every line whose
@@ -1661,18 +1639,18 @@ def remove_duplicate_lines(
     Output: (id, text, rewritten, lines_total, lines_removed).
     """
     lines = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), r"\n")).alias("idx", "line"),
+        F.col("doc_id"),
+        F.posexplode(F.split(F.col("text"), r"\n")).alias("idx", "line"),
     ).withColumn("lk", F.md5(F.trim(F.col("line"))))
     content = lines.filter(F.trim(F.col("line")) != "")
     keeper_doc = content.groupBy("lk").agg(
-        F.min(id_col).alias("_kd"),
+        F.min("doc_id").alias("_kd"),
         F.count(F.lit(1)).alias("_n"),
     )
     # canonical occurrence: min index WITHIN the keeper doc
     keeper_idx = (
         content.join(keeper_doc, "lk")
-        .filter((F.col(id_col) == F.col("_kd")) & (F.col("_n") >= 2))
+        .filter((F.col("doc_id") == F.col("_kd")) & (F.col("_n") >= 2))
         .groupBy("lk", "_kd")
         .agg(F.min("idx").alias("_ki"))
     )
@@ -1681,9 +1659,9 @@ def remove_duplicate_lines(
         flagged.withColumn(
             "_drop",
             F.col("_kd").isNotNull()
-            & ~((F.col(id_col) == F.col("_kd")) & (F.col("idx") == F.col("_ki"))),
+            & ~((F.col("doc_id") == F.col("_kd")) & (F.col("idx") == F.col("_ki"))),
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.concat_ws(
                 "\n",
@@ -1703,6 +1681,6 @@ def remove_duplicate_lines(
             .cast("long")
             .alias("lines_removed"),
         )
-        .join(docs.select(id_col, text_col), id_col)
-        .select(id_col, text_col, "rewritten", "lines_total", "lines_removed")
+        .join(docs.select("doc_id", "text"), "doc_id")
+        .select("doc_id", "text", "rewritten", "lines_total", "lines_removed")
     )

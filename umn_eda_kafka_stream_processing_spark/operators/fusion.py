@@ -36,28 +36,25 @@ RRF_SCALE = 1_000_000
 def rrf_fuse(
     rankings: Sequence[DataFrame],
     rrf_k: int = 60,
-    query_col: str = "qid",
-    id_col: str = "doc_id",
-    rank_col: str = "rank",
     topk: int = 10,
 ) -> DataFrame:
     """Fuse per-query rankings into one top-``topk`` list per query.
 
-    Each input carries (query_col, id_col, rank_col) with 1-based
+    Each input carries (qid, doc_id, rank) with 1-based
     ranks (truncate each to its own top-k BEFORE fusing — RRF is
-    defined over the lists as retrieved). Returns (query_col,
-    fused_rank, id_col, rrf_micro, n_lists): ``rrf_micro`` the exact
+    defined over the lists as retrieved). Returns (qid,
+    fused_rank, doc_id, rrf_micro, n_lists): ``rrf_micro`` the exact
     integer Σ 1000000 div (rrf_k + rank), ``n_lists`` how many input
     lists carried the doc (the agreement signal)."""
     if not rankings:
         raise ValueError("rankings must be non-empty")
     contrib = F.expr(
-        f"{RRF_SCALE} div ({int(rrf_k)} + {rank_col})"
+        f"{RRF_SCALE} div ({int(rrf_k)} + rank)"
     ).cast("long")
     parts = [
         r.select(
-            F.col(query_col),
-            F.col(id_col),
+            F.col("qid"),
+            F.col("doc_id"),
             contrib.alias("_c"),
         )
         for r in rankings
@@ -65,15 +62,15 @@ def rrf_fuse(
     u = parts[0]
     for p in parts[1:]:
         u = u.unionByName(p)
-    fused = u.groupBy(query_col, id_col).agg(
+    fused = u.groupBy("qid", "doc_id").agg(
         F.sum("_c").cast("long").alias("rrf_micro"),
         F.count(F.lit(1)).cast("long").alias("n_lists"),
     )
-    w = Window.partitionBy(query_col).orderBy(
-        F.col("rrf_micro").desc(), F.col(id_col).asc()
+    w = Window.partitionBy("qid").orderBy(
+        F.col("rrf_micro").desc(), F.col("doc_id").asc()
     )
     return (
         fused.withColumn("fused_rank", F.row_number().over(w).cast("long"))
         .filter(F.col("fused_rank") <= int(topk))
-        .select(query_col, "fused_rank", id_col, "rrf_micro", "n_lists")
+        .select("qid", "fused_rank", "doc_id", "rrf_micro", "n_lists")
     )

@@ -37,8 +37,6 @@ def pagerank_directed(
     edges: DataFrame,
     damping_pct: int = 85,
     iterations: int = 5,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """PageRank over a DIRECTED (src, dst) edge list with dangling-
     mass redistribution — the general form for web/purchase graphs
@@ -63,14 +61,14 @@ def pagerank_directed(
     single checkpointed frame per round (the round-7 one-checkpoint
     lesson). Overflow: total mass stays <= ~2e12 picos, so
     85 * (in + dt) < 2e14 << 2^63."""
-    e = edges.select(src_col, dst_col).distinct()
-    outdeg = e.groupBy(src_col).agg(
+    e = edges.select("src", "dst").distinct()
+    outdeg = e.groupBy("src").agg(
         F.count(F.lit(1)).cast("long").alias("outdeg")
     )
-    e2 = e.join(outdeg.hint("shuffle_hash"), src_col).localCheckpoint()
+    e2 = e.join(outdeg.hint("shuffle_hash"), "src").localCheckpoint()
     nodes = (
-        e2.select(F.col(src_col).alias("node"), F.lit(False).alias("d"))
-        .union(e2.select(F.col(dst_col).alias("node"), F.lit(True).alias("d")))
+        e2.select(F.col("src").alias("node"), F.lit(False).alias("d"))
+        .union(e2.select(F.col("dst").alias("node"), F.lit(True).alias("d")))
         .groupBy("node")
         .agg(F.min("d").alias("dangling"))
         .localCheckpoint()
@@ -84,12 +82,12 @@ def pagerank_directed(
         shares = (
             e2.join(
                 ranks.select(
-                    F.col("node").alias(src_col), "rank_picos"
+                    F.col("node").alias("src"), "rank_picos"
                 ).hint("shuffle_hash"),
-                src_col,
+                "src",
             )
             .select(
-                F.col(dst_col).alias("node"),
+                F.col("dst").alias("node"),
                 F.expr("rank_picos div outdeg").alias("share"),
             )
             .groupBy("node")
@@ -365,13 +363,7 @@ def k_core(
     return e, rounds, converged
 
 
-def bfs_hops(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_hops: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def bfs_hops(edges: DataFrame, sources: DataFrame, max_hops: int) -> DataFrame:
     """Multi-source BFS hop distance — "how far is every node from
     the seed set", the reachability primitive under contamination
     blast-radius, fraud neighborhoods, and lineage impact queries.
@@ -394,7 +386,7 @@ def bfs_hops(
     number), so results hash-match a recursive-CTE oracle.
     """
     e = edges.select(
-        F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
+        F.col("src").alias("_s"), F.col("dst").alias("_d")
     ).distinct().localCheckpoint()
     dist = (
         sources.select(F.col(sources.columns[0]).alias("node"))
@@ -428,9 +420,6 @@ def shortest_paths(
     edges: DataFrame,
     sources: DataFrame,
     rounds: int,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "w",
 ) -> DataFrame:
     """Bounded multi-source WEIGHTED shortest paths (Bellman-Ford
     with a delta frontier) — `bfs_hops`' weighted sibling: returns
@@ -451,9 +440,9 @@ def shortest_paths(
     localCheckpointed so round N never replays rounds 1..N-1.
     """
     e = edges.select(
-        F.col(src_col).alias("_s"),
-        F.col(dst_col).alias("_d"),
-        F.col(weight_col).cast("long").alias("_w"),
+        F.col("src").alias("_s"),
+        F.col("dst").alias("_d"),
+        F.col("w").cast("long").alias("_w"),
     ).localCheckpoint()
     dist = (
         sources.select(F.col(sources.columns[0]).alias("node"))

@@ -141,7 +141,6 @@ def interval_join(
     fact_time: str,
     start_col: str,
     end_col: str,
-    how: str = "inner",
 ) -> DataFrame:
     """Fact rows joined to interval rows of the same key where
     start <= fact_time < end (right-open, the streaming convention).
@@ -160,7 +159,7 @@ def interval_join(
     )
     for k in keys:
         cond = (facts[k] == intervals[k]) & cond
-    joined = facts.join(intervals, cond, how)
+    joined = facts.join(intervals, cond, "inner")
     # drop the duplicate key columns from the interval side
     out_cols = [facts[c] for c in facts.columns] + [
         intervals[c] for c in intervals.columns if c not in keys
@@ -242,19 +241,18 @@ def best_fuzzy_match(
     matches: DataFrame,
     group_cols: Sequence[str],
     tie_col: str,
-    dist_col: str = "dist",
 ) -> DataFrame:
     """Pick each group's best fuzzy candidate: min (dist, tie_col) —
     a min(struct) argmin, which gets map-side partial aggregation
     instead of shuffling every candidate (the pq_encode rule). Both
     key components must be non-null (dist always is; pass a non-null
     tie column), so the NULL-sorts-first min(struct) trap cannot
-    bite. Returns group_cols + best_<dist_col> + best_<tie_col>."""
+    bite. Returns group_cols + best_dist + best_<tie_col>."""
     g = matches.groupBy(*group_cols).agg(
-        F.min(F.struct(F.col(dist_col), F.col(tie_col))).alias("_b")
+        F.min(F.struct(F.col("dist"), F.col(tie_col))).alias("_b")
     )
     return g.select(
         *group_cols,
-        F.col(f"_b.{dist_col}").alias(f"best_{dist_col}"),
+        F.col("_b.dist").alias("best_dist"),
         F.col(f"_b.{tie_col}").alias(f"best_{tie_col}"),
     )

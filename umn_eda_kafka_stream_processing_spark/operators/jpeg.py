@@ -371,7 +371,6 @@ def encode_jpeg(
     pixels: np.ndarray,
     quality: int = 90,
     quant_luma: np.ndarray | None = None,
-    quant_chroma: np.ndarray | None = None,
 ) -> bytes:
     """Baseline JFIF encode: grayscale for (h, w) input, YCbCr 4:4:4
     for (h, w, 3). Explicit quant tables override the quality-scaled
@@ -383,11 +382,7 @@ def encode_jpeg(
     if h == 0 or w == 0:
         raise ValueError("empty image")
     ql = quant_luma if quant_luma is not None else _scale_quant(QUANT_LUMA, quality)
-    qc = (
-        quant_chroma
-        if quant_chroma is not None
-        else _scale_quant(QUANT_CHROMA, quality)
-    )
+    qc = _scale_quant(QUANT_CHROMA, quality)
     planes = (
         [rgb_to_ycbcr(px)[..., i] for i in range(3)] if color else [px]
     )

@@ -45,31 +45,29 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def gram_micro(
-    emb: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> tuple[DataFrame, DataFrame]:
+def gram_micro(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(gram, n) for power_iteration: gram = (i, j, g) with 1-based
     positions and g = sum(m_i * m_j) div (n * 1000); n is a 1-row
     count frame. One posexplode + one id-keyed self-join + one (i, j)
     hash-agg."""
     ex = emb.select(
-        id_col,
-        F.posexplode(F.col(vec_col).cast("array<double>")).alias(
+        "vec_id",
+        F.posexplode(F.col("embedding").cast("array<double>")).alias(
             "p0", "x"
         ),
     ).select(
-        id_col,
+        "vec_id",
         (F.col("p0") + 1).alias("pos"),
         F.floor(F.col("x") * F.lit(1000000.0) + F.lit(0.5))
         .cast("long")
         .alias("m"),
     ).localCheckpoint()
     a = ex.select(
-        F.col(id_col).alias("_id"), F.col("pos").alias("i"),
+        F.col("vec_id").alias("_id"), F.col("pos").alias("i"),
         F.col("m").alias("ma"),
     )
     b = ex.select(
-        F.col(id_col).alias("_id"), F.col("pos").alias("j"),
+        F.col("vec_id").alias("_id"), F.col("pos").alias("j"),
         F.col("m").alias("mb"),
     )
     # DECIMAL(38,0) per-term products + exact decimal partial sums:
@@ -100,7 +98,6 @@ def gram_micro(
 def power_iteration(
     gram: DataFrame,
     iterations: int = 5,
-    v0_micro: int = 125000,
     norm_shift: int = 1000,
     vec_join: str = "broadcast",
 ) -> DataFrame:
@@ -120,7 +117,7 @@ def power_iteration(
     v = (
         gram.select(F.col("i").alias("pos"))
         .distinct()
-        .withColumn("v", F.lit(v0_micro).cast("long"))
+        .withColumn("v", F.lit(125000).cast("long"))
         .localCheckpoint()
     )
     for _ in range(iterations):

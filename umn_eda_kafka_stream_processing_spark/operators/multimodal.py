@@ -20,10 +20,8 @@ Two tiers of codec support:
   BITSTREAM decode (H.264/H.265/AV1/AAC) — the MP4 demux layer
   resolves those payloads to byte ranges and a production deployment
   ships them to a real decoder (libav/nvDEC); ``decode_stub`` below
-  marks that seam. It raises NotImplementedError unless
-  ``deterministic_fake=True``, in which case it derives a fake
-  "decoded" representation from the bytes themselves (deterministic,
-  test/oracle-friendly). Everything around the stub — schema, Arrow
+  marks that seam. It derives a fake "decoded" representation from
+  the bytes themselves (deterministic, test/oracle-friendly). Everything around the stub — schema, Arrow
   batching, partition flow, UDF signatures — is what production
   keeps while swapping the stub for a codec.
 
@@ -69,21 +67,16 @@ FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def decode_stub(content: bytes, deterministic_fake: bool = True) -> Any:
+def decode_stub(content: bytes) -> Any:
     """Stand-in for a real media decode (PIL.Image.open /
     libav / torchaudio.load — not installed in this container).
 
-    deterministic_fake=True "decodes" the bytes as UTF-8 text and
-    returns the sequence of Unicode codepoints as the sample array —
+    It "decodes" the bytes as UTF-8 text and returns the sequence of
+    Unicode codepoints as the sample array —
     deterministic, oracle-checkable with plain SQL string functions
     for ANY input text (byte-level features would diverge from
     character-level SQL the moment a multi-byte character appears).
     """
-    if not deterministic_fake:
-        raise NotImplementedError(
-            "media codecs not available in this environment; "
-            "install PIL/av and replace decode_stub"
-        )
     # errors='replace' keeps the stub total over arbitrary binary
     # (deterministic U+FFFD substitution) instead of crashing the
     # task on non-UTF8 media bytes
@@ -91,12 +84,12 @@ def decode_stub(content: bytes, deterministic_fake: bool = True) -> Any:
     return [ord(ch) for ch in text]
 
 
-def text_as_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def text_as_media(df: DataFrame) -> DataFrame:
     """Adapter: treat a text column as opaque media bytes (UTF-8) so
     the multimodal path is exercisable on the synthetic tables."""
     return df.select(
-        F.col(id_col).cast("long").alias("media_id"),
-        F.encode(F.col(text_col), "UTF-8").alias("content"),
+        F.col("doc_id").cast("long").alias("media_id"),
+        F.encode(F.col("text"), "UTF-8").alias("content"),
         F.lit("image").alias("media_type"),
         F.lit("application/octet-stream").alias("mime"),
         F.lit(None).cast("int").alias("width"),
@@ -105,7 +98,7 @@ def text_as_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def extract_features(media: DataFrame, batch_hint: int = 1024) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary content.
 
     The pandas function receives an iterator of record batches —
@@ -496,13 +489,13 @@ IMAGE_FEATURE_SCHEMA = T.StructType([
 ])
 
 
-def image_features(media: DataFrame, resize_to: tuple[int, int] = (4, 4)) -> DataFrame:
+def image_features(media: DataFrame) -> DataFrame:
     """Decode netpbm content, extract dimensions + pixel stats, and
     run a real nearest-neighbor resize (``resized4_sum`` checksums the
     thumbnail so the resize index math is oracle-checkable). Container
     is sniffed per row (decode_image): PNG and netpbm mix freely in
     one column."""
-    out_w, out_h = resize_to
+    out_w, out_h = 4, 4
 
     def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -542,11 +535,10 @@ def _fingerprint_row(media_id, bits) -> dict:
     return row
 
 
-def image_dhash(media: DataFrame, grid: int = 8) -> DataFrame:
+def image_dhash(media: DataFrame) -> DataFrame:
     """64-bit difference hash (dHash) per image — the perceptual
     fingerprint behind image near-dup detection: decode (container
-    sniffed per row), nearest-neighbor resize to ``grid`` x
-    ``grid``+1, bit (r, c) = 1 iff thumb[r, c+1] > thumb[r, c] —
+    sniffed per row), nearest-neighbor resize to 8 x 9, bit (r, c) = 1 iff thumb[r, c+1] > thumb[r, c] —
     invariant to brightness/contrast shifts and to resolution, the
     property that makes it catch re-encodes and thumbnails exact
     hashing misses.
@@ -569,7 +561,7 @@ def image_dhash(media: DataFrame, grid: int = 8) -> DataFrame:
             for media_id, content in zip(pdf["media_id"], pdf["content"]):
                 px = decode_image(bytes(content))
                 gray = px if px.ndim == 2 else px.mean(axis=2)
-                thumb = resize_nearest(gray, grid + 1, grid)
+                thumb = resize_nearest(gray, 9, 8)
                 bits = (thumb[:, 1:] > thumb[:, :-1]).astype(np.int64).flatten()
                 out.append(_fingerprint_row(media_id, bits))
             yield pd.DataFrame(out, columns=FINGERPRINT_SCHEMA.fieldNames())
@@ -577,22 +569,16 @@ def image_dhash(media: DataFrame, grid: int = 8) -> DataFrame:
     return media.select("media_id", "content").mapInPandas(hashes, FINGERPRINT_SCHEMA)
 
 
-def image_phash_pairs(
-    media: DataFrame,
-    max_hamming: int = 3,
-    hot_bucket_cap: int | None = 10_000,
-) -> DataFrame:
+def image_phash_pairs(media: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Perceptual near-dup image pairs: dHash signatures + the
     chunk-banded Hamming candidate join shared with SimHash text
     dedup (dedup.py:_sig_near_pairs — hot-bucket cap and all).
     ``max_hamming <= 3`` keeps the pigeonhole recall guarantee of the
     4-chunk banding. Output: (media_id_a, media_id_b, hamming)."""
-    return _fingerprint_pairs(image_dhash(media), max_hamming, hot_bucket_cap)
+    return _fingerprint_pairs(image_dhash(media), max_hamming)
 
 
-def _fingerprint_pairs(
-    sigs: DataFrame, max_hamming: int, hot_bucket_cap: int | None
-) -> DataFrame:
+def _fingerprint_pairs(sigs: DataFrame, max_hamming: int) -> DataFrame:
     """Near-dup pairs over 64-bit media fingerprints (media_id,
     c0..c3): the sigs are materialized once, then the chunk-banded
     Hamming join (`dedup._sig_near_pairs`)."""
@@ -605,9 +591,7 @@ def _fingerprint_pairs(
             f"max_hamming <= 3 (got {max_hamming}); pairs farther apart "
             "can miss every 16-bit band"
         )
-    return _sig_near_pairs(
-        sigs.localCheckpoint(), "media_id", max_hamming, hot_bucket_cap
-    )
+    return _sig_near_pairs(sigs.localCheckpoint(), "media_id", max_hamming)
 
 
 FRAME_SAMPLE_SCHEMA = T.StructType([
@@ -772,7 +756,7 @@ def sample_frames(media: DataFrame, every: int = 2) -> DataFrame:
 # Deterministic media synthesis (drives the oracle-checked catalog queries)
 # ---------------------------------------------------------------------------
 
-def synth_media(ids: DataFrame, kind: str, id_col: str = "doc_id") -> DataFrame:
+def synth_media(ids: DataFrame, kind: str) -> DataFrame:
     """Generate real media bytes per id from closed-form integer
     formulas, so a DuckDB oracle can recompute every decoded feature
     arithmetically — proving the encode→decode→extract path end to
@@ -804,7 +788,7 @@ def synth_media(ids: DataFrame, kind: str, id_col: str = "doc_id") -> DataFrame:
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = []
-            for mid in pdf[id_col].astype("int64"):
+            for mid in pdf["doc_id"].astype("int64"):
                 mid = int(mid)
                 if kind == "audio":
                     n = mid % 50 + 10
@@ -862,7 +846,7 @@ def synth_media(ids: DataFrame, kind: str, id_col: str = "doc_id") -> DataFrame:
                             "width": None, "height": None, "duration_ms": None})
             yield pd.DataFrame(out, columns=[f.name for f in MEDIA_SCHEMA.fields])
 
-    return ids.select(id_col).mapInPandas(gen, MEDIA_SCHEMA)
+    return ids.select("doc_id").mapInPandas(gen, MEDIA_SCHEMA)
 
 
 _FP_FRAMES = 65  # 64 adjacent-energy comparison bits
@@ -908,16 +892,10 @@ def audio_fingerprint(media: DataFrame) -> DataFrame:
     )
 
 
-def audio_fp_pairs(
-    media: DataFrame,
-    max_hamming: int = 3,
-    hot_bucket_cap: int | None = 10_000,
-) -> DataFrame:
+def audio_fp_pairs(media: DataFrame) -> DataFrame:
     """Perceptual near-dup audio pairs: energy-contour fingerprints
     + the chunk-banded Hamming candidate join shared with SimHash
     text dedup and image dHash (pigeonhole: hamming <= 3 guarantees
     a shared 16-bit chunk — zero recall loss). Output:
     (media_id_a, media_id_b, hamming)."""
-    return _fingerprint_pairs(
-        audio_fingerprint(media), max_hamming, hot_bucket_cap
-    )
+    return _fingerprint_pairs(audio_fingerprint(media), 3)

@@ -51,10 +51,6 @@ def _micro(col: Column) -> Column:
 def nb_train(
     feats: DataFrame,
     labels: DataFrame,
-    id_col: str = "doc_id",
-    feat_col: str = "feat",
-    label_col: str = "label",
-    alpha: float = 1.0,
 ) -> tuple[DataFrame, DataFrame, int]:
     """Train multinomial NB with Laplace smoothing.
 
@@ -64,10 +60,10 @@ def nb_train(
     Returns ``(model, priors, vocab_size)``:
 
     * model:  (label, feat, c, logp_micro) — one row per OBSERVED
-      (label, feature); logp = ln((c + alpha) / (n_label + alpha*V)).
+      (label, feature); logp = ln((c + 1) / (n_label + V)).
     * priors: (label, n_docs, n_tokens, prior_micro, floor_micro) —
       prior = ln(n_docs_label / n_docs_total); floor is the label's
-      unseen-feature log-prob ln(alpha / (n_label + alpha*V)), the
+      unseen-feature log-prob ln(1 / (n_label + V)), the
       value OOV features take at scoring time.
     * vocab_size: V, the corpus-wide distinct feature count.
 
@@ -80,29 +76,29 @@ def nb_train(
     # shuffle-hash, not sort-merge: sorting the exploded feature
     # stream buys nothing, and the labels side is corpus-sized (one
     # row per doc) so broadcast is wrong at scale
-    tagged = feats.join(labels.hint("shuffle_hash"), id_col)
-    vocab = feats.select(feat_col).distinct().count()
-    cb = tagged.groupBy(label_col, feat_col).agg(
+    tagged = feats.join(labels.hint("shuffle_hash"), "doc_id")
+    vocab = feats.select("feat").distinct().count()
+    cb = tagged.groupBy("label", "feat").agg(
         F.count(F.lit(1)).alias("c")
     )
     # nl is one row per label — always broadcast (Spark has no stats
     # for it and would otherwise plan a sort-merge join)
-    nl = cb.groupBy(label_col).agg(F.sum("c").alias("_n"))
-    model = cb.join(F.broadcast(nl), label_col).select(
-        label_col,
-        feat_col,
+    nl = cb.groupBy("label").agg(F.sum("c").alias("_n"))
+    model = cb.join(F.broadcast(nl), "label").select(
+        "label",
+        "feat",
         F.col("c").cast("long").alias("c"),
         _micro(
             F.log(
-                (F.col("c") + F.lit(alpha))
-                / (F.col("_n") + F.lit(alpha * vocab))
+                (F.col("c") + F.lit(1.0))
+                / (F.col("_n") + F.lit(float(vocab)))
             )
         ).alias("logp_micro"),
     )
     total = labels.count()
-    dl = labels.groupBy(label_col).agg(F.count(F.lit(1)).alias("n_docs"))
-    priors = dl.join(F.broadcast(nl), label_col, "left").select(
-        label_col,
+    dl = labels.groupBy("label").agg(F.count(F.lit(1)).alias("n_docs"))
+    priors = dl.join(F.broadcast(nl), "label", "left").select(
+        "label",
         F.col("n_docs").cast("long").alias("n_docs"),
         F.coalesce(F.col("_n"), F.lit(0)).cast("long").alias("n_tokens"),
         _micro(
@@ -110,8 +106,8 @@ def nb_train(
         ).alias("prior_micro"),
         _micro(
             F.log(
-                F.lit(alpha)
-                / (F.coalesce(F.col("_n"), F.lit(0)) + F.lit(alpha * vocab))
+                F.lit(1.0)
+                / (F.coalesce(F.col("_n"), F.lit(0)) + F.lit(float(vocab)))
             )
         ).alias("floor_micro"),
     )
@@ -123,10 +119,6 @@ def nb_score(
     doc_ids: DataFrame,
     model: DataFrame,
     priors: DataFrame,
-    id_col: str = "doc_id",
-    feat_col: str = "feat",
-    label_col: str = "label",
-    pred_col: str = "pred",
 ) -> DataFrame:
     """Score documents under a trained NB model: (id, pred,
     pred_score_micro) — argmax_label [prior + sum_feats logp], ties
@@ -141,52 +133,50 @@ def nb_score(
     the doc x label grid left-joins those sums so prior-only docs
     survive. The only shuffles are the two (doc, ...)-keyed aggs.
     """
-    labels = priors.select(label_col, "prior_micro", "floor_micro")
+    labels = priors.select("label", "prior_micro", "floor_micro")
     tok_sums = (
-        feats.crossJoin(F.broadcast(labels.select(label_col, "floor_micro")))
+        feats.crossJoin(F.broadcast(labels.select("label", "floor_micro")))
         .join(
-            F.broadcast(model.select(label_col, feat_col, "logp_micro")),
-            [label_col, feat_col],
+            F.broadcast(model.select("label", "feat", "logp_micro")),
+            ["label", "feat"],
             "left",
         )
-        .groupBy(id_col, label_col)
+        .groupBy("doc_id", "label")
         .agg(F.sum(F.coalesce("logp_micro", "floor_micro")).alias("_ts"))
     )
     grid = (
-        doc_ids.select(id_col)
-        .crossJoin(F.broadcast(labels.select(label_col, "prior_micro")))
-        .join(tok_sums.hint("shuffle_hash"), [id_col, label_col], "left")
+        doc_ids.select("doc_id")
+        .crossJoin(F.broadcast(labels.select("label", "prior_micro")))
+        .join(tok_sums.hint("shuffle_hash"), ["doc_id", "label"], "left")
         .select(
-            id_col,
-            label_col,
+            "doc_id",
+            "label",
             (F.col("prior_micro") + F.coalesce(F.col("_ts"), F.lit(0)))
             .cast("long")
             .alias("score_micro"),
         )
     )
     return (
-        grid.groupBy(id_col)
+        grid.groupBy("doc_id")
         .agg(
             F.min(
                 F.struct(
                     F.coalesce(-F.col("score_micro"), F.lit(2**62)).alias(
                         "ns"
                     ),
-                    F.col(label_col).alias("lb"),
+                    F.col("label").alias("lb"),
                 )
             ).alias("_b")
         )
         .select(
-            id_col,
-            F.col("_b.lb").alias(pred_col),
+            "doc_id",
+            F.col("_b.lb").alias("pred"),
             (-F.col("_b.ns")).cast("long").alias("pred_score_micro"),
         )
     )
 
 
-def word_features(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def word_features(docs: DataFrame) -> DataFrame:
     """Lowercased whitespace word unigrams as an exploded (id, feat)
     multiset — the bag-of-words feature stream for quality
     classification. Pure column exprs; the empty-string remnant of
@@ -194,10 +184,10 @@ def word_features(
     simply produce no rows (nb_score's grid keeps them alive)."""
     return (
         docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.transform(
-                    F.split(F.trim(F.col(text_col)), r"\s+"),
+                    F.split(F.trim(F.col("text")), r"\s+"),
                     lambda w: F.lower(w),
                 )
             ).alias("feat"),

@@ -126,11 +126,10 @@ def jl_project(
     vec_col: str,
     id_cols: str | Sequence[str],
     out_dim: int = 16,
-    salt: str = "jl",
 ) -> DataFrame:
     """Johnson-Lindenstrauss sign (Rademacher) projection — the
     dimensionality cut for embedding tables: y_j = sum_i s_ij * x_i
-    with s_ij in {-1, +1} derived from md5(salt|j|i), so the
+    with s_ij in {-1, +1} derived from md5(jl|j|i), so the
     projection matrix is never stored, any engine regenerates it
     bit-for-bit, and (after one micro-rounding of x) every output
     coordinate is an EXACT BIGINT — E[||y_a - y_b||^2] =
@@ -157,7 +156,7 @@ def jl_project(
             F.substring(
                 F.md5(
                     F.concat(
-                        F.lit(f"{salt}|"),
+                        F.lit("jl|"),
                         F.col("j").cast("string"),
                         F.lit("|"),
                         F.col("pos").cast("string"),

@@ -422,7 +422,6 @@ def grouped_mad_outliers(
     group_cols: str | Sequence[str],
     value_col: str,
     threshold_micro: int,
-    n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
     """Per-group robust outlier flags from the EXACT integer
     median/MAD — the anomaly screen a quality pipeline runs per
@@ -463,7 +462,7 @@ def grouped_mad_outliers(
     # (distinct values, then distinct deviations), never the corpus
     dv = _distinct_values(df, groups, value_col).localCheckpoint()
     med = _grouped_quantiles_from_dv(
-        spark, dv, groups, value_col, [(1, 2)], n_buckets,
+        spark, dv, groups, value_col, [(1, 2)], DEFAULT_BUCKETS,
         join_hint="broadcast",
     ).select(*groups, F.col("value").cast("long").alias("med"))
     med = med.localCheckpoint()
@@ -484,7 +483,7 @@ def grouped_mad_outliers(
         .localCheckpoint()
     )
     mad = _grouped_quantiles_from_dv(
-        spark, dv_ad, groups, "_ad", [(1, 2)], n_buckets,
+        spark, dv_ad, groups, "_ad", [(1, 2)], DEFAULT_BUCKETS,
         join_hint="broadcast",
     ).select(*groups, F.col("value").cast("long").alias("mad"))
     # (med, mad) is |groups|-sized: broadcast it onto the corpus —
@@ -514,7 +513,6 @@ def grouped_winsorize(
     value_col: str,
     lo_prob: tuple[int, int] = (1, 100),
     hi_prob: tuple[int, int] = (99, 100),
-    n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
     """Per-group winsorization at EXACT type-1 quantiles — the
     outlier CLAMP (where `grouped_mad_outliers` is the outlier
@@ -537,7 +535,7 @@ def grouped_winsorize(
         [group_cols] if isinstance(group_cols, str) else list(group_cols)
     )
     cuts = grouped_exact_quantiles(
-        df, groups, value_col, [tuple(lo_prob), tuple(hi_prob)], n_buckets
+        df, groups, value_col, [tuple(lo_prob), tuple(hi_prob)]
     )
     lo_ppm = 1_000_000 * lo_prob[0] // lo_prob[1]
     hi_ppm = 1_000_000 * hi_prob[0] // hi_prob[1]
@@ -570,7 +568,6 @@ def grouped_percentile_rank(
     df: DataFrame,
     group_cols: str | Sequence[str],
     value_col: str,
-    n_buckets: int = DEFAULT_BUCKETS,
 ) -> DataFrame:
     """Per-group percentile-rank (quantile-normalization) transform —
     the feature scaling that survives heavy tails where z-scores
@@ -592,7 +589,7 @@ def grouped_percentile_rank(
         [group_cols] if isinstance(group_cols, str) else list(group_cols)
     )
     dv = _distinct_values(df, groups, value_col)
-    r = _grouped_with_below(dv, groups, value_col, "cnt", n_buckets)
+    r = _grouped_with_below(dv, groups, value_col, "cnt", DEFAULT_BUCKETS)
     tot = dv.groupBy(*groups).agg(
         F.sum("cnt").cast("long").alias("_nt")
     )

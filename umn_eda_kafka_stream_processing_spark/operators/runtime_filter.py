@@ -36,6 +36,12 @@ from pyspark.sql import functions as F
 from umn_eda_kafka_stream_processing_spark.stores import BatchStore
 
 WORD_BITS = 32
+# filter shape and md5 salts shared by the Spark operators, their
+# driver-side twins and the DuckDB twin (`duck_bloom_ctes`)
+M_BITS = 4096
+K_HASHES = 3
+BLOOM_SALT = "bloom"    # the join pre-filter (bloom_build)
+PBLOOM_SALT = "pbloom"  # the partition index (partition_bloom_index)
 
 
 def _positions(key: Column, m_bits: int, k_hashes: int, salt: str) -> list[Column]:
@@ -55,11 +61,7 @@ def _positions(key: Column, m_bits: int, k_hashes: int, salt: str) -> list[Colum
 
 
 def bloom_build(
-    df: DataFrame,
-    key_col: str,
-    m_bits: int = 4096,
-    k_hashes: int = 3,
-    salt: str = "bloom",
+    df: DataFrame, key_col: str, m_bits: int = M_BITS, k_hashes: int = K_HASHES
 ) -> list[int]:
     """Build the filter: distinct keys → k positions each → per-word
     bit_or — `partition_bloom_index` over one constant partition. One
@@ -67,7 +69,8 @@ def bloom_build(
     (the same driver-coordination Spark's built-in runtime filter
     uses). Returns the dense word list."""
     rows = partition_bloom_index(
-        df.withColumn("_p", F.lit(0)), "_p", key_col, m_bits, k_hashes, salt
+        df.withColumn("_p", F.lit(0)), "_p", key_col, m_bits, k_hashes,
+        BLOOM_SALT,
     ).collect()
     words = [0] * (m_bits // WORD_BITS)
     for r in rows:
@@ -78,16 +81,15 @@ def bloom_build(
 def bloom_might_contain(
     key: Column | str,
     words: list[int],
-    m_bits: int = 4096,
-    k_hashes: int = 3,
-    salt: str = "bloom",
+    m_bits: int = M_BITS,
+    k_hashes: int = K_HASHES,
 ) -> Column:
     """Membership predicate over the literal word array: all k bits
     set. Pure JVM expressions — prunes before any exchange."""
     key = F.col(key) if isinstance(key, str) else key
     arr = F.array(*[F.lit(w).cast("long") for w in words])
     checks = []
-    for pos in _positions(key, m_bits, k_hashes, salt):
+    for pos in _positions(key, m_bits, k_hashes, BLOOM_SALT):
         word = F.element_at(arr, (pos / WORD_BITS).cast("int") + F.lit(1))
         mask = F.call_function(
             "shiftleft", F.lit(1).cast("long"), (pos % WORD_BITS).cast("int")
@@ -99,18 +101,13 @@ def bloom_might_contain(
     return out
 
 
-def duck_bloom_ctes(
-    build_sql: str,
-    m_bits: int = 4096,
-    k_hashes: int = 3,
-    salt: str = "bloom",
-) -> str:
+def duck_bloom_ctes(build_sql: str) -> str:
     """DuckDB twin of bloom_build as CTE text: ``bwords`` (w, bits)
     from the distinct keys of ``build_sql`` (one varchar column named
     kk). Probe sides join per-position and demand count = k."""
     return f"""bkeys AS (SELECT DISTINCT kk FROM ({build_sql})),
-    bpos AS (SELECT cast(concat('0x', substr(md5(concat('{salt}', i, '|', kk)), 1, 8)) AS BIGINT) % {m_bits} AS pos
-             FROM bkeys CROSS JOIN (SELECT unnest(range(0, {k_hashes})) AS i)),
+    bpos AS (SELECT cast(concat('0x', substr(md5(concat('{BLOOM_SALT}', i, '|', kk)), 1, 8)) AS BIGINT) % {M_BITS} AS pos
+             FROM bkeys CROSS JOIN (SELECT unnest(range(0, {K_HASHES})) AS i)),
     bwords AS (SELECT CAST(pos // {WORD_BITS} AS INT) AS w,
                       bit_or(1::BIGINT << CAST(pos % {WORD_BITS} AS INT)) AS bits
                FROM bpos GROUP BY 1)"""
@@ -120,9 +117,9 @@ def partition_bloom_index(
     df: DataFrame,
     part_col: str,
     key_col: str,
-    m_bits: int = 4096,
-    k_hashes: int = 3,
-    salt: str = "pbloom",
+    m_bits: int = M_BITS,
+    k_hashes: int = K_HASHES,
+    salt: str = PBLOOM_SALT,
 ) -> DataFrame:
     """PARTITION-LEVEL bloom index — the point-lookup complement to
     the zone map (`compaction.zonemap_select`): zone maps skip files
@@ -173,7 +170,7 @@ def partition_bloom_index(
 
 
 def py_bloom_positions(
-    value, m_bits: int = 4096, k_hashes: int = 3, salt: str = "pbloom"
+    value, m_bits: int = M_BITS, k_hashes: int = K_HASHES
 ) -> list[int]:
     """Driver-side twin of ``_positions`` (hashlib md5 == any
     engine's md5): the probe side of a point lookup is ONE value, so
@@ -182,7 +179,8 @@ def py_bloom_positions(
 
     return [
         int(
-            hashlib.md5(f"{salt}{i}|{value}".encode()).hexdigest()[:8], 16
+            hashlib.md5(f"{PBLOOM_SALT}{i}|{value}".encode()).hexdigest()[:8],
+            16,
         )
         % m_bits
         for i in range(k_hashes)
@@ -193,15 +191,13 @@ def partition_bloom_select(
     index_rows,
     value,
     part_col: str,
-    m_bits: int = 4096,
-    k_hashes: int = 3,
-    salt: str = "pbloom",
+    m_bits: int = M_BITS,
 ) -> list:
     """Partitions whose bloom MAY contain ``value`` — the bounded
     plan-time selection (collected index rows in, partition values
     out; feeds a partition-pruned read). A partition passes iff every
     required word has all its required bits set (`bloom_needed_words`)."""
-    need = bloom_needed_words(value, m_bits, k_hashes, salt)
+    need = bloom_needed_words(value, m_bits)
     have: dict = {}
     for r in index_rows:
         have.setdefault(r[part_col], {})[r["w"]] = r["bits"]
@@ -213,14 +209,14 @@ def partition_bloom_select(
 
 
 def bloom_needed_words(
-    value, m_bits: int = 4096, k_hashes: int = 3, salt: str = "pbloom"
+    value, m_bits: int = M_BITS, k_hashes: int = K_HASHES
 ) -> dict[int, int]:
     """The probe's word→mask requirement map: for each 32-bit word
     the value's k positions touch, the OR of their bit masks (two
     positions can share a word). Plan-time scalar — one value, at
     most k entries."""
     need: dict[int, int] = {}
-    for pos in py_bloom_positions(value, m_bits, k_hashes, salt):
+    for pos in py_bloom_positions(value, m_bits, k_hashes):
         w, b = pos // WORD_BITS, pos % WORD_BITS
         need[w] = need.get(w, 0) | (1 << b)
     return need
@@ -230,9 +226,8 @@ def partition_bloom_select_df(
     index_df: DataFrame,
     value,
     part_col: str,
-    m_bits: int = 4096,
-    k_hashes: int = 3,
-    salt: str = "pbloom",
+    m_bits: int = M_BITS,
+    k_hashes: int = K_HASHES,
 ) -> list:
     """Partitions whose bloom MAY contain ``value`` — the DISTRIBUTED
     selection path (the 100×-scale twin of `partition_bloom_select`,
@@ -252,7 +247,7 @@ def partition_bloom_select_df(
     Same no-false-negative guarantee as the collected variant; the
     two paths select identical partitions (property-tested).
     """
-    need = bloom_needed_words(value, m_bits, k_hashes, salt)
+    need = bloom_needed_words(value, m_bits, k_hashes)
     match = None
     for w, m in need.items():
         c = (F.col("w") == F.lit(w)) & (
@@ -290,9 +285,6 @@ def upsert_bloom_registers(
     batch_id: int,
     part_col: str,
     key_col: str,
-    m_bits: int = 4096,
-    k_hashes: int = 3,
-    salt: str = "pbloom",
 ) -> None:
     """Incrementally-maintained partition bloom index — the skipping
     index as a foreachBatch store (the HLL/CMS register-store shape):
@@ -308,9 +300,7 @@ def upsert_bloom_registers(
     TTL sweeps, rebuild the affected partitions' registers (the
     standard bloom limitation, stated rather than hidden).
     """
-    regs = partition_bloom_index(
-        batch_df, part_col, key_col, m_bits, k_hashes, salt
-    )
+    regs = partition_bloom_index(batch_df, part_col, key_col)
     BatchStore(batch_df.sparkSession, store_path).upsert(batch_id, regs)
 
 

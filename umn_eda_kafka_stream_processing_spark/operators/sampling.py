@@ -54,16 +54,14 @@ def rate_threshold(rate: float) -> int:
     return int(rate * KEY_SPACE)
 
 
-def bernoulli_sample(
-    df: DataFrame, key_col: str, rate: float, salt: str = "smp"
-) -> DataFrame:
+def bernoulli_sample(df: DataFrame, key_col: str, rate: float) -> DataFrame:
     """Uniform deterministic sample: keep rows with u32(key) < rate·2^32.
 
     Narrow (no shuffle). Unlike ``df.sample()`` the selection is a pure
     function of the row key, so retries, speculative tasks, and other
     engines reproduce it exactly.
     """
-    return df.filter(sample_key_u32(key_col, salt) < F.lit(rate_threshold(rate)))
+    return df.filter(sample_key_u32(key_col) < F.lit(rate_threshold(rate)))
 
 
 def stratified_sample(
@@ -71,19 +69,18 @@ def stratified_sample(
     strata_col: str,
     key_col: str,
     rates: Mapping[str, float],
-    default_rate: float = 0.0,
-    salt: str = "smp",
 ) -> DataFrame:
-    """Per-stratum bernoulli rates (e.g. language balancing).
+    """Per-stratum bernoulli rates (e.g. language balancing); strata
+    missing from ``rates`` keep no rows.
 
     The rate lookup is a literal CASE expression — evaluated JVM-side
     inside the same narrow filter as the hash, so the whole operator
     stays in one WholeStageCodegen pass over the scan.
     """
-    thr: Column = F.lit(rate_threshold(default_rate))
+    thr: Column = F.lit(0)
     for stratum, rate in sorted(rates.items()):
         thr = F.when(F.col(strata_col) == stratum, F.lit(rate_threshold(rate))).otherwise(thr)
-    return df.filter(sample_key_u32(key_col, salt) < thr)
+    return df.filter(sample_key_u32(key_col) < thr)
 
 
 def uniform_k_per_stratum(
@@ -92,7 +89,6 @@ def uniform_k_per_stratum(
     key_col: str,
     k: int,
     salt: str = "smp",
-    rank_name: str = "draw_rank",
 ) -> DataFrame:
     """Exactly min(k, |stratum|) rows per stratum, drawn uniformly.
 
@@ -110,8 +106,8 @@ def uniform_k_per_stratum(
         sample_key_u32(key_col, salt).asc(), F.col(key_col).asc()
     )
     return (
-        df.withColumn(rank_name, F.row_number().over(w).cast("long"))
-        .filter(F.col(rank_name) <= k)
+        df.withColumn("draw_rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("draw_rank") <= k)
     )
 
 
@@ -122,7 +118,6 @@ def weighted_sample_k(
     k: int,
     strata_cols: str | Sequence[str] = (),
     salt: str = "wrs",
-    rank_name: str = "draw_rank",
 ) -> DataFrame:
     """Weighted random sampling WITHOUT replacement — the A-Res /
     exponential-race scheme (Efraimidis & Spirakis 2006, a public
@@ -175,13 +170,13 @@ def weighted_sample_k(
         out = global_topk(
             scored, [("priority_micro", True), (key_col, True)], k
         )
-        return out.withColumnRenamed("rank", rank_name)
+        return out.withColumnRenamed("rank", "draw_rank")
     w = Window.partitionBy(*keys).orderBy(
         F.col("priority_micro").asc(), F.col(key_col).asc()
     )
     return (
-        scored.withColumn(rank_name, F.row_number().over(w).cast("long"))
-        .filter(F.col(rank_name) <= k)
+        scored.withColumn("draw_rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("draw_rank") <= k)
     )
 
 
@@ -191,7 +186,6 @@ def domain_mixture_sample(
     key_col: str,
     weights: Mapping[str, int],
     target_total: int,
-    salt: str = "smp",
 ) -> DataFrame:
     """Sample toward a weighted domain mixture (the training recipe).
 
@@ -228,7 +222,7 @@ def domain_mixture_sample(
     )
     return (
         df.join(F.broadcast(counts), df[domain_col] == counts["_dom"], "inner")
-        .filter(sample_key_u32(key_col, salt) < F.col("_thr"))
+        .filter(sample_key_u32(key_col) < F.col("_thr"))
         .drop("_dom", "_thr")
     )
 
@@ -297,7 +291,6 @@ def temperature_mixture_sample(
     size_col: Column | str,
     target_total: int,
     alpha: float = 0.5,
-    salt: str = "mix",
 ) -> DataFrame:
     """Apply `temperature_rate_table`: broadcast the tiny rate table
     onto the fact and keep rows whose u32 sampling key clears their
@@ -317,7 +310,7 @@ def temperature_mixture_sample(
             ),
             df[domain_col] == F.col("_mix_domain"),
         )
-        .filter(sample_key_u32(key_col, salt) < F.col("thr"))
+        .filter(sample_key_u32(key_col, "mix") < F.col("thr"))
         .drop("_mix_domain", "thr")
     )
 
@@ -328,8 +321,6 @@ def repeat_mixture_sample(
     key_col: str,
     size_col: str,
     targets: Mapping[str, int],
-    salt: str = "rep",
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """UPSAMPLING mixture with repeat factors — the other half of
     `token_budget_mixture_sample`: when a domain's target EXCEEDS its
@@ -404,7 +395,7 @@ def repeat_mixture_sample(
         )
     )
     u = (
-        sample_key_u32(key_col, salt).cast("double") + F.lit(0.5)
+        sample_key_u32(key_col, "rep").cast("double") + F.lit(0.5)
     ) / F.lit(float(KEY_SPACE))
     prio = F.floor(
         (-F.log(u))
@@ -419,7 +410,7 @@ def repeat_mixture_sample(
         skinny.select(
             domain_col, key_col, size_col, "priority_micro", "domain_budget"
         ),
-        domain_col, key_col, size_col, "domain_budget", n_buckets,
+        domain_col, key_col, size_col, "domain_budget",
     )
     adm = admitted.select(
         F.col(key_col).alias("_adm_key"), F.lit(1).alias("_adm")
@@ -471,10 +462,7 @@ def token_budget_mixture_sample(
     size_col: str,
     weights: Mapping[str, int],
     total_budget: int,
-    salt: str = "bud",
-    rank_name: str = "draw_rank",
     window_budget_max: int = 1_000_000,
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """Token-BUDGET-constrained mixture sampling — the real curation
     ask behind `temperature_mixture_sample`'s rates: "give me exactly
@@ -506,7 +494,7 @@ def token_budget_mixture_sample(
       FIRST is a lossless pre-prune that plans as WindowGroupLimit
       (each task keeps its local top-B_d before the domain shuffle);
       the running-sum window then scans only the pruned prefix. Adds
-      ``rank_name`` and ``cum_tokens`` columns.
+      ``draw_rank`` and ``cum_tokens`` columns.
     * **Histogram path** (max B_d above the threshold): the window
       path's surviving prefix can hold up to B_d rows, and at a
       realistic 1e9-token budget that is ~1e9 rows sorted and
@@ -532,7 +520,7 @@ def token_budget_mixture_sample(
         df.sparkSession, weights, total_budget
     )
     u = (
-        sample_key_u32(key_col, salt).cast("double") + F.lit(0.5)
+        sample_key_u32(key_col, "bud").cast("double") + F.lit(0.5)
     ) / F.lit(float(KEY_SPACE))
     prio = F.floor(
         (-F.log(u))
@@ -561,11 +549,11 @@ def token_budget_mixture_sample(
             F.col("priority_micro").asc(), F.col(key_col).asc()
         )
         ranked = (
-            base.withColumn(rank_name, F.row_number().over(w).cast("long"))
+            base.withColumn("draw_rank", F.row_number().over(w).cast("long"))
             # lossless WindowGroupLimit pre-prune: sizes are >= 1, so
             # no budget-B prefix can hold more than B docs (global cap
             # keeps the literal independent of the domain column)
-            .filter(F.col(rank_name) <= F.lit(max_budget))
+            .filter(F.col("draw_rank") <= F.lit(max_budget))
         )
         cum = ranked.withColumn(
             "cum_tokens",
@@ -578,7 +566,7 @@ def token_budget_mixture_sample(
         )
     # histogram path: distributed per-domain cut priority
     return _histogram_budget_admit(
-        base, domain_col, key_col, size_col, "domain_budget", n_buckets
+        base, domain_col, key_col, size_col, "domain_budget"
     )
 
 
@@ -588,7 +576,6 @@ def _histogram_budget_admit(
     key_col: str,
     size_col: str,
     budget_col: str,
-    n_buckets: int,
 ) -> DataFrame:
     """The distributed large-budget admission tail shared by
     `token_budget_mixture_sample` and `incremental_budget_admission`:
@@ -610,7 +597,7 @@ def _histogram_budget_admit(
     # every joined-back aggregate pins shuffle_hash — the static
     # planner would SMJ-sort both corpus-sized sides otherwise
     bel = _grouped_with_below(
-        dv, [domain_col], "priority_micro", "_mass", n_buckets,
+        dv, [domain_col], "priority_micro", "_mass", 4096,
         join_hint="shuffle_hash",
     )
     j = base.join(
@@ -676,9 +663,7 @@ def incremental_budget_admission(
     size_col: str,
     budgets: Mapping[str, int],
     batch_id: int,
-    salt: str = "bud",
     window_budget_max: int = 1_000_000,
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """Online token-budget admission — the foreachBatch twin of
     `token_budget_mixture_sample`: a continuously-arriving corpus is
@@ -725,7 +710,7 @@ def incremental_budget_admission(
     )
     max_budget = max(int(b) for b in budgets.values())
     u = (
-        sample_key_u32(key_col, salt).cast("double") + F.lit(0.5)
+        sample_key_u32(key_col, "bud").cast("double") + F.lit(0.5)
     ) / F.lit(float(KEY_SPACE))
     prio = F.floor(
         (-F.log(u))
@@ -777,7 +762,7 @@ def incremental_budget_admission(
             )
         else:
             kept = _histogram_budget_admit(
-                cand, domain_col, key_col, size_col, "_remaining", n_buckets
+                cand, domain_col, key_col, size_col, "_remaining"
             )
         return kept.select(
             F.col(domain_col).alias("domain"),
@@ -798,7 +783,6 @@ def incremental_cluster_quota(
     key_col: str,
     quota: int,
     batch_id: int,
-    salt: str = "cqs",
 ) -> DataFrame:
     """Online cluster-quota admission — the foreachBatch twin of the
     cluster-quota diversity draw (`uniform_k_per_stratum` over a
@@ -834,7 +818,7 @@ def incremental_cluster_quota(
         raise ValueError(f"quota must be >= 1, got {quota}")
     store = SnapshotStore(spark, store_path, ["cluster", "key"], order="event_seq")
     w = Window.partitionBy(cluster_col).orderBy(
-        sample_key_u32(key_col, salt).asc(), F.col(key_col).asc()
+        sample_key_u32(key_col, "cqs").asc(), F.col(key_col).asc()
     )
     ranked = batch_df.withColumn(
         "_rk", F.row_number().over(w).cast("long")
@@ -864,7 +848,6 @@ def split_assign(
     key_col: str,
     val_rate: float = 0.01,
     test_rate: float = 0.01,
-    salt: str = "split",
 ) -> DataFrame:
     """Deterministic train/val/test assignment — adds a ``split``
     column, drops nothing.
@@ -885,7 +868,7 @@ def split_assign(
         raise ValueError(
             f"invalid split rates: val={val_rate} test={test_rate}"
         )
-    u = sample_key_u32(key_col, salt)
+    u = sample_key_u32(key_col, "split")
     test_cut = rate_threshold(test_rate)
     val_cut = test_cut + rate_threshold(val_rate)
     return df.withColumn(
@@ -899,10 +882,8 @@ def split_assign(
 def cluster_safe_split(
     df: DataFrame,
     clusters: DataFrame,
-    id_col: str = "doc_id",
     val_rate: float = 0.01,
     test_rate: float = 0.01,
-    salt: str = "split",
 ) -> DataFrame:
     """`split_assign` keyed by the near-dup CLUSTER representative —
     the leakage guard a per-document split lacks: hashing each doc's
@@ -915,7 +896,7 @@ def cluster_safe_split(
     as `split_assign` would — to the SAME split, making cross-split
     near-dup pairs zero BY CONSTRUCTION (the census pins it).
 
-    ``clusters`` is `near_dup_clusters` output (id_col, cluster_id)
+    ``clusters`` is `near_dup_clusters` output (doc_id, cluster_id)
     — only docs appearing in >= 1 near-dup pair; everything else
     keys on itself via the left join's NULL. One shuffle join on the
     id (shuffle_hash pinned — the cluster frame is checkpoint-built
@@ -924,14 +905,14 @@ def cluster_safe_split(
     ``cluster_id`` or ``split``.
     """
     keyed = df.join(
-        clusters.select(F.col(id_col), "cluster_id").hint("shuffle_hash"),
-        id_col,
+        clusters.select(F.col("doc_id"), "cluster_id").hint("shuffle_hash"),
+        "doc_id",
         "left",
     ).withColumn(
-        "_skey", F.coalesce(F.col("cluster_id"), F.col(id_col))
+        "_skey", F.coalesce(F.col("cluster_id"), F.col("doc_id"))
     )
     return split_assign(
-        keyed, "_skey", val_rate=val_rate, test_rate=test_rate, salt=salt
+        keyed, "_skey", val_rate=val_rate, test_rate=test_rate
     ).drop("_skey", "cluster_id")
 
 
@@ -940,13 +921,12 @@ def epoch_shuffle(
     key_col: str,
     n_batches: int,
     epoch: int = 0,
-    salt: str = "shuf",
 ) -> DataFrame:
     """Deterministic epoch shuffle for training-data pipelines: adds
     ``batch_id`` (which global batch this row lands in) and
     ``pos_in_batch`` (its position inside the batch).
 
-    The ordering key is md5('<salt>-e<epoch>|' || key) — a pure
+    The ordering key is md5('shuf-e<epoch>|' || key) — a pure
     function of (epoch, row key), so every epoch is a DIFFERENT but
     fully reproducible permutation: retries, engine swaps, and
     resumed jobs see the same order, and no epoch correlates with
@@ -960,7 +940,7 @@ def epoch_shuffle(
     """
     if n_batches <= 0:
         raise ValueError(f"n_batches must be positive, got {n_batches}")
-    u = sample_key_u32(key_col, f"{salt}-e{epoch}")
+    u = sample_key_u32(key_col, f"shuf-e{epoch}")
     out = df.withColumn("batch_id", (u % F.lit(n_batches)).cast("long"))
     w = Window.partitionBy("batch_id").orderBy(u.asc(), F.col(key_col).asc())
     return out.withColumn(

@@ -41,9 +41,9 @@ def l2_norm(a: str | Column) -> Column:
     )
 
 
-def cosine_similarity(a: str | Column, b: str | Column, precision: int = 6) -> Column:
+def cosine_similarity(a: str | Column, b: str | Column) -> Column:
     return round_half_up(
-        dot_product(a, b) / (l2_norm(a) * l2_norm(b)), precision
+        dot_product(a, b) / (l2_norm(a) * l2_norm(b)), 6
     )
 
 
@@ -103,13 +103,10 @@ def ivf_topk(
     centroids: DataFrame,
     k: int = 5,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_col: str = "bucket",
 ) -> DataFrame:
     """IVF-pruned approximate top-k.
 
-    ``corpus`` carries ``bucket_col`` (coarse assignment);
+    ``corpus`` carries ``bucket`` (coarse assignment);
     ``centroids`` is (bucket, centroid-vector). Each query scores
     all centroids (tiny), keeps its ``n_probe`` nearest buckets, and
     scans only those corpus buckets. The corpus-side join is a hash
@@ -117,27 +114,27 @@ def ivf_topk(
     Output: (query_id, neighbor_id, sim, rank).
     """
     cent = centroids.select(
-        F.col(bucket_col), F.col(vec_col).alias("cent_vec")
+        F.col("bucket"), F.col("embedding").alias("cent_vec")
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     ).withColumn("q_norm", l2_norm("q_vec"))
     probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("cent_sim").desc(), F.col(bucket_col).asc()
+        F.col("cent_sim").desc(), F.col("bucket").asc()
     )
     probes = (
         q.crossJoin(F.broadcast(cent))
         .withColumn("cent_sim", cosine_similarity("q_vec", "cent_vec"))
         .withColumn("probe_rank", F.row_number().over(probe_w))
         .filter(F.col("probe_rank") <= n_probe)
-        .select("query_id", "q_vec", "q_norm", bucket_col)
+        .select("query_id", "q_vec", "q_norm", "bucket")
     )
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"),
-        F.col(bucket_col),
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"),
+        F.col("bucket"),
     ).withColumn("c_norm", l2_norm("c_vec"))
     scored = (
-        c.join(F.broadcast(probes), bucket_col, "inner")
+        c.join(F.broadcast(probes), "bucket", "inner")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "sim",
@@ -359,7 +356,6 @@ def srp_lsh_pairs(
     bands: int = 4,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    hot_bucket_cap: int | None = 10_000,
 ) -> DataFrame:
     """Embedding near-dup pairs via signed-random-projection LSH — the
     SCALE path for embedding dedup when no coarse block column exists
@@ -388,17 +384,14 @@ def srp_lsh_pairs(
             "band", "bkey"
         )
     )
-    if hot_bucket_cap is not None:
-        # same hazard + remedy as dedup.minhash_lsh_pairs: zero-vector
-        # / degenerate embeddings all land in one band bucket and emit
-        # B²/2 pairs; cap it before the self-join (window partitions
-        # on the join's own shuffle key — no extra exchange). The
-        # dedup.lsh_bucket_stats pattern applies for telemetry.
-        from pyspark.sql.window import Window
-
-        sig = sig.withColumn(
-            "_bsz", F.count(F.lit(1)).over(Window.partitionBy("band", "bkey"))
-        ).filter(F.col("_bsz") <= hot_bucket_cap).drop("_bsz")
+    # same hazard + remedy as dedup.minhash_lsh_pairs: zero-vector /
+    # degenerate embeddings all land in one band bucket and emit B²/2
+    # pairs; cap buckets at 10,000 rows before the self-join (window
+    # partitions on the join's own shuffle key — no extra exchange).
+    # The dedup.lsh_bucket_stats pattern applies for telemetry.
+    sig = sig.withColumn(
+        "_bsz", F.count(F.lit(1)).over(Window.partitionBy("band", "bkey"))
+    ).filter(F.col("_bsz") <= 10_000).drop("_bsz")
     a = sig.select(F.col(id_col).alias(f"a_{id_col}"), "band", "bkey")
     b = sig.select(F.col(id_col).alias(f"b_{id_col}"), "band", "bkey")
     par = df.sparkSession.sparkContext.defaultParallelism
@@ -435,39 +428,33 @@ def srp_lsh_pairs(
     )
 
 
-def assign_ivf_bucket(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_col: str = "bucket",
-) -> DataFrame:
+def assign_ivf_bucket(df: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign each vector to its max-cosine centroid bucket.
 
     The per-iteration assignment step of ``kmeans_buckets`` exposed
     standalone, for INGEST time: new vectors pick a bucket against
     the frozen quantizer (one broadcast pass, JVM dot products,
     deterministic ties → lowest bucket). Output: input columns +
-    ``bucket_col``.
+    ``bucket``.
     """
     cent = centroids.select(
-        F.col(bucket_col).alias("_b"), F.col(vec_col).alias("_cv")
+        F.col("bucket").alias("_b"), F.col("embedding").alias("_cv")
     ).withColumn("_cn", l2_norm("_cv"))
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("vec_id").orderBy(
         F.col("_sim").desc(), F.col("_b").asc()
     )
     return (
-        df.withColumn("_n", l2_norm(vec_col))
+        df.withColumn("_n", l2_norm("embedding"))
         .crossJoin(F.broadcast(cent))
         .withColumn(
             "_sim",
             round_half_up(
-                dot_product(vec_col, "_cv") / (F.col("_n") * F.col("_cn")), 6
+                dot_product("embedding", "_cv") / (F.col("_n") * F.col("_cn")), 6
             ),
         )
         .withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") == 1)
-        .withColumn(bucket_col, F.col("_b"))
+        .withColumn("bucket", F.col("_b"))
         .drop("_b", "_cv", "_cn", "_n", "_sim", "_rk")
     )
 
@@ -477,15 +464,11 @@ def upsert_ivf_index(
     index_path: str,
     embeddings: DataFrame,
     centroids: DataFrame,
-    order_col: str = "upd_seq",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_col: str = "bucket",
 ) -> None:
     """Maintain a bucket-partitioned parquet IVF index incrementally.
 
     Each (micro)batch of new/updated vectors is bucket-assigned
-    against the frozen quantizer and upserted by ``id_col`` into the
+    against the frozen quantizer and upserted by ``vec_id`` into the
     index table, which is hive-partitioned by bucket so (a) only
     buckets receiving vectors are rewritten (dynamic partition
     overwrite — operators/compaction.py) and (b) ``ivf_topk`` probe
@@ -502,9 +485,9 @@ def upsert_ivf_index(
     from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     assigned = assign_ivf_bucket(
-        embeddings, centroids, id_col, vec_col, bucket_col
+        embeddings, centroids
     )
-    SnapshotStore(spark, index_path, id_col, bucket_col, order_col).upsert(
+    SnapshotStore(spark, index_path, "vec_id", "bucket", "upd_seq").upsert(
         assigned
     )
 
@@ -517,9 +500,6 @@ def upsert_ivfpq_index(
     codebook: DataFrame,
     n_sub: int = 4,
     dim: int = 64,
-    order_col: str = "upd_seq",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> None:
     """Maintain the COMPRESSED IVFADC index incrementally: each
     (micro)batch of new/updated vectors is bucket-assigned against the
@@ -543,21 +523,21 @@ def upsert_ivfpq_index(
     from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     assigned = assign_ivf_bucket(
-        embeddings, centroids, id_col=id_col, vec_col=vec_col
+        embeddings, centroids
     )
-    cent = centroids.select("bucket", F.col(vec_col).alias("_cv"))
+    cent = centroids.select("bucket", F.col("embedding").alias("_cv"))
     res = (
         assigned.select(
-            id_col,
+            "vec_id",
             "bucket",
-            F.col(order_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_dv"),
+            F.col("upd_seq"),
+            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("_dv"),
         )
         .join(F.broadcast(cent), "bucket")
         .select(
-            id_col,
+            "vec_id",
             "bucket",
-            order_col,
+            "upd_seq",
             "_dv",
             F.zip_with("_dv", "_cv", lambda a, b: a - b).alias("resid"),
         )
@@ -568,15 +548,15 @@ def upsert_ivfpq_index(
         # rule)
         .localCheckpoint()
     )
-    codes = pq_encode(res, codebook, n_sub=n_sub, dim=dim, id_col=id_col,
+    codes = pq_encode(res, codebook, n_sub=n_sub, dim=dim,
                       vec_col="resid")
     rows = codes.join(
         res.select(
-            id_col, "bucket", order_col, F.col("_dv").alias(vec_col)
+            "vec_id", "bucket", "upd_seq", F.col("_dv").alias("embedding")
         ).hint("shuffle_hash"),
-        id_col,
+        "vec_id",
     )
-    SnapshotStore(spark, index_path, id_col, "bucket", order_col).upsert(rows)
+    SnapshotStore(spark, index_path, "vec_id", "bucket", "upd_seq").upsert(rows)
 
 
 def ivfpq_search_index(
@@ -590,8 +570,6 @@ def ivfpq_search_index(
     n_probe: int = 2,
     n_sub: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVFADC search against the persisted incremental index: the
     codes AND the re-rank vectors come from the index table, so a
@@ -601,17 +579,15 @@ def ivfpq_search_index(
     index = spark.read.parquet(index_path)
     return ivfpq_search_topk(
         queries,
-        index.select(id_col, "bucket", "codes"),
+        index.select("vec_id", "bucket", "codes"),
         centroids,
         codebook,
-        index.select(id_col, vec_col),
+        index.select("vec_id", "embedding"),
         k=k,
         shortlist=shortlist,
         n_probe=n_probe,
         n_sub=n_sub,
         dim=dim,
-        id_col=id_col,
-        vec_col=vec_col,
     )
 
 
@@ -699,7 +675,6 @@ def pq_codebooks(
     n_codes: int = 8,
     iters: int = 2,
     dim: int = 64,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Train per-subspace codebooks with Lloyd's k-means, all
@@ -718,9 +693,9 @@ def pq_codebooks(
     subvectors plus one (m, code, pos)-keyed aggregation; lineage cut
     per round via localCheckpoint.
     """
-    sub = pq_subvectors(df, n_sub, dim, id_col, vec_col)
+    sub = pq_subvectors(df, n_sub, dim, "vec_id", vec_col)
     seeds = (
-        df.select(id_col, vec_col).orderBy(F.col(id_col).asc()).limit(n_codes).collect()
+        df.select("vec_id", vec_col).orderBy(F.col("vec_id").asc()).limit(n_codes).collect()
     )
     d_sub = dim // n_sub
     cb_rows = []
@@ -741,12 +716,12 @@ def pq_codebooks(
         # (dmicro ASC, code ASC) since dmicro is an exact BIGINT.
         # first(sv) is safe: sv is constant within an (id, m) group.
         assign = (
-            scored.groupBy(id_col, "m")
+            scored.groupBy("vec_id", "m")
             .agg(
                 F.min(F.struct("dmicro", "code")).alias("_best"),
                 F.first("sv").alias("sv"),
             )
-            .select(id_col, "m", "sv", F.col("_best.code").alias("code"))
+            .select("vec_id", "m", "sv", F.col("_best.code").alias("code"))
         )
         cb = (
             assign.select("m", "code", F.posexplode("sv").alias("pos", "v"))
@@ -769,7 +744,6 @@ def pq_encode(
     codebook: DataFrame,
     n_sub: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode the corpus against a trained codebook: (id, codes)
@@ -780,18 +754,18 @@ def pq_encode(
     (id)-keyed pivot back to a single row. This is the 64:1
     compressed representation the ADC scan reads instead of the raw
     vectors."""
-    sub = pq_subvectors(df, n_sub, dim, id_col, vec_col)
+    sub = pq_subvectors(df, n_sub, dim, "vec_id", vec_col)
     scored = sub.join(F.broadcast(codebook), "m").withColumn(
         "dmicro", l2sq_micros("sv", "cw")
     )
     # argmin via min(struct) — same (dmicro ASC, code ASC) ordering as
     # a row_number window, but with map-side partial aggregation
     best = (
-        scored.groupBy(id_col, "m")
+        scored.groupBy("vec_id", "m")
         .agg(F.min(F.struct("dmicro", "code")).alias("_best"))
-        .select(id_col, "m", F.col("_best.code").alias("code"))
+        .select("vec_id", "m", F.col("_best.code").alias("code"))
     )
-    return best.groupBy(id_col).agg(
+    return best.groupBy("vec_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("m", "code"))), lambda s: s.code
         ).alias("codes")
@@ -805,8 +779,6 @@ def pq_adc_topk(
     k: int = 5,
     n_sub: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Asymmetric-distance top-k: each query precomputes a lookup
     table LUT[m][code] = micro-L2(query subvector m, codeword), then
@@ -824,8 +796,8 @@ def pq_adc_topk(
     Output: (query_id, neighbor_id, approx_dist_micro, rank) —
     ascending distance, neighbor-id tie-break, self-pairs excluded.
     """
-    qsub = pq_subvectors(queries, n_sub, dim, id_col, vec_col).withColumnRenamed(
-        id_col, "query_id"
+    qsub = pq_subvectors(queries, n_sub, dim).withColumnRenamed(
+        "vec_id", "query_id"
     )
     lut_rows = qsub.join(F.broadcast(codebook), "m").withColumn(
         "dmicro", l2sq_micros("sv", "cw")
@@ -855,7 +827,7 @@ def pq_adc_topk(
         )
     )
     scored = (
-        codes.withColumnRenamed(id_col, "neighbor_id")
+        codes.withColumnRenamed("vec_id", "neighbor_id")
         .join(F.broadcast(luts), F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
             "approx_dist_micro",
@@ -997,8 +969,6 @@ def incremental_semantic_dedup(
     batch_id: int,
     centroids: DataFrame,
     tau: float = 0.9,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     bucket_cap: int | None = 10_000,
 ) -> DataFrame:
     """Semantic near-dedup of ONE microbatch against all history —
@@ -1041,15 +1011,15 @@ def incremental_semantic_dedup(
     from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     store = SnapshotStore(
-        batch_df.sparkSession, seen_store_path, ["bucket", id_col], "bucket",
+        batch_df.sparkSession, seen_store_path, ["bucket", "vec_id"], "bucket",
         order="batch_id",
     )
     assigned = (
-        assign_ivf_bucket(batch_df, centroids, id_col=id_col, vec_col=vec_col)
+        assign_ivf_bucket(batch_df, centroids)
         .select(
-            id_col,
+            "vec_id",
             "bucket",
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_v"),
+            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("_v"),
         )
         .withColumn("_n", l2_norm("_v"))
         # self-join below — materialize once (lazy cache races)
@@ -1071,13 +1041,13 @@ def incremental_semantic_dedup(
         )
     a = pairable.select(
         "bucket",
-        F.col(id_col).alias("_ida"),
+        F.col("vec_id").alias("_ida"),
         F.col("_v").alias("_va"),
         F.col("_n").alias("_na"),
     )
     b = pairable.select(
         F.col("bucket").alias("_bb"),
-        F.col(id_col).alias("_idb"),
+        F.col("vec_id").alias("_idb"),
         F.col("_v").alias("_vb"),
         F.col("_n").alias("_nb"),
     )
@@ -1093,31 +1063,31 @@ def incremental_semantic_dedup(
             ),
         )
         .filter(F.col("_sim") >= F.lit(tau))
-        .select(F.col("_idb").alias(id_col))
+        .select(F.col("_idb").alias("vec_id"))
         .distinct()
     )
-    survivors = assigned.join(in_batch_losers, id_col, "left_anti")
+    survivors = assigned.join(in_batch_losers, "vec_id", "left_anti")
 
     def step(seen: DataFrame | None) -> DataFrame:
         if seen is None:
             return survivors
         seen = seen.where(F.col("batch_id") != int(batch_id)).select(
             F.col("bucket").alias("_sb"),
-            F.col(id_col).alias("_sid"),
+            F.col("vec_id").alias("_sid"),
             F.col("_v").alias("_sv"),
             F.col("_n").alias("_sn"),
         )
         # over-cap-bucket rows skip the history comparison too (they
         # were admitted uncompared in-batch; comparing them here
         # would make the cap's semantics depend on arrival order)
-        pair_surv = survivors.join(pairable.select(id_col), id_col, "left_semi")
+        pair_surv = survivors.join(pairable.select("vec_id"), "vec_id", "left_semi")
         hits = (
             pair_surv.join(
                 seen.hint("shuffle_hash"),
                 # an id already admitted by an earlier batch is not its
                 # own duplicate: a re-sent vector is emitted again
                 (F.col("bucket") == F.col("_sb"))
-                & (F.col(id_col) != F.col("_sid")),
+                & (F.col("vec_id") != F.col("_sid")),
             )
             .withColumn(
                 "_sim",
@@ -1126,15 +1096,15 @@ def incremental_semantic_dedup(
                 ),
             )
             .filter(F.col("_sim") >= F.lit(tau))
-            .select(id_col)
+            .select("vec_id")
             .distinct()
         )
-        return survivors.join(hits, id_col, "left_anti")
+        return survivors.join(hits, "vec_id", "left_anti")
 
     admitted = store.advance(step, int(batch_id), near=assigned)
     return (
-        admitted.select(id_col)
-        .join(batch_df, id_col)
+        admitted.select("vec_id")
+        .join(batch_df, "vec_id")
         .select(*batch_df.columns)
     )
 
@@ -1152,8 +1122,6 @@ def pq_search_topk(
     # to divide both values, so the whole PQ family shares one default
     n_sub: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """PQ search with exact re-ranking — the production PQ shape
     (IVFPQ / DiskANN all re-rank): the ADC pass over the compressed
@@ -1173,9 +1141,8 @@ def pq_search_topk(
     """
     cand = pq_adc_topk(
         queries, codes, codebook, k=shortlist, n_sub=n_sub, dim=dim,
-        id_col=id_col, vec_col=vec_col,
     ).select("query_id", "neighbor_id")
-    return _exact_rerank(cand, queries, corpus, k, id_col, vec_col)
+    return _exact_rerank(cand, queries, corpus, k)
 
 
 def _exact_rerank(
@@ -1183,8 +1150,6 @@ def _exact_rerank(
     queries: DataFrame,
     corpus: DataFrame,
     k: int,
-    id_col: str,
-    vec_col: str,
 ) -> DataFrame:
     """Re-rank a (query_id, neighbor_id) shortlist by EXACT
     integer-micro squared L2 over the original vectors: the query
@@ -1194,12 +1159,12 @@ def _exact_rerank(
     carrying vector arrays). Shared tail of pq_search_topk and
     ivfpq_search_topk."""
     qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_qv"),
+        F.col("vec_id").alias("query_id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("_qv"),
     )
     cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("_cv"),
     )
     exact = (
         cand.join(F.broadcast(qv), "query_id")
@@ -1225,8 +1190,6 @@ def ivf_residuals(
     df: DataFrame,
     assign: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, bucket, resid): each vector minus its coarse centroid.
 
@@ -1241,19 +1204,19 @@ def ivf_residuals(
     (kmeans_buckets), and double subtraction is exact IEEE, so the
     residuals are bit-identical to the DuckDB twin's
     list_transform(range(...), i -> v[i] - cv[i])."""
-    cent = centroids.select("bucket", F.col(vec_col).alias("_cv"))
+    cent = centroids.select("bucket", F.col("embedding").alias("_cv"))
     return (
         df.select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_dv"),
+            F.col("vec_id"),
+            F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("_dv"),
         )
         # shuffle_hash: the vector side is wide-array rows, the known
         # bimodally-slow sort-merge shape; both sides grow with the
         # corpus so broadcast is wrong at scale
-        .join(assign.select(id_col, "bucket").hint("shuffle_hash"), id_col)
+        .join(assign.select("vec_id", "bucket").hint("shuffle_hash"), "vec_id")
         .join(F.broadcast(cent), "bucket")
         .select(
-            id_col,
+            "vec_id",
             "bucket",
             F.zip_with("_dv", "_cv", lambda a, b: a - b).alias("resid"),
         )
@@ -1268,8 +1231,6 @@ def ivfpq_index(
     n_codes: int = 8,
     pq_iters: int = 2,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Build the IVFADC index: coarse k-means buckets, then a PQ
     codebook trained on the RESIDUALS (vector - coarse centroid),
@@ -1282,7 +1243,7 @@ def ivfpq_index(
     kmeans_buckets Lloyd chain plus pq_codebooks' per-iteration
     broadcast-join passes — all corpus-parallel, nothing quadratic."""
     _, cent = kmeans_buckets(
-        corpus, k=n_coarse, iters=coarse_iters, id_col=id_col, vec_col=vec_col
+        corpus, k=n_coarse, iters=coarse_iters
     )
     # assign against the FINAL (recomputed) centroids, not the Lloyd
     # chain's last in-loop assignment (which was made vs the previous
@@ -1291,19 +1252,18 @@ def ivfpq_index(
     # so batch-built and incrementally-built indexes agree exactly
     # (pinned in tests/test_ivf_maintenance.py)
     assign = assign_ivf_bucket(
-        corpus.select(id_col, vec_col), cent, id_col=id_col, vec_col=vec_col
-    ).select(id_col, "bucket")
-    res = ivf_residuals(corpus, assign, cent, id_col=id_col, vec_col=vec_col)
+        corpus.select("vec_id", "embedding"), cent
+    ).select("vec_id", "bucket")
+    res = ivf_residuals(corpus, assign, cent)
     cb = pq_codebooks(
-        res, n_sub=n_sub, n_codes=n_codes, iters=pq_iters, dim=dim,
-        id_col=id_col, vec_col="resid",
+        res, n_sub=n_sub, n_codes=n_codes, iters=pq_iters, dim=dim, vec_col="resid",
     )
-    codes = pq_encode(res, cb, n_sub=n_sub, dim=dim, id_col=id_col, vec_col="resid")
+    codes = pq_encode(res, cb, n_sub=n_sub, dim=dim, vec_col="resid")
     # shuffle_hash: both sides are corpus-sized (codes + bucket ids),
     # so broadcast is wrong at scale and sort-merge pays a pointless
     # double sort on an id key we only need to hash-partition
     return (
-        codes.join(res.select(id_col, "bucket").hint("shuffle_hash"), id_col),
+        codes.join(res.select("vec_id", "bucket").hint("shuffle_hash"), "vec_id"),
         cent,
         cb,
     )
@@ -1320,8 +1280,6 @@ def ivfpq_search_topk(
     n_probe: int = 2,
     n_sub: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVFADC search — the production 100 TB ANN shape (IVF coarse
     pruning x PQ compressed-domain scan x exact re-rank), replacing
@@ -1348,10 +1306,10 @@ def ivfpq_search_topk(
     LUTs are value-keyed maps (the pq_adc_topk code-gap rule).
     Output: (query_id, neighbor_id, dist_micro, rank)."""
     d_sub = dim // n_sub
-    cent = centroids.select("bucket", F.col(vec_col).alias("_cv"))
+    cent = centroids.select("bucket", F.col("embedding").alias("_cv"))
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_qv"),
+        F.col("vec_id").alias("query_id"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("_qv"),
     )
     probe_w = Window.partitionBy("query_id").orderBy(
         F.col("cent_sim").desc(), F.col("bucket").asc()
@@ -1396,7 +1354,7 @@ def ivfpq_search_topk(
         )
     )
     scored = (
-        codes.withColumnRenamed(id_col, "neighbor_id")
+        codes.withColumnRenamed("vec_id", "neighbor_id")
         .join(F.broadcast(luts), "bucket")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
@@ -1420,7 +1378,7 @@ def ivfpq_search_topk(
         .filter(F.col("_rk") <= shortlist)
         .select("query_id", "neighbor_id")
     )
-    return _exact_rerank(cand, queries, corpus, k, id_col, vec_col)
+    return _exact_rerank(cand, queries, corpus, k)
 
 
 def tfidf_cosine_postings(

@@ -34,6 +34,11 @@ from pyspark.sql import functions as F
 
 from umn_eda_kafka_stream_processing_spark.functions.scalar import round_half_up
 
+# md5 salts shared by each Spark sketch and its DuckDB ``duck_*`` twin
+_KMV_SALT = "kmv"
+_HLL_SALT = "hll"
+_CMS_SALT = "cms"
+
 _ALPHA_EXPR = "0.7213 / (1.0 + 1.079 / 256.0)"  # alpha_m for m=256
 _M = 256
 # 2^(33-rho) keeps every register term an exact integer (rho <= 33)
@@ -52,11 +57,7 @@ def _h(col: str, salt: str) -> Column:
 
 
 def kmv_distinct_per_group(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    k: int = 64,
-    salt: str = "kmv",
+    df: DataFrame, group_col: str, key_col: str, k: int = 64
 ) -> DataFrame:
     """Per-group distinct-count estimate from the k smallest hashes.
 
@@ -69,7 +70,7 @@ def kmv_distinct_per_group(
 
     hashed = df.select(
         F.col(group_col).alias("g"),
-        F.conv(F.substring(_h(key_col, salt), 1, 8), 16, 10).cast("long").alias("v"),
+        F.conv(F.substring(_h(key_col, _KMV_SALT), 1, 8), 16, 10).cast("long").alias("v"),
     ).distinct()
     w = Window.partitionBy("g").orderBy(F.col("v").asc())
     kept = hashed.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
@@ -85,13 +86,12 @@ def kmv_distinct_per_group(
     )
 
 
-def duck_kmv(table_expr: str, group_col: str, key_col: str, k: int = 64,
-             salt: str = "kmv") -> str:
+def duck_kmv(table_expr: str, group_col: str, key_col: str, k: int = 64) -> str:
     """DuckDB twin of kmv_distinct_per_group (same output columns)."""
     return f"""
     WITH hashed AS (
       SELECT DISTINCT {group_col} AS g,
-             cast(concat('0x', substr(md5(concat('{salt}|', cast({key_col} as varchar))), 1, 8)) as bigint) AS v
+             cast(concat('0x', substr(md5(concat('{_KMV_SALT}|', cast({key_col} as varchar))), 1, 8)) as bigint) AS v
       FROM {table_expr}
     ), ranked AS (
       SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn
@@ -122,9 +122,7 @@ def _rho_expr(h32: str) -> str:
     )
 
 
-def hll_registers(
-    df: DataFrame, group_col: str, key_col: str, salt: str = "hll"
-) -> DataFrame:
+def hll_registers(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
     """Per-group HLL register table (g, bucket, r): one hash-agg to
     <= m=256 rows per group, r = max leading-zero rank. Registers
     are pure md5 functions, MERGEABLE by max(r) across partitions,
@@ -132,8 +130,8 @@ def hll_registers(
     HLL is built on."""
     hashed = df.select(
         F.col(group_col).alias("g"),
-        F.substring(_h(key_col, salt), 1, 2).alias("bucket"),
-        F.expr(_rho_expr(f"substr(md5(concat('{salt}|', cast({key_col} as string))), 3, 8)"))
+        F.substring(_h(key_col, _HLL_SALT), 1, 2).alias("bucket"),
+        F.expr(_rho_expr(f"substr(md5(concat('{_HLL_SALT}|', cast({key_col} as string))), 3, 8)"))
         .alias("rho"),
     )
     return hashed.groupBy("g", "bucket").agg(F.max("rho").alias("r"))
@@ -168,12 +166,7 @@ def hll_estimate_from_registers(regs: DataFrame, group_col: str) -> DataFrame:
     )
 
 
-def hll_sketch_per_group(
-    df: DataFrame,
-    group_col: str,
-    key_col: str,
-    salt: str = "hll",
-) -> DataFrame:
+def hll_sketch_per_group(df: DataFrame, group_col: str, key_col: str) -> DataFrame:
     """Per-group HLL (m=256): one shuffle to (group, bucket) registers,
     one to the group — both hash-aggs with tiny state.
 
@@ -185,7 +178,7 @@ def hll_sketch_per_group(
     (`merge_hll`) share one arithmetic by construction.
     """
     return hll_estimate_from_registers(
-        hll_registers(df, group_col, key_col, salt), group_col
+        hll_registers(df, group_col, key_col), group_col
     )
 
 
@@ -198,13 +191,13 @@ def merge_hll(regs: DataFrame) -> DataFrame:
     return regs.groupBy("g", "bucket").agg(F.max("r").alias("r"))
 
 
-def duck_hll(table_expr: str, group_col: str, key_col: str, salt: str = "hll") -> str:
+def duck_hll(table_expr: str, group_col: str, key_col: str) -> str:
     """DuckDB twin of hll_sketch_per_group (same output columns)."""
-    rho = _rho_expr(f"substr(md5(concat('{salt}|', cast({key_col} as varchar))), 3, 8)")
+    rho = _rho_expr(f"substr(md5(concat('{_HLL_SALT}|', cast({key_col} as varchar))), 3, 8)")
     return f"""
     WITH hashed AS (
       SELECT {group_col} AS g,
-             substr(md5(concat('{salt}|', cast({key_col} as varchar))), 1, 2) AS bucket,
+             substr(md5(concat('{_HLL_SALT}|', cast({key_col} as varchar))), 1, 2) AS bucket,
              {rho} AS rho
       FROM {table_expr}
     ), regs AS (
@@ -232,17 +225,15 @@ _CMS_D = 4      # hash rows
 _CMS_W = 256    # buckets per row
 
 
-def _cms_bucket(col: str, row: int, salt: str) -> Column:
-    """Row-``row`` bucket: first 32 md5 bits of 'salt|row|key' mod w."""
-    h = F.md5(F.concat(F.lit(f"{salt}|{row}|"), F.col(col).cast("string")))
+def _cms_bucket(col: str, row: int) -> Column:
+    """Row-``row`` bucket: first 32 md5 bits of 'cms|row|key' mod w."""
+    h = F.md5(F.concat(F.lit(f"{_CMS_SALT}|{row}|"), F.col(col).cast("string")))
     return (
         F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % _CMS_W
     ).alias(f"b{row}")
 
 
-def cms_registers(
-    df: DataFrame, key_col: str, salt: str = "cms"
-) -> DataFrame:
+def cms_registers(df: DataFrame, key_col: str) -> DataFrame:
     """Count-Min register table: d x w = 4 x 256 counters.
 
     One explode (x4) + one hash-agg -> at most 1024 rows regardless of
@@ -259,7 +250,7 @@ def cms_registers(
     <=1024 rows before the only shuffle.
     """
     rows = df.select(
-        *[_cms_bucket(key_col, r, salt) for r in range(_CMS_D)]
+        *[_cms_bucket(key_col, r) for r in range(_CMS_D)]
     )
     stacked = rows.select(
         F.explode(
@@ -274,9 +265,7 @@ def cms_registers(
     )
 
 
-def cms_estimate(
-    registers: DataFrame, keys: DataFrame, key_col: str, salt: str = "cms"
-) -> DataFrame:
+def cms_estimate(registers: DataFrame, keys: DataFrame, key_col: str) -> DataFrame:
     """Point-query the sketch: est(k) = min over rows of register[h_r(k)].
 
     Guarantees est >= true count (collisions only ADD); expected
@@ -285,7 +274,7 @@ def cms_estimate(
     rows — always broadcast.
     """
     probes = keys.select(
-        key_col, *[_cms_bucket(key_col, r, salt) for r in range(_CMS_D)]
+        key_col, *[_cms_bucket(key_col, r) for r in range(_CMS_D)]
     )
     est = None
     for r in range(_CMS_D):
@@ -414,14 +403,14 @@ def merge_cms(regs: DataFrame) -> DataFrame:
     return regs.groupBy("row", "bucket").agg(F.sum("cnt").cast("long").alias("cnt"))
 
 
-def duck_cms(table_expr: str, key_col: str, salt: str = "cms") -> str:
+def duck_cms(table_expr: str, key_col: str) -> str:
     """DuckDB twin: registers + per-key min-probe in one query.
 
     Returns (key, cms_est) for every distinct key in ``table_expr``.
     """
     def bucket(row: int, col: str) -> str:
         return (
-            f"cast(concat('0x', substr(md5(concat('{salt}|{row}|', "
+            f"cast(concat('0x', substr(md5(concat('{_CMS_SALT}|{row}|', "
             f"cast({col} as varchar))), 1, 8)) as bigint) % {_CMS_W}"
         )
 

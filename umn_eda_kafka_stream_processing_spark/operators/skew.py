@@ -46,7 +46,6 @@ def salted_grouped_count(
     group_cols: str | Sequence[str],
     salt_buckets: int = 16,
     salt_cols: Sequence[str] | None = None,
-    count_name: str = "count",
 ) -> DataFrame:
     """groupBy(...).count() with a salted first stage; identical
     result, hot keys spread over ``salt_buckets`` reducers."""
@@ -56,7 +55,7 @@ def salted_grouped_count(
         .groupBy(*keys, "_salt")
         .agg(F.count(F.lit(1)).alias("_partial"))
     )
-    return partial.groupBy(*keys).agg(F.sum("_partial").alias(count_name))
+    return partial.groupBy(*keys).agg(F.sum("_partial").alias("count"))
 
 
 _LEFT_PRESERVING = frozenset(

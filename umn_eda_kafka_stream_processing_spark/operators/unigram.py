@@ -60,16 +60,14 @@ from umn_eda_kafka_stream_processing_spark.operators.bpe import word_freqs
 INF_COST = 10**15
 
 
-def candidate_pieces(
-    words: DataFrame, max_piece_len: int = 4
-) -> DataFrame:
-    """(piece, freq): every substring of length 1..max_piece_len of
+def candidate_pieces(words: DataFrame) -> DataFrame:
+    """(piece, freq): every substring of length 1..4 of
     every word, weighted by word frequency. One explode + one
     hash-agg with map-side partials."""
     pieces = F.explode(
         F.expr(
             "flatten(transform(sequence(1, length(word)), i -> "
-            f"transform(sequence(1, least({max_piece_len}, "
+            "transform(sequence(1, least(4, "
             "length(word) - i + 1)), j -> substring(word, i, j))))"
         )
     )
@@ -215,11 +213,7 @@ def encode_any_words(
 
 def train_unigram_model(
     df: DataFrame,
-    text_col: str = "text",
-    max_word_len: int = 12,
-    max_piece_len: int = 4,
     k_cand: int = 200,
-    em_rounds: int = 2,
 ) -> tuple[dict[str, int], dict[str, int]]:
     """Run the EM loop; returns ({piece: cost_micros}, {piece:
     usage}) for the retained set after the final round — the model a
@@ -227,11 +221,11 @@ def train_unigram_model(
     from umn_eda_kafka_stream_processing_spark.operators.core import global_topk
 
     wf = (
-        word_freqs(df, text_col)
-        .filter(F.length("word") <= max_word_len)
+        word_freqs(df)
+        .filter(F.length("word") <= 12)
         .localCheckpoint()  # reused by every EM round
     )
-    cand = candidate_pieces(wf, max_piece_len)
+    cand = candidate_pieces(wf)
     vocab = (
         global_topk(cand, [("freq", False), ("piece", True)], k_cand)
         .select("piece", "freq")
@@ -249,8 +243,8 @@ def train_unigram_model(
     model = {r["piece"]: int(r["cost"]) for r in model_rows}
 
     usage = None
-    for _ in range(em_rounds):
-        seg = viterbi_segment(wf, model, max_word_len, max_piece_len)
+    for _ in range(2):
+        seg = viterbi_segment(wf, model)
         usage = (
             seg.select("freq", F.explode("pieces").alias("piece"))
             .groupBy("piece")
@@ -283,22 +277,16 @@ def train_unigram_model(
 
 def train_unigram(
     df: DataFrame,
-    text_col: str = "text",
-    max_word_len: int = 12,
-    max_piece_len: int = 4,
     k_cand: int = 200,
     v_final: int = 120,
-    em_rounds: int = 2,
 ) -> DataFrame:
     """Train the unigram vocab; returns (rank, piece, usage,
-    cost_micros) — the top ``v_final`` pieces after ``em_rounds`` of
+    cost_micros) — the top ``v_final`` pieces after 2 rounds of
     hard EM, ranked by (usage DESC, piece ASC)."""
     from umn_eda_kafka_stream_processing_spark.operators.core import global_topk
 
     spark = df.sparkSession
-    model, usage = train_unigram_model(
-        df, text_col, max_word_len, max_piece_len, k_cand, em_rounds
-    )
+    model, usage = train_unigram_model(df, k_cand)
     final = spark.createDataFrame(
         [(p, usage[p], model[p]) for p in sorted(model)],
         "piece string, usage long, cost_micros long",
@@ -310,11 +298,8 @@ def train_unigram(
 
 def reference_train_unigram(
     texts: list[str],
-    max_word_len: int = 12,
-    max_piece_len: int = 4,
     k_cand: int = 200,
     v_final: int = 120,
-    em_rounds: int = 2,
 ) -> list[tuple[int, str, int, int]]:
     """Pure-Python reference of the SAME algorithm (differential-test
     twin; math.log in place of Spark's java log — the 6 dp
@@ -325,12 +310,12 @@ def reference_train_unigram(
     wf: Counter = Counter()
     for t in texts:
         for w in t.strip().lower().split():
-            if 1 <= len(w) <= max_word_len:
+            if 1 <= len(w) <= 12:
                 wf[w] += 1
     cand: Counter = Counter()
     for w, f in wf.items():
         for i in range(len(w)):
-            for j in range(1, min(max_piece_len, len(w) - i) + 1):
+            for j in range(1, min(4, len(w) - i) + 1):
                 cand[w[i : i + j]] += f
     top = sorted(cand.items(), key=lambda kv: (-kv[1], kv[0]))[:k_cand]
     vocab = {p for p, _ in top} | {p for p in cand if len(p) == 1}
@@ -346,7 +331,7 @@ def reference_train_unigram(
         bs = [0] * (len(w) + 1)
         for i in range(1, len(w) + 1):
             best, bj = INF_COST * 13, 0
-            for j in range(1, min(max_piece_len, i) + 1):
+            for j in range(1, min(4, i) + 1):
                 c = cs[i - j] + model.get(w[i - j : i], INF_COST)
                 if c < best:
                     best, bj = c, j
@@ -358,7 +343,7 @@ def reference_train_unigram(
         return pieces[::-1]
 
     usage: dict[str, int] = {}
-    for _ in range(em_rounds):
+    for _ in range(2):
         use: Counter = Counter()
         for w, f in wf.items():
             for p in viterbi(w):

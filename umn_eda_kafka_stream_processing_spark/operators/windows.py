@@ -42,16 +42,14 @@ def tumbling_agg(
     time_col: str | Column,
     duration: str,
     group_cols: Sequence[str] = (),
-    aggs: Sequence[Column] = (),
 ) -> DataFrame:
     """Fixed non-overlapping windows: one row per (window, groups).
     Output includes window_start/window_end columns."""
     tc = F.col(time_col) if isinstance(time_col, str) else time_col
     w = F.window(tc, duration)
-    aggs = list(aggs) or [F.count(F.lit(1)).alias("count")]
     return (
         df.groupBy(w.alias("w"), *group_cols)
-        .agg(*aggs)
+        .agg(F.count(F.lit(1)).alias("count"))
         .withColumn("window_start", F.col("w.start"))
         .withColumn("window_end", F.col("w.end"))
         .drop("w")
@@ -64,16 +62,14 @@ def sliding_agg(
     duration: str,
     slide: str,
     group_cols: Sequence[str] = (),
-    aggs: Sequence[Column] = (),
 ) -> DataFrame:
     """Overlapping windows of ``duration`` every ``slide``: each event
     lands in duration/slide windows (Spark expands them map-side)."""
     tc = F.col(time_col) if isinstance(time_col, str) else time_col
     w = F.window(tc, duration, slide)
-    aggs = list(aggs) or [F.count(F.lit(1)).alias("count")]
     return (
         df.groupBy(w.alias("w"), *group_cols)
-        .agg(*aggs)
+        .agg(F.count(F.lit(1)).alias("count"))
         .withColumn("window_start", F.col("w.start"))
         .withColumn("window_end", F.col("w.end"))
         .drop("w")
@@ -85,16 +81,14 @@ def session_agg(
     time_col: str | Column,
     gap: str,
     group_cols: Sequence[str] = (),
-    aggs: Sequence[Column] = (),
 ) -> DataFrame:
     """Session windows: events of a group closer than ``gap`` merge
     into one session [first_event, last_event + gap)."""
     tc = F.col(time_col) if isinstance(time_col, str) else time_col
     w = F.session_window(tc, gap)
-    aggs = list(aggs) or [F.count(F.lit(1)).alias("count")]
     return (
         df.groupBy(w.alias("w"), *group_cols)
-        .agg(*aggs)
+        .agg(F.count(F.lit(1)).alias("count"))
         .withColumn("session_start", F.col("w.start"))
         .withColumn("session_end", F.col("w.end"))
         .drop("w")
@@ -112,9 +106,6 @@ def with_watermark(df: DataFrame, time_col: str, delay: str) -> DataFrame:
 def funnel_steps(
     events: DataFrame,
     steps: Sequence[str],
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
     window: str | None = "7 days",
 ) -> DataFrame:
     """Ordered-funnel analysis (earliest-completion semantics): for
@@ -133,15 +124,15 @@ def funnel_steps(
     step-k/step-k+1 events NOT chain — deterministic and identical in
     any engine (no tie-break needed because min() is used per side).
     """
-    tc = event_ts(ts_col)
+    tc = event_ts("ts")
     frontier = (
-        events.where(F.col(type_col) == steps[0])
-        .groupBy(user_col)
+        events.where(F.col("event_type") == steps[0])
+        .groupBy("user_id")
         .agg(F.min(tc).alias("t1"))
     )
     for k, step in enumerate(steps[1:], start=2):
-        nxt = events.where(F.col(type_col) == step).select(
-            user_col, tc.alias("_ts")
+        nxt = events.where(F.col("event_type") == step).select(
+            "user_id", tc.alias("_ts")
         )
         cond = F.col("_ts") > F.col(f"t{k - 1}")
         if window is not None:
@@ -149,24 +140,18 @@ def funnel_steps(
                 F.col("_ts") <= F.col("t1") + F.expr(f"INTERVAL {window}")
             )
         reach = (
-            frontier.join(nxt.hint("shuffle_hash"), user_col)
+            frontier.join(nxt.hint("shuffle_hash"), "user_id")
             .where(cond)
-            .groupBy(user_col)
+            .groupBy("user_id")
             .agg(F.min("_ts").alias(f"t{k}"))
         )
         frontier = frontier.join(
-            reach.hint("shuffle_hash"), user_col, "left"
+            reach.hint("shuffle_hash"), "user_id", "left"
         )
     return frontier
 
 
-def transition_counts(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    order_cols: Sequence[str] = ("event_id",),
-) -> DataFrame:
+def transition_counts(events: DataFrame) -> DataFrame:
     """First-order Markov transition matrix of the per-user event
     sequence: count (from_type -> to_type) over consecutive event
     pairs, plus ``prob_micro`` — the row-normalized transition
@@ -176,20 +161,20 @@ def transition_counts(
 
     One lag() window partitioned BY USER (the scd2_intervals shape —
     per-key frames, never corpus-wide), ties broken by
-    ``order_cols``; then two hash-aggs (pair counts + a from_type
+    ``event_id``; then two hash-aggs (pair counts + a from_type
     window sum over the already-aggregated matrix, which is
     #types² rows — trivially partition-local).
     """
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(user_col).orderBy(
-        event_ts(ts_col).asc(), *[F.col(c).asc() for c in order_cols]
+    w = Window.partitionBy("user_id").orderBy(
+        event_ts("ts").asc(), F.col("event_id").asc()
     )
     pairs = (
-        events.withColumn("_next", F.lead(type_col).over(w))
+        events.withColumn("_next", F.lead("event_type").over(w))
         .where(F.col("_next").isNotNull())
         .groupBy(
-            F.col(type_col).alias("from_type"),
+            F.col("event_type").alias("from_type"),
             F.col("_next").alias("to_type"),
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -241,9 +226,6 @@ def incremental_funnel(
     store_path: str,
     steps: Sequence[str],
     batch_seq: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
     window: str | None = "7 days",
     n_buckets: int = 32,
 ) -> DataFrame:
@@ -274,19 +256,19 @@ def incremental_funnel(
     from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     spark = batch_df.sparkSession
-    store = SnapshotStore(spark, store_path, user_col, "_fb", n_buckets=n_buckets)
+    store = SnapshotStore(spark, store_path, "user_id", "_fb", n_buckets=n_buckets)
     tcols = [f"t{k}" for k in range(1, len(steps) + 1)]
     ev = batch_df.select(
-        user_col, F.col(type_col).alias("_et"), event_ts(ts_col).alias("_ts")
+        "user_id", F.col("event_type").alias("_et"), event_ts("ts").alias("_ts")
     ).localCheckpoint()
-    users = ev.select(user_col).distinct()
+    users = ev.select("user_id").distinct()
 
     def step(old: DataFrame | None) -> DataFrame:
         unset = [F.lit(None).cast("timestamp_ntz").alias(t) for t in tcols]
         frontier = (
-            users.select(user_col, *unset) if old is None
-            else users.join(old.hint("shuffle_hash"), user_col, "left")
-            .select(user_col, *tcols)
+            users.select("user_id", *unset) if old is None
+            else users.join(old.hint("shuffle_hash"), "user_id", "left")
+            .select("user_id", *tcols)
         )
         for k, step_type in enumerate(steps, start=1):
             # Join the step's RAW batch events to the frontier and apply
@@ -295,8 +277,8 @@ def incremental_funnel(
             # broke the within-batch contract: a user with a step-k event
             # before t_{k-1} and another after it had their batch min fail
             # the strict > test and the reach dropped forever (set-once).
-            step_ev = ev.where(F.col("_et") == step_type).select(user_col, "_ts")
-            j = frontier.join(step_ev.hint("shuffle_hash"), user_col, "left")
+            step_ev = ev.where(F.col("_et") == step_type).select("user_id", "_ts")
+            j = frontier.join(step_ev.hint("shuffle_hash"), "user_id", "left")
             if k == 1:
                 # least() skips NULLs, so an unset store t1 takes the min
                 new_t = F.least(F.max("t1"), F.min("_ts"))
@@ -317,12 +299,12 @@ def incremental_funnel(
             # max() re-materializes them through the single hash-agg, so
             # each step costs exactly one join + one agg (no self-join of
             # the frontier — the AMBIGUOUS_REFERENCE trap).
-            frontier = j.groupBy(user_col).agg(
+            frontier = j.groupBy("user_id").agg(
                 *[F.max(t).alias(t) for t in tcols[: k - 1]],
                 new_t.alias(f"t{k}"),
                 *[F.max(t).alias(t) for t in tcols[k:]],
             )
-        return frontier.select(user_col, *tcols)
+        return frontier.select("user_id", *tcols)
 
     return store.advance(step, batch_seq, near=users)
 
@@ -331,10 +313,6 @@ def incremental_transitions(
     batch_df: DataFrame,
     store_path: str,
     batch_seq: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    order_cols: Sequence[str] = ("event_id",),
     n_buckets: int = 32,
 ) -> DataFrame:
     """Markov transition pairs over a CONTINUOUS event stream — the
@@ -345,7 +323,7 @@ def incremental_transitions(
     store. Summing the emitted pair counts over all batches equals
     `transition_counts` over the full history (the incremental ==
     batch contract, pinned by the streaming test) when event order
-    (ts, *order_cols) is non-decreasing across batches per user.
+    (ts, event_id) is non-decreasing across batches per user.
 
     Per batch: one per-user lag window WITHIN the batch (per-key
     frames, never corpus-wide) and one `SnapshotStore.advance` — a
@@ -364,18 +342,15 @@ def incremental_transitions(
     from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     spark = batch_df.sparkSession
-    store = SnapshotStore(spark, store_path, user_col, "_fb", n_buckets=n_buckets)
+    store = SnapshotStore(spark, store_path, "user_id", "_fb", n_buckets=n_buckets)
     ev = batch_df.select(
-        user_col,
-        F.col(type_col).alias("_et"),
-        event_ts(ts_col).alias("_ts"),
-        *[F.col(c).alias(f"_o{i}") for i, c in enumerate(order_cols)],
+        "user_id",
+        F.col("event_type").alias("_et"),
+        event_ts("ts").alias("_ts"),
+        F.col("event_id").alias("_o0"),
     ).localCheckpoint()
-    okeys = [f"_o{i}" for i in range(len(order_cols))]
-    order = F.struct("_ts", *okeys)
-    w = Window.partitionBy(user_col).orderBy(
-        F.col("_ts").asc(), *[F.col(c).asc() for c in okeys]
-    )
+    order = F.struct("_ts", "_o0")
+    w = Window.partitionBy("user_id").orderBy(F.col("_ts").asc(), F.col("_o0").asc())
     within = (
         ev.withColumn("_prev", F.lag("_et").over(w))
         .where(F.col("_prev").isNotNull())
@@ -384,10 +359,10 @@ def incremental_transitions(
     # per-user first and last event by (ts, *order); arrival is
     # non-decreasing across batches, so the batch's last IS the global
     # last
-    ends = ev.groupBy(user_col).agg(
+    ends = ev.groupBy("user_id").agg(
         F.min_by("_et", order).alias("_et"), F.max_by("_et", order).alias("last_type")
     )
-    firsts, lasts = ends.select(user_col, "_et"), ends.select(user_col, "last_type")
+    firsts, lasts = ends.select("user_id", "_et"), ends.select("user_id", "last_type")
 
     def step(old: DataFrame | None) -> tuple[DataFrame, DataFrame]:
         pairs = within
@@ -395,13 +370,13 @@ def incremental_transitions(
         if old is not None:
             own = F.col(store.order) == F.lit(int(batch_seq))
             before = old.select(
-                user_col,
+                "user_id",
                 F.when(own, F.col("prev_type"))
                 .otherwise(F.col("last_type"))
                 .alias("prev_type"),
             )
             boundary = (
-                firsts.join(before.hint("shuffle_hash"), user_col)
+                firsts.join(before.hint("shuffle_hash"), "user_id")
                 .where(F.col("prev_type").isNotNull())
                 .select(
                     F.col("prev_type").alias("from_type"),
@@ -409,7 +384,7 @@ def incremental_transitions(
                 )
             )
             pairs = within.union(boundary)
-            rows = lasts.join(before, user_col, "left")
+            rows = lasts.join(before, "user_id", "left")
         out = pairs.groupBy("from_type", "to_type").agg(
             F.count(F.lit(1)).cast("long").alias("n")
         )
@@ -422,8 +397,6 @@ def incremental_retention(
     batch_df: DataFrame,
     store_path: str,
     batch_seq: int,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     n_buckets: int = 32,
 ) -> DataFrame:
     """Continuously-maintained weekly retention cohorts — the
@@ -453,14 +426,14 @@ def incremental_retention(
     from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
     spark = batch_df.sparkSession
-    store = SnapshotStore(spark, store_path, user_col, "_fb", n_buckets=n_buckets)
+    store = SnapshotStore(spark, store_path, "user_id", "_fb", n_buckets=n_buckets)
     uw = (
         batch_df.select(
-            user_col,
-            F.date_trunc("week", event_ts(ts_col)).cast("date").alias("wk"),
+            "user_id",
+            F.date_trunc("week", event_ts("ts")).cast("date").alias("wk"),
         )
         .distinct()
-        .groupBy(user_col)
+        .groupBy("user_id")
         .agg(
             F.min("wk").alias("_bcw"),
             F.collect_set("wk").alias("_bwks"),
@@ -475,10 +448,10 @@ def incremental_retention(
             )
         else:
             prior = uw.join(
-                old.select(user_col, "cw", "weeks").hint("shuffle_hash"), user_col, "left"
+                old.select("user_id", "cw", "weeks").hint("shuffle_hash"), "user_id", "left"
             )
         return prior.select(
-            user_col,
+            "user_id",
             # least() skips NULLs, so an unset store cw takes the batch min
             F.coalesce(
                 F.least(F.col("cw"), F.col("_bcw")), F.col("cw"), F.col("_bcw")

@@ -43,10 +43,10 @@ from umn_eda_kafka_stream_processing_spark.operators.core import (
 
 
 def _topk_counts(
-    counted: DataFrame, group_cols: list[str], name_col: str, k: int
+    counted: DataFrame, group_cols: list[str], name_col: str
 ) -> DataFrame:
     order: list[Column] = [F.col("count").desc(), F.col(name_col).asc()]
-    return grouped_topk(counted, group_cols, order, k)
+    return grouped_topk(counted, group_cols, order, 3)
 
 
 def customer_stream_count(streams: DataFrame) -> DataFrame:
@@ -105,15 +105,15 @@ def address_sort_and_stringify(addresses: DataFrame) -> tuple[DataFrame, DataFra
     return mn, other
 
 
-def top_customer_artists(streams: DataFrame, k: int = 3) -> DataFrame:
-    """Top-k most-streamed artists per customer.
+def top_customer_artists(streams: DataFrame) -> DataFrame:
+    """Top-3 most-streamed artists per customer.
 
     reference: samples/TopCustomerArtists.java:58-90 — groupBy
     customerid, count per artistid in a SortedCounterMap, emit top(3).
-    Output: (customerid, artistid, count, rank), rank 1..k.
+    Output: (customerid, artistid, count, rank), rank 1..3.
     """
     counts = grouped_count(streams, ["customerid", "artistid"])
-    return _topk_counts(counts, ["customerid"], "artistid", k)
+    return _topk_counts(counts, ["customerid"], "artistid")
 
 
 def top_streaming_artist_by_state(
@@ -223,9 +223,9 @@ def tickets_with_genre(
 
 
 def top_selling_genre_by_venue(
-    tickets: DataFrame, events: DataFrame, artists: DataFrame, k: int = 3
+    tickets: DataFrame, events: DataFrame, artists: DataFrame
 ) -> DataFrame:
-    """Top-k ticket-selling genres per venue.
+    """Top-3 ticket-selling genres per venue.
 
     reference: phase3/TopSellingGenreByVenue.java:60-177 — events ⋈
     artists → EventArtist table; tickets ⋈ eventArtist; per-venue
@@ -234,7 +234,7 @@ def top_selling_genre_by_venue(
     """
     enriched = tickets_with_genre(tickets, events, artists)
     counts = grouped_count(enriched, ["venueid", "genre"])
-    return _topk_counts(counts, ["venueid"], "genre", k)
+    return _topk_counts(counts, ["venueid"], "genre")
 
 
 def tickets_with_capacity(tickets: DataFrame, events: DataFrame) -> DataFrame:

@@ -41,7 +41,7 @@ def customers_by_top_artist(streams: DataFrame) -> DataFrame:
     )
 
 
-def _capacity_alerts(requested: DataFrame, alert_pct: float) -> DataFrame:
+def _capacity_alerts(requested: DataFrame) -> DataFrame:
     """Shared alert projection over a (eventid, capacity, requested)
     frame — one definition of the threshold semantics for the batch
     and streaming twins."""
@@ -54,18 +54,16 @@ def _capacity_alerts(requested: DataFrame, alert_pct: float) -> DataFrame:
     ).withColumn(
         "alert",
         F.when(F.col("requested") >= F.col("capacity"), F.lit("sold-out"))
-        .when(F.col("remaining_pct") <= alert_pct, F.lit("near-capacity")),
+        .when(F.col("remaining_pct") <= 10.0, F.lit("near-capacity")),
     )
     return status.filter(F.col("alert").isNotNull()).select(
         "eventid", "capacity", "requested", "remaining_pct", "alert"
     )
 
 
-def sold_out_event_alerts(
-    tickets: DataFrame, events: DataFrame, alert_pct: float = 10.0
-) -> DataFrame:
+def sold_out_event_alerts(tickets: DataFrame, events: DataFrame) -> DataFrame:
     """Capacity alerts per event: 'sold-out' when requested >=
-    capacity, else 'near-capacity' when remaining <= ``alert_pct``%
+    capacity, else 'near-capacity' when remaining <= 10%
     (reference: readme.md "SOLD OUT EVENT": alert within 10% of max
     capacity; alert when sold out).
     Output: (eventid, capacity, requested, remaining_pct, alert)."""
@@ -75,19 +73,19 @@ def sold_out_event_alerts(
     requested = grouped_count(tickets, "eventid", "requested").join(
         F.broadcast(events_tbl), "eventid", "inner"
     )
-    return _capacity_alerts(requested, alert_pct)
+    return _capacity_alerts(requested)
 
 
-def must_see_venue_by_events(events: DataFrame, k: int = 1) -> DataFrame:
+def must_see_venue_by_events(events: DataFrame) -> DataFrame:
     """Venue(s) hosting the most events
     (reference: readme.md "MUST SEE VENUE" goal 1).
     Output: (venueid, n_events, rank)."""
     counts = grouped_count(latest_by_key(events, "id"), "venueid", "n_events")
-    return global_topk(counts, [("n_events", False), ("venueid", True)], k)
+    return global_topk(counts, [("n_events", False), ("venueid", True)], 1)
 
 
 def must_see_venue_by_customers(
-    tickets: DataFrame, events: DataFrame, k: int = 1
+    tickets: DataFrame, events: DataFrame
 ) -> DataFrame:
     """Venue(s) hosting the most distinct ticket-holding customers
     (reference: readme.md "MUST SEE VENUE" goal 2).
@@ -101,7 +99,7 @@ def must_see_venue_by_customers(
         .groupBy("venueid")
         .agg(F.count_distinct("customerid").alias("n_customers"))
     )
-    return global_topk(per_venue, [("n_customers", False), ("venueid", True)], k)
+    return global_topk(per_venue, [("n_customers", False), ("venueid", True)], 1)
 
 
 def suggested_events_by_genre(
@@ -172,10 +170,8 @@ def event_artist_top_streamer_alerts(
     )
 
 
-def popular_events(
-    tickets: DataFrame, events: DataFrame, popular_pct: float = 10.0
-) -> DataFrame:
-    """Event ids currently "popular": within ``popular_pct``% of max
+def popular_events(tickets: DataFrame, events: DataFrame) -> DataFrame:
+    """Event ids currently "popular": within 10% of max
     capacity, sold-out included (reference: readme.md "*popular:
     within 10% max capacity (almost sold out)").
     Output: (eventid)."""
@@ -185,7 +181,7 @@ def popular_events(
     requested = grouped_count(tickets, "eventid", "requested").join(
         F.broadcast(events_tbl), "eventid", "inner"
     )
-    return _capacity_alerts(requested, popular_pct).select("eventid")
+    return _capacity_alerts(requested).select("eventid")
 
 
 def suggested_popular_events_by_genre(
@@ -208,7 +204,6 @@ def suggested_popular_events_by_genre(
 
 def popular_event_zip_alerts(
     tickets: DataFrame, addresses: DataFrame, events: DataFrame,
-    popular_pct: float = 10.0,
 ) -> DataFrame:
     """Alert customers when customers in their zipcode are buying
     tickets to a popular event (reference: readme.md "SUGGESTED
@@ -222,7 +217,7 @@ def popular_event_zip_alerts(
     |tickets|.
     """
     addr_tbl = latest_by_key(addresses, "customerid").select("customerid", "zip5")
-    pop = popular_events(tickets, events, popular_pct)
+    pop = popular_events(tickets, events)
     buying = (
         tickets.join(F.broadcast(pop), "eventid", "leftsemi")
         .join(addr_tbl, "customerid", "inner")
@@ -278,7 +273,7 @@ def tickets_by_zip(tickets: DataFrame, addresses: DataFrame) -> DataFrame:
 
 
 def sold_out_event_alerts_stream(
-    tickets_stream: DataFrame, events: DataFrame, alert_pct: float = 10.0
+    tickets_stream: DataFrame, events: DataFrame
 ) -> DataFrame:
     """Streaming twin of sold_out_event_alerts.
 
@@ -298,4 +293,4 @@ def sold_out_event_alerts_stream(
         .groupBy("eventid", "capacity")
         .agg(F.count(F.lit(1)).alias("requested"))
     )
-    return _capacity_alerts(requested, alert_pct)
+    return _capacity_alerts(requested)

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from umn_eda_kafka_stream_processing_spark.operators.core import global_topk, grouped_count, grouped_topk
+from umn_eda_kafka_stream_processing_spark.pipelines import scenarios
 from umn_eda_kafka_stream_processing_spark.plans.registry import register as _register
 from umn_eda_kafka_stream_processing_spark.sources.parquet import load_table
 
@@ -276,16 +277,9 @@ _TOTAL_TABLES = (
     ),
 )
 def global_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    parts = [
-        load_table(spark, sf_dir, t)
-        .agg(F.count(F.lit(1)).alias("total"))
-        .select(F.lit(t).alias("entity"), "total")
-        for t in _TOTAL_TABLES
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return scenarios.global_totals(
+        **{t: load_table(spark, sf_dir, t) for t in _TOTAL_TABLES}
+    )
 
 
 @_register(

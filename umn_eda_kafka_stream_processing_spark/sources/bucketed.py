@@ -25,14 +25,11 @@ def write_bucketed(
     table: str,
     bucket_cols: str | list[str],
     num_buckets: int,
-    sort: bool = True,
 ) -> None:
     """Persist as a bucketed (and bucket-sorted) managed table."""
     cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
     writer = df.write.mode("overwrite").bucketBy(num_buckets, *cols)
-    if sort:
-        writer = writer.sortBy(*cols)
-    writer.saveAsTable(table)
+    writer.sortBy(*cols).saveAsTable(table)
 
 
 def bucketed(spark: SparkSession, table: str) -> DataFrame:

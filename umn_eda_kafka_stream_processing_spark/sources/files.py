@@ -21,12 +21,10 @@ def load_csv(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    header: bool = True,
-    sep: str = ",",
 ) -> DataFrame:
     return (
         spark.read.schema(schema)
-        .options(header=str(header).lower(), sep=sep, mode="FAILFAST")
+        .options(header="true", sep=",", mode="FAILFAST")
         .csv(path)
     )
 

@@ -47,11 +47,11 @@ def decode_json_topic(raw: DataFrame, schema: T.StructType) -> DataFrame:
     return parsed.select("key", "v.*", "event_seq")
 
 
-def encode_json_topic(df: DataFrame, key_col: str = "key") -> DataFrame:
+def encode_json_topic(df: DataFrame) -> DataFrame:
     """Typed DataFrame → Kafka wire format (key string, value JSON)."""
-    payload_cols = [c for c in df.columns if c != key_col]
+    payload_cols = [c for c in df.columns if c != "key"]
     return df.select(
-        F.col(key_col).cast("string").alias("key"),
+        F.col("key").cast("string").alias("key"),
         F.to_json(F.struct(*payload_cols)).alias("value"),
     )
 
@@ -107,7 +107,6 @@ def write_stream_topic(
     topic: str,
     bootstrap_servers: str,
     checkpoint_location: str,
-    output_mode: str = "update",
 ):
     """Start a streaming sink to a Kafka topic; returns the query.
 
@@ -120,6 +119,6 @@ def write_stream_topic(
         .option("kafka.bootstrap.servers", bootstrap_servers)
         .option("topic", topic)
         .option("checkpointLocation", checkpoint_location)
-        .outputMode(output_mode)
+        .outputMode("update")
         .start()
     )

@@ -63,7 +63,6 @@ def make_dim_changelog_batch_fn(
     dim_snapshot_path: str,
     regs_path: str,
     key_cols: str | Sequence[str],
-    sketch_key: str | None = None,
     collapse_every: int | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch callable for the DIMENSION changelog: upsert the
@@ -83,7 +82,6 @@ def make_dim_changelog_batch_fn(
     (the last — Structured Streaming's replay shape) out of the
     fold; the marker guard no-ops deeper stragglers."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    sketch_key = sketch_key or keys[0]
     dim = SnapshotStore(spark, dim_snapshot_path, keys, order="event_seq")
     regs = BatchStore(spark, regs_path, merge_cms, CMS_HORIZON)
 
@@ -104,7 +102,7 @@ def make_dim_changelog_batch_fn(
         run_concurrently(
             lambda: dim.upsert(batch_df, F.lit(int(batch_id))),
             lambda: regs.upsert(
-                batch_id, cms_registers(batch_df, sketch_key)
+                batch_id, cms_registers(batch_df, keys[0])
             ),
         )
         if collapse_every and batch_id > 0 and batch_id % collapse_every == 0:

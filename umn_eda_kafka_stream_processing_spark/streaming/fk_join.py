@@ -89,7 +89,6 @@ def start_fk_table_join(
     left_store: str,
     right_store: str,
     emit: Callable[[DataFrame, int], None],
-    order_col: str = "event_seq",
     how: str = "inner",
     checkpoint_root: str | None = None,
     n_fk_buckets: int | None = None,
@@ -177,10 +176,10 @@ def start_fk_table_join(
         stores = (
             SnapshotStore(
                 spark, left_store, left_key,
-                _BUCKET_COL if n_fk_buckets else (), order_col,
+                _BUCKET_COL if n_fk_buckets else (), "event_seq",
                 n_buckets=n_fk_buckets, bucket_on=fk_col,
             ),
-            SnapshotStore(spark, right_store, right_key, order=order_col),
+            SnapshotStore(spark, right_store, right_key, order="event_seq"),
         )
         env_df = env_df.localCheckpoint()  # read stores + write stores below
         lbatch = env_df.filter(F.col("_side") == "L").select("_l.*")

@@ -50,14 +50,13 @@ def global_lookup_join(
     facts: DataFrame,
     dim: DataFrame,
     on: str | Sequence[str],
-    how: str = "left_outer",
 ) -> DataFrame:
     """Enrich a fact (micro)batch against a global dimension with an
-    explicit broadcast — the GlobalKTable lookup join. left_outer is
-    the default to match KStream#leftJoin(GlobalKTable): a fact with
+    explicit broadcast — the GlobalKTable lookup join. left_outer
+    matches KStream#leftJoin(GlobalKTable): a fact with
     no dim row passes through with NULLs instead of vanishing."""
     keys = [on] if isinstance(on, str) else list(on)
-    return facts.join(F.broadcast(dim), keys, how)
+    return facts.join(F.broadcast(dim), keys, "left_outer")
 
 
 def start_global_table_join(
@@ -65,7 +64,6 @@ def start_global_table_join(
     snapshot_path: str,
     on: str | Sequence[str],
     emit: Callable[[DataFrame, int], None],
-    how: str = "left_outer",
     checkpoint_dir: str | None = None,
 ) -> StreamingQuery:
     """Run a streaming fact source against a continuously-maintained
@@ -81,7 +79,7 @@ def start_global_table_join(
 
     def on_batch(batch_df: DataFrame, batch_id: int) -> None:
         dim = global_table(batch_df.sparkSession, snapshot_path)
-        emit(global_lookup_join(batch_df, dim, on, how), batch_id)
+        emit(global_lookup_join(batch_df, dim, on), batch_id)
 
     return (
         stream_df.writeStream.foreachBatch(on_batch)

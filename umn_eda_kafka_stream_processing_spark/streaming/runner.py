@@ -35,13 +35,12 @@ def file_stream_source(
     spark: SparkSession,
     path: str,
     schema: T.StructType,
-    fmt: str = "parquet",
     max_files_per_trigger: int | None = 1,
 ) -> DataFrame:
     """Directory-watching streaming source; every appended file
     becomes (part of) a microbatch, giving tests deterministic
     arrival-order control (the pipeInput analogue)."""
-    reader = spark.readStream.schema(schema).format(fmt)
+    reader = spark.readStream.schema(schema).format("parquet")
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return reader.load(path)
@@ -145,7 +144,6 @@ def start_exactly_once_batch_sink(
     df: DataFrame,
     fn: Callable[[DataFrame, int], None],
     commit_dir: str,
-    output_mode: str = "update",
     checkpoint_dir: str | None = None,
 ) -> StreamingQuery:
     """`start_foreach_batch_sink` with the batch-id commit gate (see
@@ -155,7 +153,6 @@ def start_exactly_once_batch_sink(
     return start_foreach_batch_sink(
         df,
         make_idempotent_batch_fn(fn, commit_dir),
-        output_mode=output_mode,
         checkpoint_dir=checkpoint_dir,
     )
 
@@ -201,35 +198,35 @@ def make_per_record_batch_fn(
     sends every record and writes nothing.
     """
 
+    def _attempt(row: Row) -> Exception | None:
+        """Up to ``max_attempts`` sends; the last failure, or None once
+        one succeeds."""
+        err: Exception | None = None
+        for _ in range(max_attempts):
+            try:
+                send(row)
+                return None
+            except Exception as exc:  # noqa: BLE001 — sink boundary
+                err = exc
+        return err
+
     def deliver_partition(rows):
         for row in rows:
-            last_err: Exception | None = None
-            for _ in range(max_attempts):
-                try:
-                    send(row)
-                    last_err = None
-                    break
-                except Exception as exc:  # noqa: BLE001 — sink boundary
-                    last_err = exc
-            if last_err is not None:
+            err = _attempt(row)
+            if err is not None:
                 payload = json.dumps(
                     row.asDict(recursive=True), sort_keys=True, default=str
                 )
                 yield (
                     hashlib.md5(payload.encode()).hexdigest(),
                     payload,
-                    str(last_err),
+                    str(err),
                 )
 
     def deliver_or_raise(row: Row) -> None:
-        last_err: Exception | None = None
-        for _ in range(max_attempts):
-            try:
-                send(row)
-                return
-            except Exception as exc:  # noqa: BLE001 — sink boundary
-                last_err = exc
-        raise last_err
+        err = _attempt(row)
+        if err is not None:
+            raise err
 
     def batch_fn(batch_df: DataFrame, batch_id: int) -> None:
         if dead_letter_dir is None:

@@ -66,7 +66,6 @@ def _pickle_state(payload: dict[str, Any]) -> str:
 def latest_by_key_stream(
     df: DataFrame,
     key_cols: str | list[str],
-    order_col: str = "event_seq",
     ttl_ms: int | None = None,
 ) -> DataFrame:
     """Streaming KTable: emits, per microbatch and key, the current
@@ -102,10 +101,10 @@ def latest_by_key_stream(
         for pdf in pdfs:
             if len(pdf) == 0:
                 continue
-            pdf = pdf.sort_values(order_col)
+            pdf = pdf.sort_values("event_seq")
             last = pdf.iloc[-1]
-            if best_seq is None or int(last[order_col]) >= best_seq:
-                best_seq = int(last[order_col])
+            if best_seq is None or int(last["event_seq"]) >= best_seq:
+                best_seq = int(last["event_seq"])
                 best_row = {c: last[c] for c in payload_cols}
         state.update((_pickle_state({"seq": best_seq, "row": best_row}),))
         if ttl_ms:
@@ -192,13 +191,12 @@ def topk_counter_stream(
     group_col: str = "customerid",
     item_col: str = "artistid",
     k: int = 3,
-    max_entries: int = 1000,
 ) -> DataFrame:
     """Streaming twin of pipelines.reference.top_customer_artists.
 
     Per group key the state is a counter map item → count (the
     reference's SortedCounterMap, samples/TopCustomerArtists.java:93-130,
-    capped at ``max_entries``); each microbatch emits the group's
+    capped at 1000 entries); each microbatch emits the group's
     current top-k with the engine's deterministic tie-break (count
     DESC, item ASC — the reference's arrival-stable ties are not
     reproducible, SURVEY.md §2.4).
@@ -223,8 +221,8 @@ def topk_counter_stream(
             for item in pdf[item_col]:
                 item = str(item)
                 counts[item] = counts.get(item, 0) + 1
-        if len(counts) > max_entries:
-            keep = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:max_entries]
+        if len(counts) > 1000:
+            keep = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:1000]
             counts = dict(keep)
         state.update((json.dumps(counts),))
         top = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
