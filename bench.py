@@ -48,6 +48,7 @@ import re
 import statistics
 import sys
 import time
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -172,7 +173,7 @@ def main() -> None:
                 if abs(walls[1] - walls[0]) <= 0.30 * min(walls):
                     stable_break = True
                     break
-            walls.append(noop_run(spark, name, sf_dir))
+            walls.append(noop_run(spark, name, sf_dir).wall)
             built = drain_build_events()
             if built:
                 builds.setdefault("warmup" if i == 0 else "measured", []).extend(
@@ -302,11 +303,24 @@ def main() -> None:
     print(line)
 
 
-def noop_run(spark, name: str, sf_dir: str) -> float:
+class Run(NamedTuple):
+    """One noop-sink run: its wall and the Spark jobs it started,
+    split at the end of plan construction."""
+
+    wall: float
+    construct_jobs: int
+    exec_jobs: int
+
+
+def noop_run(spark, name: str, sf_dir: str) -> Run:
     """One run of catalog query ``name`` into the noop sink (the full
-    pipeline runs, nothing is serialized back to Python); returns its
-    wall in seconds. The timing loop of this harness and of
-    tools/time_query.py.
+    pipeline runs, nothing is serialized back to Python). The timing
+    loop of this harness and of tools/time_query.py.
+
+    The job counts come from the DAG scheduler's next job id, read
+    before construction, after ``REGISTRY[name].spark(...)`` returns
+    and after the write: construction jobs are the eager ones (store
+    writes, checkpoints, collects) run while the plan is built.
 
     Afterwards the checkpointed/cached RDDs the query materialized (the
     dedup pipelines localCheckpoint signatures) are released before the
@@ -315,16 +329,21 @@ def noop_run(spark, name: str, sf_dir: str) -> float:
     is paid only when something was actually persisted — a forced full
     JVM GC per run adds measurable wall across a catalog of mostly
     persist-free plans."""
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = int(dag.nextJobId())
     t0 = time.time()
-    REGISTRY[name].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    df = REGISTRY[name].spark(spark, sf_dir)
+    j1 = int(dag.nextJobId())
+    df.write.format("noop").mode("overwrite").save()
     wall = time.time() - t0
+    j2 = int(dag.nextJobId())
     persisted = spark.sparkContext._jsc.getPersistentRDDs()
     if persisted:
         gc.collect()
         for jrdd in persisted.values():
             jrdd.unpersist()
         spark.sparkContext._jvm.System.gc()
-    return wall
+    return Run(wall, j1 - j0, j2 - j1)
 
 
 def order_by_prior_cost(

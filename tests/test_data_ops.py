@@ -1822,9 +1822,7 @@ def test_extend_training_manifest_equals_from_scratch(spark):
     # the shipped run's substrates over the OLD corpus (pairs derive
     # by restriction — pairwise predicates — clusters/census rebuilt)
     old_pairs = full_pairs.filter(F.col("doc_id_b") < T).localCheckpoint()
-    old_clusters = near_dup_clusters(
-        old_pairs, pairs_materialized=True
-    ).localCheckpoint()
+    old_clusters = near_dup_clusters(old_pairs).localCheckpoint()
     old_keepers = (
         old.join(old_clusters, "doc_id", "left")
         .filter(
@@ -1851,9 +1849,7 @@ def test_extend_training_manifest_equals_from_scratch(spark):
     assert rows(ext) == rows(scratch)
     # the grown cluster table equals from-scratch components too
     want_clusters = sorted(
-        map(tuple, near_dup_clusters(
-            full_pairs, pairs_materialized=True
-        ).collect())
+        map(tuple, near_dup_clusters(full_pairs).collect())
     )
     assert sorted(map(tuple, st["clusters"].collect())) == want_clusters
     # the chosen T really made a spanning pair: some grown cluster

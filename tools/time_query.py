@@ -5,10 +5,12 @@
 One shared session, one trivial warmup query first (JVM/codegen), then
 per query: N noop-sink runs (run 0 is the recorded warmup, excluded
 from the median — it pays train-once session-cache builds). Prints
-walls per run plus the post-warmup median. Persisted RDDs are swept
-between runs by the same per-run function bench.py uses
-(`bench.noop_run`), so session caches rebuilt per run don't accumulate
-and medians stay comparable with BENCH_DETAIL.
+walls per run plus the post-warmup median, and per run the Spark jobs
+started while the plan was built (``construct_jobs``: checkpoints,
+store writes, collects) and by the final write (``exec_jobs``).
+Persisted RDDs are swept between runs by the same per-run function
+bench.py uses (`bench.noop_run`), so session caches rebuilt per run
+don't accumulate and medians stay comparable with BENCH_DETAIL.
 """
 
 from __future__ import annotations
@@ -64,13 +66,16 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     noop_run(spark, "user_event_count", sf_dir)
     for name in names:
-        walls = []
+        done = []
         for r in range(runs):
             spark.sparkContext.setJobDescription(f"{name} run{r}")
-            walls.append(noop_run(spark, name, sf_dir))
+            done.append(noop_run(spark, name, sf_dir))
+        walls = [d.wall for d in done]
         med = statistics.median(walls[1:]) if len(walls) > 1 else walls[0]
         print(
             f"{name}: walls={[round(w, 2) for w in walls]} "
+            f"construct_jobs={[d.construct_jobs for d in done]} "
+            f"exec_jobs={[d.exec_jobs for d in done]} "
             f"median_post_warmup={med:.2f}s"
         )
 

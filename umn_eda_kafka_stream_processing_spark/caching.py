@@ -1,4 +1,5 @@
-"""Session-scoped materialized-frame cache (train-once/serve-many).
+"""Session-scoped materialized-frame cache (train-once/serve-many),
+and the one decision of when a frame is checkpointed (`materialize`).
 
 Queries that share an expensive derived frame — a trained LM, a
 scored corpus, a thresholded graph edge list — must not each
@@ -16,6 +17,13 @@ hitting it again raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND; this
 bit round 8's first bench run). A parquet-backed frame is immune to
 the sweep, survives for the life of the session, and reads back
 with column pruning and predicate pushdown like any table.
+
+`materialize(df, why)` is the in-plan form: one eager
+``localCheckpoint`` whose reason is a `Why`, the way a KTable that
+needs a store says so with ``Materialized.as(...)``. A checkpointed
+frame does not survive the harness's unpersist sweep, so it never
+outlives the plan that made it; what must outlive a plan uses
+`materialized`.
 
 Entries are keyed by (applicationId, cache_key); entries from dead
 applications are dropped on insert (their temp files die with the
@@ -35,10 +43,12 @@ serves many concurrent applications without key collisions.
 
 from __future__ import annotations
 
+import enum
 import hashlib
 import os
 import re
 import tempfile
+import weakref
 
 from pyspark.sql import DataFrame
 
@@ -48,6 +58,32 @@ _FRAMES: dict[tuple[str, str], DataFrame] = {}
 _SCALARS: dict[tuple[str, str], object] = {}
 _DIRS: dict[str, str] = {}
 _BUILD_EVENTS: list[str] = []
+# every frame this module returned: `materialize` results and
+# `materialized` reads — already materialized, by object identity
+_RETURNED: weakref.WeakSet[DataFrame] = weakref.WeakSet()
+
+
+class Why(enum.Enum):
+    """Why a frame is materialized."""
+
+    OVERWRITE = "the plan reads a path that it then overwrites"
+    SELF_JOIN = "both sides of a self-join read the frame"
+    SHARED = "the frame has several consumers"
+    ROUND = "the checkpoint cuts a loop's lineage"
+
+
+def materialize(df: DataFrame, why: Why) -> DataFrame:
+    """``df`` checkpointed once, eagerly (`localCheckpoint`), for the
+    reason ``why``. A frame this module already returned comes back
+    unchanged — it is stored data, and a second checkpoint only adds a
+    job — except under `Why.OVERWRITE`: that frame is about to be
+    written over a path its plan may read, so it is always
+    checkpointed."""
+    if why is not Why.OVERWRITE and df in _RETURNED:
+        return df
+    out = df.localCheckpoint()
+    _RETURNED.add(out)
+    return out
 
 
 def drain_build_events() -> list[str]:
@@ -103,6 +139,7 @@ def materialized(spark, cache_key: str, build) -> DataFrame:
     _BUILD_EVENTS.append(cache_key)
     build().write.mode("overwrite").parquet(path)
     out = spark.read.parquet(path)
+    _RETURNED.add(out)
     for k in [k for k in _FRAMES if k[0] != app]:
         del _FRAMES[k]
     for k in [k for k in _SCALARS if k[0] != app]:

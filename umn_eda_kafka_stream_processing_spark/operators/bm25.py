@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
+
 K1 = 1.2
 B = 0.75
 
@@ -55,10 +57,10 @@ def bm25_index(docs: DataFrame) -> tuple[DataFrame, DataFrame, int, int]:
     # ONE corpus pass: everything else (doc lengths, document
     # frequencies, the total-token scalar) derives from the
     # checkpointed (id, term, tf) aggregate, not from re-exploding
-    tf = (
+    tf = materialize(
         toks.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).cast("long").alias("tf")),
+        Why.SHARED,
     )
     doclens = docs.select("doc_id").join(
         tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl")),
@@ -195,10 +197,10 @@ def upsert_bm25_index(
             )
         ).alias("term"),
     ).filter(F.col("term") != "")
-    tf = (
+    tf = materialize(
         toks.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).cast("long").alias("tf")),
+        Why.SHARED,
     )
     postings.upsert(tf.select("term", "doc_id", "tf"), batch_seq)
     doclens.upsert(
@@ -273,13 +275,13 @@ def search_bm25_index(
             f"BM25 index at {index_dir!r} is empty (no documents "
             "ingested yet) — cannot score against n_docs=0"
         )
-    pruned = (
+    pruned = materialize(
         postings.read(near=queries)
         .join(
             F.broadcast(queries.select("term").distinct()), "term", "semi"
         )
-        .select("term", "doc_id", "tf")
-        .localCheckpoint()
+        .select("term", "doc_id", "tf"),
+        Why.SHARED,
     )
     dfreq = pruned.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("df")

@@ -46,6 +46,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
+
+
 def word_freqs(df: DataFrame) -> DataFrame:
     """Distinct lowercased whitespace words with corpus frequencies —
     the single corpus-sized aggregation of BPE training."""
@@ -114,7 +117,7 @@ def train_bpe(df: DataFrame, k: int = 6) -> tuple[DataFrame, DataFrame]:
     """
     spark = df.sparkSession
     wf = word_freqs(df)
-    words = wf.select("word", "freq", to_symbols("word").alias("sym")).localCheckpoint()
+    words = materialize(wf.select("word", "freq", to_symbols("word").alias("sym")), Why.SHARED)
     learned: list[tuple[int, str, int]] = []
     for rank in range(1, k + 1):
         best = (

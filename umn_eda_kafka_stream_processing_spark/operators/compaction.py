@@ -212,12 +212,6 @@ def zorder_expr(a: str, b: str, bits: int = 10, div: str = "div") -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def zorder_key(df: DataFrame, a: str, b: str) -> Column:
-    """Spark Column of ``zorder_expr`` over two normalized integer
-    columns of ``df`` (see zorder_expr)."""
-    return F.expr(zorder_expr(a, b)).cast("long")
-
-
 def zorder_nd_expr(
     cols: Sequence[str], bits: int = 8, div: str = "div"
 ) -> str:
@@ -288,7 +282,7 @@ def with_hilbert(
     (withColumns reads the PRE-step state, so the x/y/d updates see
     one consistent snapshot); Catalyst collapses them into one
     whole-stage-codegen Project — a narrow, shuffle-free layout key,
-    like zorder_key. Hilbert beats Z-order on range locality (every
+    like `zorder_expr`. Hilbert beats Z-order on range locality (every
     curve step is grid-adjacent; Z jumps at power-of-two seams), at
     the price of this stateful per-bit walk instead of one flat
     interleave expression."""

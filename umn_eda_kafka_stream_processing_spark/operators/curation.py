@@ -46,6 +46,8 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
+
 
 def training_manifest(
     docs: DataFrame,
@@ -72,11 +74,13 @@ def training_manifest(
     contract); ``doc_id`` must be unique (repeat_mixture_sample's
     contract).
 
-    ``pairs`` / ``clusters`` inject precomputed (MATERIALIZED —
-    they are consumed multiple times) near-dup substrates: the pair
-    graph is the chain's most expensive stage and is shared with
-    the standalone dedup censuses, so callers session-cache it
+    ``pairs`` / ``clusters`` inject precomputed near-dup substrates:
+    the pair graph is the chain's most expensive stage and is shared
+    with the standalone dedup censuses, so callers session-cache it
     (the train-once/serve-many rule) instead of regrowing it here.
+    Both are consumed several times and pass through
+    `caching.materialize`, which costs no job for a session-cache
+    read.
 
     ``bench_grams`` replaces ``benchmark`` (pass None there) with a
     pre-hashed gram frame — the gram store's shape
@@ -96,12 +100,12 @@ def training_manifest(
         repeat_mixture_sample,
     )
 
-    if pairs is None:
-        pairs = minhash_lsh_pairs(docs).localCheckpoint()  # feeds clustering AND the census's pins
-    if clusters is None:
-        clusters = near_dup_clusters(
-            pairs, pairs_materialized=True
-        ).localCheckpoint()  # joined twice (keepers, split)
+    pairs = materialize(
+        minhash_lsh_pairs(docs) if pairs is None else pairs, Why.SHARED
+    )
+    clusters = materialize(
+        near_dup_clusters(pairs) if clusters is None else clusters, Why.SHARED
+    )
     # keepers: the component representative (min-label == own id) and
     # every doc outside any near-dup pair
     keepers = (
@@ -118,12 +122,15 @@ def training_manifest(
     # checkpoint-the-compressed-frames rule, never the corpus), and
     # it feeds the anti-join here plus two census pins downstream —
     # unmaterialized, each consumer would regrow the full gram pass
-    decontam = decontaminate(
-        keepers,
-        benchmark,
-        bench_grams=bench_grams,
-        docs_grams=keeper_grams,
-    ).localCheckpoint()
+    decontam = materialize(
+        decontaminate(
+            keepers,
+            benchmark,
+            bench_grams=bench_grams,
+            docs_grams=keeper_grams,
+        ),
+        Why.SHARED,
+    )
     flagged = decontam.filter(F.col("contaminated") == 1).select("doc_id")
     clean = keepers.join(flagged.hint("shuffle_hash"), "doc_id", "left_anti")
     split = cluster_safe_split(
@@ -212,19 +219,18 @@ def patch_training_manifest(
         )
         .drop("cluster_id")
     )
-    # delta sweep: keepers vs ONLY the late batches' novel grams.
-    # Checkpoint: skinny per-doc census consumed by the merge AND the
-    # newly-set (the checkpoint-the-compressed-frames rule)
+    # delta sweep: keepers vs ONLY the late batches' novel grams; its
+    # one consumer is the merge, which is materialized
     delta = resweep_decontaminate(
         spark,
         gram_store_path,
         keepers,
         since_batch,
         corpus_grams=keeper_grams,
-    ).localCheckpoint()
-    merged = merge_decontam_censuses(
-        standing_decontam, delta
-    ).localCheckpoint()  # feeds the anti-join + census pins
+    )
+    merged = materialize(
+        merge_decontam_censuses(standing_decontam, delta), Why.SHARED
+    )
     newly = (
         merged.filter(F.col("contaminated") == 1)
         .select("doc_id")
@@ -266,15 +272,17 @@ def extend_clusters(
     """Grow a standing cluster table by a delta pair set — the
     affected-subgraph re-clustering step of `extend_training_manifest`
     (see its docstring for the correctness argument), factored out so
-    callers can session-cache the grown table. ``delta_pairs`` must be
-    materialized (consumed by the affected-set AND the subgraph);
-    returns the UNmaterialized grown (id, cluster_id) table — callers
-    that consume it more than once checkpoint or cache it."""
+    callers can session-cache the grown table. ``delta_pairs`` feeds
+    the affected set AND the subgraph, so it is materialized here (no
+    job when it already is); returns the UNmaterialized grown
+    (id, cluster_id) table — callers that consume it more than once
+    materialize or session-cache it."""
     from umn_eda_kafka_stream_processing_spark.operators.dedup import (
         near_dup_clusters,
     )
 
     a, b = "doc_id_a", "doc_id_b"
+    delta_pairs = materialize(delta_pairs, Why.SHARED)
     # affected old clusters: clusters of any OLD endpoint of a delta
     # pair (batch endpoints are not clustered yet; an old endpoint
     # outside any cluster was previously unpaired and rides into the
@@ -368,11 +376,11 @@ def extend_training_manifest(
     optionally injects the batch's corpus-side gram table
     (`decontaminate`'s ``docs_grams`` contract, restricted to the
     batch docs) so the batch sweep skips its text explode too.
-    ``delta_pairs`` / ``clusters`` inject precomputed (MATERIALIZED —
-    both are consumed multiple times) delta-pair and grown-cluster
-    substrates — the `training_manifest` ``pairs``/``clusters``
-    seams' incremental twins, for callers that session-cache them
-    (`extend_clusters` builds the grown table from the delta).
+    ``delta_pairs`` / ``clusters`` inject precomputed delta-pair and
+    grown-cluster substrates — the `training_manifest`
+    ``pairs``/``clusters`` seams' incremental twins, for callers that
+    session-cache them (`extend_clusters` builds the grown table from
+    the delta); like those, both pass through `caching.materialize`.
 
     Returns the extended manifest — or with ``return_stages=True``
     ``(manifest, stages)`` adding ``delta_pairs``, ``clusters`` (the
@@ -389,16 +397,11 @@ def extend_training_manifest(
     )
 
     if delta_pairs is None:
-        delta_pairs = minhash_lsh_pairs(
-            batch, history=old_docs
-        ).localCheckpoint()  # feeds affected-set, subgraph, census pins
-    clusters2 = (
-        clusters
-        if clusters is not None
-        else extend_clusters(
-            old_pairs, old_clusters, delta_pairs
-        ).localCheckpoint()  # joined by keepers AND split AND census
-    )
+        delta_pairs = minhash_lsh_pairs(batch, history=old_docs)
+    delta_pairs = materialize(delta_pairs, Why.SHARED)
+    if clusters is None:
+        clusters = extend_clusters(old_pairs, old_clusters, delta_pairs)
+    clusters2 = materialize(clusters, Why.SHARED)
     docs_all = old_docs.unionByName(batch)
     keepers = (
         docs_all.join(clusters2.hint("shuffle_hash"), "doc_id", "left")
@@ -408,12 +411,15 @@ def extend_training_manifest(
         .drop("cluster_id")
     )
     # one sweep of the batch only; old keepers reuse the standing rows
-    batch_decontam = decontaminate(
-        batch,
-        benchmark,
-        bench_grams=bench_grams,
-        docs_grams=batch_grams,
-    ).localCheckpoint()
+    batch_decontam = materialize(
+        decontaminate(
+            batch,
+            benchmark,
+            bench_grams=bench_grams,
+            docs_grams=batch_grams,
+        ),
+        Why.SHARED,
+    )
     decontam2 = standing_decontam.select(
         "doc_id", "n_grams", "n_hit_grams", "contaminated"
     ).unionByName(

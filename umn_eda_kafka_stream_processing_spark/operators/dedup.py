@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
+from umn_eda_kafka_stream_processing_spark import caching
+from umn_eda_kafka_stream_processing_spark.caching import Why
 from umn_eda_kafka_stream_processing_spark.functions.scalar import round_half_up
 from umn_eda_kafka_stream_processing_spark.functions.text import (
     char_shingles,
@@ -76,11 +78,11 @@ def _estimate_block_pairs(
     if length_col is not None:
         width = max(max_length_diff, 1)
         keys.append(F.floor(F.col(length_col) / width).alias("_band"))
-    sizes = (
+    sizes = caching.materialize(
         df.select(*block_cols, *([length_col] if length_col else []))
         .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).alias("_n")),
+        Why.SELF_JOIN,
     )
     sa = sizes.select(*[F.col(c).alias(f"a_{c}") for c in sizes.columns])
     sb = sizes.select(*[F.col(c).alias(f"b_{c}") for c in sizes.columns])
@@ -296,7 +298,8 @@ def rarity_sorted_shingles(
     filtered Jaccard and containment joins — one shingle explode +
     one df hash-agg + one per-key sort-agg (never a corpus window);
     cacheable per (corpus, shingle_n) and passed to either join via
-    ``arr=`` (train-once/serve-many)."""
+    ``arr=`` (train-once/serve-many). Returned lazy: each join
+    materializes it, and a session-cached table is written once."""
     tok = df.select(
         F.col(id_col),
         F.explode(char_shingles(text_col, shingle_n)).alias("t"),
@@ -318,7 +321,6 @@ def rarity_sorted_shingles(
             "arr",
             F.size("arr").cast("long").alias("n"),
         )
-        .localCheckpoint()
     )
 
 
@@ -382,7 +384,9 @@ def prefix_jaccard_pairs(
             f"on_explosion must be 'raise' or 'delegate', got {on_explosion!r}"
         )
     if arr is None:
-        arr = rarity_sorted_shingles(df, text_col, id_col, shingle_n)
+        arr = caching.materialize(
+            rarity_sorted_shingles(df, text_col, id_col, shingle_n), Why.SHARED
+        )
     # prefix length p = n - ceil(tau*n) + 1, exact integer ceil
     pre = arr.select(
         id_col,
@@ -516,7 +520,9 @@ def prefix_containment_pairs(
     (containment has no approximate LSH fallback: MinHash estimates
     Jaccard, not containment, so the guard only raises)."""
     if arr is None:
-        arr = rarity_sorted_shingles(df, "text", "doc_id", shingle_n)
+        arr = caching.materialize(
+            rarity_sorted_shingles(df, "text", "doc_id", shingle_n), Why.SHARED
+        )
     pre = arr.select(
         F.col("doc_id").alias("_ida"),
         F.col("n").alias("_na"),
@@ -706,11 +712,15 @@ def minhash_lsh_pairs(
     candidates → signature-estimate gate → exact-jaccard verification
     (precision 1.0 among gated candidates).
 
-    Signatures are materialized once (eager localCheckpoint): the
-    banded self-join reads both sides from the stored result instead
-    of racing to recompute the explode+md5 lineage per side (lazy
-    .cache() does NOT dedupe concurrent first computations). Recall
-    at j=0.8 with 16 hashes / 8 bands of 2: 1-(1-0.64)^8 ≈ 0.9997.
+    Signatures are materialized once (`caching.materialize`,
+    ``Why.SELF_JOIN``): the banded self-join reads both sides from the
+    stored result instead of racing to recompute the explode+md5
+    lineage per side (lazy .cache() does NOT dedupe concurrent first
+    computations). Recall at j=0.8 with 16 hashes / 8 bands of 2:
+    1-(1-0.64)^8 ≈ 0.9997. The output pairs are NOT materialized: a
+    caller that reads them more than once materializes them itself,
+    and `near_dup_clusters` over such pairs then runs no second
+    checkpoint.
 
     The estimate gate: before paying the exact shingle-set
     intersection, each candidate's sketch similarity (fraction of
@@ -744,17 +754,23 @@ def minhash_lsh_pairs(
 
     ``sigs`` / ``history_sigs`` inject the `minhash_signatures` of
     ``df`` / ``history`` (session-cached tables, so history is not
-    re-hashed); ``sigs`` must be materialized (both melts read it).
+    re-hashed); both melts read an injected ``sigs`` as given, so pass
+    stored data (a session-cache read or a filter of one).
 
-    ``materialize=False`` skips every stage localCheckpoint so the
+    ``materialize=False`` skips every stage checkpoint so the
     WHOLE pipeline stays one inspectable lazy plan — used by
     tools/plan_proofs.py to receipt the join strategy (checkpointed
     stages are invisible in the final executed-plan string);
     production callers keep the default.
     Output: (id_a, id_b, jaccard) for verified pairs, id_a < id_b."""
-    _ckpt = (lambda d: d.localCheckpoint()) if materialize else (lambda d: d)
+    def _ckpt(d: DataFrame, why: Why) -> DataFrame:
+        return caching.materialize(d, why) if materialize else d
+
     if sigs is None:
-        sigs = _ckpt(minhash_signatures(df, text_col, id_col, num_hashes, shingle_n))
+        sigs = _ckpt(
+            minhash_signatures(df, text_col, id_col, num_hashes, shingle_n),
+            Why.SELF_JOIN,
+        )
     par = df.sparkSession.sparkContext.defaultParallelism
     # band melt CARRYING the signature columns: the estimate gate
     # evaluates inline on the band self-join's output, so the gate
@@ -821,7 +837,7 @@ def minhash_lsh_pairs(
     # is the full-parallelism spread, not whatever AQE coalesced the
     # last gate shuffle down to (~1 partition for a small candidate
     # set, serializing every array_intersect)
-    cands = _ckpt(cands.repartition(par, F.col(f"{id_col}_a")))
+    cands = _ckpt(cands.repartition(par, F.col(f"{id_col}_a")), Why.SHARED)
     # exact shingle sets ONLY for docs that appear in a candidate
     # pair: the broadcast semi join prunes the corpus BEFORE the
     # per-row shingle HOF, so verification cost scales with the
@@ -844,7 +860,8 @@ def minhash_lsh_pairs(
     # is already pruned to candidates, so it's small by construction)
     sh = _ckpt(
         docs.join(F.broadcast(cand_ids), id_col, "left_semi")
-        .select(F.col(id_col), char_shingles(text_col, shingle_n).alias("sh"))
+        .select(F.col(id_col), char_shingles(text_col, shingle_n).alias("sh")),
+        Why.SELF_JOIN,
     )
     a = sh.select(F.col(id_col).alias(f"{id_col}_a"), F.col("sh").alias("a_sh"))
     b = sh.select(F.col(id_col).alias(f"{id_col}_b"), F.col("sh").alias("b_sh"))
@@ -970,10 +987,7 @@ def simhash_near_pairs(
             f"max_hamming <= 3 (got {max_hamming}); pairs farther apart "
             "may share no 16-bit chunk and would be silently missed"
         )
-    # materialize once: both sides of the chunk self-join read the
-    # stored signatures instead of re-running the token explode +
-    # 64-way vote aggregation per side (see minhash_lsh_pairs)
-    sigs = simhash64(df, text_col, id_col).localCheckpoint()
+    sigs = caching.materialize(simhash64(df, text_col, id_col), Why.SELF_JOIN)
     return _sig_near_pairs(sigs, id_col, max_hamming, hot_bucket_cap)
 
 
@@ -1158,7 +1172,7 @@ def incremental_simhash_dedup(
         batch_df.sparkSession, seen_store_path, ["chunk_idx", "chunk_val"],
         "_cb", order="batch_id", n_buckets=32,
     )
-    sigs = simhash64(batch_df).localCheckpoint()
+    sigs = caching.materialize(simhash64(batch_df), Why.SHARED)
     # 1. in-batch near-pairs: drop the larger id of each pair
     pairs = _sig_near_pairs(sigs, "doc_id", 3)
     losers = pairs.select(F.col("doc_id_b").alias("doc_id")).distinct()
@@ -1189,7 +1203,6 @@ def near_dup_clusters(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iters: int = 25,
-    pairs_materialized: bool = False,
     driver_max_edges: int | None = 200_000,
 ) -> DataFrame:
     """Connected components over near-dup pairs: the final step of a
@@ -1213,9 +1226,10 @@ def near_dup_clusters(
     every id that appears in at least one pair (singletons are not
     emitted — they are their own keeper by definition).
 
-    ``pairs_materialized=True`` promises the input is already
-    localCheckpoint-ed (pipeline callers that checkpoint pairs for
-    their own reuse) — skips a redundant re-materialization job.
+    The pairs are materialized once (`caching.materialize`, both the
+    edge count and the rounds read them); pairs that are already a
+    `caching` result — a pipeline's own materialized pairs, a
+    session-cached pair table — cost no job here.
 
     SMALL-GRAPH ESCAPE: near-dup pair graphs are SPARSE by
     construction (LSH hot-bucket caps bound bucket fan-out; exact
@@ -1234,9 +1248,7 @@ def near_dup_clusters(
     loop unchanged. ``driver_max_edges=None`` disables the escape.
     """
     a, b = f"{id_col}_a", f"{id_col}_b"
-    edges = pairs.select(a, b)
-    if not pairs_materialized:
-        edges = edges.localCheckpoint()
+    edges = caching.materialize(pairs, Why.SHARED).select(a, b)
     if driver_max_edges is not None and edges.count() <= driver_max_edges:
         parent: dict = {}
 
@@ -1277,7 +1289,7 @@ def near_dup_clusters(
     # init already IS round 1's propagation: label(v) = min(v, direct
     # neighbors) in one aggregation — same one-shuffle cost as the
     # identity init, one fewer driver-synchronized round overall
-    labels = (
+    labels = caching.materialize(
         und.select(F.col("dst").alias(id_col), F.col("src").alias("cluster_id"))
         .unionByName(
             und.select(
@@ -1285,8 +1297,8 @@ def near_dup_clusters(
             )
         )
         .groupBy(id_col)
-        .agg(F.min("cluster_id").alias("cluster_id"))
-        .localCheckpoint()
+        .agg(F.min("cluster_id").alias("cluster_id")),
+        Why.ROUND,
     )
     for _ in range(max_iters):
         def _propagate() -> DataFrame:
@@ -1314,14 +1326,14 @@ def near_dup_clusters(
             F.col(id_col).alias("cluster_id"),
             F.col("cluster_id").alias("_jump"),
         )
-        new_labels = (
+        new_labels = caching.materialize(
             _propagate()
             .join(jump, "cluster_id", "left")
             .select(
                 F.col(id_col),
                 F.coalesce(F.col("_jump"), F.col("cluster_id")).alias("cluster_id"),
-            )
-            .localCheckpoint()
+            ),
+            Why.ROUND,
         )
         changed = (
             new_labels.alias("n")
@@ -1589,11 +1601,11 @@ def incremental_span_dedup(
         batch_df.sparkSession, span_store_path, "h", "_bkt", order="_ord",
         n_buckets=n_buckets,
     )
-    w = (
+    w = caching.materialize(
         _span_windows(batch_df, "doc_id", "text", span_len)
         .withColumn("h", F.md5("span"))
-        .drop("span")
-        .localCheckpoint()
+        .drop("span"),
+        Why.SHARED,
     )
     bstats = w.groupBy("h").agg(F.min("doc_id").alias("_bmin"))
 

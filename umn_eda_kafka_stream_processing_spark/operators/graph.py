@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
+
 SCALE = 10**12  # integer "picos" fixed point
 
 
@@ -65,13 +67,13 @@ def pagerank_directed(
     outdeg = e.groupBy("src").agg(
         F.count(F.lit(1)).cast("long").alias("outdeg")
     )
-    e2 = e.join(outdeg.hint("shuffle_hash"), "src").localCheckpoint()
-    nodes = (
+    e2 = materialize(e.join(outdeg.hint("shuffle_hash"), "src"), Why.SHARED)
+    nodes = materialize(
         e2.select(F.col("src").alias("node"), F.lit(False).alias("d"))
         .union(e2.select(F.col("dst").alias("node"), F.lit(True).alias("d")))
         .groupBy("node")
-        .agg(F.min("d").alias("dangling"))
-        .localCheckpoint()
+        .agg(F.min("d").alias("dangling")),
+        Why.SHARED,
     )
     n, n_dangling = nodes.agg(
         F.count(F.lit(1)), F.sum(F.col("dangling").cast("long"))
@@ -103,7 +105,7 @@ def pagerank_directed(
             step = step.crossJoin(F.broadcast(dt))
         else:
             step = step.withColumn("_dt", F.lit(0).cast("long"))
-        ranks = (
+        ranks = materialize(
             step.select(
                 "node",
                 "dangling",
@@ -116,8 +118,8 @@ def pagerank_directed(
                 )
                 .cast("long")
                 .alias("rank_picos"),
-            )
-            .localCheckpoint()
+            ),
+            Why.ROUND,
         )
     return ranks.select("node", "rank_picos")
 
@@ -142,17 +144,17 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     alone. Oracle twins list triangles from the raw a<b edge list
     instead — different algorithm, same counts.
     """
-    e = edges.select(
+    e = materialize(edges, Why.SHARED).select(
         F.col(edges.columns[0]).alias("a"), F.col(edges.columns[1]).alias("b")
-    ).localCheckpoint()
-    deg = (
+    )
+    deg = materialize(
         e.select(F.col("a").alias("node"))
         .union(e.select(F.col("b").alias("node")))
         .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).cast("long").alias("deg")),
+        Why.SHARED,
     )
-    o = (
+    o = materialize(
         e.join(
             deg.select(
                 F.col("node").alias("a"), F.col("deg").alias("deg_a")
@@ -184,8 +186,8 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
             )
             .alias("s")
         )
-        .select("s.src", "s.dst", "s.dst_deg")
-        .localCheckpoint()
+        .select("s.src", "s.dst", "s.dst_deg"),
+        Why.SELF_JOIN,
     )
     x, y = o.alias("x"), o.alias("y")
     cand = (
@@ -263,10 +265,10 @@ def core_numbers(
         F.col(edges.columns[0]).alias("a"),
         F.col(edges.columns[1]).alias("b"),
     )
-    adj = (
+    adj = materialize(
         e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-        .union(e.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
-        .localCheckpoint()
+        .union(e.select(F.col("b").alias("node"), F.col("a").alias("nbr"))),
+        Why.SHARED,
     )
     est = adj.groupBy("node").agg(
         F.count(F.lit(1)).cast("long").alias("core")
@@ -275,7 +277,7 @@ def core_numbers(
         est = est.select(
             "node", F.least(F.col("core"), F.lit(cap)).alias("core")
         )
-    est = est.localCheckpoint()
+    est = materialize(est, Why.ROUND)
     prev_sum = est.agg(F.sum("core")).collect()[0][0]
     w = Window.partitionBy("node").orderBy(F.desc("core"))
     rounds = 0
@@ -299,7 +301,7 @@ def core_numbers(
             h = h.select(
                 "node", F.least(F.col("core"), F.lit(cap)).alias("core")
             )
-        est = h.localCheckpoint()
+        est = materialize(h, Why.ROUND)
         rounds += 1
         s = est.agg(F.sum("core")).collect()[0][0]
         if s == prev_sum:
@@ -326,9 +328,9 @@ def k_core(
     a fixed-round SQL unrolling (the oracle) match an early-stopping
     loop exactly. ``edges`` must be the a<b-normalized undirected
     edge list."""
-    e = edges.select(
+    e = materialize(edges, Why.SHARED).select(
         F.col(edges.columns[0]).alias("a"), F.col(edges.columns[1]).alias("b")
-    ).localCheckpoint()
+    )
     n_before = e.count()
     rounds = 0
     converged = False
@@ -340,7 +342,7 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("deg"))
         )
         keep = deg.where(F.col("deg") >= k).select("node")
-        e2 = (
+        e2 = materialize(
             e.join(
                 keep.withColumnRenamed("node", "a").hint("shuffle_hash"),
                 "a",
@@ -350,8 +352,8 @@ def k_core(
                 keep.withColumnRenamed("node", "b").hint("shuffle_hash"),
                 "b",
                 "semi",
-            )
-            .localCheckpoint()
+            ),
+            Why.ROUND,
         )
         rounds += 1
         n_after = e2.count()
@@ -385,14 +387,15 @@ def bfs_hops(edges: DataFrame, sources: DataFrame, max_hops: int) -> DataFrame:
     partitioning (min over equal-length discoveries is the same
     number), so results hash-match a recursive-CTE oracle.
     """
-    e = edges.select(
-        F.col("src").alias("_s"), F.col("dst").alias("_d")
-    ).distinct().localCheckpoint()
-    dist = (
+    e = materialize(
+        edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d")).distinct(),
+        Why.SHARED,
+    )
+    dist = materialize(
         sources.select(F.col(sources.columns[0]).alias("node"))
         .distinct()
-        .withColumn("hop", F.lit(0).cast("long"))
-        .localCheckpoint()
+        .withColumn("hop", F.lit(0).cast("long")),
+        Why.SHARED,
     )
     frontier = dist.select("node")
     for h in range(1, int(max_hops) + 1):
@@ -404,14 +407,14 @@ def bfs_hops(edges: DataFrame, sources: DataFrame, max_hops: int) -> DataFrame:
             .select(F.col("_d").alias("node"))
             .distinct()
         )
-        new = (
+        new = materialize(
             nxt.join(dist.hint("shuffle_hash"), "node", "left_anti")
-            .withColumn("hop", F.lit(h).cast("long"))
-            .localCheckpoint()
+            .withColumn("hop", F.lit(h).cast("long")),
+            Why.ROUND,
         )
         if new.isEmpty():
             break
-        dist = dist.unionByName(new).localCheckpoint()
+        dist = materialize(dist.unionByName(new), Why.ROUND)
         frontier = new.select("node")
     return dist
 
@@ -439,16 +442,16 @@ def shortest_paths(
     min-agg + one improvement anti-check; dist/frontier are
     localCheckpointed so round N never replays rounds 1..N-1.
     """
-    e = edges.select(
+    e = materialize(edges, Why.SHARED).select(
         F.col("src").alias("_s"),
         F.col("dst").alias("_d"),
         F.col("w").cast("long").alias("_w"),
-    ).localCheckpoint()
-    dist = (
+    )
+    dist = materialize(
         sources.select(F.col(sources.columns[0]).alias("node"))
         .distinct()
-        .withColumn("d", F.lit(0).cast("long"))
-        .localCheckpoint()
+        .withColumn("d", F.lit(0).cast("long")),
+        Why.SHARED,
     )
     frontier = dist
     for _ in range(int(rounds)):
@@ -464,7 +467,7 @@ def shortest_paths(
             .groupBy("node")
             .agg(F.min("d").cast("long").alias("d"))
         )
-        improved = (
+        improved = materialize(
             cand.join(
                 dist.withColumnRenamed("d", "_d0").hint("shuffle_hash"),
                 "node",
@@ -473,16 +476,16 @@ def shortest_paths(
             .where(
                 F.col("_d0").isNull() | (F.col("d") < F.col("_d0"))
             )
-            .select("node", "d")
-            .localCheckpoint()
+            .select("node", "d"),
+            Why.ROUND,
         )
         if improved.isEmpty():
             break
-        dist = (
+        dist = materialize(
             dist.unionByName(improved)
             .groupBy("node")
-            .agg(F.min("d").cast("long").alias("d"))
-            .localCheckpoint()
+            .agg(F.min("d").cast("long").alias("d")),
+            Why.ROUND,
         )
         frontier = improved
     return dist

@@ -44,24 +44,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
+
 
 def gram_micro(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(gram, n) for power_iteration: gram = (i, j, g) with 1-based
     positions and g = sum(m_i * m_j) div (n * 1000); n is a 1-row
     count frame. One posexplode + one id-keyed self-join + one (i, j)
     hash-agg."""
-    ex = emb.select(
-        "vec_id",
-        F.posexplode(F.col("embedding").cast("array<double>")).alias(
-            "p0", "x"
+    ex = materialize(
+        emb.select(
+            "vec_id",
+            F.posexplode(F.col("embedding").cast("array<double>")).alias(
+                "p0", "x"
+            ),
+        ).select(
+            "vec_id",
+            (F.col("p0") + 1).alias("pos"),
+            F.floor(F.col("x") * F.lit(1000000.0) + F.lit(0.5))
+            .cast("long")
+            .alias("m"),
         ),
-    ).select(
-        "vec_id",
-        (F.col("p0") + 1).alias("pos"),
-        F.floor(F.col("x") * F.lit(1000000.0) + F.lit(0.5))
-        .cast("long")
-        .alias("m"),
-    ).localCheckpoint()
+        Why.SELF_JOIN,
+    )
     a = ex.select(
         F.col("vec_id").alias("_id"), F.col("pos").alias("i"),
         F.col("m").alias("ma"),
@@ -83,14 +88,14 @@ def gram_micro(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
     )
     n = emb.agg(F.count(F.lit(1)).cast("long").alias("nr"))
-    gram = (
+    gram = materialize(
         c.crossJoin(F.broadcast(n))
         .select(
             "i",
             "j",
             F.expr("c div (nr * 1000)").cast("long").alias("g"),
-        )
-        .localCheckpoint()
+        ),
+        Why.SHARED,
     )
     return gram, n
 
@@ -118,7 +123,6 @@ def power_iteration(
         gram.select(F.col("i").alias("pos"))
         .distinct()
         .withColumn("v", F.lit(125000).cast("long"))
-        .localCheckpoint()
     )
     for _ in range(iterations):
         vj = v.select(F.col("pos").alias("j"), "v")
@@ -139,10 +143,13 @@ def power_iteration(
         # recomputing the cheap nrm agg there beats a second
         # checkpoint job (the round-trip cost dominates these
         # vector-sized frames)
-        u = w.select(
-            F.col("i").alias("pos"),
-            F.expr(f"w div {norm_shift}").alias("u"),
-        ).localCheckpoint()
+        u = materialize(
+            w.select(
+                F.col("i").alias("pos"),
+                F.expr(f"w div {norm_shift}").alias("u"),
+            ),
+            Why.ROUND,
+        )
         nrm = u.agg(
             F.floor(
                 F.sqrt(F.sum(F.col("u") * F.col("u")).cast("double"))

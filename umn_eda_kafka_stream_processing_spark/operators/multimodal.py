@@ -48,6 +48,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
     T.StructField("content", T.BinaryType(), True),
@@ -591,7 +593,7 @@ def _fingerprint_pairs(sigs: DataFrame, max_hamming: int) -> DataFrame:
             f"max_hamming <= 3 (got {max_hamming}); pairs farther apart "
             "can miss every 16-bit band"
         )
-    return _sig_near_pairs(sigs.localCheckpoint(), "media_id", max_hamming)
+    return _sig_near_pairs(materialize(sigs, Why.SELF_JOIN), "media_id", max_hamming)
 
 
 FRAME_SAMPLE_SCHEMA = T.StructType([

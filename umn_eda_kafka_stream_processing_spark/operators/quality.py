@@ -30,6 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
 from umn_eda_kafka_stream_processing_spark.stores import FLOOR, BatchStore
 
 _ROW_LOCAL = {"not_null", "range", "accepted_values", "regex"}
@@ -363,10 +364,10 @@ def category_registers(
     melted = batch_df.select(
         F.expr(f"stack({len(cols)}, {pairs}) AS (col_name, category)")
     )
-    regs = (
+    regs = materialize(
         melted.groupBy("col_name", "category")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint()  # consumed by the guard AND the store write
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt")),
+        Why.SHARED,
     )
     # the store read is register-sized when the contract holds —
     # exactly what the guard protects

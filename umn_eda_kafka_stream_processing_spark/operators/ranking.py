@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
+
 DEFAULT_BUCKETS = 1024
 _ALL = "_all"  # the one group of the global operators
 
@@ -460,16 +462,16 @@ def grouped_mad_outliers(
     # the histogram substrate consumes its input several times (min/
     # max agg, bucketing, totals) — materialize the COMPRESSED frames
     # (distinct values, then distinct deviations), never the corpus
-    dv = _distinct_values(df, groups, value_col).localCheckpoint()
+    dv = materialize(_distinct_values(df, groups, value_col), Why.SHARED)
     med = _grouped_quantiles_from_dv(
         spark, dv, groups, value_col, [(1, 2)], DEFAULT_BUCKETS,
         join_hint="broadcast",
     ).select(*groups, F.col("value").cast("long").alias("med"))
-    med = med.localCheckpoint()
+    med = materialize(med, Why.SHARED)
     # deviation distribution from the DISTINCT values, reusing their
     # counts — |x - med| can collide (x below vs above the median),
     # so re-aggregate on the deviation
-    dv_ad = (
+    dv_ad = materialize(
         dv.join(F.broadcast(med), groups)
         .select(
             *groups,
@@ -479,8 +481,8 @@ def grouped_mad_outliers(
             "cnt",
         )
         .groupBy(*groups, "_ad")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-        .localCheckpoint()
+        .agg(F.sum("cnt").cast("long").alias("cnt")),
+        Why.SHARED,
     )
     mad = _grouped_quantiles_from_dv(
         spark, dv_ad, groups, "_ad", [(1, 2)], DEFAULT_BUCKETS,

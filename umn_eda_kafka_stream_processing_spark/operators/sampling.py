@@ -29,6 +29,8 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
+
 # 2^32 — the sampling-key space. Thresholds are exact integers in
 # [0, 2^32]; rate 1.0 maps to 2^32 which every u32 is strictly below.
 KEY_SPACE = 1 << 32
@@ -377,9 +379,12 @@ def repeat_mixture_sample(
     # columns only: the checkpoint-the-compressed-frames rule — the
     # document payload crosses exactly one join, at the end, attached
     # by key (guide §2.3/§8: shuffle the proxy, move payloads once).
-    sk0 = base.select(
-        domain_col, key_col, size_col, "target_tokens"
-    ).localCheckpoint()
+    sk0 = materialize(
+        base.select(
+            domain_col, key_col, size_col, "target_tokens"
+        ),
+        Why.SHARED,
+    )
     plan = (
         sk0.groupBy(domain_col)
         .agg(

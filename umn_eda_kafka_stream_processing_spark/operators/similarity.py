@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
 from umn_eda_kafka_stream_processing_spark.functions.scalar import round_half_up
 
 
@@ -195,7 +196,6 @@ def kmeans_buckets(
             f"bucket int, cent_vec {df.schema[vec_col].dataType.simpleString()}",
         )
         .withColumn("c_nrm", l2_norm("cent_vec"))
-        .localCheckpoint()
     )
     assign = None
     for _ in range(iters):
@@ -233,7 +233,7 @@ def kmeans_buckets(
             )
             .select(id_col, vec_col, F.col("_best.bucket").alias("bucket"))
         )
-        cent = (
+        cent = materialize(
             assign.select("bucket", F.posexplode(vec_col).alias("pos", "v"))
             .groupBy("bucket", "pos")
             .agg(F.avg("v").alias("m"))
@@ -244,8 +244,8 @@ def kmeans_buckets(
                     lambda s: round_half_up(s.m, 6),
                 ).alias("cent_vec")
             )
-            .withColumn("c_nrm", l2_norm("cent_vec"))
-            .localCheckpoint()
+            .withColumn("c_nrm", l2_norm("cent_vec")),
+            Why.ROUND,
         )
     return assign.select(id_col, "bucket"), cent.select(
         "bucket", F.col("cent_vec").alias(vec_col)
@@ -526,7 +526,7 @@ def upsert_ivfpq_index(
         embeddings, centroids
     )
     cent = centroids.select("bucket", F.col("embedding").alias("_cv"))
-    res = (
+    res = materialize(
         assigned.select(
             "vec_id",
             "bucket",
@@ -540,13 +540,9 @@ def upsert_ivfpq_index(
             "upd_seq",
             "_dv",
             F.zip_with("_dv", "_cv", lambda a, b: a - b).alias("resid"),
-        )
-        # joined back to itself through pq_encode below — materialize
-        # once, or the residual-encode lineage (bucket assign +
-        # broadcast centroid join + zip_with) recomputes independently
-        # on both join sides every microbatch (the derived-self-join
-        # rule)
-        .localCheckpoint()
+        ),
+        # joined back to itself through pq_encode below
+        Why.SELF_JOIN,
     )
     codes = pq_encode(res, codebook, n_sub=n_sub, dim=dim,
                       vec_col="resid")
@@ -706,7 +702,7 @@ def pq_codebooks(
     spark = df.sparkSession
     cb = spark.createDataFrame(
         cb_rows, "m int, code int, cw array<double>"
-    ).localCheckpoint()
+    )
     for _ in range(iters):
         scored = sub.join(F.broadcast(cb), "m").withColumn(
             "dmicro", l2sq_micros("sv", "cw")
@@ -723,7 +719,7 @@ def pq_codebooks(
             )
             .select("vec_id", "m", "sv", F.col("_best.code").alias("code"))
         )
-        cb = (
+        cb = materialize(
             assign.select("m", "code", F.posexplode("sv").alias("pos", "v"))
             .groupBy("m", "code", "pos")
             .agg(F.avg("v").alias("mean_v"))
@@ -733,8 +729,8 @@ def pq_codebooks(
                     F.array_sort(F.collect_list(F.struct("pos", "mean_v"))),
                     lambda s: round_half_up(s.mean_v, 6),
                 ).alias("cw")
-            )
-            .localCheckpoint()
+            ),
+            Why.ROUND,
         )
     return cb
 
@@ -921,9 +917,7 @@ def semantic_dedup_pairs(
         mat = mat.withColumn("_csz", F.count(F.lit(1)).over(wsz)).filter(
             F.col("_csz") <= cluster_cap
         ).drop("_csz")
-    # one materialization feeds both sides of the self-join —
-    # localCheckpoint (not cache) per the self-join lineage-race rule
-    mat = mat.localCheckpoint()
+    mat = materialize(mat, Why.SELF_JOIN)
     a = mat.select(
         "bucket",
         F.col(id_col).alias("vec_id_a"),
@@ -1014,16 +1008,15 @@ def incremental_semantic_dedup(
         batch_df.sparkSession, seen_store_path, ["bucket", "vec_id"], "bucket",
         order="batch_id",
     )
-    assigned = (
+    assigned = materialize(
         assign_ivf_bucket(batch_df, centroids)
         .select(
             "vec_id",
             "bucket",
             F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("_v"),
         )
-        .withColumn("_n", l2_norm("_v"))
-        # self-join below — materialize once (lazy cache races)
-        .localCheckpoint()
+        .withColumn("_n", l2_norm("_v")),
+        Why.SELF_JOIN,
     )
     # hot-bucket cap, the LSH-family/semantic_dedup_pairs guard: a
     # degenerate batch landing mostly in one bucket would square that
@@ -1508,9 +1501,12 @@ def tfidf_cosine_topk(
 
     # localCheckpoint before the self-join: lazy cache races and an
     # aliased lineage triggers AMBIGUOUS_REFERENCE (CLAUDE.md rule)
-    post = tfidf_cosine_postings(
-        docs, doc_col, text_col, df_min, df_max, tf_cap, ngram
-    ).localCheckpoint()
+    post = materialize(
+        tfidf_cosine_postings(
+            docs, doc_col, text_col, df_min, df_max, tf_cap, ngram
+        ),
+        Why.SELF_JOIN,
+    )
     a = post.select(
         F.col(doc_col).alias("doc_a"), F.col("token").alias("token"), F.col("u").alias("ua")
     )

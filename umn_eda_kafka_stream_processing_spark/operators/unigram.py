@@ -53,6 +53,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
 from umn_eda_kafka_stream_processing_spark.operators.bpe import word_freqs
 
 # an impossible piece cost: > any real path cost (12 pieces x ~30e6
@@ -220,18 +221,18 @@ def train_unigram_model(
     caller feeds straight into ``viterbi_segment`` to ENCODE text."""
     from umn_eda_kafka_stream_processing_spark.operators.core import global_topk
 
-    wf = (
+    wf = materialize(
         word_freqs(df)
-        .filter(F.length("word") <= 12)
-        .localCheckpoint()  # reused by every EM round
+        .filter(F.length("word") <= 12),
+        Why.SHARED,
     )
     cand = candidate_pieces(wf)
-    vocab = (
+    vocab = materialize(
         global_topk(cand, [("freq", False), ("piece", True)], k_cand)
         .select("piece", "freq")
         .union(cand.filter(F.length("piece") == 1))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        Why.SHARED,
     )
     total0 = vocab.agg(F.sum("freq")).collect()[0][0]
     model_rows = vocab.select(
@@ -249,16 +250,15 @@ def train_unigram_model(
             seg.select("freq", F.explode("pieces").alias("piece"))
             .groupBy("piece")
             .agg(F.sum("freq").cast("long").alias("usage"))
-            .localCheckpoint()
         )
         # retained = used pieces + all single chars (coverage); the
         # +1-smoothed re-estimate keeps unused singles finite
-        retained = (
+        retained = materialize(
             vocab.select("piece")
             .join(usage, "piece", "left")
             .withColumn("usage", F.coalesce("usage", F.lit(0)).cast("long"))
-            .filter((F.col("usage") > 0) | (F.length("piece") == 1))
-            .localCheckpoint()
+            .filter((F.col("usage") > 0) | (F.length("piece") == 1)),
+            Why.SHARED,
         )
         total = retained.agg(
             (F.sum("usage") + F.count(F.lit(1))).cast("long")

@@ -19,6 +19,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
+
 
 def event_ts(col: str | Column) -> Column:
     """Normalize an event-time column to TIMESTAMP_NTZ.
@@ -258,9 +260,12 @@ def incremental_funnel(
     spark = batch_df.sparkSession
     store = SnapshotStore(spark, store_path, "user_id", "_fb", n_buckets=n_buckets)
     tcols = [f"t{k}" for k in range(1, len(steps) + 1)]
-    ev = batch_df.select(
-        "user_id", F.col("event_type").alias("_et"), event_ts("ts").alias("_ts")
-    ).localCheckpoint()
+    ev = materialize(
+        batch_df.select(
+            "user_id", F.col("event_type").alias("_et"), event_ts("ts").alias("_ts")
+        ),
+        Why.SHARED,
+    )
     users = ev.select("user_id").distinct()
 
     def step(old: DataFrame | None) -> DataFrame:
@@ -343,12 +348,15 @@ def incremental_transitions(
 
     spark = batch_df.sparkSession
     store = SnapshotStore(spark, store_path, "user_id", "_fb", n_buckets=n_buckets)
-    ev = batch_df.select(
-        "user_id",
-        F.col("event_type").alias("_et"),
-        event_ts("ts").alias("_ts"),
-        F.col("event_id").alias("_o0"),
-    ).localCheckpoint()
+    ev = materialize(
+        batch_df.select(
+            "user_id",
+            F.col("event_type").alias("_et"),
+            event_ts("ts").alias("_ts"),
+            F.col("event_id").alias("_o0"),
+        ),
+        Why.SHARED,
+    )
     order = F.struct("_ts", "_o0")
     w = Window.partitionBy("user_id").orderBy(F.col("_ts").asc(), F.col("_o0").asc())
     within = (
@@ -427,7 +435,7 @@ def incremental_retention(
 
     spark = batch_df.sparkSession
     store = SnapshotStore(spark, store_path, "user_id", "_fb", n_buckets=n_buckets)
-    uw = (
+    uw = materialize(
         batch_df.select(
             "user_id",
             F.date_trunc("week", event_ts("ts")).cast("date").alias("wk"),
@@ -437,8 +445,8 @@ def incremental_retention(
         .agg(
             F.min("wk").alias("_bcw"),
             F.collect_set("wk").alias("_bwks"),
-        )
-        .localCheckpoint()
+        ),
+        Why.SHARED,
     )
 
     def step(old: DataFrame | None) -> DataFrame:
@@ -520,7 +528,7 @@ def incremental_scd2(
     store = SnapshotStore(
         spark, store_path, ident, "_vb", n_buckets=n_buckets, bucket_on=keys
     )
-    batch = batch_df.withColumn(ts_col, event_ts(ts_col)).localCheckpoint()
+    batch = materialize(batch_df.withColumn(ts_col, event_ts(ts_col)), Why.SHARED)
     affected = batch.select(*keys).distinct()
 
     def step(old: DataFrame | None) -> DataFrame:

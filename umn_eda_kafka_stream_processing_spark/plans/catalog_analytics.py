@@ -8,9 +8,10 @@ free, each pinned by a DuckDB oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
 from umn_eda_kafka_stream_processing_spark.functions.scalar import round_half_up
 from umn_eda_kafka_stream_processing_spark.operators.runtime_filter import (
     duck_bloom_ctes,
@@ -834,9 +835,8 @@ def span_dedup_rewrite_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id").select(
         "doc_id", "text"
     )
-    # the rewrite feeds three consumers (doc stats + both corpus-frac
-    # passes) — materialize once, not once per branch
-    rew = remove_shared_spans(docs).localCheckpoint()
+    # three consumers: the doc stats and both corpus-frac passes
+    rew = materialize(remove_shared_spans(docs), Why.SHARED)
 
     def corpus_frac(df: DataFrame, col: str, out: str) -> DataFrame:
         w = _span_windows(df, "doc_id", col, 16)
@@ -1019,12 +1019,13 @@ def _purchase_cs_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialized(spark, f"purchase_cs_pairs|{sf_dir}", build)
 
 
-def _pagerank_oracle(iters: int = 5, damping: int = 85) -> str:
+def _pagerank_oracle() -> str:
     """Unrolled DuckDB twin of operators/graph.py:pagerank_directed
     over the symmetrized customer-supplier purchase graph (no sinks, so
     no dangling-mass term): one (contribs, ranks) CTE pair per
     iteration, all-BIGINT fixed-point arithmetic (rank div outdeg
     shares, (85 * sum) div 100 damping)."""
+    iters, damping = 5, 85
     scale = 10**12
     ctes = [
         """cs AS (
@@ -1105,13 +1106,14 @@ def purchase_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_directed_oracle(iters: int = 5, damping: int = 85) -> str:
+def _pagerank_directed_oracle() -> str:
     """Unrolled DuckDB twin of operators/graph.py:pagerank_directed
     over the DIRECTED customer->supplier purchase graph: every
     supplier is a sink, so each iteration carries a dangling-mass CTE
     (d{k}) redistributed uniformly. r{k} is referenced twice per
     round (contribs + dangling sum) — AS MATERIALIZED, or DuckDB's
     CTE inlining goes exponential (the round-7 lesson)."""
+    iters, damping = 5, 85
     scale = 10**12
     ctes = [
         """cs AS MATERIALIZED (
@@ -1241,11 +1243,11 @@ def _cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cosupply_edges_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = (
+    p = materialize(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey")
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        Why.SELF_JOIN,
     )
     total = p.agg(
         F.countDistinct("l_orderkey").cast("long").alias("total")
@@ -1749,31 +1751,52 @@ def zorder_locality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dyn",
         F.expr(f"{zorder_expr('cx', 'dyn', 10)} div 1024").alias("zb"),
         F.expr("(cx * 1024 + dyn) div 1024").alias("lb"),
-    ).localCheckpoint()
-    m = z.where(
+    )
+    return _block_census(
+        z,
+        _center_box_2d(),
+        [("zb", "z_blocks_touched"), ("lb", "linear_blocks_touched")],
+        [("zb", "z_blocks_total"), ("lb", "linear_blocks_total")],
+    )
+
+
+def _center_box_2d() -> Column:
+    """The 2-D query box: the central 1/8 of both 1024-cell axes."""
+    return (
         (F.col("cx") >= 448)
         & (F.col("cx") < 576)
         & (F.col("dyn") >= 448)
         & (F.col("dyn") < 576)
     )
-    stats_m = m.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows_matched"),
-        F.countDistinct("zb").cast("long").alias("z_blocks_touched"),
-        F.countDistinct("lb").cast("long").alias("linear_blocks_touched"),
-    )
-    stats_all = z.agg(
-        F.countDistinct("zb").cast("long").alias("z_blocks_total"),
-        F.countDistinct("lb").cast("long").alias("linear_blocks_total"),
-    )
-    return stats_m.crossJoin(stats_all)
 
 
-def _hilbert_oracle(bits: int = 10) -> str:
+def _block_census(
+    s: DataFrame,
+    inside: Column,
+    touched: list[tuple[str, str]],
+    total: list[tuple[str, str]],
+) -> DataFrame:
+    """One aggregation over the block-key frame ``s``: the rows inside
+    the query box, the distinct blocks each ``touched`` key's layout
+    reads for it, and each ``total`` key's distinct blocks overall —
+    (key column, output name) pairs."""
+    return s.agg(
+        F.count(F.when(inside, 1)).cast("long").alias("n_rows_matched"),
+        *[
+            F.countDistinct(F.when(inside, F.col(c))).cast("long").alias(out)
+            for c, out in touched
+        ],
+        *[F.countDistinct(c).cast("long").alias(out) for c, out in total],
+    )
+
+
+def _hilbert_oracle() -> str:
     from umn_eda_kafka_stream_processing_spark.operators.compaction import (
         hilbert_step_exprs,
         zorder_expr,
     )
 
+    bits = 10
     z = zorder_expr("cx", "dyn", bits, div="//")
     ctes = [
         """o AS (
@@ -1868,35 +1891,27 @@ def hilbert_locality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"{zorder_expr('cx', 'dyn', 10)} div 1024").alias("zb"),
         F.expr("(cx * 1024 + dyn) div 1024").alias("lb"),
         F.expr("_h div 1024").alias("hb"),
-    ).localCheckpoint()
-    m = s.where(
-        (F.col("cx") >= 448)
-        & (F.col("cx") < 576)
-        & (F.col("dyn") >= 448)
-        & (F.col("dyn") < 576)
     )
-    stats_m = m.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows_matched"),
-        F.countDistinct("hb").cast("long").alias("h_blocks_touched"),
-        F.countDistinct("zb").cast("long").alias("z_blocks_touched"),
-        F.countDistinct("lb").cast("long").alias("linear_blocks_touched"),
+    return _block_census(
+        s,
+        _center_box_2d(),
+        [
+            ("hb", "h_blocks_touched"),
+            ("zb", "z_blocks_touched"),
+            ("lb", "linear_blocks_touched"),
+        ],
+        [("hb", "h_blocks_total")],
     )
-    stats_all = s.agg(
-        F.countDistinct("hb").cast("long").alias("h_blocks_total")
-    )
-    return stats_m.crossJoin(stats_all)
 
 
-def _hilbert3_oracle(bits: int = 7) -> str:
+def _hilbert3_oracle() -> str:
     from umn_eda_kafka_stream_processing_spark.operators.compaction import (
         duck_xor,
         hilbert_nd_exprs,
-    )
-
-    from umn_eda_kafka_stream_processing_spark.operators.compaction import (
         zorder_nd_expr,
     )
 
+    bits = 7
     side = 1 << bits
     steps, idx = hilbert_nd_exprs(3, bits, div="//", xor=duck_xor)
     z3 = zorder_nd_expr(["cx", "dyn", "hx"], bits, div="//")
@@ -2006,23 +2021,20 @@ def hilbert3_locality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(f"{zorder_nd_expr(['cx', 'dyn', 'hx'], bits)} div 1024")
         .alias("zb"),
         F.expr(f"((cx * {side} + dyn) * {side} + hx) div 1024").alias("lb"),
-    ).localCheckpoint()
+    )
     lo, hi = (7 * side) // 16, (9 * side) // 16
-    m = s.where(
+    return _block_census(
+        s,
         (F.col("cx") >= lo) & (F.col("cx") < hi)
         & (F.col("dyn") >= lo) & (F.col("dyn") < hi)
-        & (F.col("hx") >= lo) & (F.col("hx") < hi)
+        & (F.col("hx") >= lo) & (F.col("hx") < hi),
+        [
+            ("hb", "h3_blocks_touched"),
+            ("zb", "z3_blocks_touched"),
+            ("lb", "linear_blocks_touched"),
+        ],
+        [("hb", "h3_blocks_total")],
     )
-    stats_m = m.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows_matched"),
-        F.countDistinct("hb").cast("long").alias("h3_blocks_touched"),
-        F.countDistinct("zb").cast("long").alias("z3_blocks_touched"),
-        F.countDistinct("lb").cast("long").alias("linear_blocks_touched"),
-    )
-    stats_all = s.agg(
-        F.countDistinct("hb").cast("long").alias("h3_blocks_total")
-    )
-    return stats_m.crossJoin(stats_all)
 
 
 _SKEW_KEYS = (
@@ -3415,10 +3427,8 @@ def monitor_retention_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     })
 
 
-def _kcore_oracle(k: int = 8, rounds: int = 6) -> str:
-    # every e{r} is referenced 3x by round r+1 (FROM + two IN
-    # subqueries): without MATERIALIZED, DuckDB inlines CTEs and the
-    # expansion is ~5^rounds scans of lineitem ("too many open files")
+def _kcore_oracle() -> str:
+    k, rounds = 8, 6
     ctes = [
         _COSUPPLY_EDGE_CTES.replace("e AS (", "e AS MATERIALIZED ("),
         "e0 AS MATERIALIZED (SELECT a, b FROM e)",
@@ -3485,7 +3495,7 @@ def cosupply_kcore_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _core_levels_oracle(cap: int = 16, rounds: int = 8) -> str:
+def _core_levels_oracle() -> str:
     """Unrolled twin of operators/graph.py:core_numbers (capped
     h-index iteration) over the co-supply graph: h{t}(v) =
     min(h-index of neighbors' h{t-1}, cap), h0 = min(degree, cap).
@@ -3493,6 +3503,7 @@ def _core_levels_oracle(cap: int = 16, rounds: int = 8) -> str:
     and a fixed unroll equals the early-stopping Spark loop;
     converged = sum-stability of the last two rounds (sum of a
     monotone integer vector is stable iff the vector is)."""
+    cap, rounds = 16, 8
     ctes = [
         _COSUPPLY_EDGE_CTES.replace("e AS (", "e AS MATERIALIZED ("),
         """adj AS MATERIALIZED (
@@ -3567,11 +3578,12 @@ def cosupply_core_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _eigencentrality_oracle(iters: int = 10) -> str:
+def _eigencentrality_oracle() -> str:
     """Unrolled twin of power_iteration over the symmetrized lift
     adjacency (entries 1e9). MATERIALIZED throughout (each round
     references its predecessor repeatedly — the k-core inlining
     lesson)."""
+    iters = 6
     ctes = [
         _COSUPPLY_EDGE_CTES.replace("e AS (", "e AS MATERIALIZED ("),
         """adj AS MATERIALIZED (
@@ -3630,7 +3642,7 @@ def _eigencentrality_oracle(iters: int = 10) -> str:
     "— the pagerank rule); norm_shift=10000 keeps sum(u^2) in "
     "BIGINT for degrees up to ~1e4 (overflow audit in the operator "
     "docstring). Oracle: the six rounds unrolled.",
-    _eigencentrality_oracle(iters=6),
+    _eigencentrality_oracle(),
 )
 def supplier_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from umn_eda_kafka_stream_processing_spark.operators.linalg import (
@@ -3718,7 +3730,7 @@ def _versioned_orders_changelog(spark: SparkSession, sf_dir: str):
             )
         )
     )
-    return versions.localCheckpoint()
+    return materialize(versions, Why.SHARED)
 
 
 @_register(
@@ -4224,11 +4236,12 @@ def price_winsorize_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("g", "o_orderpriority")
 
 
-def _sssp_oracle(rounds: int = 4) -> str:
+def _sssp_oracle() -> str:
     """Unrolled bounded Bellman-Ford oracle (the eigencentrality
     precedent: iterative fixed point as MATERIALIZED CTE rounds —
     DuckDB inlines plain CTEs, and a round referenced twice would
     otherwise expand exponentially)."""
+    rounds = 4
     head = f"""
     WITH {_COSUPPLY_EDGE_CTES},
     sym AS (SELECT a AS src, b AS dst, (a + b) % 97 + 1 AS w FROM e
@@ -4275,7 +4288,7 @@ def _sssp_oracle(rounds: int = 4) -> str:
     "hash-mismatches. Oracle: the 4 rounds unrolled as MATERIALIZED "
     "CTEs (full Bellman-Ford — same integers as the delta version "
     "by induction).",
-    _sssp_oracle(rounds=4),
+    _sssp_oracle(),
 )
 def cosupply_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     from umn_eda_kafka_stream_processing_spark.operators.graph import (

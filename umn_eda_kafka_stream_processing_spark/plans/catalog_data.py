@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
 from umn_eda_kafka_stream_processing_spark.functions.scalar import round_half_up
 from umn_eda_kafka_stream_processing_spark.functions.text import (
     LANG_STOPWORDS,
@@ -367,9 +368,12 @@ def decontamination_resweep_census(
     grams.upsert(0, cached_bench_grams(spark, sf_dir, 74, 0))
     # the standing sweep runs (and MATERIALIZES — a lazy frame would
     # silently read the grown store below) before the late batch
-    standing = incremental_decontaminate(
-        spark, store, docs, docs_grams=corpus_grams
-    ).localCheckpoint()
+    standing = materialize(
+        incremental_decontaminate(
+            spark, store, docs, docs_grams=corpus_grams
+        ),
+        Why.OVERWRITE,
+    )
     grams.upsert(1, cached_bench_grams(spark, sf_dir, 74, 37))
     delta = resweep_decontaminate(
         spark, store, docs, since_batch=0, corpus_grams=corpus_grams
@@ -582,9 +586,7 @@ def cached_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return materialized(
         spark,
         f"near_dup_clusters|{sf_dir}",
-        lambda: dd.near_dup_clusters(
-            cached_minhash_pairs(spark, sf_dir), pairs_materialized=True
-        ),
+        lambda: dd.near_dup_clusters(cached_minhash_pairs(spark, sf_dir)),
     )
 
 
@@ -797,9 +799,8 @@ def _minhash_parts(
     return ctes, pair_select
 
 
-def _minhash_oracle(
-    k: int = 16, r: int = 2, shingle_n: int = 8, gate: float = 0.5
-) -> str:
+def _minhash_oracle() -> str:
+    k, r, shingle_n, gate = 16, 2, 8, 0.5
     ctes, pair_select = _minhash_parts(k, r, shingle_n, gate)
     return f"WITH {ctes}\n    {pair_select}"
 
@@ -827,13 +828,12 @@ def _near_dup_clusters_oracle() -> str:
     """
 
 
-def _leakage_safe_split_oracle(
-    val_rate: float = 0.2, test_rate: float = 0.2, salt: str = "split"
-) -> str:
+def _leakage_safe_split_oracle() -> str:
     from umn_eda_kafka_stream_processing_spark.operators.sampling import (
         rate_threshold,
     )
 
+    val_rate, test_rate, salt = 0.2, 0.2, "split"
     test_cut = rate_threshold(test_rate)
     val_cut = test_cut + rate_threshold(val_rate)
     ctes, pair_select = _minhash_parts()
@@ -920,12 +920,14 @@ def leakage_safe_split_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = cached_minhash_pairs(spark, sf_dir)
     clusters = cached_near_dup_clusters(spark, sf_dir)
     ids = docs.select("doc_id")
-    safe = smp.cluster_safe_split(
-        ids, clusters, val_rate=0.2, test_rate=0.2
-    ).localCheckpoint()  # joined twice below (pair ends) — no re-derive
-    naive = smp.split_assign(
-        ids, "doc_id", val_rate=0.2, test_rate=0.2
-    ).localCheckpoint()
+    safe = materialize(
+        smp.cluster_safe_split(ids, clusters, val_rate=0.2, test_rate=0.2),
+        Why.SELF_JOIN,
+    )
+    naive = materialize(
+        smp.split_assign(ids, "doc_id", val_rate=0.2, test_rate=0.2),
+        Why.SELF_JOIN,
+    )
 
     def cross_pairs(assign: DataFrame, out: str) -> DataFrame:
         # the assignment frames are localCheckpointed (stats stripped)
@@ -1008,13 +1010,14 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rows), verified by exact jaccard >= 0.8 "
     "(operators/dedup.py:minhash_lsh_pairs). Linear-scan scale path for "
     "corpus dedup.",
-    _minhash_oracle(16, 2, 8, 0.5),
+    _minhash_oracle(),
 )
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cached_minhash_pairs(spark, sf_dir)
 
 
-def _lsh_bucket_stats_oracle(k: int = 16, r: int = 2, cap: int = 3) -> str:
+def _lsh_bucket_stats_oracle() -> str:
+    k, r, cap = 16, 2, 3
     b = k // r
     mins = ",\n           ".join(
         f"min(substr(md5('{i // 4}|' || s), {8 * (i % 4) + 1}, 8)) AS h{i}"
@@ -1058,14 +1061,15 @@ def _lsh_bucket_stats_oracle(k: int = 16, r: int = 2, cap: int = 3) -> str:
     "of 3 would drop — the telemetry that keeps minhash_lsh_pairs' "
     "hot-bucket guard non-silent and lets a planner budget the join "
     "before running it. Linear melt + two hash-aggs, no self-join.",
-    _lsh_bucket_stats_oracle(16, 2, 3),
+    _lsh_bucket_stats_oracle(),
 )
 def lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return dd.lsh_bucket_stats(docs, hot_bucket_cap=3)
 
 
-def _simhash_oracle(max_hamming: int = 3) -> str:
+def _simhash_oracle() -> str:
+    max_hamming = 3
     nibs = ",\n           ".join(
         f"instr('0123456789abcdef', substr(th, {i + 1}, 1)) - 1 AS n{i}"
         for i in range(16)
@@ -1106,7 +1110,7 @@ def _simhash_oracle(max_hamming: int = 3) -> str:
     "simhash_near_pairs",
     "64-bit SimHash near-dup pairs, Hamming <= 3, candidates by 16-bit chunk "
     "pigeonhole buckets (operators/dedup.py:simhash_near_pairs).",
-    _simhash_oracle(3),
+    _simhash_oracle(),
 )
 def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.simhash_near_pairs(load_table(spark, sf_dir, "documents"))
@@ -1368,8 +1372,9 @@ def _lloyd_ctes(k: int = 8, iters: int = 5) -> list[str]:
     return ctes
 
 
-def _ivf_kmeans_oracle(k: int = 8, iters: int = 5) -> str:
+def _ivf_kmeans_oracle() -> str:
     """Lloyd chain (_lloyd_ctes) + the standard 2-probe IVF search."""
+    k, iters = 8, 5
     ctes = _lloyd_ctes(k, iters)
     search = _DUCK_IVF_SEARCH.format(cent=f"cent{iters}", corpus=f"assign{iters}")
     return "WITH " + ",\n    ".join(ctes) + ",\n    " + search
@@ -1415,14 +1420,7 @@ def _duck_l2sq_micros(a: str, b: str) -> str:
     )
 
 
-def _pq_oracle(
-    n_sub: int = 8,
-    n_codes: int = 16,
-    iters: int = 2,
-    dim: int = 64,
-    topk: int = 5,
-    shortlist: int = 50,
-) -> str:
+def _pq_oracle() -> str:
     """Unrolled DuckDB twin of pq_codebooks + pq_encode +
     pq_search_topk (operators/similarity.py): per-subspace Lloyd with
     integer-micro squared-L2 assignment (BIGINT — exact ordering, no
@@ -1431,6 +1429,7 @@ def _pq_oracle(
     (integer sums are order-independent, so this join+sum shape
     hash-matches the Spark side's broadcast array-lookup pass), then
     exact re-ranking of the ADC shortlist."""
+    n_sub, n_codes, iters, dim, topk, shortlist = 8, 16, 2, 64, 5, 50
     d2 = _duck_l2sq_micros
     d_sub = dim // n_sub
     cent = (
@@ -1517,7 +1516,7 @@ def _pq_oracle(
     )
 
 
-def _cluster_quota_oracle(k: int = 8, iters: int = 5, quota: int = 12) -> str:
+def _cluster_quota_oracle() -> str:
     """Lloyd chain (_lloyd_ctes) + md5-priority row_number per final
     bucket — the DuckDB twin of uniform_k_per_stratum over the
     k-means assignment."""
@@ -1525,6 +1524,7 @@ def _cluster_quota_oracle(k: int = 8, iters: int = 5, quota: int = 12) -> str:
         _duck_key,
     )
 
+    k, iters, quota = 8, 5, 12
     ctes = _lloyd_ctes(k, iters) + [
         (
             "samp AS (SELECT bucket, vec_id, row_number() OVER"
@@ -1603,9 +1603,7 @@ def cluster_quota_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _incremental_cluster_quota_oracle(
-    k: int = 8, iters: int = 5, quota: int = 12, n_batches: int = 3
-) -> str:
+def _incremental_cluster_quota_oracle() -> str:
     """Lloyd chain + fassign (fresh assignment against the FINAL
     centroids — the ingest-time assign_ivf_bucket view) + the
     greedy-online admission unrolled: admitting while slots remain,
@@ -1615,6 +1613,7 @@ def _incremental_cluster_quota_oracle(
         _duck_key,
     )
 
+    k, iters, quota, n_batches = 8, 5, 12, 3
     ctes = _lloyd_ctes(k, iters) + [
         (
             f"fscore AS (SELECT e.vec_id, c.bucket,"
@@ -1752,17 +1751,7 @@ def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivfpq_oracle(
-    n_coarse: int = 8,
-    coarse_iters: int = 2,
-    n_sub: int = 8,
-    n_codes: int = 16,
-    pq_iters: int = 1,
-    dim: int = 64,
-    topk: int = 5,
-    shortlist: int = 100,
-    n_probe: int = 3,
-) -> str:
+def _ivfpq_oracle() -> str:
     """Unrolled DuckDB twin of ivfpq_index + ivfpq_search_topk
     (operators/similarity.py): the coarse Lloyd chain (_lloyd_ctes),
     residuals v - cv[bucket] (exact IEEE subtraction on both engines
@@ -1770,6 +1759,15 @@ def _ivfpq_oracle(
     Lloyd chain TRAINED ON RESIDUALS, encode, per-(query, probed
     bucket) residual lookup tables, the bucket-pruned ADC join +
     exact BIGINT sum, then exact re-ranking of the shortlist."""
+    n_coarse = 8
+    coarse_iters = 2
+    n_sub = 8
+    n_codes = 16
+    pq_iters = 1
+    dim = 64
+    topk = 5
+    shortlist = 100
+    n_probe = 3
     d2 = _duck_l2sq_micros
     d_sub = dim // n_sub
     cent = (
@@ -1934,14 +1932,13 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _semantic_dedup_oracle(
-    k: int = 8, iters: int = 3, tau: float = 0.4, cap: int = 10_000
-) -> str:
+def _semantic_dedup_oracle() -> str:
     """Unrolled DuckDB twin of semantic_dedup_pairs: the Lloyd chain
     (_lloyd_ctes), the cluster-size cap, then within-cluster pairwise
     cosine >= tau with the keep/drop decision on rounded-6dp centroid
     similarity (drop the member CLOSER to its centroid; ties drop the
     higher id)."""
+    k, iters, tau, cap = 8, 3, 0.4, 10_000
     ctes = _lloyd_ctes(k, iters)
     ctes += [
         (
@@ -2201,9 +2198,8 @@ def _media_dedup_stats(
     )
 
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    # one decode pass: the signatures feed both the census counts and
-    # the banded pair join (materialize before the self-join)
-    sigs = signature(mm.synth_media(docs, kind)).localCheckpoint()
+    # one decode pass feeds the census counts and the banded self-join
+    sigs = materialize(signature(mm.synth_media(docs, kind)), Why.SELF_JOIN)
     # capless-with-guard: the oracle is the exact capless twin, so a
     # bucket crossing a cap at a larger SF would silently diverge the
     # engines — and a degenerate bucket FAILS LOUD instead of
@@ -2386,9 +2382,10 @@ def _bpe_ctes(k: int = 6) -> list[str]:
     return ctes
 
 
-def _bpe_oracle(k: int = 6) -> str:
+def _bpe_oracle() -> str:
     """Training oracle: the merge-round chain + the rank-ordered
     learned merge table."""
+    k = 6
     union = "\n    UNION ALL ".join(
         f"SELECT CAST({r} AS BIGINT) AS rank, pair, pair_count FROM best{r}"
         for r in range(1, k + 1)
@@ -2396,11 +2393,12 @@ def _bpe_oracle(k: int = 6) -> str:
     return "WITH " + ",\n    ".join(_bpe_ctes(k)) + "\n    " + union
 
 
-def _bpe_encode_oracle(k: int = 6) -> str:
+def _bpe_encode_oracle() -> str:
     """Encode oracle: the same merge-round chain; words{k}.sym IS the
     rank-ordered replace chain applied to every vocabulary word, so
     per-doc stats are a re-tokenize + join against that segmentation
     (the Spark side's broadcast-vocab join, same shape)."""
+    k = 6
     ctes = _bpe_ctes(k)
     ctes += [
         """tk AS (SELECT doc_id, word FROM (
@@ -2432,7 +2430,7 @@ def _bpe_encode_oracle(k: int = 6) -> str:
     "unrolls all 6 rounds in generated SQL (the Lloyd precedent); "
     "replace() scans identically in both engines, so the learned merge "
     "table matches bit for bit.",
-    _bpe_oracle(6),
+    _bpe_oracle(),
 )
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from umn_eda_kafka_stream_processing_spark.operators import bpe
@@ -2453,7 +2451,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     "narrow explode + broadcast join + hash-agg. Oracle: the training "
     "chain's final words CTE IS the encode chain's output, so the twin "
     "re-tokenizes and joins it identically.",
-    _bpe_encode_oracle(6),
+    _bpe_encode_oracle(),
 )
 def bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from umn_eda_kafka_stream_processing_spark.operators import bpe
@@ -2769,8 +2767,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _srp_oracle(
     threshold: float,
     dim: int = 64,
-    n_bits: int = 24,
-    bands: int = 4,
     *,
     src_cte: str | None = None,
     id_col: str = "vec_id",
@@ -2784,6 +2780,7 @@ def _srp_oracle(
     DOUBLE list of length ``dim`` — this is how non-embedding vector
     sources (e.g. the circadian user profiles in catalog_windows.py)
     reuse the oracle."""
+    n_bits, bands = 24, 4
     planes = sim.srp_planes(dim, n_bits)
     r = n_bits // bands
 
@@ -3088,12 +3085,15 @@ def eval_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # key), pruning hot generic shingles BEFORE the train x eval join
     from pyspark.sql.window import Window
 
-    # materialized once: train and eval are BOTH filtered views of
-    # this projection, so a lazy plan re-runs the shingle explode +
-    # md5 + DF-cap window per join side
-    hashed = hashed.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("h"))
-    ).filter(F.col("df") <= 20).drop("df").localCheckpoint()
+    # train and eval are BOTH filtered views of this projection, so a
+    # lazy plan re-runs the shingle explode + md5 + DF-cap window per
+    # join side
+    hashed = materialize(
+        hashed.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("h")))
+        .filter(F.col("df") <= 20)
+        .drop("df"),
+        Why.SELF_JOIN,
+    )
     train = hashed.filter(F.col("doc_id") % 20 != 0).withColumnsRenamed(
         {"doc_id": "train_doc_id"}
     )
@@ -3275,13 +3275,16 @@ def label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.posexplode(F.col("embedding").cast("array<double>")).alias("pos", "val"),
     )
-    cent = ex.groupBy("label", "pos").agg(
-        round_half_up(
-            F.sum(F.col("val").cast("decimal(27,10)")).cast("double")
-            / F.count(F.lit(1)),
-            9,
-        ).alias("c")
-    ).localCheckpoint()  # self-joined below: avoid double lineage compute
+    cent = materialize(
+        ex.groupBy("label", "pos").agg(
+            round_half_up(
+                F.sum(F.col("val").cast("decimal(27,10)")).cast("double")
+                / F.count(F.lit(1)),
+                9,
+            ).alias("c")
+        ),
+        Why.SELF_JOIN,
+    )
     a = cent.select(
         F.col("label").alias("label_a"), "pos", F.col("c").alias("ca")
     )
@@ -3645,16 +3648,14 @@ def _unigram_dp_ctes(
 _UNIGRAM_FIXTURE = "supercalifragilisticexpialidocious"
 
 
-def _unigram_oracle(
-    maxw: int = 12, plen: int = 4, k_cand: int = 200,
-    v_final: int = 120, rounds: int = 2, mode: str = "train",
-) -> str:
+def _unigram_oracle(mode: str = 'train') -> str:
     """Generate the fully-unrolled DuckDB twin of
     operators/unigram.py: candidate vocab + integer-micro -ln costs +
     ``rounds`` hard-EM rounds (each = _unigram_dp_ctes + usage agg +
     Laplace re-estimate). mode='train' ranks the final vocab;
     mode='encode' runs one more DP under the FINAL model and reports
     per-lang corpus compression (the tokenizer APPLIED)."""
+    maxw, plen, k_cand, v_final, rounds = 12, 4, 200, 120, 2
     ctes = [
         r"""wf AS (
       SELECT word, CAST(count(*) AS BIGINT) AS freq FROM (
@@ -4578,9 +4579,12 @@ def hybrid_rrf3_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = spark.createDataFrame(
         list(_BM25_QUERIES), "qid long, term string"
     )
-    bm25 = bm25_search(
-        postings, doclens, n_docs, total_tokens, queries, k=50
-    ).localCheckpoint()  # feeds the fusion AND the exemplar seed
+    bm25 = materialize(
+        bm25_search(
+            postings, doclens, n_docs, total_tokens, queries, k=50
+        ),
+        Why.SHARED,
+    )
     cov = (
         postings.join(F.broadcast(queries), "term")
         .groupBy("qid", "doc_id")
@@ -4593,11 +4597,11 @@ def hybrid_rrf3_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_cov").desc(), F.col("tf_total").desc(),
         F.col("doc_id").asc(),
     )
-    coverage = (
+    coverage = materialize(
         cov.withColumn("rank", F.row_number().over(covw).cast("long"))
         .filter(F.col("rank") <= 50)
-        .select("qid", "doc_id", "rank")
-        .localCheckpoint()  # feeds the fusion AND the exemplar seed
+        .select("qid", "doc_id", "rank"),
+        Why.SHARED,
     )
     # PRF exemplar: lowest-bm25-rank doc BOTH lexical rankers agree
     # on (min rank, then min doc_id — min(struct) argmax rule over
@@ -4848,7 +4852,7 @@ def token_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("dfc")
     )
     voc = global_topk(dfq, [("dfc", False), ("t", True)], 50).drop("rank")
-    dt = tok.join(F.broadcast(voc), "t").localCheckpoint()
+    dt = materialize(tok.join(F.broadcast(voc), "t"), Why.SELF_JOIN)
     a = dt.select(
         F.col("doc_id"), F.col("t").alias("ta"), F.col("dfc").alias("dfa")
     )
@@ -5146,8 +5150,8 @@ def jl_distance_preservation_census(
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
-    el = _explode_micro(emb, "embedding").localCheckpoint()
-    proj = jl_project(emb, "embedding", "vec_id", out_dim=16).localCheckpoint()
+    el = materialize(_explode_micro(emb, "embedding"), Why.SELF_JOIN)
+    proj = materialize(jl_project(emb, "embedding", "vec_id", out_dim=16), Why.SELF_JOIN)
     ea, eb = el.alias("ea"), el.alias("eb")
     d2o = (
         ea.join(

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
 from umn_eda_kafka_stream_processing_spark.operators import sampling as smp
 from umn_eda_kafka_stream_processing_spark.plans.registry import register as _register
 from umn_eda_kafka_stream_processing_spark.sources.parquet import load_table
@@ -700,7 +701,7 @@ def training_manifest_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         bench_grams=cached_bench_grams(spark, sf_dir, 37),
         keeper_grams=cached_manifest_keeper_grams(spark, sf_dir),
     )
-    manifest = manifest.localCheckpoint()  # feeds 3 aggs + 2 pin joins
+    manifest = materialize(manifest, Why.SHARED)
     per_source = manifest.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs_out"),
         F.sum("n_repeats").cast("long").alias("sum_repeats"),
@@ -962,8 +963,8 @@ def manifest_patch_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         keeper_grams=cached_manifest_keeper_grams(spark, sf_dir),
         return_stages=True,
     )
-    patched = patched.localCheckpoint()  # feeds per-source + checksum
-    newly = pst["newly"].localCheckpoint()  # feeds count + split join
+    patched = materialize(patched, Why.SHARED)
+    newly = materialize(pst["newly"], Why.SHARED)
     per_source = patched.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs_out"),
         F.sum("n_repeats").cast("long").alias("sum_repeats"),
@@ -1184,7 +1185,7 @@ def manifest_extend_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         clusters=clusters2,
         return_stages=True,
     )
-    ext = ext.localCheckpoint()  # feeds per-source + checksum
+    ext = materialize(ext, Why.SHARED)
     per_source = ext.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs_out"),
         F.sum("n_repeats").cast("long").alias("sum_repeats"),

@@ -35,20 +35,14 @@ semi-joins the fact table against a pre-aggregated key set.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
 from umn_eda_kafka_stream_processing_spark.functions.scalar import round_half_up
+from umn_eda_kafka_stream_processing_spark.plans.catalog import _dec, _money_sum
 from umn_eda_kafka_stream_processing_spark.plans.registry import register as _register
 from umn_eda_kafka_stream_processing_spark.sources.parquet import load_table
-
-
-def _dec(col: str) -> Column:
-    return F.col(col).cast("decimal(18,2)")
-
-
-def _money_sum(expr: Column, alias: str) -> Column:
-    return F.round(F.sum(expr), 2).cast("double").alias(alias)
 
 
 @_register(
@@ -360,13 +354,14 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("date"))
     ).select("l_suppkey", "l_extendedprice", "l_discount")
     price, disc = _dec("l_extendedprice"), _dec("l_discount")
-    # |suppliers| rows; localCheckpoint so the max probe and the final
-    # join read one materialization instead of racing the lineage
-    # twice (CLAUDE.md self-join rule).
-    revenue = (
+    # |suppliers| rows, joined to their own max. Materialized: the
+    # inferred isnotnull(l_suppkey) of the supplier join reaches only
+    # one branch, so the two aggregates differ and Spark cannot reuse
+    # one exchange — without it lineitem is scanned twice
+    revenue = materialize(
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(F.sum(price * (1 - disc)).alias("total_rev"))
-        .localCheckpoint(eager=False)
+        .agg(F.sum(price * (1 - disc)).alias("total_rev")),
+        Why.SELF_JOIN,
     )
     max_rev = revenue.agg(F.max("total_rev").alias("max_rev"))
     supplier = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -710,11 +705,11 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(eu_keys), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", "s_name", "s_acctbal", "n_name")
     )
-    # region-filtered supply, materialized once: feeds BOTH the
-    # per-part minimum and the winner probe (self-join rule)
+    # region-filtered supply, joined to its own per-part minimum; no
+    # checkpoint: both branches reuse one exchange (ReusedExchange)
     esupply = supply.join(
         F.broadcast(eu), F.col("sp_suppkey") == F.col("s_suppkey")
-    ).localCheckpoint(eager=False)
+    )
     min_pp = esupply.groupBy(F.col("sp_partkey").alias("min_partkey")).agg(
         F.min("sp_cost").alias("min_cost")
     )
@@ -836,10 +831,11 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice"
     ).join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"), "left_semi")
-    # |parts| rows, read twice (global total + filter) — materialize once
+    # |parts| rows, read twice (global total + filter) through one
+    # reused exchange, so no checkpoint
     per_part = li.groupBy(F.col("l_partkey").alias("partkey")).agg(
         F.sum(_dec("l_extendedprice")).alias("sum_val")
-    ).localCheckpoint(eager=False)
+    )
     total = per_part.agg(
         (F.sum("sum_val").cast("double") * F.lit(0.001)).alias("cut")
     )

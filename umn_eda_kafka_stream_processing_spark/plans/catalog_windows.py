@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
 from umn_eda_kafka_stream_processing_spark.operators.joins import asof_join, interval_join
 from umn_eda_kafka_stream_processing_spark.operators.windows import (
     session_agg,
@@ -264,7 +265,7 @@ def _circadian_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "h")
         .agg(round_half_up(F.sum("v").cast("double"), 4).alias("hv"))
     )
-    return (
+    return materialize(
         hs.groupBy("user_id")
         .agg(F.map_from_entries(F.collect_list(F.struct("h", "hv"))).alias("m"))
         .select(
@@ -276,8 +277,8 @@ def _circadian_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .repartition(
             spark.sparkContext.defaultParallelism, F.col("user_id")
-        )
-        .localCheckpoint()
+        ),
+        Why.SELF_JOIN,
     )
 
 
@@ -316,16 +317,15 @@ def user_activity_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.cosine_topk(prof, prof, k=3, id_col="user_id", vec_col="vec")
 
 
-def _profile_srp_oracle(threshold: float) -> str:
+def _profile_srp_oracle() -> str:
     """SRP-LSH oracle over the circadian profiles: the generic
     srp_lsh twin (catalog_data._srp_oracle) pointed at the profile
     CTE instead of the embeddings table — same md5 hyperplanes, 24-dim."""
     from umn_eda_kafka_stream_processing_spark.plans.catalog_data import _srp_oracle
+    threshold = 0.8
 
     src = f"{_PROFILE_CTE},\n    e AS (SELECT user_id, v FROM dense)"
-    return _srp_oracle(
-        threshold, dim=24, n_bits=24, bands=4, src_cte=src, id_col="user_id"
-    )
+    return _srp_oracle(threshold, dim=24, src_cte=src, id_col="user_id")
 
 
 @_register(
@@ -337,7 +337,7 @@ def _profile_srp_oracle(threshold: float) -> str:
     "Linear sketch + band-key self-join replaces the exact path's "
     "quadratic N x N scoring; tests/test_temporal_ops.py pins recall "
     "vs the exact path.",
-    _profile_srp_oracle(0.8),
+    _profile_srp_oracle(),
 )
 def user_activity_similarity_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from umn_eda_kafka_stream_processing_spark.operators import similarity as sim

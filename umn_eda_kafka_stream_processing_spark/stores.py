@@ -45,6 +45,7 @@ from typing import TypeVar
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
 from umn_eda_kafka_stream_processing_spark.operators.core import latest_by_key
 
 T = TypeVar("T")
@@ -614,10 +615,10 @@ class SnapshotStore:
             raise ValueError("advance needs keys that never change partition")
         prior = self.read(near=near)
         if prior is not None:
-            prior = prior.localCheckpoint()
+            prior = materialize(prior, Why.OVERWRITE)
         result = step(prior)
         rows, out = result if isinstance(result, tuple) else (result, result)
-        done = out.localCheckpoint()
+        done = materialize(out, Why.SHARED)
         rows = self._stamp(done if rows is out else rows, seq)
         self._write(prior, rows, write_coalesce, reads_store=False)
         return done
@@ -638,8 +639,7 @@ class SnapshotStore:
         parts, emptied = self.parts, []
         merged = compact_changelog(old, rows, self.keys, self.order)
         if old is not None and reads_store:
-            # the plan reads the path it overwrites: materialize first
-            merged = merged.localCheckpoint()
+            merged = materialize(merged, Why.OVERWRITE)
             # a touched partition whose last row moved away gets no
             # output row, so the overwrite would leave it stale
             emptied = _emptied(parts, touched, merged)
@@ -776,7 +776,7 @@ class SnapshotStore:
         if target_files is not None:
             out = self._pack(out, chosen)
         _rewrite_partitions(
-            self.spark, self.path, out.localCheckpoint(), parts, emptied
+            self.spark, self.path, materialize(out, Why.OVERWRITE), parts, emptied
         )
         stats["files_after"] = self._files([r["_dir"] for r in chosen])
         return stats
@@ -830,9 +830,12 @@ class SnapshotStore:
             return stats
         touched_df = store.filter(_partition_selector(parts, touched))
         n_before = touched_df.count()
-        kept = touched_df.join(
-            F.broadcast(kd), key_col, "left_anti"
-        ).localCheckpoint()
+        kept = materialize(
+            touched_df.join(
+                F.broadcast(kd), key_col, "left_anti"
+            ),
+            Why.OVERWRITE,
+        )
         n_kept = kept.count()
         emptied = _emptied(parts, touched, kept)
         _rewrite_partitions(self.spark, self.path, kept, parts, emptied)

@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from umn_eda_kafka_stream_processing_spark.caching import Why, materialize
 from umn_eda_kafka_stream_processing_spark.stores import SnapshotStore
 
 _BUCKET_COL = "_fkb"
@@ -181,7 +182,7 @@ def start_fk_table_join(
             ),
             SnapshotStore(spark, right_store, right_key, order="event_seq"),
         )
-        env_df = env_df.localCheckpoint()  # read stores + write stores below
+        env_df = materialize(env_df, Why.SHARED)
         lbatch = env_df.filter(F.col("_side") == "L").select("_l.*")
         rbatch = env_df.filter(F.col("_side") == "R").select("_r.*")
         # left rows first: a batch carrying both sides applies left
